@@ -783,6 +783,201 @@ class TableLogSpec extends SparkSpec {
     }
   }
 
+  test("property: random append + DDL sequences — schema, properties, constraints, column mapping and rows match the model at every version") {
+    // model-based guard for the manifest-only DDL family: a seeded
+    // interleaving of appends with add/rename/drop column (top level and
+    // nested under the struct `p`), int→long widening, property
+    // set/unset and CHECK add/drop. Every committed version must read
+    // back the model's metadata AND rows; a failure names the seed and
+    // the op list that produced it
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // one version of the model; rows are keyed by LOGICAL leaf path (a
+    // missing key reads as null — columns added after the row landed)
+    final case class State(schema: StructType, props: Map[String, String],
+                           cks: Map[String, String], cm: Map[String, String],
+                           rows: Seq[Map[String, Any]])
+    def leaves(st: StructType, prefix: String = ""): Seq[(String, DataType)] =
+      st.fields.toSeq.flatMap { f =>
+        f.dataType match {
+          case s: StructType => leaves(s, s"$prefix${f.name}.")
+          case dt => Seq(s"$prefix${f.name}" -> dt)
+        }
+      }
+    def value(dt: DataType, path: String, k: Long): Any =
+      if (path == "k") k
+      else dt match {
+        case LongType => k * 7L
+        case IntegerType => (k * 3L).toInt
+        case _ => s"$path#$k"
+      }
+    def rowOf(st: StructType, prefix: String, k: Long): Row =
+      Row.fromSeq(st.fields.toSeq.map { f =>
+        f.dataType match {
+          case s: StructType => rowOf(s, s"$prefix${f.name}.", k)
+          case dt => value(dt, s"$prefix${f.name}", k)
+        }
+      })
+    def flat(st: StructType, r: Row, prefix: String): Seq[(String, Any)] =
+      st.fields.toSeq.zipWithIndex.flatMap { case (f, i) =>
+        f.dataType match {
+          case s: StructType if r.isNullAt(i) =>
+            leaves(s, s"$prefix${f.name}.").map(_._1 -> null)
+          case s: StructType => flat(s, r.getStruct(i), s"$prefix${f.name}.")
+          case _ => Seq(s"$prefix${f.name}" -> r.get(i))
+        }
+      }
+    def atStruct(st: StructType, parent: Seq[String])(
+        f: StructType => StructType): StructType =
+      if (parent.isEmpty) f(st)
+      else StructType(st.fields.map(x =>
+        if (x.name != parent.head) x
+        else x.copy(dataType =
+          atStruct(x.dataType.asInstanceOf[StructType], parent.tail)(f))))
+    def mapLeaf(st: StructType, path: String)(
+        g: StructField => StructField): StructType = {
+      val segs = path.split('.').toSeq
+      atStruct(st, segs.init)(s => StructType(s.fields.map(x =>
+        if (x.name == segs.last) g(x) else x)))
+    }
+    val init = StructType(Seq(StructField("k", LongType),
+      StructField("s", StringType), StructField("n", IntegerType),
+      StructField("p", StructType(Seq(StructField("a", IntegerType),
+        StructField("b", StringType))))))
+    (0 until 4).foreach { trial =>
+      val seed = 7000L + trial
+      val rnd = new scala.util.Random(seed)
+      val dir = tmpDir(s"tlog_ddlprop$trial")
+      val ops = scala.collection.mutable.ArrayBuffer.empty[String]
+      def ctx = s"seed $seed, ops: ${ops.mkString("; ")}"
+      var cur = State(init, Map.empty, Map.empty, Map.empty, Nil)
+      var model = Vector.empty[State]
+      var next = 0L
+      var fresh = 0
+      def freshName(pre: String): String = { fresh += 1; s"$pre$fresh" }
+      def pick[T](xs: Seq[T]): Option[T] =
+        if (xs.isEmpty) None else Some(xs(rnd.nextInt(xs.size)))
+      def append(): Unit = {
+        val ks = next until next + 1 + rnd.nextInt(3)
+        next += ks.size
+        ops += s"append(${ks.size})"
+        TableLog.append(spark, dir, spark.createDataFrame(
+          java.util.Arrays.asList(ks.map(k => rowOf(cur.schema, "", k)): _*),
+          cur.schema))
+        cur = cur.copy(rows = cur.rows ++ ks.map(k =>
+          leaves(cur.schema).map { case (p, dt) => p -> value(dt, p, k) }.toMap))
+      }
+      // one DDL commit, or false when the drawn op has no candidate
+      def ddl(): Boolean = {
+        val nested = rnd.nextBoolean()
+        val pFields = cur.schema("p").dataType.asInstanceOf[StructType]
+          .fieldNames.toSeq.map("p." + _)
+        val topCols = cur.schema.fieldNames.toSeq.filterNot(Set("k", "p"))
+        rnd.nextInt(8) match {
+          case 0 =>
+            val leaf = freshName("c")
+            val path = if (nested) s"p.$leaf" else leaf
+            ops += s"addColumn($path)"
+            TableLog.addColumn(spark, dir, path, StringType)
+            cur = cur.copy(schema = atStruct(cur.schema,
+              if (nested) Seq("p") else Nil)(_.add(StructField(leaf, StringType))))
+            true
+          case 1 =>
+            pick(if (nested) pFields else topCols).exists { from =>
+              val leaf = freshName("r")
+              val to = if (nested) s"p.$leaf" else leaf
+              ops += s"renameColumn($from -> $to)"
+              TableLog.renameColumn(spark, dir, from, to)
+              cur = cur.copy(
+                schema = mapLeaf(cur.schema, from)(_.copy(name = leaf)),
+                cm = cur.cm - from + (to -> cur.cm.getOrElse(from, from)),
+                rows = cur.rows.map(r =>
+                  r.get(from).fold(r)(v => r - from + (to -> v))))
+              true
+            }
+          case 2 =>
+            pick(if (!nested) topCols
+                 else if (pFields.size > 1) pFields else Nil).exists { c =>
+              ops += s"dropColumn($c)"
+              TableLog.dropColumn(spark, dir, c)
+              val segs = c.split('.').toSeq
+              cur = cur.copy(
+                schema = atStruct(cur.schema, segs.init)(st =>
+                  StructType(st.fields.filterNot(_.name == segs.last))),
+                cm = cur.cm - c, rows = cur.rows.map(_ - c))
+              true
+            }
+          case 3 =>
+            pick(leaves(cur.schema).collect { case (p, IntegerType) => p })
+              .exists { c =>
+                ops += s"alterColumnType($c, long)"
+                TableLog.alterColumnType(spark, dir, c, LongType)
+                cur = cur.copy(
+                  schema = mapLeaf(cur.schema, c)(_.copy(dataType = LongType)),
+                  rows = cur.rows.map(r => r.get(c) match {
+                    case Some(i: Int) => r + (c -> i.toLong)
+                    case _ => r
+                  }))
+                true
+              }
+          case 4 =>
+            val kv = pick(cur.props.keys.toSeq.sorted).filter(_ => nested)
+              .getOrElse(freshName("user.key")) -> freshName("v")
+            ops += s"setTableProperties(${kv._1}=${kv._2})"
+            TableLog.setTableProperties(spark, dir, Map(kv))
+            cur = cur.copy(props = cur.props + kv)
+            true
+          case 5 =>
+            pick(cur.props.keys.toSeq.sorted).exists { key =>
+              ops += s"unsetTableProperties($key)"
+              TableLog.unsetTableProperties(spark, dir, Seq(key))
+              cur = cur.copy(props = cur.props - key)
+              true
+            }
+          case 6 =>
+            val name = freshName("ck")
+            val sql = s"k >= ${-fresh}"
+            ops += s"addCheckConstraint($name, $sql)"
+            TableLog.addCheckConstraint(spark, dir, name, sql)
+            cur = cur.copy(cks = cur.cks + (name -> sql))
+            true
+          case _ =>
+            pick(cur.cks.keys.toSeq.sorted).exists { name =>
+              ops += s"dropCheckConstraint($name)"
+              TableLog.dropCheckConstraint(spark, dir, name)
+              cur = cur.copy(cks = cur.cks - name)
+              true
+            }
+        }
+      }
+      try {
+        append()
+        model :+= cur
+        (0 until 20).foreach { _ =>
+          if (rnd.nextInt(3) == 0 || !ddl()) append()
+          model :+= cur
+        }
+      } catch { case e: Exception => fail(s"trial $trial failed ($ctx)", e) }
+      info(s"trial $trial: $ctx")
+      assert(TableLog.currentVersion(spark, dir) == model.length.toLong, ctx)
+      model.zipWithIndex.foreach { case (m, i) =>
+        val v = i + 1L
+        val at = s"trial $trial version $v ($ctx)"
+        assert(TableLog.schemaAt(spark, dir, v) == m.schema, at)
+        assert(TableLog.tablePropertiesAt(spark, dir, v) == m.props, at)
+        assert(TableLog.constraintsAt(spark, dir, v) == m.cks, at)
+        assert(TableLog.columnMappingAt(spark, dir, v) == m.cm, at)
+        val df = TableLog.readAt(spark, dir, v)
+        def byKey(rs: Seq[Map[String, Any]]) =
+          rs.sortBy(_("k").asInstanceOf[Long])
+        val got = byKey(df.collect().toSeq.map(r => flat(df.schema, r, "").toMap))
+        val expect = byKey(m.rows.map(r =>
+          leaves(m.schema).map { case (p, _) => p -> r.getOrElse(p, null) }.toMap))
+        assert(got == expect, at)
+      }
+    }
+  }
+
   test("vacuum retires old versions: reclaimed files, loud watermark, retained reads intact") {
     val dir = tmpDir("tlog_vac")
     TableLog.overwrite(spark, dir, Seq((1L, "v1")).toDF("k", "s"))
