@@ -5,8 +5,8 @@ import scala.collection.mutable
 
 /** Optimization-round instrument (guide §1): run named queries through the
   * SAME noop-sink methodology as [[Bench]], but with a stage listener that
-  * attributes wall time — per stage: task count, summed executor run time,
-  * and the max single task (the straggler/serialization signal). Also dumps
+  * attributes wall time — per stage: task count, summed executor run time
+  * and the stage's own wall time. Also dumps
   * `.explain("formatted")` per query so plan shapes (Exchange count, join
   * strategy, PushedFilters) are inspectable offline.
   *
@@ -22,7 +22,7 @@ object BenchProbe {
     val spark = GraftSession.local()
 
     final case class StageRow(id: Int, name: String, tasks: Int,
-                              runMs: Long, maxTaskMs: Long, wallMs: Long)
+                              runMs: Long, wallMs: Long)
     val stages = mutable.ArrayBuffer.empty[StageRow]
     val listener = new SparkListener {
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
@@ -31,7 +31,7 @@ object BenchProbe {
         val wall = (for {s <- si.submissionTime; c <- si.completionTime} yield c - s).getOrElse(-1L)
         stages.synchronized {
           stages += StageRow(si.stageId, si.name.takeWhile(_ != '\n').take(90),
-            si.numTasks, run, -1L, wall)
+            si.numTasks, run, wall)
         }
       }
     }

@@ -36,9 +36,6 @@ object Cleaning {
       .select(keys.map(col) ++ others.map(c => col("_row").getField(c).as(c)): _*)
   }
 
-  /** Plain distinct-rows dedup (reference `keep` irrelevant: rows identical). */
-  def dedupExact(df: DataFrame): DataFrame = df.dropDuplicates()
-
   /** Drop rows with nulls in any of `required` (reference strategy="drop"). */
   def dropMissing(df: DataFrame, required: Seq[String]): DataFrame =
     df.na.drop("any", required)

@@ -266,22 +266,6 @@ object Curation {
     (out, release)
   }
 
-  /** Corpus mixture report: documents/tokens per stratum plus corpus
-    * shares — the dashboard that drives [[sampleByWeight]] rates and
-    * [[capTokensPerGroup]] budgets when assembling a training mixture.
-    * One partial-aggregated scan; the totals are a 1-row broadcast.
-    */
-  def mixtureReport(df: DataFrame, strataCol: String, textCol: String): DataFrame = {
-    val per = df.groupBy(Cols.qcol(strataCol))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TextAnalysis.tokenCount(Cols.qcol(textCol)).cast("long")).as("n_tokens"))
-    val tot = per.agg(sum(col("n_docs")).as("_td"), sum(col("n_tokens")).as("_tt"))
-    per.crossJoin(broadcast(tot))
-      .withColumn("pct_docs", round(col("n_docs") / col("_td") * 100, 4))
-      .withColumn("pct_tokens", round(col("n_tokens") / col("_tt") * 100, 4))
-      .drop("_td", "_tt")
-  }
-
   /** Per-stratum [[sampleByWeight]] rates that hit a TARGET token
     * mixture ("30% code, 60% en-web, 10% books") without upsampling:
     * the achievable corpus is bounded by the stratum that runs out

@@ -30,10 +30,6 @@ object DataSink {
                mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).option("header", header.toString).csv(path)
 
-  /** JSON-lines export. */
-  def writeJson(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).json(path)
-
   /** ORC export — the second columnar interchange format next to parquet
     * (reference's warehouse is format-agnostic tables; a 100 TB lake often
     * holds both). Spark's native ORC reader keeps the same scan-side

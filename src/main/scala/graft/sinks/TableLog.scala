@@ -5,7 +5,7 @@ import scala.language.existentials
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Transactional table log over the parquet sinks — the lakehouse commit
   * protocol (the public Delta/Iceberg pattern, implemented from the
@@ -1573,6 +1573,111 @@ object TableLog {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  // ------------------------------------------------- manifest-only DDL
+
+  /** The table metadata one committed version carries in full — the
+    * value every manifest-only DDL op reads and rewrites. `files` is the
+    * live set at `version`, read-only here (SET NOT NULL checks its null
+    * stats); DDL commits add and remove no file.
+    */
+  private final case class TableMeta(version: Long, schema: StructType,
+                                     files: Seq[AddFile],
+                                     constraints: Map[String, String],
+                                     properties: Map[String, String],
+                                     colmap: Map[String, String],
+                                     droppedCols: Seq[String])
+
+  /** The one commit path for manifest-only DDL: resolve the latest
+    * version, read its snapshot and parse its manifest ONCE, hand that
+    * to `change` (which validates and returns the new metadata), and
+    * commit the result as a `manifestOp` commit. The full metadata is
+    * written explicitly rather than carried forward; the two agree
+    * because DDL ops never rebase ([[commitManifest]]) — the commit lands
+    * on `version` or fails loudly. `api` names the caller in the refusal
+    * for an empty table.
+    */
+  private def alterMetadata(spark: SparkSession, dir: String, api: String,
+                            manifestOp: String)(change: TableMeta => TableMeta): Long = {
+    val version = currentVersion(spark, dir)
+    require(version > 0L, s"TableLog.$api: $dir has no committed versions")
+    val base = new Path(dir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (schemaJson, files) = snapshotAt(spark, fs, base, version)
+    val c = parseCommit(readText(fs, commitPath(base, version)))
+    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    val out = change(TableMeta(version, schema, files, c.constraints,
+      c.properties, c.colmap, c.droppedCols))
+    // an op that leaves the schema alone re-stores the parent's JSON as is
+    commitManifest(spark, dir, manifestOp,
+      if (out.schema == schema) schemaJson else out.schema.json,
+      adds = Nil, removeEntries = Nil, expectedParent = version, txn = None,
+      constraintsOverride = Some(out.constraints),
+      propertiesOverride = Some(out.properties),
+      colmapOverride = Some(out.colmap),
+      droppedColsOverride = Some(out.droppedCols))
+  }
+
+  /** Resolve a column DDL target: the path segments (an exact top-level
+    * match wins over a dotted path, so dots in plain column names stay
+    * addressable) and the struct holding the leaf. Every hop above the
+    * leaf must be an existing struct field; `notStruct` finishes the
+    * message for a hop that is not one. The leaf itself is the caller's
+    * to check — ADD wants it absent, the others present.
+    */
+  private def columnPath(schema: StructType, name: String, api: String,
+                         notStruct: String = ""): (Seq[String], StructType) = {
+    val segs: Seq[String] =
+      if (schema.fieldNames.contains(name) || !name.contains('.')) Seq(name)
+      else name.split('.').toSeq
+    val parent = segs.init.foldLeft(schema) { (st, s) =>
+      st.fields.find(_.name == s).getOrElse(throw new IllegalArgumentException(
+        s"TableLog.$api: no field '$s' on the path '$name' " +
+          s"(have: ${st.fieldNames.mkString(", ")})")).dataType match {
+        case inner: StructType => inner
+        case other => throw new IllegalArgumentException(
+          s"TableLog.$api: '$s' in '$name' is ${other.simpleString}, " +
+            s"not a struct$notStruct")
+      }
+    }
+    (segs, parent)
+  }
+
+  /** `st` with the struct at `parentSegs` (empty = `st` itself) replaced
+    * by `f` of it — the rebuild every column DDL shares. `parentSegs`
+    * must have resolved through [[columnPath]].
+    */
+  private def rebuildAt(st: StructType, parentSegs: Seq[String])(
+      f: StructType => StructType): StructType =
+    if (parentSegs.isEmpty) f(st)
+    else StructType(st.fields.map { fd =>
+      if (fd.name != parentSegs.head) fd
+      else fd.copy(dataType = rebuildAt(fd.dataType.asInstanceOf[StructType],
+        parentSegs.tail)(f))
+    })
+
+  /** [[rebuildAt]] rewriting the one field at `segs`. */
+  private def rebuildField(st: StructType, segs: Seq[String])(
+      f: StructField => StructField): StructType =
+    rebuildAt(st, segs.init)(p => StructType(p.fields.map(fd =>
+      if (fd.name == segs.last) f(fd) else fd)))
+
+  /** The manifest committed at `version` (-1 = latest), None for a table
+    * with no commits — the one read behind the `*At` metadata accessors,
+    * loud for a version the log never had.
+    */
+  private def commitAt(spark: SparkSession, dir: String, version: Long,
+                       api: String): Option[Commit] = {
+    val base = new Path(dir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    lazy val vers = commitVersions(fs, base)
+    val v = if (version == -1L) vers.lastOption.getOrElse(0L) else version
+    if (v <= 0L) None
+    else {
+      require(vers.contains(v), s"TableLog.$api: version $v of $dir does not exist")
+      Some(parseCommit(readText(fs, commitPath(base, v))))
+    }
+  }
+
   // ----------------------------------------------------- CHECK constraints
 
   /** The active CHECK-constraint set at `version` (-1 = latest): name →
@@ -1580,17 +1685,9 @@ object TableLog {
     * commit, like the schema.
     */
   def constraintsAt(spark: SparkSession, dir: String,
-                    version: Long = -1L): Map[String, String] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version == -1L) currentVersion(spark, dir) else version
-    if (v <= 0L) Map.empty
-    else {
-      require(commitVersions(fs, base).contains(v),
-        s"TableLog.constraintsAt: version $v of $dir does not exist")
-      parseCommit(readText(fs, commitPath(base, v))).constraints
-    }
-  }
+                    version: Long = -1L): Map[String, String] =
+    commitAt(spark, dir, version, "constraintsAt")
+      .fold(Map.empty[String, String])(_.constraints)
 
   /** CHECK constraints whose SQL references the column at `path` — the
     * rename/drop refusal test. The match is on the FULL dotted path
@@ -1630,52 +1727,33 @@ object TableLog {
     require(name.nonEmpty && name.forall(c =>
         c.isLetterOrDigit || c == '_' || c == '-'),
       s"TableLog.addCheckConstraint: invalid constraint name '$name'")
-    val base = currentVersion(spark, dir)
-    require(base > 0L,
-      s"TableLog.addCheckConstraint: $dir has no committed versions")
-    val existing = constraintsAt(spark, dir, base)
-    require(!existing.contains(name),
-      s"TableLog.addCheckConstraint: constraint '$name' already exists " +
-        s"(${existing(name)}) — drop it first")
-    val (schemaJson, _) = {
-      val basePath = new Path(dir)
-      val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      snapshotAt(spark, fs, basePath, base)
+    alterMetadata(spark, dir, "addCheckConstraint", "constraint") { m =>
+      require(!m.constraints.contains(name),
+        s"TableLog.addCheckConstraint: constraint '$name' already exists " +
+          s"(${m.constraints(name)}) — drop it first")
+      // existing data must satisfy the constraint (NULL passes) — refuse
+      // loudly with a witness row, pinned to the version that was checked
+      val violations = readAt(spark, dir, m.version)
+        .filter(not(fnCoalesce(expr(exprSql), lit(true))))
+        .limit(1).collect()
+      require(violations.isEmpty,
+        s"TableLog.addCheckConstraint: existing data violates '$name' " +
+          s"($exprSql) — e.g. ${violations.headOption.getOrElse("")}")
+      m.copy(constraints = m.constraints + (name -> exprSql))
     }
-    // existing data must satisfy the constraint (NULL passes) — refuse
-    // loudly with a witness row, pinned to the version that was checked
-    val violations = readAt(spark, dir, base)
-      .filter(not(fnCoalesce(expr(exprSql), lit(true))))
-      .limit(1).collect()
-    require(violations.isEmpty,
-      s"TableLog.addCheckConstraint: existing data violates '$name' " +
-        s"($exprSql) — e.g. ${violations.headOption.getOrElse("")}")
-    commitManifest(spark, dir, "constraint", schemaJson, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None,
-      constraintsOverride = Some(existing + (name -> exprSql)))
   }
 
   /** `ALTER TABLE … DROP CONSTRAINT` — manifest-only; historical
     * versions keep the set they were committed under.
     */
   def dropCheckConstraint(spark: SparkSession, dir: String,
-                          name: String): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L,
-      s"TableLog.dropCheckConstraint: $dir has no committed versions")
-    val existing = constraintsAt(spark, dir, base)
-    require(existing.contains(name),
-      s"TableLog.dropCheckConstraint: no constraint named '$name' " +
-        s"(have: ${existing.keys.toSeq.sorted.mkString(", ")})")
-    val (schemaJson, _) = {
-      val basePath = new Path(dir)
-      val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      snapshotAt(spark, fs, basePath, base)
+                          name: String): Long =
+    alterMetadata(spark, dir, "dropCheckConstraint", "constraint") { m =>
+      require(m.constraints.contains(name),
+        s"TableLog.dropCheckConstraint: no constraint named '$name' " +
+          s"(have: ${m.constraints.keys.toSeq.sorted.mkString(", ")})")
+      m.copy(constraints = m.constraints - name)
     }
-    commitManifest(spark, dir, "constraint", schemaJson, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None,
-      constraintsOverride = Some(existing - name))
-  }
 
   // ------------------------------------------------------ table properties
 
@@ -1686,23 +1764,10 @@ object TableLog {
     * ([[maintainAuto]]); everything else is the owner's to interpret.
     */
   def tablePropertiesAt(spark: SparkSession, dir: String,
-                        version: Long = -1L): Map[String, String] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version == -1L) currentVersion(spark, dir) else version
-    if (v <= 0L) Map.empty
-    else {
-      require(commitVersions(fs, base).contains(v),
-        s"TableLog.tablePropertiesAt: version $v of $dir does not exist")
-      parseCommit(readText(fs, commitPath(base, v))).properties
-    }
-  }
+                        version: Long = -1L): Map[String, String] =
+    commitAt(spark, dir, version, "tablePropertiesAt")
+      .fold(Map.empty[String, String])(_.properties)
 
-  /** `ALTER TABLE … SET TBLPROPERTIES` — merge `props` into the current
-    * set as a manifest-only `properties` commit. Racing writers stay
-    * loud (properties changes are rare and deliberate); a concurrent
-    * APPEND rebasing over this commit carries the new values forward.
-    */
   /** `graft.generated.cols` codec — `GENERATED ALWAYS AS (expr)`
     * columns as a table property (`name:urlencoded-expr;…`): expression
     * text is arbitrary SQL, so each one is URL-encoded to keep the
@@ -1817,18 +1882,16 @@ object TableLog {
           org.apache.spark.sql.functions.expr(e)))
       }
 
+  /** `ALTER TABLE … SET TBLPROPERTIES` — merge `props` into the current
+    * set as a manifest-only `properties` commit. Racing writers stay
+    * loud (properties changes are rare and deliberate); a concurrent
+    * APPEND rebasing over this commit carries the new values forward.
+    */
   def setTableProperties(spark: SparkSession, dir: String,
                          props: Map[String, String]): Long = {
     require(props.nonEmpty, "TableLog.setTableProperties: empty property map")
-    val base = currentVersion(spark, dir)
-    require(base > 0L,
-      s"TableLog.setTableProperties: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    commitManifest(spark, dir, "properties", schemaJson, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None,
-      propertiesOverride = Some(tablePropertiesAt(spark, dir, base) ++ props))
+    alterMetadata(spark, dir, "setTableProperties", "properties")(m =>
+      m.copy(properties = m.properties ++ props))
   }
 
   /** `ALTER TABLE … UNSET TBLPROPERTIES` — unknown keys are a loud
@@ -1838,19 +1901,12 @@ object TableLog {
   def unsetTableProperties(spark: SparkSession, dir: String,
                            keys: Seq[String]): Long = {
     require(keys.nonEmpty, "TableLog.unsetTableProperties: no keys given")
-    val base = currentVersion(spark, dir)
-    require(base > 0L,
-      s"TableLog.unsetTableProperties: $dir has no committed versions")
-    val existing = tablePropertiesAt(spark, dir, base)
-    val missing = keys.filterNot(existing.contains)
-    require(missing.isEmpty,
-      s"TableLog.unsetTableProperties: not set: ${missing.mkString(", ")}")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    commitManifest(spark, dir, "properties", schemaJson, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None,
-      propertiesOverride = Some(existing -- keys))
+    alterMetadata(spark, dir, "unsetTableProperties", "properties") { m =>
+      val missing = keys.filterNot(m.properties.contains)
+      require(missing.isEmpty,
+        s"TableLog.unsetTableProperties: not set: ${missing.mkString(", ")}")
+      m.copy(properties = m.properties -- keys)
+    }
   }
 
   // ------------------------------------------------------- column mapping
@@ -1861,25 +1917,14 @@ object TableLog {
     * commit, like the schema/constraints).
     */
   def columnMappingAt(spark: SparkSession, dir: String,
-                      version: Long = -1L): Map[String, String] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version == -1L) currentVersion(spark, dir) else version
-    if (v <= 0L) Map.empty
-    else {
-      require(commitVersions(fs, base).contains(v),
-        s"TableLog.columnMappingAt: version $v of $dir does not exist")
-      parseCommit(readText(fs, commitPath(base, v))).colmap
-    }
-  }
+                      version: Long = -1L): Map[String, String] =
+    commitAt(spark, dir, version, "columnMappingAt")
+      .fold(Map.empty[String, String])(_.colmap)
 
   private def droppedColsAt(spark: SparkSession, dir: String,
-                            version: Long): Seq[String] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (version <= 0L) Nil
-    else parseCommit(readText(fs, commitPath(base, version))).droppedCols
-  }
+                            version: Long): Seq[String] =
+    commitAt(spark, dir, version, "droppedColsAt")
+      .fold(Seq.empty[String])(_.droppedCols)
 
   /** `ALTER TABLE … ADD COLUMN` as a MANIFEST-ONLY commit — zero data
     * rewritten however large the table: the new column appends to the
@@ -1893,102 +1938,70 @@ object TableLog {
     * rule).
     */
   def addColumn(spark: SparkSession, dir: String, name: String,
-                dataType: DataType, default: Option[String] = None): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.addColumn: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val cm = columnMappingAt(spark, dir, base)
-    // NESTED add (round 18, completing the nested DDL family): a dotted
-    // name appends a field to its parent STRUCT (exact top-level match
-    // wins, same precedence as rename/drop). Manifest-only either way:
-    // old files simply lack the nested field and the parquet reader
-    // null-fills a requested-but-missing struct member exactly like a
-    // missing top-level column.
-    val segs: Seq[String] =
-      if (schema.fieldNames.contains(name) || !name.contains('.')) Seq(name)
-      else name.split('.').toSeq
-    def structAt(path: Seq[String]): StructType =
-      path.foldLeft(schema) { (st, s) =>
-        st.fields.find(_.name == s).getOrElse(throw new IllegalArgumentException(
-          s"TableLog.addColumn: no field '$s' on the path '$name' " +
-            s"(have: ${st.fieldNames.mkString(", ")})")).dataType match {
-          case inner: StructType => inner
-          case other => throw new IllegalArgumentException(
-            s"TableLog.addColumn: '$s' in '$name' is ${other.simpleString}, " +
-              "not a struct")
-        }
+                dataType: DataType, default: Option[String] = None): Long =
+    alterMetadata(spark, dir, "addColumn", "evolve") { m =>
+      // NESTED add (round 18, completing the nested DDL family): a dotted
+      // name appends a field to its parent STRUCT (exact top-level match
+      // wins, same precedence as rename/drop). Manifest-only either way:
+      // old files simply lack the nested field and the parquet reader
+      // null-fills a requested-but-missing struct member exactly like a
+      // missing top-level column.
+      val (segs, parent) = columnPath(m.schema, name, "addColumn")
+      val leaf = segs.last
+      val path = segs.mkString(".")
+      require(!parent.fieldNames.contains(leaf),
+        s"TableLog.addColumn: column '$path' already exists")
+      // the new column's PHYSICAL landing spot: it has no mapping entry
+      // of its own, but a renamed ANCESTOR prefixes it — 'body.qty' under
+      // body→payload writes to 'payload.qty'. Both guards below compare
+      // physical against physical; comparing the logical name would let
+      // 'body.qty' slip past a 'payload.qty' tombstone and resurrect the
+      // dropped field's stale bytes from every pre-drop file.
+      val physNew = physPath(m.colmap, path)
+      val siblingPhys = parent.fieldNames.toSeq
+        .map(s => physPath(m.colmap, (segs.init :+ s).mkString(".")))
+      require(!siblingPhys.contains(physNew),
+        s"TableLog.addColumn: '$path' lands on the PHYSICAL name " +
+          s"'$physNew' of another live column — a later write would merge " +
+          "two logical columns into one on-disk column")
+      require(!m.droppedCols.contains(physNew),
+        s"TableLog.addColumn: '$path' lands on the physical name '$physNew' " +
+          "of a DROPPED column and live files still carry its old bytes — " +
+          "adding it back would silently resurrect stale data; pick another " +
+          "name or overwrite the table")
+      // ADD COLUMN … DEFAULT expr (round 19): the default's SQL text
+      // lands under BOTH of Spark's metadata keys — CURRENT_DEFAULT pads
+      // future INSERTs (the analyzer's channel, same as SET DEFAULT) and
+      // EXISTS_DEFAULT makes every file that PREDATES the column read
+      // the constant-folded default instead of null (Spark's parquet
+      // reader honors it natively for missing columns — probed, then
+      // pinned in spec). Delta's exact two-key design, manifest-only:
+      // zero files rewritten however big the backlog. Constant-folding
+      // happens HERE (a bad default refuses at DDL time); files written
+      // AFTER the add store real values, so an explicit NULL stays NULL
+      // (exists-defaults apply only to physically missing columns).
+      // Top-level only — Spark's own DEFAULT surface.
+      val newField = default match {
+        case None => StructField(leaf, dataType, nullable = true)
+        case Some(sql) =>
+          require(segs.length == 1,
+            s"TableLog.addColumn: DEFAULT applies to top-level columns " +
+              s"only, not '$path'")
+          val rdc = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
+          val cand = StructField(leaf, dataType, nullable = true,
+            new org.apache.spark.sql.types.MetadataBuilder()
+              .putString(rdc.CURRENT_DEFAULT_COLUMN_METADATA_KEY, sql).build())
+          try rdc.constantFoldCurrentDefaultsToExistDefaults(
+            StructType(Array(cand)), "ALTER TABLE ADD COLUMN").head
+          catch { case scala.util.control.NonFatal(e) =>
+            throw new IllegalArgumentException(
+              s"TableLog.addColumn: DEFAULT ($sql) for '$path' is not a " +
+                s"valid constant default: ${e.getMessage}", e)
+          }
       }
-    val parent = structAt(segs.init)
-    val leaf = segs.last
-    val path = segs.mkString(".")
-    require(!parent.fieldNames.contains(leaf),
-      s"TableLog.addColumn: column '$path' already exists")
-    // the new column's PHYSICAL landing spot: it has no mapping entry
-    // of its own, but a renamed ANCESTOR prefixes it — 'body.qty' under
-    // body→payload writes to 'payload.qty'. Both guards below compare
-    // physical against physical; comparing the logical name would let
-    // 'body.qty' slip past a 'payload.qty' tombstone and resurrect the
-    // dropped field's stale bytes from every pre-drop file.
-    val physNew = physPath(cm, path)
-    val siblingPhys = parent.fieldNames.toSeq
-      .map(s => physPath(cm, (segs.init :+ s).mkString(".")))
-    require(!siblingPhys.contains(physNew),
-      s"TableLog.addColumn: '$path' lands on the PHYSICAL name " +
-        s"'$physNew' of another live column — a later write would merge " +
-        "two logical columns into one on-disk column")
-    val dropped = droppedColsAt(spark, dir, base)
-    require(!dropped.contains(physNew),
-      s"TableLog.addColumn: '$path' lands on the physical name '$physNew' " +
-        "of a DROPPED column and live files still carry its old bytes — " +
-        "adding it back would silently resurrect stale data; pick another " +
-        "name or overwrite the table")
-    // ADD COLUMN … DEFAULT expr (round 19): the default's SQL text
-    // lands under BOTH of Spark's metadata keys — CURRENT_DEFAULT pads
-    // future INSERTs (the analyzer's channel, same as SET DEFAULT) and
-    // EXISTS_DEFAULT makes every file that PREDATES the column read
-    // the constant-folded default instead of null (Spark's parquet
-    // reader honors it natively for missing columns — probed, then
-    // pinned in spec). Delta's exact two-key design, manifest-only:
-    // zero files rewritten however big the backlog. Constant-folding
-    // happens HERE (a bad default refuses at DDL time); files written
-    // AFTER the add store real values, so an explicit NULL stays NULL
-    // (exists-defaults apply only to physically missing columns).
-    // Top-level only — Spark's own DEFAULT surface.
-    val newField = default match {
-      case None =>
-        org.apache.spark.sql.types.StructField(segs.last, dataType,
-          nullable = true)
-      case Some(sql) =>
-        require(segs.length == 1,
-          s"TableLog.addColumn: DEFAULT applies to top-level columns " +
-            s"only, not '$path'")
-        val rdc = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-        val cand = org.apache.spark.sql.types.StructField(segs.last,
-          dataType, nullable = true,
-          new org.apache.spark.sql.types.MetadataBuilder()
-            .putString(rdc.CURRENT_DEFAULT_COLUMN_METADATA_KEY, sql).build())
-        try rdc.constantFoldCurrentDefaultsToExistDefaults(
-          StructType(Array(cand)), "ALTER TABLE ADD COLUMN").head
-        catch { case scala.util.control.NonFatal(e) =>
-          throw new IllegalArgumentException(
-            s"TableLog.addColumn: DEFAULT ($sql) for '$path' is not a " +
-              s"valid constant default: ${e.getMessage}", e)
-        }
+      m.copy(schema = rebuildAt(m.schema, segs.init)(st =>
+        StructType(st.fields :+ newField)))
     }
-    def rebuild(st: StructType, p: Seq[String]): StructType =
-      if (p.length == 1) StructType(st.fields :+ newField)
-      else StructType(st.fields.map { f =>
-        if (f.name != p.head) f
-        else f.copy(dataType =
-          rebuild(f.dataType.asInstanceOf[StructType], p.tail))
-      })
-    val newSchema = rebuild(schema, segs)
-    commitManifest(spark, dir, "evolve", newSchema.json, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None)
-  }
 
   /** `ALTER TABLE … RENAME COLUMN old TO new` as a MANIFEST-ONLY
     * commit — zero data rewritten however large the table: files are
@@ -2010,142 +2023,111 @@ object TableLog {
                    oldName: String, newName: String): Long = {
     require(oldName != newName,
       s"TableLog.renameColumn: '$oldName' to itself is a no-op")
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.renameColumn: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // NESTED rename (round 18): a dotted oldName addresses a struct
-    // field (`payload.kind`) unless a top-level column literally
-    // carries the dotted name (exact top-level match wins — dots in
-    // plain column names stay addressable). The rename stays WITHIN
-    // its parent struct — moving a field across structs is a data
-    // transform, not a rename.
-    val segs: Seq[String] =
-      if (schema.fieldNames.contains(oldName) || !oldName.contains('.'))
-        Seq(oldName)
-      else oldName.split('.').toSeq
-    def structAt(path: Seq[String]): StructType =
-      path.foldLeft(schema) { (st, s) =>
-        st.fields.find(_.name == s).getOrElse(throw new IllegalArgumentException(
-          s"TableLog.renameColumn: no field '$s' on the path '$oldName' " +
-            s"(have: ${st.fieldNames.mkString(", ")})")).dataType match {
-          case inner: StructType => inner
-          case other => throw new IllegalArgumentException(
-            s"TableLog.renameColumn: '$s' in '$oldName' is " +
-              s"${other.simpleString}, not a struct — only struct chains " +
-              "are renameable below the top level")
+    alterMetadata(spark, dir, "renameColumn", "rename") { m =>
+      // NESTED rename (round 18): a dotted oldName addresses a struct
+      // field (`payload.kind`) unless a top-level column literally
+      // carries the dotted name (exact top-level match wins — dots in
+      // plain column names stay addressable). The rename stays WITHIN
+      // its parent struct — moving a field across structs is a data
+      // transform, not a rename.
+      val (segs, parent) = columnPath(m.schema, oldName, "renameColumn",
+        " — only struct chains are renameable below the top level")
+      val parentSegs = segs.init
+      val oldLeaf = segs.last
+      require(parent.fieldNames.contains(oldLeaf),
+        s"TableLog.renameColumn: no column '$oldName' " +
+          s"(parent has: ${parent.fieldNames.mkString(", ")})")
+      val newLeaf = {
+        val ns = newName.split('.').toSeq
+        if (ns.length == 1) ns.head
+        else {
+          require(ns.init == parentSegs,
+            s"TableLog.renameColumn: '$oldName' → '$newName' would MOVE the " +
+              "field across structs — a rename stays within its parent")
+          ns.last
         }
       }
-    val parentSegs = segs.init
-    val parent = structAt(parentSegs)
-    val oldLeaf = segs.last
-    require(parent.fieldNames.contains(oldLeaf),
-      s"TableLog.renameColumn: no column '$oldName' " +
-        s"(parent has: ${parent.fieldNames.mkString(", ")})")
-    val newLeaf = {
-      val ns = newName.split('.').toSeq
-      if (ns.length == 1) ns.head
-      else {
-        require(ns.init == parentSegs,
-          s"TableLog.renameColumn: '$oldName' → '$newName' would MOVE the " +
-            "field across structs — a rename stays within its parent")
-        ns.last
+      require(newLeaf.nonEmpty, "TableLog.renameColumn: empty new name")
+      require(newLeaf != "_dv_rel" && newLeaf != "_dv_pos",
+        "TableLog.renameColumn: _dv_rel/_dv_pos shadow the deletion-vector " +
+          "scan's working columns")
+      require(!parent.fieldNames.contains(newLeaf),
+        s"TableLog.renameColumn: '$newLeaf' already exists" +
+          (if (parentSegs.isEmpty) "" else s" in ${parentSegs.mkString(".")}"))
+      val oldPath = segs.mkString(".")
+      val newPath = (parentSegs :+ newLeaf).mkString(".")
+      val cm = m.colmap
+      val siblingPhys = parent.fieldNames.toSeq.filterNot(_ == oldLeaf)
+        .map(s => physPath(cm, (parentSegs :+ s).mkString(".")))
+      require(!siblingPhys.contains(newPath),
+        s"TableLog.renameColumn: '$newPath' is the PHYSICAL name of another " +
+          "live column — a later write would merge two logical columns into " +
+          "one on-disk column")
+      val referencing = constraintsReferencing(m.constraints, oldPath)
+      require(referencing.isEmpty,
+        s"TableLog.renameColumn: CHECK constraint(s) ${referencing.keys.mkString(", ")} " +
+          s"reference '$oldPath' — drop them, rename, re-add under the new name")
+      // renaming BACK to the physical path collapses to identity (no
+      // entry). Descendant entries REKEY (their key's parent segments
+      // must stay current logical names — the physPath invariant).
+      val p = physPath(cm, oldPath)
+      val rekeyed = (cm - oldPath).map { case (k, v) =>
+        (if (k.startsWith(oldPath + ".")) newPath + k.drop(oldPath.length)
+         else k) -> v
       }
-    }
-    require(newLeaf.nonEmpty, "TableLog.renameColumn: empty new name")
-    require(newLeaf != "_dv_rel" && newLeaf != "_dv_pos",
-      "TableLog.renameColumn: _dv_rel/_dv_pos shadow the deletion-vector " +
-        "scan's working columns")
-    require(!parent.fieldNames.contains(newLeaf),
-      s"TableLog.renameColumn: '$newLeaf' already exists" +
-        (if (parentSegs.isEmpty) "" else s" in ${parentSegs.mkString(".")}"))
-    val oldPath = segs.mkString(".")
-    val newPath = (parentSegs :+ newLeaf).mkString(".")
-    val cm = columnMappingAt(spark, dir, base)
-    val siblingPhys = parent.fieldNames.toSeq.filterNot(_ == oldLeaf)
-      .map(s => physPath(cm, (parentSegs :+ s).mkString(".")))
-    require(!siblingPhys.contains(newPath),
-      s"TableLog.renameColumn: '$newPath' is the PHYSICAL name of another " +
-        "live column — a later write would merge two logical columns into " +
-        "one on-disk column")
-    val cks = constraintsAt(spark, dir, base)
-    val referencing = constraintsReferencing(cks, oldPath)
-    require(referencing.isEmpty,
-      s"TableLog.renameColumn: CHECK constraint(s) ${referencing.keys.mkString(", ")} " +
-        s"reference '$oldPath' — drop them, rename, re-add under the new name")
-    def rebuild(st: StructType, path: Seq[String]): StructType =
-      StructType(st.fields.map { f =>
-        if (f.name != path.head) f
-        else if (path.length == 1) f.copy(name = newLeaf)
-        else f.copy(dataType =
-          rebuild(f.dataType.asInstanceOf[StructType], path.tail))
-      })
-    val newSchema = rebuild(schema, segs)
-    // renaming BACK to the physical path collapses to identity (no
-    // entry). Descendant entries REKEY (their key's parent segments
-    // must stay current logical names — the physPath invariant).
-    val p = physPath(cm, oldPath)
-    val rekeyed = (cm - oldPath).map { case (k, v) =>
-      (if (k.startsWith(oldPath + ".")) newPath + k.drop(oldPath.length)
-       else k) -> v
-    }
-    val newCm = rekeyed ++
-      (if (p == newPath) Map.empty else Map(newPath -> p))
-    // declared layout + contract properties follow the rename — a
-    // stats/cluster/bloom declaration on the old path would silently
-    // stop harvesting, and a notnull declaration would stop enforcing
-    val props = tablePropertiesAt(spark, dir, base)
-    val renamedProps = Seq("graft.stats.cols", "graft.cluster.cols",
-        "graft.bloom.cols", "graft.notnull.cols").flatMap { k =>
-      props.get(k).map { v =>
-        k -> v.split(",").map(_.trim).map { c =>
-          if (c == oldPath) newPath
-          else if (c.startsWith(oldPath + ".")) newPath + c.drop(oldPath.length)
-          else c
-        }.mkString(",")
-      }
-    }.filter { case (k, v) => props.get(k) != Some(v) }
-    // identity specs REKEY (col name + the graft.identity.high.<col>
-    // mark) — a spec left on the old name silently stops minting:
-    // commit's df.columns filter no longer matches and later INSERTs
-    // store NULLs in a column whose contract is "unique, never NULL"
-    val idSpecs = props.get("graft.identity.cols")
-      .map(decodeIdentityCols).getOrElse(Nil)
-    val idRenamed = idSpecs.exists(_.col == oldPath)
-    if (idRenamed) require(!newPath.contains(":") && !newPath.contains(";"),
-      s"TableLog.renameColumn: identity column name '$newPath' cannot " +
-        "contain ':' or ';'")
-    val idProps: Seq[(String, String)] =
-      if (!idRenamed) Nil
-      else ("graft.identity.cols" -> encodeIdentityCols(
-          idSpecs.map(s => if (s.col == oldPath) s.copy(col = newPath) else s))) +:
-        props.get(s"graft.identity.high.$oldPath").toSeq
-          .map(v => s"graft.identity.high.$newPath" -> v)
-    val idRemoved: Set[String] =
-      if (idRenamed) Set(s"graft.identity.high.$oldPath") else Set.empty
-    // declared partition transforms follow too — DESCRIBE would
-    // otherwise keep showing days(<old name>) forever
-    val ptProps: Seq[(String, String)] =
-      props.get("graft.partition.transforms").toSeq.map { spec =>
-        val withArg = """(\w+)\((\d+)\s*,\s*([^)]+)\)""".r
-        val plain = """(\w+)\(([^)]+)\)""".r
-        "graft.partition.transforms" ->
-          spec.split(",(?![^(]*\\))").map(_.trim).map {
-            case withArg(fn, n, c) if c.trim == oldPath => s"$fn($n, $newPath)"
-            case plain(fn, c) if c.trim == oldPath => s"$fn($newPath)"
-            case c if c == oldPath => newPath
-            case other => other
+      val newCm = rekeyed ++
+        (if (p == newPath) Map.empty else Map(newPath -> p))
+      // declared layout + contract properties follow the rename — a
+      // stats/cluster/bloom declaration on the old path would silently
+      // stop harvesting, and a notnull declaration would stop enforcing
+      val props = m.properties
+      val renamedProps = Seq("graft.stats.cols", "graft.cluster.cols",
+          "graft.bloom.cols", "graft.notnull.cols").flatMap { k =>
+        props.get(k).map { v =>
+          k -> v.split(",").map(_.trim).map { c =>
+            if (c == oldPath) newPath
+            else if (c.startsWith(oldPath + ".")) newPath + c.drop(oldPath.length)
+            else c
           }.mkString(",")
+        }
       }.filter { case (k, v) => props.get(k) != Some(v) }
-    val propUps = renamedProps ++ idProps ++ ptProps
-    commitManifest(spark, dir, "rename", newSchema.json, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None,
-      colmapOverride = Some(newCm),
-      propertiesOverride =
-        if (propUps.isEmpty && idRemoved.isEmpty) None
-        else Some(props -- idRemoved ++ propUps))
+      // identity specs REKEY (col name + the graft.identity.high.<col>
+      // mark) — a spec left on the old name silently stops minting:
+      // commit's df.columns filter no longer matches and later INSERTs
+      // store NULLs in a column whose contract is "unique, never NULL"
+      val idSpecs = props.get("graft.identity.cols")
+        .map(decodeIdentityCols).getOrElse(Nil)
+      val idRenamed = idSpecs.exists(_.col == oldPath)
+      if (idRenamed) require(!newPath.contains(":") && !newPath.contains(";"),
+        s"TableLog.renameColumn: identity column name '$newPath' cannot " +
+          "contain ':' or ';'")
+      val idProps: Seq[(String, String)] =
+        if (!idRenamed) Nil
+        else ("graft.identity.cols" -> encodeIdentityCols(
+            idSpecs.map(s => if (s.col == oldPath) s.copy(col = newPath) else s))) +:
+          props.get(s"graft.identity.high.$oldPath").toSeq
+            .map(v => s"graft.identity.high.$newPath" -> v)
+      val idRemoved: Set[String] =
+        if (idRenamed) Set(s"graft.identity.high.$oldPath") else Set.empty
+      // declared partition transforms follow too — DESCRIBE would
+      // otherwise keep showing days(<old name>) forever
+      val ptProps: Seq[(String, String)] =
+        props.get("graft.partition.transforms").toSeq.map { spec =>
+          val withArg = """(\w+)\((\d+)\s*,\s*([^)]+)\)""".r
+          val plain = """(\w+)\(([^)]+)\)""".r
+          "graft.partition.transforms" ->
+            spec.split(",(?![^(]*\\))").map(_.trim).map {
+              case withArg(fn, n, c) if c.trim == oldPath => s"$fn($n, $newPath)"
+              case plain(fn, c) if c.trim == oldPath => s"$fn($newPath)"
+              case c if c == oldPath => newPath
+              case other => other
+            }.mkString(",")
+        }.filter { case (k, v) => props.get(k) != Some(v) }
+      m.copy(
+        schema = rebuildField(m.schema, segs)(_.copy(name = newLeaf)),
+        colmap = newCm,
+        properties = props -- idRemoved ++ renamedProps ++ idProps ++ ptProps)
+    }
   }
 
   /** `ALTER TABLE … DROP COLUMN` as a MANIFEST-ONLY commit: the logical
@@ -2160,107 +2142,72 @@ object TableLog {
     * file and clears the set. Refused when a CHECK constraint
     * references the column or it is the table's last column.
     */
-  def dropColumn(spark: SparkSession, dir: String, name: String): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.dropColumn: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // NESTED drop (round 18): a dotted name addresses a struct field
-    // unless a top-level column literally carries the dotted name
-    // (exact match wins, same precedence as renameColumn). The field
-    // vanishes from the logical schema; old files keep its bytes
-    // (parquet's nested schema pruning never reads them), new files
-    // simply lack it — the mixed layout reads uniformly by name.
-    val segs: Seq[String] =
-      if (schema.fieldNames.contains(name) || !name.contains('.')) Seq(name)
-      else name.split('.').toSeq
-    def structAt(path: Seq[String]): StructType =
-      path.foldLeft(schema) { (st, s) =>
-        st.fields.find(_.name == s).getOrElse(throw new IllegalArgumentException(
-          s"TableLog.dropColumn: no field '$s' on the path '$name' " +
-            s"(have: ${st.fieldNames.mkString(", ")})")).dataType match {
-          case inner: StructType => inner
-          case other => throw new IllegalArgumentException(
-            s"TableLog.dropColumn: '$s' in '$name' is ${other.simpleString}, " +
-              "not a struct — only struct chains are droppable below the " +
-              "top level")
+  def dropColumn(spark: SparkSession, dir: String, name: String): Long =
+    alterMetadata(spark, dir, "dropColumn", "drop") { m =>
+      // NESTED drop (round 18): a dotted name addresses a struct field
+      // unless a top-level column literally carries the dotted name
+      // (exact match wins, same precedence as renameColumn). The field
+      // vanishes from the logical schema; old files keep its bytes
+      // (parquet's nested schema pruning never reads them), new files
+      // simply lack it — the mixed layout reads uniformly by name.
+      val (segs, parent) = columnPath(m.schema, name, "dropColumn",
+        " — only struct chains are droppable below the top level")
+      val leaf = segs.last
+      require(parent.fieldNames.contains(leaf),
+        s"TableLog.dropColumn: no column '$name' " +
+          s"(parent has: ${parent.fieldNames.mkString(", ")})")
+      require(parent.fields.length > 1,
+        if (segs.length == 1)
+          s"TableLog.dropColumn: '$name' is the table's last column"
+        else
+          s"TableLog.dropColumn: '$name' is its struct's last field — drop " +
+            s"the struct '${segs.init.mkString(".")}' instead")
+      val path = segs.mkString(".")
+      val referencing = constraintsReferencing(m.constraints, path)
+      require(referencing.isEmpty,
+        s"TableLog.dropColumn: CHECK constraint(s) ${referencing.keys.mkString(", ")} " +
+          s"reference '$path' — drop them first")
+      // declared PARTITIONED BY transforms pin their source column: the
+      // table's layout contract would dangle (DESCRIBE shows days(ts)
+      // over a column that no longer exists) — refuse, like constraints
+      val props = m.properties
+      val ptRefs = transformsReferencing(props, path)
+      require(ptRefs.isEmpty,
+        s"TableLog.dropColumn: PARTITIONED BY transform(s) " +
+          s"${ptRefs.mkString(", ")} reference '$path' — the declared " +
+          "partitioning would dangle")
+      // declared layout + identity properties shed the dropped column:
+      // a stale identity spec is the dangerous one — re-ADDING a column
+      // under the same name later would silently resume minting from a
+      // dead mark and overwrite user-supplied values
+      val idSpecs = props.get("graft.identity.cols")
+        .map(decodeIdentityCols).getOrElse(Nil)
+      val keptIds = idSpecs.filterNot(_.col == path)
+      val idUps: Map[String, String] =
+        if (keptIds.length == idSpecs.length) Map.empty
+        else if (keptIds.isEmpty) Map.empty
+        else Map("graft.identity.cols" -> encodeIdentityCols(keptIds))
+      val idGone: Set[String] =
+        if (keptIds.length == idSpecs.length) Set.empty
+        else Set(s"graft.identity.high.$path") ++
+          (if (keptIds.isEmpty) Set("graft.identity.cols") else Set.empty)
+      val listUps = Seq("graft.stats.cols", "graft.cluster.cols",
+          "graft.bloom.cols", "graft.notnull.cols").flatMap { k =>
+        props.get(k).map { v =>
+          k -> v.split(",").map(_.trim).filterNot(c =>
+            c == path || c.startsWith(path + ".")).mkString(",")
         }
-      }
-    val parent = structAt(segs.init)
-    val leaf = segs.last
-    require(parent.fieldNames.contains(leaf),
-      s"TableLog.dropColumn: no column '$name' " +
-        s"(parent has: ${parent.fieldNames.mkString(", ")})")
-    require(parent.fields.length > 1,
-      if (segs.length == 1)
-        s"TableLog.dropColumn: '$name' is the table's last column"
-      else
-        s"TableLog.dropColumn: '$name' is its struct's last field — drop " +
-          s"the struct '${segs.init.mkString(".")}' instead")
-    val path = segs.mkString(".")
-    val cks = constraintsAt(spark, dir, base)
-    val referencing = constraintsReferencing(cks, path)
-    require(referencing.isEmpty,
-      s"TableLog.dropColumn: CHECK constraint(s) ${referencing.keys.mkString(", ")} " +
-        s"reference '$path' — drop them first")
-    // declared PARTITIONED BY transforms pin their source column: the
-    // table's layout contract would dangle (DESCRIBE shows days(ts)
-    // over a column that no longer exists) — refuse, like constraints
-    val props = tablePropertiesAt(spark, dir, base)
-    val ptRefs = transformsReferencing(props, path)
-    require(ptRefs.isEmpty,
-      s"TableLog.dropColumn: PARTITIONED BY transform(s) " +
-        s"${ptRefs.mkString(", ")} reference '$path' — the declared " +
-        "partitioning would dangle")
-    val cm = columnMappingAt(spark, dir, base)
-    val physName = physPath(cm, path)
-    def rebuild(st: StructType, p: Seq[String]): StructType =
-      if (p.length == 1) StructType(st.fields.filterNot(_.name == p.head))
-      else StructType(st.fields.map { f =>
-        if (f.name != p.head) f
-        else f.copy(dataType =
-          rebuild(f.dataType.asInstanceOf[StructType], p.tail))
-      })
-    val newSchema = rebuild(schema, segs)
-    // mapping entries at or below the dropped path fall away
-    val newCm = cm.filterNot { case (k, _) =>
-      k == path || k.startsWith(path + ".") }
-    // declared layout + identity properties shed the dropped column:
-    // a stale identity spec is the dangerous one — re-ADDING a column
-    // under the same name later would silently resume minting from a
-    // dead mark and overwrite user-supplied values
-    val idSpecs = props.get("graft.identity.cols")
-      .map(decodeIdentityCols).getOrElse(Nil)
-    val keptIds = idSpecs.filterNot(_.col == path)
-    val idUps: Map[String, String] =
-      if (keptIds.length == idSpecs.length) Map.empty
-      else if (keptIds.isEmpty) Map.empty
-      else Map("graft.identity.cols" -> encodeIdentityCols(keptIds))
-    val idGone: Set[String] =
-      if (keptIds.length == idSpecs.length) Set.empty
-      else Set(s"graft.identity.high.$path") ++
-        (if (keptIds.isEmpty) Set("graft.identity.cols") else Set.empty)
-    val listUps = Seq("graft.stats.cols", "graft.cluster.cols",
-        "graft.bloom.cols", "graft.notnull.cols").flatMap { k =>
-      props.get(k).map { v =>
-        k -> v.split(",").map(_.trim).filterNot(c =>
-          c == path || c.startsWith(path + ".")).mkString(",")
-      }
-    }.filter { case (k, v) => props.get(k) != Some(v) }
-    val (listGone, listKept) = listUps.partition(_._2.isEmpty)
-    val propUps = idUps ++ listKept
-    val propGone = idGone ++ listGone.map(_._1)
-    commitManifest(spark, dir, "drop", newSchema.json, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None,
-      colmapOverride = Some(newCm),
-      droppedColsOverride =
-        Some((droppedColsAt(spark, dir, base) :+ physName).distinct),
-      propertiesOverride =
-        if (propUps.isEmpty && propGone.isEmpty) None
-        else Some(props -- propGone ++ propUps))
-  }
+      }.filter { case (k, v) => props.get(k) != Some(v) }
+      val (listGone, listKept) = listUps.partition(_._2.isEmpty)
+      m.copy(
+        schema = rebuildAt(m.schema, segs.init)(st =>
+          StructType(st.fields.filterNot(_.name == leaf))),
+        // mapping entries at or below the dropped path fall away
+        colmap = m.colmap.filterNot { case (k, _) =>
+          k == path || k.startsWith(path + ".") },
+        droppedCols = (m.droppedCols :+ physPath(m.colmap, path)).distinct,
+        properties = props -- idGone -- listGone.map(_._1) ++ idUps ++ listKept)
+    }
 
   /** Declared `graft.partition.transforms` entries whose SOURCE column
     * is `path` — the refusal set for DDL that would break the table's
@@ -2328,75 +2275,47 @@ object TableLog {
     * whose types changed.
     */
   def alterColumnType(spark: SparkSession, dir: String, name: String,
-                      newType: DataType): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.alterColumnType: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val segs: Seq[String] =
-      if (schema.fieldNames.contains(name) || !name.contains('.')) Seq(name)
-      else name.split('.').toSeq
-    def structAt(p: Seq[String]): StructType =
-      p.foldLeft(schema) { (st, s) =>
-        st.fields.find(_.name == s).getOrElse(throw new IllegalArgumentException(
-          s"TableLog.alterColumnType: no field '$s' on the path '$name' " +
-            s"(have: ${st.fieldNames.mkString(", ")})")).dataType match {
-          case inner: StructType => inner
-          case other => throw new IllegalArgumentException(
-            s"TableLog.alterColumnType: '$s' in '$name' is " +
-              s"${other.simpleString}, not a struct")
-        }
-      }
-    val parent = structAt(segs.init)
-    val leaf = segs.last
-    val field = parent.fields.find(_.name == leaf).getOrElse(
-      throw new IllegalArgumentException(
-        s"TableLog.alterColumnType: no column '$name' " +
-          s"(parent has: ${parent.fieldNames.mkString(", ")})"))
-    val path = segs.mkString(".")
-    require(field.dataType != newType,
-      s"TableLog.alterColumnType: '$path' is already ${newType.simpleString}")
-    require(widens(field.dataType, newType),
-      s"TableLog.alterColumnType: ${field.dataType.simpleString} → " +
-        s"${newType.simpleString} is not a safe widening — only " +
-        "byte/short/int→long, byte/short/int/float→double, and " +
-        "decimal(p,s)→decimal(p',s') with p'-s' ≥ p-s, s' ≥ s are " +
-        "manifest-only; anything else rewrites data (SELECT + overwrite)")
-    val props = tablePropertiesAt(spark, dir, base)
-    require(!props.get("graft.identity.cols").map(decodeIdentityCols)
-        .getOrElse(Nil).exists(_.col == path),
-      s"TableLog.alterColumnType: '$path' is an IDENTITY column — its " +
-        "minting arithmetic is typed; drop the identity spec first")
-    val gen = props.get("graft.generated.cols")
-      .map(decodeGeneratedCols).getOrElse(Nil)
-    val genHits = gen.filter { case (c, e) =>
-      c == path || constraintsReferencing(Map(c -> e), path).nonEmpty }
-    require(genHits.isEmpty,
-      s"TableLog.alterColumnType: '$path' is or feeds GENERATED column(s) " +
-        s"${genHits.map(_._1).mkString(", ")} — their stored expressions " +
-        "were validated under the old type")
-    val ptRefs = transformsReferencing(props, path)
-    require(ptRefs.isEmpty,
-      s"TableLog.alterColumnType: PARTITIONED BY transform(s) " +
-        s"${ptRefs.mkString(", ")} pin '$path' — bucket/time transforms " +
-        "hash the physical representation; old files' partition values " +
-        "would disagree with new ones")
-    val cks = constraintsReferencing(constraintsAt(spark, dir, base), path)
-    require(cks.isEmpty,
-      s"TableLog.alterColumnType: CHECK constraint(s) ${cks.keys.mkString(", ")} " +
-        s"reference '$path' — drop them, widen, re-add")
-    def rebuild(st: StructType, p: Seq[String]): StructType =
-      StructType(st.fields.map { f =>
-        if (f.name != p.head) f
-        else if (p.length == 1) f.copy(dataType = newType)
-        else f.copy(dataType =
-          rebuild(f.dataType.asInstanceOf[StructType], p.tail))
-      })
-    commitManifest(spark, dir, "widen", rebuild(schema, segs).json,
-      adds = Nil, removeEntries = Nil, expectedParent = base, txn = None)
-  }
+                      newType: DataType): Long =
+    alterMetadata(spark, dir, "alterColumnType", "widen") { m =>
+      val (segs, parent) = columnPath(m.schema, name, "alterColumnType")
+      val field = parent.fields.find(_.name == segs.last).getOrElse(
+        throw new IllegalArgumentException(
+          s"TableLog.alterColumnType: no column '$name' " +
+            s"(parent has: ${parent.fieldNames.mkString(", ")})"))
+      val path = segs.mkString(".")
+      require(field.dataType != newType,
+        s"TableLog.alterColumnType: '$path' is already ${newType.simpleString}")
+      require(widens(field.dataType, newType),
+        s"TableLog.alterColumnType: ${field.dataType.simpleString} → " +
+          s"${newType.simpleString} is not a safe widening — only " +
+          "byte/short/int→long, byte/short/int/float→double, and " +
+          "decimal(p,s)→decimal(p',s') with p'-s' ≥ p-s, s' ≥ s are " +
+          "manifest-only; anything else rewrites data (SELECT + overwrite)")
+      val props = m.properties
+      require(!props.get("graft.identity.cols").map(decodeIdentityCols)
+          .getOrElse(Nil).exists(_.col == path),
+        s"TableLog.alterColumnType: '$path' is an IDENTITY column — its " +
+          "minting arithmetic is typed; drop the identity spec first")
+      val gen = props.get("graft.generated.cols")
+        .map(decodeGeneratedCols).getOrElse(Nil)
+      val genHits = gen.filter { case (c, e) =>
+        c == path || constraintsReferencing(Map(c -> e), path).nonEmpty }
+      require(genHits.isEmpty,
+        s"TableLog.alterColumnType: '$path' is or feeds GENERATED column(s) " +
+          s"${genHits.map(_._1).mkString(", ")} — their stored expressions " +
+          "were validated under the old type")
+      val ptRefs = transformsReferencing(props, path)
+      require(ptRefs.isEmpty,
+        s"TableLog.alterColumnType: PARTITIONED BY transform(s) " +
+          s"${ptRefs.mkString(", ")} pin '$path' — bucket/time transforms " +
+          "hash the physical representation; old files' partition values " +
+          "would disagree with new ones")
+      val cks = constraintsReferencing(m.constraints, path)
+      require(cks.isEmpty,
+        s"TableLog.alterColumnType: CHECK constraint(s) ${cks.keys.mkString(", ")} " +
+          s"reference '$path' — drop them, widen, re-add")
+      m.copy(schema = rebuildField(m.schema, segs)(_.copy(dataType = newType)))
+    }
 
   /** `ALTER TABLE … ALTER COLUMN name SET DEFAULT expr | DROP DEFAULT`
     * — post-hoc column defaults as a MANIFEST-ONLY commit: the
@@ -2416,52 +2335,43 @@ object TableLog {
     * refuse (their fill channels own the column).
     */
   def setColumnDefault(spark: SparkSession, dir: String, name: String,
-                       defaultSql: Option[String]): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.setColumnDefault: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    require(schema.fieldNames.contains(name),
-      s"TableLog.setColumnDefault: no top-level column '$name' — DEFAULT " +
-        s"applies to top-level columns only (have: ${schema.fieldNames.mkString(", ")})")
-    val props = tablePropertiesAt(spark, dir, base)
-    require(!props.get("graft.identity.cols").map(decodeIdentityCols)
-        .getOrElse(Nil).exists(_.col == name),
-      s"TableLog.setColumnDefault: '$name' is an IDENTITY column — its " +
-        "fill is the identity mint, not a DEFAULT")
-    require(!props.get("graft.generated.cols").map(decodeGeneratedCols)
-        .getOrElse(Nil).exists(_._1 == name),
-      s"TableLog.setColumnDefault: '$name' is a GENERATED column — its " +
-        "fill is the generation expression, not a DEFAULT")
-    val key = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-      .CURRENT_DEFAULT_COLUMN_METADATA_KEY
-    val newSchema = StructType(schema.fields.map { f =>
-      if (f.name != name) f
-      else defaultSql match {
-        case Some(sql) =>
-          val cand = f.copy(metadata =
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata).putString(key, sql).build())
-          // loud at DDL time: resolves the text, folds it constant,
-          // and checks the cast to the column type
-          try org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-            .analyze(cand, "ALTER TABLE ALTER COLUMN", key)
-          catch { case scala.util.control.NonFatal(e) =>
-            throw new IllegalArgumentException(
-              s"TableLog.setColumnDefault: DEFAULT ($sql) for '$name' " +
-                s"is not a valid constant default: ${e.getMessage}", e)
-          }
-          cand
-        case None =>
-          f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-            .withMetadata(f.metadata).remove(key).build())
-      }
-    })
-    commitManifest(spark, dir, "default", newSchema.json, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None)
-  }
+                       defaultSql: Option[String]): Long =
+    alterMetadata(spark, dir, "setColumnDefault", "default") { m =>
+      require(m.schema.fieldNames.contains(name),
+        s"TableLog.setColumnDefault: no top-level column '$name' — DEFAULT " +
+          s"applies to top-level columns only (have: ${m.schema.fieldNames.mkString(", ")})")
+      require(!m.properties.get("graft.identity.cols").map(decodeIdentityCols)
+          .getOrElse(Nil).exists(_.col == name),
+        s"TableLog.setColumnDefault: '$name' is an IDENTITY column — its " +
+          "fill is the identity mint, not a DEFAULT")
+      require(!m.properties.get("graft.generated.cols").map(decodeGeneratedCols)
+          .getOrElse(Nil).exists(_._1 == name),
+        s"TableLog.setColumnDefault: '$name' is a GENERATED column — its " +
+          "fill is the generation expression, not a DEFAULT")
+      val key = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
+        .CURRENT_DEFAULT_COLUMN_METADATA_KEY
+      m.copy(schema = rebuildField(m.schema, Seq(name)) { f =>
+        defaultSql match {
+          case Some(sql) =>
+            val cand = f.copy(metadata =
+              new org.apache.spark.sql.types.MetadataBuilder()
+                .withMetadata(f.metadata).putString(key, sql).build())
+            // loud at DDL time: resolves the text, folds it constant,
+            // and checks the cast to the column type
+            try org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
+              .analyze(cand, "ALTER TABLE ALTER COLUMN", key)
+            catch { case scala.util.control.NonFatal(e) =>
+              throw new IllegalArgumentException(
+                s"TableLog.setColumnDefault: DEFAULT ($sql) for '$name' " +
+                  s"is not a valid constant default: ${e.getMessage}", e)
+            }
+            cand
+          case None =>
+            f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+              .withMetadata(f.metadata).remove(key).build())
+        }
+      })
+    }
 
   /** The EXPLICITLY declared NOT NULL columns — `graft.notnull.cols`.
     * Deliberately a property, never the schema's nullable flags: a
@@ -2483,39 +2393,19 @@ object TableLog {
     * unchanged, so projection-stripped batch metadata never erases it).
     */
   def setColumnComment(spark: SparkSession, dir: String, name: String,
-                       comment: Option[String]): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.setColumnComment: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val segs: Seq[String] =
-      if (schema.fieldNames.contains(name) || !name.contains('.')) Seq(name)
-      else name.split('.').toSeq
-    def rebuild(st: StructType, p: Seq[String]): StructType = {
-      require(st.fieldNames.contains(p.head),
-        s"TableLog.setColumnComment: no field '${p.head}' on the path " +
-          s"'$name' (have: ${st.fieldNames.mkString(", ")})")
-      StructType(st.fields.map { f =>
-        if (f.name != p.head) f
-        else if (p.length == 1)
-          comment.fold(f.copy(metadata =
-            new org.apache.spark.sql.types.MetadataBuilder()
-              .withMetadata(f.metadata).remove("comment").build()))(
-            f.withComment)
-        else f.dataType match {
-          case inner: StructType =>
-            f.copy(dataType = rebuild(inner, p.tail))
-          case other => throw new IllegalArgumentException(
-            s"TableLog.setColumnComment: '${p.head}' in '$name' is " +
-              s"${other.simpleString}, not a struct")
-        }
+                       comment: Option[String]): Long =
+    alterMetadata(spark, dir, "setColumnComment", "comment") { m =>
+      val (segs, parent) = columnPath(m.schema, name, "setColumnComment")
+      require(parent.fieldNames.contains(segs.last),
+        s"TableLog.setColumnComment: no field '${segs.last}' on the path " +
+          s"'$name' (have: ${parent.fieldNames.mkString(", ")})")
+      m.copy(schema = rebuildField(m.schema, segs) { f =>
+        comment.fold(f.copy(metadata =
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata).remove("comment").build()))(
+          f.withComment)
       })
     }
-    commitManifest(spark, dir, "comment", rebuild(schema, segs).json,
-      adds = Nil, removeEntries = Nil, expectedParent = base, txn = None)
-  }
 
   /** `ALTER TABLE … ALTER COLUMN name SET NOT NULL | DROP NOT NULL` —
     * nullability as a MANIFEST commit carrying the declaration in
@@ -2543,51 +2433,42 @@ object TableLog {
     * flows through `TableChange.UpdateColumnNullability` natively.
     */
   def setColumnNullability(spark: SparkSession, dir: String, name: String,
-                           nullable: Boolean): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.setColumnNullability: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, files) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    require(schema.fieldNames.contains(name),
-      s"TableLog.setColumnNullability: no top-level column '$name' " +
-        s"(have: ${schema.fieldNames.mkString(", ")}) — nullability DDL " +
-        "applies to top-level columns only")
-    val props = tablePropertiesAt(spark, dir, base)
-    val declared = notNullColsOf(props)
-    if (!nullable) {
-      require(!declared.contains(name),
-        s"TableLog.setColumnNullability: '$name' is already NOT NULL")
-      val cm = columnMappingAt(spark, dir, base)
-      val p = physPath(cm, name)
-      val withNulls = files.filter(_.nullCounts.get(p).exists(_ > 0L))
-      require(withNulls.isEmpty,
-        s"TableLog.setColumnNullability: ${withNulls.size} live file(s) " +
-          s"record ${withNulls.flatMap(_.nullCounts.get(p)).sum} NULL(s) " +
-          s"in '$name' — clean them (UPDATE/DELETE) before SET NOT NULL")
-      val uncovered = files.filterNot(_.nullCounts.contains(p))
-      if (uncovered.nonEmpty) {
-        import org.apache.spark.sql.functions.col
-        val n = readWithDv(spark, dir, schema, uncovered, cm)
-          .filter(col(name).isNull).count()
-        require(n == 0L,
-          s"TableLog.setColumnNullability: $n NULL(s) in '$name' across " +
-            s"${uncovered.size} file(s) without null stats — clean them " +
-            "before SET NOT NULL")
-      }
-    } else require(declared.contains(name),
-      s"TableLog.setColumnNullability: '$name' is not declared NOT NULL")
-    val newDeclared =
-      if (nullable) declared.filterNot(_ == name) else declared :+ name
-    val newSchema = StructType(schema.fields.map(f =>
-      if (f.name == name) f.copy(nullable = nullable) else f))
-    commitManifest(spark, dir, "notnull", newSchema.json, adds = Nil,
-      removeEntries = Nil, expectedParent = base, txn = None,
-      propertiesOverride = Some(
-        if (newDeclared.isEmpty) props - "graft.notnull.cols"
-        else props + ("graft.notnull.cols" -> newDeclared.mkString(","))))
-  }
+                           nullable: Boolean): Long =
+    alterMetadata(spark, dir, "setColumnNullability", "notnull") { m =>
+      require(m.schema.fieldNames.contains(name),
+        s"TableLog.setColumnNullability: no top-level column '$name' " +
+          s"(have: ${m.schema.fieldNames.mkString(", ")}) — nullability DDL " +
+          "applies to top-level columns only")
+      val declared = notNullColsOf(m.properties)
+      if (!nullable) {
+        require(!declared.contains(name),
+          s"TableLog.setColumnNullability: '$name' is already NOT NULL")
+        val p = physPath(m.colmap, name)
+        val withNulls = m.files.filter(_.nullCounts.get(p).exists(_ > 0L))
+        require(withNulls.isEmpty,
+          s"TableLog.setColumnNullability: ${withNulls.size} live file(s) " +
+            s"record ${withNulls.flatMap(_.nullCounts.get(p)).sum} NULL(s) " +
+            s"in '$name' — clean them (UPDATE/DELETE) before SET NOT NULL")
+        val uncovered = m.files.filterNot(_.nullCounts.contains(p))
+        if (uncovered.nonEmpty) {
+          import org.apache.spark.sql.functions.col
+          val n = readWithDv(spark, dir, m.schema, uncovered, m.colmap)
+            .filter(col(name).isNull).count()
+          require(n == 0L,
+            s"TableLog.setColumnNullability: $n NULL(s) in '$name' across " +
+              s"${uncovered.size} file(s) without null stats — clean them " +
+              "before SET NOT NULL")
+        }
+      } else require(declared.contains(name),
+        s"TableLog.setColumnNullability: '$name' is not declared NOT NULL")
+      val newDeclared =
+        if (nullable) declared.filterNot(_ == name) else declared :+ name
+      m.copy(
+        schema = rebuildField(m.schema, Seq(name))(_.copy(nullable = nullable)),
+        properties =
+          if (newDeclared.isEmpty) m.properties - "graft.notnull.cols"
+          else m.properties + ("graft.notnull.cols" -> newDeclared.mkString(",")))
+    }
 
   /** `REORG TABLE … APPLY (PURGE)` — materialize DELETION VECTORS away:
     * rewrite ONLY the files whose manifest entry carries a dv (read
@@ -3672,9 +3553,6 @@ object TableLog {
       val version = parentNow + 1
       val target = commitPath(base, version)
       val tmp = new Path(base, s"_log/.tmp_${attemptId}_$attemptNo")
-      // monotonic-clamped commit instant: a wall clock stepping backwards
-      // between writers must not reorder TIMESTAMP AS OF history
-      val ts = math.max(commitTs(fs, base, parentNow) + 1, clockMs())
       // constraint + property sets ride every manifest in full (like
       // the schema): default is carry-forward from the CURRENT parent —
       // re-resolved per attempt, so a rebase onto a new head keeps the
@@ -3684,6 +3562,9 @@ object TableLog {
       val parentCommit =
         if (parentNow <= 0L) None
         else Some(parseCommit(readText(fs, commitPath(base, parentNow))))
+      // monotonic-clamped commit instant: a wall clock stepping backwards
+      // between writers must not reorder TIMESTAMP AS OF history
+      val ts = math.max(parentCommit.fold(0L)(_.ts) + 1, clockMs())
       // WRITER-FEATURE GUARD (re-checked per attempt: a rebase moves
       // onto a new head, whose features may differ): committing onto a
       // table whose head declares a contract this library does not
@@ -5536,6 +5417,8 @@ object TableLog {
 
   // Manifest JSON: hand-rendered (flat, fully escaped), parsed with the
   // Jackson shipped inside Spark — no dependency beyond the Spark jars.
+  // One mapper for every parse: readTree is thread-safe once configured.
+  private val manifestJson = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private def esc(s: String): String = {
     val b = new StringBuilder(s.length + 8)
@@ -5761,7 +5644,7 @@ object TableLog {
   private def parseCheckpointMeta(txt: String)
       : (String, Seq[String], Long, Option[String]) = {
     import scala.jdk.CollectionConverters._
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+    val n = manifestJson.readTree(txt)
     (n.get("schema").asText(),
       Option(n.get("features"))
         .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
@@ -5802,14 +5685,14 @@ object TableLog {
     */
   def parseVersionIfCommit(txt: String): Option[Long] =
     try {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+      val n = manifestJson.readTree(txt)
       if (n == null || n.get("op") == null || n.get("version") == null) None
       else Some(n.get("version").asLong())
     } catch { case _: Exception => None }
 
   private[sinks] def parseCommit(txt: String): Commit = {
     import scala.jdk.CollectionConverters._
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+    val n = manifestJson.readTree(txt)
     requireSupportedFeatures(
       Option(n.get("features"))
         .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
@@ -5849,7 +5732,7 @@ object TableLog {
 
   private def parseCheckpoint(txt: String): (String, Seq[AddFile]) = {
     import scala.jdk.CollectionConverters._
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+    val n = manifestJson.readTree(txt)
     requireSupportedFeatures(
       Option(n.get("features"))
         .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
@@ -5862,7 +5745,7 @@ object TableLog {
     */
   private def parseCheckpointTxns(txt: String): Option[Map[String, Long]] = {
     import scala.jdk.CollectionConverters._
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+    val n = manifestJson.readTree(txt)
     Option(n.get("txns")).map(t =>
       t.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap)
   }
@@ -5873,7 +5756,7 @@ object TableLog {
     */
   private def parseCheckpointCopyFiles(txt: String): Option[Set[String]] = {
     import scala.jdk.CollectionConverters._
-    val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+    val n = manifestJson.readTree(txt)
     Option(n.get("copyfiles"))
       .map(_.elements().asScala.map(_.asText()).toSet)
   }

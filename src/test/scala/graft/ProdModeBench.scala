@@ -21,7 +21,7 @@ import graft.sources.Tables
   */
 object ProdModeBench {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val docs = Tables.documents(spark, d)

@@ -10,7 +10,7 @@ import graft.sources.Tables
 object RecallSweep {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = GraftSession.builder("local[8]", 8).getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     val emb = Tables.embeddings(spark, d).select(col("vec_id"), col("embedding"))
     val queries = emb.filter(col("vec_id") < 32)
