@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.operators.Validation
@@ -17,13 +17,19 @@ import graft.sinks.DataSink
   *  - Stages compose lazily: a "stage" contributes plan nodes, not a
   *    materialized intermediate — the whole pipeline executes as ONE Spark
   *    job per sink instead of pandas' table-at-a-time rewrites.
-  *  - Validation reports are DataFrames; a failed critical rule aborts
-  *    before any write (the reference loads first and logs after).
+  *  - The gate costs no second pass: the job that materializes the batch
+  *    also observes every rule's counters, the driver decides from them,
+  *    and a failed critical rule aborts before any write (the reference
+  *    loads first and logs after). A passing gate loads the materialized
+  *    batch, so the sink gets exactly the rows the gate counted.
+  *  - Validation reports are DataFrames (`Validation.validate`), decided
+  *    by the same pass rule as the gate.
   *  - The run log is itself a partitioned table (`DataSink.logEtlRun`).
-  *  - The loaded row count rides on the SAME job as the write
-  *    (`Dataset.observe`) — the reference counts the pandas frame it
-  *    already holds; a separate `count()` here would re-execute the whole
-  *    pipeline, a 2× cost for a log line at 100 TB.
+  *  - The loaded row count is never a separate `count()`: the reference
+  *    counts the pandas frame it already holds; a `count()` here would
+  *    re-execute the whole pipeline, a 2× cost for a log line at 100 TB.
+  *    A gated run reads it off the gate's counters; an ungated run
+  *    observes it on the loader's own job (`Dataset.observe`).
   */
 object Pipeline {
 
@@ -44,13 +50,23 @@ object Pipeline {
                              loaded: Long, aborted: Boolean)
 
   /** Run extract → stages → gate → load. `load` is only invoked when the
-    * gate passes (or no gate is given).
+    * gate passes (or no gate is given). Either way the transformed plan
+    * executes ONCE.
     *
-    * The success path executes the transformed plan ONCE: an observed
-    * row-count metric is attached to the plan `load` writes, so the count
-    * is a by-product of the load job. If the loader never runs an action
-    * (a dry-run loader), the observation is empty and the count falls
-    * back to a separate pass — correctness over economy in the odd case.
+    * Gated: one job materializes the batch into executor storage (a local
+    * checkpoint, MEMORY_AND_DISK) and observes the row count and every
+    * rule's violation count and pass flag (`Validation.gateMetrics`) on
+    * the way. The driver decides from those counters before `load` runs;
+    * a passing gate hands `load` the materialized batch, and `loaded` is
+    * the observed row count. The cost is one storage copy of the batch,
+    * held until `load` returns and released on every exit. The two jobs
+    * carry the descriptions `graft.Pipeline <runId>: gate` and `…: load`.
+    *
+    * Ungated: an observed row-count metric is attached to the plan `load`
+    * writes, so the count is a by-product of the load job. If the loader
+    * never runs an action (a dry-run loader), the observation is empty and
+    * the count falls back to a separate pass — correctness over economy in
+    * the odd case.
     */
   def run(spark: SparkSession, runId: String,
           extract: => DataFrame,
@@ -65,51 +81,44 @@ object Pipeline {
 
     val transformed = stages.foldLeft(extract)((df, s) => s.transform(df))
 
-    val gateFailures: Seq[String] = gate.toSeq.flatMap { g =>
-      Validation.validate(transformed, g.rules, g.thresholds)
-        .collect().toIndexedSeq
-        .filter(r => !r.getAs[Boolean]("passed") &&
-          r.getAs[String]("severity") == g.abortSeverity)
-        .map(_.getAs[String]("rule"))
+    val (loaded, gateFailures) = gate match {
+      case Some(g) => gatedLoad(spark, runId, transformed, g, load)
+      case None =>
+        // NOT sql.Observation: its promise completes on the loader's FIRST
+        // action, so a guard like `if (!df.isEmpty) df.write…` would record
+        // the limit(1) probe's count as `loaded`. This listener keeps the
+        // MAX observed count instead — any action either short-circuits
+        // with a limit (count ≤ N) or fully executes the deterministic
+        // plan (count = N), so the max over the loader's actions IS the
+        // full row count as long as at least one full pass (the write)
+        // happened.
+        val metricName = s"graft_pipeline_$runId"
+        val observed = transformed.observe(metricName, count(lit(1)).as("rows"))
+        val seen = new java.util.concurrent.atomic.AtomicLong(-1L)
+        val listener = new QueryExecutionListener {
+          override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+            qe.observedMetrics.get(metricName).foreach { row =>
+              val n = row.getAs[Long]("rows")
+              seen.updateAndGet(m => math.max(m, n)); ()
+            }
+          override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+        }
+        spark.listenerManager.register(listener)
+        try {
+          load(observed)
+          // metrics arrive via the asynchronous listener bus: wait briefly
+          // for the load job's event, then fall back to a separate count —
+          // a 2× cost paid only when the loader ran no action at all (or
+          // the bus is pathologically backlogged), never silently wrong.
+          // A dry-run loader (plan-validation only, no action) pays the
+          // full wait before the fallback — pass a small `observeWaitMs`
+          // on such paths instead of the bus-backlog-tolerant default
+          val deadline = System.nanoTime() + observeWaitMs * 1000 * 1000
+          while (seen.get < 0 && System.nanoTime() < deadline) Thread.sleep(25)
+          (if (seen.get >= 0) seen.get else transformed.count(), Nil)
+        } finally spark.listenerManager.unregister(listener)
     }
     val aborted = gateFailures.nonEmpty
-
-    var loaded = 0L
-    if (!aborted) {
-      // NOT sql.Observation: its promise completes on the loader's FIRST
-      // action, so a guard like `if (!df.isEmpty) df.write…` would record
-      // the limit(1) probe's count as `loaded`. This listener keeps the
-      // MAX observed count instead — any action either short-circuits
-      // with a limit (count ≤ N) or fully executes the deterministic
-      // plan (count = N), so the max over the loader's actions IS the
-      // full row count as long as at least one full pass (the write)
-      // happened.
-      val metricName = s"graft_pipeline_$runId"
-      val observed = transformed.observe(metricName, count(lit(1)).as("rows"))
-      val seen = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val listener = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
-          qe.observedMetrics.get(metricName).foreach { row =>
-            val n = row.getAs[Long]("rows")
-            seen.updateAndGet(m => math.max(m, n)); ()
-          }
-        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        load(observed)
-        // metrics arrive via the asynchronous listener bus: wait briefly
-        // for the load job's event, then fall back to a separate count —
-        // a 2× cost paid only when the loader ran no action at all (or
-        // the bus is pathologically backlogged), never silently wrong.
-        // A dry-run loader (plan-validation only, no action) pays the
-        // full wait before the fallback — pass a small `observeWaitMs`
-        // on such paths instead of the bus-backlog-tolerant default
-        val deadline = System.nanoTime() + observeWaitMs * 1000 * 1000
-        while (seen.get < 0 && System.nanoTime() < deadline) Thread.sleep(25)
-        loaded = if (seen.get >= 0) seen.get else transformed.count()
-      } finally spark.listenerManager.unregister(listener)
-    }
 
     val results = Seq(
       StageResult("transform", loaded, ok = true),
@@ -120,6 +129,52 @@ object Pipeline {
       DataSink.logEtlRun(spark, p, runId, stageLabel, status, loaded, now())
     }
     RunReport(runId, results, loaded, aborted)
+  }
+
+  /** The gated path of [[run]]: returns (loaded, the failed rules at
+    * `abortSeverity`). `load` sees only the checkpointed rows, never the
+    * source again — a source that changes after the gate, or a
+    * non-deterministic transform, cannot publish rows the gate did not
+    * count. If the materializing job itself fails, its partial blocks are
+    * left to Spark's ContextCleaner.
+    */
+  private def gatedLoad(spark: SparkSession, runId: String, transformed: DataFrame,
+                        g: Gate, load: DataFrame => Unit): (Long, Seq[String]) = {
+    val metrics = Validation.gateMetrics(g.rules, g.thresholds)
+    val counters = Observation(s"graft_gate_$runId")
+    val batch = described(spark, s"graft.Pipeline $runId: gate") {
+      transformed.observe(counters, metrics.head, metrics.tail: _*)
+        .localCheckpoint(eager = true)
+    }
+    try {
+      val m = counters.get
+      val failures = g.rules.zipWithIndex.collect {
+        // a null flag (a threshold the decimal cast rejects) fails, as in
+        // `validate`'s report read through getAs[Boolean]
+        case (r, i) if r.severity == g.abortSeverity &&
+            !m(s"_p$i").asInstanceOf[Boolean] => r.name
+      }
+      if (failures.nonEmpty) (0L, failures)
+      else {
+        described(spark, s"graft.Pipeline $runId: load")(load(batch))
+        (m("row_count").asInstanceOf[Long], Nil)
+      }
+    } finally batch.queryExecution.logical.foreach {
+      // non-blocking: the RDD leaves the persisted set at once, and its
+      // blocks are dropped behind the run (a blocking drop costs 5–10 ms)
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+  }
+
+  /** Runs `body` with `desc` as the description of the Spark jobs it
+    * submits, then restores the caller's description.
+    */
+  private def described[A](spark: SparkSession, desc: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
   }
 
   /** One table's slice of a full-pipeline run: its extract arm, transform

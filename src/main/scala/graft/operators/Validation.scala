@@ -43,6 +43,30 @@ object Validation {
   def businessRule(name: String, valid: Column, severity: String = "warning"): Rule =
     Rule(s"business_rule_$name", severity, !coalesce(valid, lit(false)))
 
+  /** The gate's counters as aggregate expressions: `row_count`, then per
+    * rule i its violation count `_v$i` and its pass flag `_p$i`
+    * (threshold: the `thresholds` entry, else the rule's own). [[validate]]
+    * aggregates them and `Pipeline.run` observes them on the job that
+    * materializes its batch, so the report and the gate decide with the
+    * same expression.
+    */
+  def gateMetrics(rules: Seq[Rule], thresholds: Map[String, Double]): Seq[Column] = {
+    val rows = count(lit(1))
+    rows.as("row_count") +: rules.zipWithIndex.flatMap { case (r, i) =>
+      // coalesce: sum over an EMPTY frame is null, and a null violation
+      // count would read as passed=false — an empty extract (a legal
+      // incremental run) must not trip every gate
+      val v = coalesce(sum(when(r.violation, 1L).otherwise(0L)), lit(0L))
+      // the pass rule, violations ≤ threshold × rows, in decimal, not
+      // double: 0.29 * 100 in double is 28.999…96, so exactly-at-threshold
+      // rules would spuriously FAIL (and gate-abort a pipeline); the
+      // double→decimal cast goes via the shortest decimal rendering,
+      // making the product exact
+      val t = lit(thresholds.getOrElse(r.name, r.threshold)).cast("decimal(18,10)")
+      Seq(v.as(s"_v$i"), (v <= t * rows).as(s"_p$i"))
+    }
+  }
+
   /** One-pass report: (rule, severity, row_count, violations, violation_pct,
     * passed). Thresholded rules pass `passed` expressions via `thresholds`
     * (rule name → max allowed violation fraction, default 0).
@@ -52,29 +76,17 @@ object Validation {
     // aggregates carry positional aliases and rule names travel as lit()s —
     // never spliced into SQL text — so a rule named `x', 'y` (or one that
     // collides with a column) cannot inject into or break the plan
-    val aggs = count(lit(1)).as("row_count") +:
-      rules.zipWithIndex.map { case (r, i) =>
-        // coalesce: sum over an EMPTY frame is null, and a null violation
-        // count would read as passed=false — an empty extract (a legal
-        // incremental run) must not trip every gate
-        coalesce(sum(when(r.violation, 1L).otherwise(0L)), lit(0L)).as(s"_v$i")
-      }
+    val aggs = gateMetrics(rules, thresholds)
     val wide = df.agg(aggs.head, aggs.tail: _*)
     val entries = array(rules.zipWithIndex.map { case (r, i) =>
       struct(lit(r.name).as("rule"), lit(r.severity).as("severity"),
-        col(s"_v$i").as("violations"),
-        lit(thresholds.getOrElse(r.name, r.threshold)).as("threshold"))
+        col(s"_v$i").as("violations"), col(s"_p$i").as("passed"))
     }: _*)
     wide.select(col("row_count"), explode(entries).as("e"))
       .select(col("e.rule").as("rule"), col("e.severity").as("severity"),
         col("row_count"), col("e.violations").as("violations"),
         round(col("e.violations") / greatest(col("row_count"), lit(1L)), 4).as("violation_pct"),
-        // decimal, not double, for the pass boundary: 0.29 * 100 in double
-        // is 28.999…96, so exactly-at-threshold rules would spuriously
-        // FAIL (and gate-abort a pipeline); double→decimal cast goes via
-        // the shortest decimal rendering, making the product exact
-        (col("e.violations") <=
-          col("e.threshold").cast("decimal(18,10)") * col("row_count")).as("passed"))
+        col("e.passed").as("passed"))
   }
 
   /** Uniqueness check (validators.py:180 add_unique_check) — needs its own

@@ -2,8 +2,16 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.operators.{Cleaning, Validation}
+import graft.sinks.{JdbcWarehouse, TableLog}
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -110,8 +118,9 @@ class PipelineSpec extends SparkSpec {
         gate = Some(Pipeline.Gate(Seq(Validation.nullCheck("id", 0.0, "critical")))),
         load = df => graft.sinks.DataSink.writeParquet(df, s"$dir/out"))
       assert(!report.aborted && report.loaded == 3)
-      // exactly two actions: the gate's validation collect + the load
-      // write (which carries the observed count) — no separate count() job
+      // exactly two actions: the gate's materializing checkpoint (which
+      // carries the gate's counters and the row count) + the load write —
+      // no validation collect, no separate count() job
       val eventually = (1 to 100).iterator
         .map { _ => Thread.sleep(25); obsLog.toDF(spark).count() }
         .find(_ >= 2)
@@ -276,5 +285,203 @@ class PipelineSpec extends SparkSpec {
       gate = Some(Pipeline.Gate(Seq(Validation.nullCheck("tag", 0.0, "warning")))),
       load = _ => loadCalled = true)
     assert(!report.aborted && loadCalled)
+  }
+
+  /** Records each job's description and each executed query's file-scan
+    * roots. Both listener kinds sit on the shared listener-bus queue, so
+    * once `drain`'s sentinel job has been seen, every earlier event has.
+    */
+  private final class Tap extends SparkListener with QueryExecutionListener
+      with AdaptiveSparkPlanHelper {
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val scanRoots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+      collectWithSubqueries(qe.executedPlan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+      }.flatten.foreach(scanRoots.add)
+    override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+
+    def drain(): Unit = {
+      val sentinel = s"tap-sentinel-${java.util.UUID.randomUUID()}"
+      val sc = spark.sparkContext
+      val prev = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(sentinel)
+      try spark.range(1).count() finally sc.setLocalProperty("spark.job.description", prev)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!descriptions.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(descriptions.contains(sentinel), "listener bus did not drain")
+    }
+  }
+
+  private def tapped[A](body: Tap => A): A = {
+    val tap = new Tap
+    spark.sparkContext.addSparkListener(tap)
+    spark.listenerManager.register(tap)
+    try body(tap)
+    finally {
+      spark.sparkContext.removeSparkListener(tap)
+      spark.listenerManager.unregister(tap)
+    }
+  }
+
+  test("gate decision equals validate(...).passed at the abort severity") {
+    // random (violations, rows, threshold) triples, with the 0.29 × 100
+    // boundary (28.999…96 in double) and an empty extract (null sums
+    // coalesced to 0) pinned; odd rules take their threshold from the
+    // gate's map, overriding the rule's own
+    val rng = new scala.util.Random(20261017L)
+    val sizes = Seq(100L, 0L) ++ Seq.fill(6)(1L + rng.nextInt(400))
+    sizes.zipWithIndex.foreach { case (n, trial) =>
+      val specs = (0 until 5).map { i =>
+        val v = if (n == 0) 0L else rng.nextLong(n + 1)
+        val t = rng.nextInt(4) match {
+          case 0 => BigDecimal(v) / BigDecimal(math.max(n, 1L))
+          case 1 => BigDecimal(v + 1) / BigDecimal(math.max(n, 1L))
+          case 2 => BigDecimal(math.max(v - 1, 0L)) / BigDecimal(math.max(n, 1L))
+          case _ => BigDecimal(rng.nextInt(101)) / 100
+        }
+        val sev = if (rng.nextBoolean()) "critical" else "warning"
+        if (trial == 0 && i == 0) ("r0", "critical", 29L, 0.29)
+        else (s"r$i", sev, v, t.setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }
+      val rules = specs.zipWithIndex.map { case ((name, sev, v, t), i) =>
+        Validation.Rule(name, sev, col("id") < v, if (i % 2 == 1) 1.0 else t)
+      }
+      val thresholds = specs.zipWithIndex.collect { case ((name, _, _, t), i) if i % 2 == 1 => name -> t }.toMap
+      val df = spark.range(n).toDF("id")
+      val expected = Validation.validate(df, rules, thresholds).collect()
+        .filter(r => !r.getAs[Boolean]("passed") && r.getAs[String]("severity") == "critical")
+        .map(_.getAs[String]("rule")).toSeq
+      val report = Pipeline.run(spark, s"diff-$trial", df, Nil,
+        Some(Pipeline.Gate(rules, thresholds)), _ => ())
+      val ctx = s"trial $trial: rows=$n rules=$specs"
+      assert(report.stages.find(_.stage == "validate").get.failures == expected, ctx)
+      assert(report.aborted == expected.nonEmpty, ctx)
+      assert(report.loaded == (if (report.aborted) 0L else n), ctx)
+      if (trial == 0) // 29 of 100 at 0.29 passes in both
+        assert(!expected.contains("r0") &&
+          Validation.validate(df, rules.take(1)).head().getAs[Boolean]("passed"), ctx)
+    }
+  }
+
+  test("gated runs release the materialized batch on pass, abort and a throwing loader") {
+    val dir = Files.createTempDirectory("pipe_release").toFile.getAbsolutePath
+    val sc = spark.sparkContext
+    val gate = Some(Pipeline.Gate(Seq(Validation.nullCheck("tag", 0.0, "critical"))))
+    val clean = source.na.fill("x", Seq("tag"))
+    val before = sc.getPersistentRDDs.keySet
+    (1 to 2).foreach { k =>
+      val pass = Pipeline.run(spark, s"rel-pass-$k", clean, Nil, gate,
+        df => graft.sinks.DataSink.writeParquet(df, s"$dir/pass$k"))
+      assert(!pass.aborted && pass.loaded == 3)
+      assert(Pipeline.run(spark, s"rel-abort-$k", source, Nil, gate, _ => ()).aborted)
+      val e = intercept[RuntimeException] {
+        Pipeline.run(spark, s"rel-throw-$k", clean, Nil, gate, df => {
+          df.count(); throw new RuntimeException("sink down")
+        })
+      }
+      assert(e.getMessage == "sink down")
+    }
+    // parallel runAll arms share the session: distinct observation names
+    val full = Pipeline.runAll(spark, "rel-par", Seq(
+        Pipeline.TableJob("pass", _ => clean, gate = gate),
+        Pipeline.TableJob("abort", _ => source, gate = gate),
+        Pipeline.TableJob("throw", _ => clean, gate = gate)),
+      load = (t, df) => {
+        if (t == "throw") throw new RuntimeException("sink down")
+        graft.sinks.DataSink.writeParquet(df, s"$dir/par_$t")
+      }, parallelism = 3)
+    assert(full.tables("pass").loaded == 3 && !full.tables("pass").aborted)
+    assert(full.tables("abort").aborted && full.tables("throw").aborted)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
+
+  test("the loader gets exactly the gated rows, even if the source changes after the gate") {
+    // a JDBC source the loader itself writes a violating row into before
+    // it writes: the gate counted 2 clean rows, and only those may publish
+    val dir = Files.createTempDirectory("pipe_snap").toFile.getAbsolutePath
+    val url = s"jdbc:derby:$dir/src;create=true"
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    JdbcWarehouse.load(source.filter(col("amount") >= 0), url, "src",
+      org.apache.spark.sql.SaveMode.Overwrite, props = props)
+    val report = Pipeline.run(spark, "run-snap",
+      extract = JdbcWarehouse.read(spark, url, "src", props),
+      stages = Nil,
+      gate = Some(Pipeline.Gate(Seq(
+        Validation.rangeCheck("amount", Some(0d), None, "critical")))),
+      load = df => {
+        val conn = java.sql.DriverManager.getConnection(url, props)
+        try conn.createStatement().executeUpdate("INSERT INTO src VALUES (99, 'z', -1.0)")
+        finally conn.close()
+        graft.sinks.DataSink.writeParquet(df, s"$dir/out")
+      })
+    assert(JdbcWarehouse.read(spark, url, "src", props).count() == 3)
+    val out = spark.read.parquet(s"$dir/out")
+    assert(!report.aborted)
+    assert(out.count() == 2 && out.filter(col("amount") < 0).isEmpty)
+    assert(report.loaded == out.count())
+  }
+
+  test("gated TableLog load: an abort publishes nothing, a pass adds one version and scans the source once") {
+    val dir = Files.createTempDirectory("pipe_tlog").toFile.getAbsolutePath
+    val table = s"$dir/table"
+    val gate = Some(Pipeline.Gate(Seq(Validation.nullCheck("tag", 0.0, "critical"))))
+    def batch(v: Long, df: org.apache.spark.sql.DataFrame): String = {
+      val path = s"$dir/src$v"
+      df.withColumn("v", lit(v)).write.parquet(path)
+      path
+    }
+    val load = (df: org.apache.spark.sql.DataFrame) =>
+      { TableLog.upsertInto(spark, table, df, Seq("id"), "v"); () }
+    val clean1 = batch(1, source.na.fill("x", Seq("tag")))
+    val bad = batch(2, source)
+    val clean3 = batch(3, source.na.fill("y", Seq("tag")).withColumn("id", col("id") + 1))
+
+    assert(!Pipeline.run(spark, "tlog-1", spark.read.parquet(clean1), Nil, gate, load).aborted)
+    assert(TableLog.currentVersion(spark, table) == 1L)
+    val rowsBefore = rows(TableLog.readAt(spark, table).orderBy("id"))
+    val filesBefore = TableLog.liveFilesAt(spark, table).map(_.path).toSet
+
+    // a failed critical rule publishes nothing
+    val aborted = Pipeline.run(spark, "tlog-2", spark.read.parquet(bad), Nil, gate, load)
+    assert(aborted.aborted && aborted.loaded == 0L)
+    assert(TableLog.currentVersion(spark, table) == 1L)
+    assert(TableLog.liveFilesAt(spark, table).map(_.path).toSet == filesBefore)
+    assert(rows(TableLog.readAt(spark, table).orderBy("id")) == rowsBefore)
+
+    // a passing run publishes exactly one version and reads its source once
+    tapped { tap =>
+      tap.drain()
+      tap.scanRoots.clear()
+      val passed = Pipeline.run(spark, "tlog-3", spark.read.parquet(clean3), Nil, gate, load)
+      tap.drain()
+      assert(!passed.aborted && passed.loaded == 3L)
+      val srcScans = tap.scanRoots.asScala.count(_.endsWith("/src3"))
+      assert(srcScans == 1, s"source scans: ${tap.scanRoots.asScala.toList}")
+    }
+    assert(TableLog.currentVersion(spark, table) == 2L)
+    assert(TableLog.readAt(spark, table).count() == 4L) // ids 1..3 ∪ 2..4
+  }
+
+  test("the gate's and the loader's jobs carry graft.Pipeline descriptions") {
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("pipe_desc").toFile.getAbsolutePath
+    tapped { tap =>
+      sc.setJobDescription("caller's job")
+      try {
+        Pipeline.run(spark, "run-desc", source, Nil,
+          Some(Pipeline.Gate(Seq(Validation.nullCheck("id", 0.0, "critical")))),
+          df => graft.sinks.DataSink.writeParquet(df, s"$dir/out"))
+        assert(sc.getLocalProperty("spark.job.description") == "caller's job")
+      } finally sc.setJobDescription(null)
+      tap.drain()
+      val seen = tap.descriptions.asScala.toSeq
+      assert(seen.contains("graft.Pipeline run-desc: gate"), seen)
+      assert(seen.contains("graft.Pipeline run-desc: load"), seen)
+    }
   }
 }
