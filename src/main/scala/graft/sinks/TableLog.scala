@@ -5578,7 +5578,7 @@ object TableLog {
       s""""schema":"${esc(c.schemaJson)}","add":[$adds],"remove":[$removes]$txn$rdv$cks$cf$props$cmap$dcols$feats$wfeats}"""
   }
 
-  private def renderCheckpoint(version: Long, schemaJson: String,
+  private[sinks] def renderCheckpoint(version: Long, schemaJson: String,
                                live: Seq[AddFile],
                                txns: Map[String, Long],
                                copyFiles: Set[String]): String = {
@@ -5609,7 +5609,7 @@ object TableLog {
     * of the inlined entry list. Tiny however large the table is; the
     * entries live in the parquet parts.
     */
-  private def renderCheckpointMeta(version: Long, schemaJson: String,
+  private[sinks] def renderCheckpointMeta(version: Long, schemaJson: String,
                                    live: Seq[AddFile],
                                    txns: Map[String, Long],
                                    copyFiles: Set[String],
@@ -5641,7 +5641,7 @@ object TableLog {
     * unchecked, and one without `partdir` (pre-attempt-unique format)
     * resolves to the legacy shared `<v>.checkpoint` directory name.
     */
-  private def parseCheckpointMeta(txt: String)
+  private[sinks] def parseCheckpointMeta(txt: String)
       : (String, Seq[String], Long, Option[String]) = {
     import scala.jdk.CollectionConverters._
     val n = manifestJson.readTree(txt)
@@ -5730,7 +5730,7 @@ object TableLog {
       writerFeatures = wfeats)
   }
 
-  private def parseCheckpoint(txt: String): (String, Seq[AddFile]) = {
+  private[sinks] def parseCheckpoint(txt: String): (String, Seq[AddFile]) = {
     import scala.jdk.CollectionConverters._
     val n = manifestJson.readTree(txt)
     requireSupportedFeatures(
@@ -5743,7 +5743,7 @@ object TableLog {
   /** `None` for a legacy checkpoint without the `txns` field — the
     * caller must then fold markers from the full log.
     */
-  private def parseCheckpointTxns(txt: String): Option[Map[String, Long]] = {
+  private[sinks] def parseCheckpointTxns(txt: String): Option[Map[String, Long]] = {
     import scala.jdk.CollectionConverters._
     val n = manifestJson.readTree(txt)
     Option(n.get("txns")).map(t =>
@@ -5754,7 +5754,7 @@ object TableLog {
     * the caller folds the ingest ledger from the full log (the next
     * checkpoint written repairs the format).
     */
-  private def parseCheckpointCopyFiles(txt: String): Option[Set[String]] = {
+  private[sinks] def parseCheckpointCopyFiles(txt: String): Option[Set[String]] = {
     import scala.jdk.CollectionConverters._
     val n = manifestJson.readTree(txt)
     Option(n.get("copyfiles"))
