@@ -141,7 +141,7 @@ object TableLog {
     * commit ingested — the idempotence ledger: a re-listed source file
     * whose path is already recorded anywhere in history is skipped, so
     * re-running the same COPY INTO converges instead of duplicating.
-    * Checkpoints carry the cumulative set ([[ingestedFilesAt]] folds
+    * Checkpoints carry the cumulative set ([[ledgerAt]] folds
     * from the nearest one), keeping resolution O(commits since
     * checkpoint) however long the ingest history grows.
     */
@@ -316,35 +316,22 @@ object TableLog {
         expectedParent = Some(base), txn = Some(appId -> batchId)))
     }
 
-  /** Highest `batchId` the log has committed for `appId`, if any.
+  /** Highest `batchId` the log has committed for `appId`, if any — the
+    * latest version's folded txn markers ([[ledgerAt]]).
     *
-    * Cost: O(commits since the last checkpoint), not O(table lifetime) —
-    * below the newest checkpoint the checkpoint's folded `txns` map
-    * answers without parsing any older manifest, and only the suffix
-    * above it is scanned. The suffix scan takes the MAX over every
-    * marker for `appId` rather than early-exiting on the newest one:
-    * the public `append`/`overwrite`/`upsertInto` accept arbitrary txn
-    * markers, so batchIds per app are NOT guaranteed monotone (a reset
-    * streaming checkpoint restarts at 0) — under the newest-marker
-    * shortcut a reset app would silently re-apply batches the max-scan
-    * skips. A legacy checkpoint without the `txns` field falls back to
-    * scanning the full log (same max semantics).
+    * Cost: O(commits since the last checkpoint), not O(table lifetime).
+    * The fold takes the MAX over every marker for `appId` rather than
+    * the newest one: the public `append`/`overwrite`/`upsertInto` accept
+    * arbitrary txn markers, so batchIds per app are NOT guaranteed
+    * monotone (a reset streaming checkpoint restarts at 0) — under a
+    * newest-marker shortcut a reset app would silently re-apply batches
+    * the max-fold skips.
     */
   def lastCommittedBatch(spark: SparkSession, dir: String, appId: String): Option[Long] = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vers = commitVersions(fs, base)
-    if (vers.isEmpty) return None
-    val ckpt = checkpointVersions(fs, base).lastOption
-      .map(cv => cv -> parseCheckpointTxns(checkpointHeaderText(fs, base, cv)))
-    // the checkpoint is an authoritative floor only when it carries txns
-    val floor = ckpt.collect { case (cv, Some(_)) => cv }.getOrElse(0L)
-    val above: Seq[Long] = vers.reverseIterator.takeWhile(_ > floor)
-      .flatMap(v => parseCommit(readText(fs, commitPath(base, v))).txn)
-      .collect { case (a, b) if a == appId => b }.toSeq
-    val fromCkpt: Seq[Long] =
-      ckpt.flatMap { case (_, txns) => txns.flatMap(_.get(appId)) }.toSeq
-    (above ++ fromCkpt).maxOption
+    commitVersions(fs, base).lastOption
+      .flatMap(v => ledgerAt(fs, base, v)._1.get(appId))
   }
 
   // --------------------------------------------------- row-level ops (CoW)
@@ -1603,7 +1590,7 @@ object TableLog {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val (schemaJson, files) = snapshotAt(spark, fs, base, version)
-    val c = parseCommit(readText(fs, commitPath(base, version)))
+    val c = readCommit(fs, base, version)
     val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
     val out = change(TableMeta(version, schema, files, c.constraints,
       c.properties, c.colmap, c.droppedCols))
@@ -1674,7 +1661,7 @@ object TableLog {
     if (v <= 0L) None
     else {
       require(vers.contains(v), s"TableLog.$api: version $v of $dir does not exist")
-      Some(parseCommit(readText(fs, commitPath(base, v))))
+      Some(readCommit(fs, base, v))
     }
   }
 
@@ -1846,14 +1833,14 @@ object TableLog {
   def syncIdentity(spark: SparkSession, dir: String): Option[Long] = {
     val v = currentVersion(spark, dir)
     require(v > 0L, s"TableLog.syncIdentity: $dir has no committed versions")
-    val props = tablePropertiesAt(spark, dir, v)
+    val c = commitAt(spark, dir, v, "syncIdentity").get
+    val props = c.properties
     val specs = props.get("graft.identity.cols")
       .map(decodeIdentityCols).getOrElse(Nil)
     if (specs.isEmpty) return None
-    val cm = columnMappingAt(spark, dir, v)
     val files = liveFilesAt(spark, dir, v)
     val ups = specs.flatMap { s0 =>
-      val mx = files.flatMap(_.stats.get(physPath(cm, s0.col)))
+      val mx = files.flatMap(_.stats.get(physPath(c.colmap, s0.col)))
         .collect { case NumStat(_, m) => m }
         .reduceOption(_ max _).map(conservativeLongMax)
       val key = s"graft.identity.high.${s0.col}"
@@ -2656,13 +2643,12 @@ object TableLog {
         DistributeFileOpsThreshold)((c, p) =>
         p.getFileSystem(c).getFileStatus(p).getLen)
     val dvRows = files.map(_.dv.length.toLong).sum
-    def js(m: Map[String, String]): String =
-      m.toSeq.sortBy(_._1).map { case (k, v2) =>
-        s""""${esc(k)}":"${esc(v2)}"""" }.mkString("{", ",", "}")
-    val row = Row(v, new java.sql.Timestamp(commitTs(fs, base, v)),
+    val c = readCommit(fs, base, v)
+    val row = Row(v, new java.sql.Timestamp(c.ts),
       files.length, sizes.sum, files.map(_.rows).sum - dvRows, dvRows,
-      js(constraintsAt(spark, dir, v)), js(tablePropertiesAt(spark, dir, v)),
-      ingestedFilesAt(fs, base, v).size,
+      TableLogCodec.renderStringMap(c.constraints),
+      TableLogCodec.renderStringMap(c.properties),
+      ledgerAt(fs, base, v)._2.size,
       checkpointVersions(fs, base).filter(_ <= v).lastOption.getOrElse(0L),
       math.max(1L, vacuumWatermark(fs, base)))
     spark.createDataFrame(
@@ -2707,11 +2693,11 @@ object TableLog {
     import org.apache.spark.sql.types._
     val v = if (version == -1L) currentVersion(spark, dir) else version
     val (_, _, files) = resolve(spark, dir, v, "describeLayout")
-    val props = tablePropertiesAt(spark, dir, v)
-    val cm = columnMappingAt(spark, dir, v)
+    val meta = commitAt(spark, dir, v, "describeLayout").get
+    val cm = meta.colmap
     val cols =
       if (columns.nonEmpty) columns
-      else props.get("graft.cluster.cols").toSeq
+      else meta.properties.get("graft.cluster.cols").toSeq
         .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     require(cols.nonEmpty,
       "TableLog.describeLayout: pass columns or declare graft.cluster.cols")
@@ -2807,7 +2793,7 @@ object TableLog {
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parent = currentVersion(spark, dir)
     val already =
-      if (parent <= 0L) Set.empty[String] else ingestedFilesAt(fs, base, parent)
+      if (parent <= 0L) Set.empty[String] else ledgerAt(fs, base, parent)._2
     val fresh = listed.filterNot(already)
     if (fresh.isEmpty)
       return CopyIntoReport(None, 0, listed.length, 0L)
@@ -2818,7 +2804,7 @@ object TableLog {
       expectedParent = Some(parent), txn = None, copyFiles = fresh)
     // the row count comes from the committed manifest's footer-harvested
     // entries — never a second scan of the source
-    val rows = parseCommit(readText(fs, commitPath(base, v))).add.map(_.rows).sum
+    val rows = readCommit(fs, base, v).add.map(_.rows).sum
     CopyIntoReport(Some(v), fresh.length, listed.length - fresh.length, rows)
   }
 
@@ -3121,8 +3107,13 @@ object TableLog {
     val meta = checkpointMetaPath(base, latest)
     if (fs.exists(target) || fs.exists(meta)) return latest
     val (schemaJson, live) = snapshotAt(spark, fs, base, latest)
-    val txns = txnsAt(fs, base, latest)
-    val ingested = ingestedFilesAt(fs, base, latest)
+    val (txns, ingested) = ledgerAt(fs, base, latest)
+    // a checkpoint's reader features are those of a commit adding its
+    // live set (the folded colmap rides the commit manifests, which
+    // never delete)
+    val header = TableLogCodec.Checkpoint(latest, schemaJson,
+      readerFeaturesOf(Commit(latest, 0L, "checkpoint", schemaJson, live, Nil)),
+      Some(txns), Some(ingested), Some(live))
     val fc = FileContext.getFileContext(base.toUri, conf)
     def publish(tmp: Path, dst: Path, cleanupRecursive: Boolean): Unit =
       try fc.rename(tmp, dst)
@@ -3138,7 +3129,7 @@ object TableLog {
           if (!landed) throw e
       }
     if (live.length < multipartMinEntries) {
-      val body = renderCheckpoint(latest, schemaJson, live, txns, ingested)
+      val body = TableLogCodec.renderCheckpoint(header)
       val tmp = new Path(base, s"_log/.tmp_ckpt_$latest")
       val out = fs.create(tmp, true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
@@ -3180,8 +3171,8 @@ object TableLog {
       val parts = fs.listStatus(tmpDir)
         .count(_.getPath.getName.endsWith(".parquet"))
       publish(tmpDir, partDir, cleanupRecursive = true)
-      val body = renderCheckpointMeta(latest, schemaJson, live, txns, ingested,
-        parts, live.length.toLong, partDir.getName)
+      val body = TableLogCodec.renderCheckpoint(header.copy(live = None,
+        parts = parts, entries = live.length.toLong, partDir = Some(partDir.getName)))
       val tmpMeta = new Path(base, s"_log/.tmp_ckptmeta_${latest}_$attempt")
       val out = fs.create(tmpMeta, true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
@@ -3198,51 +3189,34 @@ object TableLog {
       // resolution through this checkpoint. An unreadable header keeps
       // the dir; if it really was the loser's, it is unreferenced
       // litter and vacuum's age-gated orphan sweep reclaims it.
-      val landedDir = try parseCheckpointMeta(readText(fs, meta))._4
+      val landedDir = try TableLogCodec.parseCheckpoint(readText(fs, meta)).partDir
         catch { case scala.util.control.NonFatal(_) => None }
       if (landedDir.exists(_ != partDir.getName)) fs.delete(partDir, true)
     }
     latest
   }
 
-  /** Latest `(appId → batchId)` txn markers folded up to `version`:
-    * seeded from the nearest new-format checkpoint's `txns` map, then
-    * folded over only the commits after it (a legacy checkpoint without
-    * the field folds the whole log once — and the NEXT checkpoint
-    * written repairs the format).
+  /** The txn markers (`appId` → highest `batchId`) and the cumulative
+    * [[copyInto]] ingest ledger at `version`, in one fold: seeded from
+    * the nearest checkpoint's `txns` and `copyfiles`, then folded over
+    * only the commits after it, so resolution stays O(commits since
+    * checkpoint) across years of ingest. A legacy checkpoint without
+    * either field folds the whole log once — and the NEXT checkpoint
+    * written repairs the format.
     */
-  private def txnsAt(fs: FileSystem, base: Path, version: Long): Map[String, Long] = {
-    val ckpt = checkpointVersions(fs, base).filter(_ <= version).lastOption
-      .map(cv => cv -> parseCheckpointTxns(checkpointHeaderText(fs, base, cv)))
-    val (from, init) = ckpt match {
-      case Some((cv, Some(m))) => (cv, m)
-      case _ => (0L, Map.empty[String, Long])
-    }
-    commitVersions(fs, base).filter(v => v > from && v <= version)
-      .foldLeft(init) { (m, v) =>
-        parseCommit(readText(fs, commitPath(base, v))).txn match {
-          case Some((a, b)) => m + (a -> math.max(b, m.getOrElse(a, Long.MinValue)))
-          case None => m
-        }
+  private def ledgerAt(fs: FileSystem, base: Path,
+                       version: Long): (Map[String, Long], Set[String]) = {
+    val seed = checkpointVersions(fs, base).filter(_ <= version).lastOption
+      .flatMap { cv =>
+        val ck = readCheckpoint(fs, base, cv)
+        for (t <- ck.txns; cf <- ck.copyFiles) yield (cv, (t, cf))
       }
-  }
-
-  /** The cumulative [[copyInto]] ingest ledger folded up to `version`:
-    * seeded from the nearest checkpoint's `copyfiles` set, then only
-    * the commits after it — the [[txnsAt]] discipline, so resolution
-    * stays O(commits since checkpoint) across years of ingest.
-    */
-  private def ingestedFilesAt(fs: FileSystem, base: Path,
-                              version: Long): Set[String] = {
-    val ckpt = checkpointVersions(fs, base).filter(_ <= version).lastOption
-      .map(cv => cv -> parseCheckpointCopyFiles(checkpointHeaderText(fs, base, cv)))
-    val (from, init) = ckpt match {
-      case Some((cv, Some(s))) => (cv, s)
-      case _ => (0L, Set.empty[String])
-    }
+    val (from, init) = seed.getOrElse((0L, (Map.empty[String, Long], Set.empty[String])))
     commitVersions(fs, base).filter(v => v > from && v <= version)
-      .foldLeft(init) { (s, v) =>
-        s ++ parseCommit(readText(fs, commitPath(base, v))).copyFiles
+      .foldLeft(init) { case ((m, s), v) =>
+        val c = readCommit(fs, base, v)
+        (c.txn.fold(m) { case (a, b) => m + (a -> math.max(b, m.getOrElse(a, Long.MinValue))) },
+          s ++ c.copyFiles)
       }
   }
 
@@ -3280,7 +3254,7 @@ object TableLog {
     val dataSub = s"data/$attempt"
     val parentC =
       if (parent <= 0L) None
-      else Some(parseCommit(readText(fs, commitPath(base, parent))))
+      else Some(readCommit(fs, base, parent))
     val cks = parentC.fold(Map.empty[String, String])(_.constraints)
     // COLUMN MAPPING: the batch arrives in the LOGICAL domain
     // (constraints evaluate there), the files are written in the
@@ -3561,7 +3535,7 @@ object TableLog {
       // the head's values exactly)
       val parentCommit =
         if (parentNow <= 0L) None
-        else Some(parseCommit(readText(fs, commitPath(base, parentNow))))
+        else Some(readCommit(fs, base, parentNow))
       // monotonic-clamped commit instant: a wall clock stepping backwards
       // between writers must not reorder TIMESTAMP AS OF history
       val ts = math.max(parentCommit.fold(0L)(_.ts) + 1, clockMs())
@@ -3579,7 +3553,7 @@ object TableLog {
         parentCommit.fold(Map.empty[String, String])(_.colmap))
       val dcols = droppedColsOverride.getOrElse(
         parentCommit.fold(Seq.empty[String])(_.droppedCols))
-      val body = renderCommit(Commit(version, parentNow, op,
+      val body = TableLogCodec.renderCommit(Commit(version, parentNow, op,
         schemaJson, adds, removes, txn, ts, removeDv, cstr, copyFiles, props,
         cmap, dcols))
       val out = fs.create(tmp, true)
@@ -3670,7 +3644,7 @@ object TableLog {
     def mappingOf(v: Long): (Map[String, String], Set[String]) =
       if (v <= 0L) (Map.empty, Set.empty)
       else {
-        val c = parseCommit(readText(fs, commitPath(base, v)))
+        val c = readCommit(fs, base, v)
         (c.colmap, c.droppedCols.toSet)
       }
     if (mappingOf(oldParent) != mappingOf(newBase))
@@ -3679,7 +3653,7 @@ object TableLog {
     if (!removeEntries.forall(r => headByPath.get(r.path).exists(_.dv == r.dv)))
       return false
     val intervening = vers.filter(v => v > oldParent && v <= newBase)
-      .map(v => parseCommit(readText(fs, commitPath(base, v))))
+      .map(v => readCommit(fs, base, v))
     // a winner that CHANGED the constraint set is a real conflict: this
     // commit's rows were validated (or not) against the OLD set —
     // rebasing an append over a concurrent ADD CONSTRAINT would land
@@ -3702,7 +3676,7 @@ object TableLog {
     * and for legacy manifests without the field).
     */
   private def commitTs(fs: FileSystem, base: Path, v: Long): Long =
-    if (v <= 0L) 0L else parseCommit(readText(fs, commitPath(base, v))).ts
+    if (v <= 0L) 0L else readCommit(fs, base, v).ts
 
   private[sinks] sealed trait RenameOutcome
   private[sinks] case object RenameLanded extends RenameOutcome
@@ -3744,8 +3718,7 @@ object TableLog {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(base, "_log"))) Nil
-    else commitVersions(fs, base).map(v => parseCommit(readText(fs,
-      new Path(base, f"_log/$v%020d.json"))))
+    else commitVersions(fs, base).map(readCommit(fs, base, _))
   }
 
   /** The commits in `(fromExclusive, toInclusive]` only — what a
@@ -3766,10 +3739,10 @@ object TableLog {
       // long the table lives
       (math.max(fromExclusive + 1L, 1L) to toInclusive)
         .filter(v => fs.exists(commitPath(base, v)))
-        .map(v => parseCommit(readText(fs, commitPath(base, v))))
+        .map(v => readCommit(fs, base, v))
     else commitVersions(fs, base)
       .filter(v => v > fromExclusive && v <= toInclusive)
-      .map(v => parseCommit(readText(fs, commitPath(base, v))))
+      .map(v => readCommit(fs, base, v))
   }
 
   /** `TIMESTAMP AS OF` resolution: the latest version whose commit
@@ -4369,7 +4342,7 @@ object TableLog {
       s"TableLog.readChanges: version $fromVersion was vacuumed (earliest readable: $wm)")
     val range = commitVers.filter(v => v > fromVersion && v <= to)
     val parts = range.map { v =>
-      val c = parseCommit(readText(fs, commitPath(base, v)))
+      val c = readCommit(fs, base, v)
       val schema = DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
       // both diff sides read MINUS their deletion vectors: the added
       // side minus the entries' (cumulative) dv, the removed side minus
@@ -4781,7 +4754,7 @@ object TableLog {
     // re-parses whole
     val everAdded = commitVers.filter(_ >= wmPrev)
       .flatMap { v =>
-        val c = parseCommit(readText(fs, commitPath(base, v)))
+        val c = readCommit(fs, base, v)
         c.add.map(_.path) ++ c.remove
       }
       .toSet
@@ -4921,8 +4894,8 @@ object TableLog {
         .filter(_.matches("\\d+\\.checkpoint\\.meta"))
         .map { n =>
           val v = n.stripSuffix(".checkpoint.meta")
-          try Left(parseCheckpointMeta(readText(fs, new Path(logRoot, n)))._4
-            .getOrElse(s"$v.checkpoint"))
+          try Left(TableLogCodec.parseCheckpoint(readText(fs, new Path(logRoot, n)))
+            .partDir.getOrElse(s"$v.checkpoint"))
           catch { case scala.util.control.NonFatal(_) => Right(v) }
         }
       (parsed.collect { case Left(d) => d }.toSet,
@@ -5078,16 +5051,18 @@ object TableLog {
   private def checkpointPartDir(base: Path, v: Long): Path =
     new Path(base, f"_log/$v%020d.checkpoint")
 
-  /** The checkpoint's HEADER text at `cv` — the multi-part header when
-    * one exists, else the legacy single-JSON body (whose top-level
-    * fields are a superset of the header's). Callers that only need
-    * `txns`/`copyfiles`/`schema` parse this without ever touching the
-    * entry parts.
+  /** The manifest committed at `v`. */
+  private def readCommit(fs: FileSystem, base: Path, v: Long): Commit =
+    TableLogCodec.parseCommit(readText(fs, commitPath(base, v)))
+
+  /** The checkpoint at `cv`, parsed once — the multi-part header when
+    * one exists (the entry parts stay unread), else the legacy
+    * single-JSON body with its inlined entries.
     */
-  private def checkpointHeaderText(fs: FileSystem, base: Path, cv: Long): String = {
+  private def readCheckpoint(fs: FileSystem, base: Path, cv: Long): TableLogCodec.Checkpoint = {
     val meta = checkpointMetaPath(base, cv)
-    if (fs.exists(meta)) readText(fs, meta)
-    else readText(fs, checkpointPath(base, cv))
+    TableLogCodec.parseCheckpoint(
+      readText(fs, if (fs.exists(meta)) meta else checkpointPath(base, cv)))
   }
 
   private def vacuumWatermark(fs: FileSystem, base: Path): Long = {
@@ -5253,7 +5228,7 @@ object TableLog {
     }
     val from = ckpt.getOrElse(0L)
     commitVersions(fs, base).filter(v => v > from && v <= version).foreach { v =>
-      val c = parseCommit(readText(fs, new Path(base, f"_log/$v%020d.json")))
+      val c = readCommit(fs, base, v)
       c.remove.foreach(live.remove)
       c.add.foreach(a => live(a.path) = a)
       schemaJson = c.schemaJson
@@ -5290,12 +5265,9 @@ object TableLog {
     */
   private def readCheckpointState(spark: SparkSession, fs: FileSystem,
                                   base: Path, cv: Long): (String, Seq[AddFile]) = {
-    val meta = checkpointMetaPath(base, cv)
-    if (!fs.exists(meta)) return parseCheckpoint(readText(fs, checkpointPath(base, cv)))
-    val (schemaJson, declared, expectEntries, partDirName) =
-      parseCheckpointMeta(readText(fs, meta))
-    requireSupportedFeatures(declared, s"checkpoint $cv")
-    val partDir = partDirName.map(n => new Path(base, s"_log/$n"))
+    val ck = readCheckpoint(fs, base, cv)
+    if (ck.live.isDefined) return (ck.schemaJson, ck.live.get)
+    val partDir = ck.partDir.map(n => new Path(base, s"_log/$n"))
       .getOrElse(checkpointPartDir(base, cv))
     val entries = spark.read
       .parquet(partDir.toString)
@@ -5306,12 +5278,12 @@ object TableLog {
     // directory (torn copy, lost part) must fail LOUDLY here — a
     // silently smaller live set is silently missing rows on every
     // subsequent read
-    require(expectEntries < 0L || entries.length.toLong == expectEntries,
+    require(ck.entries < 0L || entries.length.toLong == ck.entries,
       s"TableLog: checkpoint $cv is corrupt — header declares " +
-        s"$expectEntries entries, parts hold ${entries.length}; restore " +
+        s"${ck.entries} entries, parts hold ${entries.length}; restore " +
         "the missing parts or delete the header and its part dir (the " +
         "log folds without it)")
-    (schemaJson, entries.iterator.map(fromCkptEntry).toSeq)
+    (ck.schemaJson, entries.iterator.map(fromCkptEntry).toSeq)
   }
 
   /** Row count + per-column min/max from the parquet FOOTER — no data
@@ -5415,50 +5387,6 @@ object TableLog {
     } finally reader.close()
   }
 
-  // Manifest JSON: hand-rendered (flat, fully escaped), parsed with the
-  // Jackson shipped inside Spark — no dependency beyond the Spark jars.
-  // One mapper for every parse: readTree is thread-safe once configured.
-  private val manifestJson = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  private def esc(s: String): String = {
-    val b = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"'  => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.toString
-  }
-
-  private def renderStat(s: Stat): String = s match {
-    case NumStat(mn, mx) => s"""{"t":"n","min":$mn,"max":$mx}"""
-    case StrStat(mn, mx) => s"""{"t":"s","min":"${esc(mn)}","max":"${esc(mx)}"}"""
-  }
-
-  private def renderAdd(a: AddFile): String = {
-    // defense in depth: a non-finite numeric stat must never reach the
-    // rendered JSON (footerStats already filters; this covers any other
-    // producer of AddFile, e.g. a checkpoint re-rendering legacy stats)
-    val stats = a.stats.toSeq.sortBy(_._1)
-      .filter {
-        case (_, NumStat(mn, mx)) =>
-          java.lang.Double.isFinite(mn) && java.lang.Double.isFinite(mx)
-        case _ => true
-      }
-      .map { case (k, v) => s""""${esc(k)}":${renderStat(v)}""" }.mkString(",")
-    val dv = if (a.dv.isEmpty) "" else s""","dv":[${a.dv.mkString(",")}]"""
-    val bytes = if (a.bytes <= 0L) "" else s""","bytes":${a.bytes}"""
-    val nulls =
-      if (a.nullCounts.isEmpty) ""
-      else s""","nulls":{${a.nullCounts.toSeq.sortBy(_._1)
-        .map { case (c, n) => s""""${esc(c)}":$n""" }.mkString(",")}}"""
-    val pc =
-      if (a.pcols.isEmpty) ""
-      else s""","pcols":[${a.pcols.map(c => s""""${esc(c)}"""").mkString(",")}]"""
-    s"""{"path":"${esc(a.path)}","rows":${a.rows},"stats":{$stats}$dv$bytes$nulls$pc}"""
-  }
-
   /** READER-FEATURE guard (Delta's protocol/table-features idea, cut to
     * what matters): a manifest DECLARES the capabilities a reader must
     * implement to interpret it correctly — ignoring `dv` resurrects
@@ -5521,243 +5449,12 @@ object TableLog {
     b.result()
   }
 
-  private def requireSupportedFeatures(declared: Seq[String], what: String): Unit = {
+  private[sinks] def requireSupportedFeatures(declared: Seq[String], what: String): Unit = {
     val unknown = declared.filterNot(SupportedReaderFeatures)
     require(unknown.isEmpty,
       s"TableLog: $what requires reader feature(s) ${unknown.mkString(", ")} " +
         "this library does not implement — the table was written by a newer " +
         "graft writer; upgrade before reading (a silent misread is the one " +
         "thing a format guard must never allow)")
-  }
-
-  private[sinks] def renderCommit(c: Commit): String = {
-    val adds = c.add.map(renderAdd).mkString(",")
-    val removes = c.remove.map(r => s""""${esc(r)}"""").mkString(",")
-    val txn = c.txn.fold("")(t =>
-      s""","txn":{"app":"${esc(t._1)}","batch":${t._2}}""")
-    val rdv =
-      if (c.removeDv.isEmpty) ""
-      else s""","removedv":{${c.removeDv.toSeq.sortBy(_._1)
-        .map { case (p, ps) => s""""${esc(p)}":[${ps.mkString(",")}]""" }
-        .mkString(",")}}"""
-    val cks =
-      if (c.constraints.isEmpty) ""
-      else s""","constraints":{${c.constraints.toSeq.sortBy(_._1)
-        .map { case (n, e2) => s""""${esc(n)}":"${esc(e2)}"""" }
-        .mkString(",")}}"""
-    val cf =
-      if (c.copyFiles.isEmpty) ""
-      else s""","copyfiles":[${c.copyFiles.map(p => s""""${esc(p)}"""").mkString(",")}]"""
-    val props =
-      if (c.properties.isEmpty) ""
-      else s""","properties":{${c.properties.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-        .mkString(",")}}"""
-    val cmap =
-      if (c.colmap.isEmpty) ""
-      else s""","colmap":{${c.colmap.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
-        .mkString(",")}}"""
-    val dcols =
-      if (c.droppedCols.isEmpty) ""
-      else s""","dropcols":[${c.droppedCols.map(p => s""""${esc(p)}"""").mkString(",")}]"""
-    val feats = {
-      val fs = readerFeaturesOf(c)
-      if (fs.isEmpty) ""
-      else s""","features":[${fs.map(f => s""""${esc(f)}"""").mkString(",")}]"""
-    }
-    val wfeats = {
-      // union with the declared set: a future writer's features carried
-      // through OUR re-render (e.g. a rebase body) must never be dropped
-      val fs = (writerFeaturesOf(c) ++ c.writerFeatures).distinct
-      if (fs.isEmpty) ""
-      else s""","wfeatures":[${fs.map(f => s""""${esc(f)}"""").mkString(",")}]"""
-    }
-    s"""{"version":${c.version},"parent":${c.parent},"op":"${esc(c.op)}",""" +
-      s""""ts":${c.ts},""" +
-      s""""schema":"${esc(c.schemaJson)}","add":[$adds],"remove":[$removes]$txn$rdv$cks$cf$props$cmap$dcols$feats$wfeats}"""
-  }
-
-  private[sinks] def renderCheckpoint(version: Long, schemaJson: String,
-                               live: Seq[AddFile],
-                               txns: Map[String, Long],
-                               copyFiles: Set[String]): String = {
-    val txnBody = txns.toSeq.sortBy(_._1)
-      .map { case (a, b) => s""""${esc(a)}":$b""" }.mkString(",")
-    val cfBody = copyFiles.toSeq.sorted.map(p => s""""${esc(p)}"""").mkString(",")
-    // a checkpoint's reader features derive from its LIVE set (the
-    // folded colmap rides the commit manifests, which never delete)
-    val feats = {
-      val b = Seq.newBuilder[String]
-      if (live.exists(_.dv.nonEmpty)) b += "dv"
-      if (live.exists(f => isAbsEntry(f.path))) b += "abs-paths"
-      if (live.exists(_.pcols.nonEmpty)) b += "hive-part"
-      val fs = b.result()
-      if (fs.isEmpty) ""
-      else s""""features":[${fs.map(f => s""""${esc(f)}"""").mkString(",")}],"""
-    }
-    s"""{"version":$version,"schema":"${esc(schemaJson)}",""" +
-      feats +
-      s""""txns":{$txnBody},""" +
-      s""""copyfiles":[$cfBody],""" +
-      s""""live":[${live.map(renderAdd).mkString(",")}]}"""
-  }
-
-  /** The multi-part checkpoint HEADER — the legacy checkpoint's
-    * top-level fields (schema, reader features derived from the live
-    * set, folded txns, ingest ledger) with part/entry counts in place
-    * of the inlined entry list. Tiny however large the table is; the
-    * entries live in the parquet parts.
-    */
-  private[sinks] def renderCheckpointMeta(version: Long, schemaJson: String,
-                                   live: Seq[AddFile],
-                                   txns: Map[String, Long],
-                                   copyFiles: Set[String],
-                                   parts: Int, entries: Long,
-                                   partDirName: String): String = {
-    val txnBody = txns.toSeq.sortBy(_._1)
-      .map { case (a, b) => s""""${esc(a)}":$b""" }.mkString(",")
-    val cfBody = copyFiles.toSeq.sorted.map(p => s""""${esc(p)}"""").mkString(",")
-    val feats = {
-      val b = Seq.newBuilder[String]
-      if (live.exists(_.dv.nonEmpty)) b += "dv"
-      if (live.exists(f => isAbsEntry(f.path))) b += "abs-paths"
-      if (live.exists(_.pcols.nonEmpty)) b += "hive-part"
-      val fs = b.result()
-      if (fs.isEmpty) ""
-      else s""""features":[${fs.map(f => s""""${esc(f)}"""").mkString(",")}],"""
-    }
-    s"""{"version":$version,"schema":"${esc(schemaJson)}",""" +
-      feats +
-      s""""txns":{$txnBody},""" +
-      s""""copyfiles":[$cfBody],""" +
-      s""""parts":$parts,"entries":$entries,""" +
-      s""""partdir":"${esc(partDirName)}"}"""
-  }
-
-  /** `(schemaJson, declared reader features, entry count, part-dir
-    * name)` from a multi-part header; a header without the count
-    * (never written by this library, tolerated on parse) reports -1 =
-    * unchecked, and one without `partdir` (pre-attempt-unique format)
-    * resolves to the legacy shared `<v>.checkpoint` directory name.
-    */
-  private[sinks] def parseCheckpointMeta(txt: String)
-      : (String, Seq[String], Long, Option[String]) = {
-    import scala.jdk.CollectionConverters._
-    val n = manifestJson.readTree(txt)
-    (n.get("schema").asText(),
-      Option(n.get("features"))
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
-      Option(n.get("entries")).map(_.asLong()).getOrElse(-1L),
-      Option(n.get("partdir")).map(_.asText()))
-  }
-
-  private def parseAdds(n: com.fasterxml.jackson.databind.JsonNode): Seq[AddFile] = {
-    import scala.jdk.CollectionConverters._
-    n.elements().asScala.map { a =>
-      val stats = Option(a.get("stats")).map { so =>
-        so.properties().asScala.map { e =>
-          val v = e.getValue
-          val stat: Stat =
-            if (v.get("t").asText() == "n")
-              NumStat(v.get("min").asDouble(), v.get("max").asDouble())
-            else StrStat(v.get("min").asText(), v.get("max").asText())
-          e.getKey -> stat
-        }.toMap
-      }.getOrElse(Map.empty[String, Stat])
-      val dv = Option(a.get("dv")).map(_.elements().asScala.map(_.asLong()).toSeq)
-        .getOrElse(Nil)
-      val nulls = Option(a.get("nulls")).map { nn =>
-        nn.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
-      }.getOrElse(Map.empty[String, Long])
-      val pcols = Option(a.get("pcols"))
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-      AddFile(a.get("path").asText(), a.get("rows").asLong(), stats, dv,
-        bytes = Option(a.get("bytes")).map(_.asLong()).getOrElse(0L),
-        nullCounts = nulls, pcols = pcols)
-    }.toSeq
-  }
-
-  /** Parse a manifest body into its commit version, or None when the
-    * text is a checkpoint manifest (or unparseable) — the filter a
-    * streaming consumer of the raw `_log/` file feed needs, since the
-    * `*.json` glob also matches `*.checkpoint.json`.
-    */
-  def parseVersionIfCommit(txt: String): Option[Long] =
-    try {
-      val n = manifestJson.readTree(txt)
-      if (n == null || n.get("op") == null || n.get("version") == null) None
-      else Some(n.get("version").asLong())
-    } catch { case _: Exception => None }
-
-  private[sinks] def parseCommit(txt: String): Commit = {
-    import scala.jdk.CollectionConverters._
-    val n = manifestJson.readTree(txt)
-    requireSupportedFeatures(
-      Option(n.get("features"))
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
-      s"commit ${Option(n.get("version")).fold("?")(_.asText())}")
-    val removes = n.get("remove").elements().asScala.map(_.asText()).toSeq
-    val txn = Option(n.get("txn")).map(t =>
-      (t.get("app").asText(), t.get("batch").asLong()))
-    val removeDv = Option(n.get("removedv")).map { rd =>
-      rd.properties().asScala.map(e =>
-        e.getKey -> e.getValue.elements().asScala.map(_.asLong()).toSeq).toMap
-    }.getOrElse(Map.empty[String, Seq[Long]])
-    val cks = Option(n.get("constraints")).map { cc =>
-      cc.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }.getOrElse(Map.empty[String, String])
-    val cf = Option(n.get("copyfiles"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    val props = Option(n.get("properties")).map { pp =>
-      pp.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }.getOrElse(Map.empty[String, String])
-    val cmap = Option(n.get("colmap")).map { cm =>
-      cm.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }.getOrElse(Map.empty[String, String])
-    val dcols = Option(n.get("dropcols"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    // writer features parse OPEN: unknown entries refuse WRITES (the
-    // publishCommit guard), never reads — the asymmetry is the point
-    val wfeats = Option(n.get("wfeatures"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-    Commit(n.get("version").asLong(), n.get("parent").asLong(),
-      n.get("op").asText(), n.get("schema").asText(), parseAdds(n.get("add")),
-      removes, txn,
-      ts = Option(n.get("ts")).map(_.asLong()).getOrElse(0L),
-      removeDv = removeDv, constraints = cks, copyFiles = cf,
-      properties = props, colmap = cmap, droppedCols = dcols,
-      writerFeatures = wfeats)
-  }
-
-  private[sinks] def parseCheckpoint(txt: String): (String, Seq[AddFile]) = {
-    import scala.jdk.CollectionConverters._
-    val n = manifestJson.readTree(txt)
-    requireSupportedFeatures(
-      Option(n.get("features"))
-        .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil),
-      "checkpoint")
-    (n.get("schema").asText(), parseAdds(n.get("live")))
-  }
-
-  /** `None` for a legacy checkpoint without the `txns` field — the
-    * caller must then fold markers from the full log.
-    */
-  private[sinks] def parseCheckpointTxns(txt: String): Option[Map[String, Long]] = {
-    import scala.jdk.CollectionConverters._
-    val n = manifestJson.readTree(txt)
-    Option(n.get("txns")).map(t =>
-      t.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap)
-  }
-
-  /** `None` for a legacy checkpoint without the `copyfiles` field —
-    * the caller folds the ingest ledger from the full log (the next
-    * checkpoint written repairs the format).
-    */
-  private[sinks] def parseCheckpointCopyFiles(txt: String): Option[Set[String]] = {
-    import scala.jdk.CollectionConverters._
-    val n = manifestJson.readTree(txt)
-    Option(n.get("copyfiles"))
-      .map(_.elements().asScala.map(_.asText()).toSet)
   }
 }

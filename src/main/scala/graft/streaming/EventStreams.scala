@@ -973,7 +973,7 @@ object EventStreams {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val versions = batch.select(col("value")).collect()
-          .flatMap(r => graft.sinks.TableLog.parseVersionIfCommit(r.getString(0)))
+          .flatMap(r => graft.sinks.TableLogCodec.parseVersionIfCommit(r.getString(0)))
           .filter(_ >= math.max(startingVersion, 1L))
           .sorted
         // `keys` opts each slice into the KEYED feed (update_preimage/

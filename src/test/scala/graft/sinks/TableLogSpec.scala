@@ -1974,7 +1974,7 @@ class TableLogSpec extends SparkSpec {
     // lacks must refuse on EVERY read path, naming the feature — the
     // direct parse, the snapshot fold, and history
     val direct = intercept[IllegalArgumentException] {
-      TableLog.parseCommit(
+      TableLogCodec.parseCommit(
         """{"version":9,"parent":8,"op":"append","ts":1,"schema":"x",""" +
           """"add":[],"remove":[],"features":["time-crystals"]}""")
     }
@@ -1999,6 +1999,48 @@ class TableLogSpec extends SparkSpec {
     // guard refused instead of committing on top of a misread)
     fs.delete(planted, false)
     assert(TableLog.readAt(spark, dir).count() == 19L)
+  }
+
+  test("reader-feature guard: a legacy or multi-part checkpoint declaring an unknown feature refuses readAt") {
+    for ((form, minEntries) <- Seq("legacy" -> TableLog.MultipartCheckpointThreshold,
+                                   "multipart" -> 1)) withClue(s"$form: ") {
+      val dir = tmpDir(s"tlog_ckpt_features_$form")
+      TableLog.append(spark, dir, (1L to 10L).map(k => (k, s"p$k")).toDF("k", "s"))
+      TableLog.append(spark, dir, Seq((11L, "q")).toDF("k", "s"))
+      val cv = TableLog.checkpoint(spark, dir, multipartMinEntries = minEntries)
+      val name = if (form == "legacy") f"$cv%020d.checkpoint.json"
+                 else f"$cv%020d.checkpoint.meta"
+      val file = new java.io.File(dir, s"_log/$name")
+      val body = new String(java.nio.file.Files.readAllBytes(file.toPath), "UTF-8")
+      assert(!body.contains("\"features\""))
+      java.nio.file.Files.write(file.toPath, body.replaceFirst(",\"schema\":",
+        ",\"features\":[\"time-crystals\"],\"schema\":").getBytes("UTF-8"))
+      new java.io.File(dir, s"_log/.$name.crc").delete()
+      TableLog.snapshotCacheClear()
+      val e = intercept[IllegalArgumentException] { TableLog.readAt(spark, dir).count() }
+      assert(e.getMessage.contains("time-crystals"))
+    }
+  }
+
+  test("describeDetail and describeLayout parse the version's manifest once") {
+    val dir = tmpDir("tlog_detail_reads")
+    TableLog.append(spark, dir, (1L to 10L).map(k => (k, s"p$k")).toDF("k", "s"),
+      statsCols = Seq("k"))
+    TableLog.setTableProperties(spark, dir, Map("graft.cluster.cols" -> "k"))
+    val v = TableLog.checkpoint(spark, dir)
+    TableLog.liveFilesAt(spark, dir, v)
+    val manifest = f"$v%020d.json"
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val savedHook = TableLog.readTextIntercept
+    try {
+      TableLog.readTextIntercept = p => if (p.getName == manifest) reads.incrementAndGet()
+      val d = TableLog.describeDetail(spark, dir).collect().head
+      assert(d.getAs[String]("properties") == """{"graft.cluster.cols":"k"}""")
+      assert(reads.get == 1)
+      reads.set(0)
+      assert(TableLog.describeLayout(spark, dir).collect().head.getString(0) == "k")
+      assert(reads.get == 1)
+    } finally TableLog.readTextIntercept = savedHook
   }
 
   test("concurrent full-sync merge vs append: never a silent torn state") {

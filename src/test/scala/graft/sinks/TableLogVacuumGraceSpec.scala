@@ -42,7 +42,7 @@ class TableLogVacuumGraceSpec extends SparkSpec {
     */
   private def landManifest(dir: String, version: Long, parent: Long,
                            rel: String, schemaJson: String): Unit = {
-    val body = TableLog.renderCommit(TableLog.Commit(version, parent,
+    val body = TableLogCodec.renderCommit(TableLog.Commit(version, parent,
       "append", schemaJson, Seq(TableLog.AddFile(rel, 1L, Map.empty)), Nil,
       ts = System.currentTimeMillis()))
     java.nio.file.Files.write(
