@@ -2142,6 +2142,39 @@ class TableLogSpec extends SparkSpec {
     } finally TableLog.clockMs = saved
   }
 
+  test("firstVersionAtOrAfter(ElseNext): exact at every boundary, before the first and after the last commit") {
+    val dir = tmpDir("tlog_fva_bin")
+    val saved = TableLog.clockMs
+    try {
+      (1 to 12).foreach { i =>
+        TableLog.clockMs = () => i * 1000L
+        TableLog.append(spark, dir, Seq((i.toLong, s"v$i")).toDF("k", "s"))
+      }
+      def first(ts: Long) = TableLog.firstVersionAtOrAfter(spark, dir, ts)
+      def elseNext(ts: Long) = TableLog.firstVersionAtOrAfterElseNext(spark, dir, ts)
+      (1 to 12).foreach { i =>
+        val at = i * 1000L
+        assert(first(at) == Some(i.toLong))
+        assert(first(at - 500L) == Some(i.toLong))
+        assert(first(at + 500L) == (if (i < 12) Some(i + 1L) else None))
+        assert(elseNext(at) == i.toLong)
+        assert(elseNext(at - 500L) == i.toLong)
+        assert(elseNext(at + 500L) == i + 1L)
+        assert(TableLog.versionAtTimestamp(spark, dir, at) == i.toLong)
+        assert(TableLog.versionAtTimestamp(spark, dir, at + 500L) == i.toLong)
+        if (i > 1)
+          assert(TableLog.versionAtTimestamp(spark, dir, at - 500L) == i - 1L)
+      }
+      // before the first commit: the first version; after the last: none
+      // yet, and the wait position is last + 1
+      assert(first(0L) == Some(1L) && elseNext(0L) == 1L)
+      assert(first(99000L) == None && elseNext(99000L) == 13L)
+      intercept[IllegalArgumentException] {
+        TableLog.versionAtTimestamp(spark, dir, 500L)
+      }
+    } finally TableLog.clockMs = saved
+  }
+
   test("maintain: compacts dv debris, checkpoints, vacuums within retention, still time-travels") {
     val dir = tmpDir("tlog_maintain")
     val saved = TableLog.clockMs
