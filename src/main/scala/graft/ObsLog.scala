@@ -64,6 +64,11 @@ final class ObsLog(maxBuffered: Int = 10000) extends QueryExecutionListener {
       .toDF("at", "action", "duration_ms", "root_operator", "output_rows", "error")
   }
 
+  /** Records buffered now — read without running a query, so polling it
+    * records nothing itself.
+    */
+  def size: Int = buffered.get
+
   def clear(): Unit = { buf.clear(); buffered.set(0) }
 }
 
