@@ -212,10 +212,8 @@ object TableLog {
       commit(spark, dir, df, "append", statsCols, expectedParent, txn,
         writeOptions = writeOptions)
     else {
-      val basePath = new Path(dir)
-      val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val (pSchemaJson, _) = snapshotAt(spark, fs, basePath, base)
-      val parsed = DataType.fromJson(pSchemaJson).asInstanceOf[StructType]
+      // unchecked open: the commit's CAS is what vets `base`
+      val parsed = new Snap(spark, dir, base).schema
       val dfFields = df.schema.fields.map(f => f.name -> f).toMap
       val missing = parsed.fields.map(_.name).filterNot(dfFields.contains)
       require(missing.isEmpty,
@@ -401,14 +399,9 @@ object TableLog {
                             txn: Option[(String, Long)] = None): Long = {
     import org.apache.spark.sql.functions.{broadcast, coalesce => fnCoalesce, col, lit}
     import scala.jdk.CollectionConverters._
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.deleteWhere(dv): $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, files) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val cm = columnMappingAt(spark, dir, base)
-    val touched = dvTouchSet(spark, basePath, files, schema, predicate,
+    val s = snap(spark, dir, -1L, "deleteWhere(dv)")
+    val (base, schemaJson, schema, cm) = (s.version, s.schemaJson, s.schema, s.meta.colmap)
+    val touched = dvTouchSet(spark, s.base, s.files, schema, predicate,
       pruneBounds, cm)
     if (touched.isEmpty)
       return commitManifest(spark, dir, "delete", schemaJson, Nil, Nil, base, txn)
@@ -643,14 +636,13 @@ object TableLog {
     // might delete — all files when unconditioned, the condition's box
     // (OR'd with the key box) when scoped. An unconditioned full sync
     // derives empty bounds, which touches everything.
-    val nmbsBounds: Seq[Seq[(String, Any, Any)]] =
+    def nmbsBounds(committed: StructType): Seq[Seq[(String, Any, Any)]] =
       if (!fullSync) Nil
       else notMatchedBySourceCondition match {
         case None => Seq(Nil) // overlaps everything: whole-table touch
         case Some(c) =>
           val probe = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row],
-            schemaAt(spark, dir))
+            spark.sparkContext.emptyRDD[Row], committed)
           Seq(boundsFromPredicate(probe, c))
       }
     rewriteTouched(spark, dir, "merge", bounds, statsCols,
@@ -687,19 +679,6 @@ object TableLog {
     }
   }
 
-  /** Derive [[scanPruned]]-style bounds from a predicate's expression
-    * tree, CONSERVATIVELY: only shapes that PROVE a bound contribute
-    * (`col op literal` comparisons, `IN` lists, `BETWEEN`/`AND`
-    * conjunctions, and `OR`s whose branches each bound the column
-    * once); anything unrecognized contributes nothing, which just
-    * means more files touch — correctness never depends on the
-    * analysis. Strict comparisons widen to inclusive bounds (a
-    * superset); numeric open sides use ±∞; string columns only bound
-    * on closed shapes (equality/IN) because there is no top string.
-    * This removes the manual-bounds footgun from the row-level ops:
-    * [[deleteWhere]]/[[updateWhere]] derive their touch set from the
-    * predicate itself unless the caller overrides.
-    */
   /** Unwrap analyzer sugar so SQL-text predicates prune like their
     * Column-API twins: RuntimeReplaceable nodes (BETWEEN, …) replace
     * with their rewrite, and the `With` common-subexpression wrapper
@@ -739,6 +718,19 @@ object TableLog {
     case _ => None
   }
 
+  /** Derive [[scanPruned]]-style bounds from a predicate's expression
+    * tree, CONSERVATIVELY: only shapes that PROVE a bound contribute
+    * (`col op literal` comparisons, `IN` lists, `BETWEEN`/`AND`
+    * conjunctions, and `OR`s whose branches each bound the column
+    * once); anything unrecognized contributes nothing, which just
+    * means more files touch — correctness never depends on the
+    * analysis. Strict comparisons widen to inclusive bounds (a
+    * superset); numeric open sides use ±∞; string columns only bound
+    * on closed shapes (equality/IN) because there is no top string.
+    * This removes the manual-bounds footgun from the row-level ops:
+    * [[deleteWhere]]/[[updateWhere]] derive their touch set from the
+    * predicate itself unless the caller overrides.
+    */
   private[sinks] def boundsFromPredicate(probe: DataFrame,
                                          pred: org.apache.spark.sql.Column): Seq[(String, Any, Any)] = {
     import org.apache.spark.sql.catalyst.expressions._
@@ -1047,17 +1039,13 @@ object TableLog {
                              txn: Option[(String, Long)] = None,
                              autoBoundsFrom: Option[org.apache.spark.sql.Column] = None,
                              readBounds: Seq[(String, Any, Any)] = Nil,
-                             orBounds: Seq[Seq[(String, Any, Any)]] = Nil,
+                             orBounds: StructType => Seq[Seq[(String, Any, Any)]] = _ => Nil,
                              rebaseable: Boolean = true,
                              writeOptions: Map[String, String] = Map.empty,
                              evolveWith: Option[StructType] = None)
                             (rewrite: DataFrame => DataFrame): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.$op: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (committedJson, files) = snapshotAt(spark, fs, basePath, base)
-    val committed = DataType.fromJson(committedJson).asInstanceOf[StructType]
+    val s = snap(spark, dir, -1L, op)
+    val committed = s.schema
     // SCHEMA EVOLUTION seam (merge autoMerge): `evolveWith`'s source-only
     // fields append to the committed schema; touched files read through
     // the EVOLVED shape (Spark null-fills columns a parquet file lacks —
@@ -1078,7 +1066,7 @@ object TableLog {
       StructType(committed.fields ++ extra.map(_.copy(nullable = true)))
     }
     val schemaJson = schema.json
-    val cm = columnMappingAt(spark, dir, base)
+    val cm = s.meta.colmap
     val bounds =
       if (pruneBounds.nonEmpty) pruneBounds
       else autoBoundsFrom.map { p =>
@@ -1101,10 +1089,11 @@ object TableLog {
     // touch set DISJUNCTIVELY (a file touches when it overlaps the
     // primary box OR any of the extra boxes) — what a full-sync merge
     // needs: its update arm touches the key box, its
-    // not-matched-by-source arm touches the condition's box
+    // not-matched-by-source arm touches the condition's box (derived
+    // against the committed schema of the version opened here)
     val pb = physBounds(cm, bounds) // hoisted: invariant across files
-    val pOr = orBounds.map(physBounds(cm, _))
-    val touched = files.filter(f =>
+    val pOr = orBounds(committed).map(physBounds(cm, _))
+    val touched = s.files.filter(f =>
       (mayOverlap(f, pb) && mayPassNullShapes(f, nullShapes)) ||
         pOr.exists(mayOverlap(f, _)))
     // dv-aware: a touched file's already-deleted positions must not
@@ -1115,7 +1104,7 @@ object TableLog {
       require(nullableForm(out.schema) == nullableForm(schema),
         s"TableLog.$op: rewrite changed the table schema " +
           s"(${out.schema.simpleString} vs ${schema.simpleString})")
-    commit(spark, dir, out, op, statsCols, expectedParent = Some(base),
+    commit(spark, dir, out, op, statsCols, expectedParent = Some(s.version),
       txn = txn, explicitRemoves = Some(touched),
       schemaOverride = Some(schemaJson), writeOptions = writeOptions,
       readBounds = physBounds(cm, readBounds), rebaseable = rebaseable)
@@ -1175,36 +1164,63 @@ object TableLog {
                    where: Option[org.apache.spark.sql.Column] = None): Long = {
     require(targetFileMB > 0,
       s"TableLog.compactTable: targetFileMB must be positive, got $targetFileMB")
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.compactTable: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, files) = snapshotAt(spark, fs, basePath, base)
-    import org.apache.spark.sql.functions.col
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val cm = columnMappingAt(spark, dir, base)
-    val (cand, boundCols) = where.fold((files, Seq.empty[String]))(
-      scopeByPredicate(spark, schema, cm, files, _, "compactTable"))
-    if (cand.isEmpty) return base // nothing in scope: no empty commit
-    val totalBytes = cand.map(fileBytes(fs, basePath, _)).sum
+    rewriteFiles(spark, dir, "compactTable", "compact", targetFileMB,
+      statsCols, where)(clusterLayout(sortCols)).merge
+  }
+
+  /** The one body behind the size-targeted maintenance rewrites
+    * ([[compactTable]], [[compactSmallFiles]], [[optimizeZOrdered]],
+    * [[reorgPurge]]); each brings only its candidate filter (`select`,
+    * over the `where`-scoped live files and their byte sizes) and its
+    * `layout` (of the candidates' rows into `nOut` files). Opens the
+    * latest version once, scopes by `where` ([[scopeByPredicate]]),
+    * sizes `nOut` from the candidates' manifest bytes and
+    * `targetFileMB`, reads them with their deletion vectors, and commits
+    * `op` pinned to the version read, removing exactly the candidates
+    * and re-storing the parent's schema JSON. Left(the version read)
+    * when nothing qualifies: no empty commit.
+    *
+    * The ops commit `compact` or `purge`, NOT `overwrite`: the row
+    * multiset is unchanged, and downstream consumers key off the op —
+    * an append-only stream passes maintenance commits through with
+    * their empty diff but must refuse a real overwrite loudly. Stats
+    * UNION the scoping columns: the rewritten band must record min/max
+    * on what scoped it, or the next scoped pass (and every read-side
+    * prune on the hot band) degrades to keep-all. Sizes come from the
+    * manifest (no O(files) stat sweep per maintenance run; legacy
+    * entries without `bytes` fall back to getFileStatus).
+    */
+  private def rewriteFiles(spark: SparkSession, dir: String, api: String, op: String,
+                           targetFileMB: Int, statsCols: Seq[String],
+                           where: Option[org.apache.spark.sql.Column],
+                           select: (Seq[AddFile], AddFile => Long) => Seq[AddFile] =
+                             (scoped, _) => scoped)
+                          (layout: (DataFrame, Int) => DataFrame): Either[Long, Long] = {
+    val s = snap(spark, dir, -1L, api)
+    val cm = s.meta.colmap
+    def bytes(f: AddFile): Long =
+      if (f.bytes > 0L) f.bytes else s.fs.getFileStatus(new Path(s.base, f.path)).getLen
+    val (scoped, boundCols) = where.fold((s.files, Seq.empty[String]))(
+      scopeByPredicate(spark, s.schema, cm, s.files, _, api))
+    val cand = select(scoped, bytes)
+    if (cand.isEmpty) return Left(s.version)
     val nOut = math.max(1,
-      math.ceil(totalBytes.toDouble / (targetFileMB * 1024L * 1024L)).toInt)
-    val cur = readWithDv(spark, dir, schema, cand, cm)
-    val laid =
-      if (sortCols.nonEmpty)
-        cur.repartitionByRange(nOut, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else cur.coalesce(nOut)
-    // commits as op `compact`, NOT `overwrite`: the row multiset is
-    // unchanged, and downstream consumers key off the op — an
-    // append-only stream passes maintenance commits through with their
-    // empty diff but must refuse a real overwrite loudly. Stats UNION
-    // the scoping columns: the rewritten band must record min/max on
-    // what scoped it, or the next scoped pass (and every read-side
-    // prune on the hot band) degrades to keep-all.
-    commit(spark, dir, laid, "compact", (statsCols ++ boundCols).distinct,
-      expectedParent = Some(base), txn = None, explicitRemoves = Some(cand),
-      schemaOverride = Some(schemaJson))
+      math.ceil(cand.map(bytes).sum.toDouble / (targetFileMB * 1024L * 1024L)).toInt)
+    val laid = layout(readWithDv(spark, dir, s.schema, cand, cm), nOut)
+    Right(commit(spark, dir, laid, op, (statsCols ++ boundCols).distinct,
+      expectedParent = Some(s.version), txn = None, explicitRemoves = Some(cand),
+      schemaOverride = Some(s.schemaJson)))
+  }
+
+  /** Maintenance layout: a shuffle-free coalesce into `nOut` files, or
+    * with `cols` one range exchange and a per-file sort, so the new
+    * files carry TIGHT manifest stats on those columns.
+    */
+  private def clusterLayout(cols: Seq[String])(df: DataFrame, nOut: Int): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    if (cols.isEmpty) df.coalesce(nOut)
+    else df.repartitionByRange(nOut, cols.map(col): _*)
+      .sortWithinPartitions(cols.map(col): _*)
   }
 
   /** Files whose manifest stats OVERLAP `pred`'s conservative box plus
@@ -1231,14 +1247,6 @@ object TableLog {
       (bounds.map(_._1) ++ ns0.map(_._1)).distinct)
   }
 
-  /** A live file's size: from the MANIFEST when recorded (the normal
-    * case since `bytes` landed — zero RPCs), a getFileStatus fallback
-    * for legacy entries only.
-    */
-  private def fileBytes(fs: FileSystem, basePath: Path, f: AddFile): Long =
-    if (f.bytes > 0L) f.bytes
-    else fs.getFileStatus(new Path(basePath, f.path)).getLen
-
   /** `RESTORE TABLE … TO VERSION` as a ZERO-COPY commit: roll the table
     * back to `version`'s contents by publishing a new commit whose adds
     * are that version's file entries VERBATIM (stats included) and
@@ -1250,19 +1258,16 @@ object TableLog {
     * of one manifest rename however big the table is.
     */
   def restore(spark: SparkSession, dir: String, version: Long): Long = {
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.restore: $dir has no committed versions")
-    val wm = vacuumWatermark(fs, basePath)
+    val head = snap(spark, dir, -1L, "restore")
+    val wm = vacuumWatermark(head.fs, head.base)
     require(version >= wm,
       s"TableLog.restore: version $version of $dir was vacuumed " +
         s"(earliest restorable: $wm)")
-    require(commitVersions(fs, basePath).contains(version),
+    require(commitVersions(head.fs, head.base).contains(version),
       s"TableLog.restore: version $version of $dir does not exist")
-    if (version == base) return base // already there: no empty commit
-    val (schemaJson, targetFiles) = snapshotAt(spark, fs, basePath, version)
-    val (_, liveFiles) = snapshotAt(spark, fs, basePath, base)
+    if (version == head.version) return head.version // already there: no empty commit
+    val target = new Snap(spark, dir, version) // vetted just above
+    val (targetFiles, liveFiles) = (target.files, head.files)
     val targetByPath = targetFiles.map(f => f.path -> f).toMap
     val liveByPath = liveFiles.map(f => f.path -> f).toMap
     // the manifest carries only the DELTA: files still live WITH THE
@@ -1275,14 +1280,14 @@ object TableLog {
     // mapping and tombstones must be the target's too — restoring
     // across a rename with the head's mapping would mis-project every
     // file
-    commitManifest(spark, dir, "restore", schemaJson,
+    commitManifest(spark, dir, "restore", target.schemaJson,
       adds = targetFiles.filter(f =>
         !liveByPath.get(f.path).exists(_.dv == f.dv)),
       removeEntries = liveFiles.filter(f =>
         !targetByPath.get(f.path).exists(_.dv == f.dv)),
-      expectedParent = base, txn = None,
-      colmapOverride = Some(columnMappingAt(spark, dir, version)),
-      droppedColsOverride = Some(droppedColsAt(spark, dir, version)))
+      expectedParent = head.version, txn = None,
+      colmapOverride = Some(target.meta.colmap),
+      droppedColsOverride = Some(target.meta.droppedCols))
   }
 
   /** `CREATE TABLE … SHALLOW CLONE src [VERSION AS OF v]` — a ZERO-COPY
@@ -1310,11 +1315,9 @@ object TableLog {
     require(currentVersion(spark, dstDir) == 0L,
       s"TableLog.cloneShallow: $dstDir already has committed versions — " +
         "clone targets a fresh table directory")
-    val (resolvedSrc, schemaJson, files) = resolve(spark, srcDir, version, "cloneShallow")
-    val srcPath = new Path(srcDir)
-    val fs = srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val srcQualified = fs.makeQualified(srcPath).toString
-    val adds = files.map(f => f.copy(path =
+    val src = snap(spark, srcDir, version, "cloneShallow")
+    val srcQualified = src.fs.makeQualified(src.base).toString
+    val adds = src.files.map(f => f.copy(path =
       if (isAbsEntry(f.path)) f.path else s"$srcQualified/${f.path}"))
     // the fork inherits the source's CHECK constraints, table
     // properties, column mapping, and dropped-column tombstones: data
@@ -1322,12 +1325,13 @@ object TableLog {
     // refuse the same garbage production refuses, its maintenance
     // knobs start from the source's, and the inherited files' physical
     // column names must keep resolving
-    commitManifest(spark, dstDir, "clone", schemaJson, adds,
+    val m = src.meta
+    commitManifest(spark, dstDir, "clone", src.schemaJson, adds,
       removeEntries = Nil, expectedParent = 0L, txn = None,
-      constraintsOverride = Some(constraintsAt(spark, srcDir, resolvedSrc)),
-      propertiesOverride = Some(tablePropertiesAt(spark, srcDir, resolvedSrc)),
-      colmapOverride = Some(columnMappingAt(spark, srcDir, resolvedSrc)),
-      droppedColsOverride = Some(droppedColsAt(spark, srcDir, resolvedSrc)))
+      constraintsOverride = Some(m.constraints),
+      propertiesOverride = Some(m.properties),
+      colmapOverride = Some(m.colmap),
+      droppedColsOverride = Some(m.droppedCols))
   }
 
   /** `CONVERT TO GRAFT` — adopt an EXISTING flat parquet directory into
@@ -1585,19 +1589,14 @@ object TableLog {
     */
   private def alterMetadata(spark: SparkSession, dir: String, api: String,
                             manifestOp: String)(change: TableMeta => TableMeta): Long = {
-    val version = currentVersion(spark, dir)
-    require(version > 0L, s"TableLog.$api: $dir has no committed versions")
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, files) = snapshotAt(spark, fs, base, version)
-    val c = readCommit(fs, base, version)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val out = change(TableMeta(version, schema, files, c.constraints,
+    val s = snap(spark, dir, -1L, api)
+    val c = s.meta
+    val out = change(TableMeta(s.version, s.schema, s.files, c.constraints,
       c.properties, c.colmap, c.droppedCols))
     // an op that leaves the schema alone re-stores the parent's JSON as is
     commitManifest(spark, dir, manifestOp,
-      if (out.schema == schema) schemaJson else out.schema.json,
-      adds = Nil, removeEntries = Nil, expectedParent = version, txn = None,
+      if (out.schema == s.schema) s.schemaJson else out.schema.json,
+      adds = Nil, removeEntries = Nil, expectedParent = s.version, txn = None,
       constraintsOverride = Some(out.constraints),
       propertiesOverride = Some(out.properties),
       colmapOverride = Some(out.colmap),
@@ -1831,16 +1830,14 @@ object TableLog {
     * are declared or every mark already matches.
     */
   def syncIdentity(spark: SparkSession, dir: String): Option[Long] = {
-    val v = currentVersion(spark, dir)
-    require(v > 0L, s"TableLog.syncIdentity: $dir has no committed versions")
-    val c = commitAt(spark, dir, v, "syncIdentity").get
+    val s = snap(spark, dir, -1L, "syncIdentity")
+    val c = s.meta
     val props = c.properties
     val specs = props.get("graft.identity.cols")
       .map(decodeIdentityCols).getOrElse(Nil)
     if (specs.isEmpty) return None
-    val files = liveFilesAt(spark, dir, v)
     val ups = specs.flatMap { s0 =>
-      val mx = files.flatMap(_.stats.get(physPath(c.colmap, s0.col)))
+      val mx = s.files.flatMap(_.stats.get(physPath(c.colmap, s0.col)))
         .collect { case NumStat(_, m) => m }
         .reduceOption(_ max _).map(conservativeLongMax)
       val key = s"graft.identity.high.${s0.col}"
@@ -1907,11 +1904,6 @@ object TableLog {
                       version: Long = -1L): Map[String, String] =
     commitAt(spark, dir, version, "columnMappingAt")
       .fold(Map.empty[String, String])(_.colmap)
-
-  private def droppedColsAt(spark: SparkSession, dir: String,
-                            version: Long): Seq[String] =
-    commitAt(spark, dir, version, "droppedColsAt")
-      .fold(Seq.empty[String])(_.droppedCols)
 
   /** `ALTER TABLE … ADD COLUMN` as a MANIFEST-ONLY commit — zero data
     * rewritten however large the table: the new column appends to the
@@ -2477,45 +2469,10 @@ object TableLog {
                  where: Option[org.apache.spark.sql.Column] = None): Long = {
     require(targetFileMB > 0,
       s"TableLog.reorgPurge: targetFileMB must be positive, got $targetFileMB")
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.reorgPurge: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, files) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val cm = columnMappingAt(spark, dir, base)
-    val (scoped, boundCols) = where.fold((files, Seq.empty[String]))(
-      scopeByPredicate(spark, schema, cm, files, _, "reorgPurge"))
-    val cand = scoped.filter(_.dv.nonEmpty)
-    if (cand.isEmpty) return base // nothing to purge: no empty commit
-    val totalBytes = cand.map(fileBytes(fs, basePath, _)).sum
-    val nOut = math.max(1,
-      math.ceil(totalBytes.toDouble / (targetFileMB * 1024L * 1024L)).toInt)
-    val cur = readWithDv(spark, dir, schema, cand, cm)
-    commit(spark, dir, cur.coalesce(nOut), "purge",
-      (statsCols ++ boundCols).distinct,
-      expectedParent = Some(base), txn = None, explicitRemoves = Some(cand),
-      schemaOverride = Some(schemaJson))
+    rewriteFiles(spark, dir, "reorgPurge", "purge", targetFileMB, statsCols, where,
+      select = (scoped, _) => scoped.filter(_.dv.nonEmpty))(clusterLayout(Nil)).merge
   }
 
-  /** [[maintain]] with every knob resolved from TABLE PROPERTIES
-    * (`graft.compact.minFileMB`, `graft.compact.targetFileMB`,
-    * `graft.compact.minSmallFiles`, `graft.retain.keepVersions`,
-    * `graft.retain.ms`, `graft.stats.cols` — comma-separated), falling
-    * back to [[maintain]]'s defaults: the cron job calls ONE method per
-    * table and each table's owner tunes retention/layout by setting
-    * properties, not by editing the scheduler.
-    */
-  /** Fleet upkeep: discover every table under `rootDir` (any immediate
-    * or nested directory carrying a `_log`) and run [[maintainAuto]] on
-    * each — ONE scheduler entry point for a whole warehouse, each
-    * table tuned by its own properties. A table whose maintenance
-    * THROWS is reported (`error` column) and the sweep continues: one
-    * wedged table must not starve every other table's retention.
-    * Discovery prunes at `_log` boundaries (a table's data subdirs are
-    * never walked), so the listing cost is O(directories), not
-    * O(files). Returns one report row per table, path-ordered.
-    */
   /** Discover every table-log table under a warehouse root: any nested
     * directory carrying a `_log`, pruned AT the `_log` boundary so the
     * walk is O(directories), never O(files) — a table's data
@@ -2557,6 +2514,16 @@ object TableLog {
       else Some(t -> readAt(spark, t, versionAtTimestamp(spark, t, tsMillis)))
     }.toMap
 
+  /** Fleet upkeep: discover every table under `rootDir` (any immediate
+    * or nested directory carrying a `_log`) and run [[maintainAuto]] on
+    * each — ONE scheduler entry point for a whole warehouse, each
+    * table tuned by its own properties. A table whose maintenance
+    * THROWS is reported (`error` column) and the sweep continues: one
+    * wedged table must not starve every other table's retention.
+    * Discovery prunes at `_log` boundaries (a table's data subdirs are
+    * never walked), so the listing cost is O(directories), not
+    * O(files). Returns one report row per table, path-ordered.
+    */
   def maintainAll(spark: SparkSession, rootDir: String,
                   maxDepth: Int = 3, parallelism: Int = 4): DataFrame = {
     import org.apache.spark.sql.types._
@@ -2601,6 +2568,15 @@ object TableLog {
       .add("error", StringType))
   }
 
+  /** [[maintain]] with every knob resolved from TABLE PROPERTIES
+    * (`graft.compact.minFileMB`, `graft.compact.targetFileMB`,
+    * `graft.compact.minSmallFiles`, `graft.retain.keepVersions`,
+    * `graft.retain.ms`, `graft.stats.cols` and `graft.cluster.cols` —
+    * the two column lists comma-separated), falling back to
+    * [[maintain]]'s defaults: the cron job calls ONE method per
+    * table and each table's owner tunes retention/layout by setting
+    * properties, not by editing the scheduler.
+    */
   def maintainAuto(spark: SparkSession, dir: String): MaintenanceReport = {
     val p = tablePropertiesAt(spark, dir)
     def i(k: String, dflt: Int): Int = p.get(k).map(_.trim.toInt).getOrElse(dflt)
@@ -2629,10 +2605,8 @@ object TableLog {
   def describeDetail(spark: SparkSession, dir: String,
                      version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.types._
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val v = if (version == -1L) currentVersion(spark, dir) else version
-    val (_, _, files) = resolve(spark, dir, v, "describeDetail")
+    val s = snap(spark, dir, version, "describeDetail")
+    val (fs, base, v, files) = (s.fs, s.base, s.version, s.files)
     // sizes come from the manifest when every entry carries them (one
     // parse, zero file RPCs — the normal case for any table written
     // since `bytes` landed); legacy entries (bytes=0) fall back to the
@@ -2643,7 +2617,7 @@ object TableLog {
         DistributeFileOpsThreshold)((c, p) =>
         p.getFileSystem(c).getFileStatus(p).getLen)
     val dvRows = files.map(_.dv.length.toLong).sum
-    val c = readCommit(fs, base, v)
+    val c = s.meta
     val row = Row(v, new java.sql.Timestamp(c.ts),
       files.length, sizes.sum, files.map(_.rows).sum - dvRows, dvRows,
       TableLogCodec.renderStringMap(c.constraints),
@@ -2691,9 +2665,8 @@ object TableLog {
                      columns: Seq[String] = Nil,
                      version: Long = -1L): DataFrame = {
     import org.apache.spark.sql.types._
-    val v = if (version == -1L) currentVersion(spark, dir) else version
-    val (_, _, files) = resolve(spark, dir, v, "describeLayout")
-    val meta = commitAt(spark, dir, v, "describeLayout").get
+    val s = snap(spark, dir, version, "describeLayout")
+    val (files, meta) = (s.files, s.meta)
     val cm = meta.colmap
     val cols =
       if (columns.nonEmpty) columns
@@ -2876,12 +2849,8 @@ object TableLog {
     */
   def commitTxnMarker(spark: SparkSession, dir: String, appId: String,
                       batchId: Long): Long = {
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.commitTxnMarker: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, _) = snapshotAt(spark, fs, basePath, base)
-    commitManifest(spark, dir, "txn", schemaJson, Nil, Nil, base,
+    val s = snap(spark, dir, -1L, "commitTxnMarker")
+    commitManifest(spark, dir, "txn", s.schemaJson, Nil, Nil, s.version,
       Some(appId -> batchId))
   }
 
@@ -2911,56 +2880,30 @@ object TableLog {
         s"got ($minFileMB, $targetFileMB)")
     require(minSmallFiles >= 2,
       s"TableLog.compactSmallFiles: minSmallFiles must be ≥2, got $minSmallFiles")
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.compactSmallFiles: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, files) = snapshotAt(spark, fs, basePath, base)
     // `where` scopes candidates to the predicate's stats box FIRST (the
     // SQL `OPTIMIZE … WHERE` loop): size selection then makes repeated
     // scoped runs CONVERGE — the band's own compacted output is big
-    // enough to skip, so only fresh fragments rewrite next time
-    val (scoped, boundCols) = where.fold((files, Seq.empty[String]))(
-      scopeByPredicate(spark,
-        DataType.fromJson(schemaJson).asInstanceOf[StructType],
-        columnMappingAt(spark, dir, base), files, _, "compactSmallFiles"))
-    // a file carrying a deletion vector qualifies REGARDLESS of size:
-    // compaction is where merge-on-read deletes get materialized away
-    // (the rewrite drops the dv'd rows and the new entry is clean)
-    // sizes come from the manifest (fileBytes — no O(files) stat sweep
-    // per maintenance run; legacy entries fall back to getFileStatus)
-    val small = scoped.filter(f => f.dv.nonEmpty ||
-      fileBytes(fs, basePath, f) < minFileMB * 1024L * 1024L)
-    if (small.length < minSmallFiles && !small.exists(_.dv.nonEmpty)) return None
-    val totalBytes = small.map(fileBytes(fs, basePath, _)).sum
-    val nOut = math.max(1,
-      math.ceil(totalBytes.toDouble / (targetFileMB * 1024L * 1024L)).toInt)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val body = readWithDv(spark, dir, schema, small,
-      columnMappingAt(spark, dir, base))
+    // enough to skip, so only fresh fragments rewrite next time.
     // DECLARED CLUSTERING SURVIVES MAINTENANCE: with clusterCols the
     // rewritten tail comes out range-clustered (tight per-file min/max
     // on those columns) instead of arrival-ordered — the ingest tail is
     // exactly the data whose stats would otherwise span the whole
     // domain, so scheduled compaction is where the table's declared
-    // layout re-establishes itself (the liquid-clustering cadence)
-    val rewritten = {
-      import org.apache.spark.sql.functions.col
-      if (clusterCols.isEmpty) body.coalesce(nOut)
-      else body.repartitionByRange(nOut, clusterCols.map(col): _*)
-        .sortWithinPartitions(clusterCols.map(col): _*)
-    }
-    // stats are the UNION of declared stats and cluster columns: a table
+    // layout re-establishes itself (the liquid-clustering cadence).
+    // Stats are the UNION of declared stats and cluster columns: a table
     // declaring both graft.stats.cols and graft.cluster.cols must keep
-    // tight per-file min/max on the CLUSTERED columns too — that range
-    // pruning is what declared clustering exists to provide, and
-    // harvesting only statsCols would silently strip it on every
-    // maintenance pass
-    Some(commit(spark, dir, rewritten, "compact",
-      (statsCols ++ clusterCols ++ boundCols).distinct,
-      expectedParent = Some(base), txn = None,
-      explicitRemoves = Some(small),
-      schemaOverride = Some(schemaJson)))
+    // tight per-file min/max on the CLUSTERED columns too — harvesting
+    // only statsCols would silently strip that on every maintenance pass
+    rewriteFiles(spark, dir, "compactSmallFiles", "compact", targetFileMB,
+        statsCols ++ clusterCols, where, select = { (scoped, bytes) =>
+      // a file carrying a deletion vector qualifies REGARDLESS of size:
+      // compaction is where merge-on-read deletes get materialized away
+      // (the rewrite drops the dv'd rows and the new entry is clean)
+      val small = scoped.filter(f =>
+        f.dv.nonEmpty || bytes(f) < minFileMB * 1024L * 1024L)
+      if (small.length < minSmallFiles && !small.exists(_.dv.nonEmpty)) Nil
+      else small
+    })(clusterLayout(clusterCols)).toOption
   }
 
   /** `OPTIMIZE … ZORDER BY` as a transaction: [[compactTable]]'s commit
@@ -2998,34 +2941,16 @@ object TableLog {
                        where: Option[org.apache.spark.sql.Column] = None): Long = {
     require(targetFileMB > 0,
       s"TableLog.optimizeZOrdered: targetFileMB must be positive, got $targetFileMB")
-    val base = currentVersion(spark, dir)
-    require(base > 0L, s"TableLog.optimizeZOrdered: $dir has no committed versions")
-    val basePath = new Path(dir)
-    val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (schemaJson, files) = snapshotAt(spark, fs, basePath, base)
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val cm = columnMappingAt(spark, dir, base)
-    val (cand, boundCols) = where.fold((files, Seq.empty[String]))(
-      scopeByPredicate(spark, schema, cm, files, _, "optimizeZOrdered"))
-    if (cand.isEmpty) return base // nothing in scope: no empty commit
-    val totalBytes = cand.map(fileBytes(fs, basePath, _)).sum
-    val nOut =
-      if (targetFiles > 0) targetFiles
-      else math.max(1,
-        math.ceil(totalBytes.toDouble / (targetFileMB * 1024L * 1024L)).toInt)
-    val laid = DataSink.zOrderLayout(readWithDv(spark, dir, schema, cand, cm),
-      zCols, bitsPerCol, curve, nOut)
     // rows-preserving layout maintenance commits as `compact` (see
-    // compactTable) — a streaming consumer must not die on OPTIMIZE
-    // union, not either-or: explicit statsCols must never DROP the
+    // [[rewriteFiles]]) — a streaming consumer must not die on OPTIMIZE.
+    // Stats union, not either-or: explicit statsCols must never DROP the
     // zCols' stats — each new file is a curve hyper-rectangle and the
-    // z-columns' min/max are the whole point of the layout; the
-    // scoping columns join them so the next scoped pass (and the hot
-    // band's read pruning) keeps its box
-    commit(spark, dir, laid, "compact",
-      (statsCols ++ zCols ++ boundCols).distinct,
-      expectedParent = Some(base), txn = None, explicitRemoves = Some(cand),
-      schemaOverride = Some(schemaJson))
+    // z-columns' min/max are the whole point of the layout
+    rewriteFiles(spark, dir, "optimizeZOrdered", "compact", targetFileMB,
+        statsCols ++ zCols, where) { (df, nOut) =>
+      DataSink.zOrderLayout(df, zCols, bitsPerCol, curve,
+        if (targetFiles > 0) targetFiles else nOut)
+    }.merge
   }
 
   /** Live-entry count at or above which [[checkpoint]] writes the
@@ -3098,15 +3023,12 @@ object TableLog {
     */
   def checkpoint(spark: SparkSession, dir: String,
                  multipartMinEntries: Int = MultipartCheckpointThreshold): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new Path(dir)
-    val fs = base.getFileSystem(conf)
-    val latest = currentVersion(spark, dir)
-    require(latest > 0L, s"TableLog.checkpoint: $dir has no committed versions")
+    val s = snap(spark, dir, -1L, "checkpoint")
+    val (fs, base, latest) = (s.fs, s.base, s.version)
     val target = checkpointPath(base, latest)
     val meta = checkpointMetaPath(base, latest)
     if (fs.exists(target) || fs.exists(meta)) return latest
-    val (schemaJson, live) = snapshotAt(spark, fs, base, latest)
+    val (schemaJson, live) = (s.schemaJson, s.files)
     val (txns, ingested) = ledgerAt(fs, base, latest)
     // a checkpoint's reader features are those of a commit adding its
     // live set (the folded colmap rides the commit manifests, which
@@ -3114,7 +3036,7 @@ object TableLog {
     val header = TableLogCodec.Checkpoint(latest, schemaJson,
       readerFeaturesOf(Commit(latest, 0L, "checkpoint", schemaJson, live, Nil)),
       Some(txns), Some(ingested), Some(live))
-    val fc = FileContext.getFileContext(base.toUri, conf)
+    val fc = FileContext.getFileContext(base.toUri, spark.sparkContext.hadoopConfiguration)
     def publish(tmp: Path, dst: Path, cleanupRecursive: Boolean): Unit =
       try fc.rename(tmp, dst)
       catch {
@@ -3755,27 +3677,37 @@ object TableLog {
     * parses (the log is tiny; data files are never touched).
     */
   def versionAtTimestamp(spark: SparkSession, dir: String, tsMillis: Long): Long = {
+    val (vers, i, ts) = searchCommitTs(spark, dir, "versionAtTimestamp")(_ > tsMillis)
+    require(i > 0,
+      s"TableLog.versionAtTimestamp: $tsMillis is before the table's first " +
+        s"commit (${ts(vers.head)}) — no version existed at that instant")
+    vers(i - 1)
+  }
+
+  /** The one search behind the timestamp resolutions: `dir`'s committed
+    * versions from ONE listing, the index of the first whose commit
+    * instant satisfies `p` (`vers.length` when none does), and the
+    * instant reader. Instants are monotone along the chain, so `p`
+    * (a `>` or `>=` bound) flips once and a BINARY SEARCH finds it —
+    * O(log history) manifest parses; a streaming table accumulates
+    * 10^5+ commits, and a serial scan from version 1 pays O(history)
+    * parses per resolution. Manifests are never deleted (vacuum
+    * retires data files only), so every probe is readable.
+    */
+  private def searchCommitTs(spark: SparkSession, dir: String, api: String)(
+      p: Long => Boolean): (Seq[Long], Int, Long => Long) = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val vers = commitVersions(fs, base)
-    require(vers.nonEmpty, s"TableLog.versionAtTimestamp: $dir has no committed versions")
-    val firstTs = commitTs(fs, base, vers.head)
-    require(firstTs <= tsMillis,
-      s"TableLog.versionAtTimestamp: $tsMillis is before the table's first " +
-        s"commit ($firstTs) — no version existed at that instant")
-    // instants are monotone along the chain: BINARY-SEARCH the last
-    // version with ts <= target — O(log history) manifest parses. A
-    // streaming table accumulates 10^5+ commits; the previous serial
-    // scan from version 1 paid O(history) parses per resolution.
-    // Manifests are never deleted (vacuum retires data files only), so
-    // every probe in the range is readable.
+    require(vers.nonEmpty, s"TableLog.$api: $dir has no committed versions")
+    val ts = (v: Long) => commitTs(fs, base, v)
     var lo = 0
-    var hi = vers.length - 1
+    var hi = vers.length
     while (lo < hi) {
-      val mid = (lo + hi + 1) >>> 1
-      if (commitTs(fs, base, vers(mid)) <= tsMillis) lo = mid else hi = mid - 1
+      val mid = (lo + hi) >>> 1
+      if (p(ts(vers(mid)))) hi = mid else lo = mid + 1
     }
-    vers(lo)
+    (vers, lo, ts)
   }
 
   /** The EARLIEST version whose commit instant is at or after
@@ -3788,21 +3720,8 @@ object TableLog {
     */
   def firstVersionAtOrAfter(spark: SparkSession, dir: String,
                             tsMillis: Long): Option[Long] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vers = commitVersions(fs, base)
-    require(vers.nonEmpty,
-      s"TableLog.firstVersionAtOrAfter: $dir has no committed versions")
-    if (commitTs(fs, base, vers.last) < tsMillis) None
-    else {
-      var lo = 0
-      var hi = vers.length - 1
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (commitTs(fs, base, vers(mid)) >= tsMillis) hi = mid else lo = mid + 1
-      }
-      Some(vers(lo))
-    }
+    val (vers, i, _) = searchCommitTs(spark, dir, "firstVersionAtOrAfter")(_ >= tsMillis)
+    vers.lift(i)
   }
 
   /** [[firstVersionAtOrAfter]] for a streaming subscription: when no
@@ -3815,21 +3734,9 @@ object TableLog {
     */
   def firstVersionAtOrAfterElseNext(spark: SparkSession, dir: String,
                                     tsMillis: Long): Long = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vers = commitVersions(fs, base)
-    require(vers.nonEmpty,
-      s"TableLog.firstVersionAtOrAfterElseNext: $dir has no committed versions")
-    if (commitTs(fs, base, vers.last) < tsMillis) vers.last + 1L
-    else {
-      var lo = 0
-      var hi = vers.length - 1
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (commitTs(fs, base, vers(mid)) >= tsMillis) hi = mid else lo = mid + 1
-      }
-      vers(lo)
-    }
+    val (vers, i, _) =
+      searchCommitTs(spark, dir, "firstVersionAtOrAfterElseNext")(_ >= tsMillis)
+    vers.lift(i).getOrElse(vers.last + 1L)
   }
 
   /** Snapshot read at the wall-clock instant `tsMillis` — resolves via
@@ -3843,9 +3750,8 @@ object TableLog {
     * version that never existed or that [[vacuum]] has retired.
     */
   def readAt(spark: SparkSession, dir: String, version: Long = -1L): DataFrame = {
-    val (v, schemaJson, files) = resolve(spark, dir, version, "readAt")
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    readWithDv(spark, dir, schema, files, columnMappingAt(spark, dir, v))
+    val s = snap(spark, dir, version, "readAt")
+    readWithDv(spark, dir, s.schema, s.files, s.meta.colmap)
   }
 
   /** Read a set of manifest entries with their deletion vectors
@@ -4015,11 +3921,10 @@ object TableLog {
   def scanWhere(spark: SparkSession, dir: String,
                 predicate: org.apache.spark.sql.Column,
                 version: Long = -1L): PrunedScan = {
-    val (_, schemaJson, _) = resolve(spark, dir, version, "scanWhere")
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val pruned = scanPruned(spark, dir, boundsFromPredicate(probe, predicate),
-      version, nullShapes = nullShapesFromPredicate(probe, predicate))
+    val s = snap(spark, dir, version, "scanWhere")
+    val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s.schema)
+    val pruned = prunedScan(spark, s, boundsFromPredicate(probe, predicate),
+      nullShapesFromPredicate(probe, predicate))
     pruned.copy(df = pruned.df.filter(predicate))
   }
 
@@ -4033,14 +3938,17 @@ object TableLog {
   def scanPruned(spark: SparkSession, dir: String,
                  bounds: Seq[(String, Any, Any)],
                  version: Long = -1L,
-                 nullShapes: Seq[(String, Boolean)] = Nil): PrunedScan = {
-    val (v, schemaJson, files) = resolve(spark, dir, version, "scanPruned")
-    val cm = columnMappingAt(spark, dir, v)
+                 nullShapes: Seq[(String, Boolean)] = Nil): PrunedScan =
+    prunedScan(spark, snap(spark, dir, version, "scanPruned"), bounds, nullShapes)
+
+  private def prunedScan(spark: SparkSession, s: Snap,
+                         bounds: Seq[(String, Any, Any)],
+                         nullShapes: Seq[(String, Boolean)]): PrunedScan = {
+    val cm = s.meta.colmap
     val ns = physNullShapes(cm, nullShapes)
-    val kept = files.filter(f =>
+    val kept = s.files.filter(f =>
       mayOverlap(f, physBounds(cm, bounds)) && mayPassNullShapes(f, ns))
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    PrunedScan(readWithDv(spark, dir, schema, kept, cm), kept.length, files.length)
+    PrunedScan(readWithDv(spark, s.dir, s.schema, kept, cm), kept.length, s.files.length)
   }
 
   /** Below this many candidate files, per-file footer work (bloom
@@ -4127,10 +4035,10 @@ object TableLog {
                       values: Seq[Any], version: Long = -1L,
                       threshold: Int = DistributeFileOpsThreshold): PrunedScan = {
     require(values.nonEmpty, "TableLog.scanPointLookup: values must be non-empty")
-    val (v, schemaJson, files) = resolve(spark, dir, version, "scanPointLookup")
-    val cm = columnMappingAt(spark, dir, v)
+    val s = snap(spark, dir, version, "scanPointLookup")
+    val cm = s.meta.colmap
     val physCol = cm.getOrElse(column, column)
-    val statsKept = files.filter(f => f.stats.get(physCol) match {
+    val statsKept = s.files.filter(f => f.stats.get(physCol) match {
       case Some(NumStat(mn, mx)) => values.exists {
         case n: Number => n.doubleValue() >= mn && n.doubleValue() <= mx
         case _ => true
@@ -4141,13 +4049,11 @@ object TableLog {
       }
       case None => true
     })
-    val basePath = new Path(dir)
     val probeValues = values.toList // List serializes cleanly into the task closure
-    val verdicts = mapOverFooters(spark, basePath, statsKept.map(_.path), threshold)(
+    val verdicts = mapOverFooters(spark, s.base, statsKept.map(_.path), threshold)(
       (c, p) => bloomMightContain(c, p, physCol, probeValues))
     val kept = statsKept.zip(verdicts).collect { case (f, true) => f }
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    PrunedScan(readWithDv(spark, dir, schema, kept, cm), kept.length, files.length)
+    PrunedScan(readWithDv(spark, dir, s.schema, kept, cm), kept.length, s.files.length)
   }
 
   /** ERASURE AUDIT — prove a set of keys no longer exists in the live
@@ -4589,8 +4495,7 @@ object TableLog {
     * data files touched (what a SQL connector needs before planning).
     */
   def schemaAt(spark: SparkSession, dir: String, version: Long = -1L): StructType =
-    DataType.fromJson(resolve(spark, dir, version, "schemaAt")._2)
-      .asInstanceOf[StructType]
+    snap(spark, dir, version, "schemaAt").schema
 
   /** The live file entries at `version` (-1 = latest) — manifest-only,
     * no data files touched. What the SQL connector reads to report
@@ -4600,22 +4505,44 @@ object TableLog {
     */
   def liveFilesAt(spark: SparkSession, dir: String,
                   version: Long = -1L): Seq[AddFile] =
-    resolve(spark, dir, version, "liveFilesAt")._3
+    snap(spark, dir, version, "liveFilesAt").files
 
-  private def resolve(spark: SparkSession, dir: String, version: Long,
-                      who: String): (Long, String, Seq[AddFile]) = {
+  /** One committed version of one table, opened once: the filesystem,
+    * the table root and the version. Its snapshot (schema JSON + live
+    * files) folds on first use, through the snapshot cache; the parsed
+    * schema and the version's own manifest (`meta`) are read at most
+    * once, and only when a caller asks — a warm `schemaJson`/`files`
+    * reads no manifest at all. Built unchecked only where the caller
+    * has already vetted `version` (or a commit's CAS will); everything
+    * else opens through [[snap]].
+    */
+  private final class Snap(spark: SparkSession, val dir: String, val version: Long) {
+    val base = new Path(dir)
+    val fs: FileSystem = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    private lazy val state = snapshotAt(spark, fs, base, version)
+    def schemaJson: String = state._1
+    def files: Seq[AddFile] = state._2
+    lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+    lazy val meta: Commit = readCommit(fs, base, version)
+  }
+
+  /** Open `version` of `dir` (-1 = latest) from one `_log` listing,
+    * loud for an empty table, a vacuumed version and a version the log
+    * never had. `api` names the caller in the refusal.
+    */
+  private def snap(spark: SparkSession, dir: String, version: Long,
+                   api: String): Snap = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val commitVers = commitVersions(fs, base)
-    require(commitVers.nonEmpty, s"TableLog.$who: $dir has no committed versions")
+    require(commitVers.nonEmpty, s"TableLog.$api: $dir has no committed versions")
     val v = if (version == -1L) commitVers.last else version
     val wm = vacuumWatermark(fs, base)
     require(v >= wm,
-      s"TableLog.$who: version $v of $dir was vacuumed (earliest readable: $wm)")
+      s"TableLog.$api: version $v of $dir was vacuumed (earliest readable: $wm)")
     require(commitVers.contains(v),
-      s"TableLog.$who: version $v of $dir does not exist (latest: ${commitVers.last})")
-    val (schemaJson, files) = snapshotAt(spark, fs, base, v)
-    (v, schemaJson, files)
+      s"TableLog.$api: version $v of $dir does not exist (latest: ${commitVers.last})")
+    new Snap(spark, dir, v)
   }
 
   final case class MaintenanceReport(compactedCommit: Option[Long],

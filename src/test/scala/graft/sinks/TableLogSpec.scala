@@ -2043,6 +2043,36 @@ class TableLogSpec extends SparkSpec {
     } finally TableLog.readTextIntercept = savedHook
   }
 
+  test("a version opens once: manifest reads per call with a warm snapshot") {
+    val dir = tmpDir("tlog_open_reads")
+    TableLog.append(spark, dir, (1L to 10L).map(k => (k, s"p$k")).toDF("k", "s"),
+      statsCols = Seq("k"))
+    TableLog.setTableProperties(spark, dir, Map("graft.cluster.cols" -> "k"))
+    val v = TableLog.addCheckConstraint(spark, dir, "k_pos", "k > 0")
+    val head = TableLog.append(spark, dir, Seq((11L, "p11")).toDF("k", "s"))
+    TableLog.liveFilesAt(spark, dir, v)
+    TableLog.liveFilesAt(spark, dir, head)
+    val manifest = f"$v%020d.json"
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    def readsOf(call: => Any): Int = {
+      reads.set(0)
+      call
+      reads.get
+    }
+    val savedHook = TableLog.readTextIntercept
+    try {
+      TableLog.readTextIntercept = p => if (p.getName == manifest) reads.incrementAndGet()
+      assert(readsOf(TableLog.schemaAt(spark, dir, v)) == 0)
+      assert(readsOf(TableLog.liveFilesAt(spark, dir, v)) == 0)
+      assert(readsOf(TableLog.readAt(spark, dir, v)) == 1)
+      val clone = tmpDir("tlog_open_reads_clone")
+      assert(readsOf(TableLog.cloneShallow(spark, dir, clone, v)) == 1)
+      assert(readsOf(TableLog.restore(spark, dir, v)) == 1)
+    } finally TableLog.readTextIntercept = savedHook
+    assert(TableLog.readAt(spark, dir).count() == 10L)
+    assert(TableLog.constraintsAt(spark, dir) == Map("k_pos" -> "k > 0"))
+  }
+
   test("concurrent full-sync merge vs append: never a silent torn state") {
     val dir = tmpDir("tlog_sync_race")
     TableLog.append(spark, dir, (1L to 50L).map(k => (k, 0.0)).toDF("k", "v"),
