@@ -221,6 +221,36 @@ class TableLogSpec extends SparkSpec {
       expectedParent = Some(stale2), txn = Some("appY" -> 5L)) == 3L)
   }
 
+  test("a stale append rebases onto the head: parent, carried metadata and ts come from the head") {
+    val dir = tmpDir("tlog_rebase_carry")
+    assert(TableLog.append(spark, dir, Seq((1L, "a")).toDF("k", "s")) == 1L)
+    assert(TableLog.setTableProperties(spark, dir, Map("owner" -> "ops")) == 2L)
+    val savedClock = TableLog.clockMs
+    // a clock behind v2's instant: only the per-attempt clamp against
+    // the head the rebase lands on can order v3 after v2
+    val v3 =
+      try {
+        TableLog.clockMs = () => 1000L
+        TableLog.append(spark, dir, Seq((2L, "b")).toDF("k", "s"),
+          expectedParent = Some(1L))
+      } finally TableLog.clockMs = savedClock
+    assert(v3 == 3L)
+    val h = TableLog.history(spark, dir)
+    val (c2, c3) = (h(1), h(2))
+    assert(c3.parent == 2L && c3.op == "append")
+    assert(c3.properties == c2.properties && c3.properties == Map("owner" -> "ops"))
+    assert(c3.constraints == c2.constraints)
+    assert(c3.ts > c2.ts)
+    assert(TableLog.readAt(spark, dir).count() == 2L)
+    // an evolving append derived its schema from the stale base: loud, not rebased
+    intercept[TableLogConflictException] {
+      TableLog.append(spark, dir, Seq((3L, "c", 1.0)).toDF("k", "s", "x"),
+        expectedParent = Some(1L), mergeSchema = true)
+    }
+    assert(TableLog.currentVersion(spark, dir) == 3L)
+    assert(TableLog.schemaAt(spark, dir).fieldNames.toSeq == Seq("k", "s"))
+  }
+
   test("TIMESTAMP AS OF: injected clock pins resolution; backwards clock clamps; pre-history refuses") {
     val dir = tmpDir("tlog_ts")
     val saved = TableLog.clockMs
