@@ -4,25 +4,30 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the driver's DuckDB compare. Query names
+  * after the two directories narrow the dump to those queries and their
+  * oracle SQL (the dev loop):
+  * `sbt "runMain graft.Verify <sfDir> <outDir> [query…]"`.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir) = args.take(2)
+    val names = args.drop(2).toSet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"Verify: no such queries: ${unknown.mkString(", ")}")
+    def wanted(name: String): Boolean = names.isEmpty || names(name)
     val spark = GraftSession.local()
     // start from an EMPTY out dir: a reused dir would keep a previous
     // run's parquet for any query that now fails (or was renamed), and
     // the compare step would grade the stale result as a green MATCH
-    val outFile = new java.io.File(outDir)
-    if (outFile.exists()) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(outFile)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
+    val outFile = new java.io.File(outDir)
+    if (outFile.exists()) rm(outFile)
     outFile.mkdirs()
     var failures = List.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -30,9 +35,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // never leave a partial dir behind for the compare to misread
         val d = new java.io.File(s"$outDir/$name")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
         if (d.exists()) rm(d)
       }
     }
@@ -48,7 +50,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -207,13 +207,11 @@ object TableLog {
              txn: Option[(String, Long)] = None,
              mergeSchema: Boolean = false,
              writeOptions: Map[String, String] = Map.empty): Long = {
-    val base = expectedParent.getOrElse(currentVersion(spark, dir))
-    if (!mergeSchema || base == 0L)
-      commit(spark, dir, df, "append", statsCols, expectedParent, txn,
-        writeOptions = writeOptions)
+    val p = openHead(spark, dir, expectedParent)
+    val t = Txn(p, "append", p.tableMeta, marker = txn)
+    if (!mergeSchema || p.version == 0L) commit(spark, t, df, statsCols, writeOptions)
     else {
-      // unchecked open: the commit's CAS is what vets `base`
-      val parsed = new Snap(spark, dir, base).schema
+      val parsed = p.schema
       val dfFields = df.schema.fields.map(f => f.name -> f).toMap
       val missing = parsed.fields.map(_.name).filterNot(dfFields.contains)
       require(missing.isEmpty,
@@ -230,9 +228,9 @@ object TableLog {
         newFields.map(_.copy(nullable = true)))
       val ordered = df.select(evolved.fieldNames.toSeq
         .map(org.apache.spark.sql.functions.col): _*)
-      commit(spark, dir, ordered, "append", statsCols,
-        expectedParent = Some(base), txn = txn,
-        schemaOverride = Some(evolved.json), writeOptions = writeOptions)
+      // the evolved schema was derived from the base read: never rebased
+      commit(spark, t.copy(meta = t.meta.copy(schema = evolved), rebase = false),
+        ordered, statsCols, writeOptions)
     }
   }
 
@@ -245,8 +243,15 @@ object TableLog {
                 expectedParent: Option[Long] = None,
                 txn: Option[(String, Long)] = None,
                 writeOptions: Map[String, String] = Map.empty): Long =
-    commit(spark, dir, df, "overwrite", statsCols, expectedParent, txn,
-      writeOptions = writeOptions)
+    overwriteOn(spark, openHead(spark, dir, expectedParent), df, statsCols, txn,
+      writeOptions)
+
+  /** [[overwrite]] on the parent `p` an op has already opened. */
+  private def overwriteOn(spark: SparkSession, p: Snap, df: DataFrame,
+                          statsCols: Seq[String], txn: Option[(String, Long)],
+                          writeOptions: Map[String, String] = Map.empty): Long =
+    commit(spark, Txn(p, "overwrite", p.tableMeta, removes = p.files, marker = txn),
+      df, statsCols, writeOptions)
 
   /** Parquet writer options that embed a BLOOM FILTER per file for each
     * of `cols` — footer-adjacent metadata, read back by
@@ -270,11 +275,11 @@ object TableLog {
                  keys: Seq[String], versionCol: String,
                  statsCols: Seq[String] = Nil,
                  txn: Option[(String, Long)] = None): Long = {
-    val base = currentVersion(spark, dir)
+    val p = openHead(spark, dir)
     val merged =
-      if (base == 0L) batch
-      else DataSink.upsert(readAt(spark, dir, base), batch, keys, versionCol)
-    overwrite(spark, dir, merged, statsCols, expectedParent = Some(base), txn = txn)
+      if (p.version == 0L) batch
+      else DataSink.upsert(p.df, batch, keys, versionCol)
+    overwriteOn(spark, p, merged, statsCols, txn)
   }
 
   /** Idempotent [[upsertInto]] for streaming `foreachBatch` replay: if
@@ -305,14 +310,12 @@ object TableLog {
     */
   def mergeOnce(spark: SparkSession, dir: String, batch: DataFrame,
                 appId: String, batchId: Long, statsCols: Seq[String] = Nil)
-               (merge: (Option[DataFrame], DataFrame) => DataFrame): Option[Long] =
-    if (lastCommittedBatch(spark, dir, appId).exists(_ >= batchId)) None
-    else {
-      val base = currentVersion(spark, dir)
-      val cur = if (base == 0L) None else Some(readAt(spark, dir, base))
-      Some(overwrite(spark, dir, merge(cur, batch), statsCols,
-        expectedParent = Some(base), txn = Some(appId -> batchId)))
-    }
+               (merge: (Option[DataFrame], DataFrame) => DataFrame): Option[Long] = {
+    val p = openHead(spark, dir)
+    if (ledgerAt(p)._1.get(appId).exists(_ >= batchId)) None
+    else Some(overwriteOn(spark, p, merge(Option.when(p.version > 0L)(p.df), batch),
+      statsCols, Some(appId -> batchId)))
+  }
 
   /** Highest `batchId` the log has committed for `appId`, if any — the
     * latest version's folded txn markers ([[ledgerAt]]).
@@ -325,12 +328,8 @@ object TableLog {
     * newest-marker shortcut a reset app would silently re-apply batches
     * the max-fold skips.
     */
-  def lastCommittedBatch(spark: SparkSession, dir: String, appId: String): Option[Long] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    commitVersions(fs, base).lastOption
-      .flatMap(v => ledgerAt(fs, base, v)._1.get(appId))
-  }
+  def lastCommittedBatch(spark: SparkSession, dir: String, appId: String): Option[Long] =
+    ledgerAt(openHead(spark, dir))._1.get(appId)
 
   // --------------------------------------------------- row-level ops (CoW)
 
@@ -364,8 +363,8 @@ object TableLog {
     if (mode == "dv")
       deleteWhereDv(spark, dir, predicate, pruneBounds, maxDvRows, txn)
     else
-      rewriteTouched(spark, dir, "delete", pruneBounds, statsCols,
-          txn = txn, autoBoundsFrom = Some(predicate)) { touched =>
+      rewriteTouched(spark, snap(spark, dir, -1L, "delete"), "delete", pruneBounds,
+          statsCols, txn = txn, autoBoundsFrom = Some(predicate)) { touched =>
         touched.filter(not(fnCoalesce(predicate, lit(false))))
       }
   }
@@ -400,11 +399,11 @@ object TableLog {
     import org.apache.spark.sql.functions.{broadcast, coalesce => fnCoalesce, col, lit}
     import scala.jdk.CollectionConverters._
     val s = snap(spark, dir, -1L, "deleteWhere(dv)")
-    val (base, schemaJson, schema, cm) = (s.version, s.schemaJson, s.schema, s.meta.colmap)
+    val (schema, cm) = (s.schema, s.meta.colmap)
+    val t = Txn(s, "delete", s.tableMeta, marker = txn)
     val touched = dvTouchSet(spark, s.base, s.files, schema, predicate,
       pruneBounds, cm)
-    if (touched.isEmpty)
-      return commitManifest(spark, dir, "delete", schemaJson, Nil, Nil, base, txn)
+    if (touched.isEmpty) return publishCommit(spark, t)
     require(!schema.fieldNames.exists(n => n == "_dv_rel" || n == "_dv_pos"),
       "TableLog.deleteWhere(dv): columns named _dv_rel/_dv_pos collide with " +
         "the position scan's working columns — rename them")
@@ -441,9 +440,9 @@ object TableLog {
     val newDv = hits.map(r => (r.getString(0), r.getLong(1)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
     val changed = touched.filter(f => newDv.contains(keyOf(f.path)))
-    commitManifest(spark, dir, "delete", schemaJson,
+    publishCommit(spark, t.copy(
       adds = changed.map(f => f.copy(dv = (f.dv ++ newDv(keyOf(f.path))).sorted)),
-      removeEntries = changed, expectedParent = base, txn = txn)
+      removes = changed))
   }
 
   /** `UPDATE … SET … WHERE` as a copy-on-write transaction: the
@@ -459,8 +458,8 @@ object TableLog {
                   pruneBounds: Seq[(String, Any, Any)] = Nil,
                   statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{coalesce => fnCoalesce, col, lit, when}
-    rewriteTouched(spark, dir, "update", pruneBounds, statsCols,
-        autoBoundsFrom = Some(predicate)) { touched =>
+    rewriteTouched(spark, snap(spark, dir, -1L, "update"), "update", pruneBounds,
+        statsCols, autoBoundsFrom = Some(predicate)) { touched =>
       val fields = touched.schema.fields
       // NESTED assignments (`payload.kind` → expr) rebuild their head
       // struct through withField — one per-row struct copy, no schema
@@ -554,8 +553,8 @@ object TableLog {
       "TableLog.replaceWhere: the batch holds rows that do NOT satisfy the " +
         "replace predicate — a backfill must stay inside the window it " +
         "replaces (filter the batch, or widen the predicate)")
-    rewriteTouched(spark, dir, "replace", pruneBounds = Nil, statsCols,
-        txn = txn, autoBoundsFrom = Some(predicate),
+    rewriteTouched(spark, snap(spark, dir, -1L, "replace"), "replace",
+        pruneBounds = Nil, statsCols, txn = txn, autoBoundsFrom = Some(predicate),
         writeOptions = writeOptions) { touched =>
       touched.filter(not(fnCoalesce(predicate, lit(false))))
         .unionByName(df.select(touched.columns.map(col).toSeq: _*))
@@ -606,7 +605,21 @@ object TableLog {
                 txn: Option[(String, Long)] = None,
                 whenNotMatchedBySource: String = "none",
                 notMatchedBySourceCondition: Option[org.apache.spark.sql.Column] = None,
-                evolveSchema: Boolean = false): Long = {
+                evolveSchema: Boolean = false): Long =
+    mergeOn(spark, snap(spark, dir, -1L, "merge"), source, keys, whenMatched,
+      insertUnmatched, statsCols, txn, whenNotMatchedBySource,
+      notMatchedBySourceCondition, evolveSchema)
+
+  /** [[mergeInto]] committing on the version `open` yields — opened only
+    * after the source checks ([[mergeIntoOnce]] passes the version its
+    * marker check read).
+    */
+  private def mergeOn(spark: SparkSession, open: => Snap, source: DataFrame,
+                      keys: Seq[String], whenMatched: String,
+                      insertUnmatched: Boolean, statsCols: Seq[String],
+                      txn: Option[(String, Long)], whenNotMatchedBySource: String,
+                      notMatchedBySourceCondition: Option[org.apache.spark.sql.Column],
+                      evolveSchema: Boolean): Long = {
     require(keys.nonEmpty, "TableLog.mergeInto: keys must be non-empty")
     require(whenMatched == "update" || whenMatched == "delete",
       s"TableLog.mergeInto: whenMatched must be update|delete, got $whenMatched")
@@ -645,7 +658,7 @@ object TableLog {
             spark.sparkContext.emptyRDD[Row], committed)
           Seq(boundsFromPredicate(probe, c))
       }
-    rewriteTouched(spark, dir, "merge", bounds, statsCols,
+    rewriteTouched(spark, open, "merge", bounds, statsCols,
         schemaCheck = whenMatched == "update" || insertUnmatched,
         txn = txn, readBounds = bounds, orBounds = nmbsBounds,
         rebaseable = !fullSync,
@@ -1032,7 +1045,7 @@ object TableLog {
     * Untouched files' manifest entries (and physical files) carry over
     * untouched — that invariant IS the operator (pinned in spec).
     */
-  private def rewriteTouched(spark: SparkSession, dir: String, op: String,
+  private def rewriteTouched(spark: SparkSession, s: Snap, op: String,
                              pruneBounds: Seq[(String, Any, Any)],
                              statsCols: Seq[String],
                              schemaCheck: Boolean = true,
@@ -1044,7 +1057,6 @@ object TableLog {
                              writeOptions: Map[String, String] = Map.empty,
                              evolveWith: Option[StructType] = None)
                             (rewrite: DataFrame => DataFrame): Long = {
-    val s = snap(spark, dir, -1L, op)
     val committed = s.schema
     // SCHEMA EVOLUTION seam (merge autoMerge): `evolveWith`'s source-only
     // fields append to the committed schema; touched files read through
@@ -1065,7 +1077,6 @@ object TableLog {
           "resolution; rename it"))
       StructType(committed.fields ++ extra.map(_.copy(nullable = true)))
     }
-    val schemaJson = schema.json
     val cm = s.meta.colmap
     val bounds =
       if (pruneBounds.nonEmpty) pruneBounds
@@ -1098,16 +1109,15 @@ object TableLog {
         pOr.exists(mayOverlap(f, _)))
     // dv-aware: a touched file's already-deleted positions must not
     // resurrect through the rewrite
-    val touchedDf = readWithDv(spark, dir, schema, touched, cm)
+    val touchedDf = readWithDv(spark, s.dir, schema, touched, cm)
     val out = rewrite(touchedDf)
     if (schemaCheck)
       require(nullableForm(out.schema) == nullableForm(schema),
         s"TableLog.$op: rewrite changed the table schema " +
           s"(${out.schema.simpleString} vs ${schema.simpleString})")
-    commit(spark, dir, out, op, statsCols, expectedParent = Some(s.version),
-      txn = txn, explicitRemoves = Some(touched),
-      schemaOverride = Some(schemaJson), writeOptions = writeOptions,
-      readBounds = physBounds(cm, readBounds), rebaseable = rebaseable)
+    commit(spark, Txn(s, op, s.tableMeta.copy(schema = schema), removes = touched,
+      marker = txn, readBounds = physBounds(cm, readBounds), rebase = rebaseable),
+      out, statsCols, writeOptions)
   }
 
   /** Idempotent transactional MERGE for streaming `foreachBatch` — the
@@ -1119,14 +1129,16 @@ object TableLog {
     */
   def mergeIntoOnce(spark: SparkSession, dir: String, batch: DataFrame,
                     keys: Seq[String], appId: String, batchId: Long,
-                    statsCols: Seq[String] = Nil): Option[Long] =
-    if (lastCommittedBatch(spark, dir, appId).exists(_ >= batchId)) None
-    else if (currentVersion(spark, dir) == 0L)
-      Some(append(spark, dir, batch, statsCols,
-        expectedParent = Some(0L), txn = Some(appId -> batchId)))
+                    statsCols: Seq[String] = Nil): Option[Long] = {
+    val p = openHead(spark, dir)
+    val marker = Some(appId -> batchId)
+    if (ledgerAt(p)._1.get(appId).exists(_ >= batchId)) None
+    else if (p.version == 0L)
+      Some(commit(spark, Txn(p, "append", p.tableMeta, marker = marker), batch, statsCols))
     else
-      Some(mergeInto(spark, dir, batch, keys, statsCols = statsCols,
-        txn = Some(appId -> batchId)))
+      Some(mergeOn(spark, p, batch, keys, "update", insertUnmatched = true, statsCols,
+        marker, "none", None, evolveSchema = false))
+  }
 
   /** OPTIMIZE as a transaction: rewrite the current live files into
     * ~`targetFileMB`-sized files and publish as an overwrite commit
@@ -1207,9 +1219,8 @@ object TableLog {
     val nOut = math.max(1,
       math.ceil(cand.map(bytes).sum.toDouble / (targetFileMB * 1024L * 1024L)).toInt)
     val laid = layout(readWithDv(spark, dir, s.schema, cand, cm), nOut)
-    Right(commit(spark, dir, laid, op, (statsCols ++ boundCols).distinct,
-      expectedParent = Some(s.version), txn = None, explicitRemoves = Some(cand),
-      schemaOverride = Some(s.schemaJson)))
+    Right(commit(spark, Txn(s, op, s.tableMeta, removes = cand), laid,
+      (statsCols ++ boundCols).distinct))
   }
 
   /** Maintenance layout: a shuffle-free coalesce into `nOut` files, or
@@ -1263,10 +1274,10 @@ object TableLog {
     require(version >= wm,
       s"TableLog.restore: version $version of $dir was vacuumed " +
         s"(earliest restorable: $wm)")
-    require(commitVersions(head.fs, head.base).contains(version),
+    require(head.versions.contains(version),
       s"TableLog.restore: version $version of $dir does not exist")
     if (version == head.version) return head.version // already there: no empty commit
-    val target = new Snap(spark, dir, version) // vetted just above
+    val target = new Snap(spark, dir, version, head.versions) // vetted just above
     val (targetFiles, liveFiles) = (target.files, head.files)
     val targetByPath = targetFiles.map(f => f.path -> f).toMap
     val liveByPath = liveFiles.map(f => f.path -> f).toMap
@@ -1280,14 +1291,13 @@ object TableLog {
     // mapping and tombstones must be the target's too — restoring
     // across a rename with the head's mapping would mis-project every
     // file
-    commitManifest(spark, dir, "restore", target.schemaJson,
+    publishCommit(spark, Txn(head, "restore",
+      head.tableMeta.copy(schema = target.schema, colmap = target.meta.colmap,
+        droppedCols = target.meta.droppedCols),
       adds = targetFiles.filter(f =>
         !liveByPath.get(f.path).exists(_.dv == f.dv)),
-      removeEntries = liveFiles.filter(f =>
-        !targetByPath.get(f.path).exists(_.dv == f.dv)),
-      expectedParent = head.version, txn = None,
-      colmapOverride = Some(target.meta.colmap),
-      droppedColsOverride = Some(target.meta.droppedCols))
+      removes = liveFiles.filter(f =>
+        !targetByPath.get(f.path).exists(_.dv == f.dv))))
   }
 
   /** `CREATE TABLE … SHALLOW CLONE src [VERSION AS OF v]` — a ZERO-COPY
@@ -1312,7 +1322,8 @@ object TableLog {
     */
   def cloneShallow(spark: SparkSession, srcDir: String, dstDir: String,
                    version: Long = -1L): Long = {
-    require(currentVersion(spark, dstDir) == 0L,
+    val dst = openHead(spark, dstDir)
+    require(dst.version == 0L,
       s"TableLog.cloneShallow: $dstDir already has committed versions — " +
         "clone targets a fresh table directory")
     val src = snap(spark, srcDir, version, "cloneShallow")
@@ -1325,13 +1336,7 @@ object TableLog {
     // refuse the same garbage production refuses, its maintenance
     // knobs start from the source's, and the inherited files' physical
     // column names must keep resolving
-    val m = src.meta
-    commitManifest(spark, dstDir, "clone", src.schemaJson, adds,
-      removeEntries = Nil, expectedParent = 0L, txn = None,
-      constraintsOverride = Some(m.constraints),
-      propertiesOverride = Some(m.properties),
-      colmapOverride = Some(m.colmap),
-      droppedColsOverride = Some(m.droppedCols))
+    publishCommit(spark, Txn(dst, "clone", src.tableMeta, adds = adds))
   }
 
   /** `CONVERT TO GRAFT` — adopt an EXISTING flat parquet directory into
@@ -1382,8 +1387,8 @@ object TableLog {
         AddFile(fs.makeQualified(f.getPath).toString, rows, stats,
           bytes = f.getLen, nullCounts = nulls)
       }
-      commitManifest(spark, dir, "convert", schema.json, adds,
-        removeEntries = Nil, expectedParent = 0L, txn = None)
+      val p = new Snap(spark, dir, 0L, Nil) // no `_log` yet: the empty table
+      publishCommit(spark, Txn(p, "convert", p.tableMeta.copy(schema = schema), adds = adds))
     } else convertPartitioned(spark, dir, statsCols, subdirs)
   }
 
@@ -1418,13 +1423,8 @@ object TableLog {
     // below it: loose parquet beside partition dirs would silently
     // drop its rows from the adopted manifest — a half-adopted lake is
     // worse than none
-    val looseRoot = {
-      val base0 = new Path(dir)
-      val fs0 = base0.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs0.listStatus(base0).filter(_.isFile).map(_.getPath.getName)
-        .filter(n => n.endsWith(".parquet") && !n.startsWith("_") &&
-          !n.startsWith("."))
-    }
+    val looseRoot = fs.listStatus(base).filter(_.isFile).map(_.getPath.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
     require(looseRoot.isEmpty,
       s"TableLog.convertToGraft: $dir mixes loose parquet files " +
         s"(${looseRoot.take(3).mkString(", ")}) with partition " +
@@ -1485,8 +1485,9 @@ object TableLog {
         AddFile(fs.makeQualified(st.getPath).toString, rows, stats ++ pStats,
           bytes = st.getLen, nullCounts = nulls ++ pNulls, pcols = pcols)
     }
-    commitManifest(spark, dir, "convert", fullSchema.json, adds,
-      removeEntries = Nil, expectedParent = 0L, txn = None)
+    val p = new Snap(spark, dir, 0L, Nil) // no `_log` yet: the empty table
+    publishCommit(spark, Txn(p, "convert", p.tableMeta.copy(schema = fullSchema),
+      adds = adds))
   }
 
   private def isPartSeg(n: String): Boolean = {
@@ -1566,41 +1567,27 @@ object TableLog {
 
   // ------------------------------------------------- manifest-only DDL
 
-  /** The table metadata one committed version carries in full — the
-    * value every manifest-only DDL op reads and rewrites. `files` is the
-    * live set at `version`, read-only here (SET NOT NULL checks its null
-    * stats); DDL commits add and remove no file.
+  /** The table metadata a commit carries in full beside its file delta:
+    * what a version's [[Snap.tableMeta]] reads, what a manifest-only DDL
+    * op rewrites, and what a [[Txn]] commits.
     */
-  private final case class TableMeta(version: Long, schema: StructType,
-                                     files: Seq[AddFile],
-                                     constraints: Map[String, String],
-                                     properties: Map[String, String],
-                                     colmap: Map[String, String],
-                                     droppedCols: Seq[String])
+  private[sinks] final case class TableMeta(schema: StructType,
+                                            constraints: Map[String, String],
+                                            properties: Map[String, String],
+                                            colmap: Map[String, String],
+                                            droppedCols: Seq[String])
 
-  /** The one commit path for manifest-only DDL: resolve the latest
-    * version, read its snapshot and parse its manifest ONCE, hand that
-    * to `change` (which validates and returns the new metadata), and
-    * commit the result as a `manifestOp` commit. The full metadata is
-    * written explicitly rather than carried forward; the two agree
-    * because DDL ops never rebase ([[commitManifest]]) — the commit lands
-    * on `version` or fails loudly. `api` names the caller in the refusal
-    * for an empty table.
+  /** The one commit path for manifest-only DDL: open the latest version
+    * once, hand it and its metadata to `change` (which validates against
+    * that version and returns the new metadata), and commit the result as
+    * a `manifestOp` commit. DDL ops never rebase ([[Txn.mayRebase]]) —
+    * the commit lands on the version read or fails loudly. `api` names
+    * the caller in the refusal for an empty table.
     */
   private def alterMetadata(spark: SparkSession, dir: String, api: String,
-                            manifestOp: String)(change: TableMeta => TableMeta): Long = {
+                            manifestOp: String)(change: (Snap, TableMeta) => TableMeta): Long = {
     val s = snap(spark, dir, -1L, api)
-    val c = s.meta
-    val out = change(TableMeta(s.version, s.schema, s.files, c.constraints,
-      c.properties, c.colmap, c.droppedCols))
-    // an op that leaves the schema alone re-stores the parent's JSON as is
-    commitManifest(spark, dir, manifestOp,
-      if (out.schema == s.schema) s.schemaJson else out.schema.json,
-      adds = Nil, removeEntries = Nil, expectedParent = s.version, txn = None,
-      constraintsOverride = Some(out.constraints),
-      propertiesOverride = Some(out.properties),
-      colmapOverride = Some(out.colmap),
-      droppedColsOverride = Some(out.droppedCols))
+    publishCommit(spark, Txn(s, manifestOp, change(s, s.tableMeta)))
   }
 
   /** Resolve a column DDL target: the path segments (an exact top-level
@@ -1653,14 +1640,12 @@ object TableLog {
     */
   private def commitAt(spark: SparkSession, dir: String, version: Long,
                        api: String): Option[Commit] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    lazy val vers = commitVersions(fs, base)
-    val v = if (version == -1L) vers.lastOption.getOrElse(0L) else version
+    val h = openHead(spark, dir)
+    val v = if (version == -1L) h.version else version
     if (v <= 0L) None
     else {
-      require(vers.contains(v), s"TableLog.$api: version $v of $dir does not exist")
-      Some(readCommit(fs, base, v))
+      require(h.versions.contains(v), s"TableLog.$api: version $v of $dir does not exist")
+      Some(readCommit(h.fs, h.base, v))
     }
   }
 
@@ -1713,13 +1698,13 @@ object TableLog {
     require(name.nonEmpty && name.forall(c =>
         c.isLetterOrDigit || c == '_' || c == '-'),
       s"TableLog.addCheckConstraint: invalid constraint name '$name'")
-    alterMetadata(spark, dir, "addCheckConstraint", "constraint") { m =>
+    alterMetadata(spark, dir, "addCheckConstraint", "constraint") { (s, m) =>
       require(!m.constraints.contains(name),
         s"TableLog.addCheckConstraint: constraint '$name' already exists " +
           s"(${m.constraints(name)}) — drop it first")
       // existing data must satisfy the constraint (NULL passes) — refuse
       // loudly with a witness row, pinned to the version that was checked
-      val violations = readAt(spark, dir, m.version)
+      val violations = s.df
         .filter(not(fnCoalesce(expr(exprSql), lit(true))))
         .limit(1).collect()
       require(violations.isEmpty,
@@ -1734,7 +1719,7 @@ object TableLog {
     */
   def dropCheckConstraint(spark: SparkSession, dir: String,
                           name: String): Long =
-    alterMetadata(spark, dir, "dropCheckConstraint", "constraint") { m =>
+    alterMetadata(spark, dir, "dropCheckConstraint", "constraint") { (_, m) =>
       require(m.constraints.contains(name),
         s"TableLog.dropCheckConstraint: no constraint named '$name' " +
           s"(have: ${m.constraints.keys.toSeq.sorted.mkString(", ")})")
@@ -1845,7 +1830,8 @@ object TableLog {
         .map(h => key -> h.toString)
     }
     if (ups.isEmpty) None
-    else Some(setTableProperties(spark, dir, ups.toMap))
+    else Some(publishCommit(spark, Txn(s, "properties",
+      s.tableMeta.copy(properties = props ++ ups))))
   }
 
   /** NULL-fill every generated column from its declared expression — a
@@ -1874,7 +1860,7 @@ object TableLog {
   def setTableProperties(spark: SparkSession, dir: String,
                          props: Map[String, String]): Long = {
     require(props.nonEmpty, "TableLog.setTableProperties: empty property map")
-    alterMetadata(spark, dir, "setTableProperties", "properties")(m =>
+    alterMetadata(spark, dir, "setTableProperties", "properties")((_, m) =>
       m.copy(properties = m.properties ++ props))
   }
 
@@ -1885,7 +1871,7 @@ object TableLog {
   def unsetTableProperties(spark: SparkSession, dir: String,
                            keys: Seq[String]): Long = {
     require(keys.nonEmpty, "TableLog.unsetTableProperties: no keys given")
-    alterMetadata(spark, dir, "unsetTableProperties", "properties") { m =>
+    alterMetadata(spark, dir, "unsetTableProperties", "properties") { (_, m) =>
       val missing = keys.filterNot(m.properties.contains)
       require(missing.isEmpty,
         s"TableLog.unsetTableProperties: not set: ${missing.mkString(", ")}")
@@ -1918,7 +1904,7 @@ object TableLog {
     */
   def addColumn(spark: SparkSession, dir: String, name: String,
                 dataType: DataType, default: Option[String] = None): Long =
-    alterMetadata(spark, dir, "addColumn", "evolve") { m =>
+    alterMetadata(spark, dir, "addColumn", "evolve") { (_, m) =>
       // NESTED add (round 18, completing the nested DDL family): a dotted
       // name appends a field to its parent STRUCT (exact top-level match
       // wins, same precedence as rename/drop). Manifest-only either way:
@@ -2002,7 +1988,7 @@ object TableLog {
                    oldName: String, newName: String): Long = {
     require(oldName != newName,
       s"TableLog.renameColumn: '$oldName' to itself is a no-op")
-    alterMetadata(spark, dir, "renameColumn", "rename") { m =>
+    alterMetadata(spark, dir, "renameColumn", "rename") { (_, m) =>
       // NESTED rename (round 18): a dotted oldName addresses a struct
       // field (`payload.kind`) unless a top-level column literally
       // carries the dotted name (exact top-level match wins — dots in
@@ -2122,7 +2108,7 @@ object TableLog {
     * references the column or it is the table's last column.
     */
   def dropColumn(spark: SparkSession, dir: String, name: String): Long =
-    alterMetadata(spark, dir, "dropColumn", "drop") { m =>
+    alterMetadata(spark, dir, "dropColumn", "drop") { (_, m) =>
       // NESTED drop (round 18): a dotted name addresses a struct field
       // unless a top-level column literally carries the dotted name
       // (exact match wins, same precedence as renameColumn). The field
@@ -2255,7 +2241,7 @@ object TableLog {
     */
   def alterColumnType(spark: SparkSession, dir: String, name: String,
                       newType: DataType): Long =
-    alterMetadata(spark, dir, "alterColumnType", "widen") { m =>
+    alterMetadata(spark, dir, "alterColumnType", "widen") { (_, m) =>
       val (segs, parent) = columnPath(m.schema, name, "alterColumnType")
       val field = parent.fields.find(_.name == segs.last).getOrElse(
         throw new IllegalArgumentException(
@@ -2315,7 +2301,7 @@ object TableLog {
     */
   def setColumnDefault(spark: SparkSession, dir: String, name: String,
                        defaultSql: Option[String]): Long =
-    alterMetadata(spark, dir, "setColumnDefault", "default") { m =>
+    alterMetadata(spark, dir, "setColumnDefault", "default") { (_, m) =>
       require(m.schema.fieldNames.contains(name),
         s"TableLog.setColumnDefault: no top-level column '$name' — DEFAULT " +
           s"applies to top-level columns only (have: ${m.schema.fieldNames.mkString(", ")})")
@@ -2373,7 +2359,7 @@ object TableLog {
     */
   def setColumnComment(spark: SparkSession, dir: String, name: String,
                        comment: Option[String]): Long =
-    alterMetadata(spark, dir, "setColumnComment", "comment") { m =>
+    alterMetadata(spark, dir, "setColumnComment", "comment") { (_, m) =>
       val (segs, parent) = columnPath(m.schema, name, "setColumnComment")
       require(parent.fieldNames.contains(segs.last),
         s"TableLog.setColumnComment: no field '${segs.last}' on the path " +
@@ -2413,7 +2399,7 @@ object TableLog {
     */
   def setColumnNullability(spark: SparkSession, dir: String, name: String,
                            nullable: Boolean): Long =
-    alterMetadata(spark, dir, "setColumnNullability", "notnull") { m =>
+    alterMetadata(spark, dir, "setColumnNullability", "notnull") { (s, m) =>
       require(m.schema.fieldNames.contains(name),
         s"TableLog.setColumnNullability: no top-level column '$name' " +
           s"(have: ${m.schema.fieldNames.mkString(", ")}) — nullability DDL " +
@@ -2423,12 +2409,12 @@ object TableLog {
         require(!declared.contains(name),
           s"TableLog.setColumnNullability: '$name' is already NOT NULL")
         val p = physPath(m.colmap, name)
-        val withNulls = m.files.filter(_.nullCounts.get(p).exists(_ > 0L))
+        val withNulls = s.files.filter(_.nullCounts.get(p).exists(_ > 0L))
         require(withNulls.isEmpty,
           s"TableLog.setColumnNullability: ${withNulls.size} live file(s) " +
             s"record ${withNulls.flatMap(_.nullCounts.get(p)).sum} NULL(s) " +
             s"in '$name' — clean them (UPDATE/DELETE) before SET NOT NULL")
-        val uncovered = m.files.filterNot(_.nullCounts.contains(p))
+        val uncovered = s.files.filterNot(_.nullCounts.contains(p))
         if (uncovered.nonEmpty) {
           import org.apache.spark.sql.functions.col
           val n = readWithDv(spark, dir, m.schema, uncovered, m.colmap)
@@ -2507,10 +2493,8 @@ object TableLog {
   def snapshotAll(spark: SparkSession, rootDir: String, tsMillis: Long,
                   maxDepth: Int = 3): Map[String, DataFrame] =
     discoverTables(spark, rootDir, maxDepth).flatMap { t =>
-      val base = new Path(t)
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val vers = commitVersions(fs, base)
-      if (vers.isEmpty || commitTs(fs, base, vers.head) > tsMillis) None
+      val h = openHead(spark, t)
+      if (h.version == 0L || commitTs(h.fs, h.base, h.versions.head) > tsMillis) None
       else Some(t -> readAt(spark, t, versionAtTimestamp(spark, t, tsMillis)))
     }.toMap
 
@@ -2622,7 +2606,7 @@ object TableLog {
       files.length, sizes.sum, files.map(_.rows).sum - dvRows, dvRows,
       TableLogCodec.renderStringMap(c.constraints),
       TableLogCodec.renderStringMap(c.properties),
-      ledgerAt(fs, base, v)._2.size,
+      ledgerAt(s)._2.size,
       checkpointVersions(fs, base).filter(_ <= v).lastOption.getOrElse(0L),
       math.max(1L, vacuumWatermark(fs, base)))
     spark.createDataFrame(
@@ -2762,22 +2746,18 @@ object TableLog {
     require(listed.nonEmpty,
       s"TableLog.copyInto: no files match '$sourceGlob' — an empty ingest " +
         "is almost always a wrong glob; point at the files explicitly")
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parent = currentVersion(spark, dir)
-    val already =
-      if (parent <= 0L) Set.empty[String] else ledgerAt(fs, base, parent)._2
-    val fresh = listed.filterNot(already)
+    val p = openHead(spark, dir)
+    val fresh = listed.filterNot(ledgerAt(p)._2)
     if (fresh.isEmpty)
       return CopyIntoReport(None, 0, listed.length, 0L)
     var reader = spark.read.format(format).options(options)
-    if (parent > 0L) reader = reader.schema(schemaAt(spark, dir, parent))
+    if (p.version > 0L) reader = reader.schema(p.schema)
     val batch = reader.load(fresh: _*)
-    val v = commit(spark, dir, batch, "copyinto", statsCols,
-      expectedParent = Some(parent), txn = None, copyFiles = fresh)
+    val v = commit(spark, Txn(p, "copyinto", p.tableMeta, copyFiles = fresh),
+      batch, statsCols)
     // the row count comes from the committed manifest's footer-harvested
     // entries — never a second scan of the source
-    val rows = readCommit(fs, base, v).add.map(_.rows).sum
+    val rows = readCommit(p.fs, p.base, v).add.map(_.rows).sum
     CopyIntoReport(Some(v), fresh.length, listed.length - fresh.length, rows)
   }
 
@@ -2814,29 +2794,6 @@ object TableLog {
     }
   }
 
-  /** Manifest-only commit (no data written) — the zero-copy primitive
-    * behind [[restore]] and the dv [[deleteWhere]]. Same
-    * CAS/classification/auto-rebase discipline as the data-bearing path
-    * ([[publishCommit]]): a dv delete or a restore whose removed
-    * entries are untouched by the winner rebases over it (their adds
-    * re-point immutable files — nothing to recompute), genuinely
-    * conflicting ones stay loud.
-    */
-  private def commitManifest(spark: SparkSession, dir: String, op: String,
-                             schemaJson: String, adds: Seq[AddFile],
-                             removeEntries: Seq[AddFile], expectedParent: Long,
-                             txn: Option[(String, Long)],
-                             constraintsOverride: Option[Map[String, String]] = None,
-                             propertiesOverride: Option[Map[String, String]] = None,
-                             colmapOverride: Option[Map[String, String]] = None,
-                             droppedColsOverride: Option[Seq[String]] = None): Long =
-    publishCommit(spark, dir, op, schemaJson, adds, removeEntries,
-      expectedParent, txn,
-      rebaseEligible = op == "delete" || op == "restore" || op == "txn",
-      conflictCleanup = None, constraintsOverride = constraintsOverride,
-      propertiesOverride = propertiesOverride, colmapOverride = colmapOverride,
-      droppedColsOverride = droppedColsOverride)
-
   /** Marker-only commit: record an `(appId, batchId)` txn marker with
     * NO data change — the exactly-once primitive for a streaming sink
     * whose micro-batch produced nothing to commit (e.g. an erasure
@@ -2850,8 +2807,7 @@ object TableLog {
   def commitTxnMarker(spark: SparkSession, dir: String, appId: String,
                       batchId: Long): Long = {
     val s = snap(spark, dir, -1L, "commitTxnMarker")
-    commitManifest(spark, dir, "txn", s.schemaJson, Nil, Nil, s.version,
-      Some(appId -> batchId))
+    publishCommit(spark, Txn(s, "txn", s.tableMeta, marker = Some(appId -> batchId)))
   }
 
   /** Partial OPTIMIZE: rewrite ONLY the live files smaller than
@@ -3029,7 +2985,7 @@ object TableLog {
     val meta = checkpointMetaPath(base, latest)
     if (fs.exists(target) || fs.exists(meta)) return latest
     val (schemaJson, live) = (s.schemaJson, s.files)
-    val (txns, ingested) = ledgerAt(fs, base, latest)
+    val (txns, ingested) = ledgerAt(s)
     // a checkpoint's reader features are those of a commit adding its
     // live set (the folded colmap rides the commit manifests, which
     // never delete)
@@ -3119,65 +3075,65 @@ object TableLog {
   }
 
   /** The txn markers (`appId` → highest `batchId`) and the cumulative
-    * [[copyInto]] ingest ledger at `version`, in one fold: seeded from
-    * the nearest checkpoint's `txns` and `copyfiles`, then folded over
-    * only the commits after it, so resolution stays O(commits since
-    * checkpoint) across years of ingest. A legacy checkpoint without
-    * either field folds the whole log once — and the NEXT checkpoint
-    * written repairs the format.
+    * [[copyInto]] ingest ledger at `s`'s version, in one fold over the
+    * listing `s` was opened from: seeded from the nearest checkpoint's
+    * `txns` and `copyfiles`, then folded over only the commits after it,
+    * so resolution stays O(commits since checkpoint) across years of
+    * ingest. A legacy checkpoint without either field folds the whole
+    * log once — and the NEXT checkpoint written repairs the format.
     */
-  private def ledgerAt(fs: FileSystem, base: Path,
-                       version: Long): (Map[String, Long], Set[String]) = {
+  private def ledgerAt(s: Snap): (Map[String, Long], Set[String]) = {
+    val (fs, base, version) = (s.fs, s.base, s.version)
     val seed = checkpointVersions(fs, base).filter(_ <= version).lastOption
       .flatMap { cv =>
         val ck = readCheckpoint(fs, base, cv)
         for (t <- ck.txns; cf <- ck.copyFiles) yield (cv, (t, cf))
       }
     val (from, init) = seed.getOrElse((0L, (Map.empty[String, Long], Set.empty[String])))
-    commitVersions(fs, base).filter(v => v > from && v <= version)
-      .foldLeft(init) { case ((m, s), v) =>
-        val c = readCommit(fs, base, v)
+    // the version's own manifest through `s`: the write that opened it reads it once
+    (s.versions.filter(v => v > from && v < version).map(readCommit(fs, base, _)) ++
+      Option.when(version > from)(s.meta))
+      .foldLeft(init) { case ((m, ing), c) =>
         (c.txn.fold(m) { case (a, b) => m + (a -> math.max(b, m.getOrElse(a, Long.MinValue))) },
-          s ++ c.copyFiles)
+          ing ++ c.copyFiles)
       }
   }
 
-  private def commit(spark: SparkSession, dir: String, df: DataFrame, op: String,
-                     statsCols: Seq[String], expectedParent: Option[Long],
-                     txn: Option[(String, Long)],
-                     explicitRemoves: Option[Seq[AddFile]] = None,
-                     schemaOverride: Option[String] = None,
-                     writeOptions: Map[String, String] = Map.empty,
-                     readBounds: Seq[(String, Any, Any)] = Nil,
-                     copyFiles: Seq[String] = Nil,
-                     rebaseable: Boolean = true): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new Path(dir)
-    val fs = base.getFileSystem(conf)
+  /** Write `df` as the data files of `t` and publish `t` with them as
+    * its adds. Everything the write needs of the parent — its schema,
+    * constraints, column mapping, declared layout and identity marks —
+    * comes from `t`: no `_log` listing, no second manifest read.
+    */
+  private def commit(spark: SparkSession, t: Txn, df: DataFrame,
+                     statsCols: Seq[String],
+                     writeOptions: Map[String, String] = Map.empty): Long = {
+    val (p, op, m) = (t.parent, t.op, t.meta)
+    val (dir, fs, base) = (p.dir, p.fs, p.base)
     fs.mkdirs(new Path(base, "_log"))
-    val commitVers = commitVersions(fs, base)
-    val parent = expectedParent.getOrElse(commitVers.lastOption.getOrElse(0L))
-    require(parent == 0L || commitVers.contains(parent),
-      s"TableLog: expectedParent $parent does not exist")
-    if ((op == "append" || op == "copyinto") && schemaOverride.isEmpty && parent > 0L) {
-      val (pSchema, _) = snapshotAt(spark, fs, base, parent)
-      // nullability-insensitive: a parquet round-trip (readAt → compact)
-      // widens nullable flags, and a maintenance rewrite must not lock
-      // appends out — names and types are the contract
-      val parsed = DataType.fromJson(pSchema).asInstanceOf[StructType]
-      require(nullableForm(df.schema) == nullableForm(parsed),
-        s"TableLog.$op: schema mismatch vs version $parent " +
-          s"(${df.schema.simpleString} vs ${parsed.simpleString}) — " +
-          s"$op requires the current column names/types; use overwrite to change them")
-    }
+    // schema continuity (round 18): unless the op set a schema, the batch
+    // defines it — and when the batch's names+types equal the parent's,
+    // the PARENT's schema is re-stored verbatim: a batch analyzed through
+    // projections arrives with field METADATA stripped (identity/default/
+    // comment annotations), and writing the batch's schema would silently
+    // erase them from the table (found by: the second INSERT into an
+    // identity table lost the identity info the analyzer pads missing
+    // columns from). Nullability-insensitive: a parquet round-trip
+    // (readAt → compact) widens nullable flags, and a maintenance rewrite
+    // must not lock appends out — names and types are the contract. A
+    // genuine schema change (overwrite) stores the new shape.
+    val schema =
+      if (m.schema != p.schema || nullableForm(df.schema) == nullableForm(p.schema)) m.schema
+      else {
+        require(p.version == 0L || (op != "append" && op != "copyinto"),
+          s"TableLog.$op: schema mismatch vs version ${p.version} " +
+            s"(${df.schema.simpleString} vs ${p.schema.simpleString}) — " +
+            s"$op requires the current column names/types; use overwrite to change them")
+        df.schema
+      }
     // data files land under a per-attempt subdir: uncommitted attempts
     // never collide and vacuum can sweep whole orphan directories
     val attempt = java.util.UUID.randomUUID().toString.replace("-", "")
     val dataSub = s"data/$attempt"
-    val parentC =
-      if (parent <= 0L) None
-      else Some(readCommit(fs, base, parent))
-    val cks = parentC.fold(Map.empty[String, String])(_.constraints)
     // COLUMN MAPPING: the batch arrives in the LOGICAL domain
     // (constraints evaluate there), the files are written in the
     // PHYSICAL one. Entries for columns the new schema dropped fall
@@ -3185,11 +3141,9 @@ object TableLog {
     // column tombstones reset with it
     val logicalNames = df.schema.fieldNames.toSeq
     // a DOTTED entry (nested rename) qualifies through its head segment
-    val cm = parentC.fold(Map.empty[String, String])(_.colmap)
+    val cm = m.colmap
       .filter { case (l, _) => logicalNames.contains(l.split('.').head) }
-    val dropped =
-      if (op == "overwrite") Seq.empty[String]
-      else parentC.fold(Seq.empty[String])(_.droppedCols)
+    val dropped = if (op == "overwrite") Seq.empty[String] else m.droppedCols
     def phys(c: String): String = physPath(cm, c)
     // the full physical shape (nested renames included) — what the
     // files are written as and what the parquet footer paths carry
@@ -3215,7 +3169,7 @@ object TableLog {
     // constraint (Delta's generated-column rule, public spec). The
     // consequence, also Delta's: an arbitrary NULL cannot be stored in
     // a generated column unless its expression yields NULL.
-    val parentProps = parentC.fold(Map.empty[String, String])(_.properties)
+    val parentProps = m.properties
     val genFilled = generatedFill(df, parentProps)
     // IDENTITY COLUMNS (round 18): NULLs in a declared identity column
     // are assigned `next + step × monotonically_increasing_id()` —
@@ -3257,7 +3211,7 @@ object TableLog {
           .otherwise(fill)
       d.withColumn(s0.col, out)
     }
-    val checked0 = enforceConstraints(idFilled, cks)
+    val checked0 = enforceConstraints(idFilled, m.constraints)
     // NOT NULL columns (round 19): the DECLARED `graft.notnull.cols`
     // (never the schema's nullable flags — those are encoder
     // artifacts, see notNullColsOf) enforce on EVERY write through the
@@ -3343,32 +3297,10 @@ object TableLog {
       .map { case (rp, (rows, stats, nulls), len) =>
         AddFile(rp, rows, stats, bytes = len, nullCounts = nulls)
       }
-    // removes carry their entries (not just paths) so the manifest can
-    // record each removed file's deletion vector — the change feed's
-    // removed side must read MINUS that old dv or it re-emits rows an
-    // earlier commit already deleted
-    val removeEntries: Seq[AddFile] = explicitRemoves.getOrElse {
-      if (op == "overwrite" && parent > 0L)
-        snapshotAt(spark, fs, base, parent)._2
-      else Nil
-    }
-    // COMMUTATIVE AUTO-RETRY eligibility — the Delta conflict rule: a
-    // commit commutes with a winner when its REMOVE SET is untouched by
-    // the winner (my removes ∩ winner's adds/removes = ∅, checked as
-    // "every file I remove is still live at the new head, same dv") and
-    // the schema I committed under still holds. A plain append (empty
-    // removes) commutes with everything but a schema change; CoW
-    // delete/update/merge and compaction commute with appends and with
-    // CoW commits on DISJOINT touch sets — concurrent maintenance must
-    // not lose its race to an append. OVERWRITE is never rebased (its
-    // remove set IS "everything the parent held" — rebasing would
-    // silently drop the winner's rows: the lost-update this CAS
-    // exists to prevent), and evolution appends stay loud (their
-    // schema was derived from the base they read).
     // identity high-water marks advance from THIS commit's harvested
     // footer max — monotone (an explicit BY-DEFAULT value above the
     // mark raises it, so later fills can never collide under it)
-    val idPropsOverride: Option[Map[String, String]] =
+    val idProps: Option[Map[String, String]] =
       if (idSpecs.isEmpty) None
       else {
         val ups = idSpecs.flatMap { s0 =>
@@ -3386,104 +3318,107 @@ object TableLog {
     // minted against the parent's high-water mark, and rebasing over a
     // winner that also assigned would duplicate them — losing the race
     // loudly is the correct (and Delta's) behavior
-    val autoRetryEligible = rebaseable && idPropsOverride.isEmpty &&
-      Set("append", "delete", "update", "merge", "compact", "purge")(op) &&
-        (op != "append" || schemaOverride.isEmpty)
-    // schema continuity (round 18): when the batch's names+types equal
-    // the parent's, re-store the PARENT's schema JSON verbatim — a
-    // batch analyzed through projections arrives with field METADATA
-    // stripped (identity/default/comment annotations), and writing the
-    // batch's schema would silently erase them from the table (found
-    // by: the second INSERT into an identity table lost the identity
-    // info the analyzer pads missing columns from). A genuine schema
-    // change (overwrite/evolution) still stores the new shape.
-    val schemaJsonOut = schemaOverride.getOrElse {
-      parentC.map(_.schemaJson).filter { pj =>
-        try nullableForm(DataType.fromJson(pj).asInstanceOf[StructType]) ==
-          nullableForm(df.schema)
-        catch { case scala.util.control.NonFatal(_) => false }
-      }.getOrElse(df.schema.json)
-    }
-    publishCommit(spark, dir, op, schemaJsonOut,
-      adds, removeEntries, parent, txn, autoRetryEligible,
-      conflictCleanup = Some(new Path(base, dataSub)), readBounds = readBounds,
-      copyFiles = copyFiles, colmapOverride = Some(cm),
-      propertiesOverride = idPropsOverride,
-      droppedColsOverride = Some(dropped))
+    publishCommit(spark, t.copy(
+        meta = m.copy(schema = schema, properties = idProps.getOrElse(parentProps),
+          colmap = cm, droppedCols = dropped),
+        adds = adds, rebase = t.rebase && idProps.isEmpty),
+      cleanup = Some(new Path(base, dataSub)))
+  }
+
+  /** One write transaction, after Delta's `OptimisticTransaction`: the
+    * version it read and commits on (`parent`; the empty table at version
+    * 0), the metadata it commits in full, its file delta, its txn
+    * `marker`, the merge key box `readBounds` a winner's adds are checked
+    * against ([[rebaseOk]]), the [[copyInto]] ledger entries, and whether
+    * a lost race may rebase. A write op opens its parent once, reads
+    * through that [[Snap]], builds the transaction and publishes it
+    * ([[publishCommit]], via [[commit]] when it writes data files).
+    */
+  private final case class Txn(parent: Snap, op: String, meta: TableMeta,
+                               adds: Seq[AddFile] = Nil, removes: Seq[AddFile] = Nil,
+                               marker: Option[(String, Long)] = None,
+                               readBounds: Seq[(String, Any, Any)] = Nil,
+                               copyFiles: Seq[String] = Nil,
+                               rebase: Boolean = true) {
+    /** COMMUTATIVE AUTO-RETRY eligibility — the Delta conflict rule: a
+      * commit commutes with a winner when its REMOVE SET is untouched by
+      * the winner (my removes ∩ winner's adds/removes = ∅, checked as
+      * "every file I remove is still live at the new head, same dv") and
+      * the schema I committed under still holds ([[rebaseOk]]). A plain
+      * append (empty removes) commutes with everything but a schema
+      * change; CoW delete/update/merge and compaction commute with
+      * appends and with CoW commits on DISJOINT touch sets — concurrent
+      * maintenance must not lose its race to an append; a dv delete or a
+      * restore re-points immutable files, and a txn marker moves none.
+      * OVERWRITE is never rebased (its remove set IS "everything the
+      * parent held" — rebasing would silently drop the winner's rows: the
+      * lost-update this CAS exists to prevent), nor are replace, COPY
+      * INTO, clone, convert and the DDL ops. `rebase = false` marks the
+      * data commits that must stay loud whatever their op: evolution
+      * appends (their schema was derived from the base they read),
+      * full-sync merges and identity-assigning commits ([[commit]]).
+      */
+    def mayRebase: Boolean =
+      rebase && Set("append", "delete", "update", "merge", "compact", "purge",
+        "restore", "txn")(op)
   }
 
   /** The shared COMMIT POINT for data-bearing and manifest-only commits:
-    * write the manifest to a dot-temp, rename WITHOUT overwrite (atomic
+    * write `t`'s manifest to a dot-temp, rename WITHOUT overwrite (atomic
     * on HDFS/posix — the target name is the CAS), classify failures by
-    * target content, and — when `rebaseEligible` and [[rebaseOk]] —
+    * target content, and — when [[Txn.mayRebase]] and [[rebaseOk]] —
     * re-point at the new head and retry (bounded), reusing the already-
-    * written data files verbatim. A terminal lost race deletes
-    * `conflictCleanup` (the attempt's data dir, when there is one) and
-    * throws the loud conflict.
+    * written data files verbatim. The first attempt commits on
+    * `t.parent` as opened; a metadata field `t` left as its parent had it
+    * follows the head each attempt lands on (a constraint-CHANGING
+    * winner is blocked in rebaseOk; a property change commutes, and the
+    * carry picks the head's values exactly). A terminal lost race deletes
+    * `cleanup` (the attempt's data dir, when there is one) and throws the
+    * loud conflict.
     */
-  private def publishCommit(spark: SparkSession, dir: String, op: String,
-                            schemaJson: String, adds: Seq[AddFile],
-                            removeEntries: Seq[AddFile], expectedParent: Long,
-                            txn: Option[(String, Long)],
-                            rebaseEligible: Boolean,
-                            conflictCleanup: Option[Path],
-                            readBounds: Seq[(String, Any, Any)] = Nil,
-                            constraintsOverride: Option[Map[String, String]] = None,
-                            copyFiles: Seq[String] = Nil,
-                            propertiesOverride: Option[Map[String, String]] = None,
-                            colmapOverride: Option[Map[String, String]] = None,
-                            droppedColsOverride: Option[Seq[String]] = None): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new Path(dir)
-    val fs = base.getFileSystem(conf)
-    val removes = removeEntries.map(_.path)
-    val removeDv = removeEntries.filter(_.dv.nonEmpty)
+  private def publishCommit(spark: SparkSession, t: Txn,
+                            cleanup: Option[Path] = None): Long = {
+    val p = t.parent
+    val (dir, fs, base) = (p.dir, p.fs, p.base)
+    // an op that leaves the schema alone re-stores the parent's JSON as is
+    val schemaJson = if (t.meta.schema == p.schema) p.schemaJson else t.meta.schema.json
+    val removes = t.removes.map(_.path)
+    val removeDv = t.removes.filter(_.dv.nonEmpty)
       .map(e => e.path -> e.dv).toMap
+    def carried[A](field: Commit => A, mine: A, head: Commit): A =
+      if (mine == field(p.meta)) field(head) else mine
     val attemptId = java.util.UUID.randomUUID().toString.replace("-", "")
     val maxAttempts = 20
-    var parentNow = expectedParent
+    var head = p
     var attemptNo = 0
     var committed = -1L
     while (committed < 0L) {
       attemptNo += 1
-      val version = parentNow + 1
+      val version = head.version + 1
       val target = commitPath(base, version)
       val tmp = new Path(base, s"_log/.tmp_${attemptId}_$attemptNo")
-      // constraint + property sets ride every manifest in full (like
-      // the schema): default is carry-forward from the CURRENT parent —
-      // re-resolved per attempt, so a rebase onto a new head keeps the
-      // head's sets (a constraint-CHANGING winner is blocked in
-      // rebaseOk; a property change commutes, and carry-forward picks
-      // the head's values exactly)
-      val parentCommit =
-        if (parentNow <= 0L) None
-        else Some(readCommit(fs, base, parentNow))
+      val hc = head.meta
       // monotonic-clamped commit instant: a wall clock stepping backwards
       // between writers must not reorder TIMESTAMP AS OF history
-      val ts = math.max(parentCommit.fold(0L)(_.ts) + 1, clockMs())
+      val ts = math.max(hc.ts + 1, clockMs())
       // WRITER-FEATURE GUARD (re-checked per attempt: a rebase moves
       // onto a new head, whose features may differ): committing onto a
       // table whose head declares a contract this library does not
       // implement would silently break it — refuse before any rename
-      parentCommit.foreach(pc => requireSupportedWriterFeatures(
-        pc.writerFeatures, s"committing version $version of $dir"))
-      val cstr = constraintsOverride.getOrElse(
-        parentCommit.fold(Map.empty[String, String])(_.constraints))
-      val props = propertiesOverride.getOrElse(
-        parentCommit.fold(Map.empty[String, String])(_.properties))
-      val cmap = colmapOverride.getOrElse(
-        parentCommit.fold(Map.empty[String, String])(_.colmap))
-      val dcols = droppedColsOverride.getOrElse(
-        parentCommit.fold(Seq.empty[String])(_.droppedCols))
-      val body = TableLogCodec.renderCommit(Commit(version, parentNow, op,
-        schemaJson, adds, removes, txn, ts, removeDv, cstr, copyFiles, props,
-        cmap, dcols))
+      requireSupportedWriterFeatures(hc.writerFeatures,
+        s"committing version $version of $dir")
+      val m = t.meta
+      val body = TableLogCodec.renderCommit(Commit(version, head.version, t.op,
+        schemaJson, t.adds, removes, t.marker, ts, removeDv,
+        carried(_.constraints, m.constraints, hc), t.copyFiles,
+        carried(_.properties, m.properties, hc), carried(_.colmap, m.colmap, hc),
+        carried(_.droppedCols, m.droppedCols, hc)))
       val out = fs.create(tmp, true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
       // THE commit point: rename WITHOUT overwrite — atomic on HDFS/posix,
       // fails if a concurrent writer landed this version first
       try {
-        val fc = FileContext.getFileContext(base.toUri, conf)
+        val fc = FileContext.getFileContext(base.toUri, spark.sparkContext.hadoopConfiguration)
         fc.rename(tmp, target) // no Rename.OVERWRITE
         committed = version
       } catch {
@@ -3499,17 +3434,18 @@ object TableLog {
               // would have been silent data loss in the current snapshot
               committed = version
             case RenameLostRace =>
-              val rebase = rebaseEligible && attemptNo < maxAttempts &&
-                rebaseOk(spark, fs, base, parentNow, schemaJson,
-                  removeEntries, txn, readBounds)
-              if (rebase) {
-                parentNow = commitVersions(fs, base).last
-              } else {
-                conflictCleanup.foreach(p => fs.delete(p, true))
-                throw new TableLogConflictException(
-                  s"TableLog: lost the commit race for version $version of $dir " +
-                    s"(another writer committed on top of parent $parentNow) — " +
-                    s"re-read, re-merge, retry [${e.getClass.getSimpleName}: ${e.getMessage}]")
+              val next =
+                if (!t.mayRebase || attemptNo >= maxAttempts) None
+                else rebaseOk(spark, fs, base, head.version, schemaJson,
+                  t.removes, t.marker, t.readBounds)
+              next match {
+                case Some(h) => head = h
+                case None =>
+                  cleanup.foreach(d => fs.delete(d, true))
+                  throw new TableLogConflictException(
+                    s"TableLog: lost the commit race for version $version of $dir " +
+                      s"(another writer committed on top of parent ${head.version}) — " +
+                      s"re-read, re-merge, retry [${e.getClass.getSimpleName}: ${e.getMessage}]")
               }
             case RenameIoFailure =>
               // transient IO error with no manifest at the target: the
@@ -3542,20 +3478,22 @@ object TableLog {
     * table ends with duplicate rows for the key — a non-serializable
     * lost update (serial execution would have updated, not inserted).
     * Files without stats on a bounded column conservatively overlap,
-    * so a stats-less winner forces the loud conflict path.
+    * so a stats-less winner forces the loud conflict path. Returns the
+    * new head, opened once from one listing, when the commit may rebase
+    * onto it.
     */
   private[sinks] def rebaseOk(spark: SparkSession, fs: FileSystem, base: Path,
                               oldParent: Long, schemaJson: String,
                               removeEntries: Seq[AddFile],
                               txn: Option[(String, Long)],
-                              readBounds: Seq[(String, Any, Any)] = Nil): Boolean = {
+                              readBounds: Seq[(String, Any, Any)] = Nil): Option[Snap] = {
     val vers = commitVersions(fs, base)
     val newBase = vers.lastOption.getOrElse(0L)
-    if (newBase <= oldParent) return false
-    val (headSchema, headFiles) = snapshotAt(spark, fs, base, newBase)
+    if (newBase <= oldParent) return None
+    val head = new Snap(spark, base.toString, newBase, vers)
     if (nullableForm(DataType.fromJson(schemaJson).asInstanceOf[StructType]) !=
-        nullableForm(DataType.fromJson(headSchema).asInstanceOf[StructType]))
-      return false
+        nullableForm(head.schema))
+      return None
     // a winner that changed the COLUMN MAPPING or the dropped-column
     // tombstones is a real conflict even when the logical schema reads
     // the same: the loser's data files were written under the OLD
@@ -3563,35 +3501,31 @@ object TableLog {
     // concurrent overwrite just legitimately cleared, and a mapping
     // divergence would make one table-level colmap describe files
     // written under two different physical layouts — silent null-fills)
-    def mappingOf(v: Long): (Map[String, String], Set[String]) =
-      if (v <= 0L) (Map.empty, Set.empty)
-      else {
-        val c = readCommit(fs, base, v)
-        (c.colmap, c.droppedCols.toSet)
-      }
-    if (mappingOf(oldParent) != mappingOf(newBase))
-      return false
-    val headByPath = headFiles.map(f => f.path -> f).toMap
+    def mappingOf(c: Commit): (Map[String, String], Set[String]) =
+      (c.colmap, c.droppedCols.toSet)
+    if (mappingOf(new Snap(spark, base.toString, oldParent, vers).meta) != mappingOf(head.meta))
+      return None
+    val headByPath = head.files.map(f => f.path -> f).toMap
     if (!removeEntries.forall(r => headByPath.get(r.path).exists(_.dv == r.dv)))
-      return false
-    val intervening = vers.filter(v => v > oldParent && v <= newBase)
-      .map(v => readCommit(fs, base, v))
+      return None
+    val intervening = vers.filter(v => v > oldParent && v < newBase)
+      .map(v => readCommit(fs, base, v)) :+ head.meta
     // a winner that CHANGED the constraint set is a real conflict: this
     // commit's rows were validated (or not) against the OLD set —
     // rebasing an append over a concurrent ADD CONSTRAINT would land
     // unchecked rows behind a constraint that claims the whole table
     // passed its existing-data validation
     if (intervening.exists(c => c.op == "constraint" || c.op == "notnull"))
-      return false
+      return None
     if (readBounds.nonEmpty &&
         intervening.exists(_.add.exists(f => mayOverlap(f, readBounds))))
-      return false
-    txn.forall { case (app, batch) =>
+      return None
+    Option.when(txn.forall { case (app, batch) =>
       intervening.forall(_.txn match {
         case Some((a, b)) if a == app && b >= batch => false
         case _ => true
       })
-    }
+    })(head)
   }
 
   /** The commit instant recorded at `v` (0 for the pre-history parent
@@ -3624,12 +3558,8 @@ object TableLog {
   /** Latest committed version, 0 for an empty/new table — a names-only
     * listing, no manifest is parsed.
     */
-  def currentVersion(spark: SparkSession, dir: String): Long = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(base, "_log"))) 0L
-    else commitVersions(fs, base).lastOption.getOrElse(0L)
-  }
+  def currentVersion(spark: SparkSession, dir: String): Long =
+    openHead(spark, dir).version
 
   /** The committed history, oldest first — driver-side (the log is tiny;
     * manifests list files, they do not contain data). Commit manifests
@@ -3637,10 +3567,8 @@ object TableLog {
     * [[vacuum]].
     */
   def history(spark: SparkSession, dir: String): Seq[Commit] = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(base, "_log"))) Nil
-    else commitVersions(fs, base).map(readCommit(fs, base, _))
+    val h = openHead(spark, dir)
+    h.versions.map(readCommit(h.fs, h.base, _))
   }
 
   /** The commits in `(fromExclusive, toInclusive]` only — what a
@@ -3696,11 +3624,10 @@ object TableLog {
     */
   private def searchCommitTs(spark: SparkSession, dir: String, api: String)(
       p: Long => Boolean): (Seq[Long], Int, Long => Long) = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vers = commitVersions(fs, base)
+    val h = openHead(spark, dir)
+    val vers = h.versions
     require(vers.nonEmpty, s"TableLog.$api: $dir has no committed versions")
-    val ts = (v: Long) => commitTs(fs, base, v)
+    val ts = (v: Long) => commitTs(h.fs, h.base, v)
     var lo = 0
     var hi = vers.length
     while (lo < hi) {
@@ -3749,10 +3676,8 @@ object TableLog {
   /** Snapshot read at `version` (`-1` = latest). Fails loudly for a
     * version that never existed or that [[vacuum]] has retired.
     */
-  def readAt(spark: SparkSession, dir: String, version: Long = -1L): DataFrame = {
-    val s = snap(spark, dir, version, "readAt")
-    readWithDv(spark, dir, s.schema, s.files, s.meta.colmap)
-  }
+  def readAt(spark: SparkSession, dir: String, version: Long = -1L): DataFrame =
+    snap(spark, dir, version, "readAt").df
 
   /** Read a set of manifest entries with their deletion vectors
     * ANTI-APPLIED: clean files read as one plain multi-path scan (zero
@@ -4508,22 +4433,33 @@ object TableLog {
     snap(spark, dir, version, "liveFilesAt").files
 
   /** One committed version of one table, opened once: the filesystem,
-    * the table root and the version. Its snapshot (schema JSON + live
-    * files) folds on first use, through the snapshot cache; the parsed
-    * schema and the version's own manifest (`meta`) are read at most
-    * once, and only when a caller asks — a warm `schemaJson`/`files`
-    * reads no manifest at all. Built unchecked only where the caller
-    * has already vetted `version` (or a commit's CAS will); everything
-    * else opens through [[snap]].
+    * the table root, the version and the `_log` listing (`versions`) it
+    * was opened from. Its snapshot (schema JSON + live files) folds on
+    * first use, through the snapshot cache; the parsed schema and the
+    * version's own manifest (`meta`) are read at most once, and only when
+    * a caller asks — a warm `schemaJson`/`files` reads no manifest at
+    * all. Version 0 is the empty table: no columns, no files, an empty
+    * manifest. Built unchecked only where the caller has already vetted
+    * `version` (or a commit's CAS will); everything else opens through
+    * [[snap]] or [[openHead]].
     */
-  private final class Snap(spark: SparkSession, val dir: String, val version: Long) {
+  private[sinks] final class Snap(spark: SparkSession, val dir: String, val version: Long,
+                                  val versions: Seq[Long]) {
     val base = new Path(dir)
     val fs: FileSystem = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    private lazy val state = snapshotAt(spark, fs, base, version)
+    private lazy val state =
+      if (version == 0L) (new StructType().json, Seq.empty[AddFile])
+      else snapshotAt(spark, fs, base, version)
     def schemaJson: String = state._1
     def files: Seq[AddFile] = state._2
     lazy val schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    lazy val meta: Commit = readCommit(fs, base, version)
+    lazy val meta: Commit =
+      if (version == 0L) Commit(0L, 0L, "", schemaJson, Nil, Nil)
+      else readCommit(fs, base, version)
+    def tableMeta: TableMeta =
+      TableMeta(schema, meta.constraints, meta.properties, meta.colmap, meta.droppedCols)
+    /** The version's rows, deletion vectors applied. */
+    def df: DataFrame = readWithDv(spark, dir, schema, files, meta.colmap)
   }
 
   /** Open `version` of `dir` (-1 = latest) from one `_log` listing,
@@ -4542,7 +4478,22 @@ object TableLog {
       s"TableLog.$api: version $v of $dir was vacuumed (earliest readable: $wm)")
     require(commitVers.contains(v),
       s"TableLog.$api: version $v of $dir does not exist (latest: ${commitVers.last})")
-    new Snap(spark, dir, v)
+    new Snap(spark, dir, v, commitVers)
+  }
+
+  /** Open `expectedParent`, else the head (0 for an empty or new table),
+    * from one `_log` listing: the version a write commits on, and the
+    * listing [[currentVersion]] and [[history]] read. No watermark check:
+    * a commit's CAS vets its parent.
+    */
+  private def openHead(spark: SparkSession, dir: String,
+                         expectedParent: Option[Long] = None): Snap = {
+    val base = new Path(dir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val commitVers = commitVersions(fs, base)
+    val v = expectedParent.getOrElse(commitVers.lastOption.getOrElse(0L))
+    require(v == 0L || commitVers.contains(v), s"TableLog: expectedParent $v does not exist")
+    new Snap(spark, dir, v, commitVers)
   }
 
   final case class MaintenanceReport(compactedCommit: Option[Long],
@@ -4997,16 +4948,18 @@ object TableLog {
     if (!fs.exists(wm)) 1L else readText(fs, wm).trim.toLong
   }
 
-  /** Test seam (round 18): lets specs inject the transient read
-    * failures an object store produces but a local FS cannot (5xx,
-    * read-after-write lag) — the fail-SAFE paths (checkpoint reclaim,
-    * vacuum's orphan classification) are otherwise untestable here.
-    * No-op in production.
+  /** Test seam, called with the kind of access and its path: `"read"`
+    * before every log-file read ([[readText]]), `"list"` before every
+    * listing of a table's committed versions ([[commitVersions]]). Specs
+    * count opens through it and inject the transient read failures an
+    * object store produces but a local FS cannot (5xx, read-after-write
+    * lag) — the fail-SAFE paths (checkpoint reclaim, vacuum's orphan
+    * classification) are otherwise untestable here. No-op in production.
     */
-  private[graft] var readTextIntercept: Path => Unit = _ => ()
+  private[graft] var logAccessHook: (String, Path) => Unit = (_, _) => ()
 
   private def readText(fs: FileSystem, p: Path): String = {
-    readTextIntercept(p)
+    logAccessHook("read", p)
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
@@ -5017,6 +4970,7 @@ object TableLog {
     */
   private def commitVersions(fs: FileSystem, base: Path): Seq[Long] = {
     val logRoot = new Path(base, "_log")
+    logAccessHook("list", logRoot)
     if (!fs.exists(logRoot)) return Nil
     // digits-only match, not an endsWith chain: every non-commit file
     // the log directory will ever grow (checkpoint JSONs, multi-part

@@ -228,15 +228,15 @@ class TableLogMultipartCkptSpec extends SparkSpec {
       spark.range(0, 80).select(col("id").as("k")).coalesce(2))
     val v = TableLog.currentVersion(spark, dir)
     val metaName = f"$v%020d.checkpoint.meta"
-    val savedHook = TableLog.readTextIntercept
+    val savedHook = TableLog.logAccessHook
     try {
       // the ONLY read of this meta inside checkpoint() is the
       // post-publish reclaim read-back — make it fail transiently
-      TableLog.readTextIntercept = p =>
-        if (p.getName == metaName)
+      TableLog.logAccessHook = (kind, p) =>
+        if (kind == "read" && p.getName == metaName)
           throw new java.io.IOException("injected transient store failure")
       assert(TableLog.checkpoint(spark, dir, multipartMinEntries = 1) == v)
-    } finally TableLog.readTextIntercept = savedHook
+    } finally TableLog.logAccessHook = savedHook
     val f = fs(dir)
     val landed = referencedPartDir(dir, v)
     assert(f.exists(landed),
@@ -274,12 +274,12 @@ class TableLogMultipartCkptSpec extends SparkSpec {
     // resolution rides the cache — the injected failure then hits only
     // the orphan-classification meta read under test
     (1L to v2).foreach(vv => TableLog.readAt(spark, dir, vv).count())
-    val savedHook = TableLog.readTextIntercept
+    val savedHook = TableLog.logAccessHook
     val savedClock = TableLog.clockMs
     try {
       TableLog.clockMs = () => System.currentTimeMillis() + 10L * 3600L * 1000L
-      TableLog.readTextIntercept = p =>
-        if (p.getName == metaName)
+      TableLog.logAccessHook = (kind, p) =>
+        if (kind == "read" && p.getName == metaName)
           throw new java.io.IOException("injected transient store failure")
       TableLog.vacuum(spark, dir, keepVersions = 100, graceMs = Some(3600000L))
       assert(f.exists(landed),
@@ -288,11 +288,11 @@ class TableLogMultipartCkptSpec extends SparkSpec {
         "a headerless orphan at another version still sweeps")
       // store heals → the next pass sees the real reference and would
       // reclaim only true litter; the landed dir stays referenced
-      TableLog.readTextIntercept = savedHook
+      TableLog.logAccessHook = savedHook
       TableLog.vacuum(spark, dir, keepVersions = 100, graceMs = Some(3600000L))
       assert(f.exists(landed))
     } finally {
-      TableLog.readTextIntercept = savedHook
+      TableLog.logAccessHook = savedHook
       TableLog.clockMs = savedClock
     }
     TableLog.snapshotCacheClear()

@@ -130,7 +130,7 @@ class TableLogSpec extends SparkSpec {
     val schemaJson = TableLog.readAt(spark, dir).schema.json
     def ok(oldParent: Long, removes: Seq[TableLog.AddFile],
            txn: Option[(String, Long)] = None) =
-      TableLog.rebaseOk(spark, fs, basePath, oldParent, schemaJson, removes, txn)
+      TableLog.rebaseOk(spark, fs, basePath, oldParent, schemaJson, removes, txn).isDefined
     // nothing landed since the parent → nothing to rebase onto
     assert(!ok(1L, Nil))
     TableLog.append(spark, dir, Seq((200L, 9.0)).toDF("k", "v"),
@@ -1707,7 +1707,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, dir, Seq((200L, 9.0)).toDF("k", "v"),
       statsCols = Seq("k"))                                            // v2: winner
     def ok(bounds: Seq[(String, Any, Any)]) =
-      TableLog.rebaseOk(spark, fs, basePath, 1L, schemaJson, Nil, None, bounds)
+      TableLog.rebaseOk(spark, fs, basePath, 1L, schemaJson, Nil, None, bounds).isDefined
     // the lost-update shape: a merge whose insert arm is "k not in the
     // table" must NOT rebase over a winner that added a file possibly
     // holding k — two concurrent inserts of the same new key would both
@@ -1902,12 +1902,12 @@ class TableLogSpec extends SparkSpec {
     TableLog.dropColumn(spark, dir, "x")                                  // v2: tombstone px
     val schemaJson = TableLog.readAt(spark, dir).schema.json              // (k, s)
     TableLog.overwrite(spark, dir, Seq((2L, "b")).toDF("k", "s"))         // v3: tombstones clear
-    assert(!TableLog.rebaseOk(spark, fs, basePath, 2L, schemaJson, Nil, None),
+    assert(TableLog.rebaseOk(spark, fs, basePath, 2L, schemaJson, Nil, None).isEmpty,
       "an append captured under the OLD tombstone set must not rebase over " +
         "the overwrite that legitimately cleared it (re-pinning would " +
         "resurrect the tombstone)")
     TableLog.append(spark, dir, Seq((3L, "c")).toDF("k", "s"))            // v4: same mapping
-    assert(TableLog.rebaseOk(spark, fs, basePath, 3L, schemaJson, Nil, None),
+    assert(TableLog.rebaseOk(spark, fs, basePath, 3L, schemaJson, Nil, None).isDefined,
       "an identical-mapping winner still commutes")
   }
 
@@ -2061,16 +2061,16 @@ class TableLogSpec extends SparkSpec {
     TableLog.liveFilesAt(spark, dir, v)
     val manifest = f"$v%020d.json"
     val reads = new java.util.concurrent.atomic.AtomicInteger
-    val savedHook = TableLog.readTextIntercept
+    val savedHook = TableLog.logAccessHook
     try {
-      TableLog.readTextIntercept = p => if (p.getName == manifest) reads.incrementAndGet()
+      TableLog.logAccessHook = (kind, p) => if (kind == "read" && p.getName == manifest) reads.incrementAndGet()
       val d = TableLog.describeDetail(spark, dir).collect().head
       assert(d.getAs[String]("properties") == """{"graft.cluster.cols":"k"}""")
       assert(reads.get == 1)
       reads.set(0)
       assert(TableLog.describeLayout(spark, dir).collect().head.getString(0) == "k")
       assert(reads.get == 1)
-    } finally TableLog.readTextIntercept = savedHook
+    } finally TableLog.logAccessHook = savedHook
   }
 
   test("a version opens once: manifest reads per call with a warm snapshot") {
@@ -2089,18 +2089,68 @@ class TableLogSpec extends SparkSpec {
       call
       reads.get
     }
-    val savedHook = TableLog.readTextIntercept
+    val savedHook = TableLog.logAccessHook
     try {
-      TableLog.readTextIntercept = p => if (p.getName == manifest) reads.incrementAndGet()
+      TableLog.logAccessHook = (kind, p) => if (kind == "read" && p.getName == manifest) reads.incrementAndGet()
       assert(readsOf(TableLog.schemaAt(spark, dir, v)) == 0)
       assert(readsOf(TableLog.liveFilesAt(spark, dir, v)) == 0)
       assert(readsOf(TableLog.readAt(spark, dir, v)) == 1)
       val clone = tmpDir("tlog_open_reads_clone")
       assert(readsOf(TableLog.cloneShallow(spark, dir, clone, v)) == 1)
       assert(readsOf(TableLog.restore(spark, dir, v)) == 1)
-    } finally TableLog.readTextIntercept = savedHook
+    } finally TableLog.logAccessHook = savedHook
     assert(TableLog.readAt(spark, dir).count() == 10L)
     assert(TableLog.constraintsAt(spark, dir) == Map("k_pos" -> "k > 0"))
+  }
+
+  test("a write opens its parent once: one _log listing, at most one parent manifest read") {
+    val (dir, src) = (tmpDir("tlog_write_opens"), tmpDir("tlog_write_opens_src"))
+    val logRoot = new org.apache.hadoop.fs.Path(dir, "_log")
+    def rows(ks: Seq[Long]) = ks.map(k => (k, s"s$k", 1L)).toDF("k", "s", "ver")
+    rows(Seq(50L, 51L)).coalesce(1).write.mode("append").parquet(src)
+    TableLog.append(spark, dir, rows(1L to 20L).repartition(2), statsCols = Seq("k"))
+    TableLog.liveFilesAt(spark, dir, 1L) // the restore target, warm too
+    // (listings of this table's _log, reads of the parent's manifest) per call
+    def opens(call: => Any): (Int, Int) = {
+      val head = TableLog.currentVersion(spark, dir)
+      TableLog.liveFilesAt(spark, dir, head) // warm snapshot
+      val manifest = new org.apache.hadoop.fs.Path(logRoot, f"$head%020d.json")
+      val (lists, reads) = (new java.util.concurrent.atomic.AtomicInteger,
+        new java.util.concurrent.atomic.AtomicInteger)
+      val savedHook = TableLog.logAccessHook
+      try {
+        TableLog.logAccessHook = (kind, p) =>
+          if (kind == "list" && p == logRoot) lists.incrementAndGet()
+          else if (kind == "read" && p == manifest) reads.incrementAndGet()
+        call
+      } finally TableLog.logAccessHook = savedHook
+      (lists.get, reads.get)
+    }
+    val counts = Seq(
+      "append" -> opens(TableLog.append(spark, dir, rows(Seq(21L)))),
+      "upsertInto" -> opens(TableLog.upsertInto(spark, dir, rows(Seq(2L, 22L)), Seq("k"), "ver")),
+      "upsertIntoOnce" -> opens(TableLog.upsertIntoOnce(spark, dir, rows(Seq(23L)), Seq("k"),
+        "ver", "appU", 1L)),
+      "copyInto" -> opens(TableLog.copyInto(spark, dir, s"$src/*.parquet")),
+      "deleteWhere(cow)" -> opens(TableLog.deleteWhere(spark, dir, col("k") === 3L)),
+      "deleteWhere(dv)" -> opens(TableLog.deleteWhere(spark, dir, col("k") === 4L, mode = "dv")),
+      "updateWhere" -> opens(TableLog.updateWhere(spark, dir, col("k") === 5L,
+        Map("s" -> lit("u")))),
+      "mergeInto" -> opens(TableLog.mergeInto(spark, dir, rows(Seq(6L, 24L)), Seq("k"))),
+      "mergeIntoOnce" -> opens(TableLog.mergeIntoOnce(spark, dir, rows(Seq(7L, 25L)), Seq("k"),
+        "appM", 1L)),
+      "replaceWhere" -> opens(TableLog.replaceWhere(spark, dir, rows(Seq(30L)), col("k") === 30L)),
+      "compactTable" -> opens(TableLog.compactTable(spark, dir)),
+      "setTableProperties" -> opens(TableLog.setTableProperties(spark, dir, Map("o" -> "ops"))),
+      "addColumn" -> opens(TableLog.addColumn(spark, dir, "note",
+        org.apache.spark.sql.types.StringType)),
+      "commitTxnMarker" -> opens(TableLog.commitTxnMarker(spark, dir, "appT", 1L)),
+      "restore" -> opens(TableLog.restore(spark, dir, 1L)),
+      "overwrite" -> opens(TableLog.overwrite(spark, dir, rows(Seq(40L)))))
+    assert(counts.forall { case (_, (lists, reads)) => lists == 1 && reads <= 1 },
+      counts.map { case (op, (l, r)) => s"$op $l/$r" }.mkString(", "))
+    assert(TableLog.history(spark, dir).length == counts.length + 1,
+      "every call above committed exactly once")
   }
 
   test("concurrent full-sync merge vs append: never a silent torn state") {
