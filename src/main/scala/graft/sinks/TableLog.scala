@@ -4468,26 +4468,24 @@ object TableLog {
     */
   private def snap(spark: SparkSession, dir: String, version: Long,
                    api: String): Snap = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commitVers = commitVersions(fs, base)
-    require(commitVers.nonEmpty, s"TableLog.$api: $dir has no committed versions")
-    val v = if (version == -1L) commitVers.last else version
-    val wm = vacuumWatermark(fs, base)
+    val h = openHead(spark, dir)
+    require(h.version > 0L, s"TableLog.$api: $dir has no committed versions")
+    val v = if (version == -1L) h.version else version
+    val wm = vacuumWatermark(h.fs, h.base)
     require(v >= wm,
       s"TableLog.$api: version $v of $dir was vacuumed (earliest readable: $wm)")
-    require(commitVers.contains(v),
-      s"TableLog.$api: version $v of $dir does not exist (latest: ${commitVers.last})")
-    new Snap(spark, dir, v, commitVers)
+    require(h.versions.contains(v),
+      s"TableLog.$api: version $v of $dir does not exist (latest: ${h.version})")
+    if (v == h.version) h else new Snap(spark, dir, v, h.versions)
   }
 
   /** Open `expectedParent`, else the head (0 for an empty or new table),
     * from one `_log` listing: the version a write commits on, and the
-    * listing [[currentVersion]] and [[history]] read. No watermark check:
-    * a commit's CAS vets its parent.
+    * listing [[snap]], [[currentVersion]] and [[history]] start from. No
+    * watermark check: a commit's CAS vets its parent.
     */
   private def openHead(spark: SparkSession, dir: String,
-                         expectedParent: Option[Long] = None): Snap = {
+                       expectedParent: Option[Long] = None): Snap = {
     val base = new Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val commitVers = commitVersions(fs, base)
