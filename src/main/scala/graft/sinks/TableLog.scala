@@ -3251,10 +3251,9 @@ object TableLog {
     // after declaring blooms would silently strip the point-lookup
     // pruning the table was built for. Explicit caller arguments win;
     // the properties are the default, not an override.
-    val props = parentProps
     // a DOTTED declared stats col (payload.kind) qualifies through its
     // head segment — nested-field stats are first-class
-    def propCols(k: String): Seq[String] = props.get(k).toSeq
+    def propCols(k: String): Seq[String] = parentProps.get(k).toSeq
       .flatMap(_.split(",")).map(_.trim)
       .filter(c => c.nonEmpty &&
         logicalNames.contains(c.split('.').head))
@@ -3269,7 +3268,7 @@ object TableLog {
           writeOptions.keys.exists(_.startsWith("parquet.bloom")))
         writeOptions
       else writeOptions ++ bloomOptions(declaredBlooms,
-        props.get("graft.bloom.ndv").map(_.trim.toLong).getOrElse(1000000L))
+        parentProps.get("graft.bloom.ndv").map(_.trim.toLong).getOrElse(1000000L))
     // per-column writer options (parquet.bloom.filter.*#col) address
     // the file's columns — translate their suffixes too
     val physWriteOptions =
@@ -3333,6 +3332,10 @@ object TableLog {
     * a lost race may rebase. A write op opens its parent once, reads
     * through that [[Snap]], builds the transaction and publishes it
     * ([[publishCommit]], via [[commit]] when it writes data files).
+    * Removes carry their entries (not just paths) so the manifest can
+    * record each removed file's deletion vector — the change feed's
+    * removed side must read MINUS that old dv or it re-emits rows an
+    * earlier commit already deleted.
     */
   private final case class Txn(parent: Snap, op: String, meta: TableMeta,
                                adds: Seq[AddFile] = Nil, removes: Seq[AddFile] = Nil,
@@ -3501,9 +3504,8 @@ object TableLog {
     // concurrent overwrite just legitimately cleared, and a mapping
     // divergence would make one table-level colmap describe files
     // written under two different physical layouts — silent null-fills)
-    def mappingOf(c: Commit): (Map[String, String], Set[String]) =
-      (c.colmap, c.droppedCols.toSet)
-    if (mappingOf(new Snap(spark, base.toString, oldParent, vers).meta) != mappingOf(head.meta))
+    val old = new Snap(spark, base.toString, oldParent, vers).meta
+    if (old.colmap != head.meta.colmap || old.droppedCols.toSet != head.meta.droppedCols.toSet)
       return None
     val headByPath = head.files.map(f => f.path -> f).toMap
     if (!removeEntries.forall(r => headByPath.get(r.path).exists(_.dv == r.dv)))
