@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. Query names
-  * after the two directories narrow the dump to those queries and their
-  * oracle SQL (the dev loop):
+  * plus oracle_sql.json, for the DuckDB compare
+  * (`tools/compare_oracle.py`). Query names after the two directories
+  * narrow the dump to those queries and their oracle SQL (the dev loop):
   * `sbt "runMain graft.Verify <sfDir> <outDir> [query…]"`.
   */
 object Verify {
