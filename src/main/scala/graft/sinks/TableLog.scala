@@ -3375,7 +3375,9 @@ object TableLog {
     * `t.parent` as opened; a metadata field `t` left as its parent had it
     * follows the head each attempt lands on (a constraint-CHANGING
     * winner is blocked in rebaseOk; a property change commutes, and the
-    * carry picks the head's values exactly). A terminal lost race deletes
+    * carry picks the head's values exactly). The schema follows the same
+    * rule, so a winner's column comment or default survives the rebase;
+    * an op that changed the schema keeps its own. A terminal lost race deletes
     * `cleanup` (the attempt's data dir, when there is one) and throws the
     * loud conflict.
     */
@@ -3383,8 +3385,8 @@ object TableLog {
                             cleanup: Option[Path] = None): Long = {
     val p = t.parent
     val (dir, fs, base) = (p.dir, p.fs, p.base)
-    // an op that leaves the schema alone re-stores the parent's JSON as is
-    val schemaJson = if (t.meta.schema == p.schema) p.schemaJson else t.meta.schema.json
+    // an op that leaves the schema alone re-stores the head's JSON as is
+    val ownSchema = Option.when(t.meta.schema != p.schema)(t.meta.schema.json)
     val removes = t.removes.map(_.path)
     val removeDv = t.removes.filter(_.dv.nonEmpty)
       .map(e => e.path -> e.dv).toMap
@@ -3401,6 +3403,7 @@ object TableLog {
       val target = commitPath(base, version)
       val tmp = new Path(base, s"_log/.tmp_${attemptId}_$attemptNo")
       val hc = head.meta
+      val schemaJson = ownSchema.getOrElse(head.schemaJson)
       // monotonic-clamped commit instant: a wall clock stepping backwards
       // between writers must not reorder TIMESTAMP AS OF history
       val ts = math.max(hc.ts + 1, clockMs())

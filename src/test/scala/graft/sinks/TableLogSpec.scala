@@ -251,6 +251,26 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.schemaAt(spark, dir).fieldNames.toSeq == Seq("k", "s"))
   }
 
+  test("a stale append rebases over a column comment or default and keeps it") {
+    val dir = tmpDir("tlog_rebase_colmeta")
+    val key = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
+      .CURRENT_DEFAULT_COLUMN_METADATA_KEY
+    assert(TableLog.append(spark, dir, Seq((1L, "a")).toDF("k", "s")) == 1L)
+    assert(TableLog.setColumnComment(spark, dir, "s", Some("the label")) == 2L)
+    assert(TableLog.append(spark, dir, Seq((2L, "b")).toDF("k", "s"),
+      expectedParent = Some(1L)) == 3L)
+    assert(TableLog.schemaAt(spark, dir)("s").getComment().contains("the label"),
+      "the stale append must land on the head's schema, comment included")
+    assert(TableLog.setColumnDefault(spark, dir, "s", Some("'z'")) == 4L)
+    assert(TableLog.append(spark, dir, Seq((3L, "c")).toDF("k", "s"),
+      expectedParent = Some(3L)) == 5L)
+    val s = TableLog.schemaAt(spark, dir)("s")
+    assert(s.metadata.contains(key) && s.metadata.getString(key) == "'z'",
+      "the stale append must keep the head's column default")
+    assert(s.getComment().contains("the label"))
+    assert(TableLog.readAt(spark, dir).count() == 3L)
+  }
+
   test("TIMESTAMP AS OF: injected clock pins resolution; backwards clock clamps; pre-history refuses") {
     val dir = tmpDir("tlog_ts")
     val saved = TableLog.clockMs
