@@ -9,9 +9,9 @@ import graft.sources.{GraftSql, Tables}
 
 /** Driver contract: `queries` = one entry per implemented operator from
   * SURVEY.md §2; `oracleSql` = DuckDB-runnable equivalent SQL (identical
-  * column names + deterministic ORDER BY on both sides). Non-SQL-expressible
-  * operators (seeded-hash sketches) have queries but no oracle → driver does
-  * the rows-only check; their semantics are pinned by ScalaTest instead.
+  * column names + deterministic ORDER BY on both sides). Both are views of
+  * one registry in which every query carries its oracle: SQL text, or for
+  * the ANN queries SQL generated from their memoized models.
   */
 object SparkEntry {
 
@@ -45,8 +45,8 @@ object SparkEntry {
     * dir parameter, so the IVF/PQ oracle builders read the codebooks
     * memoized for THIS dir. Verify runs every query before dumping
     * oracle_sql.json, so the models are always present by then; if the
-    * ANN queries never ran, the builders emit nothing and the driver
-    * falls back to the rows-only grade (never a wrong oracle).
+    * ANN queries never ran, the builders emit nothing and Verify fails,
+    * naming each query left without an oracle (never a wrong oracle).
     */
   @volatile private[graft] var lastAnnDir: Option[String] = None
 
@@ -72,195 +72,25 @@ object SparkEntry {
   private def stageDir(kind: String, datasetDir: String): String =
     s"$stageRoot/${kind}_${java.lang.Integer.toHexString(datasetDir.hashCode)}"
 
-  /** Staged winnow fingerprint index per sf-dir (the q_winnow_incr
-    * deployment artifact — see the query's comment).
+  /** Fixtures staged once per JVM, keyed by (kind, dataset dir) — a new
+    * dir stages afresh. The first call runs `build` on the stage dir and
+    * later calls return the dir; a build that throws caches nothing and
+    * is retried on the next call. Committed versions are immutable, so a
+    * query reading a fixed version is stable however often it reruns.
     */
-  private val winnowIdxPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val stages =
+    scala.collection.concurrent.TrieMap.empty[(String, String), String]
 
-  /** Staged transactional table log per sf-dir: three upsert commits over
-    * orders-derived batches (the q_table_log fixture — built once per
-    * JVM; readAt(2) is stable however often the query reruns because
-    * committed versions are immutable).
-    */
-  private val tableLogPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged TableLog lineitem layout (16 price-range files + footer
-    * stats in the manifest) for the q_table_log_prune scan.
-    */
-  private val tableLogPrunedPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged persistent-catalog root per sf-dir (q_catalog_sql). */
-  private val catalogRootPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged HIDDEN-PARTITIONING fixture (q_partition_transform): a
-    * catalog table declared `PARTITIONED BY (days(o_orderdate),
-    * bucket(32, o_custkey))` — the Iceberg DDL shapes — loaded with one
-    * shuffled INSERT. The transforms map to the clustering layout
-    * (source columns cluster+stats, bucket adds a bloom), so the
-    * predicate on the RAW timestamp prunes files with no transform
-    * mentioned anywhere in the query.
-    */
-  private val partitionTransformPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged GENERATED-COLUMN fixture (q_generated_col): `o_year
-    * GENERATED ALWAYS AS (year(o_orderdate))`, never supplied by the
-    * INSERT — computed at commit, clustered and stats-harvested like
-    * any stored column, pruned by the query's predicate on it.
-    */
-  private val generatedColPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged IDENTITY-COLUMN fixture (q_identity_col): engine-minted
-    * surrogate keys across two insert batches — uniqueness asserted
-    * in-query, payload hash-matched against the oracle.
-    */
-  private val identityColPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged CLUSTER-BY fixture (q_cluster_by): liquid-clustering DDL —
-    * the declared layout clusters every INSERT, pruning from commit 1.
-    */
-  private val clusterByPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged TYPE-WIDENING fixture (q_widen_column): an int column
-    * widened to bigint manifest-only — the narrow batch's files never
-    * rewrite, the wide batch lands beyond int range, and stats keep
-    * pruning across the mixed physical layout.
-    */
-  private val widenColumnPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged REORG-PURGE fixture (q_reorg_purge): dv-deletes scattered
-    * over a multi-file layout, then `REORG TABLE … APPLY (PURGE)`
-    * materializes the vectors away — only dv carriers rewrite.
-    */
-  private val reorgPurgePath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged NESTED-RENAME fixture (q_rename_nested): payload.kind →
-    * payload.category through the dotted column mapping, plus a
-    * post-rename append — old and new files serve one logical shape.
-    */
-  private val renameNestedPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged copy-on-write TableLog history (the q_table_log_delete /
-    * _update / q_merge_into / q_table_log_cdf fixture): v1 = lineitem
-    * as 16 price-range files, v2 = stats-pruned DELETE of a price band,
-    * v3 = stats-pruned UPDATE of the high-price tail, v4 = MERGE of a
-    * key-derived source (matched updates + synthetic inserts). Built
-    * once per JVM; each query reads its own immutable version.
-    */
-  private val tableLogCowPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged shallow clone (q_table_log_clone): fork the CoW fixture at
-    * version 2 (post-delete) as a ZERO-COPY clone — the clone commit
-    * references the source's files absolutely, no data moves — then
-    * merge-on-read-delete a second price band ON THE CLONE, recording
-    * deletion vectors against the INHERITED files. The read must equal
-    * DuckDB's double-filtered lineitem; the source fixture is untouched
-    * (its own queries keep oracle-matching in the same run).
-    */
-  private val tableLogClonePath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged replaceWhere backfill (q_replace_where): one price band
-    * atomically swapped for its recomputed slice in a single commit —
-    * the stats-pruned touch set rewrites, everything else carries over.
-    */
-  private val tableLogReplacePath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged full-sync merge (q_merge_sync): MERGE with `WHEN NOT
-    * MATCHED BY SOURCE THEN DELETE` scoped by a condition — the
-    * upstream-mirror shape: matched keys update, new keys insert, and
-    * keys the source no longer carries hard-delete, but only inside
-    * the declared window (status = 'F'); unmatched rows outside it
-    * survive untouched.
-    */
-  private val tableLogSyncPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private[graft] def staged(kind: String, d: String)(build: String => Unit): String =
+    stages.getOrElseUpdate((kind, d), { val p = stageDir(kind, d); build(p); p })
 
   /** Staged null-count layout (q_null_prune): rows with and without
     * NULLs land in separate files, so the manifest's per-file null
     * counts can answer `IS NOT NULL` at the FILE level — the predicate
     * shape min/max stats can never prune.
     */
-  private val tableLogNullsPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged erasure-audit fixture (q_erasure_audit): lineitem hash-
-    * distributed into 16 files with l_orderkey blooms, two keys
-    * dv-erased — the audit must prove them gone via the bloom-pruned
-    * point-lookup plan.
-    */
-  private val tableLogAuditPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged CONVERT fixture (q_convert): a plain parquet dir adopted
-    * in place by convertToGraft — the zero-copy migration path.
-    */
-  private val tableLogConvertPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged HIVE-PARTITIONED convert fixture (q_convert_partitioned):
-    * a `l_returnflag=X/` directory lake adopted zero-copy — partition
-    * values lift into a real column and partition predicates prune via
-    * the constant min=max manifest stats.
-    */
-  private val tableLogConvertPartPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged MULTIPART-CHECKPOINT fixture (q_ckpt_multipart): a 12-file
-    * table with a dv delete, checkpointed in the parquet part format —
-    * the read resolves state through the executor-written parts, never
-    * a driver JSON monolith.
-    */
-  private val tableLogMpCkptPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged SCOPED-Z-ORDER fixture (q_zorder_scoped): lineitem ranged
-    * on l_quantity, then `OPTIMIZE WHERE l_quantity >= 25 ZORDER BY
-    * (l_partkey, l_suppkey)` — the hot band re-lays on the curve while
-    * cold-band files carry verbatim; an in-band (partkey, suppkey) box
-    * scan prunes through the band's hyper-rectangle stats.
-    */
-  private val tableLogZScopePath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged NESTED-STATS fixture (q_nested_prune): lineitem wrapped in
-    * a `payload` struct, stats declared on the dotted leaf paths — a
-    * predicate on `payload.kind` prunes the file listing exactly like
-    * a top-level column (struct-typed event tables are the most common
-    * wide-table shape).
-    */
-  private val tableLogNestedPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged MERGE-EVOLUTION fixture (q_merge_evolve): a merge whose
-    * source carries a column the target lacks — autoMerge appends it
-    * to the schema in the same commit, untouched rows null-fill.
-    */
-  private val tableLogMergeEvolvePath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** Staged NESTED-UPDATE fixture (q_update_nested): a struct field
-    * rewritten in place through withField — schema unchanged, siblings
-    * untouched, nested-predicate-pruned CoW.
-    */
-  private val tableLogNestedUpdPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def nullsFixture(s: SparkSession, d: String): String =
-    tableLogNullsPath.getOrElseUpdate(d, {
-      val p = stageDir("tlognulls", d)
+    staged("tlognulls", d) { p =>
       val base = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         when(pmod(col("o_orderkey"), lit(5)) === 0, lit(null).cast("double"))
           .otherwise(col("o_totalprice").cast("double")).as("total"))
@@ -268,20 +98,15 @@ object SparkEntry {
         statsCols = Seq("k", "total"))
       TableLog.append(s, p, base.filter(col("total").isNull).coalesce(2),
         statsCols = Seq("k", "total"))
-      p
-    })
+    }
 
   /** Staged SQL-DML history (q_sql_dml): DELETE, UPDATE, and MERGE
     * written as plain SQL statements (GraftSql routes them through the
     * table log's transactional row-level ops with pruning intact) —
     * the warehouse user's surface, oracle-checked end to end.
     */
-  private val tableLogDmlPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private def dmlFixture(s: SparkSession, d: String): String =
-    tableLogDmlPath.getOrElseUpdate(d, {
-      val p = stageDir("tlogdml", d)
+    staged("tlogdml", d) { p =>
       val tgt = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_totalprice").cast("double").as("total"),
         col("o_orderstatus").as("status"))
@@ -301,12 +126,17 @@ object SparkEntry {
         s"""MERGE INTO $v t USING ${v}_src s ON t.k = s.k
            |WHEN MATCHED THEN UPDATE SET *
            |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-      p
-    })
+    }
 
+  /** Staged full-sync merge (q_merge_sync): MERGE with `WHEN NOT
+    * MATCHED BY SOURCE THEN DELETE` scoped by a condition — the
+    * upstream-mirror shape: matched keys update, new keys insert, and
+    * keys the source no longer carries hard-delete, but only inside
+    * the declared window (status = 'F'); unmatched rows outside it
+    * survive untouched.
+    */
   private def syncFixture(s: SparkSession, d: String): String =
-    tableLogSyncPath.getOrElseUpdate(d, {
-      val p = stageDir("tlogsync", d)
+    staged("tlogsync", d) { p =>
       val tgt = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_totalprice").cast("double").as("total"),
         col("o_orderstatus").as("status"))
@@ -320,8 +150,25 @@ object SparkEntry {
       TableLog.mergeInto(s, p, src, Seq("k"),
         whenNotMatchedBySource = "delete",
         notMatchedBySourceCondition = Some(col("status") === "F"))
-      p
-    })
+    }
+
+  /** Staged bloom-indexed TableLog (q_table_log_point, q_sql_point):
+    * lineitem hash-distributed over 16 files (every file spans ~the full
+    * key range, so manifest min/max prune nothing) with a parquet bloom
+    * filter on l_orderkey — the point lookup must skip files via the
+    * bloom and still return exactly the matching rows. The fixture
+    * declares its bloom columns as a table property, so the SQL
+    * connector's read path (q_sql_point) knows to route equality/IN
+    * filters through the footer-bloom phase.
+    */
+  private def bloomFixture(s: SparkSession, d: String): String =
+    staged("tlogbloom", d) { p =>
+      TableLog.append(s, p,
+        cowBase(s, d).repartition(16, col("l_orderkey")),
+        statsCols = Seq("l_orderkey"),
+        writeOptions = TableLog.bloomOptions(Seq("l_orderkey"), expectedNdv = 100000L))
+      TableLog.setTableProperties(s, p, Map("graft.bloom.cols" -> "l_orderkey"))
+    }
 
   /** Staged column-mapping history (q_rename_column, q_drop_column):
     * half of lineitem lands under the original column names, RENAME
@@ -331,27 +178,8 @@ object SparkEntry {
     * pruning, and the final projection all translate through the
     * mapping.
     */
-  private val tableLogRenamePath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** The bloom-indexed fixture declares its bloom columns as a table
-    * property, so the SQL connector's read path (q_sql_point) knows to
-    * route equality/IN filters through the footer-bloom phase.
-    */
-  private def bloomFixture(s: SparkSession, d: String): String =
-    tableLogBloomPath.getOrElseUpdate(d, {
-      val p = stageDir("tlogbloom", d)
-      TableLog.append(s, p,
-        cowBase(s, d).repartition(16, col("l_orderkey")),
-        statsCols = Seq("l_orderkey"),
-        writeOptions = TableLog.bloomOptions(Seq("l_orderkey"), expectedNdv = 100000L))
-      TableLog.setTableProperties(s, p, Map("graft.bloom.cols" -> "l_orderkey"))
-      p
-    })
-
   private def renameFixture(s: SparkSession, d: String): String =
-    tableLogRenamePath.getOrElseUpdate(d, {
-      val p = stageDir("tlogrename", d)
+    staged("tlogrename", d) { p =>
       // v1: even-key half under the ORIGINAL names
       TableLog.append(s, p,
         cowBase(s, d).filter(pmod(col("l_orderkey"), lit(2)) === 0)
@@ -368,8 +196,7 @@ object SparkEntry {
         statsCols = Seq("unit_price"))
       // v4: manifest-only drop of l_linenumber
       TableLog.dropColumn(s, p, "l_linenumber")
-      p
-    })
+    }
 
   private def cowBase(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
@@ -388,9 +215,15 @@ object SparkEntry {
           col("l_linenumber"), lit(2.0).as("price"))
         .distinct())
 
+  /** Staged copy-on-write TableLog history (the q_table_log_delete /
+    * _update / q_merge_into / q_table_log_cdf fixture): v1 = lineitem
+    * as 16 price-range files, v2 = stats-pruned DELETE of a price band,
+    * v3 = stats-pruned UPDATE of the high-price tail, v4 = MERGE of a
+    * key-derived source (matched updates + synthetic inserts). Each
+    * query reads its own immutable version.
+    */
   private def cowFixture(s: SparkSession, d: String): String =
-    tableLogCowPath.getOrElseUpdate(d, {
-      val p = stageDir("tlogcow", d)
+    staged("tlogcow", d) { p =>
       TableLog.append(s, p, cowBase(s, d).repartitionByRange(16, col("price")),
         statsCols = Seq("price"))
       // touch sets derive from the predicates themselves (boundsFromPredicate)
@@ -401,54 +234,75 @@ object SparkEntry {
       TableLog.mergeInto(s, p, cowMergeSource(s, d),
         Seq("l_orderkey", "l_linenumber"), statsCols = Seq("price"))
       TableLog.restore(s, p, 1L) // v5: zero-copy rollback of the whole history
-      p
-    })
+    }
 
-  /** Staged incrementally-maintained aggregate view (q_agg_view): its
-    * OWN table-log history (append → CoW delete → CoW update) with an
-    * [[graft.sinks.AggView.refresh]] after every commit, so the final
-    * view is the product of three incremental delta folds — which must
-    * equal DuckDB's from-scratch GROUP BY over the final state exactly
-    * (decimal increments are order-independent).
+  /** Staged transactional table log (q_table_log, q_table_log_cdf_keyed):
+    * three upsert commits over orders-derived batches — readAt(2) is
+    * stable however often the query reruns.
     */
-  private val aggViewPath =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private def tableLogFixture(s: SparkSession, d: String): String =
+    staged("tablelog", d) { p =>
+      def batch(i: Int, m: Int) = Tables.orders(s, d)
+        .filter(pmod(col("o_orderkey"), lit(m)) === 0)
+        .select(col("o_orderkey"),
+          (col("o_totalprice").cast("double") + i).as("val"),
+          lit(i.toLong).as("ver"))
+      TableLog.upsertInto(s, p, batch(1, 2), Seq("o_orderkey"), "ver")
+      TableLog.upsertInto(s, p, batch(2, 3), Seq("o_orderkey"), "ver")
+      TableLog.upsertInto(s, p, batch(3, 5), Seq("o_orderkey"), "ver")
+    }
 
-  /** Staged multi-measure MIN/MAX aggregate view (q_agg_view_minmax):
-    * its own table-log history — append, then a CoW delete of the top
-    * price band (which RETIRES every group's max → the affected-group
-    * recompute path), then a CoW update that lifts a mid band above
-    * the old maxes (new extremes via the insert fold) — refreshed
-    * incrementally after every commit; the final view must equal
-    * DuckDB's from-scratch GROUP BY of the final state.
+  /** Staged TableLog lineitem layout (16 price-range files + footer
+    * stats in the manifest) for q_table_log_prune, q_meta_count and
+    * q_sql_connector.
     */
-  private val aggViewMinMaxPath =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private def prunedFixture(s: SparkSession, d: String): String =
+    staged("tlogprune", d) { p =>
+      TableLog.append(s, p, cowBase(s, d).repartitionByRange(16, col("price")),
+        statsCols = Seq("price"))
+    }
 
-  /** Staged evolving TableLog (q_table_log_evolve): v1 carries two
-    * columns, v2 appends with mergeSchema adding a third — v1's rows
-    * must read back with NULL in the new column.
+  /** Stages a [[graft.sources.GraftCatalog]] rooted at the stage dir as
+    * catalog `cat` with namespace `wh`, then runs `build`; returns the
+    * root.
     */
-  private val tableLogEvolvePath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private def catalogStaged(s: SparkSession, d: String, kind: String, cat: String)(
+      build: => Unit): String =
+    staged(kind, d) { r =>
+      s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
+      s.conf.set(s"spark.sql.catalog.$cat.root", r)
+      s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
+      build
+    }
 
-  /** Staged bloom-indexed TableLog (q_table_log_point): lineitem
-    * hash-distributed over 16 files (every file spans ~the full key
-    * range, so manifest min/max prune nothing) with a parquet bloom
-    * filter on l_orderkey — the point lookup must skip files via the
-    * bloom and still return exactly the matching rows.
+  /** Staged persistent-catalog table `wh.items` (q_catalog_sql,
+    * q_view_sql): lineitem's price projection, CTAS'd by name; returns
+    * the catalog, named per dataset dir so two sf dirs in one JVM never
+    * share a root.
     */
-  private val tableLogBloomPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private def catalogItems(s: SparkSession, d: String): String = {
+    val cat = s"gcat_${java.lang.Integer.toHexString(d.hashCode)}"
+    catalogStaged(s, d, "gcatroot", cat) {
+      cowBase(s, d).repartitionByRange(16, col("price"))
+        .createOrReplaceTempView("q_catalog_src")
+      s.sql(s"CREATE TABLE $cat.wh.items USING graft " +
+        "TBLPROPERTIES ('graft.stats.cols'='price') " +
+        "AS SELECT * FROM q_catalog_src")
+    }
+    cat
+  }
 
-  /** Staged merge-on-read TableLog (q_table_log_dv): lineitem
-    * hash-distributed over 16 files (stats prune nothing — the exact
-    * workload CoW is worst at), then two scattered point deletes in
-    * `mode = "dv"`: positions land in the manifest's deletion vectors,
-    * zero data files are written, and reads anti-apply the vectors.
+  /** Runs `sql` with AQE partition coalescing off: keeps the range
+    * exchange's fan-out at test scale (AQE would coalesce a few MB to
+    * one partition → one file, nothing to prune); at 100 TB the same
+    * INSERT fans out on data size.
     */
-  private val tableLogDvPath =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private def uncoalesced(s: SparkSession, sql: String): Unit = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = s.conf.get(key, "true")
+    s.conf.set(key, "false")
+    try s.sql(sql) finally s.conf.set(key, saved)
+  }
 
   /** The record-linkage fixture: customer addresses prefixed with 6 hex
     * chars of md5(custkey) — a planted one-char-dropped variant per
@@ -500,42 +354,148 @@ object SparkEntry {
         .otherwise("D").as("op"),
       col("o_orderkey").as("version"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One registry entry: a query's build and its DuckDB oracle. A fixed
+    * oracle is SQL text; the ANN queries' oracles are generated from the
+    * memoized models each time [[oracleSql]] is read, and are absent
+    * until those models exist.
+    */
+  private final class Q(val build: (SparkSession, String) => DataFrame,
+                        val oracle: () => Option[String])
+
+  private object Q {
+    def apply(build: (SparkSession, String) => DataFrame, sql: String): Q =
+      new Q(build, () => Some(sql))
+  }
+
+  /** The registry: each query beside its oracle. Oracle casts: duckdb
+    * sum(int)→HUGEINT needs ::BIGINT to match Spark's long;
+    * len(list)→BIGINT needs ::INTEGER to match Spark's size().
+    */
+  private lazy val registry: Map[String, Q] = Map(
     // ---------- E. analytics / views ----------
-    "q1_pricing_summary" -> ((s, d) => Analytics.pricingSummary(
-      Spread.compute(Tables.lineitem(s, d), col("l_orderkey")))),
+    "q1_pricing_summary" -> Q((s, d) => Analytics.pricingSummary(
+      Spread.compute(Tables.lineitem(s, d), col("l_orderkey"))),
+      """SELECT l_returnflag, l_linestatus,
+        | round(sum(l_quantity),2) AS sum_qty,
+        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(30,6))),2) AS DOUBLE) AS sum_base_price,
+        | CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,6))),2) AS DOUBLE) AS sum_disc_price,
+        | CAST(round(sum(CAST(l_extendedprice*(1-l_discount)*(1+l_tax) AS DECIMAL(30,6))),2) AS DOUBLE) AS sum_charge,
+        | round(CAST(sum(CAST(l_quantity AS DECIMAL(30,6))) AS DOUBLE) / count(l_quantity),4) AS avg_qty,
+        | round(CAST(sum(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE) / count(l_extendedprice),4) AS avg_price,
+        | round(CAST(sum(CAST(l_discount AS DECIMAL(30,6))) AS DOUBLE) / count(l_discount),4) AS avg_disc,
+        | count(*) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
-    "q_order_summary" -> ((s, d) => Analytics.orderSummary(
-      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d), Tables.lineitem(s, d))),
+    "q_order_summary" -> Q((s, d) => Analytics.orderSummary(
+      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d), Tables.lineitem(s, d)),
+      """WITH items AS (
+        |  SELECT l_orderkey, count(*) AS item_count,
+        |         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(30,6))),2) AS DOUBLE) AS total_price,
+        |         CAST(round(sum(CAST(l_extendedprice*l_discount AS DECIMAL(30,6))),2) AS DOUBLE) AS total_discount
+        |  FROM lineitem GROUP BY l_orderkey)
+        |SELECT o_orderkey, o_orderstatus, o_orderdate, c_name, n_name AS nation,
+        |       coalesce(item_count, 0) AS item_count,
+        |       coalesce(total_price, 0.0) AS total_price,
+        |       coalesce(total_discount, 0.0) AS total_discount
+        |FROM orders
+        |LEFT JOIN customer ON o_custkey = c_custkey
+        |LEFT JOIN nation ON c_nationkey = n_nationkey
+        |LEFT JOIN items ON o_orderkey = l_orderkey
+        |ORDER BY o_orderkey""".stripMargin),
 
-    "q_delivery_performance" -> ((s, d) => Analytics.deliveryPerformance(
-      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d))),
+    "q_delivery_performance" -> Q((s, d) => Analytics.deliveryPerformance(
+      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d)),
+      """SELECT n_name AS nation, count(*) AS total_orders,
+        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) / count(o_totalprice),4) AS avg_order_price,
+        |       CAST(sum(CASE WHEN o_orderstatus='F' THEN 1 ELSE 0 END) AS BIGINT) AS fulfilled_count,
+        |       CAST(sum(CASE WHEN o_orderstatus='P' THEN 1 ELSE 0 END) AS BIGINT) AS pending_count,
+        |       CAST(sum(CASE WHEN o_orderstatus='O' THEN 1 ELSE 0 END) AS BIGINT) AS open_count
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY nation""".stripMargin),
 
-    "q_pricing_rollup" -> ((s, d) => Analytics.pricingRollup(Tables.lineitem(s, d))),
+    "q_pricing_rollup" -> Q((s, d) => Analytics.pricingRollup(Tables.lineitem(s, d)),
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue,
+        |  count(*) AS line_count
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
 
-    "q_user_pivot" -> ((s, d) => Analytics.userActivityPivot(
-      Tables.events(s, d), Seq("click", "view", "purchase", "signup", "error"))),
+    "q_user_pivot" -> Q((s, d) => Analytics.userActivityPivot(
+      Tables.events(s, d), Seq("click", "view", "purchase", "signup", "error")),
+      """SELECT user_id,
+        |  CAST(sum(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
+        |  CAST(sum(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
+        |  CAST(sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
+        |  CAST(sum(CASE WHEN event_type='signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
+        |  CAST(sum(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS BIGINT) AS error
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
-    "q_delivery_percentiles" -> ((s, d) => Analytics.deliveryPercentiles(
-      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d))),
+    "q_delivery_percentiles" -> Q((s, d) => Analytics.deliveryPercentiles(
+      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d)),
+      """SELECT n_name AS nation,
+        |       round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
+        |       round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
+        |       round(quantile_cont(o_totalprice, 0.99), 4) AS p99
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY nation""".stripMargin),
 
-    "q_star_join" -> ((s, d) => Analytics.starJoin(
-      Tables.lineitem(s, d), Tables.part(s, d), Tables.supplier(s, d), Tables.nation(s, d))),
+    "q_star_join" -> Q((s, d) => Analytics.starJoin(
+      Tables.lineitem(s, d), Tables.part(s, d), Tables.supplier(s, d), Tables.nation(s, d)),
+      """SELECT p_brand, n_name AS supp_nation,
+        |       CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue,
+        |       count(*) AS line_count
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |GROUP BY p_brand, n_name ORDER BY p_brand, supp_nation""".stripMargin),
 
-    "q_top_n_per_group" -> ((s, d) => Analytics.topNPerGroup(
-      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d), 3)),
+    "q_top_n_per_group" -> Q((s, d) => Analytics.topNPerGroup(
+      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d), 3),
+      """WITH spend AS (
+        |  SELECT o_custkey, CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS total_spend
+        |  FROM orders GROUP BY o_custkey)
+        |SELECT nation, c_custkey, c_name, total_spend, "rank" FROM (
+        |  SELECT n_name AS nation, c_custkey, c_name, total_spend,
+        |         CAST(row_number() OVER (PARTITION BY n_name ORDER BY total_spend DESC, c_custkey) AS INTEGER) AS "rank"
+        |  FROM customer
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  JOIN spend ON c_custkey = o_custkey)
+        |WHERE "rank" <= 3 ORDER BY nation, "rank"""".stripMargin),
 
-    "q_top_n_heap" -> ((s, d) => Analytics.topNPerGroupHeap(
-      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d), 3)),
+    "q_top_n_heap" -> Q((s, d) => Analytics.topNPerGroupHeap(
+      Tables.orders(s, d), Tables.customer(s, d), Tables.nation(s, d), 3),
+      """WITH spend AS (
+        |  SELECT o_custkey, CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS total_spend
+        |  FROM orders GROUP BY o_custkey)
+        |SELECT nation, c_custkey, c_name, total_spend, "rank" FROM (
+        |  SELECT n_name AS nation, c_custkey, c_name, total_spend,
+        |         CAST(row_number() OVER (PARTITION BY n_name ORDER BY total_spend DESC, c_custkey) AS INTEGER) AS "rank"
+        |  FROM customer
+        |  JOIN nation ON c_nationkey = n_nationkey
+        |  JOIN spend ON c_custkey = o_custkey)
+        |WHERE "rank" <= 3 ORDER BY nation, "rank"""".stripMargin),
 
-    "q_daily_revenue" -> ((s, d) => Analytics.dailyRevenue(Tables.orders(s, d))),
+    "q_daily_revenue" -> Q((s, d) => Analytics.dailyRevenue(Tables.orders(s, d)),
+      """WITH daily AS (
+        |  SELECT CAST(o_orderdate AS DATE) AS order_day,
+        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue, count(*) AS order_count
+        |  FROM orders GROUP BY 1)
+        |SELECT order_day, revenue, order_count,
+        |       round(sum(revenue) OVER (ORDER BY order_day
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS cum_revenue
+        |FROM daily ORDER BY order_day""".stripMargin),
 
     // Holt linear-trend demand forecast over per-priority daily revenue:
     // the smoothing fold runs in one codegen'd aggregate HOF per group;
     // DuckDB replays the recurrence as a recursive CTE in the same
     // operation order (1-alpha spelled as a subtraction BOTH sides so
     // the literals agree to the ulp)
-    "q_forecast_holt" -> ((s, d) => {
+    "q_forecast_holt" -> Q((s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(col("o_orderpriority"),
           col("o_orderdate").cast("date").as("order_day"))
@@ -544,12 +504,43 @@ object SparkEntry {
       Analytics.holtForecast(daily, Seq("o_orderpriority"), "order_day", "rev",
           alpha = 0.3, beta = 0.1, horizon = 7)
         .orderBy(col("o_orderpriority"), col("step"))
-    }),
+    },
+      // Holt recurrence replayed as a recursive CTE: base case idx=1 is
+      // (level=y1, trend=0); each step computes level_t once per use in
+      // the SAME shape as the Spark fold; smoothing constants appear as
+      // the literal subtractions the Scala side computes
+      """WITH RECURSIVE daily AS (
+        |  SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS order_day,
+        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS rev
+        |  FROM orders GROUP BY 1, 2),
+        |base AS (
+        |  SELECT pri, row_number() OVER (PARTITION BY pri ORDER BY order_day) AS idx,
+        |         rev
+        |  FROM daily),
+        |nn AS (SELECT pri, max(idx) AS n FROM base GROUP BY 1),
+        |holt AS (
+        |  SELECT pri, idx, rev AS level, CAST(0.0 AS DOUBLE) AS trend
+        |  FROM base WHERE idx = 1
+        |  UNION ALL
+        |  SELECT b.pri, b.idx,
+        |         0.3::DOUBLE*b.rev
+        |           + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend) AS level,
+        |         0.1::DOUBLE*((0.3::DOUBLE*b.rev
+        |             + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend)) - h.level)
+        |           + (1.0::DOUBLE - 0.1::DOUBLE)*h.trend AS trend
+        |  FROM holt h JOIN base b ON b.pri = h.pri AND b.idx = h.idx + 1),
+        |fin AS (SELECT h.pri, h.level, h.trend
+        |        FROM holt h JOIN nn ON nn.pri = h.pri AND h.idx = nn.n)
+        |SELECT fin.pri AS o_orderpriority, s.step,
+        |       round(fin.level + s.step * fin.trend, 6) AS forecast
+        |FROM fin CROSS JOIN
+        |  (SELECT CAST(unnest(generate_series(1, 7)) AS INTEGER) AS step) s
+        |ORDER BY o_orderpriority, step""".stripMargin),
 
     // per-brand price elasticity: OLS slope of ln(qty) on ln(unit
     // price) from six decimal-partial sufficient statistics — one
     // partial-aggregated pass, the exchange carries 6 numbers per brand
-    "q_price_elasticity" -> ((s, d) => {
+    "q_price_elasticity" -> Q((s, d) => {
       val pts = Spread.compute(Tables.lineitem(s, d), col("l_orderkey"))
         .join(broadcast(Tables.part(s, d).select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
@@ -559,13 +550,38 @@ object SparkEntry {
           log(col("l_quantity").cast("double")).as("ln_qty"))
       Analytics.groupOls(pts, Seq("p_brand"), "ln_price", "ln_qty")
         .orderBy(col("p_brand"))
-    }),
+    },
+      // the same six sufficient statistics through decimal partials, the
+      // same fixed expression shape for slope/intercept/R²
+      """WITH pts AS (
+        |  SELECT p.p_brand,
+        |         ln(l.l_extendedprice::DOUBLE / l.l_quantity::DOUBLE) AS x,
+        |         ln(l.l_quantity::DOUBLE) AS y
+        |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
+        |s AS (
+        |  SELECT p_brand, count(*) AS n,
+        |         CAST(sum(CAST(x AS DECIMAL(30,12))) AS DOUBLE) AS sx,
+        |         CAST(sum(CAST(y AS DECIMAL(30,12))) AS DOUBLE) AS sy,
+        |         CAST(sum(CAST(x*x AS DECIMAL(30,12))) AS DOUBLE) AS sxx,
+        |         CAST(sum(CAST(x*y AS DECIMAL(30,12))) AS DOUBLE) AS sxy,
+        |         CAST(sum(CAST(y*y AS DECIMAL(30,12))) AS DOUBLE) AS syy
+        |  FROM pts GROUP BY 1)
+        |SELECT p_brand, n,
+        |       round((n*sxy - sx*sy) / NULLIF(n*sxx - sx*sx, 0.0), 6) AS slope,
+        |       round((sy - ((n*sxy - sx*sy) / NULLIF(n*sxx - sx*sx, 0.0)) * sx) / n,
+        |             6) AS intercept,
+        |       round(CASE WHEN (n*sxx - sx*sx) = 0.0 OR (n*syy - sy*sy) = 0.0
+        |                  THEN NULL
+        |                  ELSE (n*sxy - sx*sy)*(n*sxy - sx*sy)
+        |                       / ((n*sxx - sx*sx)*(n*syy - sy*sy)) END, 6) AS r2
+        |FROM s
+        |ORDER BY p_brand""".stripMargin),
 
     // Holt-Winters additive seasonal forecast (m=7 weekly cycle): the
     // fold carries a 7-slot seasonal ring; DuckDB carries the same
     // ring through its recursive CTE as a LIST and must land on
     // identical bits
-    "q_forecast_hw" -> ((s, d) => {
+    "q_forecast_hw" -> Q((s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(col("o_orderpriority"),
           col("o_orderdate").cast("date").as("order_day"))
@@ -574,12 +590,50 @@ object SparkEntry {
       Analytics.holtWintersForecast(daily, Seq("o_orderpriority"), "order_day",
           "rev", alpha = 0.3, beta = 0.1, gamma = 0.2, period = 7, horizon = 14)
         .orderBy(col("o_orderpriority"), col("step"))
-    }),
+    },
+      // the triple-smoothing recurrence with the 7-slot seasonal ring
+      // carried as a LIST through the recursion: read slot (idx mod 7)+1,
+      // rewrite via slice||[new]||slice — the same ring arithmetic the
+      // Spark fold performs
+      """WITH RECURSIVE daily AS (
+        |  SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS order_day,
+        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS rev
+        |  FROM orders GROUP BY 1, 2),
+        |base AS (
+        |  SELECT pri, row_number() OVER (PARTITION BY pri ORDER BY order_day) AS idx,
+        |         rev
+        |  FROM daily),
+        |nn AS (SELECT pri, max(idx) AS n FROM base GROUP BY 1),
+        |hw AS (
+        |  SELECT pri, idx, rev AS level, CAST(0.0 AS DOUBLE) AS trend,
+        |         [0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE,
+        |          0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE] AS seas
+        |  FROM base WHERE idx = 1
+        |  UNION ALL
+        |  SELECT b.pri, b.idx,
+        |    0.3::DOUBLE*(b.rev - h.seas[(h.idx % 7) + 1])
+        |      + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend) AS level,
+        |    0.1::DOUBLE*((0.3::DOUBLE*(b.rev - h.seas[(h.idx % 7) + 1])
+        |        + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend)) - h.level)
+        |      + (1.0::DOUBLE - 0.1::DOUBLE)*h.trend AS trend,
+        |    h.seas[1:(h.idx % 7)]
+        |      || [0.2::DOUBLE*(b.rev - (h.level + h.trend))
+        |          + (1.0::DOUBLE - 0.2::DOUBLE)*h.seas[(h.idx % 7) + 1]]
+        |      || h.seas[((h.idx % 7) + 2):7] AS seas
+        |  FROM hw h JOIN base b ON b.pri = h.pri AND b.idx = h.idx + 1),
+        |fin AS (SELECT h.pri, h.level, h.trend, h.seas, nn.n
+        |        FROM hw h JOIN nn ON nn.pri = h.pri AND h.idx = nn.n)
+        |SELECT fin.pri AS o_orderpriority, s.step,
+        |       round(fin.level + s.step*fin.trend
+        |             + fin.seas[((fin.n + s.step - 1) % 7) + 1], 6) AS forecast
+        |FROM fin CROSS JOIN
+        |  (SELECT CAST(unnest(generate_series(1, 14)) AS INTEGER) AS step) s
+        |ORDER BY o_orderpriority, step""".stripMargin),
 
     // Holt one-step-ahead residual anomalies: expectation is the
     // forecast made BEFORE each day; σ from decimal partials so the
     // flag boundary is engine-deterministic
-    "q_forecast_anomaly" -> ((s, d) => {
+    "q_forecast_anomaly" -> Q((s, d) => {
       val daily = Tables.orders(s, d)
         .groupBy(col("o_orderpriority"),
           col("o_orderdate").cast("date").as("order_day"))
@@ -588,78 +642,300 @@ object SparkEntry {
       Analytics.holtAnomalies(daily, Seq("o_orderpriority"), "order_day", "rev",
           alpha = 0.3, beta = 0.1, zThreshold = 3.0)
         .orderBy(col("o_orderpriority"), col("day"))
-    }),
+    },
+      // the same recurrence, joined one step back for the expectations;
+      // σ assembled from decimal partial sums in the exact expression
+      // shape the Spark side computes
+      """WITH RECURSIVE daily AS (
+        |  SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS order_day,
+        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS rev
+        |  FROM orders GROUP BY 1, 2),
+        |base AS (
+        |  SELECT pri, order_day,
+        |         row_number() OVER (PARTITION BY pri ORDER BY order_day) AS idx,
+        |         rev
+        |  FROM daily),
+        |holt AS (
+        |  SELECT pri, idx, rev AS level, CAST(0.0 AS DOUBLE) AS trend
+        |  FROM base WHERE idx = 1
+        |  UNION ALL
+        |  SELECT b.pri, b.idx,
+        |         0.3::DOUBLE*b.rev
+        |           + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend) AS level,
+        |         0.1::DOUBLE*((0.3::DOUBLE*b.rev
+        |             + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend)) - h.level)
+        |           + (1.0::DOUBLE - 0.1::DOUBLE)*h.trend AS trend
+        |  FROM holt h JOIN base b ON b.pri = h.pri AND b.idx = h.idx + 1),
+        |pts AS (
+        |  SELECT b.pri, b.order_day, b.rev,
+        |         h.level + h.trend AS expected,
+        |         b.rev - (h.level + h.trend) AS err
+        |  FROM base b JOIN holt h ON h.pri = b.pri AND h.idx = b.idx - 1),
+        |st AS (
+        |  SELECT pri,
+        |         CAST(sum(CAST(err AS DECIMAL(30,12))) AS DOUBLE) AS se,
+        |         CAST(sum(CAST(err*err AS DECIMAL(30,12))) AS DOUBLE) AS se2,
+        |         count(*) AS n
+        |  FROM pts GROUP BY pri)
+        |SELECT p.pri AS o_orderpriority, p.order_day AS day, p.rev AS value,
+        |       round(p.expected, 4) AS expected, round(p.err, 4) AS residual,
+        |       abs(p.err) > 3.0::DOUBLE *
+        |         sqrt(greatest(st.se2/st.n - (st.se/st.n)*(st.se/st.n),
+        |                       0.0::DOUBLE)) AS anomaly
+        |FROM pts p JOIN st ON st.pri = p.pri
+        |ORDER BY o_orderpriority, day""".stripMargin),
 
-    "q_moving_avg" -> ((s, d) => Analytics.movingAvgRevenue(Tables.orders(s, d))),
+    "q_moving_avg" -> Q((s, d) => Analytics.movingAvgRevenue(Tables.orders(s, d)),
+      """WITH daily AS (
+        |  SELECT CAST(o_orderdate AS DATE) AS order_day,
+        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue
+        |  FROM orders GROUP BY 1)
+        |SELECT order_day, revenue,
+        |       round(avg(revenue) OVER (ORDER BY order_day
+        |         ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS avg_7d
+        |FROM daily ORDER BY order_day""".stripMargin),
 
     // co-located fact-fact join through bucketed staging tables — zero
     // Exchange on the join (plan pinned in DataSinkSpec)
-    "q_bucketed_join" -> ((s, d) => Analytics.orderRevenueBucketed(
-      s, Tables.orders(s, d), Tables.lineitem(s, d))),
+    "q_bucketed_join" -> Q((s, d) => Analytics.orderRevenueBucketed(
+      s, Tables.orders(s, d), Tables.lineitem(s, d)),
+      """SELECT o_orderkey, o_orderstatus,
+        |  CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue,
+        |  count(*) AS line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderkey, o_orderstatus
+        |ORDER BY o_orderkey""".stripMargin),
 
     // anti join against a filtered fact (all customers have SOME order in
     // this corpus; "no urgent order" gives a real non-empty orphan set)
-    "q_anti_join" -> ((s, d) => Analytics.customersWithoutOrders(
+    "q_anti_join" -> Q((s, d) => Analytics.customersWithoutOrders(
       Tables.customer(s, d),
-      Tables.orders(s, d).filter(col("o_orderpriority") === "1-URGENT"))),
+      Tables.orders(s, d).filter(col("o_orderpriority") === "1-URGENT")),
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
+        |ORDER BY c_custkey""".stripMargin),
 
-    "q_sessionize" -> ((s, d) => Analytics.sessionize(Tables.events(s, d), 30)),
+    "q_sessionize" -> Q((s, d) => Analytics.sessionize(Tables.events(s, d), 30),
+      """WITH flagged AS (
+        |  SELECT user_id, ts, value, event_id,
+        |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
+        |         WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800.0 THEN 1 ELSE 0 END AS new_s
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |sess AS (
+        |  SELECT user_id, ts, value,
+        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
+        |  FROM flagged)
+        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
+        |       min(ts) AS session_start, max(ts) AS session_end,
+        |       count(*) AS event_count,
+        |       CAST(round(sum(CAST(value AS DECIMAL(30,6))),2) AS DOUBLE) AS session_value
+        |FROM sess GROUP BY user_id, session_seq
+        |ORDER BY user_id, session_seq""".stripMargin),
 
     // ordered conversion funnel over the event stream — integer-exact
-    "q_funnel" -> ((s, d) => Analytics.funnel(
+    "q_funnel" -> Q((s, d) => Analytics.funnel(
         Tables.events(s, d), "user_id", "event_type", "ts",
         Seq("click", "view", "purchase"))
-      .orderBy(col("stage"))),
+      .orderBy(col("stage")),
+      """WITH s1 AS (SELECT user_id AS u, min(ts) AS t FROM events
+        |            WHERE event_type = 'click' GROUP BY 1),
+        |s2 AS (SELECT e.user_id AS u, min(e.ts) AS t FROM events e
+        |       JOIN s1 ON e.user_id = s1.u AND e.ts >= s1.t
+        |       WHERE e.event_type = 'view' GROUP BY 1),
+        |s3 AS (SELECT e.user_id AS u, min(e.ts) AS t FROM events e
+        |       JOIN s2 ON e.user_id = s2.u AND e.ts >= s2.t
+        |       WHERE e.event_type = 'purchase' GROUP BY 1)
+        |SELECT 1 AS stage, 'click' AS event_type,
+        |       (SELECT count(*) FROM s1) AS users
+        |UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
+        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
+        |ORDER BY stage""".stripMargin),
 
     // weekly cohort retention triangle — integer-exact
-    "q_cohort_retention" -> ((s, d) =>
+    "q_cohort_retention" -> Q((s, d) =>
       Analytics.cohortRetention(Tables.events(s, d), "user_id", "ts")
-        .orderBy(col("cohort_week"), col("week_offset"))),
+        .orderBy(col("cohort_week"), col("week_offset")),
+      """WITH acts AS (SELECT user_id AS u, CAST(ts AS DATE) AS d FROM events),
+        |firsts AS (SELECT u, CAST(date_trunc('week', min(d)) AS DATE) AS cw
+        |           FROM acts GROUP BY 1)
+        |SELECT cw AS cohort_week,
+        |       CAST(floor(date_diff('day', cw, d) / 7) AS INTEGER) AS week_offset,
+        |       count(DISTINCT u) AS active_users
+        |FROM acts JOIN firsts USING (u)
+        |WHERE floor(date_diff('day', cw, d) / 7) <= 12
+        |GROUP BY 1, 2 ORDER BY cohort_week, week_offset""".stripMargin),
 
     // top event-type trigram journeys (document-frequency counting:
     // each user's distinct n-grams count once — bot-loop-immune)
-    "q_event_journeys" -> ((s, d) =>
+    "q_event_journeys" -> Q((s, d) =>
       Analytics.commonJourneys(Tables.events(s, d), "user_id", "event_type",
           "ts", "event_id", n = 3, topK = 20)
-        .orderBy(col("n_users").desc, col("journey"))),
+        .orderBy(col("n_users").desc, col("journey")),
+      // shingles_of convention mirrored: a path shorter than n collapses
+      // to ONE whole-path gram (the range end's greatest(len−1, 2) yields
+      // exactly i=1 for short paths); DISTINCT per user = doc frequency
+      """WITH s AS (
+        |  SELECT user_id, list(event_type ORDER BY ts, event_id) AS seq
+        |  FROM events GROUP BY user_id),
+        |g AS (
+        |  SELECT user_id, CASE WHEN len(seq) >= 3
+        |      THEN array_to_string(list_slice(seq, i, i + 2), ' ')
+        |      ELSE array_to_string(seq, ' ') END AS journey
+        |  FROM (SELECT user_id, seq,
+        |          unnest(range(1, greatest(len(seq) - 1, 2))) AS i
+        |        FROM s)),
+        |d AS (SELECT DISTINCT user_id, journey FROM g)
+        |SELECT journey, count(*) AS n_users FROM d GROUP BY journey
+        |ORDER BY n_users DESC, journey LIMIT 20""".stripMargin),
 
     // 7-day sliding active users, exact mode (the oracle/audit path;
     // sketch mode is the 100 TB twin, accuracy-pinned in spec)
-    "q_active_users" -> ((s, d) =>
+    "q_active_users" -> Q((s, d) =>
       Analytics.activeUsers(Tables.events(s, d), "user_id", "ts",
           windowDays = 7, mode = "exact")
-        .orderBy(col("day"))),
+        .orderBy(col("day")),
+      """WITH p AS (
+        |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day FROM events),
+        |d AS (SELECT DISTINCT day FROM p)
+        |SELECT d.day AS day, count(DISTINCT p.u) AS active_users
+        |FROM d JOIN p ON p.day >= d.day - 6 AND p.day <= d.day
+        |GROUP BY d.day ORDER BY day""".stripMargin),
 
     // market-basket affinity over order line items: exact counts, one
     // fixed division association, round(4)
-    "q_basket_affinity" -> ((s, d) =>
+    "q_basket_affinity" -> Q((s, d) =>
       Analytics.basketAffinity(Tables.lineitem(s, d), "l_orderkey", "l_partkey",
           minPairCount = 3)
-        .orderBy(col("item_a"), col("item_b"))),
+        .orderBy(col("item_a"), col("item_b")),
+      """WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i FROM lineitem),
+        |n AS (SELECT count(DISTINCT o) AS nn FROM b),
+        |ic AS (SELECT i, count(*) AS c FROM b GROUP BY 1),
+        |pairs AS (SELECT a.i AS item_a, b2.i AS item_b, count(*) AS pair_count
+        |          FROM b a JOIN b b2 ON a.o = b2.o AND a.i < b2.i
+        |          GROUP BY 1, 2 HAVING count(*) >= 3)
+        |SELECT item_a, item_b, pair_count,
+        |  round(CAST(pair_count AS DOUBLE) / nn, 4) AS support,
+        |  round(CAST(pair_count AS DOUBLE) / ca.c, 4) AS confidence,
+        |  round((CAST(pair_count AS DOUBLE) / ca.c)
+        |        / (CAST(cb.c AS DOUBLE) / nn), 4) AS lift
+        |FROM pairs
+        |JOIN ic ca ON item_a = ca.i
+        |JOIN ic cb ON item_b = cb.i, n
+        |ORDER BY item_a, item_b""".stripMargin),
 
     // RFM quintile segmentation (exact-percentile cuts, strict > sums)
-    "q_rfm_segments" -> ((s, d) =>
+    "q_rfm_segments" -> Q((s, d) =>
       Analytics.rfmSegments(Tables.orders(s, d))
-        .orderBy(col("o_custkey"))),
+        .orderBy(col("o_custkey")),
+      // quantile_cont matches Spark's exact-percentile interpolation (the
+      // q_ppl_buckets precedent); monetary rounds to 2 BEFORE the cuts;
+      // scores are the same strict-> comparison sums on both engines
+      """WITH cust AS (
+        |  SELECT o_custkey, max(CAST(o_orderdate AS DATE)) AS last_d,
+        |         count(*) AS frequency,
+        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))), 2) AS DOUBLE)
+        |           AS monetary
+        |  FROM orders GROUP BY 1),
+        |ref AS (SELECT max(CAST(o_orderdate AS DATE)) AS ref_d FROM orders),
+        |base AS (SELECT o_custkey,
+        |           CAST(date_diff('day', last_d, ref_d) AS INTEGER) AS recency_days,
+        |           frequency, monetary
+        |         FROM cust, ref),
+        |cuts AS (SELECT quantile_cont(recency_days, [0.2, 0.4, 0.6, 0.8]) AS rc,
+        |                quantile_cont(frequency, [0.2, 0.4, 0.6, 0.8]) AS fc,
+        |                quantile_cont(monetary, [0.2, 0.4, 0.6, 0.8]) AS mc
+        |         FROM base),
+        |scored AS (
+        |  SELECT o_custkey, recency_days, frequency, monetary,
+        |    5 - ((recency_days > rc[1])::INT + (recency_days > rc[2])::INT
+        |       + (recency_days > rc[3])::INT + (recency_days > rc[4])::INT) AS r_score,
+        |    1 + ((frequency > fc[1])::INT + (frequency > fc[2])::INT
+        |       + (frequency > fc[3])::INT + (frequency > fc[4])::INT) AS f_score,
+        |    1 + ((monetary > mc[1])::INT + (monetary > mc[2])::INT
+        |       + (monetary > mc[3])::INT + (monetary > mc[4])::INT) AS m_score
+        |  FROM base, cuts)
+        |SELECT o_custkey, recency_days, frequency, monetary,
+        |       r_score, f_score, m_score,
+        |       CASE WHEN r_score >= 4 AND f_score >= 4 THEN 'champion'
+        |            WHEN r_score <= 2 AND f_score >= 4 THEN 'at_risk_loyal'
+        |            WHEN r_score >= 4 AND f_score <= 2 THEN 'recent'
+        |            WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
+        |            ELSE 'regular' END AS segment
+        |FROM scored ORDER BY o_custkey""".stripMargin),
 
     // rolling z-score anomalies on daily revenue (exact moments)
-    "q_revenue_anomalies" -> ((s, d) =>
+    "q_revenue_anomalies" -> Q((s, d) =>
       Analytics.revenueAnomalies(Tables.orders(s, d))
-        .orderBy(col("day"))),
+        .orderBy(col("day")),
+      // z from UNROUNDED mean; base_mean rounds separately; a <2-sample
+      // or zero-variance baseline yields NULL z on both engines
+      """WITH daily AS (
+        |  SELECT CAST(o_orderdate AS DATE) AS "day",
+        |    CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))), 2) AS DOUBLE)
+        |      AS revenue
+        |  FROM orders GROUP BY 1),
+        |win AS (
+        |  SELECT "day", revenue,
+        |    count(revenue) OVER w AS n,
+        |    CAST(sum(CAST(revenue AS DECIMAL(30,6))) OVER w AS DOUBLE) AS sx,
+        |    CAST(sum(CAST(revenue * revenue AS DECIMAL(30,6))) OVER w AS DOUBLE)
+        |      AS sxx
+        |  FROM daily
+        |  WINDOW w AS (ORDER BY "day" ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
+        |scored AS (
+        |  SELECT "day", revenue,
+        |    CASE WHEN n >= 2 THEN round(sx / n, 4) END AS base_mean,
+        |    CASE WHEN n >= 2 AND ((sxx - sx * sx / n) / (n - 1)) > 0
+        |         THEN round((revenue - sx / n)
+        |                    / sqrt((sxx - sx * sx / n) / (n - 1)), 4)
+        |    END AS z
+        |  FROM win)
+        |SELECT "day", revenue, base_mean, z,
+        |  CASE WHEN z IS NOT NULL THEN abs(z) > 2.0 ELSE false END AS is_anomaly
+        |FROM scored ORDER BY "day"""".stripMargin),
 
     // reorder-latency histogram (per-customer consecutive order gaps)
-    "q_purchase_intervals" -> ((s, d) =>
+    "q_purchase_intervals" -> Q((s, d) =>
       Analytics.purchaseIntervals(Tables.orders(s, d))
-        .orderBy(col("bucket"))),
+        .orderBy(col("bucket")),
+      """WITH gaps AS (
+        |  SELECT date_diff('day',
+        |      lag(CAST(o_orderdate AS DATE)) OVER (PARTITION BY o_custkey
+        |        ORDER BY o_orderdate, o_orderkey),
+        |      CAST(o_orderdate AS DATE)) AS g
+        |  FROM orders),
+        |b AS (SELECT CASE WHEN g <= 7 THEN '0-7d' WHEN g <= 30 THEN '8-30d'
+        |             WHEN g <= 90 THEN '31-90d' WHEN g <= 365 THEN '91-365d'
+        |             ELSE '365d+' END AS bucket
+        |      FROM gaps WHERE g IS NOT NULL),
+        |cnt AS (SELECT bucket, count(*) AS gaps FROM b GROUP BY 1),
+        |tot AS (SELECT CAST(sum(gaps) AS BIGINT) AS t FROM cnt)
+        |SELECT bucket, gaps, round(CAST(gaps AS DOUBLE) / t, 4) AS share
+        |FROM cnt, tot ORDER BY bucket""".stripMargin),
 
     // per-user Markov transition matrix over event types
-    "q_event_transitions" -> ((s, d) =>
+    "q_event_transitions" -> Q((s, d) =>
       Analytics.eventTransitions(Tables.events(s, d))
-        .orderBy(col("from_type"), col("to_type"))),
+        .orderBy(col("from_type"), col("to_type")),
+      """WITH pairs AS (
+        |  SELECT lag(event_type) OVER (PARTITION BY user_id
+        |           ORDER BY ts, event_id) AS from_type,
+        |         event_type AS to_type
+        |  FROM events),
+        |cnt AS (SELECT from_type, to_type, count(*) AS transitions
+        |        FROM pairs WHERE from_type IS NOT NULL GROUP BY 1, 2),
+        |tot AS (SELECT from_type, CAST(sum(transitions) AS BIGINT) AS t
+        |        FROM cnt GROUP BY 1)
+        |SELECT c.from_type, c.to_type, c.transitions,
+        |       round(CAST(c.transitions AS DOUBLE) / t, 4) AS prob
+        |FROM cnt c JOIN tot USING (from_type)
+        |ORDER BY from_type, to_type""".stripMargin),
 
     // PSI distribution drift: planted 1.5× price shift on half the
     // orders moves o_totalprice; o_custkey stays stable
-    "q_psi_drift" -> ((s, d) => {
+    "q_psi_drift" -> Q((s, d) => {
       val base = Tables.orders(s, d)
       val cur = base.withColumn("o_totalprice",
         when(col("o_orderkey") % 2 === 0, col("o_totalprice") * 1.5)
@@ -667,12 +943,54 @@ object SparkEntry {
       Validation.psiReport(base, cur, Seq("o_custkey", "o_totalprice"),
           alertAt = 0.1)
         .orderBy(col("column"))
+    }, {
+      // one CTE block per column, mirroring psiReport's exact arithmetic:
+      // baseline quantile_cont cuts, strict-> bucket sums, Laplace
+      // (c+0.5)/(n+k/2) smoothing, decimal-summed (p-q)·ln(p/q)
+      val buckets = 10
+      val qs = (1 until buckets).map(i => i.toDouble / buckets)
+        .mkString("[", ", ", "]")
+      val half = buckets / 2.0
+      def colBlock(tag: String, c: String) = {
+        val bexpr = (1 until buckets)
+          .map(i => s"(CAST($c AS DOUBLE) > ct[$i])::INT")
+          .mkString(" + ")
+        s"""${tag}_cuts AS (SELECT quantile_cont(CAST($c AS DOUBLE), $qs) AS ct
+           |  FROM psi_base),
+           |${tag}_p AS (SELECT ($bexpr) AS b, count(*) AS c
+           |  FROM psi_base, ${tag}_cuts WHERE $c IS NOT NULL GROUP BY 1),
+           |${tag}_q AS (SELECT ($bexpr) AS b, count(*) AS c
+           |  FROM psi_cur, ${tag}_cuts WHERE $c IS NOT NULL GROUP BY 1),
+           |${tag}_j AS (SELECT r.range AS b, coalesce(p.c, 0) AS pc,
+           |    coalesce(q.c, 0) AS qc
+           |  FROM range(0, $buckets) r
+           |  LEFT JOIN ${tag}_p p ON r.range = p.b
+           |  LEFT JOIN ${tag}_q q ON r.range = q.b),
+           |${tag}_t AS (SELECT CAST(sum(pc) AS BIGINT) AS pn,
+           |    CAST(sum(qc) AS BIGINT) AS qn FROM ${tag}_j),
+           |$tag AS (SELECT '$c' AS "column",
+           |  round(CAST(sum(CAST(
+           |    ((pc + 0.5) / (pn + $half) - (qc + 0.5) / (qn + $half))
+           |    * ln(((pc + 0.5) / (pn + $half)) / ((qc + 0.5) / (qn + $half)))
+           |    AS DECIMAL(30,12))) AS DOUBLE), 6) AS psi
+           |  FROM ${tag}_j, ${tag}_t)""".stripMargin
+      }
+      s"""WITH psi_base AS (SELECT * FROM orders),
+         |psi_cur AS (SELECT o_custkey,
+         |    CASE WHEN o_orderkey % 2 = 0 THEN o_totalprice * 1.5
+         |         ELSE o_totalprice END AS o_totalprice
+         |  FROM orders),
+         |${colBlock("c1", "o_custkey")},
+         |${colBlock("c2", "o_totalprice")}
+         |SELECT "column", psi, psi > 0.1 AS drift_alert
+         |FROM (SELECT * FROM c1 UNION ALL SELECT * FROM c2)
+         |ORDER BY "column"""".stripMargin
     }),
 
     // categorical PSI drift: a planted segment remap (20% of customers
     // forced into MACHINERY) must alert; the untouched nation code must
     // not — counts are integer-exact, so the oracle replays them
-    "q_psi_drift_cat" -> ((s, d) => {
+    "q_psi_drift_cat" -> Q((s, d) => {
       val base = Tables.customer(s, d)
       val cur = base.withColumn("c_mktsegment",
         when(col("c_custkey") % 5 < 2, lit("MACHINERY"))
@@ -680,28 +998,84 @@ object SparkEntry {
       Validation.psiReportCategorical(base, cur,
           Seq("c_mktsegment", "c_nationkey"), alertAt = 0.1)
         .orderBy(col("column"))
+    }, {
+      // per-column CTE block mirroring psiReportCategorical: union
+      // category frame, k = |frame|, Laplace (c+0.5)/(n+k/2) smoothing,
+      // decimal-summed (p-q)·ln(p/q)
+      def catBlock(tag: String, c: String) =
+        s"""${tag}_p AS (SELECT CAST($c AS VARCHAR) AS cat, count(*) AS c
+           |  FROM cat_base WHERE $c IS NOT NULL GROUP BY 1),
+           |${tag}_q AS (SELECT CAST($c AS VARCHAR) AS cat, count(*) AS c
+           |  FROM cat_cur WHERE $c IS NOT NULL GROUP BY 1),
+           |${tag}_j AS (SELECT coalesce(p.cat, q.cat) AS cat,
+           |    coalesce(p.c, 0) AS pc, coalesce(q.c, 0) AS qc
+           |  FROM ${tag}_p p FULL JOIN ${tag}_q q ON p.cat = q.cat),
+           |${tag}_k AS (SELECT count(*) AS kk FROM ${tag}_j),
+           |${tag}_t AS (SELECT CAST(sum(pc) AS BIGINT) AS pn,
+           |    CAST(sum(qc) AS BIGINT) AS qn FROM ${tag}_j),
+           |$tag AS (SELECT '$c' AS "column",
+           |  round(CAST(sum(CAST(
+           |    ((pc + 0.5) / (pn + kk / 2.0) - (qc + 0.5) / (qn + kk / 2.0))
+           |    * ln(((pc + 0.5) / (pn + kk / 2.0)) / ((qc + 0.5) / (qn + kk / 2.0)))
+           |    AS DECIMAL(30,12))) AS DOUBLE), 6) AS psi
+           |  FROM ${tag}_j, ${tag}_k, ${tag}_t)""".stripMargin
+      s"""WITH cat_base AS (SELECT * FROM customer),
+         |cat_cur AS (SELECT c_custkey, c_nationkey,
+         |    CASE WHEN c_custkey % 5 < 2 THEN 'MACHINERY'
+         |         ELSE c_mktsegment END AS c_mktsegment
+         |  FROM customer),
+         |${catBlock("c1", "c_mktsegment")},
+         |${catBlock("c2", "c_nationkey")}
+         |SELECT "column", psi, psi > 0.1 AS drift_alert
+         |FROM (SELECT * FROM c1 UNION ALL SELECT * FROM c2)
+         |ORDER BY "column"""".stripMargin
     }),
 
     // ABC/Pareto revenue classes (decimal cumsum over the item catalog)
-    "q_abc_analysis" -> ((s, d) =>
+    "q_abc_analysis" -> Q((s, d) =>
       Analytics.abcAnalysis(Tables.lineitem(s, d))
-        .orderBy(col("revenue").desc, col("l_partkey"))),
+        .orderBy(col("revenue").desc, col("l_partkey")),
+      """WITH rev AS (
+        |  SELECT l_partkey,
+        |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+        |      AS DECIMAL(30,6))), 2) AS DOUBLE) AS revenue
+        |  FROM lineitem GROUP BY 1),
+        |tot AS (SELECT CAST(sum(CAST(revenue AS DECIMAL(30,6))) AS DOUBLE) AS t
+        |        FROM rev),
+        |cum AS (
+        |  SELECT l_partkey, revenue,
+        |    CAST(sum(CAST(revenue AS DECIMAL(30,6)))
+        |      OVER (ORDER BY revenue DESC, l_partkey
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+        |      / t AS cum_share
+        |  FROM rev, tot)
+        |SELECT l_partkey, revenue, round(cum_share, 6) AS cum_share,
+        |  CASE WHEN cum_share <= 0.8 THEN 'A'
+        |       WHEN cum_share <= 0.95 THEN 'B' ELSE 'C' END AS abc_class
+        |FROM cum ORDER BY revenue DESC, l_partkey""".stripMargin),
 
-    "q_event_window" -> ((s, d) => Analytics.eventWindowAgg(Tables.events(s, d))),
+    "q_event_window" -> Q((s, d) => Analytics.eventWindowAgg(Tables.events(s, d)),
+      """SELECT date_trunc('hour', ts) AS window_start, event_type,
+        |       count(*) AS event_count,
+        |       CAST(round(sum(CAST(value AS DECIMAL(30,6))),2) AS DOUBLE) AS total_value,
+        |       count(DISTINCT user_id) AS distinct_users
+        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin),
 
     // ---------- B. cleaning ----------
-    "q_dedup_exact" -> ((s, d) =>
+    "q_dedup_exact" -> Q((s, d) =>
       Tables.documents(s, d).groupBy(col("text"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("dup_count"))
         .select(col("keep_id"), col("dup_count"), col("text"))
-        .orderBy(col("keep_id"))),
+        .orderBy(col("keep_id")),
+      """SELECT min(doc_id) AS keep_id, count(*) AS dup_count, text
+        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin),
 
     // unicode normalization (native fold_text): nfc composes NFD input,
     // strip drops accents utf8proc-style, fold adds simple lowercase +
     // whitespace collapse — every non-ASCII piece is built from chr()-
     // equivalent codepoints on both engines, so all three modes get a
     // full hash-match against nfc_normalize / strip_accents / lower
-    "q_text_fold" -> ((s, d) => {
+    "q_text_fold" -> Q((s, d) => {
       val raw = concat_ws(" ", lit("Café"), lit("NAÏVE"),
         lit("Café\tDu  MONDE"), col("text"),
         lit("über STRAßE"))
@@ -711,13 +1085,30 @@ object SparkEntry {
           TextAnalysis.foldText(raw, "strip").as("t_strip"),
           TextAnalysis.foldText(raw, "fold").as("t_fold"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // every non-ASCII codepoint built with chr() so the SQL text stays
+      // pure ASCII (encoding-proof): 233=é 207=Ï 769=combining-acute 9=tab
+      // 252=ü 223=ß; fold = lower ∘ strip_accents + \s-run collapse
+      """WITH r AS (
+        |  SELECT doc_id,
+        |    concat_ws(' ',
+        |      'Caf' || chr(233),
+        |      'NA' || chr(207) || 'VE',
+        |      'Cafe' || chr(769) || chr(9) || 'Du  MONDE',
+        |      text,
+        |      chr(252) || 'ber STRA' || chr(223) || 'E') AS raw
+        |  FROM documents)
+        |SELECT doc_id,
+        |  nfc_normalize(raw) AS t_nfc,
+        |  strip_accents(raw) AS t_strip,
+        |  trim(regexp_replace(lower(strip_accents(raw)), '\s+', ' ', 'g')) AS t_fold
+        |FROM r ORDER BY doc_id""".stripMargin),
 
     // normalization composed into the exact-dedup path: NFC originals and
     // NFD + extra-whitespace copies hash to the SAME fold_text key (every
     // pair collapses to one group, dup_count 2) — the duplicates byte-
     // exact q_dedup_exact cannot see
-    "q_dedup_fold" -> ((s, d) => {
+    "q_dedup_fold" -> Q((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val a = docs.select(col("doc_id"),
         concat(lit("Résumé: "), col("text")).as("text"))
@@ -726,26 +1117,55 @@ object SparkEntry {
       Dedup.exactByNormalizedContent(a.unionByName(b), "doc_id", "text")
         .select(col("keep_id"), col("dup_count"))
         .orderBy(col("keep_id"))
-    }),
+    },
+      // NFC 'Résumé: ' (233) and NFD 'RÉSUMÉ:   ' (69+769) fold to the
+      // same key — group by the folded text (Spark groups by its xxhash64;
+      // the hash never reaches the output so the grouping is identical)
+      """WITH planted AS (
+        |  SELECT doc_id,
+        |    'R' || chr(233) || 'sum' || chr(233) || ': ' || text AS text
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 10000,
+        |    'RE' || chr(769) || 'SUME' || chr(769) || ':   ' || text
+        |  FROM documents),
+        |n AS (
+        |  SELECT doc_id,
+        |    trim(regexp_replace(lower(strip_accents(text)), '\s+', ' ', 'g')) AS k
+        |  FROM planted)
+        |SELECT min(doc_id) AS keep_id, count(*) AS dup_count
+        |FROM n GROUP BY k ORDER BY keep_id""".stripMargin),
 
-    "q_dedup_keepfirst" -> ((s, d) =>
+    "q_dedup_keepfirst" -> Q((s, d) =>
       Cleaning.dedupKeepFirst(Tables.events(s, d), Seq("user_id", "event_type"), "event_id")
         .select(col("user_id"), col("event_type"), col("event_id"), col("ts"), col("value"), col("props"))
-        .orderBy(col("user_id"), col("event_type"))),
+        .orderBy(col("user_id"), col("event_type")),
+      """SELECT user_id, event_type, min(event_id) AS event_id,
+        |       arg_min(ts, event_id) AS ts, arg_min(value, event_id) AS value,
+        |       arg_min(props, event_id) AS props
+        |FROM events GROUP BY user_id, event_type
+        |ORDER BY user_id, event_type""".stripMargin),
 
-    "q_upsert_lastwins" -> ((s, d) =>
+    "q_upsert_lastwins" -> Q((s, d) =>
       Tables.events(s, d).groupBy(col("user_id"), col("event_type"))
         .agg(max(col("event_id")).as("last_event_id"),
           max_by(col("value"), col("event_id")).as("value"),
           max_by(col("ts"), col("event_id")).as("ts"))
-        .orderBy(col("user_id"), col("event_type"))),
+        .orderBy(col("user_id"), col("event_type")),
+      """SELECT user_id, event_type, max(event_id) AS last_event_id,
+        |       arg_max(value, event_id) AS value, arg_max(ts, event_id) AS ts
+        |FROM events GROUP BY user_id, event_type
+        |ORDER BY user_id, event_type""".stripMargin),
 
-    "q_missing_drop" -> ((s, d) =>
+    "q_missing_drop" -> Q((s, d) =>
       Cleaning.dropMissing(ordersWithNulls(s, d), Seq("o_orderpriority"))
         .select(col("o_orderkey"), col("o_orderpriority"))
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      """SELECT o_orderkey, o_orderpriority
+        |FROM (SELECT o_orderkey, nullif(o_orderpriority,'4-NOT SPECIFIED') AS o_orderpriority FROM orders)
+        |WHERE o_orderpriority IS NOT NULL ORDER BY o_orderkey""".stripMargin),
 
-    "q_missing_fill" -> ((s, d) => {
+    "q_missing_fill" -> Q((s, d) => {
       val injected = Tables.events(s, d)
         .withColumn("event_type", nullif(col("event_type"), lit("error")))
         .withColumn("value", when(col("value") < 1d, lit(null)).otherwise(col("value")))
@@ -753,59 +1173,117 @@ object SparkEntry {
           Map("value" -> 0.0d))
         .select(col("event_id"), col("event_type"), col("value"))
         .orderBy(col("event_id"))
-    }),
+    },
+      """SELECT event_id,
+        |       coalesce(nullif(event_type,'error'),'UNKNOWN') AS event_type,
+        |       coalesce(CASE WHEN value < 1 THEN NULL ELSE value END, 0.0) AS value
+        |FROM events ORDER BY event_id""".stripMargin),
 
-    "q_missing_ffill" -> ((s, d) => {
+    "q_missing_ffill" -> Q((s, d) => {
       val injected = Tables.events(s, d)
         .withColumn("value", when(col("value") < 1d, lit(null)).otherwise(col("value")))
       Cleaning.fillForward(injected, Seq("value"), Seq("event_id"), Seq("user_id"))
         .select(col("event_id"), col("user_id"), round(col("value"), 4).as("value_ffill"))
         .orderBy(col("event_id"))
-    }),
+    },
+      """WITH injected AS (
+        |  SELECT event_id, user_id,
+        |         CASE WHEN value < 1 THEN NULL ELSE value END AS value
+        |  FROM events)
+        |SELECT event_id, user_id,
+        |       round(last_value(value IGNORE NULLS) OVER (
+        |         PARTITION BY user_id ORDER BY event_id
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS value_ffill
+        |FROM injected ORDER BY event_id""".stripMargin),
 
-    "q_missing_bfill" -> ((s, d) => {
+    "q_missing_bfill" -> Q((s, d) => {
       val injected = Tables.events(s, d)
         .withColumn("value", when(col("value") < 1d, lit(null)).otherwise(col("value")))
       Cleaning.fillBackward(injected, Seq("value"), Seq("event_id"), Seq("user_id"))
         .select(col("event_id"), col("user_id"), round(col("value"), 4).as("value_bfill"))
         .orderBy(col("event_id"))
-    }),
+    },
+      """WITH injected AS (
+        |  SELECT event_id, user_id,
+        |         CASE WHEN value < 1 THEN NULL ELSE value END AS value
+        |  FROM events)
+        |SELECT event_id, user_id,
+        |       round(first_value(value IGNORE NULLS) OVER (
+        |         PARTITION BY user_id ORDER BY event_id
+        |         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING), 4) AS value_bfill
+        |FROM injected ORDER BY event_id""".stripMargin),
 
-    "q_missing_interpolate" -> ((s, d) => {
+    "q_missing_interpolate" -> Q((s, d) => {
       val injected = Tables.events(s, d)
         .withColumn("value", when(col("value") < 1d, lit(null)).otherwise(col("value")))
       Cleaning.interpolateLinear(injected, "value", Seq("event_id"), Seq("user_id"))
         .select(col("event_id"), col("user_id"), round(col("value"), 4).as("value_interp"))
         .orderBy(col("event_id"))
-    }),
+    },
+      """WITH injected AS (
+        |  SELECT event_id, user_id,
+        |         CASE WHEN value < 1 THEN NULL ELSE value END AS value
+        |  FROM events),
+        |pos AS (
+        |  SELECT *, row_number() OVER w AS p FROM injected
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id)),
+        |ctx AS (
+        |  SELECT *,
+        |    last_value(value IGNORE NULLS) OVER wp AS pv,
+        |    last_value(CASE WHEN value IS NOT NULL THEN p END IGNORE NULLS) OVER wp AS pp,
+        |    first_value(value IGNORE NULLS) OVER wn AS nv,
+        |    first_value(CASE WHEN value IS NOT NULL THEN p END IGNORE NULLS) OVER wn AS np
+        |  FROM pos
+        |  WINDOW wp AS (PARTITION BY user_id ORDER BY p ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+        |         wn AS (PARTITION BY user_id ORDER BY p ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+        |SELECT event_id, user_id,
+        |  round(CASE WHEN value IS NOT NULL THEN value
+        |             WHEN pv IS NULL THEN NULL
+        |             WHEN nv IS NULL THEN pv
+        |             ELSE pv + (nv - pv) * (p - pp) / (np - pp) END, 4) AS value_interp
+        |FROM ctx ORDER BY event_id""".stripMargin),
 
-    "q_missing_fill_median" -> ((s, d) => {
+    "q_missing_fill_median" -> Q((s, d) => {
       val injected = Tables.customer(s, d).withColumn("bal",
         when(col("c_acctbal") < 0d, lit(null)).otherwise(col("c_acctbal")))
       val med = injected.agg(expr("percentile(bal, 0.5)").as("med"))
       injected.crossJoin(broadcast(med))
         .select(col("c_custkey"), round(coalesce(col("bal"), col("med")), 2).as("bal_filled"))
         .orderBy(col("c_custkey"))
-    }),
+    },
+      """WITH injected AS (
+        |  SELECT c_custkey, CASE WHEN c_acctbal < 0 THEN NULL ELSE c_acctbal END AS bal
+        |  FROM customer)
+        |SELECT c_custkey,
+        |       round(coalesce(bal, (SELECT median(bal) FROM injected)),2) AS bal_filled
+        |FROM injected ORDER BY c_custkey""".stripMargin),
 
-    "q_normalize_categorical" -> ((s, d) =>
+    "q_normalize_categorical" -> Q((s, d) =>
       Cleaning.normalizeCategorical(Tables.customer(s, d), Seq("c_mktsegment"), "lower")
         .select(col("c_custkey"), col("c_mktsegment").as("segment"),
           upper(trim(col("c_name"))).as("name_uc"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      """SELECT c_custkey, lower(trim(c_mktsegment)) AS segment,
+        |       upper(trim(c_name)) AS name_uc
+        |FROM customer ORDER BY c_custkey""".stripMargin),
 
     // registry-level keyed Spread (guide §2.5): the single-split lineitem
     // scan otherwise feeds the join + the orderBy's range-sampling pass at
     // 3-way parallelism (probe: two ~0.5-0.8 s serialized stages per pass)
-    "q_derived_metrics" -> ((s, d) =>
+    "q_derived_metrics" -> Q((s, d) =>
       Spread.compute(Tables.lineitem(s, d), col("l_orderkey"))
         .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey"), col("l_linenumber"),
           Cleaning.durationHours(col("l_shipdate"), col("o_orderdate")).as("ship_delay_hours"),
           Cleaning.costRatio(col("l_tax"), col("l_discount")).as("tax_to_discount"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber")),
+      """SELECT l_orderkey, l_linenumber,
+        |       round((epoch(l_shipdate) - epoch(o_orderdate))/3600.0, 2) AS ship_delay_hours,
+        |       round(l_tax / nullif(l_discount, 0), 4) AS tax_to_discount
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
-    "q_timestamp_standardize" -> ((s, d) => {
+    "q_timestamp_standardize" -> Q((s, d) => {
       val fmt = "yyyy-MM-dd HH:mm:ss"
       Spread.compute(Tables.orders(s, d), col("o_orderkey"))
         .withColumn("ts_str", date_format(col("o_orderdate"), fmt))
@@ -813,14 +1291,18 @@ object SparkEntry {
           try_to_timestamp(col("ts_str"), lit(fmt)).as("reparsed"),
           try_to_timestamp(col("o_orderpriority"), lit(fmt)).as("coerced_null"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS ts_str,
+        |       try_strptime(strftime(o_orderdate, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S') AS reparsed,
+        |       try_strptime(o_orderpriority, '%Y-%m-%d %H:%M:%S') AS coerced_null
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // CSV ingest round-trip: lineitem → writeCsv (header) → CsvSource.read
     // (schema'd, corrupt-tolerant) must reproduce the source exactly —
     // longs/strings verbatim, doubles via shortest-round-trip formatting.
     // Oracle is simply the original table: proves the whole CSV path
     // (reference csv_loader.py parity) preserves data.
-    "q_csv_roundtrip" -> ((s, d) => {
+    "q_csv_roundtrip" -> Q((s, d) => {
       import org.apache.spark.sql.types._
       val stage = stageDir("csv", d)
       // stage as MULTIPLE files: the source parquet is one row-group (one
@@ -839,13 +1321,15 @@ object SparkEntry {
       graft.sources.CsvSource.read(s, stage, schema)
         .drop(graft.sources.CsvSource.CorruptCol)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity, l_extendedprice
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // Z-ordered layout scan: lineitem re-clustered on (l_partkey,
     // l_suppkey) so min-max stats prune a predicate on EITHER column;
     // the box filter must return exactly the raw table's rows (layout
     // never changes results — the pruning evidence is in DataSinkSpec).
-    "q_zorder_scan" -> ((s, d) => {
+    "q_zorder_scan" -> Q((s, d) => {
       val stage = stageDir("zorder", d)
       DataSink.writeZOrdered(
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
@@ -854,12 +1338,15 @@ object SparkEntry {
       s.read.parquet(stage)
         .filter(col("l_partkey") <= 100 && col("l_suppkey") <= 20)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity
+        |FROM lineitem WHERE l_partkey <= 100 AND l_suppkey <= 20
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // same box query over the HILBERT-clustered layout (adjacent-cell
     // curve — tighter boxes per sort-key range than Morton); identical
     // result set, layout-independent oracle
-    "q_zorder_scan_hilbert" -> ((s, d) => {
+    "q_zorder_scan_hilbert" -> Q((s, d) => {
       val stage = stageDir("zhilbert", d)
       DataSink.writeZOrdered(
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
@@ -869,14 +1356,17 @@ object SparkEntry {
       s.read.parquet(stage)
         .filter(col("l_partkey") <= 100 && col("l_suppkey") <= 20)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity
+        |FROM lineitem WHERE l_partkey <= 100 AND l_suppkey <= 20
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // STRING z-order: part re-clustered on two STRING columns (brand,
     // container) through the monotone common-prefix hex bucketing —
     // min-max StrStats prune string boxes on either column; the box
     // filter returns exactly the raw table's rows (layout never
     // changes results; pruning evidence is in DataSinkSpec).
-    "q_zorder_string" -> ((s, d) => {
+    "q_zorder_string" -> Q((s, d) => {
       val stage = stageDir("zstring", d)
       DataSink.writeZOrdered(
         Tables.part(s, d).select(col("p_partkey"), col("p_brand"),
@@ -885,14 +1375,17 @@ object SparkEntry {
       s.read.parquet(stage)
         .filter(col("p_brand") <= "Brand#23" && col("p_type") >= "STANDARD")
         .orderBy(col("p_partkey"))
-    }),
+    },
+      """SELECT p_partkey, p_brand, p_type, p_retailprice
+        |FROM part WHERE p_brand <= 'Brand#23' AND p_type >= 'STANDARD'
+        |ORDER BY p_partkey""".stripMargin),
 
     // ORC ingest round-trip: the second columnar format the lake holds.
     // ORC carries its own schema + type system (no parse step), so the
     // round-trip proves type fidelity (longs/ints/doubles/strings land
     // back identically) and that the ORC scan path is wired: column
     // pruning + min-max predicate pushdown are pinned in DataSinkSpec.
-    "q_orc_roundtrip" -> ((s, d) => {
+    "q_orc_roundtrip" -> Q((s, d) => {
       val stage = stageDir("orc", d)
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
@@ -901,102 +1394,270 @@ object SparkEntry {
         .write.mode("overwrite").orc(stage)
       s.read.orc(stage)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity, l_extendedprice
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // value-histogram profiling drill-downs: equal-range grid with
     // max-clamp, and exact-percentile equi-depth cells
-    "q_histogram" -> ((s, d) =>
+    "q_histogram" -> Q((s, d) =>
       Cleaning.histogram(Tables.orders(s, d), "o_totalprice", buckets = 10)
-        .orderBy(col("bucket"))),
+        .orderBy(col("bucket")),
+      // double arithmetic mirrored exactly: width = (hi−lo)/10 then
+      // floor((v−lo)/width), max clamps into the last cell
+      """WITH v AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
+        |           WHERE o_totalprice IS NOT NULL),
+        |mm AS (SELECT min(v) AS glo, max(v) AS ghi FROM v),
+        |b AS (SELECT v, CASE WHEN ghi = glo THEN 0
+        |        ELSE least(CAST(floor((v - glo) / ((ghi - glo) / 10)) AS INT), 9)
+        |        END AS bucket
+        |      FROM v, mm)
+        |SELECT bucket, min(v) AS lo, max(v) AS hi, count(*) AS n
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin),
 
-    "q_histogram_depth" -> ((s, d) =>
+    "q_histogram_depth" -> Q((s, d) =>
       Cleaning.histogram(Tables.orders(s, d), "o_totalprice", buckets = 8,
           mode = "equi_depth")
-        .orderBy(col("bucket"))),
+        .orderBy(col("bucket")), {
+      val cuts = (1 until 8).map(i =>
+        s"quantile_cont(v, ${i / 8.0})").mkString("[", ", ", "]")
+      val sums = (0 until 7).map(i =>
+        s"CASE WHEN v > c[${i + 1}] THEN 1 ELSE 0 END").mkString(" + ")
+      s"""WITH v AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
+         |           WHERE o_totalprice IS NOT NULL),
+         |cuts AS (SELECT $cuts AS c FROM v),
+         |b AS (SELECT v, CAST($sums AS INT) AS bucket FROM v, cuts)
+         |SELECT bucket, min(v) AS lo, max(v) AS hi, count(*) AS n
+         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin
+    }),
 
-    "q_profile" -> ((s, d) =>
+    "q_profile" -> Q((s, d) =>
       Cleaning.profile(Tables.lineitem(s, d), exactDistinct = true)
-        .orderBy(col("column"))),
+        .orderBy(col("column")), {
+      // one UNION ALL branch per lineitem column, all stats from one CTE scan
+      val cols = Seq(
+        ("l_orderkey", "bigint", true), ("l_partkey", "bigint", true),
+        ("l_suppkey", "bigint", true), ("l_linenumber", "int", true),
+        ("l_quantity", "double", true), ("l_extendedprice", "double", true),
+        ("l_discount", "double", true), ("l_tax", "double", true),
+        ("l_returnflag", "string", false), ("l_linestatus", "string", false),
+        ("l_shipdate", "timestamp_ntz", false))
+      val branches = cols.map { case (c, dt, num) =>
+        val mn = if (num) s"CAST(min($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
+        val mx = if (num) s"CAST(max($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
+        val mean = if (num) s"round(avg($c), 4)" else "CAST(NULL AS DOUBLE)"
+        s"""SELECT '$c' AS "column", '$dt' AS dtype, count(*) AS row_count,
+           | CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_count,
+           | round(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END)/CAST(count(*) AS DOUBLE), 4) AS null_pct,
+           | count(DISTINCT $c) AS distinct_count, $mn AS min, $mx AS max, $mean AS mean
+           |FROM lineitem""".stripMargin
+      }
+      branches.mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")
+    }),
 
-    "q_json_extract" -> ((s, d) =>
+    "q_json_extract" -> Q((s, d) =>
       Tables.events(s, d)
         .select(col("event_id"),
           from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("k",
               org.apache.spark.sql.types.IntegerType)))).getField("k").as("k"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      """SELECT event_id, CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INTEGER) AS k
+        |FROM events ORDER BY event_id""".stripMargin),
 
     // ---------- C. validation ----------
-    "q_validate_nulls" -> ((s, d) =>
+    "q_validate_nulls" -> Q((s, d) =>
       Validation.validate(ordersWithNulls(s, d), Seq(
           Validation.nullCheck("o_orderkey", 0.0, "critical"),
           Validation.nullCheck("o_custkey", 0.0, "error"),
           Validation.nullCheck("o_orderpriority", 0.3, "error")),
         thresholds = Map("null_check_o_orderpriority" -> 0.3))
-        .orderBy(col("rule"))),
+        .orderBy(col("rule")),
+      """WITH agg AS (
+        |  SELECT count(*) AS n,
+        |    CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v1,
+        |    CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v2,
+        |    CAST(sum(CASE WHEN nullif(o_orderpriority,'4-NOT SPECIFIED') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v3
+        |  FROM orders)
+        |SELECT * FROM (
+        |  SELECT 'null_check_o_orderkey' AS rule, 'critical' AS severity, n AS row_count,
+        |         v1 AS violations, round(v1/CAST(greatest(n,1) AS DOUBLE),4) AS violation_pct, v1 <= 0 AS passed FROM agg
+        |  UNION ALL
+        |  SELECT 'null_check_o_custkey', 'error', n, v2, round(v2/CAST(greatest(n,1) AS DOUBLE),4), v2 <= 0 FROM agg
+        |  UNION ALL
+        |  SELECT 'null_check_o_orderpriority', 'error', n, v3, round(v3/CAST(greatest(n,1) AS DOUBLE),4), v3 <= 0.3*n FROM agg)
+        |ORDER BY rule""".stripMargin),
 
-    "q_validate_rules" -> ((s, d) =>
+    "q_validate_rules" -> Q((s, d) =>
       Validation.validate(Tables.lineitem(s, d), Seq(
           Validation.rangeCheck("l_quantity", Some(1d), Some(50d), "error"),
           Validation.rangeCheck("l_extendedprice", Some(0d), None, "error"),
           Validation.rangeCheck("l_discount", Some(0d), Some(0.05), "warning"),
           Validation.businessRule("tax_le_discount", col("l_tax") <= col("l_discount"))))
-        .orderBy(col("rule"))),
+        .orderBy(col("rule")),
+      """WITH agg AS (
+        |  SELECT count(*) AS n,
+        |    CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT) AS v1,
+        |    CAST(sum(CASE WHEN l_extendedprice < 0 THEN 1 ELSE 0 END) AS BIGINT) AS v2,
+        |    CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS v3,
+        |    CAST(sum(CASE WHEN NOT coalesce(l_tax <= l_discount, false) THEN 1 ELSE 0 END) AS BIGINT) AS v4
+        |  FROM lineitem)
+        |SELECT * FROM (
+        |  SELECT 'business_rule_tax_le_discount' AS rule, 'warning' AS severity, n AS row_count,
+        |         v4 AS violations, round(v4/CAST(greatest(n,1) AS DOUBLE),4) AS violation_pct, v4 <= 0 AS passed FROM agg
+        |  UNION ALL
+        |  SELECT 'range_check_l_discount', 'warning', n, v3, round(v3/CAST(greatest(n,1) AS DOUBLE),4), v3 <= 0 FROM agg
+        |  UNION ALL
+        |  SELECT 'range_check_l_extendedprice', 'error', n, v2, round(v2/CAST(greatest(n,1) AS DOUBLE),4), v2 <= 0 FROM agg
+        |  UNION ALL
+        |  SELECT 'range_check_l_quantity', 'error', n, v1, round(v1/CAST(greatest(n,1) AS DOUBLE),4), v1 <= 0 FROM agg)
+        |ORDER BY rule""".stripMargin),
 
-    "q_validate_unique" -> ((s, d) =>
-      Validation.uniqueCheck(Tables.orders(s, d), Seq("o_custkey"))),
+    "q_validate_unique" -> Q((s, d) =>
+      Validation.uniqueCheck(Tables.orders(s, d), Seq("o_custkey")),
+      """WITH g AS (SELECT o_custkey, count(*) AS cnt FROM orders GROUP BY o_custkey)
+        |SELECT 'unique_check_o_custkey' AS rule,
+        |  CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS duplicate_keys,
+        |  CAST(sum(CASE WHEN cnt > 1 THEN cnt - 1 ELSE 0 END) AS BIGINT) AS duplicate_rows,
+        |  CAST(sum(CASE WHEN cnt > 1 THEN cnt - 1 ELSE 0 END) AS BIGINT) = 0 AS passed
+        |FROM g""".stripMargin),
 
     // skew-proof exact NDV (value-space slicing) — must equal count_distinct
-    "q_skew_ndv" -> ((s, d) =>
+    "q_skew_ndv" -> Q((s, d) =>
       Skew.countDistinctSalted(Tables.events(s, d), Seq("event_type"), "user_id", "ndv")
-        .orderBy(col("event_type"))),
+        .orderBy(col("event_type")),
+      """SELECT event_type, count(DISTINCT user_id) AS ndv
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // ---------- F. LLM-pipeline operators ----------
-    "q_token_count" -> ((s, d) =>
+    "q_token_count" -> Q((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens"),
           TextAnalysis.bpeishTokenCount(col("text")).as("n_bpeish"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT doc_id,
+        |  CAST(len(string_split(trim(text), ' ')) AS INTEGER) AS n_tokens,
+        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS n_bpeish
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_text_quality" -> ((s, d) =>
+    "q_text_quality" -> Q((s, d) =>
       TextAnalysis.qualityScore(Tables.documents(s, d), "text")
         .select(col("doc_id"), col("n_chars_q"), col("n_words"),
           col("mean_word_len"), col("stopword_ratio"), col("punct_ratio"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT doc_id,
+        |  CAST(length(text) AS INTEGER) AS n_chars_q,
+        |  CAST(len(string_split(trim(text), ' ')) AS INTEGER) AS n_words,
+        |  round(CAST(length(text) - (len(string_split(trim(text),' ')) - 1) AS DOUBLE)
+        |        / len(string_split(trim(text),' ')), 4) AS mean_word_len,
+        |  round(CAST(len(list_filter(string_split(trim(text),' '),
+        |        w -> w IN ('the','a','an','of','and','to','in','is'))) AS DOUBLE)
+        |        / len(string_split(trim(text),' ')), 4) AS stopword_ratio,
+        |  round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
+        |        / greatest(length(text), 1), 4) AS punct_ratio
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
-    "q_lang_id" -> ((s, d) =>
+    "q_lang_id" -> Q((s, d) =>
       TextAnalysis.langIdFrame(Tables.documents(s, d), "text")
         .select(col("doc_id"), col("pred_lang"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH scored AS (
+        |  SELECT doc_id,
+        |    len(list_filter(string_split(trim(text),' '), w -> w IN ('the','a','an','of','and','to','in','is'))) AS en,
+        |    len(list_filter(string_split(trim(text),' '), w -> w IN ('el','la','de','y','que','en','los','un'))) AS es,
+        |    len(list_filter(string_split(trim(text),' '), w -> w IN ('le','la','de','et','les','des','un','une'))) AS fr,
+        |    len(list_filter(string_split(trim(text),' '), w -> w IN ('der','die','das','und','ist','ein','nicht','mit'))) AS de
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CASE WHEN en >= greatest(es, fr, de) AND en > 0 THEN 'en'
+        |       WHEN es >= greatest(fr, de) AND es > 0 THEN 'es'
+        |       WHEN fr >= de AND fr > 0 THEN 'fr'
+        |       WHEN de > 0 THEN 'de'
+        |       ELSE 'und' END AS pred_lang
+        |FROM scored ORDER BY doc_id""".stripMargin),
 
     // rolling Rabin-Karp fingerprint in the md5_52 token-hash mode: the
     // 52-bit md5-prefix token hash + mod-2^64 fold are both DuckDB-
     // expressible (list_reduce over HUGEINT), so this is hash-matched;
     // the xx production mode is pinned by FunctionsSpec bit-equivalence
-    "q_fingerprint" -> ((s, d) =>
+    "q_fingerprint" -> Q((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           TextAnalysis.fingerprint(col("text"), hashMode = "md5_52").as("fingerprint"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")), {
+      // rolling Rabin-Karp fold mirrored exactly: per-token 52-bit md5
+      // prefix (the engine-validated q_sample_exact nibble fold), then
+      // list_reduce of h*B + th over HUGEINT mod 2^64, sign-converted to
+      // Spark's signed long at the end
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(tk), $i, 1)) - 1)"
+      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+      s"""WITH t AS (
+         |  SELECT doc_id,
+         |    list_transform(string_split(trim(text), ' '),
+         |      tk -> CAST($folded AS HUGEINT)) AS ths
+         |  FROM documents),
+         |f AS (
+         |  SELECT doc_id,
+         |    list_reduce(list_prepend(CAST(0 AS HUGEINT), ths),
+         |      (acc, x) -> (acc * 1000003 + x)
+         |        % CAST('18446744073709551616' AS HUGEINT)) AS h
+         |  FROM t)
+         |SELECT doc_id,
+         |  CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
+         |    THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END
+         |    AS BIGINT) AS fingerprint
+         |FROM f ORDER BY doc_id""".stripMargin
+    }),
 
     // DSIR importance scoring (round 9): weights fit on the en-subset
     // target vs the whole corpus (2×256 bucket counts — the ONLY
     // driver-side data), then one fused clf_score pass; the full
     // fit→score pipeline is mirrored by the oracle (md5 buckets, add-one
     // smoothing, ln ratios, mean pooling)
-    "q_dsir_score" -> ((s, d) => {
+    "q_dsir_score" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       val w = Curation.dsirWeights(docs, docs.filter(col("lang") === "en"), "text")
       Curation.dsirScore(docs, "text", w)
         .select(col("doc_id"), round(col("dsir_score"), 6).as("dsir_score"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // full DSIR mirror: same md5-byte buckets (strpos nibble fold), the
+      // same add-one-smoothed counts (source = every token's bucket is in
+      // src by construction — the scored corpus IS the source), ln ratios,
+      // avg pooling; round(6) absorbs ln/summation-order ulps
+      """WITH tok AS (
+        |  SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS t
+        |  FROM documents),
+        |b AS (
+        |  SELECT doc_id, lang,
+        |    (strpos('0123456789abcdef', substr(md5('dsir' || t), 1, 1)) - 1) * 16
+        |    + (strpos('0123456789abcdef', substr(md5('dsir' || t), 2, 1)) - 1)
+        |      AS bkt
+        |  FROM tok),
+        |src AS (SELECT bkt, count(*) AS c FROM b GROUP BY bkt),
+        |tgt AS (SELECT bkt, count(*) AS c FROM b WHERE lang = 'en' GROUP BY bkt),
+        |tots AS (SELECT
+        |  (SELECT sum(c) FROM src) + 256.0 AS sc,
+        |  (SELECT sum(c) FROM tgt) + 256.0 AS tc),
+        |w AS (
+        |  SELECT s.bkt,
+        |    ln((coalesce(t.c, 0) + 1.0) / tots.tc) - ln((s.c + 1.0) / tots.sc)
+        |      AS wt
+        |  FROM src s LEFT JOIN tgt t ON t.bkt = s.bkt, tots),
+        |sc AS (
+        |  SELECT b.doc_id, avg(w.wt) AS m
+        |  FROM b JOIN w ON w.bkt = b.bkt
+        |  GROUP BY b.doc_id)
+        |SELECT d.doc_id, round(sc.m, 6) AS dsir_score
+        |FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
 
     // Gopher rule chain (round 9): flags + conjunction per doc;
     // thresholds re-parameterized for this corpus's 10-99-word docs so
     // the split is nontrivial (word-count and stopword rules both bite)
-    "q_gopher_filter" -> ((s, d) =>
+    "q_gopher_filter" -> Q((s, d) =>
       Curation.gopherRules(Tables.documents(s, d), "text",
           minWords = 25, maxWords = 100000, minMeanWordLen = 3.0,
           maxMeanWordLen = 10.0, maxPunctRatio = 0.2, minStopwords = 2,
@@ -1004,20 +1665,56 @@ object SparkEntry {
         .select(col("doc_id"), col("ok_words"), col("ok_word_len"),
           col("ok_punct"), col("ok_stopwords"), col("ok_repetition"),
           col("gopher_keep"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // the five Gopher signals re-derived with the q_text_quality /
+      // q_text_repetition formulas, thresholds inline
+      """WITH s AS (
+        |  SELECT doc_id,
+        |    len(string_split(trim(text), ' ')) AS nw,
+        |    round(CAST(length(text) - (len(string_split(trim(text),' ')) - 1) AS DOUBLE)
+        |          / len(string_split(trim(text),' ')), 4) AS mwl,
+        |    round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
+        |          / greatest(length(text), 1), 4) AS pr,
+        |    len(list_filter(string_split(trim(text),' '),
+        |        w -> w IN ('the','a','an','of','and','to','in','is'))) AS stop,
+        |    round(1 - CASE WHEN len(string_split(trim(text),' ')) >= 2
+        |        THEN len(list_distinct(list_transform(
+        |               range(1, len(string_split(trim(text),' '))),
+        |               i -> string_split(trim(text),' ')[i] || ' ' ||
+        |                    string_split(trim(text),' ')[i+1])))
+        |        ELSE 1 END
+        |      / CAST(greatest(len(string_split(trim(text),' ')) - 1, 1) AS DOUBLE), 4)
+        |      AS d2
+        |  FROM documents)
+        |SELECT doc_id,
+        |  nw BETWEEN 25 AND 100000 AS ok_words,
+        |  mwl BETWEEN 3.0 AND 10.0 AS ok_word_len,
+        |  pr <= 0.2 AS ok_punct,
+        |  stop >= 2 AS ok_stopwords,
+        |  d2 <= 0.2 AS ok_repetition,
+        |  (nw BETWEEN 25 AND 100000) AND (mwl BETWEEN 3.0 AND 10.0)
+        |    AND pr <= 0.2 AND stop >= 2 AND d2 <= 0.2 AS gopher_keep
+        |FROM s ORDER BY doc_id""".stripMargin),
 
     // C4/Gopher-style repetition quality signals (boilerplate/spam score
     // high while passing exact+near dedup, because each DOC is unique but
     // its content repeats internally)
-    "q_text_repetition" -> ((s, d) =>
+    "q_text_repetition" -> Q((s, d) =>
       Curation.repetitionSignals(Tables.documents(s, d), "text")
         .select(col("doc_id"), col("dup_word_ratio"), col("dup_2gram_ratio"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)
+        |SELECT doc_id,
+        |  round(1 - len(list_distinct(t)) / CAST(len(t) AS DOUBLE), 4) AS dup_word_ratio,
+        |  round(1 - CASE WHEN len(t) >= 2
+        |      THEN len(list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])))
+        |      ELSE 1 END / CAST(greatest(len(t) - 1, 1) AS DOUBLE), 4) AS dup_2gram_ratio
+        |FROM toks ORDER BY doc_id""".stripMargin),
 
     // PII scrub: plant a deterministic email+phone on every 5th doc (both
     // engines inject identically), redact, count matches — proves the
     // redaction actually fires, not just passes clean text through
-    "q_redact" -> ((s, d) => {
+    "q_redact" -> Q((s, d) => {
       val injected = Tables.documents(s, d).withColumn("dirty",
         when(pmod(col("doc_id"), lit(5)) === 0,
           concat(col("text"), lit(" contact user"), col("doc_id"),
@@ -1028,19 +1725,38 @@ object SparkEntry {
           Curation.redactPII(col("dirty")).as("clean_text"),
           Curation.piiMatchCount(col("dirty")).as("pii_matches"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH dirty AS (
+        |  SELECT doc_id,
+        |    CASE WHEN doc_id % 5 = 0
+        |         THEN text || ' contact user' || doc_id || '@example.com or +1 (555) 010-' || doc_id
+        |         ELSE text END AS dirty
+        |  FROM documents)
+        |SELECT doc_id,
+        |  regexp_replace(
+        |    regexp_replace(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |    '\+?[0-9][0-9()\- ]{6,}[0-9]', '<PHONE>', 'g') AS clean_text,
+        |  CAST(len(regexp_extract_all(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
+        |     + len(regexp_extract_all(
+        |         regexp_replace(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |         '\+?[0-9][0-9()\- ]{6,}[0-9]')) AS INTEGER) AS pii_matches
+        |FROM dirty ORDER BY doc_id""".stripMargin),
 
     // deterministic content-hash train/val split (stable across runs,
     // partitionings, and engines; exact dups land on the same side)
-    "q_split_assign" -> ((s, d) =>
+    "q_split_assign" -> Q((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"), Curation.hashSplit(col("text")).as("split_label"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT doc_id,
+        |  CASE WHEN strpos('0123456789abcdef', substr(md5(text), 32, 1)) - 1 < 14
+        |       THEN 'train' ELSE 'val' END AS split_label
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // line-level boilerplate removal: plant a license footer on EVERY doc
     // (df=500 ≫ 100) plus a unique tail line (df=1) — the footer must
     // vanish from all docs, the tail and original text must survive
-    "q_boilerplate_lines" -> ((s, d) => {
+    "q_boilerplate_lines" -> Q((s, d) => {
       val docs = Tables.documents(s, d).withColumn("text2",
         concat_ws("\n", col("text"),
           lit("(c) example corp - all rights reserved"),
@@ -1048,7 +1764,29 @@ object SparkEntry {
       Curation.removeBoilerplateLines(docs, "doc_id", "text2", maxDocFreq = 100)
         .select(col("doc_id"), col("clean_text"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // boilerplate mirror: identical planted footer; df counted per exact
+      // line (native side hashes lines — string equality is the same
+      // relation); reassembly = order-preserving string_agg
+      """WITH aug AS (
+        |  SELECT doc_id,
+        |    text || chr(10) || '(c) example corp - all rights reserved'
+        |         || chr(10) || 'doc tail ' || doc_id AS t2
+        |  FROM documents),
+        |l AS (SELECT doc_id, string_split(t2, chr(10)) AS ls FROM aug),
+        |ex AS (
+        |  SELECT doc_id, unnest(ls) AS line,
+        |         unnest(range(1, len(ls) + 1)) AS pos
+        |  FROM l),
+        |dfq AS (SELECT line, count(DISTINCT doc_id) AS dfc FROM ex GROUP BY 1),
+        |boiler AS (SELECT line FROM dfq WHERE dfc > 100),
+        |kept AS (SELECT e.* FROM ex e ANTI JOIN boiler b ON e.line = b.line),
+        |agg AS (
+        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text
+        |  FROM kept GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text
+        |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
 
     // substring-level dedup (Lee et al.-style span removal) on the
     // natural corpus: 5-token windows shared by ≥2 docs are cut from
@@ -1057,11 +1795,50 @@ object SparkEntry {
     // this shared-vocab corpus); md5_52 window-hash mode — the whole
     // pipeline (window hash, distinct-doc count, position coverage,
     // re-join) is mirrored by the oracle
-    "q_dedup_spans" -> ((s, d) =>
+    "q_dedup_spans" -> Q((s, d) =>
       Dedup.removeDuplicateSpans(Tables.documents(s, d), "doc_id", "text",
           width = 5, hashMode = "md5_52")
         .select(col("doc_id"), col("clean_text"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")), {
+      // full mirror of the span-removal pipeline: md5_52 window hash
+      // (13-nibble fold), distinct-doc frequency, position coverage via
+      // zipped unnests, ordered re-join
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(gram), $i, 1)) - 1)"
+      val fold = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+      s"""WITH t AS (
+         |  SELECT doc_id, text, string_split(trim(text), ' ') AS toks
+         |  FROM documents),
+         |w AS (
+         |  SELECT doc_id, toks, unnest(range(1, len(toks) - 3)) AS i
+         |  FROM t WHERE len(toks) >= 5),
+         |g AS (
+         |  SELECT doc_id, i,
+         |    array_to_string(list_slice(toks, i, i + 4), ' ') AS gram
+         |  FROM w),
+         |h AS (SELECT doc_id, i, CAST($fold AS BIGINT) AS wh FROM g),
+         |dup AS (
+         |  SELECT wh FROM h GROUP BY wh HAVING count(DISTINCT doc_id) >= 2),
+         |cov AS (
+         |  SELECT DISTINCT doc_id, unnest(range(i, i + 5)) AS p
+         |  FROM h WHERE wh IN (SELECT wh FROM dup)),
+         |tok AS (
+         |  SELECT doc_id, unnest(toks) AS tk,
+         |         unnest(range(1, len(toks) + 1)) AS p
+         |  FROM t),
+         |kept AS (
+         |  SELECT tok.doc_id, tok.p, tok.tk FROM tok
+         |  LEFT JOIN cov ON cov.doc_id = tok.doc_id AND cov.p = tok.p
+         |  WHERE cov.doc_id IS NULL),
+         |cl AS (
+         |  SELECT doc_id, string_agg(tk, ' ' ORDER BY p) AS clean
+         |  FROM kept GROUP BY doc_id)
+         |SELECT d.doc_id,
+         |  CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(cl.clean, '') END
+         |    AS clean_text
+         |FROM documents d LEFT JOIN cl ON cl.doc_id = d.doc_id
+         |ORDER BY d.doc_id""".stripMargin
+    }),
 
     // maximal duplicated regions: the stride-1 covering windows collapsed
     // to per-doc [start, end] intervals (the provenance view of the span
@@ -1070,76 +1847,161 @@ object SparkEntry {
     // has already run in this session the CacheManager substitutes the
     // staged subtree here (sameResult) and the detection pipeline is not
     // re-paid — the round-8 verdict's item 2.
-    "q_dup_span_merge" -> ((s, d) =>
+    "q_dup_span_merge" -> Q((s, d) =>
       Dedup.mergeSpans(
           Dedup.duplicatedSpans(Tables.documents(s, d), "doc_id", "text",
             width = 5, hashMode = "md5_52"),
           "doc_id")
-        .orderBy(col("doc_id"), col("span_start"))),
+        .orderBy(col("doc_id"), col("span_start")), {
+      // same window-hash/dup CTEs as q_dedup_spans, then the classic
+      // segment merge: running max end (ROWS ... 1 PRECEDING) decides
+      // openers, running sum of openers numbers the segments
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(gram), $i, 1)) - 1)"
+      val fold = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+      s"""WITH t AS (
+         |  SELECT doc_id, string_split(trim(text), ' ') AS toks
+         |  FROM documents),
+         |w AS (
+         |  SELECT doc_id, toks, unnest(range(1, len(toks) - 3)) AS i
+         |  FROM t WHERE len(toks) >= 5),
+         |g AS (
+         |  SELECT doc_id, i,
+         |    array_to_string(list_slice(toks, i, i + 4), ' ') AS gram
+         |  FROM w),
+         |h AS (SELECT doc_id, i, CAST($fold AS BIGINT) AS wh FROM g),
+         |dup AS (
+         |  SELECT wh FROM h GROUP BY wh HAVING count(DISTINCT doc_id) >= 2),
+         |sp AS (
+         |  SELECT doc_id, i AS s, i + 4 AS e FROM h
+         |  WHERE wh IN (SELECT wh FROM dup)),
+         |m AS (
+         |  SELECT doc_id, s, e,
+         |    max(e) OVER (PARTITION BY doc_id ORDER BY s, e
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+         |  FROM sp),
+         |seg AS (
+         |  SELECT doc_id, s, e,
+         |    sum(CASE WHEN pm IS NULL OR s > pm + 1 THEN 1 ELSE 0 END)
+         |      OVER (PARTITION BY doc_id ORDER BY s, e) AS sid
+         |  FROM m)
+         |SELECT doc_id, min(s) AS span_start, max(e) AS span_end
+         |FROM seg GROUP BY doc_id, sid
+         |ORDER BY doc_id, span_start""".stripMargin
+    }),
 
     // winnowing fingerprints (Schleimer/Wilkerson/Aiken SIGMOD'03): the
     // span family's window hashes subsampled to per-w-window minima
     // (rightmost on ties) — ~2/(w+1) density with the ≥ w+k−1 shared-run
     // detection guarantee; md5_52 window hashes, mirrored by the oracle
-    "q_winnow_fp" -> ((s, d) =>
+    "q_winnow_fp" -> Q((s, d) =>
       Dedup.winnowFingerprints(Tables.documents(s, d), "doc_id", "text",
           k = 5, w = 4, hashMode = "md5_52")
-        .orderBy(col("doc_id"), col("fp"))),
+        .orderBy(col("doc_id"), col("fp")),
+      // winnowing: same md5-fold window-hash table as q_dedup_spans, then
+      // per window start j (full windows only, plus the single truncated
+      // window of a short doc) the min hash with rightmost tie (wh ASC,
+      // position DESC), distinct per doc
+      s"""${winnowFpCtes()}
+         |SELECT doc_id, fp FROM fp ORDER BY doc_id, fp""".stripMargin),
 
     // overlap candidates from the fingerprint index: docs sharing ≥2
     // fingerprints (Σ df² inverted-index join, fingerprints hotter than
     // 64 docs dropped)
-    "q_winnow_overlap" -> ((s, d) =>
+    "q_winnow_overlap" -> Q((s, d) =>
       Dedup.winnowOverlap(Tables.documents(s, d), "doc_id", "text",
           k = 5, w = 4, minShared = 2, maxDf = 64, hashMode = "md5_52")
-        .orderBy(col("a_id"), col("b_id"))),
+        .orderBy(col("a_id"), col("b_id")),
+      s"""${winnowFpCtes()},
+         |rare AS (SELECT fp FROM fp GROUP BY fp HAVING count(*) <= 64),
+         |kept AS (SELECT doc_id, fp FROM fp
+         |         WHERE fp IN (SELECT fp FROM rare))
+         |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared
+         |FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
+         |GROUP BY a.doc_id, b.doc_id HAVING count(*) >= 2
+         |ORDER BY a_id, b_id""".stripMargin),
 
     // incremental winnow probe: a constructed batch (every 7th doc,
     // tail-extended, re-keyed) probes the PERSISTED corpus fingerprint
     // index — corpus text never touched at probe time
-    "q_winnow_incr" -> ((s, d) => {
+    "q_winnow_incr" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       // the fingerprint index is the persistable deployment artifact
       // (built once over landed history, like ivfSave's index and the
       // PQ codebooks) — staged to parquet once per sf-dir so the query
       // times the PROBE, not a per-pass index rebuild
-      val idxPath = winnowIdxPath.getOrElseUpdate(d, {
-        val p = stageDir("winnowidx", d)
+      val idxPath = staged("winnowidx", d) { p =>
         Dedup.winnowFingerprints(docs, "doc_id", "text",
             k = 5, w = 4, hashMode = "md5_52")
           .write.mode("overwrite").parquet(p)
-        p
-      })
+      }
       val batch = docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat(col("text"), lit(" probe tail suffix")).as("text"))
       Dedup.winnowAgainstCorpus(batch, s.read.parquet(idxPath), "doc_id", "text",
           k = 5, w = 4, minShared = 2, maxDf = 64, hashMode = "md5_52")
         .orderBy(col("batch_id"), col("corpus_id"))
-    }),
+    },
+      // winnowing is per-doc independent, so fingerprinting the corpus ∪
+      // re-keyed batch union once equals fingerprinting each separately;
+      // the maxDf guard computes over CORPUS-side fps only (a.doc_id side)
+      s"""${winnowFpCtes(
+             "(SELECT doc_id, text FROM documents UNION ALL " +
+             "SELECT doc_id + 1000000, text || ' probe tail suffix' " +
+             "FROM documents WHERE doc_id % 7 = 0)")},
+         |rare AS (SELECT fp FROM fp WHERE doc_id < 1000000
+         |         GROUP BY fp HAVING count(*) <= 64)
+         |SELECT b.doc_id AS batch_id, a.doc_id AS corpus_id,
+         |       count(*) AS shared
+         |FROM fp a JOIN fp b ON a.fp = b.fp
+         |  AND a.doc_id < 1000000 AND b.doc_id >= 1000000
+         |WHERE a.fp IN (SELECT fp FROM rare)
+         |GROUP BY b.doc_id, a.doc_id HAVING count(*) >= 2
+         |ORDER BY batch_id, corpus_id""".stripMargin),
 
     // token-distribution Shannon entropy (native one-pass expression,
     // zero shuffle) — the distribution-level repetition/gibberish signal
-    "q_token_entropy" -> ((s, d) =>
+    "q_token_entropy" -> Q((s, d) =>
       Tables.documents(s, d).select(col("doc_id"),
           round(TextAnalysis.tokenEntropy(col("text")), 6).as("entropy"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // factored form H = log2(n) − Σ c·log2(c)/n mirrored exactly
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tk
+        |  FROM documents),
+        |c AS (SELECT doc_id, tk, count(*) AS c FROM tok GROUP BY doc_id, tk),
+        |n AS (SELECT doc_id, sum(c) AS n FROM c GROUP BY doc_id)
+        |SELECT c.doc_id AS doc_id,
+        |       round(log2(n.n) - sum(c.c * log2(c.c)) / n.n, 6) AS entropy
+        |FROM c JOIN n ON c.doc_id = n.doc_id
+        |GROUP BY c.doc_id, n.n ORDER BY doc_id""".stripMargin),
 
     // deterministic language mixing: en kept whole, others downsampled by
     // fixed rates — content-hash Bernoulli, mirrored bucket-exactly by the
     // oracle (md5 nibbles are engine-independent)
-    "q_sample_weighted" -> ((s, d) =>
+    "q_sample_weighted" -> Q((s, d) =>
       Curation.sampleByWeight(Tables.documents(s, d), "lang", "text",
           rates = Map("en" -> 1.0, "de" -> 0.5, "fr" -> 0.25,
             "es" -> 0.25, "zh" -> 0.125),
           seed = "mix1")
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH b AS (
+        |  SELECT doc_id, lang,
+        |    (strpos('0123456789abcdef', substr(md5('mix1' || text), 1, 1)) - 1) * 16
+        |    + (strpos('0123456789abcdef', substr(md5('mix1' || text), 2, 1)) - 1)
+        |      AS bucket
+        |  FROM documents)
+        |SELECT doc_id, lang FROM b
+        |WHERE bucket < round(CASE lang
+        |    WHEN 'en' THEN 1.0 WHEN 'de' THEN 0.5 WHEN 'fr' THEN 0.25
+        |    WHEN 'es' THEN 0.25 WHEN 'zh' THEN 0.125 ELSE 1.0 END * 256)
+        |ORDER BY doc_id""".stripMargin),
 
     // concat-and-chunk packing plan: 4 hash shards, 512-token sequences;
     // the whole layout (sequence index, offset, span) is window algebra
     // both engines compute exactly
-    "q_pack_sequences" -> ((s, d) => {
+    "q_pack_sequences" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
         .withColumn("shard", pmod(col("doc_id"), lit(4)))
         .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")).cast("long"))
@@ -1147,7 +2009,23 @@ object SparkEntry {
         .select(col("doc_id"), col("shard"), col("n_tokens"),
           col("seq_first"), col("seq_offset"), col("n_seqs"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH t AS (
+        |  SELECT doc_id, doc_id % 4 AS shard,
+        |    CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |c AS (
+        |  SELECT *, sum(n_tokens) OVER (
+        |    PARTITION BY shard ORDER BY doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_after
+        |  FROM t)
+        |SELECT doc_id, shard, n_tokens,
+        |  CAST((cum_after - n_tokens) // 512 AS BIGINT) AS seq_first,
+        |  CAST((cum_after - n_tokens) % 512 AS BIGINT) AS seq_offset,
+        |  CAST(greatest((cum_after - 1) // 512,
+        |                (cum_after - n_tokens) // 512)
+        |       - (cum_after - n_tokens) // 512 + 1 AS BIGINT) AS n_seqs
+        |FROM c ORDER BY doc_id""".stripMargin),
 
     // per-language token quota: biggest docs first (chars desc, id
     // tie-break) until 3,000 tokens per language — the mixture-assembly
@@ -1155,132 +2033,325 @@ object SparkEntry {
     // Runs the HIERARCHICAL form (running sum over (lang, priority
     // bucket), never one task per stratum) — same kept set as the exact
     // window, pinned by equivalence spec.
-    "q_cap_tokens" -> ((s, d) => {
+    "q_cap_tokens" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
         .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")).cast("long"))
       Curation.capTokensPerGroup(docs, "lang", "n_tokens", budget = 3000L,
           priorityCol = "n_chars", idCol = "doc_id")
         .select(col("doc_id"), col("lang"), col("n_tokens"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH t AS (
+        |  SELECT doc_id, lang, n_chars,
+        |    CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens
+        |  FROM documents),
+        |c AS (
+        |  SELECT *, sum(n_tokens) OVER (
+        |    PARTITION BY lang ORDER BY n_chars DESC, doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
+        |    AS cum_before
+        |  FROM t)
+        |SELECT doc_id, lang, n_tokens FROM c
+        |WHERE cum_before < 3000
+        |ORDER BY doc_id""".stripMargin),
 
     // materialized packed sequences: the actual 512-token training rows,
     // pieces reassembled per (shard, seq) in doc order — every sequence
     // except each shard's last must hold exactly 512 tokens
-    "q_pack_emit" -> ((s, d) => {
+    "q_pack_emit" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
         .withColumn("shard", pmod(col("doc_id"), lit(4)))
       Curation.packSequences(docs, "doc_id", "text", budget = 512L,
           shardCol = "shard")
         .orderBy(col("shard"), col("seq_id"))
-    }),
+    },
+      """WITH t AS (
+        |  SELECT doc_id, doc_id % 4 AS shard,
+        |    string_split(trim(text), ' ') AS toks FROM documents),
+        |c AS (
+        |  SELECT *, CAST(len(toks) AS BIGINT) AS n,
+        |    CAST(sum(len(toks)) OVER (
+        |      PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - len(toks)
+        |      AS BIGINT) AS cb
+        |  FROM t WHERE len(toks) > 0),
+        |p AS (
+        |  SELECT shard, doc_id, toks, n, cb,
+        |    unnest(range(cb // 512, (cb + n - 1) // 512 + 1)) AS seq_id
+        |  FROM c),
+        |x AS (
+        |  SELECT shard, seq_id, doc_id, toks,
+        |    greatest(seq_id * 512 - cb, 0) AS ps,
+        |    least(n, (seq_id + 1) * 512 - cb) AS pe
+        |  FROM p)
+        |SELECT shard, CAST(seq_id AS BIGINT) AS seq_id,
+        |  string_agg(array_to_string(list_slice(toks, ps + 1, pe), ' '), ' '
+        |    ORDER BY doc_id) AS seq_text,
+        |  CAST(sum(pe - ps) AS BIGINT) AS n_seq_tokens,
+        |  string_agg(doc_id || ':' || ps || ':' || pe, ','
+        |    ORDER BY doc_id) AS doc_spans
+        |FROM x GROUP BY shard, seq_id
+        |ORDER BY shard, seq_id""".stripMargin),
 
     // deterministic exact-N per stratum (bounded-heap top_k_any — at most
     // N rows per language cross the exchange, no stratum sort); ranked by
     // 52-bit md5 prefix both engines compute identically
-    "q_sample_exact" -> ((s, d) =>
+    "q_sample_exact" -> Q((s, d) =>
       Curation.sampleExactPerGroup(
           Tables.documents(s, d).select(col("doc_id"), col("lang"), col("text")),
           "lang", "text", n = 20, seed = "ev1")
         .select(col("doc_id"), col("lang"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")), {
+      // 52-bit md5-prefix rank: 13 nibbles folded via strpos, exactly the
+      // engine-independent arithmetic hashRank52 computes
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
+      // ((…((n1)*16 + n2)*16 + n3)…)*16 + n13 — the hashRank52 fold
+      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+      s"""WITH b AS (
+         |  SELECT doc_id, lang,
+         |    md5('ev1' || text) AS h
+         |  FROM documents),
+         |r AS (
+         |  SELECT doc_id, lang, $folded AS rk,
+         |    row_number() OVER (PARTITION BY lang ORDER BY $folded, doc_id)
+         |      AS rn
+         |  FROM b)
+         |SELECT doc_id, lang FROM r WHERE rn <= 20
+         |ORDER BY doc_id""".stripMargin
+    }),
 
     // temperature-flattened mixture draw (α=0.5): exactly 200 docs,
     // per-lang quotas ∝ √n by largest remainder — the tail languages
     // get seats the natural ∝n draw denies them
-    "q_temperature_sample" -> ((s, d) =>
+    "q_temperature_sample" -> Q((s, d) =>
       Curation.sampleByTemperature(
           Tables.documents(s, d).select(col("doc_id"), col("lang")),
           "lang", "doc_id", totalN = 200, alpha = 0.5)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")), {
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
+      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+      // sqrt (not pow) is correctly rounded on both engines; decimal sum
+      // of the weights kills addition-order drift at the floor boundary
+      s"""WITH sizes AS (SELECT lang AS seg, count(*) AS n FROM documents GROUP BY 1),
+         |w AS (SELECT seg, n, sqrt(CAST(n AS DOUBLE)) AS wr FROM sizes),
+         |tot AS (SELECT CAST(sum(CAST(wr AS DECIMAL(30,12))) AS DOUBLE) AS t FROM w),
+         |ex AS (SELECT seg, n, 200 * wr / t AS e FROM w, tot),
+         |b AS (SELECT seg, n, CAST(floor(e) AS BIGINT) AS base, e - floor(e) AS rem FROM ex),
+         |lv AS (SELECT 200 - sum(base) AS leftover FROM b),
+         |c AS (SELECT seg, n, rem, least(base + CASE WHEN
+         |        row_number() OVER (ORDER BY rem DESC, seg) <= leftover
+         |        THEN 1 ELSE 0 END, n) AS cap0 FROM b, lv),
+         |su AS (SELECT 200 - sum(cap0) AS surplus FROM c),
+         |q AS (SELECT seg, cap0 + greatest(0, least(n - cap0,
+         |        surplus - coalesce(sum(n - cap0) OVER (
+         |          ORDER BY rem DESC, seg
+         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)))
+         |        AS quota FROM c, su),
+         |r AS (SELECT doc_id, lang,
+         |        row_number() OVER (PARTITION BY lang ORDER BY $folded, doc_id) AS rn
+         |      FROM (SELECT doc_id, lang,
+         |              md5('graft' || CAST(doc_id AS VARCHAR)) AS h
+         |            FROM documents))
+         |SELECT doc_id, lang FROM r JOIN q ON r.lang = q.seg
+         |WHERE rn <= quota ORDER BY doc_id""".stripMargin
+    }),
 
     // context-window chunking: 32-token windows, 8-token overlap → docs
     // of 10..99 tokens emit 1..4 chunks each; chunk text + counts are
     // exact array algebra both engines mirror
-    "q_chunk_docs" -> ((s, d) =>
+    "q_chunk_docs" -> Q((s, d) =>
       Curation.chunkByTokens(Tables.documents(s, d), "doc_id", "text",
           maxTokens = 32, overlap = 8)
-        .orderBy(col("doc_id"), col("chunk_id"))),
+        .orderBy(col("doc_id"), col("chunk_id")),
+      // step = 32 - 8 = 24; starts are 0,24,48,… up to len - overlap - 1
+      // (range stop is exclusive → +1); chunk_id = start/step
+      """WITH t AS (
+        |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
+        |s AS (
+        |  SELECT doc_id, toks,
+        |    unnest(range(0, greatest(len(toks) - 8 - 1, 0) + 1, 24)) AS strt
+        |  FROM t)
+        |SELECT doc_id, CAST(strt // 24 AS INTEGER) AS chunk_id,
+        |  array_to_string(list_slice(toks, strt + 1,
+        |    least(strt + 32, len(toks))), ' ') AS chunk_text,
+        |  CAST(least(32, len(toks) - strt) AS INTEGER) AS n_chunk_tokens
+        |FROM s ORDER BY doc_id, chunk_id""".stripMargin),
 
     // corpus heavy-hitter bigrams by document frequency
-    "q_top_ngrams" -> ((s, d) =>
-      TextAnalysis.ngramDocFreqTopK(Tables.documents(s, d), "text", k = 2, topK = 100)),
+    "q_top_ngrams" -> Q((s, d) =>
+      TextAnalysis.ngramDocFreqTopK(Tables.documents(s, d), "text", k = 2, topK = 100),
+      """WITH toks AS (
+        |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
+        |sh AS (
+        |  SELECT doc_id, unnest(list_distinct(
+        |    CASE WHEN len(t) >= 2 THEN
+        |      list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])
+        |    ELSE [array_to_string(t, ' ')] END)) AS s
+        |  FROM toks)
+        |SELECT s AS ngram, count(*) AS doc_freq FROM sh
+        |GROUP BY 1 ORDER BY doc_freq DESC, ngram LIMIT 100""".stripMargin),
 
     // BPE vocabulary induction (Sennrich 2016): 6 merge rules learned
     // from word frequencies — one corpus scan, then 6 iterations over
     // the compact vocab table; the oracle replays the identical loop as
     // 6 unrolled CTE stages (plain `replace` on the wrapped symbol
     // string has the same greedy leftmost semantics in both engines)
-    "q_bpe_merges" -> ((s, d) =>
+    "q_bpe_merges" -> Q((s, d) =>
       Tokenizer.learnBpeMerges(Tables.documents(s, d), "text", nMerges = 6)
-        .orderBy(col("step"))),
+        .orderBy(col("step")),
+      bpeOracle(6,
+      """SELECT step, l AS merge_left, r AS merge_right, freq
+        |FROM (__BESTS__) ORDER BY step""".stripMargin)),
 
     // segmentation with the learned merges: per-doc BPE token counts —
     // the fit artifact applied back to the corpus in ONE projection
-    "q_bpe_tokens" -> ((s, d) => {
+    "q_bpe_tokens" -> Q((s, d) => {
       val m = Tokenizer.learnBpeMerges(Tables.documents(s, d), "text", nMerges = 6)
         .orderBy(col("step")).collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
       Tokenizer.bpeTokenCounts(Tables.documents(s, d), "doc_id", "text", m)
         .orderBy(col("doc_id"))
-    }),
+    },
+      bpeOracle(6,
+      """SELECT d.doc_id,
+        |  CAST(sum(len(list_filter(regexp_split_to_array(v.syms, chr(1) || '+'),
+        |    x -> x <> ''))) AS BIGINT) AS bpe_tokens
+        |FROM (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
+        |      FROM documents) d
+        |JOIN v6 v USING (word)
+        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
 
     // TF-IDF cosine pairs (inverted index, exact): the lexical ground
     // truth the banded near-dup generators are audited against. Bounded
     // 500-doc slice — Σ df² is quadratic by design; threshold cuts on
     // the round(4) cosine so both engines cut identically.
-    "q_tfidf_pairs" -> ((s, d) =>
+    "q_tfidf_pairs" -> Q((s, d) =>
       Retrieval.tfidfCosinePairs(
           Tables.documents(s, d).filter(col("doc_id") < 500),
           "doc_id", "text", minCosine = 0.85, maxDf = 1000L)
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      // decimal(30,12) partial sums on both sides kill addition-order
+      // drift; cosine rounds to 4 BEFORE the threshold so the cut is
+      // engine-deterministic
+      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 500),
+        |tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term FROM d),
+        |post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+        |dfreq AS (SELECT term, count(*) AS doc_freq FROM post
+        |          GROUP BY 1 HAVING count(*) <= 1000),
+        |n AS (SELECT count(DISTINCT doc_id) AS nd FROM post),
+        |w AS (SELECT p.doc_id, p.term,
+        |        p.tf * ln(CAST(nd AS DOUBLE) / doc_freq) AS w
+        |      FROM post p JOIN dfreq USING (term), n),
+        |nrm AS (SELECT doc_id,
+        |          CAST(sum(CAST(w * w AS DECIMAL(30,12))) AS DOUBLE) AS n2
+        |        FROM w GROUP BY 1),
+        |dots AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |           CAST(sum(CAST(a.w * b.w AS DECIMAL(30,12))) AS DOUBLE) AS dot
+        |         FROM w a JOIN w b USING (term)
+        |         WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
+        |cosd AS (SELECT id_a, id_b,
+        |           round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 4) AS cosine
+        |         FROM dots
+        |         JOIN nrm na ON id_a = na.doc_id
+        |         JOIN nrm nb ON id_b = nb.doc_id)
+        |SELECT id_a, id_b, cosine FROM cosd
+        |WHERE cosine >= 0.85 ORDER BY id_a, id_b""".stripMargin),
 
     // Okapi BM25 top-k retrieval: postings filtered to the query terms
     // before any exchange; df/corpus stats broadcast; TakeOrdered k.
-    "q_bm25_topk" -> ((s, d) =>
+    "q_bm25_topk" -> Q((s, d) =>
       Retrieval.bm25TopK(Tables.documents(s, d), "doc_id", "text",
-        Seq("vector", "join", "slow"), k = 25)),
+        Seq("vector", "join", "slow"), k = 25),
+      // constants spelled as the same double folds Spark performs
+      // ((1.2 + 1.0), 1 - 0.75) so both engines evaluate bit-identical
+      // expressions before the decimal partial sum and round(4)
+      Bm25Sql),
 
     // BULK BM25: three queries ranked in ONE pass (the serving shape) —
     // postings semi-join the broadcast term set, fan out per query,
     // per-query top-k via rank window (WindowGroupLimit)
-    "q_bm25_bulk" -> ((s, d) => {
+    "q_bm25_bulk" -> Q((s, d) => {
       import s.implicits._
       val qs = Seq((1L, "vector join"), (2L, "slow"), (3L, "join slow vector"))
         .toDF("query_id", "qtext")
       Retrieval.bm25BulkTopK(Tables.documents(s, d), "doc_id", "text",
           qs, "query_id", "qtext", k = 10)
         .orderBy(col("query_id"), col("rank"))
-    }),
+    },
+      """WITH q(query_id, qtext) AS (VALUES
+        |  (1, 'vector join'), (2, 'slow'), (3, 'join slow vector')),
+        |qt AS (SELECT DISTINCT query_id,
+        |         unnest(string_split(qtext, ' ')) AS term FROM q),
+        |tok AS (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
+        |lens AS (SELECT doc_id, len(t) AS dl FROM tok),
+        |stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM lens),
+        |post AS (SELECT doc_id, term, count(*) AS tf
+        |         FROM (SELECT doc_id, unnest(t) AS term FROM tok)
+        |         WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
+        |dfreq AS (SELECT term, count(*) AS doc_freq FROM post GROUP BY 1),
+        |scored AS (
+        |  SELECT qt.query_id, p.doc_id,
+        |    round(CAST(sum(CAST(
+        |      ln(1.0 + (n_docs - doc_freq + 0.5) / (doc_freq + 0.5))
+        |        * p.tf * (1.2 + 1.0)
+        |        / (p.tf + 1.2 * (1.0 - 0.75 + 0.75 * l.dl / avgdl))
+        |      AS DECIMAL(30,12))) AS DOUBLE), 4) AS score
+        |  FROM post p JOIN lens l USING (doc_id)
+        |  JOIN dfreq USING (term) JOIN qt USING (term), stats
+        |  GROUP BY qt.query_id, p.doc_id)
+        |SELECT query_id, doc_id, score, "rank" FROM (
+        |  SELECT query_id, doc_id, score,
+        |    CAST(row_number() OVER (PARTITION BY query_id
+        |      ORDER BY score DESC, doc_id) AS INTEGER) AS "rank"
+        |  FROM scored)
+        |WHERE "rank" <= 10 ORDER BY query_id, "rank"""".stripMargin),
 
     // Dirichlet query-likelihood (Zhai & Lafferty 2001): the LM ranker
     // over the same query — rank-equivalent decomposition, 'vector'
     // weighted twice (c(t,q) = 2), unmatched docs rank by length term
-    "q_ql_topk" -> ((s, d) =>
+    "q_ql_topk" -> Q((s, d) =>
       Retrieval.dirichletQlTopK(Tables.documents(s, d), "doc_id", "text",
-        Seq("vector", "join", "slow", "vector"), k = 25)),
+        Seq("vector", "join", "slow", "vector"), k = 25),
+      QlTopkSql),
 
     // TF-IDF query-to-doc cosine: the vector-space ranker over the same
     // query — full-vocab doc norms, idf-weighted query vector.
-    "q_tfidf_topk" -> ((s, d) =>
+    "q_tfidf_topk" -> Q((s, d) =>
       Retrieval.tfidfQueryTopK(Tables.documents(s, d), "doc_id", "text",
-        Seq("vector", "join", "slow"), k = 25)),
+        Seq("vector", "join", "slow"), k = 25),
+      TfidfTopkSql),
 
     // Hybrid fusion (RRF): BM25 and TF-IDF rankings fused by reciprocal
     // rank — incomparable score scales never touch each other, only
     // ranks do. Ranks derive from the two bounded top-25 results.
-    "q_hybrid_rank" -> ((s, d) => {
+    "q_hybrid_rank" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       val q = Seq("vector", "join", "slow")
       Retrieval.rrfFuse(Seq(
           ("bm" -> Retrieval.bm25TopK(docs, "doc_id", "text", q, k = 25)),
           ("tf" -> Retrieval.tfidfQueryTopK(docs, "doc_id", "text", q, k = 25))),
         "doc_id", "score", topK = 20)
-    }),
+    },
+      // RRF: re-rank the two bounded rankings above, fuse by
+      // 1/(60+rank) through decimal partials, round(6) before the cut
+      s"""WITH u AS (
+         |  SELECT 'bm' AS src, doc_id, score FROM ($Bm25Sql)
+         |  UNION ALL
+         |  SELECT 'tf' AS src, doc_id, score FROM ($TfidfTopkSql)),
+         |r AS (SELECT src, doc_id,
+         |        row_number() OVER (PARTITION BY src
+         |                           ORDER BY score DESC, doc_id) AS rk
+         |      FROM u)
+         |SELECT doc_id,
+         |  round(CAST(sum(CAST(CAST(1.0 AS DOUBLE) / (60 + rk)
+         |    AS DECIMAL(30,12))) AS DOUBLE), 6) AS rrf
+         |FROM r GROUP BY doc_id ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin),
 
     // 3-way hybrid: probabilistic (BM25) ⊕ vector-space (TF-IDF) ⊕
     // language-model (Dirichlet QL) rankings fused by reciprocal rank
-    "q_hybrid_rank3" -> ((s, d) => {
+    "q_hybrid_rank3" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       val q = Seq("vector", "join", "slow")
       Retrieval.rrfFuse(Seq(
@@ -1289,29 +2360,88 @@ object SparkEntry {
           ("ql" -> Retrieval.dirichletQlTopK(docs, "doc_id", "text",
             Seq("vector", "join", "slow", "vector"), k = 25))),
         "doc_id", "score", topK = 20)
-    }),
+    },
+      s"""WITH u AS (
+         |  SELECT 'bm' AS src, doc_id, score FROM ($Bm25Sql)
+         |  UNION ALL
+         |  SELECT 'tf' AS src, doc_id, score FROM ($TfidfTopkSql)
+         |  UNION ALL
+         |  SELECT 'ql' AS src, doc_id, score FROM ($QlTopkSql)),
+         |r AS (SELECT src, doc_id,
+         |        row_number() OVER (PARTITION BY src
+         |                           ORDER BY score DESC, doc_id) AS rk
+         |      FROM u)
+         |SELECT doc_id,
+         |  round(CAST(sum(CAST(CAST(1.0 AS DOUBLE) / (60 + rk)
+         |    AS DECIMAL(30,12))) AS DOUBLE), 6) AS rrf
+         |FROM r GROUP BY doc_id ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin),
 
     // unigram LM quality proxy: top-16 vocab (the corpus holds 31 distinct
     // tokens, so the OOV floor branch is exercised), ln(p) averaged per doc
-    "q_unigram_logprob" -> ((s, d) =>
+    "q_unigram_logprob" -> Q((s, d) =>
       TextAnalysis.unigramLogProbScore(Tables.documents(s, d), "doc_id", "text",
           vocabSize = 16)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
+        |  FROM documents),
+        |uni AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
+        |tot AS (SELECT sum(cnt) AS total FROM uni),
+        |vocab AS (SELECT token, cnt FROM uni ORDER BY cnt DESC, token LIMIT 16)
+        |SELECT t.doc_id,
+        |  round(avg(ln(coalesce(CAST(v.cnt AS DOUBLE), 0.5) / total)), 4)
+        |    AS avg_logprob
+        |FROM tok t LEFT JOIN vocab v USING (token), tot
+        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin),
 
     // bigram LM with Stupid Backoff (round 9): top-64 bigram heavy
     // hitters over the top-16 vocab — small enough that the unseen-
     // bigram backoff branch (α·p_uni) fires constantly, so the oracle
     // exercises every term of the formula
-    "q_bigram_logprob" -> ((s, d) =>
+    "q_bigram_logprob" -> Q((s, d) =>
       TextAnalysis.bigramLogProbScore(Tables.documents(s, d), "doc_id", "text",
           vocabSize = 16, bigramTopB = 64)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // bigram Stupid-Backoff mirror: zipped-unnest positions, lag via
+      // (doc, i-1) self-join, top-64 bigrams with deterministic ties,
+      // CASE per scoring branch (seen bigram / first token / backoff)
+      """WITH t AS (
+        |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
+        |pos AS (
+        |  SELECT doc_id, unnest(toks) AS w,
+        |         unnest(range(1, len(toks) + 1)) AS i
+        |  FROM t),
+        |uni AS (SELECT w AS token, count(*) AS cnt FROM pos GROUP BY 1),
+        |tot AS (SELECT sum(cnt) AS total FROM uni),
+        |vocab AS (SELECT token, cnt FROM uni ORDER BY cnt DESC, token LIMIT 16),
+        |pr AS (
+        |  SELECT a.doc_id, a.i, a.w, b.w AS prev
+        |  FROM pos a LEFT JOIN pos b ON b.doc_id = a.doc_id AND b.i = a.i - 1),
+        |bc AS (
+        |  SELECT prev AS w1, w AS w2, count(*) AS bcnt FROM pr
+        |  WHERE prev IN (SELECT token FROM vocab)
+        |    AND w IN (SELECT token FROM vocab)
+        |  GROUP BY 1, 2),
+        |bt AS (SELECT w1, w2, bcnt FROM bc ORDER BY bcnt DESC, w1, w2 LIMIT 64),
+        |sc AS (
+        |  SELECT pr.doc_id,
+        |    CASE WHEN bt.bcnt IS NOT NULL
+        |         THEN ln(CAST(bt.bcnt AS DOUBLE) / pv.cnt)
+        |         ELSE ln((CASE WHEN pr.prev IS NULL THEN 1.0 ELSE 0.4 END)
+        |                 * coalesce(CAST(vw.cnt AS DOUBLE), 0.5) / tot.total)
+        |    END AS lp
+        |  FROM pr
+        |  LEFT JOIN vocab vw ON vw.token = pr.w
+        |  LEFT JOIN vocab pv ON pv.token = pr.prev
+        |  LEFT JOIN bt ON bt.w1 = pr.prev AND bt.w2 = pr.w, tot)
+        |SELECT doc_id, round(avg(lp), 4) AS avg_bigram_logprob
+        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // CCNet perplexity buckets (round 9): per-language terciles of the
     // unigram-LM score — thresholds via exact percentile broadcast back
     // (same interpolation rule as quantile_cont), comparisons on the
     // round(4) scores so both engines bucket identically
-    "q_ppl_buckets" -> ((s, d) => {
+    "q_ppl_buckets" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       val scored = TextAnalysis.unigramLogProbScore(docs, "doc_id", "text",
           vocabSize = 16)
@@ -1319,13 +2449,42 @@ object SparkEntry {
       Curation.perplexityBuckets(scored, "lang", "avg_logprob")
         .select(col("doc_id"), col("lang"), col("avg_logprob"), col("ppl_bucket"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // same scored CTE as q_unigram_logprob; terciles via quantile_cont
+      // (Spark percentile's interpolation rule), strict > comparisons on
+      // the round(4) scores
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
+        |  FROM documents),
+        |uni AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
+        |tot AS (SELECT sum(cnt) AS total FROM uni),
+        |vocab AS (SELECT token, cnt FROM uni ORDER BY cnt DESC, token LIMIT 16),
+        |scored AS (
+        |  SELECT t.doc_id,
+        |    round(avg(ln(coalesce(CAST(v.cnt AS DOUBLE), 0.5) / total)), 4)
+        |      AS avg_logprob
+        |  FROM tok t LEFT JOIN vocab v USING (token), tot
+        |  GROUP BY t.doc_id),
+        |sl AS (
+        |  SELECT s.doc_id, d.lang, s.avg_logprob
+        |  FROM scored s JOIN documents d USING (doc_id)),
+        |cuts AS (
+        |  SELECT lang,
+        |    quantile_cont(avg_logprob, 1.0/3) AS lo,
+        |    quantile_cont(avg_logprob, 2.0/3) AS hi
+        |  FROM sl GROUP BY lang)
+        |SELECT sl.doc_id, sl.lang, sl.avg_logprob,
+        |  CASE WHEN sl.avg_logprob > c.hi THEN 'head'
+        |       WHEN sl.avg_logprob > c.lo THEN 'middle'
+        |       ELSE 'tail' END AS ppl_bucket
+        |FROM sl JOIN cuts c USING (lang)
+        |ORDER BY sl.doc_id""".stripMargin),
 
     // profile DRIFT (round 9): the monitoring report between two
     // snapshots — the "current" snapshot is the cheap orders under
     // 100k total price, so means shift down, max shrinks (range NOT
     // widened) and NDVs drop; exact NDV for the oracle form
-    "q_profile_drift" -> ((s, d) => {
+    "q_profile_drift" -> Q((s, d) => {
       val base = Tables.orders(s, d)
       // nullable BOOLEANs round-trip as None-vs-NaN between the two
       // engines' pandas paths — cast the nullable flags to string
@@ -1336,18 +2495,69 @@ object SparkEntry {
         .withColumn("range_widened", col("range_widened").cast("string"))
         .withColumn("dtype_changed", col("dtype_changed").cast("string"))
         .orderBy(col("column"))
+    }, {
+      // drift mirror: the q_profile per-column branch generator over the
+      // two snapshots, joined; deltas/flags from the ROUNDED profile
+      // outputs exactly as the operator computes them
+      val cols = Seq(
+        ("o_orderkey", true), ("o_custkey", true), ("o_orderstatus", false),
+        ("o_totalprice", true), ("o_orderdate", false), ("o_orderpriority", false))
+      def prof(alias: String, from: String) = {
+        val branches = cols.map { case (c, num) =>
+          val mn = if (num) s"CAST(min($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
+          val mx = if (num) s"CAST(max($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
+          val mean = if (num) s"round(avg($c), 4)" else "CAST(NULL AS DOUBLE)"
+          s"""SELECT '$c' AS "column",
+             | round(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END)/CAST(count(*) AS DOUBLE), 4) AS null_pct,
+             | count(DISTINCT $c) AS ndv, $mn AS mn, $mx AS mx, $mean AS mean
+             |FROM $from""".stripMargin
+        }
+        s"$alias AS (${branches.mkString("\nUNION ALL\n")})"
+      }
+      s"""WITH ${prof("b", "orders")},
+         |${prof("c", "(SELECT * FROM orders WHERE o_totalprice < 100000.0)")}
+         |SELECT b."column", TRUE AS present_both,
+         |  CAST(FALSE AS VARCHAR) AS dtype_changed,
+         |  b.null_pct AS base_null_pct, c.null_pct AS cur_null_pct,
+         |  round(c.null_pct - b.null_pct, 4) AS null_pct_delta,
+         |  round(c.null_pct - b.null_pct, 4) <= 0.05 AS ok_nulls,
+         |  b.ndv AS base_ndv, c.ndv AS cur_ndv,
+         |  b.mean AS base_mean, c.mean AS cur_mean,
+         |  round(abs(c.mean - b.mean) / greatest(abs(b.mean), 1e-9), 4) AS mean_shift,
+         |  CAST(round(abs(c.mean - b.mean) / greatest(abs(b.mean), 1e-9), 4) <= 0.10
+         |       AS VARCHAR) AS ok_mean,
+         |  CAST((c.mn < b.mn OR c.mx > b.mx) AS VARCHAR) AS range_widened
+         |FROM b JOIN c ON c."column" = b."column"
+         |ORDER BY b."column"""".stripMargin
     }),
 
     // IQR outlier flags (round 9): Tukey fences per order priority over
     // one exact-percentile aggregate broadcast back; flags, not a
     // pre-filtered frame, so reports attribute WHY
-    "q_outlier_flags" -> ((s, d) =>
+    "q_outlier_flags" -> Q((s, d) =>
       Cleaning.flagOutliersIqr(Tables.orders(s, d), "o_orderpriority",
           "o_totalprice")
         .select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice"), col("o_totalprice_lo"), col("o_totalprice_hi"),
           col("o_totalprice_outlier"))
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      // Tukey fences: quantile_cont mirrors Spark percentile's exact
+      // interpolation (q_ppl_buckets precedent); comparisons use the
+      // ROUNDED fences on both sides
+      """WITH q AS (
+        |  SELECT o_orderpriority,
+        |    round(quantile_cont(o_totalprice, 0.25)
+        |      - 1.5 * (quantile_cont(o_totalprice, 0.75)
+        |               - quantile_cont(o_totalprice, 0.25)), 4) AS lo,
+        |    round(quantile_cont(o_totalprice, 0.75)
+        |      + 1.5 * (quantile_cont(o_totalprice, 0.75)
+        |               - quantile_cont(o_totalprice, 0.25)), 4) AS hi
+        |  FROM orders GROUP BY o_orderpriority)
+        |SELECT o_orderkey, o.o_orderpriority, o_totalprice,
+        |  q.lo AS o_totalprice_lo, q.hi AS o_totalprice_hi,
+        |  (o_totalprice < q.lo OR o_totalprice > q.hi) AS o_totalprice_outlier
+        |FROM orders o JOIN q ON q.o_orderpriority = o.o_orderpriority
+        |ORDER BY o_orderkey""".stripMargin),
 
     // END-TO-END curation chain (round 9): normalized dedup → Gopher
     // gate → per-lang token quota → content-hash split, ONE lazy plan;
@@ -1356,12 +2566,56 @@ object SparkEntry {
     // filter, reordered steps) hash-mismatches even with all parts green.
     // Gopher thresholds = q_gopher_filter's; budget/priority =
     // q_cap_tokens' (3000 tokens/lang, n_chars desc)
-    "q_curation_e2e" -> ((s, d) =>
+    "q_curation_e2e" -> Q((s, d) =>
       Curation.curateCorpus(Tables.documents(s, d), "doc_id", "text",
           groupCol = "lang", priorityCol = "n_chars",
           tokenBudgetPerGroup = 3000L,
           minWords = 25, maxWords = 100000)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // composed mirror: fold-key keep-first (q_dedup_fold), the five
+      // gopher signals as a WHERE (q_gopher_filter), the per-lang cumsum
+      // quota (q_cap_tokens), the md5-nibble split (q_split_assign)
+      """WITH norm AS (
+        |  SELECT doc_id, text, lang, n_chars,
+        |    trim(regexp_replace(lower(strip_accents(text)), '\s+', ' ', 'g')) AS k
+        |  FROM documents),
+        |keep AS (SELECT min(doc_id) AS doc_id FROM norm GROUP BY k),
+        |surv AS (SELECT n.* FROM norm n JOIN keep USING (doc_id)),
+        |sig AS (
+        |  SELECT doc_id, lang, text, n_chars,
+        |    len(string_split(trim(text), ' ')) AS nw,
+        |    round(CAST(length(text) - (len(string_split(trim(text),' ')) - 1) AS DOUBLE)
+        |          / len(string_split(trim(text),' ')), 4) AS mwl,
+        |    round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
+        |          / greatest(length(text), 1), 4) AS pr,
+        |    len(list_filter(string_split(trim(text),' '),
+        |        w -> w IN ('the','a','an','of','and','to','in','is'))) AS stop,
+        |    round(1 - CASE WHEN len(string_split(trim(text),' ')) >= 2
+        |        THEN len(list_distinct(list_transform(
+        |               range(1, len(string_split(trim(text),' '))),
+        |               i -> string_split(trim(text),' ')[i] || ' ' ||
+        |                    string_split(trim(text),' ')[i+1])))
+        |        ELSE 1 END
+        |      / CAST(greatest(len(string_split(trim(text),' ')) - 1, 1) AS DOUBLE), 4)
+        |      AS d2
+        |  FROM surv),
+        |gated AS (
+        |  SELECT doc_id, lang, n_chars, text,
+        |    CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens
+        |  FROM sig
+        |  WHERE nw BETWEEN 25 AND 100000 AND mwl BETWEEN 3.0 AND 10.0
+        |    AND pr <= 0.2 AND stop >= 2 AND d2 <= 0.2),
+        |c AS (
+        |  SELECT *, sum(n_tokens) OVER (
+        |    PARTITION BY lang ORDER BY n_chars DESC, doc_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
+        |    AS cum_before
+        |  FROM gated)
+        |SELECT doc_id, lang, n_tokens,
+        |  CASE WHEN strpos('0123456789abcdef', substr(md5(text), 32, 1)) - 1 < 14
+        |       THEN 'train' ELSE 'val' END AS split_label
+        |FROM c WHERE cum_before < 3000
+        |ORDER BY doc_id""".stripMargin),
 
     // heavy-hitter top-k WITHOUT an item-key shuffle (round 9): the
     // Misra–Gries summary nominates candidates (one ≤budget summary per
@@ -1369,24 +2623,93 @@ object SparkEntry {
     // layout-independent determinism — output EQUALS the exact top-k
     // because the corpus's token Zipf head clears the n/budget guarantee
     // (the spec pins the guarantee; the oracle pins the equality)
-    "q_top_tokens_approx" -> ((s, d) => {
+    "q_top_tokens_approx" -> Q((s, d) => {
       val items = Tables.documents(s, d)
         .select(explode(TextAnalysis.tokens(col("text"))).as("item"))
       TextAnalysis.approxTopK(items, topK = 20, budget = 4096)
         .select(col("item").as("token"), col("cnt"))
-    }),
+    },
+      // the two-pass heavy hitter is EXACT under the guarantee, so the
+      // oracle is simply the exact top-20 (count desc, token asc)
+      """SELECT t AS token, count(*) AS cnt
+        |FROM (SELECT unnest(string_split(trim(text), ' ')) AS t FROM documents)
+        |GROUP BY t
+        |ORDER BY cnt DESC, token
+        |LIMIT 20""".stripMargin),
 
     // incremental TEXT near-dup (round 9): the corpus re-ingested against
     // its own minhash index — every doc's OTHER near-dups surface via
     // band collisions and are verified by signature lane agreement
     // (never by re-reading corpus text); md5_52 makes signatures, band
     // buckets AND the estimator DuckDB-reproducible
-    "q_dedup_minhash_incr" -> ((s, d) => {
+    "q_dedup_minhash_incr" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       val idx = Dedup.minhashIndex(docs, "doc_id", "text", hashMode = "md5_52")
       Dedup.nearDupAgainstCorpus(docs, idx, "doc_id", "text",
           hashMode = "md5_52", threshold = 0.5)
         .orderBy(col("batch_id"), col("corpus_id"))
+    }, {
+      // incremental near-dup mirror: the q_dedup_minhash sig/banding CTEs
+      // verbatim (already engine-validated), then band-collision pairs
+      // verified by per-lane signature agreement / 16 — the MinHash
+      // Jaccard estimator recomputed exactly
+      val nibSh = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(shingle), $i, 1)) - 1)"
+      val foldSh = (2 to 13).foldLeft(nibSh(1))((acc, i) => s"($acc * 16 + ${nibSh(i)})")
+      val nibK = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(kstr), $i, 1)) - 1)"
+      val foldK = (2 to 13).foldLeft(nibK(1))((acc, i) => s"($acc * 16 + ${nibK(i)})")
+      s"""WITH t AS (
+         |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
+         |s AS (
+         |  SELECT doc_id, toks,
+         |    unnest(range(1, greatest(len(toks) - 2, 1) + 1)) AS i
+         |  FROM t),
+         |sh AS (
+         |  SELECT doc_id,
+         |    array_to_string(
+         |      list_slice(toks, i, i + least(3, len(toks)) - 1), ' ') AS shingle
+         |  FROM s),
+         |h AS (
+         |  SELECT doc_id, CAST($foldSh AS HUGEINT) AS h52 FROM sh),
+         |lanes AS (
+         |  SELECT doc_id, h52, unnest(range(0, 16)) AS lane FROM h),
+         |v AS (
+         |  SELECT doc_id, lane,
+         |    (h52 * (CAST('11400714819323198485' AS HUGEINT) + 2 * lane)
+         |      + CAST('14029467366897019727' AS HUGEINT) * (lane + 1))
+         |      % CAST('18446744073709551616' AS HUGEINT) AS vm
+         |  FROM lanes),
+         |sig AS (
+         |  SELECT doc_id, lane,
+         |    min(CAST(CASE WHEN vm >= CAST('9223372036854775808' AS HUGEINT)
+         |      THEN vm - CAST('18446744073709551616' AS HUGEINT) ELSE vm END
+         |      AS BIGINT)) AS sv
+         |  FROM v GROUP BY doc_id, lane),
+         |bands AS (
+         |  SELECT doc_id, CAST(lane // 4 AS INT) AS band,
+         |    string_agg(CAST(sv AS VARCHAR), ',' ORDER BY lane) AS lanes_str
+         |  FROM sig GROUP BY doc_id, lane // 4),
+         |keyed AS (
+         |  SELECT doc_id, band, band || ':' || lanes_str AS kstr FROM bands),
+         |buckets AS (
+         |  SELECT doc_id, band, CAST($foldK AS BIGINT) AS bucket FROM keyed),
+         |pairs AS (
+         |  SELECT DISTINCT b.doc_id AS batch_id, c.doc_id AS corpus_id
+         |  FROM buckets b JOIN buckets c
+         |    ON c.band = b.band AND c.bucket = b.bucket
+         |   AND c.doc_id <> b.doc_id),
+         |est AS (
+         |  SELECT p.batch_id, p.corpus_id,
+         |    round(sum(CASE WHEN sb.sv = sc.sv THEN 1 ELSE 0 END) / 16.0, 4)
+         |      AS est_jaccard
+         |  FROM pairs p
+         |  JOIN sig sb ON sb.doc_id = p.batch_id
+         |  JOIN sig sc ON sc.doc_id = p.corpus_id AND sc.lane = sb.lane
+         |  GROUP BY p.batch_id, p.corpus_id)
+         |SELECT batch_id, corpus_id, est_jaccard FROM est
+         |WHERE est_jaccard >= 0.5
+         |ORDER BY batch_id, corpus_id""".stripMargin
     }),
 
     // logistic-regression FIT (round 9): two exact full-batch GD steps
@@ -1395,7 +2718,7 @@ object SparkEntry {
     // partial-agg, bias sentinel, 1/N scaling) is DuckDB-mirrored; the
     // CONVERGED model (50 iters on planted separable text) is pinned by
     // TextAnalysisSpec instead, where SQL can't follow the loop
-    "q_clf_train" -> ((s, d) => {
+    "q_clf_train" -> Q((s, d) => {
       import s.implicits._
       val labeled = Tables.documents(s, d)
         .withColumn("label", (col("doc_id") % 2).cast("int"))
@@ -1405,6 +2728,46 @@ object SparkEntry {
         .toDF("b", "weight")
         .select($"b".cast("long").as("b"), round($"weight", 6).as("weight"))
         .orderBy($"b")
+    }, {
+      // two exact GD steps of the logistic fit, fully mirrored: md5-bucket
+      // features with counts/n, bias as the x=1 sentinel at bucket -1,
+      // step 1 closed-form from σ(0)=0.5, step 2 re-deriving margins from
+      // w1 — Spark's forward pass is the native clf_score but the algebra
+      // (bias + Σ x·w) is identical, round(6) absorbs float association
+      val bkt = (t: String) =>
+        s"(strpos('0123456789abcdef', substr(md5('graft' || $t), 1, 1)) - 1) * 16" +
+          s" + (strpos('0123456789abcdef', substr(md5('graft' || $t), 2, 1)) - 1)"
+      s"""WITH tok AS (
+         |  SELECT doc_id, CAST(doc_id % 2 AS DOUBLE) AS y,
+         |         unnest(string_split(trim(text), ' ')) AS t
+         |  FROM documents WHERE text IS NOT NULL),
+         |b AS (SELECT doc_id, y, ${bkt("t")} AS bkt FROM tok),
+         |cnt AS (SELECT doc_id, y, bkt, count(*) AS c FROM b GROUP BY 1, 2, 3),
+         |nt AS (SELECT doc_id, count(*) AS n FROM b GROUP BY doc_id),
+         |feats AS (
+         |  SELECT cnt.doc_id, cnt.y, cnt.bkt, cnt.c / CAST(nt.n AS DOUBLE) AS x
+         |  FROM cnt JOIN nt ON nt.doc_id = cnt.doc_id
+         |  UNION ALL
+         |  SELECT DISTINCT doc_id, y, -1 AS bkt, 1.0 AS x FROM b),
+         |nd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM feats),
+         |w1 AS (
+         |  SELECT bkt, -(sum(x * (0.5 - y)) / (SELECT n FROM nd)) AS w
+         |  FROM feats GROUP BY bkt),
+         |e2 AS (
+         |  SELECT f.doc_id, f.y,
+         |         1.0 / (1.0 + exp(-sum(f.x * w1.w))) - f.y AS err
+         |  FROM feats f JOIN w1 ON w1.bkt = f.bkt
+         |  GROUP BY f.doc_id, f.y),
+         |w2 AS (
+         |  SELECT f.bkt,
+         |         any_value(w1.w) - sum(f.x * e2.err) / (SELECT n FROM nd) AS w
+         |  FROM feats f
+         |  JOIN w1 ON w1.bkt = f.bkt
+         |  JOIN e2 ON e2.doc_id = f.doc_id
+         |  GROUP BY f.bkt)
+         |SELECT r.range AS b, round(coalesce(w2.w, 0), 6) AS weight
+         |FROM range(-1, 256) r LEFT JOIN w2 ON w2.bkt = r.range
+         |ORDER BY b""".stripMargin
     }),
 
     // corpus-level overlap (round 9): exact-mode distinct-shingle
@@ -1412,50 +2775,135 @@ object SparkEntry {
     // md5_52 shingle hashes so DuckDB recomputes the identical key space
     // (hash collisions, if any, collide identically in both engines);
     // the zero-shuffle HLL sketch mode is spec-bounded against this one
-    "q_corpus_overlap" -> ((s, d) => {
+    "q_corpus_overlap" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       Dedup.corpusOverlap(docs, docs.filter(col("doc_id") % 3 === 0), "text",
         k = 3, mode = "exact", hashMode = "md5_52")
+    }, {
+      // corpus overlap mirror: the q_ngram_jaccard shingle CTE (k=3,
+      // whole-text fallback, per-doc distinct) hashed through the
+      // hashRank52 13-nibble fold, then exact distinct membership flags
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
+      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+      s"""WITH toks AS (
+         |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents
+         |  WHERE text IS NOT NULL),
+         |sh AS (
+         |  SELECT doc_id, unnest(list_distinct(
+         |    CASE WHEN len(t) >= 3 THEN
+         |      list_transform(range(1, len(t) - 1),
+         |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
+         |    ELSE [array_to_string(t, ' ')] END)) AS s
+         |  FROM toks),
+         |hs AS (SELECT doc_id, md5(s) AS h FROM sh),
+         |keys AS (SELECT doc_id, $folded AS hk FROM hs),
+         |flags AS (
+         |  SELECT hk, max(1) AS ia,
+         |         max(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS ib
+         |  FROM keys GROUP BY hk),
+         |agg AS (
+         |  SELECT CAST(sum(ia) AS BIGINT) AS n_a, CAST(sum(ib) AS BIGINT) AS n_b,
+         |         CAST(sum(ia * ib) AS BIGINT) AS n_intersect
+         |  FROM flags)
+         |SELECT n_a, n_b, n_intersect,
+         |  n_a + n_b - n_intersect AS n_union,
+         |  round(n_intersect / CAST(greatest(n_a + n_b - n_intersect, 1) AS DOUBLE), 6) AS jaccard,
+         |  round(n_intersect / CAST(greatest(n_a, 1) AS DOUBLE), 6) AS containment_a,
+         |  round(n_intersect / CAST(greatest(n_b, 1) AS DOUBLE), 6) AS containment_b
+         |FROM agg""".stripMargin
     }),
 
     // benchmark decontamination: every 10th doc doubles as the "benchmark"
     // set (drawn from the corpus itself, so overlap is guaranteed for those
     // docs and possible for shingle-sharing neighbors). k=3 matches the
     // validated q_ngram_jaccard shingle mirror; production default is k=8.
-    "q_benchmark_overlap" -> ((s, d) => {
+    "q_benchmark_overlap" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
       Dedup.benchmarkOverlap(docs, bench, "doc_id", "text", k = 3)
         .orderBy(col("doc_id"))
-    }),
+    },
+      // decontamination mirror: same shingle CTE as q_ngram_jaccard (already
+      // engine-validated); native xxhash64(shingle) equality is mirrored by
+      // string equality — identical semantics, collisions aside (2^-64)
+      """WITH toks AS (
+        |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
+        |sh AS (
+        |  SELECT doc_id, unnest(list_distinct(
+        |    CASE WHEN len(t) >= 3 THEN
+        |      list_transform(range(1, len(t) - 1),
+        |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
+        |    ELSE [array_to_string(t, ' ')] END)) AS s
+        |  FROM toks),
+        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0),
+        |ov AS (
+        |  SELECT doc_id, count(*) AS c FROM sh JOIN bench USING (s) GROUP BY 1)
+        |SELECT d.doc_id, CAST(coalesce(ov.c, 0) AS BIGINT) AS overlap_ngrams
+        |FROM documents d LEFT JOIN ov ON ov.doc_id = d.doc_id
+        |ORDER BY d.doc_id""".stripMargin),
 
     // the filter form: contaminated docs (≥1 shared shingle) dropped,
     // upstream columns survive the semi-join untouched
-    "q_decontaminate" -> ((s, d) => {
+    "q_decontaminate" -> Q((s, d) => {
       val docs = Tables.documents(s, d)
       val bench = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
       Dedup.decontaminate(docs, bench, "doc_id", "text", k = 3)
         .select(col("doc_id"), length(col("text")).as("text_len"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH toks AS (
+        |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
+        |sh AS (
+        |  SELECT doc_id, unnest(list_distinct(
+        |    CASE WHEN len(t) >= 3 THEN
+        |      list_transform(range(1, len(t) - 1),
+        |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
+        |    ELSE [array_to_string(t, ' ')] END)) AS s
+        |  FROM toks),
+        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0),
+        |ov AS (
+        |  SELECT doc_id, count(*) AS c FROM sh JOIN bench USING (s) GROUP BY 1)
+        |SELECT d.doc_id, length(d.text) AS text_len
+        |FROM documents d LEFT JOIN ov ON ov.doc_id = d.doc_id
+        |WHERE coalesce(ov.c, 0) < 1
+        |ORDER BY d.doc_id""".stripMargin),
 
     // fasttext-style hashed-feature linear classifier inference: 256
     // md5-bucket weights derived from a Knuth-multiplicative formula both
     // engines compute exactly; score = sigmoid(bias + mean pooled weight).
     // Pure row-local algebra — zero shuffles (plan-pinned in spec).
-    "q_clf_score" -> ((s, d) => {
+    "q_clf_score" -> Q((s, d) => {
       val weights = Array.tabulate(256)(b => (b * 2654435761L % 1000).toDouble / 1000 - 0.5)
       TextAnalysis.linearClassifierScore(Tables.documents(s, d), "text",
           weights, bias = 0.1, seed = "qw1")
         .select(col("doc_id"), round(col("clf_score"), 4).as("clf_score"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // same md5-nibble bucket as q_sample_weighted (engine-validated) and
+      // the same Knuth-multiplicative weight formula the Spark query builds
+      // its literal array from; mean pooling = avg over token rows
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
+        |  FROM documents),
+        |b AS (
+        |  SELECT doc_id,
+        |    (strpos('0123456789abcdef', substr(md5('qw1' || token), 1, 1)) - 1) * 16
+        |    + (strpos('0123456789abcdef', substr(md5('qw1' || token), 2, 1)) - 1)
+        |      AS bkt
+        |  FROM tok),
+        |s AS (
+        |  SELECT doc_id,
+        |    avg(CAST((bkt * 2654435761) % 1000 AS DOUBLE) / 1000 - 0.5) AS pooled
+        |  FROM b GROUP BY doc_id)
+        |SELECT doc_id, round(1.0 / (1.0 + exp(-(0.1 + pooled))), 4) AS clf_score
+        |FROM s ORDER BY doc_id""".stripMargin),
 
     // near-dup RETENTION: same planted-triples pipeline as q_dedup_clusters,
     // but the survivor is the best-QUALITY copy (doc_id % 7 differs across
     // the three planted copies by construction), not the min id — one
     // max_by aggregate, no window
-    "q_dedup_retain" -> ((s, d) => {
+    "q_dedup_retain" -> Q((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val planted = docs
         .unionByName(docs.select((col("doc_id") + 10000).as("doc_id"), col("text")))
@@ -1470,14 +2918,29 @@ object SparkEntry {
           "doc_id", "canonical", "quality")
         .select(col("doc_id"), col("quality"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // retention mirror: exact-text clusters (≡ θ=0.999 minhash clusters on
+      // this corpus, same argument as q_dedup_clusters), survivor = best
+      // quality then min id
+      """WITH planted AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL SELECT doc_id + 10000, text FROM documents
+        |  UNION ALL SELECT doc_id + 20000, text FROM documents),
+        |q AS (SELECT doc_id, text, doc_id % 7 AS quality FROM planted),
+        |c AS (SELECT doc_id, quality,
+        |        min(doc_id) OVER (PARTITION BY text) AS cl FROM q),
+        |r AS (SELECT doc_id, quality,
+        |        row_number() OVER (PARTITION BY cl ORDER BY quality DESC, doc_id)
+        |          AS rn
+        |      FROM c)
+        |SELECT doc_id, quality FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin),
 
     // quality gate: score with the hashed-feature classifier (margin
     // rounded to 6 so both engines compare bit-identical doubles), keep
     // the top 20% — one exact-percentile aggregate broadcast back as the
     // threshold, then a pure filter (production path is the
     // approx_percentile sketch, equivalence pinned in CurationSpec)
-    "q_quality_gate" -> ((s, d) => {
+    "q_quality_gate" -> Q((s, d) => {
       val weights = Array.tabulate(256)(b => (b * 2654435761L % 1000).toDouble / 1000 - 0.5)
       val scored = TextAnalysis.linearClassifierScore(Tables.documents(s, d),
           "text", weights, bias = 0.1, seed = "qw1")
@@ -1485,14 +2948,34 @@ object SparkEntry {
       Curation.keepTopQuantile(scored, "score", keepFraction = 0.2, exact = true)
         .select(col("doc_id"), col("score"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // same score CTE as q_clf_score (margin, not sigmoid — monotone, so
+      // the kept set is identical); threshold = continuous 80th percentile,
+      // the interpolation rule Spark's percentile shares with quantile_cont
+      """WITH tok AS (
+        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
+        |  FROM documents),
+        |b AS (
+        |  SELECT doc_id,
+        |    (strpos('0123456789abcdef', substr(md5('qw1' || token), 1, 1)) - 1) * 16
+        |    + (strpos('0123456789abcdef', substr(md5('qw1' || token), 2, 1)) - 1)
+        |      AS bkt
+        |  FROM tok),
+        |s AS (
+        |  SELECT doc_id,
+        |    round(0.1 + avg(CAST((bkt * 2654435761) % 1000 AS DOUBLE) / 1000 - 0.5), 6)
+        |      AS score
+        |  FROM b GROUP BY doc_id),
+        |thr AS (SELECT quantile_cont(score, 0.8) AS t FROM s)
+        |SELECT doc_id, score FROM s, thr WHERE score >= t
+        |ORDER BY doc_id""".stripMargin),
 
     // leakage-safe split: planted exact-dup triples must co-assign.
     // Clusters here come from the cheap exact-content grouping (min id
     // per xxhash64(text) — hash equality ≡ text equality modulo 2^-64,
     // the q_dedup_exact argument); near-dup cluster maps plug in the
     // same way (q_dedup_retain exercises that pipeline)
-    "q_split_leakproof" -> ((s, d) => {
+    "q_split_leakproof" -> Q((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val planted = docs
         .unionByName(docs.select((col("doc_id") + 10000).as("doc_id"), col("text")))
@@ -1505,13 +2988,27 @@ object SparkEntry {
       Curation.splitByCluster(planted, clusters, "doc_id", "canonical")
         .select(col("doc_id"), col("split_label"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // split hashes the CANONICAL id string — same md5 last-nibble
+      // arithmetic as q_split_assign (engine-validated); exact-text
+      // clusters mirror the xxhash64 grouping (collisions aside, 2^-64)
+      """WITH planted AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL SELECT doc_id + 10000, text FROM documents
+        |  UNION ALL SELECT doc_id + 20000, text FROM documents),
+        |c AS (SELECT doc_id,
+        |        min(doc_id) OVER (PARTITION BY text) AS cl FROM planted)
+        |SELECT doc_id,
+        |  CASE WHEN (strpos('0123456789abcdef',
+        |      substr(md5(CAST(cl AS VARCHAR)), 32, 1)) - 1) < 14
+        |    THEN 'train' ELSE 'val' END AS split_label
+        |FROM c ORDER BY doc_id""".stripMargin),
 
     // split-leakage audit: plant PERTURBED near-dup triples (distinct
     // content hashes!) and split per-document — some clusters land on
     // both sides, and the audit must surface exactly those; the same
     // corpus split with splitByCluster audits clean (spec-pinned)
-    "q_split_audit" -> ((s, d) => {
+    "q_split_audit" -> Q((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val planted = docs
         .unionByName(docs.select((col("doc_id") + 10000).as("doc_id"),
@@ -1523,41 +3020,146 @@ object SparkEntry {
         pmod(col("doc_id"), lit(10000)).as("cluster"))
       Curation.auditSplitLeakage(planted, clusters, "doc_id", "cluster", "split_label")
         .orderBy(col("cluster"))
-    }),
+    },
+      // per-document md5-nibble split over perturbed triples; clusters by
+      // id congruence — n_splits > 1 rows are the leaking clusters
+      """WITH planted AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL SELECT doc_id + 10000, text || ' v2' FROM documents
+        |  UNION ALL SELECT doc_id + 20000, text || ' v3' FROM documents),
+        |lab AS (SELECT doc_id, doc_id % 10000 AS cluster,
+        |    CASE WHEN (strpos('0123456789abcdef', substr(md5(text), 32, 1)) - 1) < 14
+        |      THEN 'train' ELSE 'val' END AS split_label
+        |  FROM planted),
+        |agg AS (SELECT cluster, count(DISTINCT split_label) AS n_splits,
+        |    count(*) AS n_rows
+        |  FROM lab GROUP BY cluster)
+        |SELECT cluster, CAST(n_splits AS BIGINT) AS n_splits,
+        |  CAST(n_rows AS BIGINT) AS n_rows
+        |FROM agg WHERE n_splits > 1 ORDER BY cluster""".stripMargin),
 
     // deterministic global training-order shuffle: 52-bit md5-prefix rank,
     // range-partitioned into 8 shards, each sorted — global order ==
     // pseudorandom order, reproducible on any input layout; the rank
     // arithmetic is the engine-validated q_sample_exact fold
-    "q_shuffle_order" -> ((s, d) =>
+    "q_shuffle_order" -> Q((s, d) =>
       Curation.shuffleForTraining(
           Tables.documents(s, d).select(col("doc_id"), col("text")),
           "text", numShards = 8, seed = "ep0")
         .select(col("doc_id"), col("shuffle_rank"))
-        .orderBy(col("shuffle_rank"))),
+        .orderBy(col("shuffle_rank")), {
+      // 52-bit md5-prefix rank over 'ep0' ‖ text — the q_sample_exact fold
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
+      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+      s"""WITH b AS (
+         |  SELECT doc_id, md5('ep0' || text) AS h FROM documents)
+         |SELECT doc_id, CAST($folded AS BIGINT) AS shuffle_rank
+         |FROM b ORDER BY shuffle_rank""".stripMargin
+    }),
 
     // band-bucket table (pair extraction is exercised in DedupSpec with
     // planted near-dups; this corpus is dup-free so pairs would be
     // empty). md5_52 mode: lanes AND band buckets are md5-fold
     // arithmetic both engines compute — full hash-match; the xx
     // production bucketing is pinned by DedupSpec
-    "q_dedup_minhash" -> ((s, d) =>
+    "q_dedup_minhash" -> Q((s, d) =>
       Dedup.minhashBandBuckets(Tables.documents(s, d), "doc_id", "text",
           hashMode = "md5_52")
-        .orderBy(col("doc"), col("band"))),
+        .orderBy(col("doc"), col("band")), {
+      // band buckets over the md5_52 lanes: each band's 4 signed lanes
+      // join into the canonical "band:l,l,l,l" string, bucket = the same
+      // 13-nibble md5 fold — lane arithmetic identical to
+      // q_dedup_minhash_sig above
+      val nibSh = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(shingle), $i, 1)) - 1)"
+      val foldSh = (2 to 13).foldLeft(nibSh(1))((acc, i) => s"($acc * 16 + ${nibSh(i)})")
+      val nibK = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(kstr), $i, 1)) - 1)"
+      val foldK = (2 to 13).foldLeft(nibK(1))((acc, i) => s"($acc * 16 + ${nibK(i)})")
+      s"""WITH t AS (
+         |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
+         |s AS (
+         |  SELECT doc_id, toks,
+         |    unnest(range(1, greatest(len(toks) - 2, 1) + 1)) AS i
+         |  FROM t),
+         |sh AS (
+         |  SELECT doc_id,
+         |    array_to_string(
+         |      list_slice(toks, i, i + least(3, len(toks)) - 1), ' ') AS shingle
+         |  FROM s),
+         |h AS (
+         |  SELECT doc_id, CAST($foldSh AS HUGEINT) AS h52 FROM sh),
+         |lanes AS (
+         |  SELECT doc_id, h52, unnest(range(0, 16)) AS lane FROM h),
+         |v AS (
+         |  SELECT doc_id, lane,
+         |    (h52 * (CAST('11400714819323198485' AS HUGEINT) + 2 * lane)
+         |      + CAST('14029467366897019727' AS HUGEINT) * (lane + 1))
+         |      % CAST('18446744073709551616' AS HUGEINT) AS vm
+         |  FROM lanes),
+         |sig AS (
+         |  SELECT doc_id, lane,
+         |    min(CAST(CASE WHEN vm >= CAST('9223372036854775808' AS HUGEINT)
+         |      THEN vm - CAST('18446744073709551616' AS HUGEINT) ELSE vm END
+         |      AS BIGINT)) AS sv
+         |  FROM v GROUP BY doc_id, lane),
+         |bands AS (
+         |  SELECT doc_id, CAST(lane // 4 AS INT) AS band,
+         |    string_agg(CAST(sv AS VARCHAR), ',' ORDER BY lane) AS lanes_str
+         |  FROM sig GROUP BY doc_id, lane // 4),
+         |keyed AS (
+         |  SELECT doc_id, band, band || ':' || lanes_str AS kstr FROM bands)
+         |SELECT doc_id AS doc, band, CAST($foldK AS BIGINT) AS bucket
+         |FROM keyed ORDER BY doc, band""".stripMargin
+    }),
 
     // signature in the md5_52 base-hash mode, exploded to (doc, lane,
     // value) rows (the driver's pandas comparer can't sort array columns):
     // every lane of every signature is hash-matched against a DuckDB
     // mirror of the affine mod-2^64 lane arithmetic; the xx production
     // mode's full array is pinned in FunctionsSpec's differential test
-    "q_dedup_minhash_sig" -> ((s, d) =>
+    "q_dedup_minhash_sig" -> Q((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           Dedup.minhashSignature(col("text"), k = 3, numHashes = 16,
             hashMode = "md5_52").as("signature"))
         .select(col("doc_id"), posexplode(col("signature")).as(Seq("lane", "sig")))
-        .orderBy(col("doc_id"), col("lane"))),
+        .orderBy(col("doc_id"), col("lane")), {
+      // minhash lanes mirrored exactly: 3-token shingles (short texts fall
+      // back to one full-width shingle like the native expression), 52-bit
+      // md5-prefix base hash, affine lane transforms over HUGEINT mod 2^64,
+      // SIGNED-long min per lane (Spark's Long compare)
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(shingle), $i, 1)) - 1)"
+      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
+      s"""WITH t AS (
+         |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
+         |s AS (
+         |  SELECT doc_id, toks,
+         |    unnest(range(1, greatest(len(toks) - 2, 1) + 1)) AS i
+         |  FROM t),
+         |sh AS (
+         |  SELECT doc_id,
+         |    array_to_string(
+         |      list_slice(toks, i, i + least(3, len(toks)) - 1), ' ') AS shingle
+         |  FROM s),
+         |h AS (
+         |  SELECT doc_id, CAST($folded AS HUGEINT) AS h52 FROM sh),
+         |lanes AS (
+         |  SELECT doc_id, h52, unnest(range(0, 16)) AS lane FROM h),
+         |v AS (
+         |  SELECT doc_id, lane,
+         |    (h52 * (CAST('11400714819323198485' AS HUGEINT) + 2 * lane)
+         |      + CAST('14029467366897019727' AS HUGEINT) * (lane + 1))
+         |      % CAST('18446744073709551616' AS HUGEINT) AS vm
+         |  FROM lanes)
+         |SELECT doc_id, CAST(lane AS INT) AS lane,
+         |  min(CAST(CASE WHEN vm >= CAST('9223372036854775808' AS HUGEINT)
+         |    THEN vm - CAST('18446744073709551616' AS HUGEINT) ELSE vm END
+         |    AS BIGINT)) AS sig
+         |FROM v GROUP BY doc_id, lane ORDER BY doc_id, lane""".stripMargin
+    }),
 
     // end-to-end dedup DECISION: plant two extra copies of every doc,
     // find pairs (minhash bands → exact-jaccard verify at 0.999 ≈ identical
@@ -1565,7 +3167,7 @@ object SparkEntry {
     // canonicals. Oracle = min(doc_id) per identical text — equivalent
     // because exact dups collide with probability 1 and θ=0.999 admits
     // nothing below identical shingle sets.
-    "q_dedup_clusters" -> ((s, d) => {
+    "q_dedup_clusters" -> Q((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val planted = docs
         .unionByName(docs.select((col("doc_id") + 10000).as("doc_id"), col("text")))
@@ -1576,27 +3178,78 @@ object SparkEntry {
       Dedup.assignCanonical(planted, "doc_id", verified.select(col("id_a"), col("id_b")))
         .select(col("doc_id"), col("canonical"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH planted AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL SELECT doc_id + 10000, text FROM documents
+        |  UNION ALL SELECT doc_id + 20000, text FROM documents)
+        |SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS canonical
+        |FROM planted ORDER BY doc_id""".stripMargin),
 
     // nearest-warehouse assignment: broadcast site table, map-side
     // partial argmin over struct(dist, site) — the exchange carries one
     // candidate per point per partition, never the cross product
-    "q_geo_nearest" -> ((s, d) =>
+    "q_geo_nearest" -> Q((s, d) =>
       Geo.nearestSite(geoPoints(s, d), geoSites(s, d), "pid", "sid")
         .select(col("point_id"), col("site_id"),
           round(col("dist_km"), 4).as("dist_km"))
-        .orderBy(col("point_id"))),
+        .orderBy(col("point_id")),
+      // haversine in the same operation order as Geo.haversineKm; argmin
+      // via (dist, sid) ranking == the engine's lexicographic struct min
+      """WITH p AS (
+        |  SELECT c_custkey AS pid,
+        |         (c_custkey*13) % 120 - 60 + 0.25 AS lat,
+        |         (c_custkey*29) % 300 - 150 + 0.25 AS lon
+        |  FROM customer),
+        |s AS (
+        |  SELECT n_nationkey AS sid,
+        |         (n_nationkey*11) % 120 - 60 + 0.5 AS lat,
+        |         (n_nationkey*37) % 300 - 150 + 0.5 AS lon
+        |  FROM nation),
+        |d AS (
+        |  SELECT p.pid, s.sid,
+        |    2*6371.0088*asin(sqrt(pow(sin(radians(s.lat - p.lat)/2), 2)
+        |      + cos(radians(p.lat))*cos(radians(s.lat))
+        |        *pow(sin(radians(s.lon - p.lon)/2), 2))) AS dist
+        |  FROM p, s),
+        |r AS (
+        |  SELECT pid, sid, dist,
+        |         row_number() OVER (PARTITION BY pid ORDER BY dist, sid) AS rn
+        |  FROM d)
+        |SELECT pid AS point_id, sid AS site_id, round(dist, 4) AS dist_km
+        |FROM r WHERE rn = 1 ORDER BY point_id""".stripMargin),
 
     // 2-D bin-bucketed radius join (the rangeJoin pattern on a lat/lon
     // grid): sites replicate to the cells their radius box overlaps,
     // points map to ONE cell, exact haversine re-checks — DuckDB's
     // brute-force cross join is the oracle
-    "q_geo_radius" -> ((s, d) =>
+    "q_geo_radius" -> Q((s, d) =>
       Geo.radiusJoin(geoPoints(s, d), geoSites(s, d), "pid", "sid",
           radiusKm = 2000.0, cellDeg = 5.0)
         .select(col("point_id"), col("site_id"),
           round(col("dist_km"), 4).as("dist_km"))
-        .orderBy(col("point_id"), col("site_id"))),
+        .orderBy(col("point_id"), col("site_id")),
+      // brute-force cross join: the grid bucketing must recover exactly
+      // the pairs the full quadratic scan finds
+      """WITH p AS (
+        |  SELECT c_custkey AS pid,
+        |         (c_custkey*13) % 120 - 60 + 0.25 AS lat,
+        |         (c_custkey*29) % 300 - 150 + 0.25 AS lon
+        |  FROM customer),
+        |s AS (
+        |  SELECT n_nationkey AS sid,
+        |         (n_nationkey*11) % 120 - 60 + 0.5 AS lat,
+        |         (n_nationkey*37) % 300 - 150 + 0.5 AS lon
+        |  FROM nation),
+        |d AS (
+        |  SELECT p.pid, s.sid,
+        |    2*6371.0088*asin(sqrt(pow(sin(radians(s.lat - p.lat)/2), 2)
+        |      + cos(radians(p.lat))*cos(radians(s.lat))
+        |        *pow(sin(radians(s.lon - p.lon)/2), 2))) AS dist
+        |  FROM p, s)
+        |SELECT pid AS point_id, sid AS site_id, round(dist, 4) AS dist_km
+        |FROM d WHERE dist <= 2000.0
+        |ORDER BY point_id, site_id""".stripMargin),
 
     // record linkage: blocked fuzzy pairs over customer addresses with a
     // PLANTED one-char-dropped variant per tenth customer. Each name is
@@ -1604,50 +3257,174 @@ object SparkEntry {
     // the only levenshtein≤1 match for its block BY CONSTRUCTION (any
     // natural candidate differs in the hash prefix or the random
     // address); DuckDB recomputes folding, blocking and edit distance
-    "q_fuzzy_pairs" -> ((s, d) => {
+    "q_fuzzy_pairs" -> Q((s, d) => {
       Linkage.blockedFuzzyPairs(fuzzyFixture(s, d), "id", "name",
           blockLen = 4, maxDist = 1)
         .orderBy(col("id_a"), col("id_b"))
-    }),
+    },
+      // mirrors Linkage.blockedFuzzyPairs: fold → 4-char prefix block →
+      // in-block levenshtein ≤ 1, id_a < id_b
+      """WITH base AS (
+        |  SELECT c_custkey AS id,
+        |         substr(md5(c_custkey::VARCHAR), 1, 6) || lower(trim(c_name)) AS name
+        |  FROM customer),
+        |planted AS (
+        |  SELECT id, name FROM base
+        |  UNION ALL
+        |  SELECT id + 1000000, substr(name, 1, 7) || substr(name, 9) FROM base
+        |  WHERE id % 10 = 0),
+        |k AS (
+        |  SELECT id, lower(trim(name)) AS nm,
+        |         substr(lower(trim(name)), 1, 4) AS blk
+        |  FROM planted)
+        |SELECT a.id AS id_a, c.id AS id_b,
+        |       CAST(levenshtein(a.nm, c.nm) AS INTEGER) AS dist
+        |FROM k a JOIN k c ON a.blk = c.blk AND a.id < c.id
+        |WHERE levenshtein(a.nm, c.nm) <= 1
+        |ORDER BY id_a, id_b""".stripMargin),
 
     // the full fuzzy-dedup decision: pairs → connected components →
     // canonical per entity (variant ids collapse onto their original)
-    "q_fuzzy_dedup" -> ((s, d) => {
+    "q_fuzzy_dedup" -> Q((s, d) => {
       Linkage.fuzzyDedup(fuzzyFixture(s, d), "id", "name",
           blockLen = 4, maxDist = 1)
         .select(col("id"), col("canonical"))
         .orderBy(col("id"))
-    }),
+    },
+      // a FULL connected-components mirror (recursive min-label reach) —
+      // robust to any natural fuzzy pair the fixture might admit, exactly
+      // the propagation the engine's dedupClusters computes
+      """WITH RECURSIVE base AS (
+        |  SELECT c_custkey AS id,
+        |         substr(md5(c_custkey::VARCHAR), 1, 6) || lower(trim(c_name)) AS name
+        |  FROM customer),
+        |planted AS (
+        |  SELECT id, name FROM base
+        |  UNION ALL
+        |  SELECT id + 1000000, substr(name, 1, 7) || substr(name, 9) FROM base
+        |  WHERE id % 10 = 0),
+        |k AS (
+        |  SELECT id, lower(trim(name)) AS nm,
+        |         substr(lower(trim(name)), 1, 4) AS blk
+        |  FROM planted),
+        |pairs AS (
+        |  SELECT a.id AS id_a, c.id AS id_b
+        |  FROM k a JOIN k c ON a.blk = c.blk AND a.id < c.id
+        |  WHERE levenshtein(a.nm, c.nm) <= 1),
+        |edges AS (
+        |  SELECT id_a AS s, id_b AS d FROM pairs
+        |  UNION SELECT id_b, id_a FROM pairs),
+        |reach(id, label) AS (
+        |  SELECT id, id FROM planted
+        |  UNION
+        |  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id)
+        |SELECT id, min(label) AS canonical
+        |FROM reach GROUP BY id ORDER BY id""".stripMargin),
 
     // md5_64 token-hash mode: the per-bit majority vote runs over the
     // first 8 md5 digest bytes, which DuckDB recomputes from the hex
     // string — full hash-match; xx production mode pinned by spec
-    "q_dedup_simhash" -> ((s, d) =>
+    "q_dedup_simhash" -> Q((s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           Dedup.simhash64(col("text"), hashMode = "md5_64").as("simhash"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")), {
+      // per-bit majority vote over the first 8 md5 digest bytes (16-nibble
+      // HUGEINT fold); pow CTE gives exact 2^b, sign-converted at the end
+      val nib = (i: Int) =>
+        s"(strpos('0123456789abcdef', substr(md5(tk), $i, 1)) - 1)"
+      val folded = (2 to 16).foldLeft(s"CAST(${nib(1)} AS HUGEINT)")(
+        (acc, i) => s"($acc * 16 + ${nib(i)})")
+      s"""WITH RECURSIVE pow(b, p) AS (
+         |  SELECT 0, CAST(1 AS HUGEINT)
+         |  UNION ALL SELECT b + 1, p * 2 FROM pow WHERE b < 63),
+         |tok AS (
+         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tk
+         |  FROM documents),
+         |h AS (
+         |  SELECT doc_id, $folded AS h64 FROM tok),
+         |votes AS (
+         |  SELECT doc_id, pow.p AS p,
+         |    sum(CASE WHEN (h64 // p) % 2 = 1 THEN 1 ELSE 0 END) AS ones,
+         |    count(*) AS n
+         |  FROM h CROSS JOIN pow
+         |  GROUP BY doc_id, pow.p),
+         |sh AS (
+         |  SELECT doc_id,
+         |    sum(CASE WHEN ones * 2 > n THEN p ELSE CAST(0 AS HUGEINT) END) AS hv
+         |  FROM votes GROUP BY doc_id)
+         |SELECT doc_id,
+         |  CAST(CASE WHEN hv >= CAST('9223372036854775808' AS HUGEINT)
+         |    THEN hv - CAST('18446744073709551616' AS HUGEINT) ELSE hv END
+         |    AS BIGINT) AS simhash
+         |FROM sh ORDER BY doc_id""".stripMargin
+    }),
 
-    "q_ngram_jaccard" -> ((s, d) =>
+    "q_ngram_jaccard" -> Q((s, d) =>
       Dedup.ngramJaccardPairs(Tables.documents(s, d), "doc_id", "text",
           k = 3, threshold = 0.01, maxDf = 2000)
         .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
-        .limit(500)),
+        .limit(500),
+      // exact shingle-jaccard is engine-independent: DuckDB mirrors the
+      // inverted-index join (shared-shingle counts / set sizes). Valid while
+      // maxDf (2000) exceeds the corpus's max shingle df — true at the
+      // driver's sf0.01 gate (500 docs).
+      """WITH toks AS (
+        |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
+        |sh AS (
+        |  -- mirrors shingles_of: docs shorter than k collapse to ONE
+        |  -- whole-text shingle instead of producing no shingles at all
+        |  SELECT doc_id, unnest(list_distinct(
+        |    CASE WHEN len(t) >= 3 THEN
+        |      list_transform(range(1, len(t) - 1),
+        |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
+        |    ELSE [array_to_string(t, ' ')] END)) AS s
+        |  FROM toks),
+        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+        |inter AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
+        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+        |  GROUP BY 1, 2)
+        |SELECT id_a, id_b,
+        |  round(c / CAST(sa.sz + sb.sz - c AS DOUBLE), 4) AS jaccard
+        |FROM inter
+        |JOIN sizes sa ON sa.doc_id = id_a
+        |JOIN sizes sb ON sb.doc_id = id_b
+        |WHERE round(c / CAST(sa.sz + sb.sz - c AS DOUBLE), 4) >= 0.01
+        |ORDER BY jaccard DESC, id_a, id_b
+        |LIMIT 500""".stripMargin),
 
-    "q_embed_neardup" -> ((s, d) =>
+    "q_embed_neardup" -> Q((s, d) =>
       Similarity.cosineNearDupPairs(Tables.embeddings(s, d), "vec_id", "embedding", 0.4)
-        .orderBy(col("id_a"), col("id_b"))),
+        .orderBy(col("id_a"), col("id_b")),
+      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
+        |FROM embeddings a, embeddings b
+        |WHERE a.vec_id < b.vec_id
+        |  AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) >= 0.4
+        |ORDER BY id_a, id_b""".stripMargin),
 
-    "q_ann_topk" -> ((s, d) => {
+    "q_ann_topk" -> Q((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5)
-    }),
+    },
+      """WITH scored AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 4) AS sim
+        |  FROM embeddings q, embeddings c
+        |  WHERE q.vec_id < 8 AND q.vec_id <> c.vec_id),
+        |ranked AS (
+        |  SELECT query_id, neighbor_id, sim,
+        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS "rank"
+        |  FROM scored)
+        |SELECT query_id, "rank", neighbor_id, sim FROM ranked
+        |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin),
 
     // embedding STORAGE ops (native single-pass exprs), oracle-checked via
     // scalar projections (driver's comparer can't sort array columns; the
     // arrays themselves are pinned in FunctionsSpec):
     // unit-normalize — l2_after must be 1, lane0 mirrors the exact values
-    "q_embed_normalize" -> ((s, d) =>
+    "q_embed_normalize" -> Q((s, d) =>
       Tables.embeddings(s, d)
         .select(col("vec_id"),
           call_function("l2_normalize", col("embedding")).as("ne"),
@@ -1661,7 +3438,24 @@ object SparkEntry {
           round(sqrt(aggregate(col("ne"),
             lit(0d), (a, x) => a + x.cast("double") * x.cast("double"))), 6).as("l2_after"),
           round(element_at(col("ne"), 1).cast("double"), 6).as("lane0"))
-        .orderBy(col("vec_id"))),
+        .orderBy(col("vec_id")),
+      """WITH s AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS e,
+        |         (embedding IS NULL
+        |          OR len(list_filter(embedding::DOUBLE[], x -> x IS NULL)) > 0
+        |          OR len(list_filter(embedding::DOUBLE[], x -> isnan(x) OR isinf(x))) > 0) AS bad,
+        |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x*x))) AS nrm
+        |  FROM embeddings),
+        |n AS (
+        |  SELECT vec_id, CASE WHEN bad THEN NULL ELSE nrm END AS nrm,
+        |         CASE WHEN bad THEN NULL
+        |              WHEN nrm = 0 THEN list_transform(e, x -> CAST(0 AS REAL))
+        |              ELSE list_transform(e, x -> CAST(x / nrm AS REAL)) END AS ne
+        |  FROM s)
+        |SELECT vec_id, round(nrm, 6) AS l2_before,
+        |  round(sqrt(list_sum(list_transform(ne, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS l2_after,
+        |  round(CAST(ne[1] AS DOUBLE), 6) AS lane0
+        |FROM n ORDER BY vec_id""".stripMargin),
 
     // mat_project — the PCA/random-projection kernel y = B(x − μ) as a
     // fixed FORMULA basis both engines derive independently (μ = 0,
@@ -1669,7 +3463,7 @@ object SparkEntry {
     // double products, sequential double sum, float cast — the same
     // bit-portable discipline as l2_normalize. Invalid embeddings
     // (null/NaN/Inf lane) project to NULL on both sides.
-    "q_mat_project" -> ((s, d) => {
+    "q_mat_project" -> Q((s, d) => {
       val basis = Array.tabulate(4, 64)((j, i) =>
         (((i * (j + 2) + 1) % 7 - 3) * 0.25).toFloat)
       val model = graft.functions.MatCodec.serialize(
@@ -1683,11 +3477,36 @@ object SparkEntry {
           round(element_at(col("p"), 3).cast("double"), 6).as("y2"),
           round(element_at(col("p"), 4).cast("double"), 6).as("y3"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // mirrors the native null contract: an invalid embedding (null/NaN/Inf
+      // lane, or a null vector) nulls every output; a zero vector passes
+      // through as zeros (x/0 would fabricate inf lanes)
+      // y_j = Σ_i b_j(i)·x_i with the formula basis; same per-lane double
+      // products, same sequential sum order, same float cast — and the
+      // same invalid-vector NULL branch as l2_normalize
+      """WITH s AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS e,
+        |         (embedding IS NULL
+        |          OR len(list_filter(embedding::DOUBLE[], x -> x IS NULL)) > 0
+        |          OR len(list_filter(embedding::DOUBLE[], x -> isnan(x) OR isinf(x))) > 0) AS bad
+        |  FROM embeddings),
+        |p AS (
+        |  SELECT vec_id, bad,
+        |    CAST(list_sum(list_transform(range(1, 65), i -> ((((i-1)*2 + 1) % 7) - 3) * 0.25 * e[i])) AS REAL) AS p0,
+        |    CAST(list_sum(list_transform(range(1, 65), i -> ((((i-1)*3 + 1) % 7) - 3) * 0.25 * e[i])) AS REAL) AS p1,
+        |    CAST(list_sum(list_transform(range(1, 65), i -> ((((i-1)*4 + 1) % 7) - 3) * 0.25 * e[i])) AS REAL) AS p2,
+        |    CAST(list_sum(list_transform(range(1, 65), i -> ((((i-1)*5 + 1) % 7) - 3) * 0.25 * e[i])) AS REAL) AS p3
+        |  FROM s)
+        |SELECT vec_id,
+        |  CASE WHEN bad THEN NULL ELSE round(CAST(p0 AS DOUBLE), 6) END AS y0,
+        |  CASE WHEN bad THEN NULL ELSE round(CAST(p1 AS DOUBLE), 6) END AS y1,
+        |  CASE WHEN bad THEN NULL ELSE round(CAST(p2 AS DOUBLE), 6) END AS y2,
+        |  CASE WHEN bad THEN NULL ELSE round(CAST(p3 AS DOUBLE), 6) END AS y3
+        |FROM p ORDER BY vec_id""".stripMargin),
 
     // symmetric int8 quantization — scale + lane extrema/sum are exact
     // integer/double math both engines reproduce bit-for-bit
-    "q_embed_quantize" -> ((s, d) =>
+    "q_embed_quantize" -> Q((s, d) =>
       Tables.embeddings(s, d)
         .select(col("vec_id"), call_function("quantize_i8", col("embedding")).as("qz"))
         .select(col("vec_id"),
@@ -1695,17 +3514,60 @@ object SparkEntry {
           array_min(col("qz.q")).cast("int").as("q_min"),
           array_max(col("qz.q")).cast("int").as("q_max"),
           aggregate(col("qz.q"), lit(0), (a, x) => a + x.cast("int")).as("q_sum"))
-        .orderBy(col("vec_id"))),
+        .orderBy(col("vec_id")),
+      // same invalid-embedding contract as q_embed_normalize; a zero vector
+      // quantizes to scale=0 with all-zero lanes (127/0 would be inf)
+      """WITH s AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS e,
+        |         (embedding IS NULL
+        |          OR len(list_filter(embedding::DOUBLE[], x -> x IS NULL)) > 0
+        |          OR len(list_filter(embedding::DOUBLE[], x -> isnan(x) OR isinf(x))) > 0) AS bad,
+        |         list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS mx
+        |  FROM embeddings),
+        |t AS (
+        |  SELECT vec_id, e, bad,
+        |         CASE WHEN bad THEN NULL WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END AS scale
+        |  FROM s),
+        |q AS (
+        |  SELECT vec_id, scale,
+        |         CASE WHEN bad THEN NULL
+        |              WHEN scale = 0 THEN list_transform(e, x -> 0)
+        |              ELSE list_transform(e, x -> CAST(least(greatest(trunc(x * scale), -127), 127) AS INTEGER)) END AS qv
+        |  FROM t)
+        |SELECT vec_id, round(scale, 6) AS q_scale,
+        |  CAST(list_min(qv) AS INTEGER) AS q_min,
+        |  CAST(list_max(qv) AS INTEGER) AS q_max,
+        |  CAST(list_sum(qv) AS INTEGER) AS q_sum
+        |FROM q ORDER BY vec_id""".stripMargin),
 
-    "q_ann_lsh" -> ((s, d) => {
+    "q_ann_lsh" -> Q((s, d) => {
       val emb = Tables.embeddings(s, d)
       emb.select(col("vec_id"),
           Similarity.hyperplaneSignature(col("embedding"), dim = 64, numPlanes = 12).as("bucket"))
         .groupBy(col("bucket")).agg(count(lit(1)).as("bucket_size"))
         .orderBy(col("bucket"))
+    }, {
+      // the hyperplane planes are SEEDED constants (Random(42) Gaussian
+      // stream) — inlined here as double literals, so DuckDB computes the
+      // exact same sign bits: per plane one left-associated dot-product
+      // chain over embedding::DOUBLE[] (identical IEEE addition order to
+      // the native expression's loop), bucket = Σ 2^plane for dot ≥ 0
+      val planes = graft.functions.HyperplaneSigExpr.planesFor(64, 12, 42L)
+      val sigExpr = planes.zipWithIndex.map { case (p, b) =>
+        val dot = p.zipWithIndex
+          .map { case (w, i) => s"e[${i + 1}] * (${w})" }
+          .reduce((a, t) => s"($a + $t)")
+        s"(CASE WHEN $dot >= 0 THEN ${1L << b} ELSE 0 END)"
+      }.mkString("(", " + ", ")")
+      s"""WITH ec AS (
+         |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+         |sig AS (
+         |  SELECT vec_id, CAST($sigExpr AS BIGINT) AS bucket FROM ec)
+         |SELECT bucket, count(*) AS bucket_size FROM sig
+         |GROUP BY bucket ORDER BY bucket""".stripMargin
     }),
 
-    "q_ann_ivf" -> ((s, d) => {
+    "q_ann_ivf" -> new Q((s, d) => {
       lastAnnDir = Some(d)
       val emb = Tables.embeddings(s, d)
       val cents = ivfCents.getOrElseUpdate(d,
@@ -1713,21 +3575,35 @@ object SparkEntry {
       val index = Similarity.ivfBuildFromCentroids(emb, "vec_id", "embedding", cents)
       Similarity.ivfSearch(index, emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 5, nProbe = 4)
-    }),
+    }, () => annIvfOracle),
 
     // IVF at nProbe == numCentroids probes every cell — candidate set is
     // the whole corpus, so the result EQUALS brute force (IvfSpec proves
     // the equivalence; this pins it against the DuckDB exact top-k oracle
     // too, closing the ANN family's last rows-only entry — the probed
     // path above keeps its measured-recall grading)
-    "q_ann_ivf_exhaustive" -> ((s, d) => {
+    "q_ann_ivf_exhaustive" -> Q((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cents = ivfCents.getOrElseUpdate(d,
         Similarity.ivfFitCentroids(emb, "embedding", numCentroids = 16))
       val index = Similarity.ivfBuildFromCentroids(emb, "vec_id", "embedding", cents)
       Similarity.ivfSearch(index, emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 5, nProbe = 16)
-    }),
+    },
+      // exhaustive IVF == brute force (every cell probed): the exact top-k
+      // oracle is the SAME SQL as q_ann_topk — identical query set, k, sim
+      // rounding and tie-break
+      """WITH scored AS (
+        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+        |    round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 4) AS sim
+        |  FROM embeddings q, embeddings c
+        |  WHERE q.vec_id < 8 AND q.vec_id <> c.vec_id),
+        |ranked AS (
+        |  SELECT query_id, neighbor_id, sim,
+        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS "rank"
+        |  FROM scored)
+        |SELECT query_id, "rank", neighbor_id, sim FROM ranked
+        |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin),
 
     // IVF-PQ (the FAISS IVFADC composition): coarse cells + residual PQ
     // codes + ⟨q,c⟩+⟨q,residual̂⟩ ADC shortlist + exact re-rank. Closes
@@ -1736,7 +3612,7 @@ object SparkEntry {
     // residual sub-codebooks) are memoized seed-deterministic fits
     // emitted as literals; DuckDB replays assignment, float residuals,
     // encoding, ADC, the 100-deep shortlist and the exact re-rank
-    "q_ann_ivfpq" -> ((s, d) => {
+    "q_ann_ivfpq" -> new Q((s, d) => {
       lastAnnDir = Some(d)
       val emb = Tables.embeddings(s, d)
       val cents = ivfCents.getOrElseUpdate(d,
@@ -1747,39 +3623,64 @@ object SparkEntry {
       val index = Similarity.ivfPqFromArtifacts(emb, "vec_id", "embedding", cents, model)
       Similarity.ivfPqSearch(index, emb.filter(col("vec_id") < 8), "vec_id", "embedding",
         k = 5, nProbe = 4, shortlist = 100)
-    }),
+    }, () => annIvfPqOracle),
 
-    "q_binary_meta" -> ((s, d) => {
+    "q_binary_meta" -> Q((s, d) => {
       val media = Multimodal.withBinaryPayload(Tables.documents(s, d), "doc_id", "text")
       Multimodal.featurize(s, media)
         .select(col("doc_id"), col("byte_len"), col("content_sha"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """SELECT doc_id, CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
+        |       sha256(text) AS content_sha
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // frame sampling (video stub): evenly-spaced byte windows as child
     // rows; frame hashes/lengths are deterministic byte math, so DuckDB
     // replicates them via hex slicing — the explode-to-child-rows plumbing
     // gets a full oracle
-    "q_frame_sample" -> ((s, d) => {
+    "q_frame_sample" -> Q((s, d) => {
       val media = Multimodal.withBinaryPayload(Tables.documents(s, d), "doc_id", "text")
       Multimodal.frameSampleStub(media, frames = 4, frameBytes = 64)
         .select(col("doc_id"), col("frame_idx"),
           octet_length(col("frame_bytes")).as("frame_len"),
           hex(col("frame_bytes")).as("frame_hex"))
         .orderBy(col("doc_id"), col("frame_idx"))
-    }),
+    },
+      // mirrors frameSampleStub's byte windows: pos = trunc(1 + idx*(n-64)/3.0)
+      // (Spark's double→int cast truncates; DuckDB's rounds, hence trunc()),
+      // bytes sliced via hex so multibyte text can't skew offsets
+      """WITH m AS (
+        |  SELECT doc_id, hex(encode(text)) AS h, octet_length(encode(text)) AS n
+        |  FROM documents),
+        |f AS (
+        |  SELECT doc_id, h, n, unnest(range(0, 4)) AS frame_idx FROM m),
+        |c AS (
+        |  SELECT doc_id, frame_idx, n, h,
+        |    CAST(trunc(1 + frame_idx * greatest((n - 64) / 3.0, 0)) AS BIGINT) AS pos
+        |  FROM f)
+        |SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
+        |  CAST(least(64, n - pos + 1) AS INTEGER) AS frame_len,
+        |  substr(h, CAST((pos - 1) * 2 + 1 AS BIGINT), 128) AS frame_hex
+        |FROM c ORDER BY doc_id, frame_idx""".stripMargin),
 
     // scalar projection of the featurizer (the `feature` array itself is
     // pinned by MultimodalSpec; arrays break the driver's pandas comparer).
     // width/height come from the deterministic stub decode, which IS
     // SQL-expressible → full DuckDB oracle.
-    "q_multimodal_features" -> ((s, d) => {
+    "q_multimodal_features" -> Q((s, d) => {
       val media = Multimodal.withBinaryPayload(Tables.documents(s, d), "doc_id", "text")
       Multimodal.featurize(s, media)
         .select(col("doc_id"), col("byte_len"), col("content_sha"),
           col("width"), col("height"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // mirrors Multimodal.stubDecode: w = 1+(len*31+id)%64, h = 1+(len*17+7id)%64
+      """SELECT doc_id, CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
+        |       sha256(text) AS content_sha,
+        |       CAST(1 + (octet_length(encode(text))*31 + doc_id) % 64 AS INTEGER) AS width,
+        |       CAST(1 + (octet_length(encode(text))*17 + doc_id*7) % 64 AS INTEGER) AS height
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // REAL image decode: plant a PNG per doc whose dimensions are a pure
     // function of doc_id, decode through the javax.imageio path, and
@@ -1787,7 +3688,7 @@ object SparkEntry {
     // Only decoded fields are selected — the PNG bytes themselves are
     // encoder-dependent, so byte_len/sha stay out of this query (they
     // have their own oracle on text payloads in q_binary_meta).
-    "q_image_decode" -> ((s, d) => {
+    "q_image_decode" -> Q((s, d) => {
       val pngGen = udf((id: Long) => Multimodal.syntheticPng(
         1 + (id % 64).toInt, 1 + ((id * 7) % 64).toInt, id))
       val media = Tables.documents(s, d)
@@ -1797,14 +3698,19 @@ object SparkEntry {
       Multimodal.featurize(s, media)
         .select(col("doc_id"), col("width"), col("height"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // planted-PNG decode: dimensions are a pure function of doc_id by
+      // construction — the decode path must recover exactly these
+      """SELECT doc_id, CAST(1 + doc_id % 64 AS INTEGER) AS width,
+        |       CAST(1 + (doc_id * 7) % 64 AS INTEGER) AS height
+        |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin),
 
     // REAL resize: plant constant-gray PNGs with dims f(doc_id), resize
     // into a 40x30 box, then RE-DECODE the emitted payloads — width,
     // height and dominant luminance bin are read back from the re-encoded
     // bytes, closing the decode→rescale→encode→decode loop against pure
     // arithmetic (constant color survives nearest-neighbor exactly)
-    "q_image_resize" -> ((s, d) => {
+    "q_image_resize" -> Q((s, d) => {
       val pngGen = udf((id: Long) => Multimodal.constPng(
         1 + (id % 97).toInt, 1 + ((id * 7) % 83).toInt, ((id * 37) % 256).toInt))
       val media = Tables.documents(s, d)
@@ -1817,13 +3723,28 @@ object SparkEntry {
           (array_position(col("feature"), array_max(col("feature"))) - 1)
             .cast("int").as("lum_bin"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // mirrors Multimodal.fitDims (integer floor division) + the constant
+      // gray's luminance bin v*8/256 with v = (doc_id*37)%256
+      """WITH src AS (
+        |  SELECT doc_id, 1 + (doc_id % 97) AS w, 1 + ((doc_id*7) % 83) AS h,
+        |         (doc_id*37) % 256 AS v
+        |  FROM documents WHERE doc_id < 100)
+        |SELECT doc_id,
+        |  CAST(CASE WHEN w <= 40 AND h <= 30 THEN w
+        |            WHEN w*30 >= h*40 THEN 40
+        |            ELSE greatest(1, (w*30) // h) END AS INTEGER) AS width,
+        |  CAST(CASE WHEN w <= 40 AND h <= 30 THEN h
+        |            WHEN w*30 >= h*40 THEN greatest(1, (h*40) // w)
+        |            ELSE 30 END AS INTEGER) AS height,
+        |  CAST((v * 8) // 256 AS INTEGER) AS lum_bin
+        |FROM src ORDER BY doc_id""".stripMargin),
 
     // REAL GIF frame extraction: plant animated GIFs with frame count and
     // per-frame constant gray f(doc_id), sample 4 evenly-spaced frames via
     // ImageReader.read(i) — stored-frame count, anchor indices, dims and
     // dominant luminance bins all check against arithmetic
-    "q_frame_extract" -> ((s, d) => {
+    "q_frame_extract" -> Q((s, d) => {
       val gifGen = udf((id: Long) => Multimodal.syntheticGif(
         4 + (id % 13).toInt, 3 + (id % 11).toInt, 1 + (id % 6).toInt, id))
       val media = Tables.documents(s, d)
@@ -1834,14 +3755,29 @@ object SparkEntry {
         .select(col("doc_id"), col("frame_idx"), col("src_frame"),
           col("n_frames"), col("frame_w"), col("frame_h"), col("lum_bin"))
         .orderBy(col("doc_id"), col("frame_idx"))
-    }),
+    },
+      // mirrors Multimodal.sampleIndex (all frames when n<=4, else floor
+      // i*(n-1)/3 anchors) + gifFrameGray(doc_id, f) = (doc_id*31+f*40)%256
+      """WITH src AS (
+        |  SELECT doc_id, 4 + (doc_id % 13) AS w, 3 + (doc_id % 11) AS h,
+        |         1 + (doc_id % 6) AS n
+        |  FROM documents WHERE doc_id < 100),
+        |f AS (
+        |  SELECT doc_id, w, h, n, unnest(range(0, 4)) AS i FROM src)
+        |SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
+        |  CAST(CASE WHEN n <= 4 THEN i ELSE (i * (n-1)) // 3 END AS INTEGER) AS src_frame,
+        |  CAST(n AS INTEGER) AS n_frames, CAST(w AS INTEGER) AS frame_w,
+        |  CAST(h AS INTEGER) AS frame_h,
+        |  CAST((((doc_id*31 + (CASE WHEN n <= 4 THEN i ELSE (i*(n-1))//3 END)*40) % 256) * 8) // 256 AS INTEGER) AS lum_bin
+        |FROM f WHERE i < least(4, n)
+        |ORDER BY doc_id, frame_idx""".stripMargin),
 
     // REAL audio decode (javax.sound WAV): plant constant-amplitude
     // PCM-16 WAVs keyed by doc_id — channels, duration, and exact
     // per-channel RMS/peak are pure arithmetic in the id, so the
     // decoded features mirror in SQL with no tolerance (a constant
     // signal's sqrt-of-mean-of-squares is exactly the amplitude)
-    "q_audio_features" -> ((s, d) => {
+    "q_audio_features" -> Q((s, d) => {
       val wavGen = udf((id: Long) => Multimodal.syntheticWav(id))
       val media = Tables.documents(s, d)
         .select(col("doc_id")).filter(col("doc_id") < 200)
@@ -1851,7 +3787,23 @@ object SparkEntry {
           col("sample_rate"), col("duration_ms"),
           col("rms0"), col("peak0"), col("rms1"), col("peak1"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // the planted WAVs' decoded features are pure arithmetic in doc_id:
+      // constant amplitude A per channel → rms = peak = A exactly; mono
+      // rows carry NULL channel-1 stats
+      """SELECT doc_id,
+        |       TRUE AS decoded,
+        |       CAST(1 + doc_id % 2 AS INTEGER) AS channels,
+        |       CAST(8000 AS INTEGER) AS sample_rate,
+        |       CAST(50 + (doc_id % 7) * 10 AS BIGINT) AS duration_ms,
+        |       CAST(128 + 16 * ((doc_id * 31) % 900) AS DOUBLE) AS rms0,
+        |       CAST(128 + 16 * ((doc_id * 31) % 900) AS DOUBLE) AS peak0,
+        |       CASE WHEN doc_id % 2 = 1
+        |            THEN CAST(128 + 16 * ((doc_id * 31 + 1) % 900) AS DOUBLE) END AS rms1,
+        |       CASE WHEN doc_id % 2 = 1
+        |            THEN CAST(128 + 16 * ((doc_id * 31 + 1) % 900) AS DOUBLE) END AS peak1
+        |FROM documents WHERE doc_id < 200
+        |ORDER BY doc_id""".stripMargin),
 
     // LSH near-dup SCALE path with a full oracle: plant direction-identical
     // copies (embedding × 2, shifted id) on BOTH engines — scaling by a
@@ -1859,7 +3811,7 @@ object SparkEntry {
     // (fp scaling by 2 commutes with rounding), so the planted pairs are
     // guaranteed to collide and LSH output == exact all-pairs at θ=0.9
     // by construction, not sampling luck.
-    "q_ann_lsh_pairs" -> ((s, d) => {
+    "q_ann_lsh_pairs" -> Q((s, d) => {
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val planted = emb.unionByName(emb.select(
         (col("vec_id") + 10000).as("vec_id"),
@@ -1867,14 +3819,26 @@ object SparkEntry {
       Similarity.lshNearDupPairs(planted, "vec_id", "embedding", dim = 64,
           numPlanes = 12, threshold = 0.9)
         .orderBy(col("id_a"), col("id_b"))
-    }),
+    },
+      """WITH planted AS (
+        |  SELECT vec_id, embedding FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 10000 AS vec_id,
+        |         list_transform(embedding, x -> x * 2) AS embedding
+        |  FROM embeddings)
+        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
+        |FROM planted a, planted b
+        |WHERE a.vec_id < b.vec_id
+        |  AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) >= 0.9
+        |ORDER BY id_a, id_b""".stripMargin),
 
     // SemDeDup semantic dedup over the same planted construction: every
     // planted copy is direction-identical to its original (collides in
     // every table, cosine 1.0) so all 10000+ ids drop; nothing natural
     // clears 0.9 (max natural pairwise ~0.51) — LSH keep-set == exact
     // greedy keep-first by construction, full oracle
-    "q_semantic_dedup" -> ((s, d) => {
+    "q_semantic_dedup" -> Q((s, d) => {
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val planted = emb.unionByName(emb.select(
         (col("vec_id") + 10000).as("vec_id"),
@@ -1883,16 +3847,33 @@ object SparkEntry {
           numPlanes = 12, threshold = 0.9)
         .select(col("vec_id"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // exact keep-first oracle: drop any row with an earlier row at cosine
+      // ≥ 0.9 — by the x2-scaling construction that is exactly the planted
+      // copies, and LSH finds every such pair (identical signatures)
+      """WITH planted AS (
+        |  SELECT vec_id, embedding FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 10000 AS vec_id,
+        |         list_transform(embedding, x -> x * 2) AS embedding
+        |  FROM embeddings)
+        |SELECT p.vec_id FROM planted p
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM planted q
+        |  WHERE q.vec_id < p.vec_id
+        |    AND round(list_cosine_similarity(
+        |          p.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) >= 0.9)
+        |ORDER BY vec_id""".stripMargin),
 
     // PQ compressed-domain ANN (round 9): 16-byte codes (16× smaller
-    // corpus scan), ADC shortlist, exact re-rank — rows-only BY DESIGN
-    // like q_ann_ivf (k-means codebooks are not SQL-reproducible);
-    // measured recall is recorded per bench round ("pq" in the recall
+    // corpus scan), ADC shortlist, exact re-rank — the k-means codebooks
+    // are not SQL-reproducible, so the oracle replays the memoized ones
+    // as literals (annPqOracle); measured recall is recorded per bench
+    // round ("pq" in the recall
     // map, 1.0 at sf0.1 m=16/k=64/L=100) and floored ≥0.9 by
     // SimilaritySpec, which also pins that re-ranked sims are EXACT
     // cosines
-    "q_ann_pq" -> ((s, d) => {
+    "q_ann_pq" -> new Q((s, d) => {
       lastAnnDir = Some(d)
       val emb = Tables.embeddings(s, d)
         .select(col("vec_id"), call_function("l2_normalize", col("embedding")).as("nv"))
@@ -1906,13 +3887,13 @@ object SparkEntry {
       val enc = Similarity.pqEncode(emb, "vec_id", "nv", model)
       Similarity.pqSearchRefined(enc, emb, emb.filter(col("vec_id") < 8),
         "vec_id", "nv", model, k = 5, shortlist = 100)
-    }),
+    }, () => annPqOracle),
 
     // quality-aware semantic dedup: the same planted pairs, but the
     // SURVIVOR follows quality (best copy per cluster), not the min-id
     // keep-first rule — semanticDedup's doc points here; the composition
     // is assignCanonical → keepBestPerCluster over the LSH pairs
-    "q_semantic_retain" -> ((s, d) => {
+    "q_semantic_retain" -> Q((s, d) => {
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val planted = emb.unionByName(emb.select(
           (col("vec_id") + 10000).as("vec_id"),
@@ -1926,22 +3907,63 @@ object SparkEntry {
           "vec_id", "canonical", "quality")
         .select(col("vec_id"), col("quality"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // exact-cosine cluster mirror: canonical = min vec_id within cosine
+      // ≥ 0.9 (self included, so singletons label themselves — one-hop ==
+      // connected components because only the planted identity pairs
+      // qualify); survivor = best quality per cluster, min-id tie-break
+      """WITH planted AS (
+        |  SELECT vec_id, embedding FROM embeddings
+        |  UNION ALL
+        |  SELECT vec_id + 10000 AS vec_id,
+        |         list_transform(embedding, x -> x * 2) AS embedding
+        |  FROM embeddings),
+        |q AS (SELECT vec_id, embedding, vec_id % 7 AS quality FROM planted),
+        |cl AS (
+        |  SELECT p.vec_id, p.quality,
+        |    (SELECT min(q2.vec_id) FROM q q2
+        |     WHERE round(list_cosine_similarity(
+        |             p.embedding::DOUBLE[], q2.embedding::DOUBLE[]), 4) >= 0.9)
+        |      AS canonical
+        |  FROM q p),
+        |r AS (
+        |  SELECT vec_id, quality,
+        |    row_number() OVER (PARTITION BY canonical
+        |      ORDER BY quality DESC, vec_id) AS rn
+        |  FROM cl)
+        |SELECT vec_id, quality FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin),
 
     // prototype-based scoring (D4-style): per-label centroid, cosine of
     // each embedding to its label's prototype — the ranking signal for
     // prototype pruning; both engines average components in double
-    "q_prototypicality" -> ((s, d) =>
+    "q_prototypicality" -> Q((s, d) =>
       Similarity.prototypicality(Tables.embeddings(s, d), "vec_id", "label",
           "embedding")
-        .orderBy(col("vec_id"))),
+        .orderBy(col("vec_id")),
+      // zipped unnests give (label, dim, component); double avg per
+      // (label, dim), list reassembled in dim order, cosine in double —
+      // identical arithmetic to the Spark plan
+      """WITH ex AS (
+        |  SELECT label, unnest(embedding) AS x,
+        |         unnest(range(1, len(embedding) + 1)) AS d
+        |  FROM embeddings),
+        |c AS (
+        |  SELECT label, d, avg(CAST(x AS DOUBLE)) AS m
+        |  FROM ex GROUP BY label, d),
+        |cent AS (
+        |  SELECT label, list(m ORDER BY d) AS centroid FROM c GROUP BY label)
+        |SELECT e.vec_id, e.label,
+        |  round(list_cosine_similarity(e.embedding::DOUBLE[], cent.centroid), 4)
+        |    AS proto_score
+        |FROM embeddings e JOIN cent ON cent.label = e.label
+        |ORDER BY e.vec_id""".stripMargin),
 
     // incremental LSH probe: a batch of x2-scaled copies (sign bits — and
     // thus signatures — preserved exactly, so recall is 1.0 by
     // construction) probed against the corpus signature index; at 0.9 the
     // only qualifying pairs are the planted identities (max natural
     // pairwise cosine ~0.51), so the exact cross-join oracle is total
-    "q_ann_lsh_incr" -> ((s, d) => {
+    "q_ann_lsh_incr" -> Q((s, d) => {
       val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val corpusIx = Similarity.lshSignatureIndex(emb, "vec_id", "embedding",
         dim = 64, numPlanes = 12)
@@ -1951,11 +3973,22 @@ object SparkEntry {
       Similarity.lshNearDupAgainst(batch, corpusIx, "vec_id", "embedding",
           dim = 64, numPlanes = 12, threshold = 0.9)
         .orderBy(col("batch_id"), col("corpus_id"))
-    }),
+    },
+      // exact cross-pairs oracle: recall 1.0 by the x2-scaling construction,
+      // and only the planted identity pairs clear the 0.9 threshold
+      """WITH batch AS (
+        |  SELECT vec_id + 10000 AS vec_id,
+        |         list_transform(embedding, x -> x * 2) AS embedding
+        |  FROM embeddings WHERE vec_id < 10)
+        |SELECT b.vec_id AS batch_id, c.vec_id AS corpus_id,
+        |  round(list_cosine_similarity(b.embedding::DOUBLE[], c.embedding::DOUBLE[]), 4) AS sim
+        |FROM batch b, embeddings c
+        |WHERE round(list_cosine_similarity(b.embedding::DOUBLE[], c.embedding::DOUBLE[]), 4) >= 0.9
+        |ORDER BY batch_id, corpus_id""".stripMargin),
 
     // incremental exact dedup: an arriving batch (with 10 planted corpus
     // copies) deduped against the corpus fingerprint table
-    "q_dedup_incremental" -> ((s, d) => {
+    "q_dedup_incremental" -> Q((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") < 250)
       val planted = corpus.orderBy(col("doc_id")).limit(10)
@@ -1965,13 +3998,28 @@ object SparkEntry {
           "doc_id", "text")
         .select(col("doc_id"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // text-equality mirror of the (length, xxhash64) fingerprint anti-join
+      // — identical results absent 64-bit collisions, which the testdata
+      // (and any planted case) cannot produce
+      """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
+        |planted AS (
+        |  SELECT doc_id + 100000 AS doc_id, text FROM corpus
+        |  ORDER BY doc_id LIMIT 10),
+        |batch AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
+        |  UNION ALL SELECT doc_id, text FROM planted)
+        |SELECT b.doc_id FROM batch b
+        |WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.text = b.text)
+        |  AND NOT EXISTS (
+        |    SELECT 1 FROM batch b2 WHERE b2.text = b.text AND b2.doc_id < b.doc_id)
+        |ORDER BY doc_id""".stripMargin),
 
     // as-of join: each event enriched with the user's latest order as of
     // the event time; the right side is arg-max-deduped per (key, time)
     // so the result is deterministic (orders has duplicate
     // (custkey, orderdate) instants)
-    "q_asof_join" -> ((s, d) => {
+    "q_asof_join" -> Q((s, d) => {
       val e = Tables.events(s, d).select(col("event_id"), col("user_id"), col("ts"))
       val o = Tables.orders(s, d).groupBy(col("o_custkey"), col("o_orderdate"))
         .agg(max(col("o_orderkey")).as("o_orderkey"),
@@ -1981,7 +4029,16 @@ object SparkEntry {
         .select(col("event_id"), col("o_orderkey").as("last_orderkey"),
           col("o_totalprice").as("last_totalprice"))
         .orderBy(col("event_id"))
-    }),
+    },
+      """WITH o AS (
+        |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey,
+        |         max_by(o_totalprice, o_orderkey) AS o_totalprice
+        |  FROM orders GROUP BY 1, 2)
+        |SELECT e.event_id, o.o_orderkey AS last_orderkey,
+        |       o.o_totalprice AS last_totalprice
+        |FROM events e ASOF LEFT JOIN o
+        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
+        |ORDER BY e.event_id""".stripMargin),
 
     // AUTO-routed as-of join on a PLANTED 50%-hot key (every even event
     // remapped to custkey 1, which has real orders): the key histogram
@@ -1989,7 +4046,7 @@ object SparkEntry {
     // through the plain single-window form; per-key independence makes
     // the split-and-union exact, and DuckDB's ASOF JOIN is the oracle
     // for the whole composition
-    "q_asof_auto" -> ((s, d) => {
+    "q_asof_auto" -> Q((s, d) => {
       val e = Tables.events(s, d).select(col("event_id"),
         when(pmod(col("event_id"), lit(2)) === 0, lit(1L))
           .otherwise(col("user_id")).as("user_id"), col("ts"))
@@ -2001,13 +4058,26 @@ object SparkEntry {
         .select(col("event_id"), col("o_orderkey").as("last_orderkey"),
           col("o_totalprice").as("last_totalprice"))
         .orderBy(col("event_id"))
-    }),
+    },
+      """WITH e AS (
+        |  SELECT event_id,
+        |         CASE WHEN event_id % 2 = 0 THEN 1 ELSE user_id END AS user_id, ts
+        |  FROM events),
+        |o AS (
+        |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey,
+        |         max_by(o_totalprice, o_orderkey) AS o_totalprice
+        |  FROM orders GROUP BY 1, 2)
+        |SELECT e.event_id, o.o_orderkey AS last_orderkey,
+        |       o.o_totalprice AS last_totalprice
+        |FROM e ASOF LEFT JOIN o
+        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
+        |ORDER BY e.event_id""".stripMargin),
 
     // SCD2 history build: each customer's order priority "in force" over
     // time — consecutive same-priority orders suppressed, each version
     // closed by the next change, latest open ((custkey, orderdate) is
     // argmax-deduped first for a deterministic chain)
-    "q_scd2" -> ((s, d) => {
+    "q_scd2" -> Q((s, d) => {
       val changes = Tables.orders(s, d).groupBy(col("o_custkey"), col("o_orderdate"))
         .agg(max_by(col("o_orderpriority"), col("o_orderkey")).as("priority"))
         .select(col("o_custkey").as("custkey"), col("priority"),
@@ -2016,24 +4086,52 @@ object SparkEntry {
         .withColumn("effective_to", lit(null).cast(changes.schema("effective_from").dataType))
       DataSink.scd2Merge(dimSchema.filter(lit(false)), changes, Seq("custkey"))
         .orderBy(col("custkey"), col("effective_from"))
-    }),
+    },
+      """WITH ch AS (
+        |  SELECT o_custkey AS custkey,
+        |         max_by(o_orderpriority, o_orderkey) AS priority,
+        |         o_orderdate AS effective_from
+        |  FROM orders GROUP BY o_custkey, o_orderdate),
+        |kept AS (
+        |  SELECT custkey, priority, effective_from FROM (
+        |    SELECT custkey, priority, effective_from,
+        |           lag(priority) OVER (PARTITION BY custkey ORDER BY effective_from) AS prev
+        |    FROM ch)
+        |  WHERE prev IS NULL OR prev <> priority)
+        |SELECT custkey, priority, effective_from,
+        |       lead(effective_from) OVER (PARTITION BY custkey ORDER BY effective_from)
+        |         AS effective_to
+        |FROM kept ORDER BY custkey, effective_from""".stripMargin),
 
     // CDC changelog apply: a Debezium-shaped I/U/D feed (derived from
     // orders: F→U, O→I, P→D, versioned by orderkey) applied onto the
     // customer snapshot — per-key (version, op-rank) winner, winning D
     // deletes, winning I/U replaces, untouched keys pass through
-    "q_cdc_apply" -> ((s, d) => {
+    "q_cdc_apply" -> Q((s, d) => {
       val snap = Tables.customer(s, d).select(col("c_custkey").as("custkey"),
         col("c_acctbal").as("acctbal"), col("c_mktsegment").as("mktsegment"))
       DataSink.applyChangelog(snap, cdcChanges(s, d), Seq("custkey"))
         .orderBy(col("custkey"))
-    }),
+    },
+      // the per-key winner ranks by (version DESC, op-rank DESC with
+      // D=2 > U=1 > I=0) — the compactChangelog max_by mirrored
+      s"""$CdcLastCte
+         |SELECT c_custkey AS custkey, c_acctbal AS acctbal,
+         |       c_mktsegment AS mktsegment
+         |FROM customer
+         |WHERE c_custkey NOT IN (SELECT custkey FROM last)
+         |UNION ALL
+         |SELECT custkey, acctbal, mktsegment FROM last WHERE op <> 'D'
+         |ORDER BY custkey""".stripMargin),
 
     // the compaction step alone (Kafka log-compaction shape): per-key
     // winning change INCLUDING delete tombstones
-    "q_cdc_compact" -> ((s, d) =>
+    "q_cdc_compact" -> Q((s, d) =>
       DataSink.compactChangelog(cdcChanges(s, d), Seq("custkey"))
-        .orderBy(col("custkey"))),
+        .orderBy(col("custkey")),
+      s"""$CdcLastCte
+         |SELECT custkey, acctbal, mktsegment, op, version
+         |FROM last ORDER BY custkey""".stripMargin),
 
     // transactional table log: three upsert COMMITS staged once (batch i
     // = orders with orderkey divisible by 2/3/5, payload tagged with the
@@ -2041,23 +4139,23 @@ object SparkEntry {
     // must equal the last-wins replay of batches 1..2 and must NOT see
     // batch 3, which is committed in the same log. DuckDB replays the
     // upsert arithmetic directly.
-    "q_table_log" -> ((s, d) => {
-      val dir = tableLogPath.getOrElseUpdate(d, {
-        val p = stageDir("tablelog", d)
-        def batch(i: Int, m: Int) = Tables.orders(s, d)
-          .filter(pmod(col("o_orderkey"), lit(m)) === 0)
-          .select(col("o_orderkey"),
-            (col("o_totalprice").cast("double") + i).as("val"),
-            lit(i.toLong).as("ver"))
-        TableLog.upsertInto(s, p, batch(1, 2), Seq("o_orderkey"), "ver")
-        TableLog.upsertInto(s, p, batch(2, 3), Seq("o_orderkey"), "ver")
-        TableLog.upsertInto(s, p, batch(3, 5), Seq("o_orderkey"), "ver")
-        p
-      })
+    "q_table_log" -> Q((s, d) => {
+      val dir = tableLogFixture(s, d)
       TableLog.readAt(s, dir, version = 2L)
         .select(col("o_orderkey"), col("val"), col("ver"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      // last-wins replay of upsert batches 1..2 (batch 3 exists in the log
+      // but is AFTER the read version — time travel must not see it)
+      """WITH b AS (
+        |  SELECT o_orderkey, 1 AS i FROM orders WHERE o_orderkey % 2 = 0
+        |  UNION ALL
+        |  SELECT o_orderkey, 2 AS i FROM orders WHERE o_orderkey % 3 = 0),
+        |w AS (SELECT o_orderkey, max(i) AS i FROM b GROUP BY 1)
+        |SELECT w.o_orderkey, o.o_totalprice::DOUBLE + w.i AS val,
+        |       CAST(w.i AS BIGINT) AS ver
+        |FROM w JOIN orders o USING (o_orderkey)
+        |ORDER BY w.o_orderkey""".stripMargin),
 
     // manifest-pruned scan over a staged TableLog layout: lineitem
     // written once as 16 price-range files with footer min/max recorded
@@ -2065,46 +4163,52 @@ object SparkEntry {
     // files (file-listing-level skipping) and must still produce exactly
     // the full-table filter's rows — DuckDB scans everything, results
     // must hash-match
-    "q_table_log_prune" -> ((s, d) => {
-      val dir = tableLogPrunedPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogprune", d)
-        val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-            col("l_extendedprice").cast("double").as("price"))
-          .repartitionByRange(16, col("price"))
-        TableLog.append(s, p, li, statsCols = Seq("price"))
-        p
-      })
+    "q_table_log_prune" -> Q((s, d) => {
+      val dir = prunedFixture(s, d)
       val pr = TableLog.scanPruned(s, dir, Seq(("price", 10000.0, 20000.0)))
       pr.df.filter(col("price").between(10000.0, 20000.0))
         .select(col("l_orderkey"), col("l_linenumber"), col("price"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // SQL TIME TRAVEL: the same post-delete snapshot as
     // q_table_log_delete, read as PLAIN SQL — `FROM graft.`path`
     // VERSION AS OF 2` through the analyzer rule; must hash-match the
     // method API's readAt against the same oracle
-    "q_sql_timetravel" -> ((s, d) => {
+    "q_sql_timetravel" -> Q((s, d) => {
       val dir = cowFixture(s, d)
       s.sql(s"SELECT * FROM graft.`$dir` VERSION AS OF 2")
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // SQL time travel reads the SAME snapshot as q_table_log_delete
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // CONVERT TO GRAFT: adopt a plain parquet directory into the table
     // log in place — zero bytes copied, manifest v1 references the
     // files where they sit, and the adopted table must read exactly
     // what the parquet dir held
-    "q_convert" -> ((s, d) => {
-      val dir = tableLogConvertPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogconvert", d) + "/lake"
+    "q_convert" -> Q((s, d) => {
+      // a plain parquet dir adopted in place: the zero-copy migration path
+      val dir = staged("tlogconvert", d) { p =>
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
             col("l_extendedprice").cast("double").as("price"))
           .repartition(4).write.parquet(p)
         TableLog.convertToGraft(s, p, statsCols = Seq("price"))
-        p
-      })
+      }
       TableLog.readAt(s, dir).orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // the adopted table IS the parquet dir's rows — the original
+      // lineitem projection, bit for bit
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // HIVE-PARTITIONED CONVERT: adopt a `l_returnflag=X/` directory lake
     // zero-copy — the directory-encoded values come back as a REAL typed
@@ -2112,31 +4216,37 @@ object SparkEntry {
     // partition predicate prunes files through the constant min=max
     // manifest stats recorded at convert (asserted: the scan must read
     // strictly fewer files than the table holds)
-    "q_convert_partitioned" -> ((s, d) => {
-      val dir = tableLogConvertPartPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogconvpart", d) + "/lake"
+    "q_convert_partitioned" -> Q((s, d) => {
+      // an `l_returnflag=X/` directory lake adopted zero-copy
+      val dir = staged("tlogconvpart", d) { p =>
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
             col("l_extendedprice").cast("double").as("price"),
             col("l_returnflag"))
           .repartition(4).write.partitionBy("l_returnflag").parquet(p)
         TableLog.convertToGraft(s, p, statsCols = Seq("price"))
-        p
-      })
+      }
       val pr = TableLog.scanWhere(s, dir, col("l_returnflag") === lit("R"))
       require(pr.filesRead < pr.filesTotal,
         s"q_convert_partitioned: partition predicate must prune " +
           s"(${pr.filesRead}/${pr.filesTotal})")
       pr.df.orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // the adopted partitioned lake filtered on its partition column —
+      // directory-encoded values must come back as real column values
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price,
+        |       l_returnflag
+        |FROM lineitem
+        |WHERE l_returnflag = 'R'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // MULTIPART CHECKPOINT: the same table state resolved through
     // executor-written parquet checkpoint parts (the 100 TB format —
     // never a driver-rendered JSON monolith), dv delete included; the
     // snapshot cache is cleared at stage time so the read provably
     // resolves THROUGH the parts at least once
-    "q_ckpt_multipart" -> ((s, d) => {
-      val dir = tableLogMpCkptPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogmpckpt", d)
+    "q_ckpt_multipart" -> Q((s, d) => {
+      // a 12-file table with a dv delete, checkpointed in the parquet part format
+      val dir = staged("tlogmpckpt", d) { p =>
         val base = Tables.orders(s, d).select(col("o_orderkey").as("k"),
           col("o_totalprice").cast("double").as("total"),
           col("o_orderstatus").as("status"))
@@ -2145,10 +4255,16 @@ object SparkEntry {
         TableLog.deleteWhere(s, p, pmod(col("k"), lit(100)) === 0, mode = "dv")
         TableLog.checkpoint(s, p, multipartMinEntries = 1)
         TableLog.snapshotCacheClear()
-        p
-      })
+      }
       TableLog.readAt(s, dir).orderBy(col("k"))
-    }),
+    },
+      // the multipart-checkpointed table is orders minus the dv-deleted
+      // k%100=0 band — state resolved through the parquet parts
+      """SELECT o_orderkey AS k, o_totalprice::DOUBLE AS total,
+        |       o_orderstatus AS status
+        |FROM orders
+        |WHERE o_orderkey % 100 <> 0
+        |ORDER BY k""".stripMargin),
 
     // SCOPED Z-ORDER: `OPTIMIZE … WHERE band ZORDER BY (x, y)` — the
     // hot band's files re-lay as curve hyper-rectangles over the band's
@@ -2156,9 +4272,9 @@ object SparkEntry {
     // verbatim; asserted in-query: an (x, y) box INSIDE the band reads
     // strictly fewer files than the table holds. The oracle is the
     // plain filter — layout maintenance never changes results.
-    "q_zorder_scoped" -> ((s, d) => {
-      val dir = tableLogZScopePath.getOrElseUpdate(d, {
-        val p = stageDir("tlogzscope", d)
+    "q_zorder_scoped" -> Q((s, d) => {
+      // lineitem ranged on l_quantity, then the hot band OPTIMIZEd onto the curve
+      val dir = staged("tlogzscope", d) { p =>
         val li = Tables.lineitem(s, d).select(col("l_orderkey"),
           col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity").cast("double").as("l_quantity"))
@@ -2167,8 +4283,7 @@ object SparkEntry {
         TableLog.optimizeZOrdered(s, p, Seq("l_partkey", "l_suppkey"),
           bitsPerCol = 5, targetFiles = 8,
           where = Some(col("l_quantity") >= 25.0))
-        p
-      })
+      }
       val pr = TableLog.scanWhere(s, dir,
         col("l_quantity") >= 25.0 && col("l_partkey") <= 100 &&
           col("l_suppkey") <= 20)
@@ -2176,16 +4291,21 @@ object SparkEntry {
         s"q_zorder_scoped: the in-band box must prune " +
           s"(${pr.filesRead}/${pr.filesTotal})")
       pr.df.orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+        |       CAST(l_quantity AS DOUBLE) AS l_quantity
+        |FROM lineitem
+        |WHERE l_quantity >= 25 AND l_partkey <= 100 AND l_suppkey <= 20
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // NESTED-FIELD STATS PRUNING: manifest stats keyed by the parquet
     // footer's dotted path — a predicate on `payload.kind` skips files
     // through the same conservative box as a top-level column
     // (asserted in-query: strictly fewer files read). The oracle is
     // the flattened filter over the raw table.
-    "q_nested_prune" -> ((s, d) => {
-      val dir = tableLogNestedPath.getOrElseUpdate(d, {
-        val p = stageDir("tlognested", d)
+    "q_nested_prune" -> Q((s, d) => {
+      // lineitem wrapped in a `payload` struct, stats on the dotted leaf paths
+      val dir = staged("tlognested", d) { p =>
         val li = Tables.lineitem(s, d).select(col("l_orderkey"),
           col("l_linenumber"),
           struct(col("l_returnflag").as("kind"),
@@ -2193,8 +4313,7 @@ object SparkEntry {
         TableLog.append(s, p,
           li.repartitionByRange(6, col("payload.kind"), col("l_orderkey")),
           statsCols = Seq("payload.kind", "payload.qty"))
-        p
-      })
+      }
       val pr = TableLog.scanWhere(s, dir, col("payload.kind") === lit("R"))
       require(pr.filesRead < pr.filesTotal,
         s"q_nested_prune: the nested predicate must prune " +
@@ -2202,16 +4321,20 @@ object SparkEntry {
       pr.df.select(col("l_orderkey"), col("l_linenumber"),
           col("payload.kind").as("kind"), col("payload.qty").as("qty"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_returnflag AS kind,
+        |       CAST(l_quantity AS DOUBLE) AS qty
+        |FROM lineitem WHERE l_returnflag = 'R'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // NESTED-FIELD UPDATE: `UPDATE … SET payload.qty = …` rebuilds the
     // struct field in place through withField — schema unchanged,
     // sibling fields untouched, stats-pruned CoW touch set derived
     // from the (nested) predicate. Oracle reconstructs with a CASE
     // over the flattened raw table.
-    "q_update_nested" -> ((s, d) => {
-      val dir = tableLogNestedUpdPath.getOrElseUpdate(d, {
-        val p = stageDir("tlognestedupd", d)
+    "q_update_nested" -> Q((s, d) => {
+      // the payload-struct layout, then a nested-field UPDATE of payload.qty
+      val dir = staged("tlognestedupd", d) { p =>
         val li = Tables.lineitem(s, d).select(col("l_orderkey"),
           col("l_linenumber"),
           struct(col("l_returnflag").as("kind"),
@@ -2222,13 +4345,16 @@ object SparkEntry {
         TableLog.updateWhere(s, p, col("payload.kind") === lit("R"),
           Map("payload.qty" -> (col("payload.qty") * 10)),
           statsCols = Seq("payload.kind", "payload.qty"))
-        p
-      })
+      }
       TableLog.readAt(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("payload.kind").as("kind"), col("payload.qty").as("qty"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_returnflag AS kind,
+        |       CASE WHEN l_returnflag = 'R' THEN l_quantity::DOUBLE * 10
+        |            ELSE l_quantity::DOUBLE END AS qty
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // TYPE WIDENING (round 19): `ALTER COLUMN cust_i TYPE BIGINT` is a
     // MANIFEST-ONLY commit — the narrow batch's int32 pages stay on
@@ -2238,9 +4364,9 @@ object SparkEntry {
     // pins what makes this 100 TB-shaped: stats still prune across the
     // mixed files (the wide-range predicate skips every narrow file),
     // and the widen commit itself moved ZERO files.
-    "q_widen_column" -> ((s, d) => {
-      val dir = widenColumnPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogwiden", d)
+    "q_widen_column" -> Q((s, d) => {
+      // an int column widened to bigint manifest-only between two batches
+      val dir = staged("tlogwiden", d) { p =>
         val o = Tables.orders(s, d)
         TableLog.append(s, p,
           o.filter(col("o_orderkey") % 2 === 0)
@@ -2258,8 +4384,7 @@ object SparkEntry {
               col("o_totalprice").cast("double").as("price"))
             .repartitionByRange(2, col("cust_i")),
           statsCols = Seq("o_orderkey", "cust_i"))
-        p
-      })
+      }
       val widen = TableLog.history(s, dir).find(_.op == "widen").get
       require(widen.add.isEmpty && widen.remove.isEmpty,
         "q_widen_column: the widen commit must move zero files")
@@ -2270,16 +4395,21 @@ object SparkEntry {
       TableLog.readAt(s, dir)
         .select(col("o_orderkey"), col("cust_i"), col("price"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      """SELECT o_orderkey,
+        |       CASE WHEN o_orderkey % 2 = 0 THEN CAST(o_custkey AS BIGINT)
+        |            ELSE CAST(o_custkey AS BIGINT) + 10000000000 END AS cust_i,
+        |       CAST(o_totalprice AS DOUBLE) AS price
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
 
     // REORG … APPLY (PURGE) (round 19): after scattered dv deletes,
     // the purge pass rewrites ONLY the dv-carrying files (clean files
     // carry verbatim — pinned in-query by path identity), leaves no
     // live vector behind, and keeps the row multiset exact — the
     // GDPR debt-paydown op at O(dv files), never O(table).
-    "q_reorg_purge" -> ((s, d) => {
-      val dir = reorgPurgePath.getOrElseUpdate(d, {
-        val p = stageDir("tlogpurge", d)
+    "q_reorg_purge" -> Q((s, d) => {
+      // scattered dv-deletes over 8 files, then REORG … APPLY (PURGE)
+      val dir = staged("tlogpurge", d) { p =>
         TableLog.append(s, p,
           Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
               col("l_extendedprice").cast("double").as("price"))
@@ -2300,12 +4430,15 @@ object SparkEntry {
         require(preClean.subsetOf(post.keySet),
           "q_reorg_purge: clean files must carry verbatim — purge " +
             "rewrites only dv carriers")
-        p
-      })
+      }
       TableLog.readAt(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"), col("price"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(l_extendedprice AS DOUBLE) AS price
+        |FROM lineitem WHERE l_orderkey NOT IN (1, 32)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // ERASURE AUDIT: the verification half of the GDPR pipeline — after
     // dv-deleting keys on a HASH-distributed layout (stats prune
@@ -2313,20 +4446,30 @@ object SparkEntry {
     // auditErased must report 0 surviving rows for erased keys and the
     // true count for everything else. The oracle replays the delete as
     // a plain filter and recounts per requested key.
-    "q_erasure_audit" -> ((s, d) => {
-      val dir = tableLogAuditPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogaudit", d)
+    "q_erasure_audit" -> Q((s, d) => {
+      // lineitem hash-distributed into 16 files with l_orderkey blooms, two keys dv-erased
+      val dir = staged("tlogaudit", d) { p =>
         val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
             col("l_extendedprice").cast("double").as("price"))
           .repartition(16, col("l_orderkey"))
         TableLog.append(s, p, li, statsCols = Seq("l_orderkey"),
           writeOptions = TableLog.bloomOptions(Seq("l_orderkey")))
         TableLog.deleteWhere(s, p, col("l_orderkey").isin(1L, 32L), mode = "dv")
-        p
-      })
+      }
       TableLog.auditErased(s, dir, "l_orderkey", Seq(1L, 32L, 33L))
         .orderBy(col("key"))
-    }),
+    },
+      // the audited table is lineitem minus the two dv-erased keys; the
+      // oracle recounts per requested key over that filtered state
+      """WITH audit("key") AS (VALUES (CAST(1 AS BIGINT)), (32), (33)),
+        |     live AS (SELECT l_orderkey FROM lineitem
+        |              WHERE l_orderkey NOT IN (1, 32))
+        |SELECT a."key",
+        |       CAST(coalesce(c.cnt, 0) AS BIGINT) AS surviving_rows
+        |FROM audit a
+        |LEFT JOIN (SELECT l_orderkey, count(*) AS cnt FROM live GROUP BY 1) c
+        |  ON a."key" = c.l_orderkey
+        |ORDER BY a."key"""".stripMargin),
 
     // METADATA-ONLY aggregate (plans/MetadataOnlyAgg): a global
     // COUNT(*)/COUNT(col)/MIN/MAX over a graft table folds from the
@@ -2335,21 +4478,22 @@ object SparkEntry {
     // this query pins the VALUES against DuckDB recomputing the same
     // aggregates from the raw rows). On 100 TB this is the difference
     // between a count() costing milliseconds and a full-table read.
-    "q_meta_count" -> ((s, d) => {
-      val dir = tableLogPrunedPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogprune", d)
-        val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-            col("l_extendedprice").cast("double").as("price"))
-          .repartitionByRange(16, col("price"))
-        TableLog.append(s, p, li, statsCols = Seq("price"))
-        p
-      })
+    "q_meta_count" -> Q((s, d) => {
+      val dir = prunedFixture(s, d)
       s.read.format("graft").load(dir).agg(
         count(lit(1)).as("cnt"),
         count(col("price")).as("cnt_price"),
         min(col("price")).as("min_price"),
         max(col("price")).as("max_price"))
-    }),
+    },
+      // the metadata-only aggregate must equal DuckDB recomputing the
+      // same global aggregates from the raw rows (the staged table is the
+      // price projection of lineitem)
+      """SELECT count(*) AS cnt,
+        |       count(l_extendedprice::DOUBLE) AS cnt_price,
+        |       min(l_extendedprice::DOUBLE) AS min_price,
+        |       max(l_extendedprice::DOUBLE) AS max_price
+        |FROM lineitem""".stripMargin),
 
     // SQL-surface read of the same staged layout through the graft
     // DataSource (spark.read.format("graft")): the pushed-down price
@@ -2357,20 +4501,19 @@ object SparkEntry {
     // MANIFEST prunes files before any scan task plans, and the result
     // must hash-match the full-scan oracle exactly — the method API's
     // q_table_log_prune twin, via the connector
-    "q_sql_connector" -> ((s, d) => {
-      val dir = tableLogPrunedPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogprune", d)
-        val li = Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-            col("l_extendedprice").cast("double").as("price"))
-          .repartitionByRange(16, col("price"))
-        TableLog.append(s, p, li, statsCols = Seq("price"))
-        p
-      })
+    "q_sql_connector" -> Q((s, d) => {
+      val dir = prunedFixture(s, d)
       s.read.format("graft").load(dir)
         .filter(col("price").between(10000.0, 20000.0))
         .select(col("l_orderkey"), col("l_linenumber"), col("price"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // the connector twin reads the same staged layout through
+      // spark.read.format("graft") — same rows, same oracle
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // PERSISTENT CATALOG: the same pruned read as q_sql_connector, but
     // through a NAMED table in the V2 catalog — CREATE NAMESPACE +
@@ -2378,27 +4521,17 @@ object SparkEntry {
     // dataset-hashed so two sf dirs in one JVM never share a root; the
     // filter still prunes through the one shared buildScan (manifest
     // stats on price), which the catalog spec pins.
-    "q_catalog_sql" -> ((s, d) => {
-      val cat = s"gcat_${java.lang.Integer.toHexString(d.hashCode)}"
-      catalogRootPath.getOrElseUpdate(d, {
-        val r = stageDir("gcatroot", d)
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", r)
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
-        Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
-            col("l_extendedprice").cast("double").as("price"))
-          .repartitionByRange(16, col("price"))
-          .createOrReplaceTempView("q_catalog_src")
-        s.sql(s"CREATE TABLE $cat.wh.items USING graft " +
-          "TBLPROPERTIES ('graft.stats.cols'='price') " +
-          "AS SELECT * FROM q_catalog_src")
-        r
-      })
+    "q_catalog_sql" -> Q((s, d) => {
+      val cat = catalogItems(s, d)
       s.sql(s"SELECT l_orderkey, l_linenumber, price FROM $cat.wh.items " +
         "WHERE price BETWEEN 10000.0 AND 20000.0 " +
         "ORDER BY l_orderkey, l_linenumber")
-    }),
+    },
+      // the catalog twin: same rows again, by NAME through the V2 catalog
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // HIDDEN PARTITIONING (round 18): `PARTITIONED BY (days(ts),
     // bucket(n, key))` — the Iceberg DDL a user ports first — maps to
@@ -2406,14 +4539,10 @@ object SparkEntry {
     // bloom for bucket), every INSERT range-clusters its batch, and the
     // query's predicate on the RAW timestamp prunes files (asserted
     // in-query) without the transform appearing anywhere in it.
-    "q_partition_transform" -> ((s, d) => {
-      val dir = partitionTransformPath.getOrElseUpdate(d, {
-        val r = stageDir("gcathproot", d)
-        val cat = s"gcathp_${java.lang.Integer.toHexString(d.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", r)
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
+    "q_partition_transform" -> Q((s, d) => {
+      val cat = s"gcathp_${java.lang.Integer.toHexString(d.hashCode)}"
+      // the catalog table declared with the Iceberg partition transforms
+      val dir = catalogStaged(s, d, "gcathproot", cat) {
         s.sql(s"CREATE TABLE $cat.wh.ord (o_orderkey BIGINT, " +
           "o_custkey BIGINT, o_orderdate TIMESTAMP_NTZ, " +
           "o_totalprice DOUBLE) USING graft " +
@@ -2421,16 +4550,8 @@ object SparkEntry {
         Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
             col("o_orderdate"), col("o_totalprice"))
           .createOrReplaceTempView("q_hp_src")
-        // keep the range exchange's fan-out at test scale (AQE would
-        // coalesce a few MB to one partition → one file, nothing to
-        // prune); at 100 TB the same INSERT fans out on data size
-        val saved = s.conf.get("spark.sql.adaptive.coalescePartitions.enabled",
-          "true")
-        s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        try s.sql(s"INSERT INTO $cat.wh.ord SELECT * FROM q_hp_src")
-        finally s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", saved)
-        s"$r/wh/ord"
-      })
+        uncoalesced(s, s"INSERT INTO $cat.wh.ord SELECT * FROM q_hp_src")
+      } + "/wh/ord"
       val pr = TableLog.scanWhere(s, dir,
         col("o_orderdate") >= lit("1995-03-01 00:00:00").cast("timestamp_ntz") &&
           col("o_orderdate") < lit("1995-06-01 00:00:00").cast("timestamp_ntz"))
@@ -2441,33 +4562,29 @@ object SparkEntry {
       pr.df.select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
           col("o_totalprice"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      """SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1995-03-01 00:00:00'
+        |  AND o_orderdate <  TIMESTAMP '1995-06-01 00:00:00'
+        |ORDER BY o_orderkey""".stripMargin),
 
     // CLUSTER BY DDL (round 18; Spark 4's liquid-clustering syntax):
     // the declared layout clusters every INSERT on write, so a band
     // predicate on the cluster column prunes files from the first
     // commit (asserted in-query) — no OPTIMIZE pass needed first.
-    "q_cluster_by" -> ((s, d) => {
-      val dir = clusterByPath.getOrElseUpdate(d, {
-        val r = stageDir("gcatliqroot", d)
-        val cat = s"gcatliq_${java.lang.Integer.toHexString(d.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", r)
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
+    "q_cluster_by" -> Q((s, d) => {
+      val cat = s"gcatliq_${java.lang.Integer.toHexString(d.hashCode)}"
+      // the catalog table declared with liquid-clustering DDL
+      val dir = catalogStaged(s, d, "gcatliqroot", cat) {
         s.sql(s"CREATE TABLE $cat.wh.items (l_orderkey BIGINT, " +
           "l_linenumber BIGINT, price DOUBLE) USING graft " +
           "CLUSTER BY (price)")
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
             col("l_extendedprice").cast("double").as("price"))
           .createOrReplaceTempView("q_liq_src")
-        val saved = s.conf.get("spark.sql.adaptive.coalescePartitions.enabled",
-          "true")
-        s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        try s.sql(s"INSERT INTO $cat.wh.items SELECT * FROM q_liq_src")
-        finally s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", saved)
-        s"$r/wh/items"
-      })
+        uncoalesced(s, s"INSERT INTO $cat.wh.items SELECT * FROM q_liq_src")
+      } + "/wh/items"
       val pr = TableLog.scanWhere(s, dir,
         col("price") >= 10000.0 && col("price") <= 20000.0)
       require(pr.filesRead < pr.filesTotal,
@@ -2476,7 +4593,12 @@ object SparkEntry {
       pr.df.filter(col("price").between(10000.0, 20000.0))
         .select(col("l_orderkey"), col("l_linenumber"), col("price"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber,
+        |       CAST(l_extendedprice AS DOUBLE) AS price
+        |FROM lineitem
+        |WHERE l_extendedprice BETWEEN 10000.0 AND 20000.0
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // IDENTITY COLUMNS (round 18, Delta's documented semantics): an
     // `id BIGINT GENERATED ALWAYS AS IDENTITY` column minted across
@@ -2485,14 +4607,10 @@ object SparkEntry {
     // non-deterministic), and the deterministic payload columns
     // hash-match the oracle: identity assignment loses and duplicates
     // nothing.
-    "q_identity_col" -> ((s, d) => {
-      val dir = identityColPath.getOrElseUpdate(d, {
-        val r = stageDir("gcatidroot", d)
-        val cat = s"gcatid_${java.lang.Integer.toHexString(d.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", r)
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
+    "q_identity_col" -> Q((s, d) => {
+      val cat = s"gcatid_${java.lang.Integer.toHexString(d.hashCode)}"
+      // engine-minted surrogate keys across two insert batches
+      val dir = catalogStaged(s, d, "gcatidroot", cat) {
         s.sql(s"CREATE TABLE $cat.wh.ord (id BIGINT GENERATED ALWAYS AS " +
           "IDENTITY, o_orderkey BIGINT, o_totalprice DOUBLE) USING graft")
         Tables.orders(s, d).select(col("o_orderkey"),
@@ -2501,8 +4619,7 @@ object SparkEntry {
           "SELECT * FROM q_id_src WHERE o_orderkey % 2 = 0")
         s.sql(s"INSERT INTO $cat.wh.ord (o_orderkey, o_totalprice) " +
           "SELECT * FROM q_id_src WHERE o_orderkey % 2 = 1")
-        s"$r/wh/ord"
-      })
+      } + "/wh/ord"
       val t = TableLog.readAt(s, dir)
       val chk = t.agg(count(lit(1)).as("n"),
         countDistinct(col("id")).as("d"), min(col("id")).as("mn")).head()
@@ -2511,7 +4628,9 @@ object SparkEntry {
           s"(n=${chk.getLong(0)}, distinct=${chk.getLong(1)}, min=${chk.getLong(2)})")
       t.select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      """SELECT o_orderkey, o_totalprice FROM orders
+        |ORDER BY o_orderkey""".stripMargin),
 
     // GENERATED COLUMNS (round 18): `o_year GENERATED ALWAYS AS
     // (year(o_orderdate))` + `PARTITIONED BY (o_year)` — the
@@ -2521,14 +4640,11 @@ object SparkEntry {
     // GENERATED column prunes files (asserted in-query); a mismatched
     // explicit value refuses via the auto-declared `_gen_o_year` CHECK
     // (spec-pinned).
-    "q_generated_col" -> ((s, d) => {
-      val dir = generatedColPath.getOrElseUpdate(d, {
-        val r = stageDir("gcatgenroot", d)
-        val cat = s"gcatgen_${java.lang.Integer.toHexString(d.hashCode)}"
-        s.conf.set(s"spark.sql.catalog.$cat",
-          classOf[graft.sources.GraftCatalog].getName)
-        s.conf.set(s"spark.sql.catalog.$cat.root", r)
-        s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.wh")
+    "q_generated_col" -> Q((s, d) => {
+      val cat = s"gcatgen_${java.lang.Integer.toHexString(d.hashCode)}"
+      // o_year is never supplied by the INSERT: computed at commit,
+      // clustered and stats-harvested like any stored column
+      val dir = catalogStaged(s, d, "gcatgenroot", cat) {
         s.sql(s"CREATE TABLE $cat.wh.ord (o_orderkey BIGINT, " +
           "o_orderdate TIMESTAMP_NTZ, o_totalprice DOUBLE, " +
           "o_year BIGINT GENERATED ALWAYS AS " +
@@ -2537,13 +4653,8 @@ object SparkEntry {
         Tables.orders(s, d).select(col("o_orderkey"), col("o_orderdate"),
             col("o_totalprice"), lit(null).cast("bigint").as("o_year"))
           .createOrReplaceTempView("q_gen_src")
-        val saved = s.conf.get("spark.sql.adaptive.coalescePartitions.enabled",
-          "true")
-        s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        try s.sql(s"INSERT INTO $cat.wh.ord SELECT * FROM q_gen_src")
-        finally s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", saved)
-        s"$r/wh/ord"
-      })
+        uncoalesced(s, s"INSERT INTO $cat.wh.ord SELECT * FROM q_gen_src")
+      } + "/wh/ord"
       val pr = TableLog.scanWhere(s, dir, col("o_year") === lit(1995L))
       require(pr.filesRead < pr.filesTotal,
         s"q_generated_col: the generated-column predicate must prune " +
@@ -2551,76 +4662,171 @@ object SparkEntry {
       pr.df.select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
           col("o_year"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      """SELECT o_orderkey, o_orderdate, o_totalprice,
+        |       CAST(year(o_orderdate) AS BIGINT) AS o_year
+        |FROM orders WHERE year(o_orderdate) = 1995
+        |ORDER BY o_orderkey""".stripMargin),
 
     // PERSISTENT NAMED VIEW (the reference's schema.sql shape as a
     // catalog object): an aggregate view defined ONCE over the catalog
     // table, read by name — definition stored, data live
-    "q_view_sql" -> ((s, d) => {
-      val cat = s"gcat_${java.lang.Integer.toHexString(d.hashCode)}"
-      // ride the q_catalog_sql fixture (constructing the query stages
-      // the catalog + table idempotently per JVM; the frame is unused)
-      queries("q_catalog_sql")(s, d)
+    "q_view_sql" -> Q((s, d) => {
+      // rides the q_catalog_sql fixture
+      val cat = catalogItems(s, d)
       s.sql(s"CREATE OR REPLACE VIEW $cat.wh.v_order_value AS " +
         "SELECT l_orderkey, " +
         "CAST(round(sum(CAST(price AS DECIMAL(30,6))), 2) AS DOUBLE) AS order_value " +
         s"FROM $cat.wh.items GROUP BY l_orderkey")
       s.sql(s"SELECT l_orderkey, order_value " +
         s"FROM $cat.wh.v_order_value ORDER BY l_orderkey")
-    }),
+    },
+      // the persistent named view over the catalog table — per-order
+      // value through the stored definition (decimal(30,6) money sums
+      // both sides, the moneySum convention)
+      """SELECT l_orderkey,
+        |  CAST(round(sum(CAST(l_extendedprice::DOUBLE AS DECIMAL(30,6))), 2) AS DOUBLE) AS order_value
+        |FROM lineitem
+        |GROUP BY l_orderkey
+        |ORDER BY l_orderkey""".stripMargin),
 
     // copy-on-write DELETE: version 2 of the staged history removed one
     // price band by rewriting ONLY the stats-overlapping files — the
     // surviving snapshot must equal DuckDB's plain filter
-    "q_table_log_delete" -> ((s, d) => {
+    "q_table_log_delete" -> Q((s, d) => {
       TableLog.readAt(s, cowFixture(s, d), version = 2L)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // state after the CoW DELETE commit (rows where the predicate was
+      // not TRUE survive)
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // copy-on-write UPDATE: version 3 added 1000.0 to every price above
     // 50k, touching only the files whose stats reach that band
-    "q_table_log_update" -> ((s, d) => {
+    "q_table_log_update" -> Q((s, d) => {
       TableLog.readAt(s, cowFixture(s, d), version = 3L)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // state after the CoW UPDATE commit on top of the delete
+      """WITH s2 AS (
+        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |  FROM lineitem
+        |  WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0))
+        |SELECT l_orderkey, l_linenumber,
+        |       CASE WHEN price > 50000.0 THEN price + 1000.0 ELSE price END AS price
+        |FROM s2
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // MERGE INTO: version 4 last-wins-merged a key-derived source
     // (matched rows take price 1.0; synthetic unmatched keys insert) —
     // the at-scale upsert whose touch set is the stats-overlapping
     // files, not the table
-    "q_merge_into" -> ((s, d) => {
+    "q_merge_into" -> Q((s, d) => {
       TableLog.readAt(s, cowFixture(s, d), version = 4L)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // state after MERGE INTO: rows not matched by a source key survive
+      // as-is; every source row (matched replacement or fresh insert) is
+      // present verbatim
+      """WITH s2 AS (
+        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |  FROM lineitem
+        |  WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)),
+        |s3 AS (
+        |  SELECT l_orderkey, l_linenumber,
+        |         CASE WHEN price > 50000.0 THEN price + 1000.0 ELSE price END AS price
+        |  FROM s2),
+        |src AS (
+        |  SELECT DISTINCT l_orderkey, l_linenumber, 1.0 AS price
+        |  FROM lineitem WHERE l_orderkey % 97 = 0
+        |  UNION ALL
+        |  SELECT DISTINCT l_orderkey + 100000000, l_linenumber, 2.0
+        |  FROM lineitem WHERE l_orderkey % 101 = 0 AND l_linenumber = 1)
+        |SELECT s3.l_orderkey, s3.l_linenumber, s3.price FROM s3
+        |WHERE NOT EXISTS (SELECT 1 FROM src
+        |                  WHERE src.l_orderkey = s3.l_orderkey
+        |                    AND src.l_linenumber = s3.l_linenumber)
+        |UNION ALL
+        |SELECT l_orderkey, l_linenumber, price FROM src
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // NULL-count file pruning: `IS NOT NULL` — every cleaning
     // pipeline's first filter — skips whole files through the
     // manifest's per-file null counts (min/max stats cannot answer
     // null-ness); the plan is pinned to actually prune before the rows
     // are compared
-    "q_null_prune" -> ((s, d) => {
+    "q_null_prune" -> Q((s, d) => {
       val pr = TableLog.scanWhere(s, nullsFixture(s, d), col("total").isNotNull)
       require(pr.filesRead < pr.filesTotal,
         s"IS NOT NULL must prune all-null files (${pr.filesRead}/${pr.filesTotal})")
       pr.df.orderBy(col("k"))
-    }),
+    },
+      // the IS NOT NULL slice: rows whose derived total survived the
+      // null-out rule (the file-level prune is a plan property, pinned in
+      // the query itself — the rowset is just the filter)
+      """SELECT o_orderkey AS k, o_totalprice::DOUBLE AS total
+        |FROM orders
+        |WHERE o_orderkey % 5 <> 0
+        |ORDER BY k""".stripMargin),
 
     // SQL DML end-to-end: DELETE / UPDATE / MERGE written as the SQL a
     // warehouse user types, parsed by Spark's own parser, routed
     // through the table log's transactional ops (touch-set pruning and
     // null-count skips fire identically from SQL text)
-    "q_sql_dml" -> ((s, d) => {
+    "q_sql_dml" -> Q((s, d) => {
       TableLog.readAt(s, dmlFixture(s, d)).orderBy(col("k"))
-    }),
+    },
+      // state after the SQL DML chain: delete, then windowed update, then
+      // merge (matched keys take the source row — including keys the
+      // delete removed and the merge re-inserts; synthetic keys insert)
+      """WITH t0 AS (
+        |  SELECT o_orderkey AS k, o_totalprice::DOUBLE AS total,
+        |         o_orderstatus AS status
+        |  FROM orders),
+        |t1 AS (SELECT * FROM t0 WHERE NOT (k % 10 = 0 AND status = 'F')),
+        |t2 AS (SELECT k,
+        |         CASE WHEN k BETWEEN 1000 AND 2000 THEN total + 1.0
+        |              ELSE total END AS total,
+        |         status FROM t1),
+        |src AS (
+        |  SELECT k, 7.0 AS total, status FROM t0 WHERE k % 97 = 0
+        |  UNION ALL
+        |  SELECT k + 2000000000, 9.0, 'N' FROM t0 WHERE k % 1000 = 0)
+        |SELECT k, total, status FROM src
+        |UNION ALL
+        |SELECT t2.k, t2.total, t2.status FROM t2
+        |LEFT JOIN src USING (k) WHERE src.k IS NULL
+        |ORDER BY k""".stripMargin),
 
     // MERGE full sync (WHEN NOT MATCHED BY SOURCE THEN DELETE,
     // condition-scoped): the upstream-mirror shape — every third key
     // updates, synthetic new keys insert, and unmatched 'F'-status rows
     // hard-delete while unmatched rows outside the window carry over in
     // files the merge never touched
-    "q_merge_sync" -> ((s, d) => {
+    "q_merge_sync" -> Q((s, d) => {
       TableLog.readAt(s, syncFixture(s, d)).orderBy(col("k"))
-    }),
+    },
+      // state after the conditioned FULL-SYNC merge: source rows verbatim
+      // (updates + inserts), plus unmatched target rows that escaped the
+      // delete window (status <> 'F'; NULL would also survive — the WHEN
+      // clause must prove the delete)
+      """WITH tgt AS (
+        |  SELECT o_orderkey AS k, o_totalprice::DOUBLE AS total,
+        |         o_orderstatus AS status
+        |  FROM orders),
+        |src AS (
+        |  SELECT k, total + 1.0 AS total, status FROM tgt WHERE k % 3 = 0
+        |  UNION ALL
+        |  SELECT k + 1000000000, 5.0, 'N' FROM tgt WHERE k % 1000 = 0)
+        |SELECT k, total, status FROM src
+        |UNION ALL
+        |SELECT t.k, t.total, t.status FROM tgt t
+        |LEFT JOIN src s USING (k)
+        |WHERE s.k IS NULL AND (t.status IS NULL OR t.status <> 'F')
+        |ORDER BY k""".stripMargin),
 
     // MERGE WITH SCHEMA EVOLUTION (Delta's autoMerge): the source
     // carries a column the target lacks — the merge appends it to the
@@ -2628,9 +4834,9 @@ object SparkEntry {
     // values, and every untouched row null-fills the new column at
     // read (no rewrite for the schema change). The oracle reconstructs
     // the merged state with a CASE over the raw table.
-    "q_merge_evolve" -> ((s, d) => {
-      val dir = tableLogMergeEvolvePath.getOrElseUpdate(d, {
-        val p = stageDir("tlogmergeevo", d)
+    "q_merge_evolve" -> Q((s, d) => {
+      // a merge whose source carries a column the target lacks (autoMerge)
+      val dir = staged("tlogmergeevo", d) { p =>
         val base = Tables.orders(s, d).select(col("o_orderkey").as("k"),
           col("o_totalprice").cast("double").as("total"))
         TableLog.append(s, p, base.repartitionByRange(6, col("k")),
@@ -2642,89 +4848,125 @@ object SparkEntry {
             col("o_orderstatus").as("status"))
         TableLog.mergeInto(s, p, src, keys = Seq("k"),
           statsCols = Seq("k"), evolveSchema = true)
-        p
-      })
+      }
       TableLog.readAt(s, dir).orderBy(col("k"))
-    }),
+    },
+      """SELECT o_orderkey AS k,
+        |       CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice::DOUBLE * 2
+        |            ELSE o_totalprice::DOUBLE END AS total,
+        |       CASE WHEN o_orderkey % 10 = 0 THEN o_orderstatus END AS status
+        |FROM orders ORDER BY k""".stripMargin),
 
     // zero-copy RESTORE: version 5 rolled the whole CoW history back to
     // version 1 by re-pointing at its immutable files — no data written,
     // contents must equal the original projection exactly
-    "q_table_log_restore" -> ((s, d) => {
+    "q_table_log_restore" -> Q((s, d) => {
       TableLog.readAt(s, cowFixture(s, d), version = 5L)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // the restored table IS the original projection
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // COPY INTO: idempotent file ingest — the same glob runs TWICE and
     // the second pass loads zero files (the ledger in the commit
     // manifests skips them), so the table holds nation exactly once
-    "q_copy_into" -> ((s, d) => {
+    "q_copy_into" -> Q((s, d) => {
       val p = stageDir("tlogcopy", d)
       TableLog.copyInto(s, p, s"$d/nation.parquet")
       val again = TableLog.copyInto(s, p, s"$d/nation.parquet")
       require(again.loadedFiles == 0,
         "copyInto re-run must load nothing (idempotence)")
       TableLog.readAt(s, p).orderBy(col("n_nationkey"))
-    }),
+    },
+      // ingested exactly once despite the double run
+      """SELECT * FROM nation ORDER BY n_nationkey"""),
 
     // SHALLOW CLONE: fork the CoW fixture's version 2 (post-delete)
     // zero-copy — the clone commit points at the source's immutable
     // files — then dv-delete a SECOND price band on the clone, keyed
     // against the inherited files. Read = both bands gone; the source
     // fixture stays untouched for its own queries in the same run.
-    "q_table_log_clone" -> ((s, d) => {
-      val dir = tableLogClonePath.getOrElseUpdate(d, {
-        val p = stageDir("tlogclone", d)
+    "q_table_log_clone" -> Q((s, d) => {
+      // a zero-copy clone of the CoW fixture at v2, then a dv delete on the clone
+      val dir = staged("tlogclone", d) { p =>
         TableLog.cloneShallow(s, cowFixture(s, d), p, version = 2L)
         TableLog.deleteWhere(s, p, col("price").between(30000.0, 40000.0),
           mode = "dv")
-        p
-      })
+      }
       TableLog.readAt(s, dir)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // the clone forked v2 (first band already deleted), then dv-deleted
+      // a second band against the inherited files
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)
+        |  AND NOT (l_extendedprice::DOUBLE BETWEEN 30000.0 AND 40000.0)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // replaceWhere BACKFILL: one price band atomically swapped for its
     // recomputed slice (only the l_linenumber=1 rows survive the
     // recompute) in ONE commit — files disjoint from the band carry
     // over verbatim in the manifest, overlapping files rewrite minus
     // matching rows, the new batch lands alongside
-    "q_replace_where" -> ((s, d) => {
-      val dir = tableLogReplacePath.getOrElseUpdate(d, {
-        val p = stageDir("tlogreplace", d)
+    "q_replace_where" -> Q((s, d) => {
+      // one price band swapped for its recomputed slice in a single commit
+      val dir = staged("tlogreplace", d) { p =>
         TableLog.append(s, p, cowBase(s, d).repartitionByRange(16, col("price")),
           statsCols = Seq("price"))
         val window = col("price").between(20000.0, 30000.0)
         TableLog.replaceWhere(s, p,
           cowBase(s, d).filter(window && col("l_linenumber") === 1),
           window, statsCols = Seq("price"))
-        p
-      })
+      }
       TableLog.readAt(s, dir).orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // replaceWhere: the band's rows are exactly the recomputed slice,
+      // everything outside the band is untouched
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE NOT (l_extendedprice::DOUBLE BETWEEN 20000.0 AND 30000.0)
+        |UNION ALL
+        |SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE l_extendedprice::DOUBLE BETWEEN 20000.0 AND 30000.0
+        |  AND l_linenumber = 1
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // RENAME COLUMN via column mapping: files written before AND after
     // the rename (physically both carry the frozen name), read under
     // the new logical schema through a stats-pruned scan whose bounds
     // translate to the physical domain — zero data rewritten by the
     // rename itself
-    "q_rename_column" -> ((s, d) => {
+    "q_rename_column" -> Q((s, d) => {
       val dir = renameFixture(s, d)
       val pr = TableLog.scanWhere(s, dir,
         col("unit_price").between(10000.0, 30000.0), version = 3L)
       pr.df.filter(col("unit_price").between(10000.0, 30000.0))
         .select(col("l_orderkey"), col("l_linenumber"), col("unit_price"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // rename: every lineitem row reads back under the new logical name
+      // inside the pruned band
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS unit_price
+        |FROM lineitem
+        |WHERE l_extendedprice::DOUBLE BETWEEN 10000.0 AND 30000.0
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // DROP COLUMN: manifest-only retire of l_linenumber on the same
     // history — the column vanishes from reads while its bytes linger
     // in the immutable files until maintenance rewrites them
-    "q_drop_column" -> ((s, d) => {
+    "q_drop_column" -> Q((s, d) => {
       val dir = renameFixture(s, d)
       TableLog.readAt(s, dir, version = 4L)
         .orderBy(col("l_orderkey"), col("unit_price"))
-    }),
+    },
+      // drop: the retired column vanishes from the projection
+      """SELECT l_orderkey, l_extendedprice::DOUBLE AS unit_price
+        |FROM lineitem
+        |ORDER BY l_orderkey, unit_price""".stripMargin),
 
     // NESTED RENAME (round 18): `RENAME COLUMN payload.kind TO
     // category` — a manifest-only commit on a struct FIELD (full
@@ -2732,9 +4974,9 @@ object SparkEntry {
     // cast, zero data rewritten). The renamed logical path keeps
     // pruning through the frozen physical footer path (asserted
     // in-query) and post-rename appends mix transparently.
-    "q_rename_nested" -> ((s, d) => {
-      val dir = renameNestedPath.getOrElseUpdate(d, {
-        val p = stageDir("tlognestedren", d)
+    "q_rename_nested" -> Q((s, d) => {
+      // payload.kind renamed to payload.category, then a post-rename append
+      val dir = staged("tlognestedren", d) { p =>
         val li = Tables.lineitem(s, d).select(col("l_orderkey"),
           col("l_linenumber"),
           struct(col("l_returnflag").as("kind"),
@@ -2753,8 +4995,7 @@ object SparkEntry {
               col("payload.qty").as("qty")))
             .repartitionByRange(2, col("payload.category"), col("l_orderkey")),
           statsCols = Seq("payload.category", "payload.qty"))
-        p
-      })
+      }
       val pr = TableLog.scanWhere(s, dir, col("payload.category") === lit("R"))
       require(pr.filesRead < pr.filesTotal,
         s"q_rename_nested: the renamed nested path must keep pruning " +
@@ -2763,48 +5004,107 @@ object SparkEntry {
           col("payload.category").as("category"),
           col("payload.qty").as("qty"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      """SELECT l_orderkey, l_linenumber, l_returnflag AS category,
+        |       CAST(l_quantity AS DOUBLE) AS qty
+        |FROM lineitem WHERE l_returnflag = 'R'
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // change data feed across the delete + update commits: the delete
     // emits exactly the removed rows, the update emits delete+insert
     // pairs — bounded by each commit's touched files, never the table
-    "q_table_log_cdf" -> ((s, d) => {
+    "q_table_log_cdf" -> Q((s, d) => {
       TableLog.readChanges(s, cowFixture(s, d), fromVersion = 1L, toVersion = 3L)
         .orderBy(col("l_orderkey"), col("l_linenumber"),
           col("_commit_version"), col("_change_type"))
-    }),
+    },
+      // change feed (1, 3]: the SAME multiset-diff formulation the feed
+      // itself uses (EXCEPT ALL of the after-state vs the before-state,
+      // per commit) — NOT a per-row delete+insert enumeration, which
+      // diverges whenever an updated row's new image equals another
+      // touched row's old image (the pair cancels in the multiset;
+      // untouched rows cancel identically on both sides, so diffing the
+      // whole states equals diffing the touched files)
+      """WITH b AS (
+        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |  FROM lineitem),
+        |s2 AS (SELECT * FROM b WHERE NOT (price BETWEEN 10000.0 AND 20000.0)),
+        |s3 AS (
+        |  SELECT l_orderkey, l_linenumber,
+        |         CASE WHEN price > 50000.0 THEN price + 1000.0 ELSE price END AS price
+        |  FROM s2)
+        |SELECT *, 'delete' AS _change_type, CAST(2 AS BIGINT) AS _commit_version
+        |FROM (SELECT * FROM b EXCEPT ALL SELECT * FROM s2)
+        |UNION ALL
+        |SELECT *, 'insert', CAST(2 AS BIGINT)
+        |FROM (SELECT * FROM s2 EXCEPT ALL SELECT * FROM b)
+        |UNION ALL
+        |SELECT *, 'delete', CAST(3 AS BIGINT)
+        |FROM (SELECT * FROM s2 EXCEPT ALL SELECT * FROM s3)
+        |UNION ALL
+        |SELECT *, 'insert', CAST(3 AS BIGINT)
+        |FROM (SELECT * FROM s3 EXCEPT ALL SELECT * FROM s2)
+        |ORDER BY l_orderkey, l_linenumber, _commit_version, _change_type""".stripMargin),
 
     // KEYED change feed over the upsert history (unique o_orderkey):
     // each key's delete+insert within a commit pairs into
     // update_preimage/update_postimage, unpaired rows stay inserts —
     // DuckDB reconstructs the same attribution with per-version
     // last-wins states joined FULL on the key
-    "q_table_log_cdf_keyed" -> ((s, d) => {
-      val dir = tableLogPath.getOrElseUpdate(d, {
-        val p = stageDir("tablelog", d)
-        def batch(i: Int, m: Int) = Tables.orders(s, d)
-          .filter(pmod(col("o_orderkey"), lit(m)) === 0)
-          .select(col("o_orderkey"),
-            (col("o_totalprice").cast("double") + i).as("val"),
-            lit(i.toLong).as("ver"))
-        TableLog.upsertInto(s, p, batch(1, 2), Seq("o_orderkey"), "ver")
-        TableLog.upsertInto(s, p, batch(2, 3), Seq("o_orderkey"), "ver")
-        TableLog.upsertInto(s, p, batch(3, 5), Seq("o_orderkey"), "ver")
-        p
-      })
+    "q_table_log_cdf_keyed" -> Q((s, d) => {
+      val dir = tableLogFixture(s, d)
       TableLog.readChanges(s, dir, fromVersion = 1L, toVersion = 3L,
           keys = Seq("o_orderkey"))
         .orderBy(col("o_orderkey"), col("_commit_version"), col("_change_type"))
-    }),
+    },
+      // keyed feed: per-version last-wins states, FULL-joined on the key —
+      // changed keys emit pre+post images, new keys emit inserts
+      """WITH b1 AS (
+        |  SELECT o_orderkey, o_totalprice::DOUBLE + 1 AS val,
+        |         CAST(1 AS BIGINT) AS ver
+        |  FROM orders WHERE o_orderkey % 2 = 0),
+        |b2 AS (
+        |  SELECT o_orderkey, o_totalprice::DOUBLE + 2 AS val,
+        |         CAST(2 AS BIGINT) AS ver
+        |  FROM orders WHERE o_orderkey % 3 = 0),
+        |b3 AS (
+        |  SELECT o_orderkey, o_totalprice::DOUBLE + 3 AS val,
+        |         CAST(3 AS BIGINT) AS ver
+        |  FROM orders WHERE o_orderkey % 5 = 0),
+        |s1 AS (SELECT * FROM b1),
+        |s2 AS (SELECT * FROM b2 UNION ALL
+        |       SELECT * FROM s1 WHERE o_orderkey NOT IN (SELECT o_orderkey FROM b2)),
+        |s3 AS (SELECT * FROM b3 UNION ALL
+        |       SELECT * FROM s2 WHERE o_orderkey NOT IN (SELECT o_orderkey FROM b3))
+        |SELECT p.o_orderkey, p.val, p.ver,
+        |       'update_preimage' AS _change_type, CAST(2 AS BIGINT) AS _commit_version
+        |FROM s1 p JOIN s2 c USING (o_orderkey) WHERE p.val <> c.val OR p.ver <> c.ver
+        |UNION ALL
+        |SELECT c.o_orderkey, c.val, c.ver, 'update_postimage', CAST(2 AS BIGINT)
+        |FROM s1 p JOIN s2 c USING (o_orderkey) WHERE p.val <> c.val OR p.ver <> c.ver
+        |UNION ALL
+        |SELECT c.o_orderkey, c.val, c.ver, 'insert', CAST(2 AS BIGINT)
+        |FROM s2 c WHERE c.o_orderkey NOT IN (SELECT o_orderkey FROM s1)
+        |UNION ALL
+        |SELECT p.o_orderkey, p.val, p.ver, 'update_preimage', CAST(3 AS BIGINT)
+        |FROM s2 p JOIN s3 c USING (o_orderkey) WHERE p.val <> c.val OR p.ver <> c.ver
+        |UNION ALL
+        |SELECT c.o_orderkey, c.val, c.ver, 'update_postimage', CAST(3 AS BIGINT)
+        |FROM s2 p JOIN s3 c USING (o_orderkey) WHERE p.val <> c.val OR p.ver <> c.ver
+        |UNION ALL
+        |SELECT c.o_orderkey, c.val, c.ver, 'insert', CAST(3 AS BIGINT)
+        |FROM s3 c WHERE c.o_orderkey NOT IN (SELECT o_orderkey FROM s2)
+        |ORDER BY o_orderkey, _commit_version, _change_type""".stripMargin),
 
     // incrementally-maintained materialized view: three change-feed
     // delta refreshes (after the append, the CoW delete and the CoW
     // update) must land on DuckDB's from-scratch GROUP BY of the final
     // state — decimal increments make the equality exact, not approximate
-    "q_agg_view" -> ((s, d) => {
-      val (_, viewDir) = aggViewPath.getOrElseUpdate(d, {
-        val t = stageDir("aggviewt", d)
-        val v = stageDir("aggviewv", d)
+    "q_agg_view" -> Q((s, d) => {
+      // its OWN table-log history under t/, the view under v/, refreshed after
+      // every commit (append → CoW delete → CoW update)
+      val viewDir = staged("aggview", d) { p =>
+        val (t, v) = (s"$p/t", s"$p/v")
         TableLog.append(s, t, cowBase(s, d).repartitionByRange(16, col("price")),
           statsCols = Seq("price"))
         AggView.refresh(s, v, t, Seq("l_linenumber"), "price")
@@ -2815,32 +5115,52 @@ object SparkEntry {
           set = Map("price" -> (col("price") + 1000.0)),
           pruneBounds = Seq(("price", 50000.0, 1e18)), statsCols = Seq("price"))
         AggView.refresh(s, v, t, Seq("l_linenumber"), "price")
-        (t, v)
-      })
+      } + "/v"
       AggView.read(s, viewDir)
         .select(col("l_linenumber"),
           round(col("sum_val"), 2).cast("double").as("sum_price"), col("cnt"))
         .orderBy(col("l_linenumber"))
-    }),
+    },
+      // the incrementally-refreshed view must equal a from-scratch GROUP
+      // BY over the final table state (s3 of the CoW history)
+      """WITH s2 AS (
+        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |  FROM lineitem
+        |  WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)),
+        |s3 AS (
+        |  SELECT l_orderkey, l_linenumber,
+        |         CASE WHEN price > 50000.0 THEN price + 1000.0 ELSE price END AS price
+        |  FROM s2)
+        |SELECT l_linenumber,
+        |       CAST(round(sum(CAST(price AS DECIMAL(30,6))), 2) AS DOUBLE) AS sum_price,
+        |       count(*) AS cnt
+        |FROM s3 GROUP BY l_linenumber
+        |ORDER BY l_linenumber""".stripMargin),
 
     // merge-on-read DELETE: two scattered point deletes recorded as
     // manifest deletion vectors (no data rewritten — the anti-applied
     // positions ARE the delete); the final read must equal DuckDB's
     // plain NOT-IN filter exactly
-    "q_table_log_dv" -> ((s, d) => {
-      val dir = tableLogDvPath.getOrElseUpdate(d, {
-        val p = stageDir("tlogdv", d)
+    "q_table_log_dv" -> Q((s, d) => {
+      // lineitem hash-distributed over 16 files (stats prune nothing — the exact
+      // workload CoW is worst at), then two dv point deletes
+      val dir = staged("tlogdv", d) { p =>
         TableLog.append(s, p, cowBase(s, d).repartition(16, col("l_orderkey")),
           statsCols = Seq("price"))
         TableLog.deleteWhere(s, p, pmod(col("l_orderkey"), lit(501)) === 7,
           mode = "dv")
         TableLog.deleteWhere(s, p, pmod(col("l_orderkey"), lit(501)) === 8,
           mode = "dv") // second vector merges into the same files
-        p
-      })
+      }
       TableLog.readAt(s, dir)
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("price"))
-    }),
+    },
+      // merge-on-read deletes are invisible to the result: the dv'd rows
+      // are simply gone, everything else is verbatim
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE l_orderkey % 501 NOT IN (7, 8)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // multi-measure incrementally-maintained view with MIN/MAX: the
     // delete commit retires every group's max (delta folds cannot know
@@ -2848,10 +5168,10 @@ object SparkEntry {
     // pruned base scan), the update commit sets new maxes through the
     // insert fold; three incremental refreshes must land exactly on
     // DuckDB's from-scratch GROUP BY of the final state
-    "q_agg_view_minmax" -> ((s, d) => {
-      val (_, viewDir) = aggViewMinMaxPath.getOrElseUpdate(d, {
-        val t = stageDir("aggviewmmt", d)
-        val v = stageDir("aggviewmmv", d)
+    "q_agg_view_minmax" -> Q((s, d) => {
+      // its own table-log history under t/, the MIN/MAX view under v/
+      val viewDir = staged("aggviewmm", d) { p =>
+        val (t, v) = (s"$p/t", s"$p/v")
         val ms = Seq(AggView.Measure("price", "sum"),
           AggView.Measure("price", "min"), AggView.Measure("price", "max"))
         TableLog.append(s, t, cowBase(s, d).repartitionByRange(16, col("price")),
@@ -2864,20 +5184,37 @@ object SparkEntry {
           set = Map("price" -> (col("price") + 100000.0)),
           statsCols = Seq("price")) // new maxes via the insert fold
         AggView.refreshMulti(s, v, t, Seq("l_linenumber"), ms)
-        (t, v)
-      })
+      } + "/v"
       AggView.read(s, viewDir)
         .select(col("l_linenumber"),
           round(col("sum_price"), 2).cast("double").as("sum_price"),
           col("min_price"), col("max_price"), col("cnt"))
         .orderBy(col("l_linenumber"))
-    }),
+    },
+      // the multi-measure incrementally-refreshed view must equal a
+      // from-scratch GROUP BY (sum exact through decimal, min/max exact
+      // doubles) over the final state of its CoW history
+      """WITH b AS (
+        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |  FROM lineitem),
+        |s2 AS (SELECT * FROM b WHERE NOT (price > 80000.0)),
+        |s3 AS (
+        |  SELECT l_orderkey, l_linenumber,
+        |         CASE WHEN price BETWEEN 40000.0 AND 50000.0
+        |              THEN price + 100000.0 ELSE price END AS price
+        |  FROM s2)
+        |SELECT l_linenumber,
+        |       CAST(round(sum(CAST(price AS DECIMAL(30,6))), 2) AS DOUBLE) AS sum_price,
+        |       min(price) AS min_price, max(price) AS max_price,
+        |       count(*) AS cnt
+        |FROM s3 GROUP BY l_linenumber
+        |ORDER BY l_linenumber""".stripMargin),
 
     // schema evolution: v2 appended a column under mergeSchema; v1 rows
     // null-fill it on read
-    "q_table_log_evolve" -> ((s, d) => {
-      val dir = tableLogEvolvePath.getOrElseUpdate(d, {
-        val p = stageDir("tlogevolve", d)
+    "q_table_log_evolve" -> Q((s, d) => {
+      // v1 carries two columns, v2 appends a third under mergeSchema
+      val dir = staged("tlogevolve", d) { p =>
         val o = Tables.orders(s, d).select(col("o_orderkey"),
           col("o_totalprice").cast("double").as("price"))
         TableLog.append(s, p, o.filter(pmod(col("o_orderkey"), lit(3)) === 0))
@@ -2886,16 +5223,23 @@ object SparkEntry {
             .select(col("o_orderkey"), col("o_totalprice").cast("double").as("price"),
               col("o_orderpriority").as("seg")),
           mergeSchema = true)
-        p
-      })
+      }
       TableLog.readAt(s, dir).orderBy(col("o_orderkey"))
-    }),
+    },
+      // evolved table: v1 rows null-fill the column v2 added
+      """SELECT o_orderkey, o_totalprice::DOUBLE AS price,
+        |       CAST(NULL AS VARCHAR) AS seg
+        |FROM orders WHERE o_orderkey % 3 = 0
+        |UNION ALL
+        |SELECT o_orderkey, o_totalprice::DOUBLE, o_orderpriority
+        |FROM orders WHERE o_orderkey % 3 = 1
+        |ORDER BY o_orderkey""".stripMargin),
 
     // bloom-filter point lookup: a hash-distributed layout where every
     // file spans the key range (min/max prunes nothing) — the parquet
     // bloom skips the non-matching files and the rows still match
     // DuckDB's IN-filter exactly
-    "q_table_log_point" -> ((s, d) => {
+    "q_table_log_point" -> Q((s, d) => {
       val dir = bloomFixture(s, d)
       val keys = cowBase(s, d).agg(min(col("l_orderkey")), max(col("l_orderkey")))
         .head()
@@ -2903,13 +5247,21 @@ object SparkEntry {
       val scan = TableLog.scanPointLookup(s, dir, "l_orderkey", probes)
       scan.df.filter(col("l_orderkey").isin(probes: _*))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // bloom point lookup == plain IN filter (the pruning is invisible
+      // to the result, which is the point)
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE l_orderkey IN (SELECT min(l_orderkey) FROM lineitem
+        |                     UNION ALL
+        |                     SELECT max(l_orderkey) FROM lineitem)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // the SAME point lookup through plain SQL: the graft DataSource
     // routes the IN filter through the footer-bloom phase because the
     // table declares graft.bloom.cols — a `WHERE id IN (…)` SQL query
     // plans O(files that might hold the keys), not O(stats survivors)
-    "q_sql_point" -> ((s, d) => {
+    "q_sql_point" -> Q((s, d) => {
       val dir = bloomFixture(s, d)
       val keys = cowBase(s, d).agg(min(col("l_orderkey")), max(col("l_orderkey")))
         .head()
@@ -2917,11 +5269,18 @@ object SparkEntry {
       s.read.format("graft").load(dir)
         .filter(col("l_orderkey").isin(probes: _*))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
+      // the same point lookup through the SQL connector's bloom routing
+      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
+        |FROM lineitem
+        |WHERE l_orderkey IN (SELECT min(l_orderkey) FROM lineitem
+        |                     UNION ALL
+        |                     SELECT max(l_orderkey) FROM lineitem)
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // range join: events attributed to the hour-long window BEFORE each
     // purchase by the same user (bin-bucketed, no cartesian)
-    "q_range_join" -> ((s, d) => {
+    "q_range_join" -> Q((s, d) => {
       val ev = Tables.events(s, d)
       val pts = ev.select(col("user_id"), col("event_id"), col("ts"))
       val wins = ev.filter(col("event_type") === "purchase")
@@ -2931,14 +5290,19 @@ object SparkEntry {
           "ts", "win_lo", "win_hi", binWidthSec = 3600L)
         .select(col("purchase_id"), col("event_id"))
         .orderBy(col("purchase_id"), col("event_id"))
-    }),
+    },
+      """SELECT p.event_id AS purchase_id, e.event_id AS event_id
+        |FROM events p JOIN events e ON p.user_id = e.user_id
+        |WHERE p.event_type = 'purchase'
+        |  AND e.ts >= p.ts - INTERVAL 1 HOUR AND e.ts < p.ts
+        |ORDER BY purchase_id, event_id""".stripMargin),
 
     // Event-time interval join, CLOSED bounds (click attribution): each
     // purchase attributed to every click by the same user in the prior
     // 30 minutes. Batch form of the stream-stream watermarked join
     // (EventStreams.intervalJoinStream — equivalence in EventStreamsSpec);
     // replication ≤2 bins/row regardless of lag via attributeWithin.
-    "q_click_attribution" -> ((s, d) => {
+    "q_click_attribution" -> Q((s, d) => {
       val ev = Tables.events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id").as("click_id"),
@@ -2951,33 +5315,63 @@ object SparkEntry {
         .select(col("click_id"), col("purchase_id"), col("user_id"),
           col("click_ts"), col("purchase_ts"))
         .orderBy(col("click_id"), col("purchase_id"))
-    }),
+    },
+      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
+        |       c.user_id AS user_id, c.ts AS click_ts, p.ts AS purchase_ts
+        |FROM events c JOIN events p ON c.user_id = p.user_id
+        |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
+        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
+        |ORDER BY click_id, purchase_id""".stripMargin),
 
     // multi-touch attribution, linear model: every purchase's value
     // split equally across the clicks in its 30-minute lookback
-    "q_attribution_linear" -> ((s, d) => {
+    "q_attribution_linear" -> Q((s, d) => {
       val (clicks, purchases) = attributionSides(s, d)
       Analytics.multiTouchAttribution(clicks, purchases,
           Seq("user_id"), Seq("p_user"), "click_ts", "purchase_ts",
           "click_id", "purchase_id", "p_value", maxLagSec = 1800L)
         .orderBy(col("click_id"))
-    }),
+    },
+      s"""$AttributionPairsCte,
+         |n AS (SELECT purchase_id,
+         |        CAST(sum(CAST(1.0 AS DECIMAL(30,12))) AS DOUBLE) AS wsum
+         |      FROM pr GROUP BY 1)
+         |SELECT click_id,
+         |  round(CAST(sum(CAST(value * 1.0 / wsum AS DECIMAL(30,12)))
+         |    AS DOUBLE), 4) AS credited,
+         |  count(*) AS touches
+         |FROM pr JOIN n USING (purchase_id)
+         |GROUP BY click_id ORDER BY click_id""".stripMargin),
 
     // time-decay model: recency-weighted 0.5^(Δt/15min), normalized per
     // purchase so each purchase distributes exactly its value
-    "q_attribution_decay" -> ((s, d) => {
+    "q_attribution_decay" -> Q((s, d) => {
       val (clicks, purchases) = attributionSides(s, d)
       Analytics.multiTouchAttribution(clicks, purchases,
           Seq("user_id"), Seq("p_user"), "click_ts", "purchase_ts",
           "click_id", "purchase_id", "p_value", maxLagSec = 1800L,
           model = "time_decay", halfLifeSec = 900L)
         .orderBy(col("click_id"))
-    }),
+    },
+      s"""$AttributionPairsCte,
+         |w AS (SELECT *, pow(0.5,
+         |        date_diff('microsecond', click_ts, purchase_ts)
+         |          / 900000000.0) AS w
+         |      FROM pr),
+         |n AS (SELECT purchase_id,
+         |        CAST(sum(CAST(w AS DECIMAL(30,12))) AS DOUBLE) AS wsum
+         |      FROM w GROUP BY 1)
+         |SELECT click_id,
+         |  round(CAST(sum(CAST(value * w / wsum AS DECIMAL(30,12)))
+         |    AS DOUBLE), 4) AS credited,
+         |  count(*) AS touches
+         |FROM w JOIN n USING (purchase_id)
+         |GROUP BY click_id ORDER BY click_id""".stripMargin),
 
     // LEFT-OUTER click attribution: clicks that never converted survive
     // with a null purchase — the funnel-loss view; batch twin of the
     // streaming leftOuter interval join (watermark-driven null emission)
-    "q_click_attribution_outer" -> ((s, d) => {
+    "q_click_attribution_outer" -> Q((s, d) => {
       val ev = Tables.events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("event_id").as("click_id"),
@@ -2990,12 +5384,28 @@ object SparkEntry {
           leftIdCols = Seq("click_id"))
         .select(col("click_id"), col("purchase_id"), col("user_id"))
         .orderBy(col("click_id"), col("purchase_id"))
-    })
+    },
+      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
+        |       c.user_id AS user_id
+        |FROM events c LEFT JOIN events p ON c.user_id = p.user_id
+        |  AND p.event_type = 'purchase'
+        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
+        |WHERE c.event_type = 'click'
+        |ORDER BY click_id, purchase_id""".stripMargin)
   )
 
+  /** Each query's build, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (k, q) => k -> q.build }
+
+  /** Each query's DuckDB oracle SQL, by name; the ANN oracles are
+    * generated on each read, from the models the last ANN run memoized.
+    */
+  def oracleSql: Map[String, String] =
+    registry.flatMap { case (k, q) => q.oracle().map(k -> _) }
+
   // ---------------------------------------------------------------------
-  // DuckDB oracles. Casts: duckdb sum(int)→HUGEINT needs ::BIGINT to match
-  // Spark's long; len(list)→BIGINT needs ::INTEGER to match Spark's size().
+  // Oracle helpers shared by several registry entries.
   // ---------------------------------------------------------------------
 
   /** Shared attribution pair CTE (the q_click_attribution join). */
@@ -3182,3023 +5592,6 @@ object SparkEntry {
       |FROM sc s JOIN nrm USING (doc_id), qn
       |ORDER BY score DESC, doc_id LIMIT 25""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | round(sum(l_quantity),2) AS sum_qty,
-        | CAST(round(sum(CAST(l_extendedprice AS DECIMAL(30,6))),2) AS DOUBLE) AS sum_base_price,
-        | CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,6))),2) AS DOUBLE) AS sum_disc_price,
-        | CAST(round(sum(CAST(l_extendedprice*(1-l_discount)*(1+l_tax) AS DECIMAL(30,6))),2) AS DOUBLE) AS sum_charge,
-        | round(CAST(sum(CAST(l_quantity AS DECIMAL(30,6))) AS DOUBLE) / count(l_quantity),4) AS avg_qty,
-        | round(CAST(sum(CAST(l_extendedprice AS DECIMAL(30,6))) AS DOUBLE) / count(l_extendedprice),4) AS avg_price,
-        | round(CAST(sum(CAST(l_discount AS DECIMAL(30,6))) AS DOUBLE) / count(l_discount),4) AS avg_disc,
-        | count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_order_summary" ->
-      """WITH items AS (
-        |  SELECT l_orderkey, count(*) AS item_count,
-        |         CAST(round(sum(CAST(l_extendedprice AS DECIMAL(30,6))),2) AS DOUBLE) AS total_price,
-        |         CAST(round(sum(CAST(l_extendedprice*l_discount AS DECIMAL(30,6))),2) AS DOUBLE) AS total_discount
-        |  FROM lineitem GROUP BY l_orderkey)
-        |SELECT o_orderkey, o_orderstatus, o_orderdate, c_name, n_name AS nation,
-        |       coalesce(item_count, 0) AS item_count,
-        |       coalesce(total_price, 0.0) AS total_price,
-        |       coalesce(total_discount, 0.0) AS total_discount
-        |FROM orders
-        |LEFT JOIN customer ON o_custkey = c_custkey
-        |LEFT JOIN nation ON c_nationkey = n_nationkey
-        |LEFT JOIN items ON o_orderkey = l_orderkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_delivery_performance" ->
-      """SELECT n_name AS nation, count(*) AS total_orders,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(30,6))) AS DOUBLE) / count(o_totalprice),4) AS avg_order_price,
-        |       CAST(sum(CASE WHEN o_orderstatus='F' THEN 1 ELSE 0 END) AS BIGINT) AS fulfilled_count,
-        |       CAST(sum(CASE WHEN o_orderstatus='P' THEN 1 ELSE 0 END) AS BIGINT) AS pending_count,
-        |       CAST(sum(CASE WHEN o_orderstatus='O' THEN 1 ELSE 0 END) AS BIGINT) AS open_count
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY nation""".stripMargin,
-
-    "q_pricing_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue,
-        |  count(*) AS line_count
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-
-    "q_user_pivot" ->
-      """SELECT user_id,
-        |  CAST(sum(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-        |  CAST(sum(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
-        |  CAST(sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-        |  CAST(sum(CASE WHEN event_type='signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup,
-        |  CAST(sum(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS BIGINT) AS error
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q_delivery_percentiles" ->
-      """SELECT n_name AS nation,
-        |       round(quantile_cont(o_totalprice, 0.5), 4) AS p50,
-        |       round(quantile_cont(o_totalprice, 0.9), 4) AS p90,
-        |       round(quantile_cont(o_totalprice, 0.99), 4) AS p99
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY nation""".stripMargin,
-
-    "q_star_join" ->
-      """SELECT p_brand, n_name AS supp_nation,
-        |       CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue,
-        |       count(*) AS line_count
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY p_brand, n_name ORDER BY p_brand, supp_nation""".stripMargin,
-
-    "q_top_n_per_group" ->
-      """WITH spend AS (
-        |  SELECT o_custkey, CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS total_spend
-        |  FROM orders GROUP BY o_custkey)
-        |SELECT nation, c_custkey, c_name, total_spend, "rank" FROM (
-        |  SELECT n_name AS nation, c_custkey, c_name, total_spend,
-        |         CAST(row_number() OVER (PARTITION BY n_name ORDER BY total_spend DESC, c_custkey) AS INTEGER) AS "rank"
-        |  FROM customer
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN spend ON c_custkey = o_custkey)
-        |WHERE "rank" <= 3 ORDER BY nation, "rank"""".stripMargin,
-
-    "q_top_n_heap" ->
-      """WITH spend AS (
-        |  SELECT o_custkey, CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS total_spend
-        |  FROM orders GROUP BY o_custkey)
-        |SELECT nation, c_custkey, c_name, total_spend, "rank" FROM (
-        |  SELECT n_name AS nation, c_custkey, c_name, total_spend,
-        |         CAST(row_number() OVER (PARTITION BY n_name ORDER BY total_spend DESC, c_custkey) AS INTEGER) AS "rank"
-        |  FROM customer
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  JOIN spend ON c_custkey = o_custkey)
-        |WHERE "rank" <= 3 ORDER BY nation, "rank"""".stripMargin,
-
-    "q_daily_revenue" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS order_day,
-        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue, count(*) AS order_count
-        |  FROM orders GROUP BY 1)
-        |SELECT order_day, revenue, order_count,
-        |       round(sum(revenue) OVER (ORDER BY order_day
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS cum_revenue
-        |FROM daily ORDER BY order_day""".stripMargin,
-
-    // Holt recurrence replayed as a recursive CTE: base case idx=1 is
-    // (level=y1, trend=0); each step computes level_t once per use in
-    // the SAME shape as the Spark fold; smoothing constants appear as
-    // the literal subtractions the Scala side computes
-    "q_forecast_holt" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS order_day,
-        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS rev
-        |  FROM orders GROUP BY 1, 2),
-        |base AS (
-        |  SELECT pri, row_number() OVER (PARTITION BY pri ORDER BY order_day) AS idx,
-        |         rev
-        |  FROM daily),
-        |nn AS (SELECT pri, max(idx) AS n FROM base GROUP BY 1),
-        |holt AS (
-        |  SELECT pri, idx, rev AS level, CAST(0.0 AS DOUBLE) AS trend
-        |  FROM base WHERE idx = 1
-        |  UNION ALL
-        |  SELECT b.pri, b.idx,
-        |         0.3::DOUBLE*b.rev
-        |           + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend) AS level,
-        |         0.1::DOUBLE*((0.3::DOUBLE*b.rev
-        |             + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend)) - h.level)
-        |           + (1.0::DOUBLE - 0.1::DOUBLE)*h.trend AS trend
-        |  FROM holt h JOIN base b ON b.pri = h.pri AND b.idx = h.idx + 1),
-        |fin AS (SELECT h.pri, h.level, h.trend
-        |        FROM holt h JOIN nn ON nn.pri = h.pri AND h.idx = nn.n)
-        |SELECT fin.pri AS o_orderpriority, s.step,
-        |       round(fin.level + s.step * fin.trend, 6) AS forecast
-        |FROM fin CROSS JOIN
-        |  (SELECT CAST(unnest(generate_series(1, 7)) AS INTEGER) AS step) s
-        |ORDER BY o_orderpriority, step""".stripMargin,
-
-    // the same six sufficient statistics through decimal partials, the
-    // same fixed expression shape for slope/intercept/R²
-    "q_price_elasticity" ->
-      """WITH pts AS (
-        |  SELECT p.p_brand,
-        |         ln(l.l_extendedprice::DOUBLE / l.l_quantity::DOUBLE) AS x,
-        |         ln(l.l_quantity::DOUBLE) AS y
-        |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-        |s AS (
-        |  SELECT p_brand, count(*) AS n,
-        |         CAST(sum(CAST(x AS DECIMAL(30,12))) AS DOUBLE) AS sx,
-        |         CAST(sum(CAST(y AS DECIMAL(30,12))) AS DOUBLE) AS sy,
-        |         CAST(sum(CAST(x*x AS DECIMAL(30,12))) AS DOUBLE) AS sxx,
-        |         CAST(sum(CAST(x*y AS DECIMAL(30,12))) AS DOUBLE) AS sxy,
-        |         CAST(sum(CAST(y*y AS DECIMAL(30,12))) AS DOUBLE) AS syy
-        |  FROM pts GROUP BY 1)
-        |SELECT p_brand, n,
-        |       round((n*sxy - sx*sy) / NULLIF(n*sxx - sx*sx, 0.0), 6) AS slope,
-        |       round((sy - ((n*sxy - sx*sy) / NULLIF(n*sxx - sx*sx, 0.0)) * sx) / n,
-        |             6) AS intercept,
-        |       round(CASE WHEN (n*sxx - sx*sx) = 0.0 OR (n*syy - sy*sy) = 0.0
-        |                  THEN NULL
-        |                  ELSE (n*sxy - sx*sy)*(n*sxy - sx*sy)
-        |                       / ((n*sxx - sx*sx)*(n*syy - sy*sy)) END, 6) AS r2
-        |FROM s
-        |ORDER BY p_brand""".stripMargin,
-
-    // the triple-smoothing recurrence with the 7-slot seasonal ring
-    // carried as a LIST through the recursion: read slot (idx mod 7)+1,
-    // rewrite via slice||[new]||slice — the same ring arithmetic the
-    // Spark fold performs
-    "q_forecast_hw" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS order_day,
-        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS rev
-        |  FROM orders GROUP BY 1, 2),
-        |base AS (
-        |  SELECT pri, row_number() OVER (PARTITION BY pri ORDER BY order_day) AS idx,
-        |         rev
-        |  FROM daily),
-        |nn AS (SELECT pri, max(idx) AS n FROM base GROUP BY 1),
-        |hw AS (
-        |  SELECT pri, idx, rev AS level, CAST(0.0 AS DOUBLE) AS trend,
-        |         [0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE,
-        |          0.0::DOUBLE, 0.0::DOUBLE, 0.0::DOUBLE] AS seas
-        |  FROM base WHERE idx = 1
-        |  UNION ALL
-        |  SELECT b.pri, b.idx,
-        |    0.3::DOUBLE*(b.rev - h.seas[(h.idx % 7) + 1])
-        |      + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend) AS level,
-        |    0.1::DOUBLE*((0.3::DOUBLE*(b.rev - h.seas[(h.idx % 7) + 1])
-        |        + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend)) - h.level)
-        |      + (1.0::DOUBLE - 0.1::DOUBLE)*h.trend AS trend,
-        |    h.seas[1:(h.idx % 7)]
-        |      || [0.2::DOUBLE*(b.rev - (h.level + h.trend))
-        |          + (1.0::DOUBLE - 0.2::DOUBLE)*h.seas[(h.idx % 7) + 1]]
-        |      || h.seas[((h.idx % 7) + 2):7] AS seas
-        |  FROM hw h JOIN base b ON b.pri = h.pri AND b.idx = h.idx + 1),
-        |fin AS (SELECT h.pri, h.level, h.trend, h.seas, nn.n
-        |        FROM hw h JOIN nn ON nn.pri = h.pri AND h.idx = nn.n)
-        |SELECT fin.pri AS o_orderpriority, s.step,
-        |       round(fin.level + s.step*fin.trend
-        |             + fin.seas[((fin.n + s.step - 1) % 7) + 1], 6) AS forecast
-        |FROM fin CROSS JOIN
-        |  (SELECT CAST(unnest(generate_series(1, 14)) AS INTEGER) AS step) s
-        |ORDER BY o_orderpriority, step""".stripMargin,
-
-    // the same recurrence, joined one step back for the expectations;
-    // σ assembled from decimal partial sums in the exact expression
-    // shape the Spark side computes
-    "q_forecast_anomaly" ->
-      """WITH RECURSIVE daily AS (
-        |  SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS order_day,
-        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS rev
-        |  FROM orders GROUP BY 1, 2),
-        |base AS (
-        |  SELECT pri, order_day,
-        |         row_number() OVER (PARTITION BY pri ORDER BY order_day) AS idx,
-        |         rev
-        |  FROM daily),
-        |holt AS (
-        |  SELECT pri, idx, rev AS level, CAST(0.0 AS DOUBLE) AS trend
-        |  FROM base WHERE idx = 1
-        |  UNION ALL
-        |  SELECT b.pri, b.idx,
-        |         0.3::DOUBLE*b.rev
-        |           + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend) AS level,
-        |         0.1::DOUBLE*((0.3::DOUBLE*b.rev
-        |             + (1.0::DOUBLE - 0.3::DOUBLE)*(h.level + h.trend)) - h.level)
-        |           + (1.0::DOUBLE - 0.1::DOUBLE)*h.trend AS trend
-        |  FROM holt h JOIN base b ON b.pri = h.pri AND b.idx = h.idx + 1),
-        |pts AS (
-        |  SELECT b.pri, b.order_day, b.rev,
-        |         h.level + h.trend AS expected,
-        |         b.rev - (h.level + h.trend) AS err
-        |  FROM base b JOIN holt h ON h.pri = b.pri AND h.idx = b.idx - 1),
-        |st AS (
-        |  SELECT pri,
-        |         CAST(sum(CAST(err AS DECIMAL(30,12))) AS DOUBLE) AS se,
-        |         CAST(sum(CAST(err*err AS DECIMAL(30,12))) AS DOUBLE) AS se2,
-        |         count(*) AS n
-        |  FROM pts GROUP BY pri)
-        |SELECT p.pri AS o_orderpriority, p.order_day AS day, p.rev AS value,
-        |       round(p.expected, 4) AS expected, round(p.err, 4) AS residual,
-        |       abs(p.err) > 3.0::DOUBLE *
-        |         sqrt(greatest(st.se2/st.n - (st.se/st.n)*(st.se/st.n),
-        |                       0.0::DOUBLE)) AS anomaly
-        |FROM pts p JOIN st ON st.pri = p.pri
-        |ORDER BY o_orderpriority, day""".stripMargin,
-
-    "q_moving_avg" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS order_day,
-        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue
-        |  FROM orders GROUP BY 1)
-        |SELECT order_day, revenue,
-        |       round(avg(revenue) OVER (ORDER BY order_day
-        |         ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS avg_7d
-        |FROM daily ORDER BY order_day""".stripMargin,
-
-    "q_bucketed_join" ->
-      """SELECT o_orderkey, o_orderstatus,
-        |  CAST(round(sum(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(30,6))),2) AS DOUBLE) AS revenue,
-        |  count(*) AS line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderkey, o_orderstatus
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, ts, value, event_id,
-        |    CASE WHEN lag(ts) OVER w IS NULL THEN 1
-        |         WHEN epoch(ts) - epoch(lag(ts) OVER w) > 1800.0 THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sess AS (
-        |  SELECT user_id, ts, value,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        |  FROM flagged)
-        |SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-        |       min(ts) AS session_start, max(ts) AS session_end,
-        |       count(*) AS event_count,
-        |       CAST(round(sum(CAST(value AS DECIMAL(30,6))),2) AS DOUBLE) AS session_value
-        |FROM sess GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
-
-    // quantile_cont matches Spark's exact-percentile interpolation (the
-    // q_ppl_buckets precedent); monetary rounds to 2 BEFORE the cuts;
-    // scores are the same strict-> comparison sums on both engines
-    "q_rfm_segments" ->
-      """WITH cust AS (
-        |  SELECT o_custkey, max(CAST(o_orderdate AS DATE)) AS last_d,
-        |         count(*) AS frequency,
-        |         CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))), 2) AS DOUBLE)
-        |           AS monetary
-        |  FROM orders GROUP BY 1),
-        |ref AS (SELECT max(CAST(o_orderdate AS DATE)) AS ref_d FROM orders),
-        |base AS (SELECT o_custkey,
-        |           CAST(date_diff('day', last_d, ref_d) AS INTEGER) AS recency_days,
-        |           frequency, monetary
-        |         FROM cust, ref),
-        |cuts AS (SELECT quantile_cont(recency_days, [0.2, 0.4, 0.6, 0.8]) AS rc,
-        |                quantile_cont(frequency, [0.2, 0.4, 0.6, 0.8]) AS fc,
-        |                quantile_cont(monetary, [0.2, 0.4, 0.6, 0.8]) AS mc
-        |         FROM base),
-        |scored AS (
-        |  SELECT o_custkey, recency_days, frequency, monetary,
-        |    5 - ((recency_days > rc[1])::INT + (recency_days > rc[2])::INT
-        |       + (recency_days > rc[3])::INT + (recency_days > rc[4])::INT) AS r_score,
-        |    1 + ((frequency > fc[1])::INT + (frequency > fc[2])::INT
-        |       + (frequency > fc[3])::INT + (frequency > fc[4])::INT) AS f_score,
-        |    1 + ((monetary > mc[1])::INT + (monetary > mc[2])::INT
-        |       + (monetary > mc[3])::INT + (monetary > mc[4])::INT) AS m_score
-        |  FROM base, cuts)
-        |SELECT o_custkey, recency_days, frequency, monetary,
-        |       r_score, f_score, m_score,
-        |       CASE WHEN r_score >= 4 AND f_score >= 4 THEN 'champion'
-        |            WHEN r_score <= 2 AND f_score >= 4 THEN 'at_risk_loyal'
-        |            WHEN r_score >= 4 AND f_score <= 2 THEN 'recent'
-        |            WHEN r_score <= 2 AND f_score <= 2 THEN 'hibernating'
-        |            ELSE 'regular' END AS segment
-        |FROM scored ORDER BY o_custkey""".stripMargin,
-
-    // z from UNROUNDED mean; base_mean rounds separately; a <2-sample
-    // or zero-variance baseline yields NULL z on both engines
-    "q_revenue_anomalies" ->
-      """WITH daily AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS "day",
-        |    CAST(round(sum(CAST(o_totalprice AS DECIMAL(30,6))), 2) AS DOUBLE)
-        |      AS revenue
-        |  FROM orders GROUP BY 1),
-        |win AS (
-        |  SELECT "day", revenue,
-        |    count(revenue) OVER w AS n,
-        |    CAST(sum(CAST(revenue AS DECIMAL(30,6))) OVER w AS DOUBLE) AS sx,
-        |    CAST(sum(CAST(revenue * revenue AS DECIMAL(30,6))) OVER w AS DOUBLE)
-        |      AS sxx
-        |  FROM daily
-        |  WINDOW w AS (ORDER BY "day" ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)),
-        |scored AS (
-        |  SELECT "day", revenue,
-        |    CASE WHEN n >= 2 THEN round(sx / n, 4) END AS base_mean,
-        |    CASE WHEN n >= 2 AND ((sxx - sx * sx / n) / (n - 1)) > 0
-        |         THEN round((revenue - sx / n)
-        |                    / sqrt((sxx - sx * sx / n) / (n - 1)), 4)
-        |    END AS z
-        |  FROM win)
-        |SELECT "day", revenue, base_mean, z,
-        |  CASE WHEN z IS NOT NULL THEN abs(z) > 2.0 ELSE false END AS is_anomaly
-        |FROM scored ORDER BY "day"""".stripMargin,
-
-    "q_purchase_intervals" ->
-      """WITH gaps AS (
-        |  SELECT date_diff('day',
-        |      lag(CAST(o_orderdate AS DATE)) OVER (PARTITION BY o_custkey
-        |        ORDER BY o_orderdate, o_orderkey),
-        |      CAST(o_orderdate AS DATE)) AS g
-        |  FROM orders),
-        |b AS (SELECT CASE WHEN g <= 7 THEN '0-7d' WHEN g <= 30 THEN '8-30d'
-        |             WHEN g <= 90 THEN '31-90d' WHEN g <= 365 THEN '91-365d'
-        |             ELSE '365d+' END AS bucket
-        |      FROM gaps WHERE g IS NOT NULL),
-        |cnt AS (SELECT bucket, count(*) AS gaps FROM b GROUP BY 1),
-        |tot AS (SELECT CAST(sum(gaps) AS BIGINT) AS t FROM cnt)
-        |SELECT bucket, gaps, round(CAST(gaps AS DOUBLE) / t, 4) AS share
-        |FROM cnt, tot ORDER BY bucket""".stripMargin,
-
-    "q_psi_drift" -> {
-      // one CTE block per column, mirroring psiReport's exact arithmetic:
-      // baseline quantile_cont cuts, strict-> bucket sums, Laplace
-      // (c+0.5)/(n+k/2) smoothing, decimal-summed (p-q)·ln(p/q)
-      val buckets = 10
-      val qs = (1 until buckets).map(i => i.toDouble / buckets)
-        .mkString("[", ", ", "]")
-      val half = buckets / 2.0
-      def colBlock(tag: String, c: String) = {
-        val bexpr = (1 until buckets)
-          .map(i => s"(CAST($c AS DOUBLE) > ct[$i])::INT")
-          .mkString(" + ")
-        s"""${tag}_cuts AS (SELECT quantile_cont(CAST($c AS DOUBLE), $qs) AS ct
-           |  FROM psi_base),
-           |${tag}_p AS (SELECT ($bexpr) AS b, count(*) AS c
-           |  FROM psi_base, ${tag}_cuts WHERE $c IS NOT NULL GROUP BY 1),
-           |${tag}_q AS (SELECT ($bexpr) AS b, count(*) AS c
-           |  FROM psi_cur, ${tag}_cuts WHERE $c IS NOT NULL GROUP BY 1),
-           |${tag}_j AS (SELECT r.range AS b, coalesce(p.c, 0) AS pc,
-           |    coalesce(q.c, 0) AS qc
-           |  FROM range(0, $buckets) r
-           |  LEFT JOIN ${tag}_p p ON r.range = p.b
-           |  LEFT JOIN ${tag}_q q ON r.range = q.b),
-           |${tag}_t AS (SELECT CAST(sum(pc) AS BIGINT) AS pn,
-           |    CAST(sum(qc) AS BIGINT) AS qn FROM ${tag}_j),
-           |$tag AS (SELECT '$c' AS "column",
-           |  round(CAST(sum(CAST(
-           |    ((pc + 0.5) / (pn + $half) - (qc + 0.5) / (qn + $half))
-           |    * ln(((pc + 0.5) / (pn + $half)) / ((qc + 0.5) / (qn + $half)))
-           |    AS DECIMAL(30,12))) AS DOUBLE), 6) AS psi
-           |  FROM ${tag}_j, ${tag}_t)""".stripMargin
-      }
-      s"""WITH psi_base AS (SELECT * FROM orders),
-         |psi_cur AS (SELECT o_custkey,
-         |    CASE WHEN o_orderkey % 2 = 0 THEN o_totalprice * 1.5
-         |         ELSE o_totalprice END AS o_totalprice
-         |  FROM orders),
-         |${colBlock("c1", "o_custkey")},
-         |${colBlock("c2", "o_totalprice")}
-         |SELECT "column", psi, psi > 0.1 AS drift_alert
-         |FROM (SELECT * FROM c1 UNION ALL SELECT * FROM c2)
-         |ORDER BY "column"""".stripMargin
-    },
-
-    "q_psi_drift_cat" -> {
-      // per-column CTE block mirroring psiReportCategorical: union
-      // category frame, k = |frame|, Laplace (c+0.5)/(n+k/2) smoothing,
-      // decimal-summed (p-q)·ln(p/q)
-      def catBlock(tag: String, c: String) =
-        s"""${tag}_p AS (SELECT CAST($c AS VARCHAR) AS cat, count(*) AS c
-           |  FROM cat_base WHERE $c IS NOT NULL GROUP BY 1),
-           |${tag}_q AS (SELECT CAST($c AS VARCHAR) AS cat, count(*) AS c
-           |  FROM cat_cur WHERE $c IS NOT NULL GROUP BY 1),
-           |${tag}_j AS (SELECT coalesce(p.cat, q.cat) AS cat,
-           |    coalesce(p.c, 0) AS pc, coalesce(q.c, 0) AS qc
-           |  FROM ${tag}_p p FULL JOIN ${tag}_q q ON p.cat = q.cat),
-           |${tag}_k AS (SELECT count(*) AS kk FROM ${tag}_j),
-           |${tag}_t AS (SELECT CAST(sum(pc) AS BIGINT) AS pn,
-           |    CAST(sum(qc) AS BIGINT) AS qn FROM ${tag}_j),
-           |$tag AS (SELECT '$c' AS "column",
-           |  round(CAST(sum(CAST(
-           |    ((pc + 0.5) / (pn + kk / 2.0) - (qc + 0.5) / (qn + kk / 2.0))
-           |    * ln(((pc + 0.5) / (pn + kk / 2.0)) / ((qc + 0.5) / (qn + kk / 2.0)))
-           |    AS DECIMAL(30,12))) AS DOUBLE), 6) AS psi
-           |  FROM ${tag}_j, ${tag}_k, ${tag}_t)""".stripMargin
-      s"""WITH cat_base AS (SELECT * FROM customer),
-         |cat_cur AS (SELECT c_custkey, c_nationkey,
-         |    CASE WHEN c_custkey % 5 < 2 THEN 'MACHINERY'
-         |         ELSE c_mktsegment END AS c_mktsegment
-         |  FROM customer),
-         |${catBlock("c1", "c_mktsegment")},
-         |${catBlock("c2", "c_nationkey")}
-         |SELECT "column", psi, psi > 0.1 AS drift_alert
-         |FROM (SELECT * FROM c1 UNION ALL SELECT * FROM c2)
-         |ORDER BY "column"""".stripMargin
-    },
-
-    "q_event_transitions" ->
-      """WITH pairs AS (
-        |  SELECT lag(event_type) OVER (PARTITION BY user_id
-        |           ORDER BY ts, event_id) AS from_type,
-        |         event_type AS to_type
-        |  FROM events),
-        |cnt AS (SELECT from_type, to_type, count(*) AS transitions
-        |        FROM pairs WHERE from_type IS NOT NULL GROUP BY 1, 2),
-        |tot AS (SELECT from_type, CAST(sum(transitions) AS BIGINT) AS t
-        |        FROM cnt GROUP BY 1)
-        |SELECT c.from_type, c.to_type, c.transitions,
-        |       round(CAST(c.transitions AS DOUBLE) / t, 4) AS prob
-        |FROM cnt c JOIN tot USING (from_type)
-        |ORDER BY from_type, to_type""".stripMargin,
-
-    "q_abc_analysis" ->
-      """WITH rev AS (
-        |  SELECT l_partkey,
-        |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |      AS DECIMAL(30,6))), 2) AS DOUBLE) AS revenue
-        |  FROM lineitem GROUP BY 1),
-        |tot AS (SELECT CAST(sum(CAST(revenue AS DECIMAL(30,6))) AS DOUBLE) AS t
-        |        FROM rev),
-        |cum AS (
-        |  SELECT l_partkey, revenue,
-        |    CAST(sum(CAST(revenue AS DECIMAL(30,6)))
-        |      OVER (ORDER BY revenue DESC, l_partkey
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |      / t AS cum_share
-        |  FROM rev, tot)
-        |SELECT l_partkey, revenue, round(cum_share, 6) AS cum_share,
-        |  CASE WHEN cum_share <= 0.8 THEN 'A'
-        |       WHEN cum_share <= 0.95 THEN 'B' ELSE 'C' END AS abc_class
-        |FROM cum ORDER BY revenue DESC, l_partkey""".stripMargin,
-
-    "q_basket_affinity" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS i FROM lineitem),
-        |n AS (SELECT count(DISTINCT o) AS nn FROM b),
-        |ic AS (SELECT i, count(*) AS c FROM b GROUP BY 1),
-        |pairs AS (SELECT a.i AS item_a, b2.i AS item_b, count(*) AS pair_count
-        |          FROM b a JOIN b b2 ON a.o = b2.o AND a.i < b2.i
-        |          GROUP BY 1, 2 HAVING count(*) >= 3)
-        |SELECT item_a, item_b, pair_count,
-        |  round(CAST(pair_count AS DOUBLE) / nn, 4) AS support,
-        |  round(CAST(pair_count AS DOUBLE) / ca.c, 4) AS confidence,
-        |  round((CAST(pair_count AS DOUBLE) / ca.c)
-        |        / (CAST(cb.c AS DOUBLE) / nn), 4) AS lift
-        |FROM pairs
-        |JOIN ic ca ON item_a = ca.i
-        |JOIN ic cb ON item_b = cb.i, n
-        |ORDER BY item_a, item_b""".stripMargin,
-
-    "q_funnel" ->
-      """WITH s1 AS (SELECT user_id AS u, min(ts) AS t FROM events
-        |            WHERE event_type = 'click' GROUP BY 1),
-        |s2 AS (SELECT e.user_id AS u, min(e.ts) AS t FROM events e
-        |       JOIN s1 ON e.user_id = s1.u AND e.ts >= s1.t
-        |       WHERE e.event_type = 'view' GROUP BY 1),
-        |s3 AS (SELECT e.user_id AS u, min(e.ts) AS t FROM events e
-        |       JOIN s2 ON e.user_id = s2.u AND e.ts >= s2.t
-        |       WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT 1 AS stage, 'click' AS event_type,
-        |       (SELECT count(*) FROM s1) AS users
-        |UNION ALL SELECT 2, 'view', (SELECT count(*) FROM s2)
-        |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-        |ORDER BY stage""".stripMargin,
-
-    "q_cohort_retention" ->
-      """WITH acts AS (SELECT user_id AS u, CAST(ts AS DATE) AS d FROM events),
-        |firsts AS (SELECT u, CAST(date_trunc('week', min(d)) AS DATE) AS cw
-        |           FROM acts GROUP BY 1)
-        |SELECT cw AS cohort_week,
-        |       CAST(floor(date_diff('day', cw, d) / 7) AS INTEGER) AS week_offset,
-        |       count(DISTINCT u) AS active_users
-        |FROM acts JOIN firsts USING (u)
-        |WHERE floor(date_diff('day', cw, d) / 7) <= 12
-        |GROUP BY 1, 2 ORDER BY cohort_week, week_offset""".stripMargin,
-
-    // shingles_of convention mirrored: a path shorter than n collapses
-    // to ONE whole-path gram (the range end's greatest(len−1, 2) yields
-    // exactly i=1 for short paths); DISTINCT per user = doc frequency
-    "q_event_journeys" ->
-      """WITH s AS (
-        |  SELECT user_id, list(event_type ORDER BY ts, event_id) AS seq
-        |  FROM events GROUP BY user_id),
-        |g AS (
-        |  SELECT user_id, CASE WHEN len(seq) >= 3
-        |      THEN array_to_string(list_slice(seq, i, i + 2), ' ')
-        |      ELSE array_to_string(seq, ' ') END AS journey
-        |  FROM (SELECT user_id, seq,
-        |          unnest(range(1, greatest(len(seq) - 1, 2))) AS i
-        |        FROM s)),
-        |d AS (SELECT DISTINCT user_id, journey FROM g)
-        |SELECT journey, count(*) AS n_users FROM d GROUP BY journey
-        |ORDER BY n_users DESC, journey LIMIT 20""".stripMargin,
-
-    "q_active_users" ->
-      """WITH p AS (
-        |  SELECT DISTINCT user_id AS u, CAST(ts AS DATE) AS day FROM events),
-        |d AS (SELECT DISTINCT day FROM p)
-        |SELECT d.day AS day, count(DISTINCT p.u) AS active_users
-        |FROM d JOIN p ON p.day >= d.day - 6 AND p.day <= d.day
-        |GROUP BY d.day ORDER BY day""".stripMargin,
-
-    "q_event_window" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        |       count(*) AS event_count,
-        |       CAST(round(sum(CAST(value AS DECIMAL(30,6))),2) AS DOUBLE) AS total_value,
-        |       count(DISTINCT user_id) AS distinct_users
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS dup_count, text
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-
-    // every non-ASCII codepoint built with chr() so the SQL text stays
-    // pure ASCII (encoding-proof): 233=é 207=Ï 769=combining-acute 9=tab
-    // 252=ü 223=ß; fold = lower ∘ strip_accents + \s-run collapse
-    "q_text_fold" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |    concat_ws(' ',
-        |      'Caf' || chr(233),
-        |      'NA' || chr(207) || 'VE',
-        |      'Cafe' || chr(769) || chr(9) || 'Du  MONDE',
-        |      text,
-        |      chr(252) || 'ber STRA' || chr(223) || 'E') AS raw
-        |  FROM documents)
-        |SELECT doc_id,
-        |  nfc_normalize(raw) AS t_nfc,
-        |  strip_accents(raw) AS t_strip,
-        |  trim(regexp_replace(lower(strip_accents(raw)), '\s+', ' ', 'g')) AS t_fold
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    // NFC 'Résumé: ' (233) and NFD 'RÉSUMÉ:   ' (69+769) fold to the
-    // same key — group by the folded text (Spark groups by its xxhash64;
-    // the hash never reaches the output so the grouping is identical)
-    "q_dedup_fold" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    'R' || chr(233) || 'sum' || chr(233) || ': ' || text AS text
-        |  FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 10000,
-        |    'RE' || chr(769) || 'SUME' || chr(769) || ':   ' || text
-        |  FROM documents),
-        |n AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(lower(strip_accents(text)), '\s+', ' ', 'g')) AS k
-        |  FROM planted)
-        |SELECT min(doc_id) AS keep_id, count(*) AS dup_count
-        |FROM n GROUP BY k ORDER BY keep_id""".stripMargin,
-
-    "q_dedup_clusters" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000, text FROM documents
-        |  UNION ALL SELECT doc_id + 20000, text FROM documents)
-        |SELECT doc_id, min(doc_id) OVER (PARTITION BY text) AS canonical
-        |FROM planted ORDER BY doc_id""".stripMargin,
-
-    // haversine in the same operation order as Geo.haversineKm; argmin
-    // via (dist, sid) ranking == the engine's lexicographic struct min
-    "q_geo_nearest" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS pid,
-        |         (c_custkey*13) % 120 - 60 + 0.25 AS lat,
-        |         (c_custkey*29) % 300 - 150 + 0.25 AS lon
-        |  FROM customer),
-        |s AS (
-        |  SELECT n_nationkey AS sid,
-        |         (n_nationkey*11) % 120 - 60 + 0.5 AS lat,
-        |         (n_nationkey*37) % 300 - 150 + 0.5 AS lon
-        |  FROM nation),
-        |d AS (
-        |  SELECT p.pid, s.sid,
-        |    2*6371.0088*asin(sqrt(pow(sin(radians(s.lat - p.lat)/2), 2)
-        |      + cos(radians(p.lat))*cos(radians(s.lat))
-        |        *pow(sin(radians(s.lon - p.lon)/2), 2))) AS dist
-        |  FROM p, s),
-        |r AS (
-        |  SELECT pid, sid, dist,
-        |         row_number() OVER (PARTITION BY pid ORDER BY dist, sid) AS rn
-        |  FROM d)
-        |SELECT pid AS point_id, sid AS site_id, round(dist, 4) AS dist_km
-        |FROM r WHERE rn = 1 ORDER BY point_id""".stripMargin,
-
-    // brute-force cross join: the grid bucketing must recover exactly
-    // the pairs the full quadratic scan finds
-    "q_geo_radius" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS pid,
-        |         (c_custkey*13) % 120 - 60 + 0.25 AS lat,
-        |         (c_custkey*29) % 300 - 150 + 0.25 AS lon
-        |  FROM customer),
-        |s AS (
-        |  SELECT n_nationkey AS sid,
-        |         (n_nationkey*11) % 120 - 60 + 0.5 AS lat,
-        |         (n_nationkey*37) % 300 - 150 + 0.5 AS lon
-        |  FROM nation),
-        |d AS (
-        |  SELECT p.pid, s.sid,
-        |    2*6371.0088*asin(sqrt(pow(sin(radians(s.lat - p.lat)/2), 2)
-        |      + cos(radians(p.lat))*cos(radians(s.lat))
-        |        *pow(sin(radians(s.lon - p.lon)/2), 2))) AS dist
-        |  FROM p, s)
-        |SELECT pid AS point_id, sid AS site_id, round(dist, 4) AS dist_km
-        |FROM d WHERE dist <= 2000.0
-        |ORDER BY point_id, site_id""".stripMargin,
-
-    // mirrors Linkage.blockedFuzzyPairs: fold → 4-char prefix block →
-    // in-block levenshtein ≤ 1, id_a < id_b
-    "q_fuzzy_pairs" ->
-      """WITH base AS (
-        |  SELECT c_custkey AS id,
-        |         substr(md5(c_custkey::VARCHAR), 1, 6) || lower(trim(c_name)) AS name
-        |  FROM customer),
-        |planted AS (
-        |  SELECT id, name FROM base
-        |  UNION ALL
-        |  SELECT id + 1000000, substr(name, 1, 7) || substr(name, 9) FROM base
-        |  WHERE id % 10 = 0),
-        |k AS (
-        |  SELECT id, lower(trim(name)) AS nm,
-        |         substr(lower(trim(name)), 1, 4) AS blk
-        |  FROM planted)
-        |SELECT a.id AS id_a, c.id AS id_b,
-        |       CAST(levenshtein(a.nm, c.nm) AS INTEGER) AS dist
-        |FROM k a JOIN k c ON a.blk = c.blk AND a.id < c.id
-        |WHERE levenshtein(a.nm, c.nm) <= 1
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // a FULL connected-components mirror (recursive min-label reach) —
-    // robust to any natural fuzzy pair the fixture might admit, exactly
-    // the propagation the engine's dedupClusters computes
-    "q_fuzzy_dedup" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT c_custkey AS id,
-        |         substr(md5(c_custkey::VARCHAR), 1, 6) || lower(trim(c_name)) AS name
-        |  FROM customer),
-        |planted AS (
-        |  SELECT id, name FROM base
-        |  UNION ALL
-        |  SELECT id + 1000000, substr(name, 1, 7) || substr(name, 9) FROM base
-        |  WHERE id % 10 = 0),
-        |k AS (
-        |  SELECT id, lower(trim(name)) AS nm,
-        |         substr(lower(trim(name)), 1, 4) AS blk
-        |  FROM planted),
-        |pairs AS (
-        |  SELECT a.id AS id_a, c.id AS id_b
-        |  FROM k a JOIN k c ON a.blk = c.blk AND a.id < c.id
-        |  WHERE levenshtein(a.nm, c.nm) <= 1),
-        |edges AS (
-        |  SELECT id_a AS s, id_b AS d FROM pairs
-        |  UNION SELECT id_b, id_a FROM pairs),
-        |reach(id, label) AS (
-        |  SELECT id, id FROM planted
-        |  UNION
-        |  SELECT e.d, r.label FROM reach r JOIN edges e ON e.s = r.id)
-        |SELECT id, min(label) AS canonical
-        |FROM reach GROUP BY id ORDER BY id""".stripMargin,
-
-    // same md5-nibble bucket as q_sample_weighted (engine-validated) and
-    // the same Knuth-multiplicative weight formula the Spark query builds
-    // its literal array from; mean pooling = avg over token rows
-    "q_clf_score" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id,
-        |    (strpos('0123456789abcdef', substr(md5('qw1' || token), 1, 1)) - 1) * 16
-        |    + (strpos('0123456789abcdef', substr(md5('qw1' || token), 2, 1)) - 1)
-        |      AS bkt
-        |  FROM tok),
-        |s AS (
-        |  SELECT doc_id,
-        |    avg(CAST((bkt * 2654435761) % 1000 AS DOUBLE) / 1000 - 0.5) AS pooled
-        |  FROM b GROUP BY doc_id)
-        |SELECT doc_id, round(1.0 / (1.0 + exp(-(0.1 + pooled))), 4) AS clf_score
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    // retention mirror: exact-text clusters (≡ θ=0.999 minhash clusters on
-    // this corpus, same argument as q_dedup_clusters), survivor = best
-    // quality then min id
-    "q_dedup_retain" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000, text FROM documents
-        |  UNION ALL SELECT doc_id + 20000, text FROM documents),
-        |q AS (SELECT doc_id, text, doc_id % 7 AS quality FROM planted),
-        |c AS (SELECT doc_id, quality,
-        |        min(doc_id) OVER (PARTITION BY text) AS cl FROM q),
-        |r AS (SELECT doc_id, quality,
-        |        row_number() OVER (PARTITION BY cl ORDER BY quality DESC, doc_id)
-        |          AS rn
-        |      FROM c)
-        |SELECT doc_id, quality FROM r WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    // same score CTE as q_clf_score (margin, not sigmoid — monotone, so
-    // the kept set is identical); threshold = continuous 80th percentile,
-    // the interpolation rule Spark's percentile shares with quantile_cont
-    "q_quality_gate" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id,
-        |    (strpos('0123456789abcdef', substr(md5('qw1' || token), 1, 1)) - 1) * 16
-        |    + (strpos('0123456789abcdef', substr(md5('qw1' || token), 2, 1)) - 1)
-        |      AS bkt
-        |  FROM tok),
-        |s AS (
-        |  SELECT doc_id,
-        |    round(0.1 + avg(CAST((bkt * 2654435761) % 1000 AS DOUBLE) / 1000 - 0.5), 6)
-        |      AS score
-        |  FROM b GROUP BY doc_id),
-        |thr AS (SELECT quantile_cont(score, 0.8) AS t FROM s)
-        |SELECT doc_id, score FROM s, thr WHERE score >= t
-        |ORDER BY doc_id""".stripMargin,
-
-    // split hashes the CANONICAL id string — same md5 last-nibble
-    // arithmetic as q_split_assign (engine-validated); exact-text
-    // clusters mirror the xxhash64 grouping (collisions aside, 2^-64)
-    "q_split_leakproof" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000, text FROM documents
-        |  UNION ALL SELECT doc_id + 20000, text FROM documents),
-        |c AS (SELECT doc_id,
-        |        min(doc_id) OVER (PARTITION BY text) AS cl FROM planted)
-        |SELECT doc_id,
-        |  CASE WHEN (strpos('0123456789abcdef',
-        |      substr(md5(CAST(cl AS VARCHAR)), 32, 1)) - 1) < 14
-        |    THEN 'train' ELSE 'val' END AS split_label
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    // per-document md5-nibble split over perturbed triples; clusters by
-    // id congruence — n_splits > 1 rows are the leaking clusters
-    "q_split_audit" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 10000, text || ' v2' FROM documents
-        |  UNION ALL SELECT doc_id + 20000, text || ' v3' FROM documents),
-        |lab AS (SELECT doc_id, doc_id % 10000 AS cluster,
-        |    CASE WHEN (strpos('0123456789abcdef', substr(md5(text), 32, 1)) - 1) < 14
-        |      THEN 'train' ELSE 'val' END AS split_label
-        |  FROM planted),
-        |agg AS (SELECT cluster, count(DISTINCT split_label) AS n_splits,
-        |    count(*) AS n_rows
-        |  FROM lab GROUP BY cluster)
-        |SELECT cluster, CAST(n_splits AS BIGINT) AS n_splits,
-        |  CAST(n_rows AS BIGINT) AS n_rows
-        |FROM agg WHERE n_splits > 1 ORDER BY cluster""".stripMargin,
-
-    // 52-bit md5-prefix rank over 'ep0' ‖ text — the q_sample_exact fold
-    "q_shuffle_order" -> {
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
-      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-      s"""WITH b AS (
-         |  SELECT doc_id, md5('ep0' || text) AS h FROM documents)
-         |SELECT doc_id, CAST($folded AS BIGINT) AS shuffle_rank
-         |FROM b ORDER BY shuffle_rank""".stripMargin
-    },
-
-    // rolling Rabin-Karp fold mirrored exactly: per-token 52-bit md5
-    // prefix (the engine-validated q_sample_exact nibble fold), then
-    // list_reduce of h*B + th over HUGEINT mod 2^64, sign-converted to
-    // Spark's signed long at the end
-    "q_fingerprint" -> {
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(tk), $i, 1)) - 1)"
-      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    list_transform(string_split(trim(text), ' '),
-         |      tk -> CAST($folded AS HUGEINT)) AS ths
-         |  FROM documents),
-         |f AS (
-         |  SELECT doc_id,
-         |    list_reduce(list_prepend(CAST(0 AS HUGEINT), ths),
-         |      (acc, x) -> (acc * 1000003 + x)
-         |        % CAST('18446744073709551616' AS HUGEINT)) AS h
-         |  FROM t)
-         |SELECT doc_id,
-         |  CAST(CASE WHEN h >= CAST('9223372036854775808' AS HUGEINT)
-         |    THEN h - CAST('18446744073709551616' AS HUGEINT) ELSE h END
-         |    AS BIGINT) AS fingerprint
-         |FROM f ORDER BY doc_id""".stripMargin
-    },
-
-    // minhash lanes mirrored exactly: 3-token shingles (short texts fall
-    // back to one full-width shingle like the native expression), 52-bit
-    // md5-prefix base hash, affine lane transforms over HUGEINT mod 2^64,
-    // SIGNED-long min per lane (Spark's Long compare)
-    "q_dedup_minhash_sig" -> {
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(shingle), $i, 1)) - 1)"
-      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-      s"""WITH t AS (
-         |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-         |s AS (
-         |  SELECT doc_id, toks,
-         |    unnest(range(1, greatest(len(toks) - 2, 1) + 1)) AS i
-         |  FROM t),
-         |sh AS (
-         |  SELECT doc_id,
-         |    array_to_string(
-         |      list_slice(toks, i, i + least(3, len(toks)) - 1), ' ') AS shingle
-         |  FROM s),
-         |h AS (
-         |  SELECT doc_id, CAST($folded AS HUGEINT) AS h52 FROM sh),
-         |lanes AS (
-         |  SELECT doc_id, h52, unnest(range(0, 16)) AS lane FROM h),
-         |v AS (
-         |  SELECT doc_id, lane,
-         |    (h52 * (CAST('11400714819323198485' AS HUGEINT) + 2 * lane)
-         |      + CAST('14029467366897019727' AS HUGEINT) * (lane + 1))
-         |      % CAST('18446744073709551616' AS HUGEINT) AS vm
-         |  FROM lanes)
-         |SELECT doc_id, CAST(lane AS INT) AS lane,
-         |  min(CAST(CASE WHEN vm >= CAST('9223372036854775808' AS HUGEINT)
-         |    THEN vm - CAST('18446744073709551616' AS HUGEINT) ELSE vm END
-         |    AS BIGINT)) AS sig
-         |FROM v GROUP BY doc_id, lane ORDER BY doc_id, lane""".stripMargin
-    },
-
-    // band buckets over the md5_52 lanes: each band's 4 signed lanes
-    // join into the canonical "band:l,l,l,l" string, bucket = the same
-    // 13-nibble md5 fold — lane arithmetic identical to
-    // q_dedup_minhash_sig above
-    "q_dedup_minhash" -> {
-      val nibSh = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(shingle), $i, 1)) - 1)"
-      val foldSh = (2 to 13).foldLeft(nibSh(1))((acc, i) => s"($acc * 16 + ${nibSh(i)})")
-      val nibK = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(kstr), $i, 1)) - 1)"
-      val foldK = (2 to 13).foldLeft(nibK(1))((acc, i) => s"($acc * 16 + ${nibK(i)})")
-      s"""WITH t AS (
-         |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-         |s AS (
-         |  SELECT doc_id, toks,
-         |    unnest(range(1, greatest(len(toks) - 2, 1) + 1)) AS i
-         |  FROM t),
-         |sh AS (
-         |  SELECT doc_id,
-         |    array_to_string(
-         |      list_slice(toks, i, i + least(3, len(toks)) - 1), ' ') AS shingle
-         |  FROM s),
-         |h AS (
-         |  SELECT doc_id, CAST($foldSh AS HUGEINT) AS h52 FROM sh),
-         |lanes AS (
-         |  SELECT doc_id, h52, unnest(range(0, 16)) AS lane FROM h),
-         |v AS (
-         |  SELECT doc_id, lane,
-         |    (h52 * (CAST('11400714819323198485' AS HUGEINT) + 2 * lane)
-         |      + CAST('14029467366897019727' AS HUGEINT) * (lane + 1))
-         |      % CAST('18446744073709551616' AS HUGEINT) AS vm
-         |  FROM lanes),
-         |sig AS (
-         |  SELECT doc_id, lane,
-         |    min(CAST(CASE WHEN vm >= CAST('9223372036854775808' AS HUGEINT)
-         |      THEN vm - CAST('18446744073709551616' AS HUGEINT) ELSE vm END
-         |      AS BIGINT)) AS sv
-         |  FROM v GROUP BY doc_id, lane),
-         |bands AS (
-         |  SELECT doc_id, CAST(lane // 4 AS INT) AS band,
-         |    string_agg(CAST(sv AS VARCHAR), ',' ORDER BY lane) AS lanes_str
-         |  FROM sig GROUP BY doc_id, lane // 4),
-         |keyed AS (
-         |  SELECT doc_id, band, band || ':' || lanes_str AS kstr FROM bands)
-         |SELECT doc_id AS doc, band, CAST($foldK AS BIGINT) AS bucket
-         |FROM keyed ORDER BY doc, band""".stripMargin
-    },
-
-    // per-bit majority vote over the first 8 md5 digest bytes (16-nibble
-    // HUGEINT fold); pow CTE gives exact 2^b, sign-converted at the end
-    "q_dedup_simhash" -> {
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(tk), $i, 1)) - 1)"
-      val folded = (2 to 16).foldLeft(s"CAST(${nib(1)} AS HUGEINT)")(
-        (acc, i) => s"($acc * 16 + ${nib(i)})")
-      s"""WITH RECURSIVE pow(b, p) AS (
-         |  SELECT 0, CAST(1 AS HUGEINT)
-         |  UNION ALL SELECT b + 1, p * 2 FROM pow WHERE b < 63),
-         |tok AS (
-         |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tk
-         |  FROM documents),
-         |h AS (
-         |  SELECT doc_id, $folded AS h64 FROM tok),
-         |votes AS (
-         |  SELECT doc_id, pow.p AS p,
-         |    sum(CASE WHEN (h64 // p) % 2 = 1 THEN 1 ELSE 0 END) AS ones,
-         |    count(*) AS n
-         |  FROM h CROSS JOIN pow
-         |  GROUP BY doc_id, pow.p),
-         |sh AS (
-         |  SELECT doc_id,
-         |    sum(CASE WHEN ones * 2 > n THEN p ELSE CAST(0 AS HUGEINT) END) AS hv
-         |  FROM votes GROUP BY doc_id)
-         |SELECT doc_id,
-         |  CAST(CASE WHEN hv >= CAST('9223372036854775808' AS HUGEINT)
-         |    THEN hv - CAST('18446744073709551616' AS HUGEINT) ELSE hv END
-         |    AS BIGINT) AS simhash
-         |FROM sh ORDER BY doc_id""".stripMargin
-    },
-
-    // the hyperplane planes are SEEDED constants (Random(42) Gaussian
-    // stream) — inlined here as double literals, so DuckDB computes the
-    // exact same sign bits: per plane one left-associated dot-product
-    // chain over embedding::DOUBLE[] (identical IEEE addition order to
-    // the native expression's loop), bucket = Σ 2^plane for dot ≥ 0
-    "q_ann_lsh" -> {
-      val planes = graft.functions.HyperplaneSigExpr.planesFor(64, 12, 42L)
-      val sigExpr = planes.zipWithIndex.map { case (p, b) =>
-        val dot = p.zipWithIndex
-          .map { case (w, i) => s"e[${i + 1}] * (${w})" }
-          .reduce((a, t) => s"($a + $t)")
-        s"(CASE WHEN $dot >= 0 THEN ${1L << b} ELSE 0 END)"
-      }.mkString("(", " + ", ")")
-      s"""WITH ec AS (
-         |  SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-         |sig AS (
-         |  SELECT vec_id, CAST($sigExpr AS BIGINT) AS bucket FROM ec)
-         |SELECT bucket, count(*) AS bucket_size FROM sig
-         |GROUP BY bucket ORDER BY bucket""".stripMargin
-    },
-
-    "q_dedup_keepfirst" ->
-      """SELECT user_id, event_type, min(event_id) AS event_id,
-        |       arg_min(ts, event_id) AS ts, arg_min(value, event_id) AS value,
-        |       arg_min(props, event_id) AS props
-        |FROM events GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "q_upsert_lastwins" ->
-      """SELECT user_id, event_type, max(event_id) AS last_event_id,
-        |       arg_max(value, event_id) AS value, arg_max(ts, event_id) AS ts
-        |FROM events GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-
-    "q_missing_drop" ->
-      """SELECT o_orderkey, o_orderpriority
-        |FROM (SELECT o_orderkey, nullif(o_orderpriority,'4-NOT SPECIFIED') AS o_orderpriority FROM orders)
-        |WHERE o_orderpriority IS NOT NULL ORDER BY o_orderkey""".stripMargin,
-
-    "q_missing_fill" ->
-      """SELECT event_id,
-        |       coalesce(nullif(event_type,'error'),'UNKNOWN') AS event_type,
-        |       coalesce(CASE WHEN value < 1 THEN NULL ELSE value END, 0.0) AS value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_missing_ffill" ->
-      """WITH injected AS (
-        |  SELECT event_id, user_id,
-        |         CASE WHEN value < 1 THEN NULL ELSE value END AS value
-        |  FROM events)
-        |SELECT event_id, user_id,
-        |       round(last_value(value IGNORE NULLS) OVER (
-        |         PARTITION BY user_id ORDER BY event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS value_ffill
-        |FROM injected ORDER BY event_id""".stripMargin,
-
-    "q_missing_bfill" ->
-      """WITH injected AS (
-        |  SELECT event_id, user_id,
-        |         CASE WHEN value < 1 THEN NULL ELSE value END AS value
-        |  FROM events)
-        |SELECT event_id, user_id,
-        |       round(first_value(value IGNORE NULLS) OVER (
-        |         PARTITION BY user_id ORDER BY event_id
-        |         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING), 4) AS value_bfill
-        |FROM injected ORDER BY event_id""".stripMargin,
-
-    "q_missing_interpolate" ->
-      """WITH injected AS (
-        |  SELECT event_id, user_id,
-        |         CASE WHEN value < 1 THEN NULL ELSE value END AS value
-        |  FROM events),
-        |pos AS (
-        |  SELECT *, row_number() OVER w AS p FROM injected
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY event_id)),
-        |ctx AS (
-        |  SELECT *,
-        |    last_value(value IGNORE NULLS) OVER wp AS pv,
-        |    last_value(CASE WHEN value IS NOT NULL THEN p END IGNORE NULLS) OVER wp AS pp,
-        |    first_value(value IGNORE NULLS) OVER wn AS nv,
-        |    first_value(CASE WHEN value IS NOT NULL THEN p END IGNORE NULLS) OVER wn AS np
-        |  FROM pos
-        |  WINDOW wp AS (PARTITION BY user_id ORDER BY p ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |         wn AS (PARTITION BY user_id ORDER BY p ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT event_id, user_id,
-        |  round(CASE WHEN value IS NOT NULL THEN value
-        |             WHEN pv IS NULL THEN NULL
-        |             WHEN nv IS NULL THEN pv
-        |             ELSE pv + (nv - pv) * (p - pp) / (np - pp) END, 4) AS value_interp
-        |FROM ctx ORDER BY event_id""".stripMargin,
-
-    "q_missing_fill_median" ->
-      """WITH injected AS (
-        |  SELECT c_custkey, CASE WHEN c_acctbal < 0 THEN NULL ELSE c_acctbal END AS bal
-        |  FROM customer)
-        |SELECT c_custkey,
-        |       round(coalesce(bal, (SELECT median(bal) FROM injected)),2) AS bal_filled
-        |FROM injected ORDER BY c_custkey""".stripMargin,
-
-    "q_normalize_categorical" ->
-      """SELECT c_custkey, lower(trim(c_mktsegment)) AS segment,
-        |       upper(trim(c_name)) AS name_uc
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "q_derived_metrics" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       round((epoch(l_shipdate) - epoch(o_orderdate))/3600.0, 2) AS ship_delay_hours,
-        |       round(l_tax / nullif(l_discount, 0), 4) AS tax_to_discount
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_timestamp_standardize" ->
-      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS ts_str,
-        |       try_strptime(strftime(o_orderdate, '%Y-%m-%d %H:%M:%S'), '%Y-%m-%d %H:%M:%S') AS reparsed,
-        |       try_strptime(o_orderpriority, '%Y-%m-%d %H:%M:%S') AS coerced_null
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_csv_roundtrip" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity, l_extendedprice
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_orc_roundtrip" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag, l_quantity, l_extendedprice
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_zorder_scan" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity
-        |FROM lineitem WHERE l_partkey <= 100 AND l_suppkey <= 20
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_zorder_scan_hilbert" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey, l_quantity
-        |FROM lineitem WHERE l_partkey <= 100 AND l_suppkey <= 20
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_zorder_scoped" ->
-      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-        |       CAST(l_quantity AS DOUBLE) AS l_quantity
-        |FROM lineitem
-        |WHERE l_quantity >= 25 AND l_partkey <= 100 AND l_suppkey <= 20
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_nested_prune" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag AS kind,
-        |       CAST(l_quantity AS DOUBLE) AS qty
-        |FROM lineitem WHERE l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_partition_transform" ->
-      """SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1995-03-01 00:00:00'
-        |  AND o_orderdate <  TIMESTAMP '1995-06-01 00:00:00'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_generated_col" ->
-      """SELECT o_orderkey, o_orderdate, o_totalprice,
-        |       CAST(year(o_orderdate) AS BIGINT) AS o_year
-        |FROM orders WHERE year(o_orderdate) = 1995
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_identity_col" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_cluster_by" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       CAST(l_extendedprice AS DOUBLE) AS price
-        |FROM lineitem
-        |WHERE l_extendedprice BETWEEN 10000.0 AND 20000.0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_rename_nested" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag AS category,
-        |       CAST(l_quantity AS DOUBLE) AS qty
-        |FROM lineitem WHERE l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_zorder_string" ->
-      """SELECT p_partkey, p_brand, p_type, p_retailprice
-        |FROM part WHERE p_brand <= 'Brand#23' AND p_type >= 'STANDARD'
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_update_nested" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag AS kind,
-        |       CASE WHEN l_returnflag = 'R' THEN l_quantity::DOUBLE * 10
-        |            ELSE l_quantity::DOUBLE END AS qty
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_widen_column" ->
-      """SELECT o_orderkey,
-        |       CASE WHEN o_orderkey % 2 = 0 THEN CAST(o_custkey AS BIGINT)
-        |            ELSE CAST(o_custkey AS BIGINT) + 10000000000 END AS cust_i,
-        |       CAST(o_totalprice AS DOUBLE) AS price
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q_reorg_purge" ->
-      """SELECT l_orderkey, l_linenumber,
-        |       CAST(l_extendedprice AS DOUBLE) AS price
-        |FROM lineitem WHERE l_orderkey NOT IN (1, 32)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_profile" -> {
-      // one UNION ALL branch per lineitem column, all stats from one CTE scan
-      val cols = Seq(
-        ("l_orderkey", "bigint", true), ("l_partkey", "bigint", true),
-        ("l_suppkey", "bigint", true), ("l_linenumber", "int", true),
-        ("l_quantity", "double", true), ("l_extendedprice", "double", true),
-        ("l_discount", "double", true), ("l_tax", "double", true),
-        ("l_returnflag", "string", false), ("l_linestatus", "string", false),
-        ("l_shipdate", "timestamp_ntz", false))
-      val branches = cols.map { case (c, dt, num) =>
-        val mn = if (num) s"CAST(min($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
-        val mx = if (num) s"CAST(max($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
-        val mean = if (num) s"round(avg($c), 4)" else "CAST(NULL AS DOUBLE)"
-        s"""SELECT '$c' AS "column", '$dt' AS dtype, count(*) AS row_count,
-           | CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS null_count,
-           | round(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END)/CAST(count(*) AS DOUBLE), 4) AS null_pct,
-           | count(DISTINCT $c) AS distinct_count, $mn AS min, $mx AS max, $mean AS mean
-           |FROM lineitem""".stripMargin
-      }
-      branches.mkString("", "\nUNION ALL\n", "\nORDER BY \"column\"")
-    },
-
-    "q_json_extract" ->
-      """SELECT event_id, CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INTEGER) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_validate_nulls" ->
-      """WITH agg AS (
-        |  SELECT count(*) AS n,
-        |    CAST(sum(CASE WHEN o_orderkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |    CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        |    CAST(sum(CASE WHEN nullif(o_orderpriority,'4-NOT SPECIFIED') IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v3
-        |  FROM orders)
-        |SELECT * FROM (
-        |  SELECT 'null_check_o_orderkey' AS rule, 'critical' AS severity, n AS row_count,
-        |         v1 AS violations, round(v1/CAST(greatest(n,1) AS DOUBLE),4) AS violation_pct, v1 <= 0 AS passed FROM agg
-        |  UNION ALL
-        |  SELECT 'null_check_o_custkey', 'error', n, v2, round(v2/CAST(greatest(n,1) AS DOUBLE),4), v2 <= 0 FROM agg
-        |  UNION ALL
-        |  SELECT 'null_check_o_orderpriority', 'error', n, v3, round(v3/CAST(greatest(n,1) AS DOUBLE),4), v3 <= 0.3*n FROM agg)
-        |ORDER BY rule""".stripMargin,
-
-    "q_validate_rules" ->
-      """WITH agg AS (
-        |  SELECT count(*) AS n,
-        |    CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50 THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |    CAST(sum(CASE WHEN l_extendedprice < 0 THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        |    CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 0.05 THEN 1 ELSE 0 END) AS BIGINT) AS v3,
-        |    CAST(sum(CASE WHEN NOT coalesce(l_tax <= l_discount, false) THEN 1 ELSE 0 END) AS BIGINT) AS v4
-        |  FROM lineitem)
-        |SELECT * FROM (
-        |  SELECT 'business_rule_tax_le_discount' AS rule, 'warning' AS severity, n AS row_count,
-        |         v4 AS violations, round(v4/CAST(greatest(n,1) AS DOUBLE),4) AS violation_pct, v4 <= 0 AS passed FROM agg
-        |  UNION ALL
-        |  SELECT 'range_check_l_discount', 'warning', n, v3, round(v3/CAST(greatest(n,1) AS DOUBLE),4), v3 <= 0 FROM agg
-        |  UNION ALL
-        |  SELECT 'range_check_l_extendedprice', 'error', n, v2, round(v2/CAST(greatest(n,1) AS DOUBLE),4), v2 <= 0 FROM agg
-        |  UNION ALL
-        |  SELECT 'range_check_l_quantity', 'error', n, v1, round(v1/CAST(greatest(n,1) AS DOUBLE),4), v1 <= 0 FROM agg)
-        |ORDER BY rule""".stripMargin,
-
-    "q_validate_unique" ->
-      """WITH g AS (SELECT o_custkey, count(*) AS cnt FROM orders GROUP BY o_custkey)
-        |SELECT 'unique_check_o_custkey' AS rule,
-        |  CAST(sum(CASE WHEN cnt > 1 THEN 1 ELSE 0 END) AS BIGINT) AS duplicate_keys,
-        |  CAST(sum(CASE WHEN cnt > 1 THEN cnt - 1 ELSE 0 END) AS BIGINT) AS duplicate_rows,
-        |  CAST(sum(CASE WHEN cnt > 1 THEN cnt - 1 ELSE 0 END) AS BIGINT) = 0 AS passed
-        |FROM g""".stripMargin,
-
-    "q_skew_ndv" ->
-      """SELECT event_type, count(DISTINCT user_id) AS ndv
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(trim(text), ' ')) AS INTEGER) AS n_tokens,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS INTEGER) AS n_bpeish
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_text_quality" ->
-      """SELECT doc_id,
-        |  CAST(length(text) AS INTEGER) AS n_chars_q,
-        |  CAST(len(string_split(trim(text), ' ')) AS INTEGER) AS n_words,
-        |  round(CAST(length(text) - (len(string_split(trim(text),' ')) - 1) AS DOUBLE)
-        |        / len(string_split(trim(text),' ')), 4) AS mean_word_len,
-        |  round(CAST(len(list_filter(string_split(trim(text),' '),
-        |        w -> w IN ('the','a','an','of','and','to','in','is'))) AS DOUBLE)
-        |        / len(string_split(trim(text),' ')), 4) AS stopword_ratio,
-        |  round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
-        |        / greatest(length(text), 1), 4) AS punct_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_lang_id" ->
-      """WITH scored AS (
-        |  SELECT doc_id,
-        |    len(list_filter(string_split(trim(text),' '), w -> w IN ('the','a','an','of','and','to','in','is'))) AS en,
-        |    len(list_filter(string_split(trim(text),' '), w -> w IN ('el','la','de','y','que','en','los','un'))) AS es,
-        |    len(list_filter(string_split(trim(text),' '), w -> w IN ('le','la','de','et','les','des','un','une'))) AS fr,
-        |    len(list_filter(string_split(trim(text),' '), w -> w IN ('der','die','das','und','ist','ein','nicht','mit'))) AS de
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN en >= greatest(es, fr, de) AND en > 0 THEN 'en'
-        |       WHEN es >= greatest(fr, de) AND es > 0 THEN 'es'
-        |       WHEN fr >= de AND fr > 0 THEN 'fr'
-        |       WHEN de > 0 THEN 'de'
-        |       ELSE 'und' END AS pred_lang
-        |FROM scored ORDER BY doc_id""".stripMargin,
-
-    // full DSIR mirror: same md5-byte buckets (strpos nibble fold), the
-    // same add-one-smoothed counts (source = every token's bucket is in
-    // src by construction — the scored corpus IS the source), ln ratios,
-    // avg pooling; round(6) absorbs ln/summation-order ulps
-    "q_dsir_score" ->
-      """WITH tok AS (
-        |  SELECT doc_id, lang, unnest(string_split(trim(text), ' ')) AS t
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, lang,
-        |    (strpos('0123456789abcdef', substr(md5('dsir' || t), 1, 1)) - 1) * 16
-        |    + (strpos('0123456789abcdef', substr(md5('dsir' || t), 2, 1)) - 1)
-        |      AS bkt
-        |  FROM tok),
-        |src AS (SELECT bkt, count(*) AS c FROM b GROUP BY bkt),
-        |tgt AS (SELECT bkt, count(*) AS c FROM b WHERE lang = 'en' GROUP BY bkt),
-        |tots AS (SELECT
-        |  (SELECT sum(c) FROM src) + 256.0 AS sc,
-        |  (SELECT sum(c) FROM tgt) + 256.0 AS tc),
-        |w AS (
-        |  SELECT s.bkt,
-        |    ln((coalesce(t.c, 0) + 1.0) / tots.tc) - ln((s.c + 1.0) / tots.sc)
-        |      AS wt
-        |  FROM src s LEFT JOIN tgt t ON t.bkt = s.bkt, tots),
-        |sc AS (
-        |  SELECT b.doc_id, avg(w.wt) AS m
-        |  FROM b JOIN w ON w.bkt = b.bkt
-        |  GROUP BY b.doc_id)
-        |SELECT d.doc_id, round(sc.m, 6) AS dsir_score
-        |FROM documents d LEFT JOIN sc ON sc.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // the five Gopher signals re-derived with the q_text_quality /
-    // q_text_repetition formulas, thresholds inline
-    "q_gopher_filter" ->
-      """WITH s AS (
-        |  SELECT doc_id,
-        |    len(string_split(trim(text), ' ')) AS nw,
-        |    round(CAST(length(text) - (len(string_split(trim(text),' ')) - 1) AS DOUBLE)
-        |          / len(string_split(trim(text),' ')), 4) AS mwl,
-        |    round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
-        |          / greatest(length(text), 1), 4) AS pr,
-        |    len(list_filter(string_split(trim(text),' '),
-        |        w -> w IN ('the','a','an','of','and','to','in','is'))) AS stop,
-        |    round(1 - CASE WHEN len(string_split(trim(text),' ')) >= 2
-        |        THEN len(list_distinct(list_transform(
-        |               range(1, len(string_split(trim(text),' '))),
-        |               i -> string_split(trim(text),' ')[i] || ' ' ||
-        |                    string_split(trim(text),' ')[i+1])))
-        |        ELSE 1 END
-        |      / CAST(greatest(len(string_split(trim(text),' ')) - 1, 1) AS DOUBLE), 4)
-        |      AS d2
-        |  FROM documents)
-        |SELECT doc_id,
-        |  nw BETWEEN 25 AND 100000 AS ok_words,
-        |  mwl BETWEEN 3.0 AND 10.0 AS ok_word_len,
-        |  pr <= 0.2 AS ok_punct,
-        |  stop >= 2 AS ok_stopwords,
-        |  d2 <= 0.2 AS ok_repetition,
-        |  (nw BETWEEN 25 AND 100000) AND (mwl BETWEEN 3.0 AND 10.0)
-        |    AND pr <= 0.2 AND stop >= 2 AND d2 <= 0.2 AS gopher_keep
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "q_text_repetition" ->
-      """WITH toks AS (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)
-        |SELECT doc_id,
-        |  round(1 - len(list_distinct(t)) / CAST(len(t) AS DOUBLE), 4) AS dup_word_ratio,
-        |  round(1 - CASE WHEN len(t) >= 2
-        |      THEN len(list_distinct(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])))
-        |      ELSE 1 END / CAST(greatest(len(t) - 1, 1) AS DOUBLE), 4) AS dup_2gram_ratio
-        |FROM toks ORDER BY doc_id""".stripMargin,
-
-    "q_redact" ->
-      """WITH dirty AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 5 = 0
-        |         THEN text || ' contact user' || doc_id || '@example.com or +1 (555) 010-' || doc_id
-        |         ELSE text END AS dirty
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |    '\+?[0-9][0-9()\- ]{6,}[0-9]', '<PHONE>', 'g') AS clean_text,
-        |  CAST(len(regexp_extract_all(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |     + len(regexp_extract_all(
-        |         regexp_replace(dirty, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |         '\+?[0-9][0-9()\- ]{6,}[0-9]')) AS INTEGER) AS pii_matches
-        |FROM dirty ORDER BY doc_id""".stripMargin,
-
-    "q_split_assign" ->
-      """SELECT doc_id,
-        |  CASE WHEN strpos('0123456789abcdef', substr(md5(text), 32, 1)) - 1 < 14
-        |       THEN 'train' ELSE 'val' END AS split_label
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // boilerplate mirror: identical planted footer; df counted per exact
-    // line (native side hashes lines — string equality is the same
-    // relation); reassembly = order-preserving string_agg
-    "q_boilerplate_lines" ->
-      """WITH aug AS (
-        |  SELECT doc_id,
-        |    text || chr(10) || '(c) example corp - all rights reserved'
-        |         || chr(10) || 'doc tail ' || doc_id AS t2
-        |  FROM documents),
-        |l AS (SELECT doc_id, string_split(t2, chr(10)) AS ls FROM aug),
-        |ex AS (
-        |  SELECT doc_id, unnest(ls) AS line,
-        |         unnest(range(1, len(ls) + 1)) AS pos
-        |  FROM l),
-        |dfq AS (SELECT line, count(DISTINCT doc_id) AS dfc FROM ex GROUP BY 1),
-        |boiler AS (SELECT line FROM dfq WHERE dfc > 100),
-        |kept AS (SELECT e.* FROM ex e ANTI JOIN boiler b ON e.line = b.line),
-        |agg AS (
-        |  SELECT doc_id, string_agg(line, chr(10) ORDER BY pos) AS clean_text
-        |  FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id, coalesce(a.clean_text, '') AS clean_text
-        |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // full mirror of the span-removal pipeline: md5_52 window hash
-    // (13-nibble fold), distinct-doc frequency, position coverage via
-    // zipped unnests, ordered re-join
-    "q_dedup_spans" -> {
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(gram), $i, 1)) - 1)"
-      val fold = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-      s"""WITH t AS (
-         |  SELECT doc_id, text, string_split(trim(text), ' ') AS toks
-         |  FROM documents),
-         |w AS (
-         |  SELECT doc_id, toks, unnest(range(1, len(toks) - 3)) AS i
-         |  FROM t WHERE len(toks) >= 5),
-         |g AS (
-         |  SELECT doc_id, i,
-         |    array_to_string(list_slice(toks, i, i + 4), ' ') AS gram
-         |  FROM w),
-         |h AS (SELECT doc_id, i, CAST($fold AS BIGINT) AS wh FROM g),
-         |dup AS (
-         |  SELECT wh FROM h GROUP BY wh HAVING count(DISTINCT doc_id) >= 2),
-         |cov AS (
-         |  SELECT DISTINCT doc_id, unnest(range(i, i + 5)) AS p
-         |  FROM h WHERE wh IN (SELECT wh FROM dup)),
-         |tok AS (
-         |  SELECT doc_id, unnest(toks) AS tk,
-         |         unnest(range(1, len(toks) + 1)) AS p
-         |  FROM t),
-         |kept AS (
-         |  SELECT tok.doc_id, tok.p, tok.tk FROM tok
-         |  LEFT JOIN cov ON cov.doc_id = tok.doc_id AND cov.p = tok.p
-         |  WHERE cov.doc_id IS NULL),
-         |cl AS (
-         |  SELECT doc_id, string_agg(tk, ' ' ORDER BY p) AS clean
-         |  FROM kept GROUP BY doc_id)
-         |SELECT d.doc_id,
-         |  CASE WHEN d.text IS NULL THEN NULL ELSE coalesce(cl.clean, '') END
-         |    AS clean_text
-         |FROM documents d LEFT JOIN cl ON cl.doc_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin
-    },
-
-    // same window-hash/dup CTEs as q_dedup_spans, then the classic
-    // segment merge: running max end (ROWS ... 1 PRECEDING) decides
-    // openers, running sum of openers numbers the segments
-    "q_dup_span_merge" -> {
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(gram), $i, 1)) - 1)"
-      val fold = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-      s"""WITH t AS (
-         |  SELECT doc_id, string_split(trim(text), ' ') AS toks
-         |  FROM documents),
-         |w AS (
-         |  SELECT doc_id, toks, unnest(range(1, len(toks) - 3)) AS i
-         |  FROM t WHERE len(toks) >= 5),
-         |g AS (
-         |  SELECT doc_id, i,
-         |    array_to_string(list_slice(toks, i, i + 4), ' ') AS gram
-         |  FROM w),
-         |h AS (SELECT doc_id, i, CAST($fold AS BIGINT) AS wh FROM g),
-         |dup AS (
-         |  SELECT wh FROM h GROUP BY wh HAVING count(DISTINCT doc_id) >= 2),
-         |sp AS (
-         |  SELECT doc_id, i AS s, i + 4 AS e FROM h
-         |  WHERE wh IN (SELECT wh FROM dup)),
-         |m AS (
-         |  SELECT doc_id, s, e,
-         |    max(e) OVER (PARTITION BY doc_id ORDER BY s, e
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-         |  FROM sp),
-         |seg AS (
-         |  SELECT doc_id, s, e,
-         |    sum(CASE WHEN pm IS NULL OR s > pm + 1 THEN 1 ELSE 0 END)
-         |      OVER (PARTITION BY doc_id ORDER BY s, e) AS sid
-         |  FROM m)
-         |SELECT doc_id, min(s) AS span_start, max(e) AS span_end
-         |FROM seg GROUP BY doc_id, sid
-         |ORDER BY doc_id, span_start""".stripMargin
-    },
-
-    // winnowing: same md5-fold window-hash table as q_dedup_spans, then
-    // per window start j (full windows only, plus the single truncated
-    // window of a short doc) the min hash with rightmost tie (wh ASC,
-    // position DESC), distinct per doc
-    "q_winnow_fp" ->
-      s"""${winnowFpCtes()}
-         |SELECT doc_id, fp FROM fp ORDER BY doc_id, fp""".stripMargin,
-
-    "q_winnow_overlap" ->
-      s"""${winnowFpCtes()},
-         |rare AS (SELECT fp FROM fp GROUP BY fp HAVING count(*) <= 64),
-         |kept AS (SELECT doc_id, fp FROM fp
-         |         WHERE fp IN (SELECT fp FROM rare))
-         |SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS shared
-         |FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY a.doc_id, b.doc_id HAVING count(*) >= 2
-         |ORDER BY a_id, b_id""".stripMargin,
-
-    // winnowing is per-doc independent, so fingerprinting the corpus ∪
-    // re-keyed batch union once equals fingerprinting each separately;
-    // the maxDf guard computes over CORPUS-side fps only (a.doc_id side)
-    "q_winnow_incr" ->
-      s"""${winnowFpCtes(
-             "(SELECT doc_id, text FROM documents UNION ALL " +
-             "SELECT doc_id + 1000000, text || ' probe tail suffix' " +
-             "FROM documents WHERE doc_id % 7 = 0)")},
-         |rare AS (SELECT fp FROM fp WHERE doc_id < 1000000
-         |         GROUP BY fp HAVING count(*) <= 64)
-         |SELECT b.doc_id AS batch_id, a.doc_id AS corpus_id,
-         |       count(*) AS shared
-         |FROM fp a JOIN fp b ON a.fp = b.fp
-         |  AND a.doc_id < 1000000 AND b.doc_id >= 1000000
-         |WHERE a.fp IN (SELECT fp FROM rare)
-         |GROUP BY b.doc_id, a.doc_id HAVING count(*) >= 2
-         |ORDER BY batch_id, corpus_id""".stripMargin,
-
-    // factored form H = log2(n) − Σ c·log2(c)/n mirrored exactly
-    "q_token_entropy" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tk
-        |  FROM documents),
-        |c AS (SELECT doc_id, tk, count(*) AS c FROM tok GROUP BY doc_id, tk),
-        |n AS (SELECT doc_id, sum(c) AS n FROM c GROUP BY doc_id)
-        |SELECT c.doc_id AS doc_id,
-        |       round(log2(n.n) - sum(c.c * log2(c.c)) / n.n, 6) AS entropy
-        |FROM c JOIN n ON c.doc_id = n.doc_id
-        |GROUP BY c.doc_id, n.n ORDER BY doc_id""".stripMargin,
-
-    "q_sample_weighted" ->
-      """WITH b AS (
-        |  SELECT doc_id, lang,
-        |    (strpos('0123456789abcdef', substr(md5('mix1' || text), 1, 1)) - 1) * 16
-        |    + (strpos('0123456789abcdef', substr(md5('mix1' || text), 2, 1)) - 1)
-        |      AS bucket
-        |  FROM documents)
-        |SELECT doc_id, lang FROM b
-        |WHERE bucket < round(CASE lang
-        |    WHEN 'en' THEN 1.0 WHEN 'de' THEN 0.5 WHEN 'fr' THEN 0.25
-        |    WHEN 'es' THEN 0.25 WHEN 'zh' THEN 0.125 ELSE 1.0 END * 256)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_pack_sequences" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id % 4 AS shard,
-        |    CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT *, sum(n_tokens) OVER (
-        |    PARTITION BY shard ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_after
-        |  FROM t)
-        |SELECT doc_id, shard, n_tokens,
-        |  CAST((cum_after - n_tokens) // 512 AS BIGINT) AS seq_first,
-        |  CAST((cum_after - n_tokens) % 512 AS BIGINT) AS seq_offset,
-        |  CAST(greatest((cum_after - 1) // 512,
-        |                (cum_after - n_tokens) // 512)
-        |       - (cum_after - n_tokens) // 512 + 1 AS BIGINT) AS n_seqs
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q_pack_emit" ->
-      """WITH t AS (
-        |  SELECT doc_id, doc_id % 4 AS shard,
-        |    string_split(trim(text), ' ') AS toks FROM documents),
-        |c AS (
-        |  SELECT *, CAST(len(toks) AS BIGINT) AS n,
-        |    CAST(sum(len(toks)) OVER (
-        |      PARTITION BY shard ORDER BY doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - len(toks)
-        |      AS BIGINT) AS cb
-        |  FROM t WHERE len(toks) > 0),
-        |p AS (
-        |  SELECT shard, doc_id, toks, n, cb,
-        |    unnest(range(cb // 512, (cb + n - 1) // 512 + 1)) AS seq_id
-        |  FROM c),
-        |x AS (
-        |  SELECT shard, seq_id, doc_id, toks,
-        |    greatest(seq_id * 512 - cb, 0) AS ps,
-        |    least(n, (seq_id + 1) * 512 - cb) AS pe
-        |  FROM p)
-        |SELECT shard, CAST(seq_id AS BIGINT) AS seq_id,
-        |  string_agg(array_to_string(list_slice(toks, ps + 1, pe), ' '), ' '
-        |    ORDER BY doc_id) AS seq_text,
-        |  CAST(sum(pe - ps) AS BIGINT) AS n_seq_tokens,
-        |  string_agg(doc_id || ':' || ps || ':' || pe, ','
-        |    ORDER BY doc_id) AS doc_spans
-        |FROM x GROUP BY shard, seq_id
-        |ORDER BY shard, seq_id""".stripMargin,
-
-    "q_sample_exact" -> {
-      // 52-bit md5-prefix rank: 13 nibbles folded via strpos, exactly the
-      // engine-independent arithmetic hashRank52 computes
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
-      // ((…((n1)*16 + n2)*16 + n3)…)*16 + n13 — the hashRank52 fold
-      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-      s"""WITH b AS (
-         |  SELECT doc_id, lang,
-         |    md5('ev1' || text) AS h
-         |  FROM documents),
-         |r AS (
-         |  SELECT doc_id, lang, $folded AS rk,
-         |    row_number() OVER (PARTITION BY lang ORDER BY $folded, doc_id)
-         |      AS rn
-         |  FROM b)
-         |SELECT doc_id, lang FROM r WHERE rn <= 20
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q_bpe_merges" -> bpeOracle(6,
-      """SELECT step, l AS merge_left, r AS merge_right, freq
-        |FROM (__BESTS__) ORDER BY step""".stripMargin),
-
-    "q_bpe_tokens" -> bpeOracle(6,
-      """SELECT d.doc_id,
-        |  CAST(sum(len(list_filter(regexp_split_to_array(v.syms, chr(1) || '+'),
-        |    x -> x <> ''))) AS BIGINT) AS bpe_tokens
-        |FROM (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-        |      FROM documents) d
-        |JOIN v6 v USING (word)
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin),
-
-    "q_temperature_sample" -> {
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
-      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-      // sqrt (not pow) is correctly rounded on both engines; decimal sum
-      // of the weights kills addition-order drift at the floor boundary
-      s"""WITH sizes AS (SELECT lang AS seg, count(*) AS n FROM documents GROUP BY 1),
-         |w AS (SELECT seg, n, sqrt(CAST(n AS DOUBLE)) AS wr FROM sizes),
-         |tot AS (SELECT CAST(sum(CAST(wr AS DECIMAL(30,12))) AS DOUBLE) AS t FROM w),
-         |ex AS (SELECT seg, n, 200 * wr / t AS e FROM w, tot),
-         |b AS (SELECT seg, n, CAST(floor(e) AS BIGINT) AS base, e - floor(e) AS rem FROM ex),
-         |lv AS (SELECT 200 - sum(base) AS leftover FROM b),
-         |c AS (SELECT seg, n, rem, least(base + CASE WHEN
-         |        row_number() OVER (ORDER BY rem DESC, seg) <= leftover
-         |        THEN 1 ELSE 0 END, n) AS cap0 FROM b, lv),
-         |su AS (SELECT 200 - sum(cap0) AS surplus FROM c),
-         |q AS (SELECT seg, cap0 + greatest(0, least(n - cap0,
-         |        surplus - coalesce(sum(n - cap0) OVER (
-         |          ORDER BY rem DESC, seg
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)))
-         |        AS quota FROM c, su),
-         |r AS (SELECT doc_id, lang,
-         |        row_number() OVER (PARTITION BY lang ORDER BY $folded, doc_id) AS rn
-         |      FROM (SELECT doc_id, lang,
-         |              md5('graft' || CAST(doc_id AS VARCHAR)) AS h
-         |            FROM documents))
-         |SELECT doc_id, lang FROM r JOIN q ON r.lang = q.seg
-         |WHERE rn <= quota ORDER BY doc_id""".stripMargin
-    },
-
-    "q_cap_tokens" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, n_chars,
-        |    CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT *, sum(n_tokens) OVER (
-        |    PARTITION BY lang ORDER BY n_chars DESC, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
-        |    AS cum_before
-        |  FROM t)
-        |SELECT doc_id, lang, n_tokens FROM c
-        |WHERE cum_before < 3000
-        |ORDER BY doc_id""".stripMargin,
-
-    // step = 32 - 8 = 24; starts are 0,24,48,… up to len - overlap - 1
-    // (range stop is exclusive → +1); chunk_id = start/step
-    "q_chunk_docs" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-        |s AS (
-        |  SELECT doc_id, toks,
-        |    unnest(range(0, greatest(len(toks) - 8 - 1, 0) + 1, 24)) AS strt
-        |  FROM t)
-        |SELECT doc_id, CAST(strt // 24 AS INTEGER) AS chunk_id,
-        |  array_to_string(list_slice(toks, strt + 1,
-        |    least(strt + 32, len(toks))), ' ') AS chunk_text,
-        |  CAST(least(32, len(toks) - strt) AS INTEGER) AS n_chunk_tokens
-        |FROM s ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q_top_ngrams" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    CASE WHEN len(t) >= 2 THEN
-        |      list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])
-        |    ELSE [array_to_string(t, ' ')] END)) AS s
-        |  FROM toks)
-        |SELECT s AS ngram, count(*) AS doc_freq FROM sh
-        |GROUP BY 1 ORDER BY doc_freq DESC, ngram LIMIT 100""".stripMargin,
-
-    "q_unigram_logprob" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
-        |  FROM documents),
-        |uni AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
-        |tot AS (SELECT sum(cnt) AS total FROM uni),
-        |vocab AS (SELECT token, cnt FROM uni ORDER BY cnt DESC, token LIMIT 16)
-        |SELECT t.doc_id,
-        |  round(avg(ln(coalesce(CAST(v.cnt AS DOUBLE), 0.5) / total)), 4)
-        |    AS avg_logprob
-        |FROM tok t LEFT JOIN vocab v USING (token), tot
-        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-
-    // decimal(30,12) partial sums on both sides kill addition-order
-    // drift; cosine rounds to 4 BEFORE the threshold so the cut is
-    // engine-deterministic
-    "q_tfidf_pairs" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 500),
-        |tok AS (SELECT doc_id, unnest(string_split(trim(text), ' ')) AS term FROM d),
-        |post AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(*) AS doc_freq FROM post
-        |          GROUP BY 1 HAVING count(*) <= 1000),
-        |n AS (SELECT count(DISTINCT doc_id) AS nd FROM post),
-        |w AS (SELECT p.doc_id, p.term,
-        |        p.tf * ln(CAST(nd AS DOUBLE) / doc_freq) AS w
-        |      FROM post p JOIN dfreq USING (term), n),
-        |nrm AS (SELECT doc_id,
-        |          CAST(sum(CAST(w * w AS DECIMAL(30,12))) AS DOUBLE) AS n2
-        |        FROM w GROUP BY 1),
-        |dots AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |           CAST(sum(CAST(a.w * b.w AS DECIMAL(30,12))) AS DOUBLE) AS dot
-        |         FROM w a JOIN w b USING (term)
-        |         WHERE a.doc_id < b.doc_id GROUP BY 1, 2),
-        |cosd AS (SELECT id_a, id_b,
-        |           round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 4) AS cosine
-        |         FROM dots
-        |         JOIN nrm na ON id_a = na.doc_id
-        |         JOIN nrm nb ON id_b = nb.doc_id)
-        |SELECT id_a, id_b, cosine FROM cosd
-        |WHERE cosine >= 0.85 ORDER BY id_a, id_b""".stripMargin,
-
-    // constants spelled as the same double folds Spark performs
-    // ((1.2 + 1.0), 1 - 0.75) so both engines evaluate bit-identical
-    // expressions before the decimal partial sum and round(4)
-    "q_bm25_topk" -> Bm25Sql,
-
-    "q_ql_topk" -> QlTopkSql,
-
-    "q_bm25_bulk" ->
-      """WITH q(query_id, qtext) AS (VALUES
-        |  (1, 'vector join'), (2, 'slow'), (3, 'join slow vector')),
-        |qt AS (SELECT DISTINCT query_id,
-        |         unnest(string_split(qtext, ' ')) AS term FROM q),
-        |tok AS (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
-        |lens AS (SELECT doc_id, len(t) AS dl FROM tok),
-        |stats AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM lens),
-        |post AS (SELECT doc_id, term, count(*) AS tf
-        |         FROM (SELECT doc_id, unnest(t) AS term FROM tok)
-        |         WHERE term IN (SELECT term FROM qt) GROUP BY 1, 2),
-        |dfreq AS (SELECT term, count(*) AS doc_freq FROM post GROUP BY 1),
-        |scored AS (
-        |  SELECT qt.query_id, p.doc_id,
-        |    round(CAST(sum(CAST(
-        |      ln(1.0 + (n_docs - doc_freq + 0.5) / (doc_freq + 0.5))
-        |        * p.tf * (1.2 + 1.0)
-        |        / (p.tf + 1.2 * (1.0 - 0.75 + 0.75 * l.dl / avgdl))
-        |      AS DECIMAL(30,12))) AS DOUBLE), 4) AS score
-        |  FROM post p JOIN lens l USING (doc_id)
-        |  JOIN dfreq USING (term) JOIN qt USING (term), stats
-        |  GROUP BY qt.query_id, p.doc_id)
-        |SELECT query_id, doc_id, score, "rank" FROM (
-        |  SELECT query_id, doc_id, score,
-        |    CAST(row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score DESC, doc_id) AS INTEGER) AS "rank"
-        |  FROM scored)
-        |WHERE "rank" <= 10 ORDER BY query_id, "rank"""".stripMargin,
-
-    "q_tfidf_topk" -> TfidfTopkSql,
-
-    // RRF: re-rank the two bounded rankings above, fuse by
-    // 1/(60+rank) through decimal partials, round(6) before the cut
-    "q_hybrid_rank" ->
-      s"""WITH u AS (
-         |  SELECT 'bm' AS src, doc_id, score FROM ($Bm25Sql)
-         |  UNION ALL
-         |  SELECT 'tf' AS src, doc_id, score FROM ($TfidfTopkSql)),
-         |r AS (SELECT src, doc_id,
-         |        row_number() OVER (PARTITION BY src
-         |                           ORDER BY score DESC, doc_id) AS rk
-         |      FROM u)
-         |SELECT doc_id,
-         |  round(CAST(sum(CAST(CAST(1.0 AS DOUBLE) / (60 + rk)
-         |    AS DECIMAL(30,12))) AS DOUBLE), 6) AS rrf
-         |FROM r GROUP BY doc_id ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    "q_hybrid_rank3" ->
-      s"""WITH u AS (
-         |  SELECT 'bm' AS src, doc_id, score FROM ($Bm25Sql)
-         |  UNION ALL
-         |  SELECT 'tf' AS src, doc_id, score FROM ($TfidfTopkSql)
-         |  UNION ALL
-         |  SELECT 'ql' AS src, doc_id, score FROM ($QlTopkSql)),
-         |r AS (SELECT src, doc_id,
-         |        row_number() OVER (PARTITION BY src
-         |                           ORDER BY score DESC, doc_id) AS rk
-         |      FROM u)
-         |SELECT doc_id,
-         |  round(CAST(sum(CAST(CAST(1.0 AS DOUBLE) / (60 + rk)
-         |    AS DECIMAL(30,12))) AS DOUBLE), 6) AS rrf
-         |FROM r GROUP BY doc_id ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    // same scored CTE as q_unigram_logprob; terciles via quantile_cont
-    // (Spark percentile's interpolation rule), strict > comparisons on
-    // the round(4) scores
-    "q_ppl_buckets" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split(trim(text), ' ')) AS token
-        |  FROM documents),
-        |uni AS (SELECT token, count(*) AS cnt FROM tok GROUP BY 1),
-        |tot AS (SELECT sum(cnt) AS total FROM uni),
-        |vocab AS (SELECT token, cnt FROM uni ORDER BY cnt DESC, token LIMIT 16),
-        |scored AS (
-        |  SELECT t.doc_id,
-        |    round(avg(ln(coalesce(CAST(v.cnt AS DOUBLE), 0.5) / total)), 4)
-        |      AS avg_logprob
-        |  FROM tok t LEFT JOIN vocab v USING (token), tot
-        |  GROUP BY t.doc_id),
-        |sl AS (
-        |  SELECT s.doc_id, d.lang, s.avg_logprob
-        |  FROM scored s JOIN documents d USING (doc_id)),
-        |cuts AS (
-        |  SELECT lang,
-        |    quantile_cont(avg_logprob, 1.0/3) AS lo,
-        |    quantile_cont(avg_logprob, 2.0/3) AS hi
-        |  FROM sl GROUP BY lang)
-        |SELECT sl.doc_id, sl.lang, sl.avg_logprob,
-        |  CASE WHEN sl.avg_logprob > c.hi THEN 'head'
-        |       WHEN sl.avg_logprob > c.lo THEN 'middle'
-        |       ELSE 'tail' END AS ppl_bucket
-        |FROM sl JOIN cuts c USING (lang)
-        |ORDER BY sl.doc_id""".stripMargin,
-
-    // bigram Stupid-Backoff mirror: zipped-unnest positions, lag via
-    // (doc, i-1) self-join, top-64 bigrams with deterministic ties,
-    // CASE per scoring branch (seen bigram / first token / backoff)
-    "q_bigram_logprob" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-        |pos AS (
-        |  SELECT doc_id, unnest(toks) AS w,
-        |         unnest(range(1, len(toks) + 1)) AS i
-        |  FROM t),
-        |uni AS (SELECT w AS token, count(*) AS cnt FROM pos GROUP BY 1),
-        |tot AS (SELECT sum(cnt) AS total FROM uni),
-        |vocab AS (SELECT token, cnt FROM uni ORDER BY cnt DESC, token LIMIT 16),
-        |pr AS (
-        |  SELECT a.doc_id, a.i, a.w, b.w AS prev
-        |  FROM pos a LEFT JOIN pos b ON b.doc_id = a.doc_id AND b.i = a.i - 1),
-        |bc AS (
-        |  SELECT prev AS w1, w AS w2, count(*) AS bcnt FROM pr
-        |  WHERE prev IN (SELECT token FROM vocab)
-        |    AND w IN (SELECT token FROM vocab)
-        |  GROUP BY 1, 2),
-        |bt AS (SELECT w1, w2, bcnt FROM bc ORDER BY bcnt DESC, w1, w2 LIMIT 64),
-        |sc AS (
-        |  SELECT pr.doc_id,
-        |    CASE WHEN bt.bcnt IS NOT NULL
-        |         THEN ln(CAST(bt.bcnt AS DOUBLE) / pv.cnt)
-        |         ELSE ln((CASE WHEN pr.prev IS NULL THEN 1.0 ELSE 0.4 END)
-        |                 * coalesce(CAST(vw.cnt AS DOUBLE), 0.5) / tot.total)
-        |    END AS lp
-        |  FROM pr
-        |  LEFT JOIN vocab vw ON vw.token = pr.w
-        |  LEFT JOIN vocab pv ON pv.token = pr.prev
-        |  LEFT JOIN bt ON bt.w1 = pr.prev AND bt.w2 = pr.w, tot)
-        |SELECT doc_id, round(avg(lp), 4) AS avg_bigram_logprob
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // drift mirror: the q_profile per-column branch generator over the
-    // two snapshots, joined; deltas/flags from the ROUNDED profile
-    // outputs exactly as the operator computes them
-    "q_profile_drift" -> {
-      val cols = Seq(
-        ("o_orderkey", true), ("o_custkey", true), ("o_orderstatus", false),
-        ("o_totalprice", true), ("o_orderdate", false), ("o_orderpriority", false))
-      def prof(alias: String, from: String) = {
-        val branches = cols.map { case (c, num) =>
-          val mn = if (num) s"CAST(min($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
-          val mx = if (num) s"CAST(max($c) AS DOUBLE)" else "CAST(NULL AS DOUBLE)"
-          val mean = if (num) s"round(avg($c), 4)" else "CAST(NULL AS DOUBLE)"
-          s"""SELECT '$c' AS "column",
-             | round(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END)/CAST(count(*) AS DOUBLE), 4) AS null_pct,
-             | count(DISTINCT $c) AS ndv, $mn AS mn, $mx AS mx, $mean AS mean
-             |FROM $from""".stripMargin
-        }
-        s"$alias AS (${branches.mkString("\nUNION ALL\n")})"
-      }
-      s"""WITH ${prof("b", "orders")},
-         |${prof("c", "(SELECT * FROM orders WHERE o_totalprice < 100000.0)")}
-         |SELECT b."column", TRUE AS present_both,
-         |  CAST(FALSE AS VARCHAR) AS dtype_changed,
-         |  b.null_pct AS base_null_pct, c.null_pct AS cur_null_pct,
-         |  round(c.null_pct - b.null_pct, 4) AS null_pct_delta,
-         |  round(c.null_pct - b.null_pct, 4) <= 0.05 AS ok_nulls,
-         |  b.ndv AS base_ndv, c.ndv AS cur_ndv,
-         |  b.mean AS base_mean, c.mean AS cur_mean,
-         |  round(abs(c.mean - b.mean) / greatest(abs(b.mean), 1e-9), 4) AS mean_shift,
-         |  CAST(round(abs(c.mean - b.mean) / greatest(abs(b.mean), 1e-9), 4) <= 0.10
-         |       AS VARCHAR) AS ok_mean,
-         |  CAST((c.mn < b.mn OR c.mx > b.mx) AS VARCHAR) AS range_widened
-         |FROM b JOIN c ON c."column" = b."column"
-         |ORDER BY b."column"""".stripMargin
-    },
-
-    // Tukey fences: quantile_cont mirrors Spark percentile's exact
-    // interpolation (q_ppl_buckets precedent); comparisons use the
-    // ROUNDED fences on both sides
-    "q_outlier_flags" ->
-      """WITH q AS (
-        |  SELECT o_orderpriority,
-        |    round(quantile_cont(o_totalprice, 0.25)
-        |      - 1.5 * (quantile_cont(o_totalprice, 0.75)
-        |               - quantile_cont(o_totalprice, 0.25)), 4) AS lo,
-        |    round(quantile_cont(o_totalprice, 0.75)
-        |      + 1.5 * (quantile_cont(o_totalprice, 0.75)
-        |               - quantile_cont(o_totalprice, 0.25)), 4) AS hi
-        |  FROM orders GROUP BY o_orderpriority)
-        |SELECT o_orderkey, o.o_orderpriority, o_totalprice,
-        |  q.lo AS o_totalprice_lo, q.hi AS o_totalprice_hi,
-        |  (o_totalprice < q.lo OR o_totalprice > q.hi) AS o_totalprice_outlier
-        |FROM orders o JOIN q ON q.o_orderpriority = o.o_orderpriority
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // composed mirror: fold-key keep-first (q_dedup_fold), the five
-    // gopher signals as a WHERE (q_gopher_filter), the per-lang cumsum
-    // quota (q_cap_tokens), the md5-nibble split (q_split_assign)
-    "q_curation_e2e" ->
-      """WITH norm AS (
-        |  SELECT doc_id, text, lang, n_chars,
-        |    trim(regexp_replace(lower(strip_accents(text)), '\s+', ' ', 'g')) AS k
-        |  FROM documents),
-        |keep AS (SELECT min(doc_id) AS doc_id FROM norm GROUP BY k),
-        |surv AS (SELECT n.* FROM norm n JOIN keep USING (doc_id)),
-        |sig AS (
-        |  SELECT doc_id, lang, text, n_chars,
-        |    len(string_split(trim(text), ' ')) AS nw,
-        |    round(CAST(length(text) - (len(string_split(trim(text),' ')) - 1) AS DOUBLE)
-        |          / len(string_split(trim(text),' ')), 4) AS mwl,
-        |    round(CAST(len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS DOUBLE)
-        |          / greatest(length(text), 1), 4) AS pr,
-        |    len(list_filter(string_split(trim(text),' '),
-        |        w -> w IN ('the','a','an','of','and','to','in','is'))) AS stop,
-        |    round(1 - CASE WHEN len(string_split(trim(text),' ')) >= 2
-        |        THEN len(list_distinct(list_transform(
-        |               range(1, len(string_split(trim(text),' '))),
-        |               i -> string_split(trim(text),' ')[i] || ' ' ||
-        |                    string_split(trim(text),' ')[i+1])))
-        |        ELSE 1 END
-        |      / CAST(greatest(len(string_split(trim(text),' ')) - 1, 1) AS DOUBLE), 4)
-        |      AS d2
-        |  FROM surv),
-        |gated AS (
-        |  SELECT doc_id, lang, n_chars, text,
-        |    CAST(len(string_split(trim(text), ' ')) AS BIGINT) AS n_tokens
-        |  FROM sig
-        |  WHERE nw BETWEEN 25 AND 100000 AND mwl BETWEEN 3.0 AND 10.0
-        |    AND pr <= 0.2 AND stop >= 2 AND d2 <= 0.2),
-        |c AS (
-        |  SELECT *, sum(n_tokens) OVER (
-        |    PARTITION BY lang ORDER BY n_chars DESC, doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
-        |    AS cum_before
-        |  FROM gated)
-        |SELECT doc_id, lang, n_tokens,
-        |  CASE WHEN strpos('0123456789abcdef', substr(md5(text), 32, 1)) - 1 < 14
-        |       THEN 'train' ELSE 'val' END AS split_label
-        |FROM c WHERE cum_before < 3000
-        |ORDER BY doc_id""".stripMargin,
-
-    // the two-pass heavy hitter is EXACT under the guarantee, so the
-    // oracle is simply the exact top-20 (count desc, token asc)
-    "q_top_tokens_approx" ->
-      """SELECT t AS token, count(*) AS cnt
-        |FROM (SELECT unnest(string_split(trim(text), ' ')) AS t FROM documents)
-        |GROUP BY t
-        |ORDER BY cnt DESC, token
-        |LIMIT 20""".stripMargin,
-
-    // incremental near-dup mirror: the q_dedup_minhash sig/banding CTEs
-    // verbatim (already engine-validated), then band-collision pairs
-    // verified by per-lane signature agreement / 16 — the MinHash
-    // Jaccard estimator recomputed exactly
-    "q_dedup_minhash_incr" -> {
-      val nibSh = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(shingle), $i, 1)) - 1)"
-      val foldSh = (2 to 13).foldLeft(nibSh(1))((acc, i) => s"($acc * 16 + ${nibSh(i)})")
-      val nibK = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(md5(kstr), $i, 1)) - 1)"
-      val foldK = (2 to 13).foldLeft(nibK(1))((acc, i) => s"($acc * 16 + ${nibK(i)})")
-      s"""WITH t AS (
-         |  SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents),
-         |s AS (
-         |  SELECT doc_id, toks,
-         |    unnest(range(1, greatest(len(toks) - 2, 1) + 1)) AS i
-         |  FROM t),
-         |sh AS (
-         |  SELECT doc_id,
-         |    array_to_string(
-         |      list_slice(toks, i, i + least(3, len(toks)) - 1), ' ') AS shingle
-         |  FROM s),
-         |h AS (
-         |  SELECT doc_id, CAST($foldSh AS HUGEINT) AS h52 FROM sh),
-         |lanes AS (
-         |  SELECT doc_id, h52, unnest(range(0, 16)) AS lane FROM h),
-         |v AS (
-         |  SELECT doc_id, lane,
-         |    (h52 * (CAST('11400714819323198485' AS HUGEINT) + 2 * lane)
-         |      + CAST('14029467366897019727' AS HUGEINT) * (lane + 1))
-         |      % CAST('18446744073709551616' AS HUGEINT) AS vm
-         |  FROM lanes),
-         |sig AS (
-         |  SELECT doc_id, lane,
-         |    min(CAST(CASE WHEN vm >= CAST('9223372036854775808' AS HUGEINT)
-         |      THEN vm - CAST('18446744073709551616' AS HUGEINT) ELSE vm END
-         |      AS BIGINT)) AS sv
-         |  FROM v GROUP BY doc_id, lane),
-         |bands AS (
-         |  SELECT doc_id, CAST(lane // 4 AS INT) AS band,
-         |    string_agg(CAST(sv AS VARCHAR), ',' ORDER BY lane) AS lanes_str
-         |  FROM sig GROUP BY doc_id, lane // 4),
-         |keyed AS (
-         |  SELECT doc_id, band, band || ':' || lanes_str AS kstr FROM bands),
-         |buckets AS (
-         |  SELECT doc_id, band, CAST($foldK AS BIGINT) AS bucket FROM keyed),
-         |pairs AS (
-         |  SELECT DISTINCT b.doc_id AS batch_id, c.doc_id AS corpus_id
-         |  FROM buckets b JOIN buckets c
-         |    ON c.band = b.band AND c.bucket = b.bucket
-         |   AND c.doc_id <> b.doc_id),
-         |est AS (
-         |  SELECT p.batch_id, p.corpus_id,
-         |    round(sum(CASE WHEN sb.sv = sc.sv THEN 1 ELSE 0 END) / 16.0, 4)
-         |      AS est_jaccard
-         |  FROM pairs p
-         |  JOIN sig sb ON sb.doc_id = p.batch_id
-         |  JOIN sig sc ON sc.doc_id = p.corpus_id AND sc.lane = sb.lane
-         |  GROUP BY p.batch_id, p.corpus_id)
-         |SELECT batch_id, corpus_id, est_jaccard FROM est
-         |WHERE est_jaccard >= 0.5
-         |ORDER BY batch_id, corpus_id""".stripMargin
-    },
-
-    // two exact GD steps of the logistic fit, fully mirrored: md5-bucket
-    // features with counts/n, bias as the x=1 sentinel at bucket -1,
-    // step 1 closed-form from σ(0)=0.5, step 2 re-deriving margins from
-    // w1 — Spark's forward pass is the native clf_score but the algebra
-    // (bias + Σ x·w) is identical, round(6) absorbs float association
-    "q_clf_train" -> {
-      val bkt = (t: String) =>
-        s"(strpos('0123456789abcdef', substr(md5('graft' || $t), 1, 1)) - 1) * 16" +
-          s" + (strpos('0123456789abcdef', substr(md5('graft' || $t), 2, 1)) - 1)"
-      s"""WITH tok AS (
-         |  SELECT doc_id, CAST(doc_id % 2 AS DOUBLE) AS y,
-         |         unnest(string_split(trim(text), ' ')) AS t
-         |  FROM documents WHERE text IS NOT NULL),
-         |b AS (SELECT doc_id, y, ${bkt("t")} AS bkt FROM tok),
-         |cnt AS (SELECT doc_id, y, bkt, count(*) AS c FROM b GROUP BY 1, 2, 3),
-         |nt AS (SELECT doc_id, count(*) AS n FROM b GROUP BY doc_id),
-         |feats AS (
-         |  SELECT cnt.doc_id, cnt.y, cnt.bkt, cnt.c / CAST(nt.n AS DOUBLE) AS x
-         |  FROM cnt JOIN nt ON nt.doc_id = cnt.doc_id
-         |  UNION ALL
-         |  SELECT DISTINCT doc_id, y, -1 AS bkt, 1.0 AS x FROM b),
-         |nd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM feats),
-         |w1 AS (
-         |  SELECT bkt, -(sum(x * (0.5 - y)) / (SELECT n FROM nd)) AS w
-         |  FROM feats GROUP BY bkt),
-         |e2 AS (
-         |  SELECT f.doc_id, f.y,
-         |         1.0 / (1.0 + exp(-sum(f.x * w1.w))) - f.y AS err
-         |  FROM feats f JOIN w1 ON w1.bkt = f.bkt
-         |  GROUP BY f.doc_id, f.y),
-         |w2 AS (
-         |  SELECT f.bkt,
-         |         any_value(w1.w) - sum(f.x * e2.err) / (SELECT n FROM nd) AS w
-         |  FROM feats f
-         |  JOIN w1 ON w1.bkt = f.bkt
-         |  JOIN e2 ON e2.doc_id = f.doc_id
-         |  GROUP BY f.bkt)
-         |SELECT r.range AS b, round(coalesce(w2.w, 0), 6) AS weight
-         |FROM range(-1, 256) r LEFT JOIN w2 ON w2.bkt = r.range
-         |ORDER BY b""".stripMargin
-    },
-
-    // corpus overlap mirror: the q_ngram_jaccard shingle CTE (k=3,
-    // whole-text fallback, per-doc distinct) hashed through the
-    // hashRank52 13-nibble fold, then exact distinct membership flags
-    "q_corpus_overlap" -> {
-      val nib = (i: Int) =>
-        s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1)"
-      val folded = (2 to 13).foldLeft(nib(1))((acc, i) => s"($acc * 16 + ${nib(i)})")
-      s"""WITH toks AS (
-         |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents
-         |  WHERE text IS NOT NULL),
-         |sh AS (
-         |  SELECT doc_id, unnest(list_distinct(
-         |    CASE WHEN len(t) >= 3 THEN
-         |      list_transform(range(1, len(t) - 1),
-         |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-         |    ELSE [array_to_string(t, ' ')] END)) AS s
-         |  FROM toks),
-         |hs AS (SELECT doc_id, md5(s) AS h FROM sh),
-         |keys AS (SELECT doc_id, $folded AS hk FROM hs),
-         |flags AS (
-         |  SELECT hk, max(1) AS ia,
-         |         max(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END) AS ib
-         |  FROM keys GROUP BY hk),
-         |agg AS (
-         |  SELECT CAST(sum(ia) AS BIGINT) AS n_a, CAST(sum(ib) AS BIGINT) AS n_b,
-         |         CAST(sum(ia * ib) AS BIGINT) AS n_intersect
-         |  FROM flags)
-         |SELECT n_a, n_b, n_intersect,
-         |  n_a + n_b - n_intersect AS n_union,
-         |  round(n_intersect / CAST(greatest(n_a + n_b - n_intersect, 1) AS DOUBLE), 6) AS jaccard,
-         |  round(n_intersect / CAST(greatest(n_a, 1) AS DOUBLE), 6) AS containment_a,
-         |  round(n_intersect / CAST(greatest(n_b, 1) AS DOUBLE), 6) AS containment_b
-         |FROM agg""".stripMargin
-    },
-
-    // decontamination mirror: same shingle CTE as q_ngram_jaccard (already
-    // engine-validated); native xxhash64(shingle) equality is mirrored by
-    // string equality — identical semantics, collisions aside (2^-64)
-    "q_benchmark_overlap" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    CASE WHEN len(t) >= 3 THEN
-        |      list_transform(range(1, len(t) - 1),
-        |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [array_to_string(t, ' ')] END)) AS s
-        |  FROM toks),
-        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0),
-        |ov AS (
-        |  SELECT doc_id, count(*) AS c FROM sh JOIN bench USING (s) GROUP BY 1)
-        |SELECT d.doc_id, CAST(coalesce(ov.c, 0) AS BIGINT) AS overlap_ngrams
-        |FROM documents d LEFT JOIN ov ON ov.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q_decontaminate" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
-        |sh AS (
-        |  SELECT doc_id, unnest(list_distinct(
-        |    CASE WHEN len(t) >= 3 THEN
-        |      list_transform(range(1, len(t) - 1),
-        |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [array_to_string(t, ' ')] END)) AS s
-        |  FROM toks),
-        |bench AS (SELECT DISTINCT s FROM sh WHERE doc_id % 10 = 0),
-        |ov AS (
-        |  SELECT doc_id, count(*) AS c FROM sh JOIN bench USING (s) GROUP BY 1)
-        |SELECT d.doc_id, length(d.text) AS text_len
-        |FROM documents d LEFT JOIN ov ON ov.doc_id = d.doc_id
-        |WHERE coalesce(ov.c, 0) < 1
-        |ORDER BY d.doc_id""".stripMargin,
-
-    // exact shingle-jaccard is engine-independent: DuckDB mirrors the
-    // inverted-index join (shared-shingle counts / set sizes). Valid while
-    // maxDf (2000) exceeds the corpus's max shingle df — true at the
-    // driver's sf0.01 gate (500 docs).
-    "q_ngram_jaccard" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents),
-        |sh AS (
-        |  -- mirrors shingles_of: docs shorter than k collapse to ONE
-        |  -- whole-text shingle instead of producing no shingles at all
-        |  SELECT doc_id, unnest(list_distinct(
-        |    CASE WHEN len(t) >= 3 THEN
-        |      list_transform(range(1, len(t) - 1),
-        |        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-        |    ELSE [array_to_string(t, ' ')] END)) AS s
-        |  FROM toks),
-        |sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT id_a, id_b,
-        |  round(c / CAST(sa.sz + sb.sz - c AS DOUBLE), 4) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON sa.doc_id = id_a
-        |JOIN sizes sb ON sb.doc_id = id_b
-        |WHERE round(c / CAST(sa.sz + sb.sz - c AS DOUBLE), 4) >= 0.01
-        |ORDER BY jaccard DESC, id_a, id_b
-        |LIMIT 500""".stripMargin,
-
-    "q_embed_neardup" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
-        |FROM embeddings a, embeddings b
-        |WHERE a.vec_id < b.vec_id
-        |  AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) >= 0.4
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q_ann_topk" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 4) AS sim
-        |  FROM embeddings q, embeddings c
-        |  WHERE q.vec_id < 8 AND q.vec_id <> c.vec_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, sim,
-        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS "rank"
-        |  FROM scored)
-        |SELECT query_id, "rank", neighbor_id, sim FROM ranked
-        |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
-
-    // mirrors the native null contract: an invalid embedding (null/NaN/Inf
-    // lane, or a null vector) nulls every output; a zero vector passes
-    // through as zeros (x/0 would fabricate inf lanes)
-    // y_j = Σ_i b_j(i)·x_i with the formula basis; same per-lane double
-    // products, same sequential sum order, same float cast — and the
-    // same invalid-vector NULL branch as l2_normalize
-    "q_mat_project" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS e,
-        |         (embedding IS NULL
-        |          OR len(list_filter(embedding::DOUBLE[], x -> x IS NULL)) > 0
-        |          OR len(list_filter(embedding::DOUBLE[], x -> isnan(x) OR isinf(x))) > 0) AS bad
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT vec_id, bad,
-        |    CAST(list_sum(list_transform(range(1, 65), i -> ((((i-1)*2 + 1) % 7) - 3) * 0.25 * e[i])) AS REAL) AS p0,
-        |    CAST(list_sum(list_transform(range(1, 65), i -> ((((i-1)*3 + 1) % 7) - 3) * 0.25 * e[i])) AS REAL) AS p1,
-        |    CAST(list_sum(list_transform(range(1, 65), i -> ((((i-1)*4 + 1) % 7) - 3) * 0.25 * e[i])) AS REAL) AS p2,
-        |    CAST(list_sum(list_transform(range(1, 65), i -> ((((i-1)*5 + 1) % 7) - 3) * 0.25 * e[i])) AS REAL) AS p3
-        |  FROM s)
-        |SELECT vec_id,
-        |  CASE WHEN bad THEN NULL ELSE round(CAST(p0 AS DOUBLE), 6) END AS y0,
-        |  CASE WHEN bad THEN NULL ELSE round(CAST(p1 AS DOUBLE), 6) END AS y1,
-        |  CASE WHEN bad THEN NULL ELSE round(CAST(p2 AS DOUBLE), 6) END AS y2,
-        |  CASE WHEN bad THEN NULL ELSE round(CAST(p3 AS DOUBLE), 6) END AS y3
-        |FROM p ORDER BY vec_id""".stripMargin,
-
-    "q_embed_normalize" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS e,
-        |         (embedding IS NULL
-        |          OR len(list_filter(embedding::DOUBLE[], x -> x IS NULL)) > 0
-        |          OR len(list_filter(embedding::DOUBLE[], x -> isnan(x) OR isinf(x))) > 0) AS bad,
-        |         sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x*x))) AS nrm
-        |  FROM embeddings),
-        |n AS (
-        |  SELECT vec_id, CASE WHEN bad THEN NULL ELSE nrm END AS nrm,
-        |         CASE WHEN bad THEN NULL
-        |              WHEN nrm = 0 THEN list_transform(e, x -> CAST(0 AS REAL))
-        |              ELSE list_transform(e, x -> CAST(x / nrm AS REAL)) END AS ne
-        |  FROM s)
-        |SELECT vec_id, round(nrm, 6) AS l2_before,
-        |  round(sqrt(list_sum(list_transform(ne, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS l2_after,
-        |  round(CAST(ne[1] AS DOUBLE), 6) AS lane0
-        |FROM n ORDER BY vec_id""".stripMargin,
-
-    // same invalid-embedding contract as q_embed_normalize; a zero vector
-    // quantizes to scale=0 with all-zero lanes (127/0 would be inf)
-    "q_embed_quantize" ->
-      """WITH s AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS e,
-        |         (embedding IS NULL
-        |          OR len(list_filter(embedding::DOUBLE[], x -> x IS NULL)) > 0
-        |          OR len(list_filter(embedding::DOUBLE[], x -> isnan(x) OR isinf(x))) > 0) AS bad,
-        |         list_max(list_transform(embedding::DOUBLE[], x -> abs(x))) AS mx
-        |  FROM embeddings),
-        |t AS (
-        |  SELECT vec_id, e, bad,
-        |         CASE WHEN bad THEN NULL WHEN mx = 0 THEN 0.0 ELSE 127.0 / mx END AS scale
-        |  FROM s),
-        |q AS (
-        |  SELECT vec_id, scale,
-        |         CASE WHEN bad THEN NULL
-        |              WHEN scale = 0 THEN list_transform(e, x -> 0)
-        |              ELSE list_transform(e, x -> CAST(least(greatest(trunc(x * scale), -127), 127) AS INTEGER)) END AS qv
-        |  FROM t)
-        |SELECT vec_id, round(scale, 6) AS q_scale,
-        |  CAST(list_min(qv) AS INTEGER) AS q_min,
-        |  CAST(list_max(qv) AS INTEGER) AS q_max,
-        |  CAST(list_sum(qv) AS INTEGER) AS q_sum
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    "q_binary_meta" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
-        |       sha256(text) AS content_sha
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // mirrors frameSampleStub's byte windows: pos = trunc(1 + idx*(n-64)/3.0)
-    // (Spark's double→int cast truncates; DuckDB's rounds, hence trunc()),
-    // bytes sliced via hex so multibyte text can't skew offsets
-    "q_frame_sample" ->
-      """WITH m AS (
-        |  SELECT doc_id, hex(encode(text)) AS h, octet_length(encode(text)) AS n
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, h, n, unnest(range(0, 4)) AS frame_idx FROM m),
-        |c AS (
-        |  SELECT doc_id, frame_idx, n, h,
-        |    CAST(trunc(1 + frame_idx * greatest((n - 64) / 3.0, 0)) AS BIGINT) AS pos
-        |  FROM f)
-        |SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-        |  CAST(least(64, n - pos + 1) AS INTEGER) AS frame_len,
-        |  substr(h, CAST((pos - 1) * 2 + 1 AS BIGINT), 128) AS frame_hex
-        |FROM c ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // mirrors Multimodal.stubDecode: w = 1+(len*31+id)%64, h = 1+(len*17+7id)%64
-    "q_multimodal_features" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
-        |       sha256(text) AS content_sha,
-        |       CAST(1 + (octet_length(encode(text))*31 + doc_id) % 64 AS INTEGER) AS width,
-        |       CAST(1 + (octet_length(encode(text))*17 + doc_id*7) % 64 AS INTEGER) AS height
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // planted-PNG decode: dimensions are a pure function of doc_id by
-    // construction — the decode path must recover exactly these
-    "q_image_decode" ->
-      """SELECT doc_id, CAST(1 + doc_id % 64 AS INTEGER) AS width,
-        |       CAST(1 + (doc_id * 7) % 64 AS INTEGER) AS height
-        |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
-
-    // mirrors Multimodal.fitDims (integer floor division) + the constant
-    // gray's luminance bin v*8/256 with v = (doc_id*37)%256
-    "q_image_resize" ->
-      """WITH src AS (
-        |  SELECT doc_id, 1 + (doc_id % 97) AS w, 1 + ((doc_id*7) % 83) AS h,
-        |         (doc_id*37) % 256 AS v
-        |  FROM documents WHERE doc_id < 100)
-        |SELECT doc_id,
-        |  CAST(CASE WHEN w <= 40 AND h <= 30 THEN w
-        |            WHEN w*30 >= h*40 THEN 40
-        |            ELSE greatest(1, (w*30) // h) END AS INTEGER) AS width,
-        |  CAST(CASE WHEN w <= 40 AND h <= 30 THEN h
-        |            WHEN w*30 >= h*40 THEN greatest(1, (h*40) // w)
-        |            ELSE 30 END AS INTEGER) AS height,
-        |  CAST((v * 8) // 256 AS INTEGER) AS lum_bin
-        |FROM src ORDER BY doc_id""".stripMargin,
-
-    // mirrors Multimodal.sampleIndex (all frames when n<=4, else floor
-    // i*(n-1)/3 anchors) + gifFrameGray(doc_id, f) = (doc_id*31+f*40)%256
-    "q_frame_extract" ->
-      """WITH src AS (
-        |  SELECT doc_id, 4 + (doc_id % 13) AS w, 3 + (doc_id % 11) AS h,
-        |         1 + (doc_id % 6) AS n
-        |  FROM documents WHERE doc_id < 100),
-        |f AS (
-        |  SELECT doc_id, w, h, n, unnest(range(0, 4)) AS i FROM src)
-        |SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-        |  CAST(CASE WHEN n <= 4 THEN i ELSE (i * (n-1)) // 3 END AS INTEGER) AS src_frame,
-        |  CAST(n AS INTEGER) AS n_frames, CAST(w AS INTEGER) AS frame_w,
-        |  CAST(h AS INTEGER) AS frame_h,
-        |  CAST((((doc_id*31 + (CASE WHEN n <= 4 THEN i ELSE (i*(n-1))//3 END)*40) % 256) * 8) // 256 AS INTEGER) AS lum_bin
-        |FROM f WHERE i < least(4, n)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "q_ann_lsh_pairs" ->
-      """WITH planted AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000 AS vec_id,
-        |         list_transform(embedding, x -> x * 2) AS embedding
-        |  FROM embeddings)
-        |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) AS sim
-        |FROM planted a, planted b
-        |WHERE a.vec_id < b.vec_id
-        |  AND round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 4) >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // the planted WAVs' decoded features are pure arithmetic in doc_id:
-    // constant amplitude A per channel → rms = peak = A exactly; mono
-    // rows carry NULL channel-1 stats
-    "q_audio_features" ->
-      """SELECT doc_id,
-        |       TRUE AS decoded,
-        |       CAST(1 + doc_id % 2 AS INTEGER) AS channels,
-        |       CAST(8000 AS INTEGER) AS sample_rate,
-        |       CAST(50 + (doc_id % 7) * 10 AS BIGINT) AS duration_ms,
-        |       CAST(128 + 16 * ((doc_id * 31) % 900) AS DOUBLE) AS rms0,
-        |       CAST(128 + 16 * ((doc_id * 31) % 900) AS DOUBLE) AS peak0,
-        |       CASE WHEN doc_id % 2 = 1
-        |            THEN CAST(128 + 16 * ((doc_id * 31 + 1) % 900) AS DOUBLE) END AS rms1,
-        |       CASE WHEN doc_id % 2 = 1
-        |            THEN CAST(128 + 16 * ((doc_id * 31 + 1) % 900) AS DOUBLE) END AS peak1
-        |FROM documents WHERE doc_id < 200
-        |ORDER BY doc_id""".stripMargin,
-
-    // zipped unnests give (label, dim, component); double avg per
-    // (label, dim), list reassembled in dim order, cosine in double —
-    // identical arithmetic to the Spark plan
-    "q_prototypicality" ->
-      """WITH ex AS (
-        |  SELECT label, unnest(embedding) AS x,
-        |         unnest(range(1, len(embedding) + 1)) AS d
-        |  FROM embeddings),
-        |c AS (
-        |  SELECT label, d, avg(CAST(x AS DOUBLE)) AS m
-        |  FROM ex GROUP BY label, d),
-        |cent AS (
-        |  SELECT label, list(m ORDER BY d) AS centroid FROM c GROUP BY label)
-        |SELECT e.vec_id, e.label,
-        |  round(list_cosine_similarity(e.embedding::DOUBLE[], cent.centroid), 4)
-        |    AS proto_score
-        |FROM embeddings e JOIN cent ON cent.label = e.label
-        |ORDER BY e.vec_id""".stripMargin,
-
-    // exhaustive IVF == brute force (every cell probed): the exact top-k
-    // oracle is the SAME SQL as q_ann_topk — identical query set, k, sim
-    // rounding and tie-break
-    "q_ann_ivf_exhaustive" ->
-      """WITH scored AS (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 4) AS sim
-        |  FROM embeddings q, embeddings c
-        |  WHERE q.vec_id < 8 AND q.vec_id <> c.vec_id),
-        |ranked AS (
-        |  SELECT query_id, neighbor_id, sim,
-        |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS "rank"
-        |  FROM scored)
-        |SELECT query_id, "rank", neighbor_id, sim FROM ranked
-        |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
-
-    // exact-cosine cluster mirror: canonical = min vec_id within cosine
-    // ≥ 0.9 (self included, so singletons label themselves — one-hop ==
-    // connected components because only the planted identity pairs
-    // qualify); survivor = best quality per cluster, min-id tie-break
-    "q_semantic_retain" ->
-      """WITH planted AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000 AS vec_id,
-        |         list_transform(embedding, x -> x * 2) AS embedding
-        |  FROM embeddings),
-        |q AS (SELECT vec_id, embedding, vec_id % 7 AS quality FROM planted),
-        |cl AS (
-        |  SELECT p.vec_id, p.quality,
-        |    (SELECT min(q2.vec_id) FROM q q2
-        |     WHERE round(list_cosine_similarity(
-        |             p.embedding::DOUBLE[], q2.embedding::DOUBLE[]), 4) >= 0.9)
-        |      AS canonical
-        |  FROM q p),
-        |r AS (
-        |  SELECT vec_id, quality,
-        |    row_number() OVER (PARTITION BY canonical
-        |      ORDER BY quality DESC, vec_id) AS rn
-        |  FROM cl)
-        |SELECT vec_id, quality FROM r WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    // exact keep-first oracle: drop any row with an earlier row at cosine
-    // ≥ 0.9 — by the x2-scaling construction that is exactly the planted
-    // copies, and LSH finds every such pair (identical signatures)
-    "q_semantic_dedup" ->
-      """WITH planted AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 10000 AS vec_id,
-        |         list_transform(embedding, x -> x * 2) AS embedding
-        |  FROM embeddings)
-        |SELECT p.vec_id FROM planted p
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM planted q
-        |  WHERE q.vec_id < p.vec_id
-        |    AND round(list_cosine_similarity(
-        |          p.embedding::DOUBLE[], q.embedding::DOUBLE[]), 4) >= 0.9)
-        |ORDER BY vec_id""".stripMargin,
-
-    // exact cross-pairs oracle: recall 1.0 by the x2-scaling construction,
-    // and only the planted identity pairs clear the 0.9 threshold
-    "q_ann_lsh_incr" ->
-      """WITH batch AS (
-        |  SELECT vec_id + 10000 AS vec_id,
-        |         list_transform(embedding, x -> x * 2) AS embedding
-        |  FROM embeddings WHERE vec_id < 10)
-        |SELECT b.vec_id AS batch_id, c.vec_id AS corpus_id,
-        |  round(list_cosine_similarity(b.embedding::DOUBLE[], c.embedding::DOUBLE[]), 4) AS sim
-        |FROM batch b, embeddings c
-        |WHERE round(list_cosine_similarity(b.embedding::DOUBLE[], c.embedding::DOUBLE[]), 4) >= 0.9
-        |ORDER BY batch_id, corpus_id""".stripMargin,
-
-    // text-equality mirror of the (length, xxhash64) fingerprint anti-join
-    // — identical results absent 64-bit collisions, which the testdata
-    // (and any planted case) cannot produce
-    "q_dedup_incremental" ->
-      """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < 250),
-        |planted AS (
-        |  SELECT doc_id + 100000 AS doc_id, text FROM corpus
-        |  ORDER BY doc_id LIMIT 10),
-        |batch AS (
-        |  SELECT doc_id, text FROM documents WHERE doc_id >= 250
-        |  UNION ALL SELECT doc_id, text FROM planted)
-        |SELECT b.doc_id FROM batch b
-        |WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.text = b.text)
-        |  AND NOT EXISTS (
-        |    SELECT 1 FROM batch b2 WHERE b2.text = b.text AND b2.doc_id < b.doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "q_scd2" ->
-      """WITH ch AS (
-        |  SELECT o_custkey AS custkey,
-        |         max_by(o_orderpriority, o_orderkey) AS priority,
-        |         o_orderdate AS effective_from
-        |  FROM orders GROUP BY o_custkey, o_orderdate),
-        |kept AS (
-        |  SELECT custkey, priority, effective_from FROM (
-        |    SELECT custkey, priority, effective_from,
-        |           lag(priority) OVER (PARTITION BY custkey ORDER BY effective_from) AS prev
-        |    FROM ch)
-        |  WHERE prev IS NULL OR prev <> priority)
-        |SELECT custkey, priority, effective_from,
-        |       lead(effective_from) OVER (PARTITION BY custkey ORDER BY effective_from)
-        |         AS effective_to
-        |FROM kept ORDER BY custkey, effective_from""".stripMargin,
-
-    // the per-key winner ranks by (version DESC, op-rank DESC with
-    // D=2 > U=1 > I=0) — the compactChangelog max_by mirrored
-    "q_cdc_apply" ->
-      s"""$CdcLastCte
-         |SELECT c_custkey AS custkey, c_acctbal AS acctbal,
-         |       c_mktsegment AS mktsegment
-         |FROM customer
-         |WHERE c_custkey NOT IN (SELECT custkey FROM last)
-         |UNION ALL
-         |SELECT custkey, acctbal, mktsegment FROM last WHERE op <> 'D'
-         |ORDER BY custkey""".stripMargin,
-
-    "q_cdc_compact" ->
-      s"""$CdcLastCte
-         |SELECT custkey, acctbal, mktsegment, op, version
-         |FROM last ORDER BY custkey""".stripMargin,
-
-    "q_asof_join" ->
-      """WITH o AS (
-        |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey,
-        |         max_by(o_totalprice, o_orderkey) AS o_totalprice
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT e.event_id, o.o_orderkey AS last_orderkey,
-        |       o.o_totalprice AS last_totalprice
-        |FROM events e ASOF LEFT JOIN o
-        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q_table_log_prune" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // the adopted table IS the parquet dir's rows — the original
-    // lineitem projection, bit for bit
-    "q_convert" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // the adopted partitioned lake filtered on its partition column —
-    // directory-encoded values must come back as real column values
-    "q_convert_partitioned" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price,
-        |       l_returnflag
-        |FROM lineitem
-        |WHERE l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // the multipart-checkpointed table is orders minus the dv-deleted
-    // k%100=0 band — state resolved through the parquet parts
-    "q_ckpt_multipart" ->
-      """SELECT o_orderkey AS k, o_totalprice::DOUBLE AS total,
-        |       o_orderstatus AS status
-        |FROM orders
-        |WHERE o_orderkey % 100 <> 0
-        |ORDER BY k""".stripMargin,
-
-    // the audited table is lineitem minus the two dv-erased keys; the
-    // oracle recounts per requested key over that filtered state
-    "q_erasure_audit" ->
-      """WITH audit("key") AS (VALUES (CAST(1 AS BIGINT)), (32), (33)),
-        |     live AS (SELECT l_orderkey FROM lineitem
-        |              WHERE l_orderkey NOT IN (1, 32))
-        |SELECT a."key",
-        |       CAST(coalesce(c.cnt, 0) AS BIGINT) AS surviving_rows
-        |FROM audit a
-        |LEFT JOIN (SELECT l_orderkey, count(*) AS cnt FROM live GROUP BY 1) c
-        |  ON a."key" = c.l_orderkey
-        |ORDER BY a."key"""".stripMargin,
-
-    // the metadata-only aggregate must equal DuckDB recomputing the
-    // same global aggregates from the raw rows (the staged table is the
-    // price projection of lineitem)
-    "q_meta_count" ->
-      """SELECT count(*) AS cnt,
-        |       count(l_extendedprice::DOUBLE) AS cnt_price,
-        |       min(l_extendedprice::DOUBLE) AS min_price,
-        |       max(l_extendedprice::DOUBLE) AS max_price
-        |FROM lineitem""".stripMargin,
-
-    // the connector twin reads the same staged layout through
-    // spark.read.format("graft") — same rows, same oracle
-    "q_sql_connector" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // the catalog twin: same rows again, by NAME through the V2 catalog
-    "q_catalog_sql" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // the persistent named view over the catalog table — per-order
-    // value through the stored definition (decimal(30,6) money sums
-    // both sides, the moneySum convention)
-    "q_view_sql" ->
-      """SELECT l_orderkey,
-        |  CAST(round(sum(CAST(l_extendedprice::DOUBLE AS DECIMAL(30,6))), 2) AS DOUBLE) AS order_value
-        |FROM lineitem
-        |GROUP BY l_orderkey
-        |ORDER BY l_orderkey""".stripMargin,
-
-    // the restored table IS the original projection
-    "q_table_log_restore" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // ingested exactly once despite the double run
-    "q_copy_into" ->
-      """SELECT * FROM nation ORDER BY n_nationkey""",
-
-    // the clone forked v2 (first band already deleted), then dv-deleted
-    // a second band against the inherited files
-    "q_table_log_clone" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)
-        |  AND NOT (l_extendedprice::DOUBLE BETWEEN 30000.0 AND 40000.0)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // replaceWhere: the band's rows are exactly the recomputed slice,
-    // everything outside the band is untouched
-    "q_replace_where" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE NOT (l_extendedprice::DOUBLE BETWEEN 20000.0 AND 30000.0)
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE l_extendedprice::DOUBLE BETWEEN 20000.0 AND 30000.0
-        |  AND l_linenumber = 1
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // rename: every lineitem row reads back under the new logical name
-    // inside the pruned band
-    "q_rename_column" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS unit_price
-        |FROM lineitem
-        |WHERE l_extendedprice::DOUBLE BETWEEN 10000.0 AND 30000.0
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // drop: the retired column vanishes from the projection
-    "q_drop_column" ->
-      """SELECT l_orderkey, l_extendedprice::DOUBLE AS unit_price
-        |FROM lineitem
-        |ORDER BY l_orderkey, unit_price""".stripMargin,
-
-    // state after the CoW DELETE commit (rows where the predicate was
-    // not TRUE survive)
-    "q_table_log_delete" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // SQL time travel reads the SAME snapshot as q_table_log_delete
-    "q_sql_timetravel" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // state after the CoW UPDATE commit on top of the delete
-    "q_table_log_update" ->
-      """WITH s2 AS (
-        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |  FROM lineitem
-        |  WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0))
-        |SELECT l_orderkey, l_linenumber,
-        |       CASE WHEN price > 50000.0 THEN price + 1000.0 ELSE price END AS price
-        |FROM s2
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // state after MERGE INTO: rows not matched by a source key survive
-    // as-is; every source row (matched replacement or fresh insert) is
-    // present verbatim
-    "q_merge_into" ->
-      """WITH s2 AS (
-        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |  FROM lineitem
-        |  WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)),
-        |s3 AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |         CASE WHEN price > 50000.0 THEN price + 1000.0 ELSE price END AS price
-        |  FROM s2),
-        |src AS (
-        |  SELECT DISTINCT l_orderkey, l_linenumber, 1.0 AS price
-        |  FROM lineitem WHERE l_orderkey % 97 = 0
-        |  UNION ALL
-        |  SELECT DISTINCT l_orderkey + 100000000, l_linenumber, 2.0
-        |  FROM lineitem WHERE l_orderkey % 101 = 0 AND l_linenumber = 1)
-        |SELECT s3.l_orderkey, s3.l_linenumber, s3.price FROM s3
-        |WHERE NOT EXISTS (SELECT 1 FROM src
-        |                  WHERE src.l_orderkey = s3.l_orderkey
-        |                    AND src.l_linenumber = s3.l_linenumber)
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, price FROM src
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // the IS NOT NULL slice: rows whose derived total survived the
-    // null-out rule (the file-level prune is a plan property, pinned in
-    // the query itself — the rowset is just the filter)
-    "q_null_prune" ->
-      """SELECT o_orderkey AS k, o_totalprice::DOUBLE AS total
-        |FROM orders
-        |WHERE o_orderkey % 5 <> 0
-        |ORDER BY k""".stripMargin,
-
-    // state after the SQL DML chain: delete, then windowed update, then
-    // merge (matched keys take the source row — including keys the
-    // delete removed and the merge re-inserts; synthetic keys insert)
-    "q_sql_dml" ->
-      """WITH t0 AS (
-        |  SELECT o_orderkey AS k, o_totalprice::DOUBLE AS total,
-        |         o_orderstatus AS status
-        |  FROM orders),
-        |t1 AS (SELECT * FROM t0 WHERE NOT (k % 10 = 0 AND status = 'F')),
-        |t2 AS (SELECT k,
-        |         CASE WHEN k BETWEEN 1000 AND 2000 THEN total + 1.0
-        |              ELSE total END AS total,
-        |         status FROM t1),
-        |src AS (
-        |  SELECT k, 7.0 AS total, status FROM t0 WHERE k % 97 = 0
-        |  UNION ALL
-        |  SELECT k + 2000000000, 9.0, 'N' FROM t0 WHERE k % 1000 = 0)
-        |SELECT k, total, status FROM src
-        |UNION ALL
-        |SELECT t2.k, t2.total, t2.status FROM t2
-        |LEFT JOIN src USING (k) WHERE src.k IS NULL
-        |ORDER BY k""".stripMargin,
-
-    // state after the conditioned FULL-SYNC merge: source rows verbatim
-    // (updates + inserts), plus unmatched target rows that escaped the
-    // delete window (status <> 'F'; NULL would also survive — the WHEN
-    // clause must prove the delete)
-    "q_merge_sync" ->
-      """WITH tgt AS (
-        |  SELECT o_orderkey AS k, o_totalprice::DOUBLE AS total,
-        |         o_orderstatus AS status
-        |  FROM orders),
-        |src AS (
-        |  SELECT k, total + 1.0 AS total, status FROM tgt WHERE k % 3 = 0
-        |  UNION ALL
-        |  SELECT k + 1000000000, 5.0, 'N' FROM tgt WHERE k % 1000 = 0)
-        |SELECT k, total, status FROM src
-        |UNION ALL
-        |SELECT t.k, t.total, t.status FROM tgt t
-        |LEFT JOIN src s USING (k)
-        |WHERE s.k IS NULL AND (t.status IS NULL OR t.status <> 'F')
-        |ORDER BY k""".stripMargin,
-
-    "q_merge_evolve" ->
-      """SELECT o_orderkey AS k,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN o_totalprice::DOUBLE * 2
-        |            ELSE o_totalprice::DOUBLE END AS total,
-        |       CASE WHEN o_orderkey % 10 = 0 THEN o_orderstatus END AS status
-        |FROM orders ORDER BY k""".stripMargin,
-
-    // change feed (1, 3]: the SAME multiset-diff formulation the feed
-    // itself uses (EXCEPT ALL of the after-state vs the before-state,
-    // per commit) — NOT a per-row delete+insert enumeration, which
-    // diverges whenever an updated row's new image equals another
-    // touched row's old image (the pair cancels in the multiset;
-    // untouched rows cancel identically on both sides, so diffing the
-    // whole states equals diffing the touched files)
-    "q_table_log_cdf" ->
-      """WITH b AS (
-        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |  FROM lineitem),
-        |s2 AS (SELECT * FROM b WHERE NOT (price BETWEEN 10000.0 AND 20000.0)),
-        |s3 AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |         CASE WHEN price > 50000.0 THEN price + 1000.0 ELSE price END AS price
-        |  FROM s2)
-        |SELECT *, 'delete' AS _change_type, CAST(2 AS BIGINT) AS _commit_version
-        |FROM (SELECT * FROM b EXCEPT ALL SELECT * FROM s2)
-        |UNION ALL
-        |SELECT *, 'insert', CAST(2 AS BIGINT)
-        |FROM (SELECT * FROM s2 EXCEPT ALL SELECT * FROM b)
-        |UNION ALL
-        |SELECT *, 'delete', CAST(3 AS BIGINT)
-        |FROM (SELECT * FROM s2 EXCEPT ALL SELECT * FROM s3)
-        |UNION ALL
-        |SELECT *, 'insert', CAST(3 AS BIGINT)
-        |FROM (SELECT * FROM s3 EXCEPT ALL SELECT * FROM s2)
-        |ORDER BY l_orderkey, l_linenumber, _commit_version, _change_type""".stripMargin,
-
-    // keyed feed: per-version last-wins states, FULL-joined on the key —
-    // changed keys emit pre+post images, new keys emit inserts
-    "q_table_log_cdf_keyed" ->
-      """WITH b1 AS (
-        |  SELECT o_orderkey, o_totalprice::DOUBLE + 1 AS val,
-        |         CAST(1 AS BIGINT) AS ver
-        |  FROM orders WHERE o_orderkey % 2 = 0),
-        |b2 AS (
-        |  SELECT o_orderkey, o_totalprice::DOUBLE + 2 AS val,
-        |         CAST(2 AS BIGINT) AS ver
-        |  FROM orders WHERE o_orderkey % 3 = 0),
-        |b3 AS (
-        |  SELECT o_orderkey, o_totalprice::DOUBLE + 3 AS val,
-        |         CAST(3 AS BIGINT) AS ver
-        |  FROM orders WHERE o_orderkey % 5 = 0),
-        |s1 AS (SELECT * FROM b1),
-        |s2 AS (SELECT * FROM b2 UNION ALL
-        |       SELECT * FROM s1 WHERE o_orderkey NOT IN (SELECT o_orderkey FROM b2)),
-        |s3 AS (SELECT * FROM b3 UNION ALL
-        |       SELECT * FROM s2 WHERE o_orderkey NOT IN (SELECT o_orderkey FROM b3))
-        |SELECT p.o_orderkey, p.val, p.ver,
-        |       'update_preimage' AS _change_type, CAST(2 AS BIGINT) AS _commit_version
-        |FROM s1 p JOIN s2 c USING (o_orderkey) WHERE p.val <> c.val OR p.ver <> c.ver
-        |UNION ALL
-        |SELECT c.o_orderkey, c.val, c.ver, 'update_postimage', CAST(2 AS BIGINT)
-        |FROM s1 p JOIN s2 c USING (o_orderkey) WHERE p.val <> c.val OR p.ver <> c.ver
-        |UNION ALL
-        |SELECT c.o_orderkey, c.val, c.ver, 'insert', CAST(2 AS BIGINT)
-        |FROM s2 c WHERE c.o_orderkey NOT IN (SELECT o_orderkey FROM s1)
-        |UNION ALL
-        |SELECT p.o_orderkey, p.val, p.ver, 'update_preimage', CAST(3 AS BIGINT)
-        |FROM s2 p JOIN s3 c USING (o_orderkey) WHERE p.val <> c.val OR p.ver <> c.ver
-        |UNION ALL
-        |SELECT c.o_orderkey, c.val, c.ver, 'update_postimage', CAST(3 AS BIGINT)
-        |FROM s2 p JOIN s3 c USING (o_orderkey) WHERE p.val <> c.val OR p.ver <> c.ver
-        |UNION ALL
-        |SELECT c.o_orderkey, c.val, c.ver, 'insert', CAST(3 AS BIGINT)
-        |FROM s3 c WHERE c.o_orderkey NOT IN (SELECT o_orderkey FROM s2)
-        |ORDER BY o_orderkey, _commit_version, _change_type""".stripMargin,
-
-    // the incrementally-refreshed view must equal a from-scratch GROUP
-    // BY over the final table state (s3 of the CoW history)
-    "q_agg_view" ->
-      """WITH s2 AS (
-        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |  FROM lineitem
-        |  WHERE NOT (l_extendedprice::DOUBLE BETWEEN 10000.0 AND 20000.0)),
-        |s3 AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |         CASE WHEN price > 50000.0 THEN price + 1000.0 ELSE price END AS price
-        |  FROM s2)
-        |SELECT l_linenumber,
-        |       CAST(round(sum(CAST(price AS DECIMAL(30,6))), 2) AS DOUBLE) AS sum_price,
-        |       count(*) AS cnt
-        |FROM s3 GROUP BY l_linenumber
-        |ORDER BY l_linenumber""".stripMargin,
-
-    // the multi-measure incrementally-refreshed view must equal a
-    // from-scratch GROUP BY (sum exact through decimal, min/max exact
-    // doubles) over the final state of its CoW history
-    "q_agg_view_minmax" ->
-      """WITH b AS (
-        |  SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |  FROM lineitem),
-        |s2 AS (SELECT * FROM b WHERE NOT (price > 80000.0)),
-        |s3 AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |         CASE WHEN price BETWEEN 40000.0 AND 50000.0
-        |              THEN price + 100000.0 ELSE price END AS price
-        |  FROM s2)
-        |SELECT l_linenumber,
-        |       CAST(round(sum(CAST(price AS DECIMAL(30,6))), 2) AS DOUBLE) AS sum_price,
-        |       min(price) AS min_price, max(price) AS max_price,
-        |       count(*) AS cnt
-        |FROM s3 GROUP BY l_linenumber
-        |ORDER BY l_linenumber""".stripMargin,
-
-    // merge-on-read deletes are invisible to the result: the dv'd rows
-    // are simply gone, everything else is verbatim
-    "q_table_log_dv" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE l_orderkey % 501 NOT IN (7, 8)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // evolved table: v1 rows null-fill the column v2 added
-    "q_table_log_evolve" ->
-      """SELECT o_orderkey, o_totalprice::DOUBLE AS price,
-        |       CAST(NULL AS VARCHAR) AS seg
-        |FROM orders WHERE o_orderkey % 3 = 0
-        |UNION ALL
-        |SELECT o_orderkey, o_totalprice::DOUBLE, o_orderpriority
-        |FROM orders WHERE o_orderkey % 3 = 1
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // bloom point lookup == plain IN filter (the pruning is invisible
-    // to the result, which is the point)
-    "q_table_log_point" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE l_orderkey IN (SELECT min(l_orderkey) FROM lineitem
-        |                     UNION ALL
-        |                     SELECT max(l_orderkey) FROM lineitem)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // the same point lookup through the SQL connector's bloom routing
-    "q_sql_point" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice::DOUBLE AS price
-        |FROM lineitem
-        |WHERE l_orderkey IN (SELECT min(l_orderkey) FROM lineitem
-        |                     UNION ALL
-        |                     SELECT max(l_orderkey) FROM lineitem)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // last-wins replay of upsert batches 1..2 (batch 3 exists in the log
-    // but is AFTER the read version — time travel must not see it)
-    "q_table_log" ->
-      """WITH b AS (
-        |  SELECT o_orderkey, 1 AS i FROM orders WHERE o_orderkey % 2 = 0
-        |  UNION ALL
-        |  SELECT o_orderkey, 2 AS i FROM orders WHERE o_orderkey % 3 = 0),
-        |w AS (SELECT o_orderkey, max(i) AS i FROM b GROUP BY 1)
-        |SELECT w.o_orderkey, o.o_totalprice::DOUBLE + w.i AS val,
-        |       CAST(w.i AS BIGINT) AS ver
-        |FROM w JOIN orders o USING (o_orderkey)
-        |ORDER BY w.o_orderkey""".stripMargin,
-
-    "q_asof_auto" ->
-      """WITH e AS (
-        |  SELECT event_id,
-        |         CASE WHEN event_id % 2 = 0 THEN 1 ELSE user_id END AS user_id, ts
-        |  FROM events),
-        |o AS (
-        |  SELECT o_custkey, o_orderdate, max(o_orderkey) AS o_orderkey,
-        |         max_by(o_totalprice, o_orderkey) AS o_totalprice
-        |  FROM orders GROUP BY 1, 2)
-        |SELECT e.event_id, o.o_orderkey AS last_orderkey,
-        |       o.o_totalprice AS last_totalprice
-        |FROM e ASOF LEFT JOIN o
-        |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate
-        |ORDER BY e.event_id""".stripMargin,
-
-    "q_range_join" ->
-      """SELECT p.event_id AS purchase_id, e.event_id AS event_id
-        |FROM events p JOIN events e ON p.user_id = e.user_id
-        |WHERE p.event_type = 'purchase'
-        |  AND e.ts >= p.ts - INTERVAL 1 HOUR AND e.ts < p.ts
-        |ORDER BY purchase_id, event_id""".stripMargin,
-
-    "q_click_attribution" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |       c.user_id AS user_id, c.ts AS click_ts, p.ts AS purchase_ts
-        |FROM events c JOIN events p ON c.user_id = p.user_id
-        |WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    "q_click_attribution_outer" ->
-      """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
-        |       c.user_id AS user_id
-        |FROM events c LEFT JOIN events p ON c.user_id = p.user_id
-        |  AND p.event_type = 'purchase'
-        |  AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE
-        |WHERE c.event_type = 'click'
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    "q_attribution_linear" ->
-      s"""$AttributionPairsCte,
-         |n AS (SELECT purchase_id,
-         |        CAST(sum(CAST(1.0 AS DECIMAL(30,12))) AS DOUBLE) AS wsum
-         |      FROM pr GROUP BY 1)
-         |SELECT click_id,
-         |  round(CAST(sum(CAST(value * 1.0 / wsum AS DECIMAL(30,12)))
-         |    AS DOUBLE), 4) AS credited,
-         |  count(*) AS touches
-         |FROM pr JOIN n USING (purchase_id)
-         |GROUP BY click_id ORDER BY click_id""".stripMargin,
-
-    "q_attribution_decay" ->
-      s"""$AttributionPairsCte,
-         |w AS (SELECT *, pow(0.5,
-         |        date_diff('microsecond', click_ts, purchase_ts)
-         |          / 900000000.0) AS w
-         |      FROM pr),
-         |n AS (SELECT purchase_id,
-         |        CAST(sum(CAST(w AS DECIMAL(30,12))) AS DOUBLE) AS wsum
-         |      FROM w GROUP BY 1)
-         |SELECT click_id,
-         |  round(CAST(sum(CAST(value * w / wsum AS DECIMAL(30,12)))
-         |    AS DOUBLE), 4) AS credited,
-         |  count(*) AS touches
-         |FROM w JOIN n USING (purchase_id)
-         |GROUP BY click_id ORDER BY click_id""".stripMargin,
-
-    // double arithmetic mirrored exactly: width = (hi−lo)/10 then
-    // floor((v−lo)/width), max clamps into the last cell
-    "q_histogram" ->
-      """WITH v AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-        |           WHERE o_totalprice IS NOT NULL),
-        |mm AS (SELECT min(v) AS glo, max(v) AS ghi FROM v),
-        |b AS (SELECT v, CASE WHEN ghi = glo THEN 0
-        |        ELSE least(CAST(floor((v - glo) / ((ghi - glo) / 10)) AS INT), 9)
-        |        END AS bucket
-        |      FROM v, mm)
-        |SELECT bucket, min(v) AS lo, max(v) AS hi, count(*) AS n
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "q_histogram_depth" -> {
-      val cuts = (1 until 8).map(i =>
-        s"quantile_cont(v, ${i / 8.0})").mkString("[", ", ", "]")
-      val sums = (0 until 7).map(i =>
-        s"CASE WHEN v > c[${i + 1}] THEN 1 ELSE 0 END").mkString(" + ")
-      s"""WITH v AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-         |           WHERE o_totalprice IS NOT NULL),
-         |cuts AS (SELECT $cuts AS c FROM v),
-         |b AS (SELECT v, CAST($sums AS INT) AS bucket FROM v, cuts)
-         |SELECT bucket, min(v) AS lo, max(v) AS hi, count(*) AS n
-         |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin
-    }
-  ) ++ annIvfOracle ++ annPqOracle ++ annIvfPqOracle
-
   // ---------------------------------------------------------------------
   // ANN oracles from memoized codebooks. The k-means TRAINING step is not
   // SQL-reproducible, but it is seeded-deterministic and memoized per
@@ -6231,13 +5624,12 @@ object SparkEntry {
     * (ties → lowest cell, matching [[operators.Similarity.nearestCell]]),
     * cosine probe ranking, and the rounded top-k.
     */
-  private def annIvfOracle: Map[String, String] =
+  private def annIvfOracle: Option[String] =
     lastAnnDir.flatMap(ivfCents.get).map { cents =>
       val rows = cents.zipWithIndex.map { case (c, i) =>
         s"($i, [${c.map(flit).mkString(", ")}]::DOUBLE[])"
       }.mkString(",\n")
-      "q_ann_ivf" ->
-        s"""WITH cents(cell, c) AS (VALUES
+      s"""WITH cents(cell, c) AS (VALUES
            |$rows),
            |e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
            |ad AS (
@@ -6271,7 +5663,7 @@ object SparkEntry {
            |  FROM scored)
            |SELECT query_id, "rank", neighbor_id, sim FROM ranked
            |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin
-    }.toMap
+    }
 
   /** `q_ann_ivfpq` (numCentroids=16, nProbe=4, m=16, k=64, subDim=4,
     * shortlist=100, k=5, queries vec_id<8): BOTH trained artifacts as
@@ -6283,7 +5675,7 @@ object SparkEntry {
     * literals; the 100-deep shortlist per probed cell set; and the exact
     * cosine re-rank.
     */
-  private def annIvfPqOracle: Map[String, String] =
+  private def annIvfPqOracle: Option[String] =
     (for {
       d <- lastAnnDir
       cents <- ivfCents.get(d)
@@ -6298,8 +5690,7 @@ object SparkEntry {
         c <- model.codebooks(j).indices
       } yield s"($j, $c, [${model.codebooks(j)(c).map(flit).mkString(", ")}]::DOUBLE[])")
         .mkString(",\n")
-      "q_ann_ivfpq" ->
-        s"""WITH cents(cell, c) AS (VALUES
+      s"""WITH cents(cell, c) AS (VALUES
            |$centRows),
            |cb(j, cc, w) AS (VALUES
            |$cbRows),
@@ -6366,7 +5757,7 @@ object SparkEntry {
            |  FROM ex)
            |SELECT query_id, "rank", neighbor_id, sim FROM ranked
            |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin
-    }).toMap
+    })
 
   /** `q_ann_pq` (m=16, k=64, subDim=4, shortlist=100, k=5, queries
     * vec_id<8): the trained sub-codebooks as a 1024-row literal table;
@@ -6374,7 +5765,7 @@ object SparkEntry {
     * expression), per-subvector strict-< encoding, reconstructed-vector
     * ADC scoring, the 100-deep shortlist, and the exact re-rank.
     */
-  private def annPqOracle: Map[String, String] =
+  private def annPqOracle: Option[String] =
     lastAnnDir.flatMap(pqModels.get).map { model =>
       val sub = model.subDim
       val rows = (for {
@@ -6382,8 +5773,7 @@ object SparkEntry {
         c <- model.codebooks(j).indices
       } yield s"($j, $c, [${model.codebooks(j)(c).map(flit).mkString(", ")}]::DOUBLE[])")
         .mkString(",\n")
-      "q_ann_pq" ->
-        s"""WITH cb(j, cc, w) AS (VALUES
+      s"""WITH cb(j, cc, w) AS (VALUES
            |$rows),
            |e0 AS (SELECT vec_id, embedding::DOUBLE[] AS ev FROM embeddings),
            |nn AS (SELECT vec_id, ev, ${sqlNorm("ev")} AS nrm FROM e0),
@@ -6426,5 +5816,5 @@ object SparkEntry {
            |  FROM ex)
            |SELECT query_id, "rank", neighbor_id, sim FROM ranked
            |WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin
-    }.toMap
+    }
 }

@@ -7,7 +7,8 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the DuckDB compare
   * (`tools/compare_oracle.py`). Query names after the two directories
   * narrow the dump to those queries and their oracle SQL (the dev loop):
-  * `sbt "runMain graft.Verify <sfDir> <outDir> [query…]"`.
+  * `sbt "runMain graft.Verify <sfDir> <outDir> [query…]"`. Exits non-zero
+  * when a query fails or has no oracle, naming each.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -50,14 +51,20 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val oracles = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
+    val json = oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
-    if (failures.nonEmpty) {
+    // every query carries an oracle; one dumped without it (an ANN query
+    // whose models are absent) could only be graded on rows
+    val noOracle = SparkEntry.queries.keys.filter(k => wanted(k) && !oracles.contains(k))
+    if (noOracle.nonEmpty)
+      System.err.println(s"[verify] ${noOracle.size} queries have NO ORACLE: " +
+        noOracle.mkString(", "))
+    if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} queries FAILED: " +
         failures.reverse.mkString(", "))
-      sys.exit(1) // a failed query must fail the gate, not vanish from it
-    }
+    // a failed or unchecked query must fail the gate, not vanish from it
+    if (failures.nonEmpty || noOracle.nonEmpty) sys.exit(1)
   }
 }

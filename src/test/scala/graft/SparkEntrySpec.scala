@@ -72,4 +72,25 @@ class SparkEntrySpec extends AnyFunSuite {
     val empty = SparkEntry.oracleSql.collect { case (k, v) if v.trim.isEmpty => k }
     assert(empty.isEmpty, s"empty oracles: ${empty.mkString(", ")}")
   }
+
+  test("staged builds once per (kind, dataset dir); a build that throws is retried") {
+    var built = Seq.empty[(String, String)]
+    def stage(kind: String, d: String): String =
+      SparkEntry.staged(kind, d)(p => built :+= (d -> p))
+    val a = stage("spec_count", "/data/a")
+    assert(stage("spec_count", "/data/a") == a)
+    assert(built == Seq("/data/a" -> a), "one build, on the dir it returns")
+    val b = stage("spec_count", "/data/b")
+    assert(b != a && built == Seq("/data/a" -> a, "/data/b" -> b),
+      "a second dataset dir stages separately")
+    var tries = 0
+    intercept[IllegalStateException] {
+      SparkEntry.staged("spec_fail", "/data/a") { _ =>
+        tries += 1; throw new IllegalStateException("build failed")
+      }
+    }
+    val c = SparkEntry.staged("spec_fail", "/data/a")(_ => tries += 1)
+    assert(tries == 2, "the failed build cached nothing")
+    assert(SparkEntry.staged("spec_fail", "/data/a")(_ => tries += 1) == c && tries == 2)
+  }
 }
