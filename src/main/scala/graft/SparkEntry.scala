@@ -226,7 +226,7 @@ object SparkEntry {
     staged("tlogcow", d) { p =>
       TableLog.append(s, p, cowBase(s, d).repartitionByRange(16, col("price")),
         statsCols = Seq("price"))
-      // touch sets derive from the predicates themselves (boundsFromPredicate)
+      // touch sets derive from the predicates themselves (TableLog.Prune)
       TableLog.deleteWhere(s, p, col("price").between(10000.0, 20000.0),
         statsCols = Seq("price"))
       TableLog.updateWhere(s, p, col("price") > 50000.0,
@@ -4497,7 +4497,7 @@ object SparkEntry {
 
     // SQL-surface read of the same staged layout through the graft
     // DataSource (spark.read.format("graft")): the pushed-down price
-    // filter routes through boundsFromPredicate → scanPruned, so the
+    // filter routes through scanWhere's derived Prune, so the
     // MANIFEST prunes files before any scan task plans, and the result
     // must hash-match the full-scan oracle exactly — the method API's
     // q_table_log_prune twin, via the connector

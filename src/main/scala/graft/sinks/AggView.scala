@@ -237,21 +237,12 @@ object AggView {
               lit(null)).otherwise(folded).as(n)
           } :+ newCnt: _*)
         val affectedKeys = marked.filter(col("_recompute")).select(g: _*)
+        // stats-pruned base read: bound the scan by the affected keys'
+        // bounding box, then exact semi-join on the (small) key set
+        val (bounds, n) = TableLog.keyBox(affectedKeys, groupCols, Seq(count(lit(1))))
         val recomputed =
-          if (affectedKeys.isEmpty) None
+          if (n.getLong(0) == 0L) None
           else {
-            // stats-pruned base read: bound the scan by the affected
-            // keys' bounding box on each group column the table has
-            // stats for, then exact semi-join on the (small) key set
-            val boundsRow = affectedKeys.select(groupCols.flatMap(c =>
-              Seq(min(col(c)).as(s"_lo_$c"), max(col(c)).as(s"_hi_$c"))): _*).head()
-            val bounds = groupCols.zipWithIndex.flatMap { case (c, i) =>
-              (boundsRow.get(2 * i), boundsRow.get(2 * i + 1)) match {
-                case (lo: Number, hi: Number) => Seq((c, lo: Any, hi: Any))
-                case (lo: String, hi: String) => Seq((c, lo: Any, hi: Any))
-                case _ => Nil
-              }
-            }
             val base = TableLog.scanPruned(spark, tableDir, bounds, tableV).df
               .join(broadcast(affectedKeys), groupCols, "left_semi")
               .groupBy(g: _*).agg(directAggs.head, directAggs.tail: _*)

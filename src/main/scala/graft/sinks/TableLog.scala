@@ -46,13 +46,19 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DecimalType, D
   *    idempotence marker `(appId, batchId)`; [[upsertIntoOnce]] checks
   *    the log for the marker first and skips replayed micro-batches, so
   *    a crash-replayed `foreachBatch` write commits exactly once.
-  *  - FILE-SKIPPING STATS: each manifest records per-file row counts and
-  *    min/max column stats harvested from the parquet FOOTERS of the
-  *    files it adds (no extra data scan); [[scanPruned]] intersects
-  *    query bounds with the manifest stats and plans a read over ONLY
-  *    the overlapping files — pruning at the FILE LISTING, before any
-  *    scan task launches (footer-level row-group pruning then applies
-  *    within the files that survive).
+  *  - FILE SKIPPING: each manifest records per-file row counts, null
+  *    counts and min/max column stats harvested from the parquet
+  *    FOOTERS of the files it adds (no extra data scan). ONE rule prunes
+  *    against them: a [[Prune]] (bounds, null shapes, point values),
+  *    derived from a predicate by one analysis or given as an explicit
+  *    box, keeps a file unless its stats prove no row can match
+  *    ([[Prune.keep]], names translated through the column mapping
+  *    once). Every reader and writer goes through it — the scans, the
+  *    CoW delete/update/replace/merge touch sets, the dv delete and the
+  *    `where` scoping of the maintenance rewrites — so pruning happens
+  *    at the FILE LISTING, before any scan task launches. ONE bloom
+  *    phase ([[bloomKeep]]) follows it for point rules, shared by the
+  *    dv delete and [[scanPointLookup]].
   */
 object TableLog {
 
@@ -337,9 +343,8 @@ object TableLog {
     * files that might hold matching rows, leave every other file
     * untouched (their manifest entries — paths, stats — carry over
     * verbatim), and publish pinned to the version read. `pruneBounds`
-    * overrides the touch-set selection; when omitted (the default),
-    * bounds are DERIVED from the predicate's own expression tree
-    * ([[boundsFromPredicate]] — conservative, so an unanalyzable
+    * overrides the derived box; either way the touch set is the files
+    * the predicate's [[Prune]] keeps (conservative, so an unanalyzable
     * predicate simply touches every file rather than risking a missed
     * row). An explicit override MUST be implied by the predicate (a
     * bound that excludes a matching file would silently keep its
@@ -362,11 +367,14 @@ object TableLog {
       s"TableLog.deleteWhere: mode must be cow|dv, got $mode")
     if (mode == "dv")
       deleteWhereDv(spark, dir, predicate, pruneBounds, maxDvRows, txn)
-    else
-      rewriteTouched(spark, snap(spark, dir, -1L, "delete"), "delete", pruneBounds,
-          statsCols, txn = txn, autoBoundsFrom = Some(predicate)) { touched =>
+    else {
+      val s = snap(spark, dir, -1L, "delete")
+      rewriteTouched(spark, s, "delete",
+          Prune.of(spark, s.schema, predicate).withBounds(pruneBounds), statsCols,
+          txn = txn) { touched =>
         touched.filter(not(fnCoalesce(predicate, lit(false))))
       }
+    }
   }
 
   /** Merge-on-read `DELETE WHERE` (`mode = "dv"`): instead of REWRITING
@@ -378,11 +386,11 @@ object TableLog {
     * rewrite the whole table for a thousand rows) costs ONE
     * position-finding scan + a manifest rename — O(matches) state,
     * zero data written. And because stats prune NOTHING on exactly
-    * that workload, a single-column equality/IN predicate
-    * ([[inListShape]]) probes the survivors' parquet BLOOM filters
-    * first (the distributed [[scanPointLookup]] phase), so the
-    * position scan reads only the files that might hold the keys —
-    * O(matching files) per erasure batch, not O(table). The trade: reads of dv'd files pay the anti-join until
+    * that workload, a single-column equality/IN predicate probes the
+    * survivors' parquet BLOOM filters first ([[bloomKeep]], the phase
+    * [[scanPointLookup]] runs), so the position scan reads only the
+    * files that might hold the keys — O(matching files) per erasure
+    * batch, not O(table). The trade: reads of dv'd files pay the anti-join until
     * [[compactSmallFiles]] materializes the vectors away (dv files
     * qualify for compaction regardless of size). Positions are
     * collected to the driver (they ride in the manifest), capped
@@ -458,8 +466,9 @@ object TableLog {
                   pruneBounds: Seq[(String, Any, Any)] = Nil,
                   statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{coalesce => fnCoalesce, col, lit, when}
-    rewriteTouched(spark, snap(spark, dir, -1L, "update"), "update", pruneBounds,
-        statsCols, autoBoundsFrom = Some(predicate)) { touched =>
+    val s = snap(spark, dir, -1L, "update")
+    rewriteTouched(spark, s, "update",
+        Prune.of(spark, s.schema, predicate).withBounds(pruneBounds), statsCols) { touched =>
       val fields = touched.schema.fields
       // NESTED assignments (`payload.kind` → expr) rebuild their head
       // struct through withField — one per-row struct copy, no schema
@@ -529,8 +538,8 @@ object TableLog {
     * replace would silently corrupt neighboring data, the classic
     * backfill footgun (NULL-predicate rows count as violations — a row
     * the predicate cannot place inside the window was never part of
-    * what's replaced). The touch set is stats-pruned from the
-    * predicate ([[boundsFromPredicate]]): files provably disjoint from
+    * what's replaced). The touch set is stats-pruned by the
+    * predicate's [[Prune]]: files provably disjoint from
     * the window carry over verbatim (paths and stats untouched in the
     * manifest), overlapping files rewrite minus their matching rows —
     * at 100 TB a date-clustered backfill costs O(window), never
@@ -553,9 +562,9 @@ object TableLog {
       "TableLog.replaceWhere: the batch holds rows that do NOT satisfy the " +
         "replace predicate — a backfill must stay inside the window it " +
         "replaces (filter the batch, or widen the predicate)")
-    rewriteTouched(spark, snap(spark, dir, -1L, "replace"), "replace",
-        pruneBounds = Nil, statsCols, txn = txn, autoBoundsFrom = Some(predicate),
-        writeOptions = writeOptions) { touched =>
+    val s = snap(spark, dir, -1L, "replace")
+    rewriteTouched(spark, s, "replace", Prune.of(spark, s.schema, predicate), statsCols,
+        txn = txn, writeOptions = writeOptions) { touched =>
       touched.filter(not(fnCoalesce(predicate, lit(false))))
         .unionByName(df.select(touched.columns.map(col).toSeq: _*))
     }
@@ -632,35 +641,24 @@ object TableLog {
         "whenNotMatchedBySource = delete")
     val fullSync = whenNotMatchedBySource == "delete"
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit, struct}
-    val uniq = source.agg(count(lit(1)).as("n"),
-      countDistinct(struct(keys.map(col): _*)).as("d")).head()
+    // ONE pass over the source: the uniqueness counts and the key box
+    val (bounds, uniq) = keyBox(source, keys,
+      Seq(count(lit(1)), countDistinct(struct(keys.map(col): _*))))
     require(uniq.getLong(0) == uniq.getLong(1),
       s"TableLog.mergeInto: source keys must be unique " +
         s"(${uniq.getLong(0)} rows, ${uniq.getLong(1)} distinct keys) — " +
         "two source rows matching one target row is an ambiguous merge")
-    // the source's key bounding box, typed to match the manifest stats
-    val boundsRow = source.select(keys.flatMap(k =>
-      Seq(org.apache.spark.sql.functions.min(col(k)).as(s"_min_$k"),
-        org.apache.spark.sql.functions.max(col(k)).as(s"_max_$k"))): _*).head()
-    val bounds = keys.zipWithIndex.map { case (k, i) =>
-      (k, boundsRow.get(2 * i), boundsRow.get(2 * i + 1))
-    }
+    val s = open
     // full sync: the not-matched-by-source arm must SEE every row it
-    // might delete — all files when unconditioned, the condition's box
-    // (OR'd with the key box) when scoped. An unconditioned full sync
-    // derives empty bounds, which touches everything.
-    def nmbsBounds(committed: StructType): Seq[Seq[(String, Any, Any)]] =
+    // might delete — all files when unconditioned (the empty rule keeps
+    // everything), the condition's rule (OR'd with the key box) when
+    // scoped
+    val nmbs =
       if (!fullSync) Nil
-      else notMatchedBySourceCondition match {
-        case None => Seq(Nil) // overlaps everything: whole-table touch
-        case Some(c) =>
-          val probe = spark.createDataFrame(
-            spark.sparkContext.emptyRDD[Row], committed)
-          Seq(boundsFromPredicate(probe, c))
-      }
-    rewriteTouched(spark, open, "merge", bounds, statsCols,
+      else Seq(notMatchedBySourceCondition.fold(Prune())(Prune.of(spark, s.schema, _)))
+    rewriteTouched(spark, s, "merge", Prune(bounds), statsCols,
         schemaCheck = whenMatched == "update" || insertUnmatched,
-        txn = txn, readBounds = bounds, orBounds = nmbsBounds,
+        txn = txn, readBounds = bounds, or = nmbs,
         rebaseable = !fullSync,
         evolveWith = if (evolveSchema) Some(source.schema) else None) { touched =>
       import org.apache.spark.sql.functions.{coalesce => fnCoalesce, lit, not}
@@ -692,265 +690,260 @@ object TableLog {
     }
   }
 
-  /** Unwrap analyzer sugar so SQL-text predicates prune like their
-    * Column-API twins: RuntimeReplaceable nodes (BETWEEN, …) replace
-    * with their rewrite, and the `With` common-subexpression wrapper
-    * that rewrite introduces inlines its refs (the CSE is a runtime
-    * optimization; the bounds analysis wants the plain tree).
+  /** The `(key, min, max)` box of `df`'s `keys`, typed like the manifest
+    * stats, from ONE aggregate that also computes `extra` (the leading
+    * fields of the returned row). A non-Number/String pair (dates, an
+    * all-null key) stays in the box and keeps every file
+    * ([[Prune.mayHold]]), so a merge over such keys still checks a
+    * winner's adds ([[rebaseOk]]).
     */
-  private def unsugar(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    import org.apache.spark.sql.catalyst.expressions._
-    e.transformUp { case r: RuntimeReplaceable => r.replacement }
-      .transformUp {
-        case w: With =>
-          val defs = w.defs.map(d => d.id -> d.child).toMap
-          w.child.transformUp {
-            case ref: CommonExpressionRef if defs.contains(ref.id) => defs(ref.id)
+  private[sinks] def keyBox(df: DataFrame, keys: Seq[String],
+                            extra: Seq[org.apache.spark.sql.Column])
+      : (Seq[(String, Any, Any)], Row) = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val r = df.select(extra ++ keys.flatMap(k => Seq(min(col(k)), max(col(k)))): _*).head()
+    val at = extra.length
+    (keys.zipWithIndex.map { case (k, i) => (k, r.get(at + 2 * i), r.get(at + 2 * i + 1)) }, r)
+  }
+
+  /** FILE SKIPPING — the one rule every pruning site applies: what a
+    * predicate (or an explicit box) PROVES about the rows it can match,
+    * in LOGICAL column names.
+    *  - `bounds`: conjunctive `(column, lo, hi)` boxes against each
+    *    file's min/max stats. Numeric open sides are ±∞; a one-sided
+    *    string range carries [[OpenBound]] on its open side (strings
+    *    have no top element).
+    *  - `nulls`: `IS NULL` (true) / `IS NOT NULL` (false) conjuncts
+    *    against each file's null counts — the two shapes min/max can
+    *    never answer: `IS NULL` skips files with zero nulls, `IS NOT
+    *    NULL` skips files that are entirely null.
+    *  - `points`: the values a single-column equality / IN / OR-of-
+    *    equalities predicate can match — each checked against min/max,
+    *    and the input of the one bloom phase ([[bloomKeep]]).
+    * A file is kept unless its stats PROVE no row can pass (missing
+    * stats, type-mismatched bounds → keep; deletion vectors only remove
+    * rows, so every skip stays sound on dv'd files): pruning never
+    * drops a matching row, and the exact predicate still applies.
+    */
+  private[sinks] final case class Prune(bounds: Seq[(String, Any, Any)] = Nil,
+                                        nulls: Seq[(String, Boolean)] = Nil,
+                                        points: Option[(String, Seq[Any])] = None) {
+
+    /** An explicit box (a caller's `pruneBounds`) in place of the
+      * derived one; the predicate's null shapes and points still hold.
+      */
+    def withBounds(explicit: Seq[(String, Any, Any)]): Prune =
+      if (explicit.isEmpty) this else copy(bounds = explicit)
+
+    /** The same rule in PHYSICAL names ([[physPath]]) — the domain of
+      * manifest stats, footers and [[rebaseOk]]'s winner-adds check.
+      */
+    def phys(cm: Map[String, String]): Prune =
+      if (cm.isEmpty) this
+      else Prune(bounds.map { case (c, lo, hi) => (physPath(cm, c), lo, hi) },
+        nulls.map { case (c, w) => (physPath(cm, c), w) },
+        points.map { case (c, vs) => (physPath(cm, c), vs) })
+
+    /** Can `f` hold a row this rule admits? Names must be physical. */
+    def mayHold(f: AddFile): Boolean =
+      bounds.forall { case (c, lo, hi) =>
+        f.stats.get(c) match {
+          case Some(NumStat(mn, mx)) => (lo, hi) match {
+            case (l: Number, h: Number) =>
+              !(mx < l.doubleValue() || mn > h.doubleValue())
+            case _ => true
           }
+          case Some(StrStat(mn, mx)) => (lo, hi) match {
+            case (l: String, h: String) => !(mx < l || mn > h)
+            case (l: String, OpenBound) => !(mx < l)
+            case (OpenBound, h: String) => !(mn > h)
+            case _ => true
+          }
+          case None => true
+        }
+      } && nulls.forall { case (c, wantNull) =>
+        f.nullCounts.get(c) match {
+          case Some(n) if wantNull => n > 0L
+          case Some(n) => n < f.rows
+          case None => true
+        }
+      } && points.forall { case (c, vs) =>
+        f.stats.get(c) match {
+          case Some(NumStat(mn, mx)) => vs.exists {
+            case n: Number => n.doubleValue() >= mn && n.doubleValue() <= mx
+            case _ => true
+          }
+          case Some(StrStat(mn, mx)) => vs.exists {
+            case s: String => s >= mn && s <= mx
+            case _ => true
+          }
+          case None => true
+        }
       }
+
+    /** The entries of `files` that may hold a matching row, names
+      * translated once. `or` widens the keep DISJUNCTIVELY — a file also
+      * survives when some `or` rule admits it: the full-sync merge
+      * touches its key box OR its not-matched-by-source condition.
+      */
+    def keep(files: Seq[AddFile], cm: Map[String, String],
+             or: Seq[Prune] = Nil): Seq[AddFile] = {
+      val rules = (this +: or).map(_.phys(cm))
+      files.filter(f => rules.exists(_.mayHold(f)))
+    }
   }
 
-  /** The DOTTED stats path of a column reference — a bare attribute
-    * (`k`) or a struct-field chain (`payload.kind`,
-    * `payload.geo.lat`), the exact key parquet footers report
-    * (`ColumnPath.toDotString`) and manifest stats store. Anything
-    * else (array/map extraction, computed expressions) is None —
-    * element-level stats don't exist in the footer, so there is
-    * nothing sound to prune with. This is what lets a predicate on a
-    * nested field drive file skipping: struct-typed event tables are
-    * the most common wide-table shape, and without it
-    * `payload.event_type = 'click'` reads every file.
-    */
-  private def dottedName(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Option[String] = e match {
-    case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-      Some(a.name)
-    case g: org.apache.spark.sql.catalyst.expressions.GetStructField =>
-      dottedName(g.child).map(p => s"$p.${g.extractFieldName}")
-    case _ => None
-  }
-
-  /** Derive [[scanPruned]]-style bounds from a predicate's expression
-    * tree, CONSERVATIVELY: only shapes that PROVE a bound contribute
-    * (`col op literal` comparisons, `IN` lists, `BETWEEN`/`AND`
-    * conjunctions, and `OR`s whose branches each bound the column
-    * once); anything unrecognized contributes nothing, which just
-    * means more files touch — correctness never depends on the
-    * analysis. Strict comparisons widen to inclusive bounds (a
-    * superset); numeric open sides use ±∞; string columns only bound
-    * on closed shapes (equality/IN) because there is no top string.
-    * This removes the manual-bounds footgun from the row-level ops:
-    * [[deleteWhere]]/[[updateWhere]] derive their touch set from the
-    * predicate itself unless the caller overrides.
-    */
-  private[sinks] def boundsFromPredicate(probe: DataFrame,
-                                         pred: org.apache.spark.sql.Column): Seq[(String, Any, Any)] = {
+  private[sinks] object Prune {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.NumericType
-    // resolve against the table schema so type-coercion casts are
-    // explicit in the tree (a literal cast folds; a numeric-widening
-    // cast around the column keeps its name — order-preserving, and
-    // the manifest stats compare in double space anyway). SQL-parsed
-    // sugar (BETWEEN, …) analyzes to RuntimeReplaceable wrappers —
-    // unwrap to the replacement tree so a predicate that arrived as
-    // SQL text prunes exactly like its Column-API twin.
-    val cond = probe.filter(pred).queryExecution.analyzed
-      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition }
-      .map(unsugar)
-    def litVal(e: Expression): Option[Any] = e match {
-      case l if l.foldable => Option(l.eval(null)).map {
+
+    /** The rule `pred` proves, from ONE analysis against `schema`.
+      * CONSERVATIVE: only shapes that prove a bound contribute (`col op
+      * literal` comparisons, `IN` lists, `BETWEEN`/`AND` conjunctions,
+      * `OR`s whose branches each bound the column once, AND-level `IS
+      * [NOT] NULL`, a whole-predicate point shape); anything else
+      * contributes nothing, which just means more files are kept.
+      * Strict comparisons widen to inclusive bounds. Resolving against
+      * the schema makes type-coercion casts explicit (a literal cast
+      * folds; a numeric-widening cast around the column keeps its name
+      * — order-preserving, and the stats compare in double space), and
+      * SQL-text sugar is unwrapped ([[unsugar]]) so a predicate that
+      * arrived as SQL prunes exactly like its Column-API twin.
+      */
+    def of(spark: SparkSession, schema: StructType,
+           pred: org.apache.spark.sql.Column): Prune =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        .filter(pred).queryExecution.analyzed
+        .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          f.condition }
+        .map(unsugar)
+        .fold(Prune())(c => Prune(bounds(c), nullShapes(c), points(c)))
+
+    /** Unwrap analyzer sugar: RuntimeReplaceable nodes (BETWEEN, …)
+      * replace with their rewrite, and the `With` common-subexpression
+      * wrapper that rewrite introduces inlines its refs (the CSE is a
+      * runtime optimization; the analysis wants the plain tree).
+      */
+    private def unsugar(e: Expression): Expression =
+      e.transformUp { case r: RuntimeReplaceable => r.replacement }
+        .transformUp {
+          case w: With =>
+            val defs = w.defs.map(d => d.id -> d.child).toMap
+            w.child.transformUp {
+              case ref: CommonExpressionRef if defs.contains(ref.id) => defs(ref.id)
+            }
+        }
+
+    /** The DOTTED stats path of a column reference — a bare attribute
+      * (`k`) or a struct-field chain (`payload.geo.lat`), the exact key
+      * parquet footers report and manifest stats store. Anything else
+      * (array/map extraction, computed expressions) is None: there are
+      * no element-level stats to prune with. This is what lets a
+      * predicate on a nested field drive file skipping.
+      */
+    private def dottedName(e: Expression): Option[String] = e match {
+      case a: AttributeReference => Some(a.name)
+      case g: GetStructField => dottedName(g.child).map(p => s"$p.${g.extractFieldName}")
+      case _ => None
+    }
+
+    private def litVal(e: Expression): Option[Any] =
+      if (!e.foldable) None
+      else Option(e.eval(null)).map {
         case d: org.apache.spark.sql.types.Decimal => d.toDouble
         case u: org.apache.spark.unsafe.types.UTF8String => u.toString
         case other => other
       }
-      case _ => None
-    }
-    def attrName(e: Expression): Option[String] = e match {
-      case c: Cast
-        if c.dataType.isInstanceOf[NumericType] &&
-          c.child.dataType.isInstanceOf[NumericType] => attrName(c.child)
-      case other => dottedName(other) // bare column OR struct-field chain
-    }
-    val negInf: Any = Double.NegativeInfinity
-    val posInf: Any = Double.PositiveInfinity
-    def numeric(v: Any): Boolean = v.isInstanceOf[Number]
-    // STRINGS have no ±∞ value, so one-sided string ranges carry the
-    // OpenBound sentinel on their open side — [[mayOverlap]] reads it
-    // as "unbounded" and checks only the closed side (what makes
-    // `tenant >= 'a' AND tenant < 'b'` a usable scoping/pruning box on
-    // a string-clustered table); every other bounds consumer
-    // pattern-matches concrete Number/String pairs, so the sentinel
-    // falls through their wildcards conservatively (keep)
-    def lo(v: Any): Seq[(Any, Any)] =
-      if (numeric(v)) Seq((v, posInf))
-      else if (v.isInstanceOf[String]) Seq((v, OpenBound)) else Nil
-    def hi(v: Any): Seq[(Any, Any)] =
-      if (numeric(v)) Seq((negInf, v))
-      else if (v.isInstanceOf[String]) Seq((OpenBound, v)) else Nil
-    def walk(e: Expression): Seq[(String, Any, Any)] = e match {
-      case And(l, r) => walk(l) ++ walk(r) // conjunctive, like scanPruned
-      case GreaterThan(a, v) => cmp(a, v, lo) ++ cmp(v, a, hi)
-      case GreaterThanOrEqual(a, v) => cmp(a, v, lo) ++ cmp(v, a, hi)
-      case LessThan(a, v) => cmp(a, v, hi) ++ cmp(v, a, lo)
-      case LessThanOrEqual(a, v) => cmp(a, v, hi) ++ cmp(v, a, lo)
-      case EqualTo(a, v) => eq(a, v) ++ eq(v, a)
-      case EqualNullSafe(a, v) => eq(a, v) ++ eq(v, a)
-      case In(a, vs) =>
-        (attrName(a), vs.map(litVal)) match {
-          case (Some(c), lits) if lits.forall(_.isDefined) =>
-            val vals = lits.flatten
-            if (vals.nonEmpty && vals.forall(numeric)) {
-              val ds = vals.map(_.asInstanceOf[Number].doubleValue())
-              Seq((c, ds.min, ds.max))
-            } else if (vals.nonEmpty && vals.forall(_.isInstanceOf[String])) {
-              val ss = vals.map(_.asInstanceOf[String])
-              Seq((c, ss.min, ss.max))
-            } else Nil
+
+    private def numeric(v: Any): Boolean = v.isInstanceOf[Number]
+
+    private def bounds(e: Expression): Seq[(String, Any, Any)] = {
+      import org.apache.spark.sql.types.NumericType
+      def attrName(e: Expression): Option[String] = e match {
+        case c: Cast
+          if c.dataType.isInstanceOf[NumericType] &&
+            c.child.dataType.isInstanceOf[NumericType] => attrName(c.child)
+        case other => dottedName(other)
+      }
+      def lo(v: Any): Seq[(Any, Any)] =
+        if (numeric(v)) Seq((v, Double.PositiveInfinity))
+        else if (v.isInstanceOf[String]) Seq((v, OpenBound)) else Nil
+      def hi(v: Any): Seq[(Any, Any)] =
+        if (numeric(v)) Seq((Double.NegativeInfinity, v))
+        else if (v.isInstanceOf[String]) Seq((OpenBound, v)) else Nil
+      def cmp(maybeAttr: Expression, maybeLit: Expression,
+              side: Any => Seq[(Any, Any)]): Seq[(String, Any, Any)] =
+        (attrName(maybeAttr), litVal(maybeLit)) match {
+          case (Some(c), Some(v)) => side(v).map { case (l, h) => (c, l, h) }
           case _ => Nil
         }
-      case Or(l, r) =>
-        // a column bounded EXACTLY ONCE in each branch unions to
-        // (min lo, max hi); anything else is unconstrained
-        val lb = walk(l).groupBy(_._1).collect { case (c, Seq(one)) => c -> one }
-        val rb = walk(r).groupBy(_._1).collect { case (c, Seq(one)) => c -> one }
-        lb.keySet.intersect(rb.keySet).toSeq.flatMap { c =>
-          val (_, llo, lhi) = lb(c)
-          val (_, rlo, rhi) = rb(c)
-          (llo, lhi, rlo, rhi) match {
-            case (a: Number, b: Number, x: Number, y: Number) =>
-              Seq((c, math.min(a.doubleValue(), x.doubleValue()): Any,
-                math.max(b.doubleValue(), y.doubleValue()): Any))
-            case (a: String, b: String, x: String, y: String) =>
-              Seq((c, (if (a <= x) a else x): Any, (if (b >= y) b else y): Any))
+      def eq(maybeAttr: Expression, maybeLit: Expression): Seq[(String, Any, Any)] =
+        (attrName(maybeAttr), litVal(maybeLit)) match {
+          case (Some(c), Some(v)) if numeric(v) || v.isInstanceOf[String] =>
+            Seq((c, v, v))
+          case _ => Nil
+        }
+      def walk(e: Expression): Seq[(String, Any, Any)] = e match {
+        case And(l, r) => walk(l) ++ walk(r)
+        case GreaterThan(a, v) => cmp(a, v, lo) ++ cmp(v, a, hi)
+        case GreaterThanOrEqual(a, v) => cmp(a, v, lo) ++ cmp(v, a, hi)
+        case LessThan(a, v) => cmp(a, v, hi) ++ cmp(v, a, lo)
+        case LessThanOrEqual(a, v) => cmp(a, v, hi) ++ cmp(v, a, lo)
+        case EqualTo(a, v) => eq(a, v) ++ eq(v, a)
+        case EqualNullSafe(a, v) => eq(a, v) ++ eq(v, a)
+        case In(a, vs) =>
+          (attrName(a), vs.map(litVal)) match {
+            case (Some(c), lits) if lits.forall(_.isDefined) =>
+              val vals = lits.flatten
+              if (vals.nonEmpty && vals.forall(numeric)) {
+                val ds = vals.map(_.asInstanceOf[Number].doubleValue())
+                Seq((c, ds.min, ds.max))
+              } else if (vals.nonEmpty && vals.forall(_.isInstanceOf[String])) {
+                val ss = vals.map(_.asInstanceOf[String])
+                Seq((c, ss.min, ss.max))
+              } else Nil
             case _ => Nil
           }
-        }
-      case _ => Nil
-    }
-    def cmp(maybeAttr: Expression, maybeLit: Expression,
-            side: Any => Seq[(Any, Any)]): Seq[(String, Any, Any)] =
-      (attrName(maybeAttr), litVal(maybeLit)) match {
-        case (Some(c), Some(v)) => side(v).map { case (l, h) => (c, l, h) }
+        case Or(l, r) =>
+          // a column bounded EXACTLY ONCE in each branch unions to
+          // (min lo, max hi); anything else is unconstrained
+          val lb = walk(l).groupBy(_._1).collect { case (c, Seq(one)) => c -> one }
+          val rb = walk(r).groupBy(_._1).collect { case (c, Seq(one)) => c -> one }
+          lb.keySet.intersect(rb.keySet).toSeq.flatMap { c =>
+            val (_, llo, lhi) = lb(c)
+            val (_, rlo, rhi) = rb(c)
+            (llo, lhi, rlo, rhi) match {
+              case (a: Number, b: Number, x: Number, y: Number) =>
+                Seq((c, math.min(a.doubleValue(), x.doubleValue()): Any,
+                  math.max(b.doubleValue(), y.doubleValue()): Any))
+              case (a: String, b: String, x: String, y: String) =>
+                Seq((c, (if (a <= x) a else x): Any, (if (b >= y) b else y): Any))
+              case _ => Nil
+            }
+          }
         case _ => Nil
       }
-    def eq(maybeAttr: Expression, maybeLit: Expression): Seq[(String, Any, Any)] =
-      (attrName(maybeAttr), litVal(maybeLit)) match {
-        case (Some(c), Some(v)) if numeric(v) || v.isInstanceOf[String] =>
-          Seq((c, v, v))
-        case _ => Nil
+      walk(e)
+    }
+
+    /** AND-level `IS [NOT] NULL` conjuncts on a column reference. */
+    private def nullShapes(e: Expression): Seq[(String, Boolean)] = {
+      def conjuncts(e: Expression): Seq[Expression] = e match {
+        case And(l, r) => conjuncts(l) ++ conjuncts(r)
+        case other => Seq(other)
       }
-    cond.map(walk).getOrElse(Nil)
-  }
-
-  /** The dv delete's position-scan touch set: manifest min/max stats
-    * first, then — because the advertised workload (GDPR point-deletes
-    * on a hash-distributed key) is exactly where min/max prune NOTHING
-    * (every file's range spans the key space) — a parquet BLOOM probe
-    * over the survivors when the predicate is a single-column
-    * equality/IN ([[inListShape]], the erasure sink's shape). The bloom
-    * phase is the distributed [[scanPointLookup]] one, so the position
-    * scan reads O(files that might hold the keys), not O(table).
-    * Bloom-less files keep themselves (bloomMightContain → true): a
-    * table written without [[bloomOptions]] falls back to the full
-    * stats-survivor scan unchanged, and a kept file still gets the
-    * exact predicate — the probe can only prune, never lose a match.
-    */
-  private[sinks] def dvTouchSet(spark: SparkSession, basePath: Path,
-                                files: Seq[AddFile], schema: StructType,
-                                predicate: org.apache.spark.sql.Column,
-                                pruneBounds: Seq[(String, Any, Any)] = Nil,
-                                colmap: Map[String, String] = Map.empty): Seq[AddFile] = {
-    val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val bounds =
-      if (pruneBounds.nonEmpty) pruneBounds
-      else boundsFromPredicate(probe, predicate)
-    val ns = physNullShapes(colmap, nullShapesFromPredicate(probe, predicate))
-    val pb = physBounds(colmap, bounds) // hoisted: invariant across files
-    val statsKept = files.filter(f =>
-      mayOverlap(f, pb) && mayPassNullShapes(f, ns))
-    inListShape(probe, predicate) match {
-      case Some((column, values)) if statsKept.nonEmpty =>
-        val physCol = physPath(colmap, column)
-        val verdicts = mapOverFooters(spark, basePath, statsKept.map(_.path),
-          DistributeFileOpsThreshold)((c, p) =>
-          bloomMightContain(c, p, physCol, values))
-        statsKept.zip(verdicts).collect { case (f, true) => f }
-      case _ => statsKept
-    }
-  }
-
-  /** Extract top-level `IS NULL` / `IS NOT NULL` conjuncts from a
-    * predicate (true = IS NULL) — the two shapes min/max bounds can
-    * never answer but per-file NULL COUNTS can: `IS NULL` skips files
-    * with zero nulls in the column, `IS NOT NULL` skips files that are
-    * entirely null. Only AND-level conjuncts on a bare column
-    * contribute (conservative — an OR branch or a wrapped expression
-    * just prunes nothing), and a file without a recorded count is
-    * always kept.
-    */
-  private[sinks] def nullShapesFromPredicate(probe: DataFrame,
-      pred: org.apache.spark.sql.Column): Seq[(String, Boolean)] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val cond = probe.filter(pred).queryExecution.analyzed
-      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition }
-      .map(unsugar)
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    cond.toSeq.flatMap(conjuncts).flatMap {
-      case IsNull(e) => dottedName(e).map(_ -> true)
-      case Not(IsNull(e)) => dottedName(e).map(_ -> false)
-      case IsNotNull(e) => dottedName(e).map(_ -> false)
-      case _ => None
-    }
-  }
-
-  /** Can `f` hold a row passing every null-shape conjunct? (shapes
-    * arrive in PHYSICAL column names, like manifest stats).
-    */
-  private def mayPassNullShapes(f: AddFile,
-                                shapes: Seq[(String, Boolean)]): Boolean =
-    shapes.forall { case (c, wantNull) =>
-      f.nullCounts.get(c) match {
-        case Some(n) if wantNull => n > 0L // IS NULL: a zero-null file skips
-        case Some(n) => n < f.rows         // IS NOT NULL: an all-null file skips
-        case None => true
+      conjuncts(e).flatMap {
+        case IsNull(a) => dottedName(a).map(_ -> true)
+        case Not(IsNull(a)) => dottedName(a).map(_ -> false)
+        case IsNotNull(a) => dottedName(a).map(_ -> false)
+        case _ => None
       }
     }
 
-  private def physNullShapes(cm: Map[String, String],
-                             shapes: Seq[(String, Boolean)]): Seq[(String, Boolean)] =
-    if (cm.isEmpty) shapes
-    else shapes.map { case (c, w) => (physPath(cm, c), w) }
-
-  /** Recognize a single-column point-lookup predicate — `col = lit`,
-    * `col IN (lits…)`, or an OR-chain of equalities on ONE column —
-    * and return the (column, values) a parquet-bloom probe can answer
-    * for. Anything else is None: the caller falls back to the stats
-    * touch set, so the analysis can only PRUNE, never lose a match
-    * (bloom probes are one-sided — a kept file still gets the exact
-    * predicate).
-    */
-  private[sinks] def inListShape(probe: DataFrame,
-                                 pred: org.apache.spark.sql.Column): Option[(String, Seq[Any])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    val cond = probe.filter(pred).queryExecution.analyzed
-      .collectFirst { case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition }
-      .map(unsugar) // SQL-text sugar must not hide a bloom-answerable shape
-    def litVal(e: Expression): Option[Any] = e match {
-      case l if l.foldable => Option(l.eval(null)).map {
-        case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-        case d: org.apache.spark.sql.types.Decimal => d.toDouble
-        case other => other
-      }
-      case _ => None
-    }
-    def walk(e: Expression): Option[(String, Seq[Any])] = e match {
+    /** The whole predicate as a point lookup — `col = lit`, `col IN
+      * (lits…)`, or an OR-chain of those on ONE column — with no cast
+      * stripped (a bloom hashes the column's own type).
+      */
+    private def points(e: Expression): Option[(String, Seq[Any])] = e match {
       case EqualTo(a, v) if dottedName(a).isDefined =>
         litVal(v).map(x => dottedName(a).get -> Seq(x))
       case EqualTo(v, a) if dottedName(a).isDefined =>
@@ -961,14 +954,49 @@ object TableLog {
           Some(dottedName(a).get -> vals.flatten)
         else None
       case Or(l, r) =>
-        (walk(l), walk(r)) match {
+        (points(l), points(r)) match {
           case (Some((c1, v1)), Some((c2, v2))) if c1 == c2 => Some(c1 -> (v1 ++ v2))
           case _ => None
         }
       case _ => None
     }
-    cond.flatMap(walk)
   }
+
+  /** [[Prune.keep]], then the one BLOOM phase: for a point rule, each
+    * survivor's parquet bloom filters (written via [[bloomOptions]]; a
+    * footer-adjacent read, no data pages) are probed for the values,
+    * and a file whose every row group rules out every value is
+    * skipped. Min/max prune nothing on a hash-distributed key (every
+    * file's range spans the key space); the blooms are what make a
+    * point lookup or a GDPR point-delete cost O(files that might hold
+    * the keys). The probe runs on executors past `threshold` survivors
+    * ([[mapOverFooters]]). Bloom-less files keep themselves
+    * ([[bloomMightContain]] → true), so the phase can only prune.
+    */
+  private def bloomKeep(spark: SparkSession, base: Path, files: Seq[AddFile],
+                        p: Prune, cm: Map[String, String], threshold: Int): Seq[AddFile] = {
+    val kept = p.keep(files, cm)
+    p.phys(cm).points match {
+      case Some((c, vs)) =>
+        val probes = vs.toList // List serializes cleanly into the task closure
+        val verdicts = mapOverFooters(spark, base, kept.map(_.path), threshold)(
+          (conf, f) => bloomMightContain(conf, f, c, probes))
+        kept.zip(verdicts).collect { case (f, true) => f }
+      case None => kept
+    }
+  }
+
+  /** The dv delete's position-scan touch set: the predicate's rule
+    * (`pruneBounds` in place of its derived box), then the bloom phase.
+    */
+  private[sinks] def dvTouchSet(spark: SparkSession, basePath: Path,
+                                files: Seq[AddFile], schema: StructType,
+                                predicate: org.apache.spark.sql.Column,
+                                pruneBounds: Seq[(String, Any, Any)] = Nil,
+                                colmap: Map[String, String] = Map.empty): Seq[AddFile] =
+    bloomKeep(spark, basePath, files,
+      Prune.of(spark, schema, predicate).withBounds(pruneBounds), colmap,
+      DistributeFileOpsThreshold)
 
   /** The scan-side deletion-vector join key of ONE ARM's rows, rebuilt
     * from `_metadata.file_path`'s last `segs` segments prefixed with the
@@ -1039,20 +1067,21 @@ object TableLog {
       es.map(e => e.path -> armDvKey(idx, dvSegCount(e), e.path))
     }.toMap
 
-  /** Shared CoW skeleton: resolve the touch set from manifest stats,
-    * hand the touched rows to `rewrite`, commit the rewrite as
-    * remove(touched) + add(new files) pinned to the version read.
-    * Untouched files' manifest entries (and physical files) carry over
-    * untouched — that invariant IS the operator (pinned in spec).
+  /** Shared CoW skeleton: the touch set is the files `prune` (OR any
+    * `or` rule) keeps ([[Prune.keep]]); hand the touched rows to
+    * `rewrite`, commit the rewrite as remove(touched) + add(new files)
+    * pinned to the version read. Untouched files' manifest entries (and
+    * physical files) carry over untouched — that invariant IS the
+    * operator (pinned in spec). `readBounds` (logical, the merge key
+    * box) is what [[rebaseOk]] checks a winner's adds against.
     */
   private def rewriteTouched(spark: SparkSession, s: Snap, op: String,
-                             pruneBounds: Seq[(String, Any, Any)],
+                             prune: Prune,
                              statsCols: Seq[String],
                              schemaCheck: Boolean = true,
                              txn: Option[(String, Long)] = None,
-                             autoBoundsFrom: Option[org.apache.spark.sql.Column] = None,
                              readBounds: Seq[(String, Any, Any)] = Nil,
-                             orBounds: StructType => Seq[Seq[(String, Any, Any)]] = _ => Nil,
+                             or: Seq[Prune] = Nil,
                              rebaseable: Boolean = true,
                              writeOptions: Map[String, String] = Map.empty,
                              evolveWith: Option[StructType] = None)
@@ -1078,35 +1107,7 @@ object TableLog {
       StructType(committed.fields ++ extra.map(_.copy(nullable = true)))
     }
     val cm = s.meta.colmap
-    val bounds =
-      if (pruneBounds.nonEmpty) pruneBounds
-      else autoBoundsFrom.map { p =>
-        val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        boundsFromPredicate(probe, p)
-      }.getOrElse(Nil)
-    // IS NULL / IS NOT NULL conjuncts prune the touch set through the
-    // manifest null counts — `deleteWhere(col.isNull)` (the standard
-    // cleaning delete) touches only files that HOLD nulls, not the
-    // table. Only sound when the bounds came from the predicate itself.
-    val nullShapes =
-      if (pruneBounds.nonEmpty) Nil
-      else autoBoundsFrom.map { p =>
-        val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        physNullShapes(cm, nullShapesFromPredicate(probe, p))
-      }.getOrElse(Nil)
-    // bounds are in the LOGICAL domain (predicates, merge keys);
-    // manifest stats and rebaseOk's winner-adds check live in the
-    // PHYSICAL domain — translate once for both. `orBounds` widens the
-    // touch set DISJUNCTIVELY (a file touches when it overlaps the
-    // primary box OR any of the extra boxes) — what a full-sync merge
-    // needs: its update arm touches the key box, its
-    // not-matched-by-source arm touches the condition's box (derived
-    // against the committed schema of the version opened here)
-    val pb = physBounds(cm, bounds) // hoisted: invariant across files
-    val pOr = orBounds(committed).map(physBounds(cm, _))
-    val touched = s.files.filter(f =>
-      (mayOverlap(f, pb) && mayPassNullShapes(f, nullShapes)) ||
-        pOr.exists(mayOverlap(f, _)))
+    val touched = prune.keep(s.files, cm, or)
     // dv-aware: a touched file's already-deleted positions must not
     // resurrect through the rewrite
     val touchedDf = readWithDv(spark, s.dir, schema, touched, cm)
@@ -1116,7 +1117,7 @@ object TableLog {
         s"TableLog.$op: rewrite changed the table schema " +
           s"(${out.schema.simpleString} vs ${schema.simpleString})")
     commit(spark, Txn(s, op, s.tableMeta.copy(schema = schema), removes = touched,
-      marker = txn, readBounds = physBounds(cm, readBounds), rebase = rebaseable),
+      marker = txn, readBounds = Prune(readBounds).phys(cm).bounds, rebase = rebaseable),
       out, statsCols, writeOptions)
   }
 
@@ -1185,8 +1186,11 @@ object TableLog {
     * [[reorgPurge]]); each brings only its candidate filter (`select`,
     * over the `where`-scoped live files and their byte sizes) and its
     * `layout` (of the candidates' rows into `nOut` files). Opens the
-    * latest version once, scopes by `where` ([[scopeByPredicate]]),
-    * sizes `nOut` from the candidates' manifest bytes and
+    * latest version once, scopes by `where` (the files its [[Prune]]
+    * keeps; a predicate with no analyzable bounds or null shapes
+    * refuses loudly — it would keep every file and silently pay the
+    * full-table rewrite the caller used WHERE to avoid), sizes `nOut`
+    * from the candidates' manifest bytes and
     * `targetFileMB`, reads them with their deletion vectors, and commits
     * `op` pinned to the version read, removing exactly the candidates
     * and re-storing the parent's schema JSON. Left(the version read)
@@ -1212,8 +1216,14 @@ object TableLog {
     val cm = s.meta.colmap
     def bytes(f: AddFile): Long =
       if (f.bytes > 0L) f.bytes else s.fs.getFileStatus(new Path(s.base, f.path)).getLen
-    val (scoped, boundCols) = where.fold((s.files, Seq.empty[String]))(
-      scopeByPredicate(spark, s.schema, cm, s.files, _, api))
+    val (scoped, boundCols) = where.fold((s.files, Seq.empty[String])) { w =>
+      val p = Prune.of(spark, s.schema, w)
+      require(p.bounds.nonEmpty || p.nulls.nonEmpty,
+        s"TableLog.$api: the WHERE predicate yields no stats bounds — " +
+          "it would scope nothing out and silently pay the full-table " +
+          "rewrite; drop the WHERE or use a stats-analyzable predicate")
+      (p.keep(s.files, cm), (p.bounds.map(_._1) ++ p.nulls.map(_._1)).distinct)
+    }
     val cand = select(scoped, bytes)
     if (cand.isEmpty) return Left(s.version)
     val nOut = math.max(1,
@@ -1232,30 +1242,6 @@ object TableLog {
     if (cols.isEmpty) df.coalesce(nOut)
     else df.repartitionByRange(nOut, cols.map(col): _*)
       .sortWithinPartitions(cols.map(col): _*)
-  }
-
-  /** Files whose manifest stats OVERLAP `pred`'s conservative box plus
-    * the LOGICAL column names the box constrains — the `WHERE` scoping
-    * shared by [[compactTable]] and [[compactSmallFiles]]. A predicate
-    * with no analyzable bounds refuses loudly: `mayOverlap` keeps every
-    * file for it, which would silently pay exactly the full-table
-    * rewrite the caller used WHERE to avoid.
-    */
-  private def scopeByPredicate(spark: SparkSession, schema: StructType,
-                               cm: Map[String, String], files: Seq[AddFile],
-                               pred: org.apache.spark.sql.Column,
-                               who: String): (Seq[AddFile], Seq[String]) = {
-    val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val bounds = boundsFromPredicate(probe, pred)
-    val ns0 = nullShapesFromPredicate(probe, pred)
-    require(bounds.nonEmpty || ns0.nonEmpty,
-      s"TableLog.$who: the WHERE predicate yields no stats bounds — " +
-        "it would scope nothing out and silently pay the full-table " +
-        "rewrite; drop the WHERE or use a stats-analyzable predicate")
-    val pb = physBounds(cm, bounds)
-    val ns = physNullShapes(cm, ns0)
-    (files.filter(f => mayOverlap(f, pb) && mayPassNullShapes(f, ns)),
-      (bounds.map(_._1) ++ ns0.map(_._1)).distinct)
   }
 
   /** `RESTORE TABLE … TO VERSION` as a ZERO-COPY commit: roll the table
@@ -3523,7 +3509,7 @@ object TableLog {
     if (intervening.exists(c => c.op == "constraint" || c.op == "notnull"))
       return None
     if (readBounds.nonEmpty &&
-        intervening.exists(_.add.exists(f => mayOverlap(f, readBounds))))
+        intervening.exists(_.add.exists(Prune(readBounds).mayHold)))
       return None
     Option.when(txn.forall { case (app, batch) =>
       intervening.forall(_.txn match {
@@ -3840,21 +3826,19 @@ object TableLog {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** Predicate-pruned scan — [[scanPruned]] with the bounds DERIVED
-    * from the predicate's own analyzed expression tree (the same
-    * conservative [[boundsFromPredicate]] the row-level CoW ops use)
-    * AND the exact predicate applied on the result: one call plans the
-    * file-listing prune and returns rows that actually satisfy the
-    * filter. An unanalyzable predicate simply reads everything —
-    * correctness never depends on the analysis.
+  /** Predicate-pruned scan — the files the predicate's own [[Prune]]
+    * keeps (the rule the row-level CoW ops use; manifest stats only,
+    * no footer is opened) AND the exact predicate applied on the
+    * result: one call plans the file-listing prune and returns rows
+    * that actually satisfy the filter. An unanalyzable predicate simply
+    * reads everything — correctness never depends on the analysis.
     */
   def scanWhere(spark: SparkSession, dir: String,
                 predicate: org.apache.spark.sql.Column,
                 version: Long = -1L): PrunedScan = {
     val s = snap(spark, dir, version, "scanWhere")
-    val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s.schema)
-    val pruned = prunedScan(spark, s, boundsFromPredicate(probe, predicate),
-      nullShapesFromPredicate(probe, predicate))
+    val pruned = scanKept(spark, s,
+      Prune.of(spark, s.schema, predicate).keep(s.files, s.meta.colmap))
     pruned.copy(df = pruned.df.filter(predicate))
   }
 
@@ -3868,18 +3852,15 @@ object TableLog {
   def scanPruned(spark: SparkSession, dir: String,
                  bounds: Seq[(String, Any, Any)],
                  version: Long = -1L,
-                 nullShapes: Seq[(String, Boolean)] = Nil): PrunedScan =
-    prunedScan(spark, snap(spark, dir, version, "scanPruned"), bounds, nullShapes)
-
-  private def prunedScan(spark: SparkSession, s: Snap,
-                         bounds: Seq[(String, Any, Any)],
-                         nullShapes: Seq[(String, Boolean)]): PrunedScan = {
-    val cm = s.meta.colmap
-    val ns = physNullShapes(cm, nullShapes)
-    val kept = s.files.filter(f =>
-      mayOverlap(f, physBounds(cm, bounds)) && mayPassNullShapes(f, ns))
-    PrunedScan(readWithDv(spark, s.dir, s.schema, kept, cm), kept.length, s.files.length)
+                 nullShapes: Seq[(String, Boolean)] = Nil): PrunedScan = {
+    val s = snap(spark, dir, version, "scanPruned")
+    scanKept(spark, s, Prune(bounds, nullShapes).keep(s.files, s.meta.colmap))
   }
+
+  /** A read of `s` over only its `kept` entries. */
+  private def scanKept(spark: SparkSession, s: Snap, kept: Seq[AddFile]): PrunedScan =
+    PrunedScan(readWithDv(spark, s.dir, s.schema, kept, s.meta.colmap),
+      kept.length, s.files.length)
 
   /** Below this many candidate files, per-file footer work (bloom
     * probes, stats harvesting) runs as a plain driver loop — a Spark
@@ -3940,50 +3921,31 @@ object TableLog {
   }
 
   /** Point-lookup scan: plan a read over only the files that might hold
-    * ANY of `values` in `column`. Two pruning phases, both before any
-    * scan task launches: (1) manifest min/max — a file is kept if some
-    * value falls inside its recorded range; (2) the parquet BLOOM
-    * FILTER of each survivor (written via [[bloomOptions]]; a
-    * footer-adjacent read, no data pages) — a file whose every row
-    * group's bloom rules out every value is skipped. Min/max is
-    * useless for point lookups on a high-cardinality key whose range
-    * spans every file; the bloom phase is what makes a needle lookup
-    * on a 100 TB table cost O(footers) + O(matching files). Files
-    * without stats or blooms for the column are always kept, and the
-    * exact equality predicate still belongs to the caller.
+    * ANY of `values` in `column` (a logical name; nested paths and
+    * renamed columns translate like every other rule). Two pruning
+    * phases, both before any scan task launches: the point [[Prune]]
+    * against manifest min/max, then the bloom phase ([[bloomKeep]]) —
+    * min/max is useless for a high-cardinality key whose range spans
+    * every file, so the blooms are what make a needle lookup on a
+    * 100 TB table cost O(footers) + O(matching files). The exact
+    * equality predicate still belongs to the caller.
     *
-    * The bloom phase is DISTRIBUTED once the stats survivors exceed
-    * [[DistributeFileOpsThreshold]]: survivors partition across
-    * executor tasks, each task probes its files' footers, and only the
-    * kept paths come back — the driver never opens a footer itself, so
-    * planning cost is O(files / cluster) wall-clock and O(paths)
-    * driver memory however large the table is. (`threshold` is a test
-    * seam as much as a knob: the equivalence spec pins driver-path ==
-    * executor-path on the same fixture.)
+    * The bloom phase is DISTRIBUTED once the stats survivors reach
+    * `threshold` ([[DistributeFileOpsThreshold]]): survivors partition
+    * across executor tasks, each task probes its files' footers, and
+    * only the verdicts come back — the driver never opens a footer
+    * itself, so planning cost is O(files / cluster) wall-clock and
+    * O(paths) driver memory however large the table is. (`threshold`
+    * is a test seam as much as a knob: the equivalence spec pins
+    * driver-path == executor-path on the same fixture.)
     */
   def scanPointLookup(spark: SparkSession, dir: String, column: String,
                       values: Seq[Any], version: Long = -1L,
                       threshold: Int = DistributeFileOpsThreshold): PrunedScan = {
     require(values.nonEmpty, "TableLog.scanPointLookup: values must be non-empty")
     val s = snap(spark, dir, version, "scanPointLookup")
-    val cm = s.meta.colmap
-    val physCol = cm.getOrElse(column, column)
-    val statsKept = s.files.filter(f => f.stats.get(physCol) match {
-      case Some(NumStat(mn, mx)) => values.exists {
-        case n: Number => n.doubleValue() >= mn && n.doubleValue() <= mx
-        case _ => true
-      }
-      case Some(StrStat(mn, mx)) => values.exists {
-        case s: String => s >= mn && s <= mx
-        case _ => true
-      }
-      case None => true
-    })
-    val probeValues = values.toList // List serializes cleanly into the task closure
-    val verdicts = mapOverFooters(spark, s.base, statsKept.map(_.path), threshold)(
-      (c, p) => bloomMightContain(c, p, physCol, probeValues))
-    val kept = statsKept.zip(verdicts).collect { case (f, true) => f }
-    PrunedScan(readWithDv(spark, dir, s.schema, kept, cm), kept.length, s.files.length)
+    scanKept(spark, s, bloomKeep(spark, s.base, s.files, Prune(points = Some(column -> values)),
+      s.meta.colmap, threshold))
   }
 
   /** ERASURE AUDIT — prove a set of keys no longer exists in the live
@@ -4854,11 +4816,6 @@ object TableLog {
       if (res == null) c else res
     })
 
-  private def physBounds(cm: Map[String, String],
-                         bounds: Seq[(String, Any, Any)]): Seq[(String, Any, Any)] =
-    if (cm.isEmpty) bounds
-    else bounds.map { case (c, lo, hi) => (physPath(cm, c), lo, hi) }
-
   /** The schema with every field renamed to its PHYSICAL name — what
     * the parquet reader must request (requesting a renamed logical
     * name would silently null-fill the column).
@@ -4884,35 +4841,12 @@ object TableLog {
   }
 
   /** The open side of a one-sided STRING bound (strings have no ±∞
-    * literal the way doubles do) — [[mayOverlap]] treats it as
+    * literal the way doubles do) — [[Prune.mayHold]] treats it as
     * unbounded; every other consumer's concrete-type matches skip it
     * conservatively. Internal to the bounds machinery: public
     * `scanPruned` callers keep passing concrete (lo, hi) pairs.
     */
   private[sinks] case object OpenBound
-
-  /** File-vs-bounds intersection — the one pruning rule: a file is kept
-    * unless its recorded stats PROVE no row can satisfy every bound
-    * (missing stats, type-mismatched bounds → keep; pruning must never
-    * be able to drop a row).
-    */
-  private def mayOverlap(f: AddFile, bounds: Seq[(String, Any, Any)]): Boolean =
-    bounds.forall { case (c, lo, hi) =>
-      f.stats.get(c) match {
-        case Some(NumStat(mn, mx)) => (lo, hi) match {
-          case (l: Number, h: Number) =>
-            !(mx < l.doubleValue() || mn > h.doubleValue())
-          case _ => true
-        }
-        case Some(StrStat(mn, mx)) => (lo, hi) match {
-          case (l: String, h: String) => !(mx < l || mn > h)
-          case (l: String, OpenBound) => !(mx < l)
-          case (OpenBound, h: String) => !(mn > h)
-          case _ => true
-        }
-        case None => true
-      }
-    }
 
   private def commitPath(base: Path, v: Long): Path =
     new Path(base, f"_log/$v%020d.json")
@@ -5178,7 +5112,7 @@ object TableLog {
     *
     * DECIMAL columns: parquet physical stats for a decimal are the
     * UNSCALED integer (12.34 stored as 1234 under scale 2) while every
-    * probe — [[boundsFromPredicate]] literals, [[mergeInto]]'s key
+    * probe — [[Prune]] literals, [[mergeInto]]'s key
     * bounding box, caller-supplied [[scanPruned]] bounds — compares in
     * SCALED value space. The stats are rescaled here at harvest time
     * using the column's decimal logical-type annotation, so the two

@@ -19,8 +19,8 @@ import graft.sinks.TableLog
   * the thin public-API seam whose `buildScan(requiredColumns, filters)`
   * hands the WHOLE read to the table log's existing machinery:
   * pushed-down filters re-materialize as a `Column` predicate routed
-  * through [[TableLog.scanWhere]] (`boundsFromPredicate` →
-  * `scanPruned`), so manifest stats prune FILES before any scan task
+  * through [[TableLog.scanWhere]] (the predicate's derived
+  * `TableLog.Prune`), so manifest stats prune FILES before any scan task
   * plans, deletion vectors anti-apply on the survivors, and the same
   * predicate lands on the inner parquet scan for row-group/page
   * pushdown. Column pruning projects before execution, so the parquet

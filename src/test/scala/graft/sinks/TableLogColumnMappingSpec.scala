@@ -111,6 +111,23 @@ class TableLogColumnMappingSpec extends SparkSpec {
     assert(TableLog.readAt(spark, dir).count() == 3999L)
   }
 
+  test("point lookup on a field of a renamed struct prunes through the mapping") {
+    val dir = tmpDir("tlcm_nested_point")
+    TableLog.append(spark, dir,
+      spark.range(0, 400).select(col("id").as("k"),
+        struct((col("id") % 100).as("qty")).as("payload"))
+        .repartitionByRange(4, col("payload.qty")),
+      statsCols = Seq("payload.qty"))
+    TableLog.renameColumn(spark, dir, "payload", "body")
+    // the map holds only the struct's head: body.qty must translate by
+    // its dotted prefix to the stats key payload.qty
+    assert(TableLog.columnMappingAt(spark, dir) == Map("body" -> "payload"))
+    val pr = TableLog.scanPointLookup(spark, dir, "body.qty", Seq(42L))
+    assert(pr.filesRead < pr.filesTotal,
+      s"nested point lookup must prune via the physical path (read ${pr.filesRead}/${pr.filesTotal})")
+    assert(pr.df.filter(col("body.qty") === 42L).count() == 4L)
+  }
+
   test("rename refusals: unknown, duplicate logical, physical collision, constraint, dv names") {
     val dir = tmpDir("tlcm_refuse")
     TableLog.append(spark, dir, Seq((1L, "a", 1.0)).toDF("k", "s", "price"))

@@ -1385,7 +1385,7 @@ class TableLogSpec extends SparkSpec {
 
   test("boundsFromPredicate: provable shapes bound, everything else conservatively doesn't") {
     val probe = Seq.empty[(Long, Long, String)].toDF("x", "y", "s")
-    def b(c: org.apache.spark.sql.Column) = TableLog.boundsFromPredicate(probe, c)
+    def b(c: org.apache.spark.sql.Column) = TableLog.Prune.of(spark, probe.schema, c).bounds
     // closed range from between (two conjunctive bounds)
     assert(b(col("x").between(1, 5)).toSet ==
       Set(("x", 1L, Double.PositiveInfinity), ("x", Double.NegativeInfinity, 5L)))
