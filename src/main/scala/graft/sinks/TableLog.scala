@@ -769,8 +769,10 @@ object TableLog {
         }
       } && points.forall { case (c, vs) =>
         f.stats.get(c) match {
+          // the bounds arm's negated form, so a NaN point keeps the file:
+          // a writer may leave NaN out of min/max; `d = NaN` matches NaN
           case Some(NumStat(mn, mx)) => vs.exists {
-            case n: Number => n.doubleValue() >= mn && n.doubleValue() <= mx
+            case n: Number => !(n.doubleValue() < mn || n.doubleValue() > mx)
             case _ => true
           }
           case Some(StrStat(mn, mx)) => vs.exists {
@@ -896,7 +898,8 @@ object TableLog {
               val vals = lits.flatten
               if (vals.nonEmpty && vals.forall(numeric)) {
                 val ds = vals.map(_.asInstanceOf[Number].doubleValue())
-                Seq((c, ds.min, ds.max))
+                // a NaN member bounds nothing: min/max may leave NaN out
+                if (ds.exists(_.isNaN)) Nil else Seq((c, ds.min, ds.max))
               } else if (vals.nonEmpty && vals.forall(_.isInstanceOf[String])) {
                 val ss = vals.map(_.asInstanceOf[String])
                 Seq((c, ss.min, ss.max))
@@ -975,8 +978,9 @@ object TableLog {
     */
   private def bloomKeep(spark: SparkSession, base: Path, files: Seq[AddFile],
                         p: Prune, cm: Map[String, String], threshold: Int): Seq[AddFile] = {
-    val kept = p.keep(files, cm)
-    p.phys(cm).points match {
+    val pp = p.phys(cm)
+    val kept = pp.keep(files, Map.empty)
+    pp.points match {
       case Some((c, vs)) =>
         val probes = vs.toList // List serializes cleanly into the task closure
         val verdicts = mapOverFooters(spark, base, kept.map(_.path), threshold)(
@@ -5141,14 +5145,19 @@ object TableLog {
       // "unknown" (absent), never a partial sum.
       val nullAcc = scala.collection.mutable.Map.empty[String, Long]
       val nullBad = scala.collection.mutable.Set.empty[String]
+      val statBad = scala.collection.mutable.Set.empty[String]
       for (b <- blocks; c <- b.getColumns.asScala) {
         val name = c.getPath.toDotString
         if (statsCols.contains(name)) {
-          val st0 = c.getStatistics
-          if (st0 != null && !st0.isEmpty && st0.isNumNullsSet && st0.getNumNulls >= 0L)
-            nullAcc(name) = nullAcc.getOrElse(name, 0L) + st0.getNumNulls
-          else nullBad += name
           val st = c.getStatistics
+          val nullsKnown = st != null && !st.isEmpty && st.isNumNullsSet && st.getNumNulls >= 0L
+          if (nullsKnown) nullAcc(name) = nullAcc.getOrElse(name, 0L) + st.getNumNulls
+          else nullBad += name
+          // a group holding values but no min/max (parquet drops a
+          // float range that saw a NaN) bounds nothing for the FILE:
+          // the other groups' range would leave out its rows
+          if (!(nullsKnown && st.getNumNulls == c.getValueCount) &&
+            !(st != null && !st.isEmpty && st.hasNonNullValue)) statBad += name
           if (st != null && !st.isEmpty && st.hasNonNullValue) {
             val prim = c.getPrimitiveType
             val decScale: Option[Int] = prim.getLogicalTypeAnnotation match {
@@ -5173,10 +5182,11 @@ object TableLog {
                 // NaN/±Infinity are legal parquet float stats but render
                 // as unquoted tokens — invalid JSON that would poison
                 // every later manifest parse; such a column simply
-                // carries no stats for this file (scanPruned keeps it)
+                // carries no stats for this file (scanPruned keeps it),
+                // whatever the other groups hold
                 if (java.lang.Double.isFinite(mn) && java.lang.Double.isFinite(mx))
                   Some(NumStat(mn, mx))
-                else None
+                else { statBad += name; None }
               case FIXED_LEN_BYTE_ARRAY | BINARY if decScale.isDefined =>
                 // wide decimals (precision > 18): big-endian two's-
                 // complement unscaled bytes, same rescale
@@ -5201,7 +5211,7 @@ object TableLog {
           }
         }
       }
-      (rows, acc.toMap, (nullAcc -- nullBad).toMap)
+      (rows, (acc -- statBad).toMap, (nullAcc -- nullBad).toMap)
     } finally reader.close()
   }
 

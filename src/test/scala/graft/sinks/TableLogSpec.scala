@@ -1404,7 +1404,7 @@ class TableLogSpec extends SparkSpec {
     assert(b(col("x") === 1 || col("y") === 2).isEmpty)
     // strings have no top element: one-sided string comparisons bound
     // with the OpenBound sentinel on their open side (round 16 — what
-    // lets a string-band WHERE scope/prune; mayOverlap checks only the
+    // lets a string-band WHERE scope/prune; Prune.mayHold checks only the
     // closed side, every other consumer skips the sentinel
     // conservatively)
     assert(b(col("s") > "m").map(_._1) == Seq("s"))
@@ -1879,6 +1879,45 @@ class TableLogSpec extends SparkSpec {
     assert(after.df.isEmpty)
     assert(after.filesRead < after.filesTotal,
       "post-delete manifests still prune the IS NULL shape")
+  }
+
+  test("non-finite floats: NaN and Infinity rows are never pruned away") {
+    val dir = tmpDir("tlog_nan")
+    // a 1-byte block size closes a row group at every 100-row check:
+    // groups 0-1 are finite, group 2 holds the NaN and the +Infinity
+    val d = when(col("id") === 250L, lit(Double.NaN))
+      .when(col("id") === 260L, lit(Double.PositiveInfinity))
+      .otherwise(col("id") * 1.0)
+    TableLog.append(spark, dir, spark.range(0, 300).select(col("id").as("k"), d.as("d"))
+      .coalesce(1), statsCols = Seq("d"),
+      writeOptions = TableLog.bloomOptions(Seq("d"), expectedNdv = 1000L) +
+        ("parquet.block.size" -> "1"))
+    TableLog.append(spark, dir, Seq((1000L, 1000.0)).toDF("k", "d").coalesce(1),
+      statsCols = Seq("d"))
+    val full = TableLog.readAt(spark, dir)
+    val isNaN = col("d") === Double.NaN
+    Seq(isNaN, col("d").isin(5000.0, Double.NaN), col("d") > 2000.0,
+      col("d") === Double.PositiveInfinity).foreach { p =>
+      assert(TableLog.scanWhere(spark, dir, p).df.count() == full.filter(p).count(),
+        s"scanWhere $p")
+    }
+    assert(TableLog.scanPointLookup(spark, dir, "d", Seq(Double.NaN), threshold = 1)
+      .df.filter(isNaN).count() == 1L)
+    val live = TableLog.liveFilesAt(spark, dir)
+    // the NaN group left the file without a range: no stats, kept
+    assert(live.filter(_.rows == 300L).map(_.stats) == Seq(Map.empty))
+    assert(TableLog.dvTouchSet(spark, new org.apache.hadoop.fs.Path(dir), live,
+      TableLog.schemaAt(spark, dir), isNaN).exists(_.rows == 300L))
+    TableLog.deleteWhere(spark, dir, isNaN || col("d") > 2000.0, statsCols = Seq("d"))
+    assert(TableLog.readAt(spark, dir).filter(col("k").isin(250L, 260L)).isEmpty)
+    assert(TableLog.readAt(spark, dir).count() == 299L)
+    // a NaN point still keeps a file whose min/max skip it: parquet may
+    // leave NaN out of a row group's min/max
+    val withNaN = TableLog.AddFile("f", 3L, Map("d" -> TableLog.NumStat(1.0, 2.0)))
+    Seq(isNaN, col("d").isin(5.0, Double.NaN)).foreach { p =>
+      assert(TableLog.Prune.of(spark, TableLog.schemaAt(spark, dir), p)
+        .keep(Seq(withNaN), Map.empty) == Seq(withNaN), s"Prune $p")
+    }
   }
 
   test("bloom point lookups on DECIMAL columns probe the unscaled domain") {

@@ -37,11 +37,15 @@ def main(paths):
     if not paths:
         sys.exit(__doc__.strip())
     total_raw = total_code = 0
+    seen = set()  # a file named twice (itself and its directory) counts once
     for p in paths:
         found = files(p)
         if not found:
             sys.exit(f"loc.py: no source files at {p}")
         for f in found:
+            if os.path.realpath(f) in seen:
+                continue
+            seen.add(os.path.realpath(f))
             raw, code = count(f)
             total_raw += raw
             total_code += code
