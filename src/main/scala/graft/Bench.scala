@@ -1,21 +1,42 @@
 package graft
 
-/** Per-round benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR,
-  * one warmup pass + one timed pass each (the warmup absorbs JIT +
-  * whole-stage codegen compilation, which a long-lived cluster amortizes),
-  * printing ONE JSON line the driver archives as BENCH_r{N}.json.
+/** Per-round benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR
+  * (SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the set), one warmup pass (it
+  * absorbs JIT + codegen, which a long-lived cluster amortizes), then
+  * best-of-5 with the median alongside. Stdout carries the JSON lines
+  * archived as BENCH_r{N}.json; the full archive goes to
+  * SPARK_GRAFT_BENCH_OUT. One more UNTIMED pass per query, with an
+  * [[ObsLog]] attached, adds its [[Layers]] to the archive and its
+  * formatted plan to `<archive stem>.plans/<query>.txt`.
   */
 object Bench {
+  private type Query = (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  /** One query's `layers` entry, snake_case in the archive: `build_ms`, the
+    * registry function (eager fixture writes, localCheckpoints, collects);
+    * `exec_ms`, the noop write; Catalyst's `analysis_ms`, `optimization_ms`,
+    * `planning_ms` over the pass's actions; `jobs`, `stages`, `tasks`;
+    * `run_ms`, `cpu_ms`, `gc_ms`, `shuffle_write_bytes`,
+    * `shuffle_read_bytes`, `spill_bytes` summed over the stages;
+    * `max_task_ms`, the longest task; `top_stages`, the 8 stages with the
+    * most run time.
+    */
+  final case class Layers(buildMs: Long, execMs: Long, analysisMs: Long,
+                          optimizationMs: Long, planningMs: Long, jobs: Int, stages: Int,
+                          tasks: Long, runMs: Long, cpuMs: Long, gcMs: Long,
+                          shuffleWriteBytes: Long, shuffleReadBytes: Long, spillBytes: Long,
+                          maxTaskMs: Long, topStages: Seq[ObsLog.Stage])
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
     // noop sink, not count(): count() lets Catalyst prune computed columns
     // (a projection-heavy query would be timed as a bare scan), while noop
     // materializes every output column exactly like a real write.
-    def exec(name: String, fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+    def exec(name: String, fn: Query): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
     // SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run (iterating on one
-    // operator without paying the full 75-query sweep); unset = all.
+    // operator without paying the full sweep); unset = all.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
@@ -44,6 +65,37 @@ object Bench {
       val stable = math.abs(c - calPrev) / math.max(c, calPrev) < 0.15
       calPrev = c; !stable }) calW += 1
     val calBefore = (1 to 3).map(_ => calibrate()).min
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      "bench/BENCH_LOCAL.json")
+    val plansDir = java.nio.file.Paths.get(outPath.stripSuffix(".json") + ".plans")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .registerModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+      .setPropertyNamingStrategy(com.fasterxml.jackson.databind.PropertyNamingStrategies.SNAKE_CASE)
+    val layers = scala.collection.mutable.LinkedHashMap.empty[String, Layers]
+    // where the query's wall time went, from one untimed pass with an
+    // ObsLog attached (the timed passes run with no listener)
+    def layerPass(name: String, fn: Query): Unit = {
+      ObsLog.drain(spark) // the timed passes' events must not reach this log
+      val log = ObsLog.attach(spark)
+      val t0 = System.nanoTime()
+      val (df, t1, t2) = try {
+        val df = fn(spark, sfDir)
+        val t1 = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+        (df, t1, System.nanoTime())
+      } finally { ObsLog.drain(spark); ObsLog.detach(spark, log) }
+      val (a, st) = (log.actions, log.stages)
+      def sum(f: ObsLog.Stage => Long) = st.map(f).sum
+      layers(name) = Layers((t1 - t0) / 1000000L, (t2 - t1) / 1000000L,
+        a.map(_.analysisMs).sum, a.map(_.optimizationMs).sum, a.map(_.planningMs).sum,
+        log.jobs.size, st.size, sum(_.tasks), sum(_.runMs), sum(_.cpuMs), sum(_.gcMs),
+        sum(_.shuffleWriteBytes), sum(_.shuffleReadBytes), sum(_.spillBytes),
+        st.map(_.maxTaskMs).maxOption.getOrElse(0L), st.sortBy(-_.runMs).take(8))
+      java.nio.file.Files.createDirectories(plansDir)
+      java.nio.file.Files.writeString(plansDir.resolve(s"$name.txt"),
+        df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      ()
+    }
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
         val w0 = System.nanoTime()
@@ -64,6 +116,8 @@ object Bench {
         val t = passes.head
         val med = passes(passes.length / 2)
         System.err.println(f"[bench] $name%-28s warm=$warmSec%8.2f best=$t%8.2f med=$med%8.2f")
+        try layerPass(name, fn) catch { case e: Throwable =>
+          System.err.println(s"[bench] $name layers FAILED: ${e.getMessage}") }
         name -> (t, med)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
@@ -87,12 +141,11 @@ object Bench {
       if (!java.nio.file.Files.isDirectory(dir)) Map.empty
       else {
         import scala.jdk.CollectionConverters._
-        val m = new com.fasterxml.jackson.databind.ObjectMapper()
         java.nio.file.Files.list(dir).iterator().asScala
           .filter(_.getFileName.toString.matches("BENCH_LOCAL.*\\.json"))
           .flatMap { p =>
             try {
-              val n = m.readTree(java.nio.file.Files.readString(p))
+              val n = mapper.readTree(java.nio.file.Files.readString(p))
               if (n.path("sf").asText() != sfDir) Iterator.empty
               else n.path("queries_best").properties().asScala.iterator
                 .map(e => e.getKey -> e.getValue.asDouble())
@@ -239,14 +292,13 @@ object Bench {
     // shows the scrape never worked) — a file has no tail problem. The
     // driver can ingest it via SPARK_GRAFT_BENCH_OUT; the repo commits
     // it per round as bench/BENCH_LOCAL_r{N}.json regardless.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "bench/BENCH_LOCAL.json")
     try {
       val full =
         s"""{"metric":"full","total_best":$total,"total_median":$totalMed,""" +
           s""""n_queries":${results.length},"contended":$contended,""" +
           s""""contended_n":$contendedN,"adjudicated":$adjJson,$envJson$recallJson,""" +
-          s""""sf":"$sfDir","queries_best":$qs,"queries_median":$med}"""
+          s""""sf":"$sfDir","queries_best":$qs,"queries_median":$med,""" +
+          s""""layers":${mapper.writeValueAsString(layers)}}"""
       val p = java.nio.file.Paths.get(outPath)
       Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.writeString(p, full + "\n")

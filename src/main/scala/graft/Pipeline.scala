@@ -63,10 +63,11 @@ object Pipeline {
     * carry the descriptions `graft.Pipeline <runId>: gate` and `…: load`.
     *
     * Ungated: an observed row-count metric is attached to the plan `load`
-    * writes, so the count is a by-product of the load job. If the loader
-    * never runs an action (a dry-run loader), the observation is empty and
-    * the count falls back to a separate pass — correctness over economy in
-    * the odd case.
+    * writes, so the count is a by-product of the load job; the count is
+    * read once `load` has returned and the listener bus has drained
+    * ([[ObsLog.drain]]). If the loader never runs an action (a dry-run
+    * loader), or the bus does not drain in time, the count falls back to a
+    * separate pass — correctness over economy in the odd case.
     */
   def run(spark: SparkSession, runId: String,
           extract: => DataFrame,
@@ -76,8 +77,7 @@ object Pipeline {
           logPath: Option[String] = None,
           now: () => java.sql.Timestamp =
             () => new java.sql.Timestamp(System.currentTimeMillis()),
-          stageLabel: String = "pipeline",
-          observeWaitMs: Long = 5000L): RunReport = {
+          stageLabel: String = "pipeline"): RunReport = {
 
     val transformed = stages.foldLeft(extract)((df, s) => s.transform(df))
 
@@ -106,16 +106,12 @@ object Pipeline {
         spark.listenerManager.register(listener)
         try {
           load(observed)
-          // metrics arrive via the asynchronous listener bus: wait briefly
-          // for the load job's event, then fall back to a separate count —
-          // a 2× cost paid only when the loader ran no action at all (or
-          // the bus is pathologically backlogged), never silently wrong.
-          // A dry-run loader (plan-validation only, no action) pays the
-          // full wait before the fallback — pass a small `observeWaitMs`
-          // on such paths instead of the bus-backlog-tolerant default
-          val deadline = System.nanoTime() + observeWaitMs * 1000 * 1000
-          while (seen.get < 0 && System.nanoTime() < deadline) Thread.sleep(25)
-          (if (seen.get >= 0) seen.get else transformed.count(), Nil)
+          // metrics arrive via the asynchronous listener bus: once it has
+          // drained, every action `load` ran has been seen, the write
+          // included. A separate count — a 2× cost — is paid only when the
+          // loader ran no action at all or the bus did not drain in time,
+          // never a probe's count taken for the load's
+          (if (ObsLog.drain(spark) && seen.get >= 0) seen.get else transformed.count(), Nil)
         } finally spark.listenerManager.unregister(listener)
     }
     val aborted = gateFailures.nonEmpty

@@ -66,3 +66,11 @@ object GraftPlanShim {
     }
   }
 }
+
+/** The listener bus is `private[spark]`; [[graft.ObsLog.drain]] waits on
+  * it. No behavior lives here.
+  */
+object GraftBusShim {
+  def waitUntilEmpty(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+}

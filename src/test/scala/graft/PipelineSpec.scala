@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -121,11 +120,9 @@ class PipelineSpec extends SparkSpec {
       // exactly two actions: the gate's materializing checkpoint (which
       // carries the gate's counters and the row count) + the load write —
       // no validation collect, no separate count() job
-      val eventually = (1 to 100).iterator
-        .map { _ => Thread.sleep(25); obsLog.toDF(spark).count() }
-        .find(_ >= 2)
-      assert(eventually.contains(2L),
-        s"expected 2 actions (gate + load), saw ${obsLog.toDF(spark).count()}")
+      assert(ObsLog.drain(spark), "listener bus did not drain")
+      val actions = obsLog.actions.size
+      assert(actions == 2, s"expected 2 actions (gate + load), saw $actions")
     } finally ObsLog.detach(spark, obsLog)
   }
 
@@ -200,6 +197,18 @@ class PipelineSpec extends SparkSpec {
       load = df => { if (!df.isEmpty) graft.sinks.DataSink.writeParquet(df, s"$dir/out") })
     assert(report.loaded == 3, s"guard probe leaked into loaded=${report.loaded}")
     assert(spark.read.parquet(s"$dir/out").count() == 3)
+    // over four partitions the probe's event lands well before the write's
+    (1 to 8).foreach { i =>
+      val r = Pipeline.run(spark, s"run-guard-$i", spark.range(0, 200000, 1, 4).toDF("id"),
+        Nil, None, df => { if (!df.isEmpty) graft.sinks.DataSink.writeParquet(df, s"$dir/out$i") })
+      assert(r.loaded == 200000L, s"run $i: guard probe leaked into loaded=${r.loaded}")
+    }
+  }
+
+  test("a loader that runs no action still reports the full count") {
+    var loadCalled = false
+    val report = Pipeline.run(spark, "run-dry", source, Nil, None, _ => loadCalled = true)
+    assert(loadCalled && report.loaded == 3L && !report.aborted)
   }
 
   test("runAll isolates a crashing arm: other arms load and all rows logged") {
@@ -287,42 +296,30 @@ class PipelineSpec extends SparkSpec {
     assert(!report.aborted && loadCalled)
   }
 
-  /** Records each job's description and each executed query's file-scan
-    * roots. Both listener kinds sit on the shared listener-bus queue, so
-    * once `drain`'s sentinel job has been seen, every earlier event has.
+  /** Records each executed query's file-scan roots; the job descriptions
+    * come from the ObsLog attached with it. Read both after `drain`.
     */
-  private final class Tap extends SparkListener with QueryExecutionListener
+  private final class Tap(log: ObsLog) extends QueryExecutionListener
       with AdaptiveSparkPlanHelper {
-    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def descriptions: Seq[String] = log.jobs.flatMap(_.description)
     val scanRoots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      descriptions.add(String.valueOf(e.properties.getProperty("spark.job.description")))
     override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
       collectWithSubqueries(qe.executedPlan) {
         case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
       }.flatten.foreach(scanRoots.add)
     override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
 
-    def drain(): Unit = {
-      val sentinel = s"tap-sentinel-${java.util.UUID.randomUUID()}"
-      val sc = spark.sparkContext
-      val prev = sc.getLocalProperty("spark.job.description")
-      sc.setJobDescription(sentinel)
-      try spark.range(1).count() finally sc.setLocalProperty("spark.job.description", prev)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!descriptions.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(descriptions.contains(sentinel), "listener bus did not drain")
-    }
+    def drain(): Unit = assert(ObsLog.drain(spark), "listener bus did not drain")
   }
 
   private def tapped[A](body: Tap => A): A = {
-    val tap = new Tap
-    spark.sparkContext.addSparkListener(tap)
+    val log = ObsLog.attach(spark)
+    val tap = new Tap(log)
     spark.listenerManager.register(tap)
     try body(tap)
     finally {
-      spark.sparkContext.removeSparkListener(tap)
       spark.listenerManager.unregister(tap)
+      ObsLog.detach(spark, log)
     }
   }
 
@@ -479,7 +476,7 @@ class PipelineSpec extends SparkSpec {
         assert(sc.getLocalProperty("spark.job.description") == "caller's job")
       } finally sc.setJobDescription(null)
       tap.drain()
-      val seen = tap.descriptions.asScala.toSeq
+      val seen = tap.descriptions
       assert(seen.contains("graft.Pipeline run-desc: gate"), seen)
       assert(seen.contains("graft.Pipeline run-desc: load"), seen)
     }

@@ -49,33 +49,24 @@ object ScaleProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
 
-    def timed(df: => DataFrame): Double = {
-      df.write.format("noop").mode("overwrite").save() // warm
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val only = args.toSet
-    /** Self-measuring probe: 1× and 16× timed back-to-back, same JVM. */
-    def probe(name: String)(base: => DataFrame)(big: => DataFrame): Unit = {
-      if (only.nonEmpty && !only.contains(name)) return
-      val oneX = timed(base)
-      val t = timed(big)
-      println(f"[scale] $name%-22s ${Mult}x=${t}%6.2f s   1x=${oneX}%5.2f s   ratio=${t / oneX}%5.1f (linear=$Mult)")
-    }
-    /** Probe variant for cache-bearing operators (the span family persists
-      * its window table internally): each pass builds, writes AND releases,
-      * so the timed pass pays the full pipeline instead of reading the
-      * warmup's cache — the honest cold-path cost.
+    /** Each pass builds and runs, so the timed pass pays the full pipeline
+      * (plan, build, write) — and, for cache-bearing operators (the span
+      * family persists its window table internally), releases its cache
+      * instead of reading the warmup's: the honest cold-path cost.
       */
-    def timedRun(run: () => Unit): Double = {
+    def timed(run: () => Unit): Double = {
       run() // warm
       val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
     }
-    def probeRun(name: String)(base: () => Unit)(big: () => Unit): Unit = {
+    /** A frame's pass: build it and write it to the noop sink. */
+    def sink(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+    def noop(df: => DataFrame): () => Unit = () => sink(df)
+    val only = args.toSet
+    /** Self-measuring probe: 1× and 16× timed back-to-back, same JVM. */
+    def probe(name: String)(base: () => Unit)(big: () => Unit): Unit = {
       if (only.nonEmpty && !only.contains(name)) return
-      val oneX = timedRun(base)
-      val t = timedRun(big)
+      val oneX = timed(base)
+      val t = timed(big)
       println(f"[scale] $name%-22s ${Mult}x=${t}%6.2f s   1x=${oneX}%5.2f s   ratio=${t / oneX}%5.1f (linear=$Mult)")
     }
 
@@ -88,34 +79,34 @@ object ScaleProbe {
     val ev = amplify("events", ev1, Seq("event_id", "user_id"), 10_000_000L)
     val docs = amplify("documents", docs1, Seq("doc_id"), 10_000_000L)
 
-    probe("pricing_summary") { Analytics.pricingSummary(li1) } {
+    probe("pricing_summary")(noop { Analytics.pricingSummary(li1) })(noop {
       Analytics.pricingSummary(li)
-    }
+    })
     // fact side replicated WITHOUT key remap (dims are fixed): the join
     // must scale with the fact scan, dims broadcast either way
-    probe("star_join") {
+    probe("star_join")(noop {
       Analytics.starJoin(li1, Tables.part(spark, d),
         Tables.supplier(spark, d), Tables.nation(spark, d))
-    } {
+    })(noop {
       Analytics.starJoin(li, Tables.part(spark, d),
         Tables.supplier(spark, d), Tables.nation(spark, d))
-    }
-    probe("sessionize") { Analytics.sessionize(ev1, 30) } {
+    })
+    probe("sessionize")(noop { Analytics.sessionize(ev1, 30) })(noop {
       Analytics.sessionize(ev, 30)
-    }
-    probe("minhash_buckets") { Dedup.minhashBandBuckets(docs1, "doc_id", "text") } {
+    })
+    probe("minhash_buckets")(noop { Dedup.minhashBandBuckets(docs1, "doc_id", "text") })(noop {
       Dedup.minhashBandBuckets(docs, "doc_id", "text")
-    }
-    probe("dedup_keepfirst") {
+    })
+    probe("dedup_keepfirst")(noop {
       Cleaning.dedupKeepFirst(ev1, Seq("user_id", "event_type"), "event_id")
-    } {
+    })(noop {
       Cleaning.dedupKeepFirst(ev, Seq("user_id", "event_type"), "event_id")
-    }
+    })
     def rules(x: DataFrame) = Validation.validate(x, Seq(
       Validation.rangeCheck("l_quantity", Some(1d), Some(50d), "error"),
       Validation.rangeCheck("l_discount", Some(0d), Some(0.05), "warning"),
       Validation.businessRule("tax_le_discount", col("l_tax") <= col("l_discount"))))
-    probe("validate_rules") { rules(li1) } { rules(li) }
+    probe("validate_rules")(noop { rules(li1) })(noop { rules(li) })
 
     // LSH pair extraction must scale with Σ bucket², not (16n)²: replicas
     // get a SMALL per-component deterministic perturbation (sin of
@@ -132,31 +123,31 @@ object ScaleProbe {
       .repartition(Runtime.getRuntime.availableProcessors())
       .write.mode("overwrite").parquet(embPath)
     val emb = spark.read.parquet(embPath)
-    probe("lsh_neardup_pairs") {
+    probe("lsh_neardup_pairs")(noop {
       Similarity.lshNearDupPairs(emb1, "vec_id", "embedding", dim = 64,
         numPlanes = 12, threshold = 0.9, numTables = 4)
-    } {
+    })(noop {
       Similarity.lshNearDupPairs(emb, "vec_id", "embedding", dim = 64,
         numPlanes = 12, threshold = 0.9, numTables = 4)
-    }
+    })
     // text/curation scans: the per-row constant IS the cost model here —
     // if these are linear, the 100 TB scan is too
-    probe("lang_id") { TextAnalysis.langIdFrame(docs1, "text") } {
+    probe("lang_id")(noop { TextAnalysis.langIdFrame(docs1, "text") })(noop {
       TextAnalysis.langIdFrame(docs, "text")
-    }
-    probe("text_repetition") { Curation.repetitionSignals(docs1, "text") } {
+    })
+    probe("text_repetition")(noop { Curation.repetitionSignals(docs1, "text") })(noop {
       Curation.repetitionSignals(docs, "text")
-    }
-    probe("redact_pii") {
+    })
+    probe("redact_pii")(noop {
       docs1.select(col("doc_id"), Curation.redactPII(col("text")).as("t"))
-    } {
+    })(noop {
       docs.select(col("doc_id"), Curation.redactPII(col("text")).as("t"))
-    }
-    probe("embed_quantize") {
+    })
+    probe("embed_quantize")(noop {
       emb1.select(col("vec_id"), call_function("quantize_i8", col("embedding")).as("qz"))
-    } {
+    })(noop {
       emb.select(col("vec_id"), call_function("quantize_i8", col("embedding")).as("qz"))
-    }
+    })
     // temporal joins: one shuffle each — the as-of window and the
     // (key, bin) hash join must both scale with rows, not pairs
     def ordDedup(o: DataFrame) = o.groupBy(col("o_custkey"), col("o_orderdate"))
@@ -166,7 +157,7 @@ object ScaleProbe {
       Temporal.asofJoin(e.select(col("event_id"), col("user_id"), col("ts")),
         ordDedup(o), Seq("user_id"), Seq("o_custkey"), "ts", "o_orderdate",
         Seq("o_orderkey", "o_totalprice"))
-    probe("asof_join") { asof(ev1, ord1) } { asof(ev, ord) }
+    probe("asof_join")(noop { asof(ev1, ord1) })(noop { asof(ev, ord) })
     // skewed as-of (round-7 verdict watch item): ONE hot key carries 50%
     // of left rows, so the per-key running window serializes the hot key
     // into a single task — the probe checks wall-clock stays ~linear
@@ -174,7 +165,7 @@ object ScaleProbe {
     // super-linear ratio here would demand time-segmented pre-splitting)
     def skewed(e: DataFrame) = e.withColumn("user_id",
       when(pmod(col("event_id"), lit(2)) === 0, lit(424242L)).otherwise(col("user_id")))
-    probe("asof_join_skew") { asof(skewed(ev1), ord1) } { asof(skewed(ev), ord) }
+    probe("asof_join_skew")(noop { asof(skewed(ev1), ord1) })(noop { asof(skewed(ev), ord) })
     // the time-sliced pre-split on the SAME hot-key shape: the hot key's
     // window sort spreads over day-wide slices, so the ratio should sit
     // near the unskewed as-of instead of the serialized-hot-task 5.9×
@@ -182,7 +173,7 @@ object ScaleProbe {
       Temporal.asofJoinSliced(e.select(col("event_id"), col("user_id"), col("ts")),
         ordDedup(o), Seq("user_id"), Seq("o_custkey"), "ts", "o_orderdate",
         Seq("o_orderkey", "o_totalprice"), sliceWidthSec = 86400L)
-    probe("asof_join_skew_sliced") { asofSliced(skewed(ev1), ord1) } { asofSliced(skewed(ev), ord) }
+    probe("asof_join_skew_sliced")(noop { asofSliced(skewed(ev1), ord1) })(noop { asofSliced(skewed(ev), ord) })
     // auto-routing on the same shape: the histogram must send the hot key
     // to the sliced path, so the ratio should track the sliced probe (plus
     // the two cheap histogram actions), never the serialized plain form
@@ -190,7 +181,7 @@ object ScaleProbe {
       Temporal.asofJoinAuto(e.select(col("event_id"), col("user_id"), col("ts")),
         ordDedup(o), Seq("user_id"), Seq("o_custkey"), "ts", "o_orderdate",
         Seq("o_orderkey", "o_totalprice"), sliceWidthSec = 86400L)
-    probe("asof_join_skew_auto") { asofAuto(skewed(ev1), ord1) } { asofAuto(skewed(ev), ord) }
+    probe("asof_join_skew_auto")(noop { asofAuto(skewed(ev1), ord1) })(noop { asofAuto(skewed(ev), ord) })
     def rjoin(e: DataFrame) = {
       val wins = e.filter(col("event_type") === "purchase")
         .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
@@ -198,7 +189,7 @@ object ScaleProbe {
       Temporal.rangeJoin(e.select(col("user_id"), col("event_id"), col("ts")), wins,
         Seq("user_id"), Seq("p_user"), "ts", "win_lo", "win_hi", binWidthSec = 3600L)
     }
-    probe("range_join") { rjoin(ev1) } { rjoin(ev) }
+    probe("range_join")(noop { rjoin(ev1) })(noop { rjoin(ev) })
     // incremental dedup: per-batch cost must track the BATCH, with the
     // corpus entering only through the fingerprint/signature join
     def incr(dd: DataFrame) = {
@@ -207,7 +198,7 @@ object ScaleProbe {
       Dedup.dedupAgainstCorpus(batch, Dedup.contentFingerprints(corpus, "text"),
         "doc_id", "text")
     }
-    probe("dedup_incremental") { incr(docs1) } { incr(docs) }
+    probe("dedup_incremental")(noop { incr(docs1) })(noop { incr(docs) })
     // token quota: the hierarchical running sum must scale with rows even
     // though there are only 5 language strata — the (group, bucket) window
     // is the whole point (a per-stratum window would be single-task here)
@@ -217,21 +208,21 @@ object ScaleProbe {
       Curation.capTokensPerGroup(counted, "lang", "n_tokens",
         budget = 30000L, priorityCol = "n_chars", idCol = "doc_id")
     }
-    probe("cap_tokens") { cap(docs1) } { cap(docs) }
+    probe("cap_tokens")(noop { cap(docs1) })(noop { cap(docs) })
     // decontamination: broadcast shingle probe + broadcast anti join — the
     // corpus side must stay exchange-free, so cost tracks the scan
     def decon(dd: DataFrame) = {
       val bench = docs1.filter(pmod(col("doc_id"), lit(10)) === 0)
       Dedup.decontaminate(dd, bench, "doc_id", "text", k = 3)
     }
-    probe("decontaminate") { decon(docs1) } { decon(docs) }
+    probe("decontaminate")(noop { decon(docs1) })(noop { decon(docs) })
     // round-7 corpus-assembly ops
     val clfW = Array.tabulate(256)(b => (b * 2654435761L % 1000).toDouble / 1000 - 0.5)
-    probe("clf_score") {
+    probe("clf_score")(noop {
       TextAnalysis.linearClassifierScore(docs1, "text", clfW, 0.1)
-    } {
+    })(noop {
       TextAnalysis.linearClassifierScore(docs, "text", clfW, 0.1)
-    }
+    })
     // retention probe isolates keepBestPerCluster (the pair pipeline has
     // its own probes): clusters of ~4 via id-range collapse, quality = id%7
     def retain(dd: DataFrame) = {
@@ -241,17 +232,17 @@ object ScaleProbe {
         (col("doc_id") - pmod(col("doc_id"), lit(4))).as("cluster"))
       Dedup.keepBestPerCluster(q, cl, "doc_id", "cluster", "quality")
     }
-    probe("keep_best_cluster") { retain(docs1) } { retain(docs) }
-    probe("shuffle_order") {
+    probe("keep_best_cluster")(noop { retain(docs1) })(noop { retain(docs) })
+    probe("shuffle_order")(noop {
       Curation.shuffleForTraining(docs1.select(col("doc_id"), col("text")), "text", 8)
-    } {
+    })(noop {
       Curation.shuffleForTraining(docs.select(col("doc_id"), col("text")), "text", 8)
-    }
+    })
     def leak(dd: DataFrame) = Curation.splitByCluster(
       dd.select(col("doc_id"), col("text")),
       dd.select(col("doc_id"), (col("doc_id") - pmod(col("doc_id"), lit(4))).as("cluster")),
       "doc_id", "cluster")
-    probe("split_by_cluster") { leak(docs1) } { leak(docs) }
+    probe("split_by_cluster")(noop { leak(docs1) })(noop { leak(docs) })
     // SCD2: one keyed window pass over the change stream
     def scd2(o: DataFrame) = {
       val changes = o.groupBy(col("o_custkey"), col("o_orderdate"))
@@ -262,7 +253,7 @@ object ScaleProbe {
         lit(null).cast(changes.schema("effective_from").dataType))
       graft.sinks.DataSink.scd2Merge(dim.filter(lit(false)), changes, Seq("custkey"))
     }
-    probe("scd2_merge") { scd2(ord1) } { scd2(ord) }
+    probe("scd2_merge")(noop { scd2(ord1) })(noop { scd2(ord) })
     // span dedup: replicas carry IDENTICAL texts, so the duplicated-window
     // set saturates (every window lands in ≥16 docs) and removal
     // selectivity goes to ~100% — the probe times the heavy path (window
@@ -271,31 +262,31 @@ object ScaleProbe {
     def spans(dd: DataFrame): () => Unit = () => {
       val (out, rel) = Dedup.removeDuplicateSpansReleasable(
         dd.select(col("doc_id"), col("text")), "doc_id", "text", width = 5)
-      try out.write.format("noop").mode("overwrite").save() finally rel()
+      try sink(out) finally rel()
     }
-    probeRun("dedup_spans")(spans(docs1))(spans(docs))
+    probe("dedup_spans")(spans(docs1))(spans(docs))
     // provenance merge view over the same saturated span table — segment
     // merge is per-doc window algebra; must track the span volume
     def spanMerge(dd: DataFrame): () => Unit = () => {
       val (sp, rel) = Dedup.duplicatedSpansReleasable(
         dd.select(col("doc_id"), col("text")), "doc_id", "text", width = 5)
-      try Dedup.mergeSpans(sp, "doc_id").write.format("noop").mode("overwrite").save()
+      try sink(Dedup.mergeSpans(sp, "doc_id"))
       finally rel()
     }
-    probeRun("dup_span_merge")(spanMerge(docs1))(spanMerge(docs))
+    probe("dup_span_merge")(spanMerge(docs1))(spanMerge(docs))
     // semantic dedup rides the same perturbed embedding amplification as
     // lsh_neardup_pairs (directions stay diverse): Σ bucket² candidate
     // work plus one distinct and one id anti-join on top
     def semdd(e: DataFrame) = Similarity.semanticDedup(e, "vec_id",
       "embedding", dim = 64, numPlanes = 12, threshold = 0.9, numTables = 4)
-    probe("semantic_dedup") { semdd(emb1) } { semdd(emb) }
+    probe("semantic_dedup")(noop { semdd(emb1) })(noop { semdd(emb) })
     // prototype scoring: the group count stays FIXED (64 labels) while
     // rows scale 16× — the centroid exchange must carry |groups|×dim
     // partial sums regardless of corpus size, so the probe pins the
     // partial-agg claim, not just the scan
     def proto(e: DataFrame) = Similarity.prototypicality(
       e.withColumn("label", pmod(col("vec_id"), lit(64))), "vec_id", "label", "embedding")
-    probe("prototypicality") { proto(emb1) } { proto(emb) }
+    probe("prototypicality")(noop { proto(emb1) })(noop { proto(emb) })
     // PQ refined search: ONE model (trained on the 1× corpus) serves both
     // scales — the corpus-side cost is the m-byte code scan + shortlist
     // re-rank join, which must track rows
@@ -311,7 +302,7 @@ object ScaleProbe {
         nv, nv.filter(col("vec_id") < 64), "vec_id", "nv", pqModel,
         k = 10, shortlist = 100)
     }
-    probe("pq_search") { pqs(emb1) } { pqs(emb) }
+    probe("pq_search")(noop { pqs(emb1) })(noop { pqs(emb) })
     // end-to-end curation: the composed chain must scale like its worst
     // part (the fold-hash dedup groupBy), not like the product of stages
     def e2e(dd: DataFrame) = graft.operators.Curation.curateCorpus(
@@ -319,14 +310,14 @@ object ScaleProbe {
         length(col("text")).as("n_chars")),
       "doc_id", "text", groupCol = "lang", priorityCol = "n_chars",
       tokenBudgetPerGroup = 3000L, minWords = 25)
-    probe("curation_e2e") { e2e(docs1) } { e2e(docs) }
+    probe("curation_e2e")(noop { e2e(docs1) })(noop { e2e(docs) })
     // MG heavy-hitter top-k: the candidate exchange carries ONE ≤budget
     // summary per partition at any scale — 16× the tokens must cost ~the
     // two scans, never a growing distinct-key shuffle
     def hh(dd: DataFrame) = graft.operators.TextAnalysis.approxTopK(
       dd.select(explode(graft.operators.TextAnalysis.tokens(col("text"))).as("item")),
       topK = 20, budget = 4096)
-    probe("top_tokens_approx") { hh(docs1) } { hh(docs) }
+    probe("top_tokens_approx")(noop { hh(docs1) })(noop { hh(docs) })
     // incremental minhash probe: a FIXED batch (the 1× corpus) probed
     // against a 1× vs 16× signature index — per-batch cost must track
     // the index join, never re-signature the corpus
@@ -334,11 +325,10 @@ object ScaleProbe {
     def mhProbe(dd: DataFrame): () => Unit = () => {
       val idx = Dedup.minhashIndex(dd.select(col("doc_id"), col("text")),
         "doc_id", "text")
-      Dedup.nearDupAgainstCorpus(probeBatch, idx, "doc_id", "text",
-          threshold = 0.5)
-        .write.format("noop").mode("overwrite").save()
+      sink(Dedup.nearDupAgainstCorpus(probeBatch, idx, "doc_id", "text",
+        threshold = 0.5))
     }
-    probeRun("minhash_incr")(mhProbe(docs1))(mhProbe(docs))
+    probe("minhash_incr")(mhProbe(docs1))(mhProbe(docs))
     // classifier fit: ONE GD iteration over the 16× labeled set — the
     // gradient exchange carries ≤257 keys at any corpus size, so the
     // per-iteration cost must track the feature-build scan, nothing more
@@ -349,15 +339,14 @@ object ScaleProbe {
         "text", "label", iters = 1)
       ()
     }
-    probeRun("clf_train")(clfFit(docs1))(clfFit(docs))
+    probe("clf_train")(clfFit(docs1))(clfFit(docs))
     // corpus overlap, sketch mode: HLL partials only — no distinct-key
     // shuffle, so 16× the shingles must cost ~the scan
     def overlap(dd: DataFrame): () => Unit = () => {
-      Dedup.corpusOverlap(dd, dd.filter(col("doc_id") % 3 === 0), "text",
-          k = 5, mode = "sketch")
-        .write.format("noop").mode("overwrite").save()
+      sink(Dedup.corpusOverlap(dd, dd.filter(col("doc_id") % 3 === 0), "text",
+        k = 5, mode = "sketch"))
     }
-    probeRun("corpus_overlap")(overlap(docs1))(overlap(docs))
+    probe("corpus_overlap")(overlap(docs1))(overlap(docs))
     // interval join (click attribution): bin+key hash exchange with ≤2
     // replicas per purchase — 16× events (16× users too, keys remapped)
     // must track the exchange, never a per-user blowup
@@ -371,12 +360,12 @@ object ScaleProbe {
       Temporal.attributeWithin(c, p, Seq("user_id"), Seq("p_user"),
         "click_ts", "purchase_ts", maxLagSec = 1800L)
     }
-    probe("click_attribution") { attr(ev1) } { attr(ev) }
+    probe("click_attribution")(noop { attr(ev1) })(noop { attr(ev) })
     // BM25: postings filtered to 3 query terms before the exchange; the
     // corpus-side cost is the token scan + doc-length pass — scan-bound
     def bm25(dd: DataFrame) = Retrieval.bm25TopK(dd, "doc_id", "text",
       Seq("vector", "join", "slow"), k = 25)
-    probe("bm25_topk") { bm25(docs1) } { bm25(docs) }
+    probe("bm25_topk")(noop { bm25(docs1) })(noop { bm25(docs) })
     // z-order write: one approxQuantile pass + one range exchange + sized
     // sort — the whole layout job must scale like a sort-write, with the
     // quantile boundaries staying driver-KB at any scale
@@ -386,7 +375,7 @@ object ScaleProbe {
         s"$StageDir/zorder_out", Seq("l_partkey", "l_suppkey"),
         bitsPerCol = 6, targetFiles = files)
     }
-    probeRun("zorder_write")(zw(li1, 8))(zw(li, 128))
+    probe("zorder_write")(zw(li1, 8))(zw(li, 128))
 
     // funnel: k−1 user-keyed completion joins — 16× events AND 16× users
     // (keys remapped) must track the stage aggregates
@@ -395,44 +384,44 @@ object ScaleProbe {
         Seq("click", "view", "purchase"))
       ()
     }
-    probeRun("funnel")(fnl(ev1))(fnl(ev))
+    probe("funnel")(fnl(ev1))(fnl(ev))
     // cohort retention: three exchanges on (user) and (cohort, offset)
     // sketch mode: the per-cell distinct state becomes one HLL sketch —
     // the distinct-state growth is the exact mode's only super-scaling
     // term, so this ratio should sit well under the exact probe's
-    probe("cohort_retention_sketch") {
+    probe("cohort_retention_sketch")(noop {
       Analytics.cohortRetention(ev1, "user_id", "ts", mode = "sketch")
-    } {
+    })(noop {
       Analytics.cohortRetention(ev, "user_id", "ts", mode = "sketch")
-    }
-    probe("cohort_retention") {
+    })
+    probe("cohort_retention")(noop {
       Analytics.cohortRetention(ev1, "user_id", "ts")
-    } {
+    })(noop {
       Analytics.cohortRetention(ev, "user_id", "ts")
-    }
+    })
     // basket affinity: Σ basket² pair replication — 16× orders of the
     // SAME basket size must scale with the basket count, never blow up
-    probe("basket_affinity") {
+    probe("basket_affinity")(noop {
       Analytics.basketAffinity(li1, "l_orderkey", "l_partkey", minPairCount = 3)
-    } {
+    })(noop {
       Analytics.basketAffinity(li, "l_orderkey", "l_partkey", minPairCount = 3)
-    }
+    })
     // RFM: one customer-keyed aggregate + two broadcast scalars — 16×
     // orders AND 16× customers must track the aggregate scan
-    probe("rfm_segments") { Analytics.rfmSegments(ord1) } {
+    probe("rfm_segments")(noop { Analytics.rfmSegments(ord1) })(noop {
       Analytics.rfmSegments(ord)
-    }
+    })
     // ABC: fact-scale part aggregate + a catalog-bounded window (parts
     // are NOT remapped — the window stays constant while the facts 16×)
-    probe("abc_analysis") { Analytics.abcAnalysis(li1) } {
+    probe("abc_analysis")(noop { Analytics.abcAnalysis(li1) })(noop {
       Analytics.abcAnalysis(li)
-    }
+    })
     // PSI drift: per column one cuts aggregate + two bucket histograms —
     // 16× facts on both sides must track the aggregate scans
     def psi(b: DataFrame, c: DataFrame) = graft.operators.Validation
       .psiReport(b, c.withColumn("o_totalprice", col("o_totalprice") * 1.5),
         Seq("o_custkey", "o_totalprice"))
-    probe("psi_drift") { psi(ord1, ord1) } { psi(ord, ord) }
+    probe("psi_drift")(noop { psi(ord1, ord1) })(noop { psi(ord, ord) })
     // BPE training: the corpus enters ONCE through the word-count scan;
     // the 16× corpus has the SAME 31-word vocab (replicated text), so the
     // merge loop's per-iteration cost is constant and the probe isolates
@@ -441,13 +430,13 @@ object ScaleProbe {
       Tokenizer.learnBpeMerges(dd, "text", nMerges = 4)
       ()
     }
-    probeRun("bpe_train")(bpe(docs1))(bpe(docs))
+    probe("bpe_train")(bpe(docs1))(bpe(docs))
     // winnowing over the same saturated-dup corpus as dedup_spans: the
     // shared window-hash stage plus two same-partitioning window passes;
     // emits ~2/(w+1) of the span table
     def winnow(dd: DataFrame) = Dedup.winnowFingerprints(
       dd.select(col("doc_id"), col("text")), "doc_id", "text", k = 5, w = 4)
-    probe("winnow_fp") { winnow(docs1) } { winnow(docs) }
+    probe("winnow_fp")(noop { winnow(docs1) })(noop { winnow(docs) })
     // CDC apply at 16× keys and changes: one map-side-compacted shuffle
     // + the snapshot anti-join — must track the change volume
     def cdc(o: DataFrame) = {
@@ -459,7 +448,7 @@ object ScaleProbe {
         col("o_orderkey").as("version"))
       graft.sinks.DataSink.applyChangelog(snap, ch, Seq("custkey"))
     }
-    probe("cdc_apply") { cdc(ord1) } { cdc(ord) }
+    probe("cdc_apply")(noop { cdc(ord1) })(noop { cdc(ord) })
     // multi-touch attribution at 16× events: pair volume tracks the
     // rangeJoin replication; the normalizer window partitions by
     // purchase (bounded), credits partial-aggregate per click
@@ -475,7 +464,7 @@ object ScaleProbe {
         "click_id", "purchase_id", "p_value", maxLagSec = 1800L,
         model = "time_decay")
     }
-    probe("attribution") { mtAttr(ev1) } { mtAttr(ev) }
+    probe("attribution")(noop { mtAttr(ev1) })(noop { mtAttr(ev) })
     // fuzzy record linkage: cost is Σ block² — amplified ids hash to NEW
     // md5 prefixes, so blocks multiply in COUNT, not size, and the
     // blocked self-join scales with rows
@@ -490,7 +479,7 @@ object ScaleProbe {
               .as("name"))),
         "id", "name", blockLen = 4, maxDist = 1)
     }
-    probe("fuzzy_pairs") { fuzzy(ord1) } { fuzzy(ord) }
+    probe("fuzzy_pairs")(noop { fuzzy(ord1) })(noop { fuzzy(ord) })
     // geo radius join: sites fixed, points scale — the grid equi-join's
     // cost (and output) tracks the point volume, never points × sites
     def geoR(o: DataFrame) = {
@@ -502,7 +491,7 @@ object ScaleProbe {
         (pmod(col("id") * 37, lit(300)) - 150 + 0.5).as("lon"))
       Geo.radiusJoin(pts, sites, "pid", "sid", radiusKm = 2000.0, cellDeg = 5.0)
     }
-    probe("geo_radius") { geoR(ord1) } { geoR(ord) }
+    probe("geo_radius")(noop { geoR(ord1) })(noop { geoR(ord) })
 
     // transactional table log: (1) a pruned scan must cost what it
     // SELECTS, not what the table holds — the amplified replicas live in
@@ -534,10 +523,9 @@ object ScaleProbe {
       val tl16 = tlogStage("16x", ev, 128)
       def prunedScan(p: String): Unit = {
         val pr = TableLog.scanPruned(spark, p, Seq(("event_id", 0.0, 5000.0)))
-        pr.df.filter(col("event_id") < 5000)
-          .write.format("noop").mode("overwrite").save()
+        sink(pr.df.filter(col("event_id") < 5000))
       }
-      probeRun("table_log_prune") { () => prunedScan(tl1) } { () => prunedScan(tl16) }
+      probe("table_log_prune") { () => prunedScan(tl1) } { () => prunedScan(tl16) }
       // metadata-only aggregate: count+min+max folds from the manifest
       // (plans/MetadataOnlyAgg) — the cost is a manifest parse, so 16×
       // the data (and 16× the files) must cost ~the same, not 16× a scan
@@ -547,7 +535,7 @@ object ScaleProbe {
           max(col("event_id")).as("mx")).collect()
         assert(r.length == 1 && r(0).getLong(0) > 0L)
       }
-      probeRun("meta_count") { () => metaCount(tl1) } { () => metaCount(tl16) }
+      probe("meta_count") { () => metaCount(tl1) } { () => metaCount(tl16) }
       // replaceWhere BACKFILL: the window is sized to ONE file's range
       // in each layout (taken from the first manifest entry's stats),
       // so the 16× table's backfill touches ~the same file count — the
@@ -569,7 +557,7 @@ object ScaleProbe {
       }
       val (rp1, rb1) = replaceStage(tl1)
       val (rp16, rb16) = replaceStage(tl16)
-      probeRun("replace_where") {
+      probe("replace_where") {
         () => TableLog.replaceWhere(spark, tl1, rb1, rp1, statsCols = Seq("event_id"))
       } {
         () => TableLog.replaceWhere(spark, tl16, rb16, rp16, statsCols = Seq("event_id"))
@@ -591,14 +579,13 @@ object ScaleProbe {
       val rn16 = renameStage(tl16, "16x")
       def renamedScan(p: String): Unit = {
         val pr = TableLog.scanPruned(spark, p, Seq(("eid", 0.0, 5000.0)))
-        pr.df.filter(col("eid") < 5000)
-          .write.format("noop").mode("overwrite").save()
+        sink(pr.df.filter(col("eid") < 5000))
       }
-      probeRun("rename_read") { () => renamedScan(rn1) } { () => renamedScan(rn16) }
+      probe("rename_read") { () => renamedScan(rn1) } { () => renamedScan(rn16) }
       val batch = ev1.select(col("event_id"), col("user_id"), col("ts"))
         .limit(1000).cache()
       batch.count()
-      probeRun("table_log_commit") {
+      probe("table_log_commit") {
         () => TableLog.append(spark, tl1, batch)
       } {
         () => TableLog.append(spark, tl16, batch)
@@ -612,7 +599,7 @@ object ScaleProbe {
         .filter(col("event_id") < 5000).dropDuplicates("event_id")
         .withColumn("user_id", -col("user_id")).cache()
       mergeSrc.count()
-      probeRun("table_log_merge") {
+      probe("table_log_merge") {
         () => TableLog.mergeInto(spark, tl1, mergeSrc, Seq("event_id"),
           statsCols = Seq("event_id"))
       } {
@@ -624,10 +611,9 @@ object ScaleProbe {
       // files — flat however big the table grew
       def cdfRead(p: String): Unit = {
         val v = TableLog.currentVersion(spark, p)
-        TableLog.readChanges(spark, p, v - 1, v)
-          .write.format("noop").mode("overwrite").save()
+        sink(TableLog.readChanges(spark, p, v - 1, v))
       }
-      probeRun("table_log_cdf") { () => cdfRead(tl1) } { () => cdfRead(tl16) }
+      probe("table_log_cdf") { () => cdfRead(tl1) } { () => cdfRead(tl16) }
       // incremental materialized-view refresh: bootstrap (O(table)) runs
       // OUTSIDE the timing; each timed pass commits a fresh small merge
       // and refreshes the view — change-feed read + delta fold + view
@@ -649,7 +635,7 @@ object ScaleProbe {
           AggView.refresh(spark, av, tl, Seq("user_id"), "event_id")
           ()
         }
-        probeRun("agg_view_refresh") { () => mergeAndRefresh(tl1, av1) } {
+        probe("agg_view_refresh") { () => mergeAndRefresh(tl1, av1) } {
           () => mergeAndRefresh(tl16, av16)
         }
       }
@@ -658,10 +644,9 @@ object ScaleProbe {
       def pointScan(p: String): Unit = {
         val pr = TableLog.scanPointLookup(spark, p, "event_id",
           Seq(37L, 1037L, 4037L))
-        pr.df.filter(col("event_id").isin(37L, 1037L, 4037L))
-          .write.format("noop").mode("overwrite").save()
+        sink(pr.df.filter(col("event_id").isin(37L, 1037L, 4037L)))
       }
-      probeRun("table_log_point") { () => pointScan(tl1) } { () => pointScan(tl16) }
+      probe("table_log_point") { () => pointScan(tl1) } { () => pointScan(tl16) }
       // point-lookup PLANNING alone (no read): manifest pass + bloom
       // probes — at 128 files the probe runs on executors (threshold
       // 64), so planning scales with the cluster, not the file count
@@ -669,7 +654,7 @@ object ScaleProbe {
         TableLog.scanPointLookup(spark, p, "event_id", Seq(37L))
         ()
       }
-      probeRun("point_lookup_plan") { () => pointPlan(tl1) } { () => pointPlan(tl16) }
+      probe("point_lookup_plan") { () => pointPlan(tl1) } { () => pointPlan(tl16) }
       // merge-on-read delete: the predicate's range conjunct bounds the
       // position-finding scan (stats touch set), the commit is a
       // manifest rename with ZERO data written — flat at 16×; the timed
@@ -682,10 +667,9 @@ object ScaleProbe {
             pmod(col("event_id"), lit(997L)) === (dvTick % 900L),
           mode = "dv")
         val pr = TableLog.scanPruned(spark, p, Seq(("event_id", 0.0, 5000.0)))
-        pr.df.filter(col("event_id") < 5000)
-          .write.format("noop").mode("overwrite").save()
+        sink(pr.df.filter(col("event_id") < 5000))
       }
-      probeRun("table_log_dv") { () => dvDelete(tl1) } { () => dvDelete(tl16) }
+      probe("table_log_dv") { () => dvDelete(tl1) } { () => dvDelete(tl16) }
       // the GDPR erasure shape: HASH layout (the key spans every file →
       // stats prune ZERO), erasure keys arrive as an IN-list — the bloom
       // phase cuts the position-finding scan to the files actually
@@ -712,7 +696,7 @@ object ScaleProbe {
           mode = "dv")
         ()
       }
-      probeRun("erasure_bloom") { () => erase(th1) } { () => erase(th16) }
+      probe("erasure_bloom") { () => erase(th1) } { () => erase(th16) }
       // multi-measure MIN/MAX view, steady-state fold path: insert-only
       // batches never touch the base table (the recompute path only
       // fires on retired extremes, and its base scan is stats-pruned to
@@ -738,7 +722,7 @@ object ScaleProbe {
           AggView.refreshMulti(spark, av, tl, Seq("user_id"), ms)
           ()
         }
-        probeRun("agg_view_minmax") { () => mmRefresh(tl1, avm1) } {
+        probe("agg_view_minmax") { () => mmRefresh(tl1, avm1) } {
           () => mmRefresh(tl16, avm16)
         }
       }
@@ -760,7 +744,7 @@ object ScaleProbe {
             Some(col("event_id").between(8000L, 9000L)))
         ()
       }
-      probeRun("merge_sync") { () => syncMerge(tl1) } { () => syncMerge(tl16) }
+      probe("merge_sync") { () => syncMerge(tl1) } { () => syncMerge(tl16) }
       syncSrc.unpersist()
       // NULL-count pruning: the cleaning filter (IS NULL) reads only
       // the files that HOLD nulls — staged so nulls live in a fixed
@@ -783,9 +767,9 @@ object ScaleProbe {
         val pr = TableLog.scanWhere(spark, p, col("maybe").isNull)
         require(pr.filesRead < pr.filesTotal,
           s"probe: IS NULL must prune null-free files (${pr.filesRead}/${pr.filesTotal})")
-        pr.df.write.format("noop").mode("overwrite").save()
+        sink(pr.df)
       }
-      probeRun("null_prune_scan") { () => nullScan(tn1) } { () => nullScan(tn16) }
+      probe("null_prune_scan") { () => nullScan(tn1) } { () => nullScan(tn16) }
       // shallow clone: one manifest render over the live entries — the
       // 16× table has 16× MANIFEST LINES but zero data moves, so the
       // fork must stay in manifest-write time (sub-second), nowhere
@@ -797,7 +781,7 @@ object ScaleProbe {
         TableLog.cloneShallow(spark, src, dst)
         ()
       }
-      probeRun("table_log_clone") { () => cloneOnce(tl1) } { () => cloneOnce(tl16) }
+      probe("table_log_clone") { () => cloneOnce(tl1) } { () => cloneOnce(tl16) }
     }
 
     // COPY INTO steady state: the glob re-lists 8 vs 128 already-
@@ -820,7 +804,7 @@ object ScaleProbe {
         val r = TableLog.copyInto(spark, tabP, s"$srcP/*.parquet")
         require(r.loadedFiles == 0, "steady-state copyInto must skip everything")
       }
-      probeRun("copy_into_skip") { () => skipRun(cs1, ct1) } {
+      probe("copy_into_skip") { () => skipRun(cs1, ct1) } {
         () => skipRun(cs16, ct16)
       }
     }
@@ -857,12 +841,12 @@ object ScaleProbe {
       def snapRead(p: String): Unit = {
         require(TableLog.readAt(spark, p).count() > 0L)
       }
-      probeRun("hist_read") { () => snapRead(h1) } { () => snapRead(h16) }
+      probe("hist_read") { () => snapRead(h1) } { () => snapRead(h16) }
       def frame(p: String): Unit = {
         val head = TableLog.currentVersion(spark, p)
         require(TableLog.historyRange(spark, p, head - 5, head).length == 5)
       }
-      probeRun("hist_frame") { () => frame(h1) } { () => frame(h16) }
+      probe("hist_frame") { () => frame(h1) } { () => frame(h16) }
       def catchUp(p: String): Unit = {
         val head = TableLog.currentVersion(spark, p)
         val ck = s"$StageDir/hist_ck_${java.util.UUID.randomUUID()}"
@@ -878,7 +862,7 @@ object ScaleProbe {
           .start()
         q.awaitTermination()
       }
-      probeRun("hist_stream_catchup") { () => catchUp(h1) } { () => catchUp(h16) }
+      probe("hist_stream_catchup") { () => catchUp(h1) } { () => catchUp(h16) }
     }
 
     // MANIFEST-ENTRY axis (round 16 — the per-TABLE state dimension the
@@ -919,15 +903,15 @@ object ScaleProbe {
         TableLog.checkpoint(spark, p, multipartMinEntries = 1)
         ()
       }
-      probeRun("ckpt_write") { () => ckWrite(ck1) } { () => ckWrite(ck16) }
+      probe("ckpt_write") { () => ckWrite(ck1) } { () => ckWrite(ck16) }
       def resolveCold(p: String): Unit = {
         graft.sinks.TableLog.snapshotCacheClear()
         require(TableLog.liveFilesAt(spark, p).nonEmpty)
       }
-      probeRun("ckpt_resolve") { () => resolveCold(ck1) } { () => resolveCold(ck16) }
+      probe("ckpt_resolve") { () => resolveCold(ck1) } { () => resolveCold(ck16) }
       def resolveCached(p: String): Unit =
         require(TableLog.liveFilesAt(spark, p).nonEmpty)
-      probeRun("ckpt_resolve_cached") { () => resolveCached(ck1) } {
+      probe("ckpt_resolve_cached") { () => resolveCached(ck1) } {
         () => resolveCached(ck16)
       }
     }
@@ -955,10 +939,9 @@ object ScaleProbe {
       val cf16 = cdfFilesStage("16x", 128)
       def keyedFeed(p: String): Unit = {
         val v = TableLog.currentVersion(spark, p)
-        TableLog.readChanges(spark, p, v - 1, v, keys = Seq("event_id"))
-          .write.format("noop").mode("overwrite").save()
+        sink(TableLog.readChanges(spark, p, v - 1, v, keys = Seq("event_id")))
       }
-      probeRun("cdf_files_keyed") { () => keyedFeed(cf1) } { () => keyedFeed(cf16) }
+      probe("cdf_files_keyed") { () => keyedFeed(cf1) } { () => keyedFeed(cf16) }
     }
 
     // ADOPTED LAKE vs the FILE-COUNT axis (round 17): the same rows
@@ -986,9 +969,8 @@ object ScaleProbe {
       val ad16 = adoptedStage("16x", 32, 4) // ≈128 files
       // constant ¼ of the rows selected through the partition column
       def adScan(p: String, hi: Int): Unit =
-        TableLog.scanWhere(spark, p, col("p") < hi).df
-          .write.format("noop").mode("overwrite").save()
-      probeRun("adopted_scan") { () => adScan(ad1, 1) } { () => adScan(ad16, 8) }
+        sink(TableLog.scanWhere(spark, p, col("p") < hi).df)
+      probe("adopted_scan") { () => adScan(ad1, 1) } { () => adScan(ad16, 8) }
       // CoW update touching a constant row slice (stats-pruned files)
       var flip = 1L
       def adCow(p: String): Unit = {
@@ -998,13 +980,12 @@ object ScaleProbe {
           statsCols = Seq("event_id"))
         ()
       }
-      probeRun("adopted_cow") { () => adCow(ad1) } { () => adCow(ad16) }
+      probe("adopted_cow") { () => adCow(ad1) } { () => adCow(ad16) }
       def adFeed(p: String): Unit = {
         val v = TableLog.currentVersion(spark, p)
-        TableLog.readChanges(spark, p, v - 1, v, keys = Seq("event_id"))
-          .write.format("noop").mode("overwrite").save()
+        sink(TableLog.readChanges(spark, p, v - 1, v, keys = Seq("event_id")))
       }
-      probeRun("adopted_feed") { () => adFeed(ad1) } { () => adFeed(ad16) }
+      probe("adopted_feed") { () => adFeed(ad1) } { () => adFeed(ad16) }
     }
 
     // MANIFEST-ENTRY DRIVER HEAP (round 17; measure before engineering):
@@ -1063,7 +1044,7 @@ object ScaleProbe {
       def ins(t: String): Unit = {
         spark.sql(s"INSERT INTO gprobe.p.$t SELECT * FROM probe_batch"); ()
       }
-      probeRun("clustered_insert") { () => ins("c1") } { () => ins("c16") }
+      probe("clustered_insert") { () => ins("c1") } { () => ins("c16") }
       def mkIdent(name: String, preload: DataFrame): Unit = {
         spark.sql(s"CREATE TABLE gprobe.p.$name (id BIGINT GENERATED " +
           "ALWAYS AS IDENTITY, k BIGINT, v DOUBLE) USING graft")
@@ -1077,7 +1058,7 @@ object ScaleProbe {
         spark.sql(s"INSERT INTO gprobe.p.$t (k, v) SELECT * FROM probe_batch")
         ()
       }
-      probeRun("identity_insert") { () => insId("i1") } { () => insId("i16") }
+      probe("identity_insert") { () => insId("i1") } { () => insId("i16") }
       // layout report: 64 files either way, 16× the rows — flat
       def mkLayout(name: String, preload: DataFrame): String = {
         val p = s"$StageDir/layout_$name"
@@ -1088,10 +1069,9 @@ object ScaleProbe {
       val lp1 = mkLayout("1x", base1)
       val lp16 = mkLayout("16x", base16)
       def rep(p: String): Unit = {
-        TableLog.describeLayout(spark, p, Seq("k", "v"))
-          .write.format("noop").mode("overwrite").save()
+        sink(TableLog.describeLayout(spark, p, Seq("k", "v")))
       }
-      probeRun("layout_report") { () => rep(lp1) } { () => rep(lp16) }
+      probe("layout_report") { () => rep(lp1) } { () => rep(lp16) }
     }
 
     // round-19 write-path probes: REORG PURGE is O(dv-carrying files)
@@ -1151,13 +1131,13 @@ object ScaleProbe {
         TableLog.setColumnDefault(spark, p, "v", None)
         ()
       }
-      probeRun("ddl_manifest") { () => ddlPair(pg1) } { () => ddlPair(pg16) }
+      probe("ddl_manifest") { () => ddlPair(pg1) } { () => ddlPair(pg16) }
       def nnPair(p: String): Unit = {
         TableLog.setColumnNullability(spark, p, "k", nullable = false)
         TableLog.setColumnNullability(spark, p, "k", nullable = true)
         ()
       }
-      probeRun("notnull_set") { () => nnPair(pg1) } { () => nnPair(pg16) }
+      probe("notnull_set") { () => nnPair(pg1) } { () => nnPair(pg16) }
     }
 
     // stage cleanup — ~3 GB of amplified parquet has no business outliving

@@ -1,10 +1,16 @@
 #!/usr/bin/env python3
-"""Compare two bench archives (BENCH_LOCAL_r{N}.json shape): common-subset
-total and per-query ratios, calibration-adjusted. Usage:
-  python3 tools/bench_compare.py bench/BENCH_LOCAL_r18.json bench/BENCH_LOCAL_r19.json
+"""Compare two bench archives (the file `graft.Bench` writes to
+SPARK_GRAFT_BENCH_OUT, committed as bench/BENCH_LOCAL_r{N}.json):
+common-subset total and per-query ratios, calibration-adjusted. When both
+archives carry the per-query `layers` split, also print the layer totals
+over the common queries and each layer's delta for the worst queries.
+Usage:
+  python3 tools/bench_compare.py bench/BENCH_LOCAL_r20.json bench/BENCH_LOCAL_r20c.json
 """
 import json
 import sys
+
+WORST = 8
 
 
 def load(p):
@@ -12,15 +18,29 @@ def load(p):
         return json.load(f)
 
 
+def best(archive):
+    # the file archive keys the best-of-5 map `queries_best`; Bench's stdout
+    # `total` line keys it `queries`
+    qs = archive.get("queries_best", archive.get("queries", {}))
+    return {k: v for k, v in qs.items() if v > 0}
+
+
+def layer_fields(layers):
+    return [k for k, v in next(iter(layers.values())).items()
+            if isinstance(v, (int, float))]
+
+
 def main(old_path, new_path):
     old, new = load(old_path), load(new_path)
-    oq = {k: v for k, v in old["queries"].items() if v > 0}
-    nq = {k: v for k, v in new["queries"].items() if v > 0}
+    oq, nq = best(old), best(new)
     common = sorted(set(oq) & set(nq))
+    if not common:
+        print("no query has a positive best in both archives")
+        return
     ot = sum(oq[k] for k in common)
     nt = sum(nq[k] for k in common)
-    ocal = old.get("calibration_sec") or old.get("calibration") or 0
-    ncal = new.get("calibration_sec") or new.get("calibration") or 0
+    ocal = old.get("calibration_s") or 0
+    ncal = new.get("calibration_s") or 0
     print(f"common subset: {len(common)} queries")
     print(f"old total {ot:8.1f} s   new total {nt:8.1f} s   raw ratio {nt/ot:5.2f}")
     if ocal and ncal:
@@ -29,11 +49,30 @@ def main(old_path, new_path):
     only_new = sorted(set(nq) - set(oq))
     if only_new:
         print("new queries:", ", ".join(f"{k}={nq[k]:.2f}s" for k in only_new))
-    worst = sorted(common, key=lambda k: nq[k] / oq[k], reverse=True)[:8]
+    worst = sorted(common, key=lambda k: nq[k] / oq[k], reverse=True)[:WORST]
     print("worst per-query ratios (new/old):")
     for k in worst:
         print(f"  {k:28s} {oq[k]:7.2f} -> {nq[k]:7.2f}  x{nq[k]/oq[k]:.2f}")
 
+    ol, nl = old.get("layers") or {}, new.get("layers") or {}
+    layered = [k for k in common if k in ol and k in nl]
+    if not layered:
+        return
+    fields = layer_fields(nl)
+    print(f"layer totals over {len(layered)} common queries (old -> new):")
+    for f in fields:
+        o = sum(ol[k].get(f, 0) for k in layered)
+        n = sum(nl[k].get(f, 0) for k in layered)
+        print(f"  {f:22s} {o:14,} -> {n:14,}  {n - o:+,}")
+    print("per-layer deltas for the worst queries (old -> new):")
+    for k in (q for q in worst if q in layered):
+        print(f"  {k}")
+        for f in fields:
+            o, n = ol[k].get(f, 0), nl[k].get(f, 0)
+            print(f"    {f:20s} {o:14,} -> {n:14,}  {n - o:+,}")
+
 
 if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
     main(sys.argv[1], sys.argv[2])
