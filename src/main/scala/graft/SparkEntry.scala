@@ -1335,7 +1335,7 @@ object SparkEntry {
         Tables.lineitem(s, d).select(col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), col("l_suppkey"), col("l_quantity")),
         stage, Seq("l_partkey", "l_suppkey"), bitsPerCol = 6, targetFiles = 8)
-      s.read.parquet(stage)
+      Tables.parquet(s, stage)
         .filter(col("l_partkey") <= 100 && col("l_suppkey") <= 20)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     },
@@ -1353,7 +1353,7 @@ object SparkEntry {
           col("l_partkey"), col("l_suppkey"), col("l_quantity")),
         stage, Seq("l_partkey", "l_suppkey"), bitsPerCol = 6, targetFiles = 8,
         curve = "hilbert")
-      s.read.parquet(stage)
+      Tables.parquet(s, stage)
         .filter(col("l_partkey") <= 100 && col("l_suppkey") <= 20)
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     },
@@ -1372,7 +1372,7 @@ object SparkEntry {
         Tables.part(s, d).select(col("p_partkey"), col("p_brand"),
           col("p_type"), col("p_retailprice")),
         stage, Seq("p_brand", "p_type"), bitsPerCol = 5, targetFiles = 8)
-      s.read.parquet(stage)
+      Tables.parquet(s, stage)
         .filter(col("p_brand") <= "Brand#23" && col("p_type") >= "STANDARD")
         .orderBy(col("p_partkey"))
     },
@@ -1938,7 +1938,7 @@ object SparkEntry {
       val batch = docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"),
           concat(col("text"), lit(" probe tail suffix")).as("text"))
-      Dedup.winnowAgainstCorpus(batch, s.read.parquet(idxPath), "doc_id", "text",
+      Dedup.winnowAgainstCorpus(batch, Tables.parquet(s, idxPath), "doc_id", "text",
           k = 5, w = 4, minShared = 2, maxDf = 64, hashMode = "md5_52")
         .orderBy(col("batch_id"), col("corpus_id"))
     },
@@ -4042,10 +4042,10 @@ object SparkEntry {
 
     // AUTO-routed as-of join on a PLANTED 50%-hot key (every even event
     // remapped to custkey 1, which has real orders): the key histogram
-    // routes custkey 1 through the time-sliced path and everything else
-    // through the plain single-window form; per-key independence makes
-    // the split-and-union exact, and DuckDB's ASOF JOIN is the oracle
-    // for the whole composition
+    // gives custkey 1 time slices and every other key one constant slice
+    // in a single sliced scan; per-key independence makes the mixed rule
+    // exact, and DuckDB's ASOF JOIN is the oracle for the whole
+    // composition
     "q_asof_auto" -> Q((s, d) => {
       val e = Tables.events(s, d).select(col("event_id"),
         when(pmod(col("event_id"), lit(2)) === 0, lit(1L))

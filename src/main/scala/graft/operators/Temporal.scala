@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -158,9 +158,36 @@ object Temporal {
                      leftTime: String, rightTime: String,
                      payloadCols: Seq[String],
                      sliceWidthSec: Long,
-                     tolerance: Option[Column] = None): DataFrame = {
+                     tolerance: Option[Column] = None): DataFrame =
+    slicedScan(left, right, leftKeys, rightKeys, leftTime, rightTime,
+      payloadCols, sliceOf(sliceWidthSec), tolerance)
+
+  /** Floor-division slice of the integer-micros timestamp (pmod keeps the
+    * floor exact for pre-epoch times, where Long / truncates up).
+    */
+  private def sliceOf(sliceWidthSec: Long): Column => Column = {
     require(sliceWidthSec > 0,
       s"asofJoinSliced: sliceWidthSec must be positive, got $sliceWidthSec")
+    val w = sliceWidthSec * 1000000L
+    t => {
+      val m = unix_micros(t)
+      (m - pmod(m, lit(w))) / lit(w)
+    }
+  }
+
+  /** The sliced as-of core behind [[asofJoinSliced]] and [[asofJoinAuto]]:
+    * `slice` maps each unioned row's `_t` (its key columns carry the left
+    * key names) to its slice. Any rule that gives equal instants of one
+    * key the same slice and keeps slices ordered by time within a key is
+    * exact; a key whose rows all take one constant slice runs as the
+    * plain single-window scan with an empty carry-in.
+    */
+  private def slicedScan(left: DataFrame, right: DataFrame,
+                         leftKeys: Seq[String], rightKeys: Seq[String],
+                         leftTime: String, rightTime: String,
+                         payloadCols: Seq[String],
+                         slice: Column => Column,
+                         tolerance: Option[Column]): DataFrame = {
     require(leftKeys.nonEmpty && leftKeys.length == rightKeys.length,
       s"asofJoinSliced: key lists must be non-empty and same length, got $leftKeys vs $rightKeys")
     val reserved = Set("_t", "_side", "_pay", "_m", "_rt", "_slice", "_tp", "_cin")
@@ -179,24 +206,17 @@ object Temporal {
     val leftNonKey = left.columns.filterNot(leftKeys.contains).toSeq
     val rightValid = right.filter(
       (q(rightTime).isNotNull +: rightKeys.map(q(_).isNotNull)).reduce(_ && _))
-    // floor-division slice of the integer-micros timestamp (pmod keeps
-    // the floor exact for pre-epoch times, where Long / truncates up)
-    val w = sliceWidthSec * 1000000L
-    def sliceOf(t: Column) = {
-      val m = unix_micros(t)
-      (m - pmod(m, lit(w))) / lit(w)
-    }
     val rightU = rightValid.select(
       rightKeys.zip(leftKeys).map { case (r, l) => q(r).as(l) } ++
         Seq(q(rightTime).cast("timestamp").as("_t"), lit(0).as("_side"), pay.as("_pay")) ++
         leftNonKey.map(c => lit(null).cast(left.schema(c).dataType).as(c)): _*)
-      .withColumn("_slice", sliceOf(col("_t")))
+      .withColumn("_slice", slice(col("_t")))
     val leftU = left.select(
       leftKeys.map(q) ++
         Seq(q(leftTime).cast("timestamp").as("_t"), lit(1).as("_side"),
           lit(null).cast(payType).as("_pay")) ++
         leftNonKey.map(q): _*)
-      .withColumn("_slice", sliceOf(col("_t")))
+      .withColumn("_slice", slice(col("_t")))
     val unioned = rightU.unionByName(leftU)
     val wScan = Window.partitionBy(leftKeys.map(q) :+ col("_slice"): _*)
       .orderBy(col("_t").asc_nulls_first, col("_side").asc, col("_pay").asc_nulls_first)
@@ -233,21 +253,25 @@ object Temporal {
   }
 
   /** Auto-routed as-of join (backward direction): one cheap key-frequency
-    * pass ([[Skew.keyHistogram]] over BOTH sides' keys — the union is what
-    * the scan window sorts) splits the key space, then HOT keys (share ≥
-    * `hotKeyShare`) run through the time-sliced pre-split
-    * [[asofJoinSliced]] while everything else takes the plain single-
-    * window [[asofJoin]]; per-key independence of the as-of makes the
-    * split-and-union exactly equivalent to either form alone. With no hot
-    * key the histogram is the only extra work and the plan IS the plain
-    * form — unskewed callers don't pay the sliced path's carry-in joins.
+    * pass over BOTH sides' keys (the union is what the scan window sorts)
+    * finds the HOT keys (share ≥ `hotKeyShare`), and one sliced scan
+    * serves every key: a hot key's rows take `sliceWidthSec`-wide time
+    * slices as in [[asofJoinSliced]], while every other key's rows take
+    * one constant slice, so a cold key runs the single-window scan of
+    * [[asofJoin]] with an empty carry-in. Per-key independence of the
+    * as-of makes the mixed rule exactly equivalent to either form alone.
+    * With no hot key the histogram is the only extra work and the plan
+    * IS the plain form — unskewed callers don't pay the sliced path's
+    * carry-in joins.
     *
-    * The histogram is two driver actions over a key-projected aggregate
-    * (a tiny columns-pruned scan even at 100 TB); the hot-key set is
-    * bounded by the top-32 histogram rows, so the routing predicate is a
-    * short literal disjunction, never a join. Non-orderable payloads
-    * (maps) fall back to the plain form for ALL keys — the sliced carry
-    * election needs the deterministic tie-break.
+    * The histogram is ONE driver action over a key-projected aggregate
+    * (a tiny columns-pruned scan even at 100 TB): its top-32 rows are
+    * collected, and the row total they are shared against rides the same
+    * job through `observe`. The hot-key set is bounded by those 32 rows,
+    * so the slice rule's predicate is a short literal disjunction, never
+    * a join. Non-orderable payloads (maps) fall back to the plain form
+    * for ALL keys — the sliced carry election needs the deterministic
+    * tie-break.
     */
   def asofJoinAuto(left: DataFrame, right: DataFrame,
                    leftKeys: Seq[String], rightKeys: Seq[String],
@@ -267,40 +291,42 @@ object Temporal {
       return asofJoin(left, right, leftKeys, rightKeys, leftTime, rightTime,
         payloadCols, tolerance)
     // the router consumes each input from SEVERAL actions — the histogram
-    // collect below plus the hot AND cold branch of the final union (probe:
-    // 3 evaluations of the prepped lineage per query, ~24 stages/pass).
-    // The router is already EAGER (the histogram is a driver action), so a
+    // collect below plus the final scan's union and its carry-in. The
+    // router is already EAGER (the histogram is a driver action), so a
     // size-guarded materialization changes no contract: small inputs
-    // checkpoint once and feed all three consumers; at 100 TB the guard
+    // checkpoint once and feed every consumer; at 100 TB the guard
     // no-ops and each consumer re-scans (correct at that scale)
     val leftM = Spread.materializeIfSmall(left)
     val rightM = Spread.materializeIfSmall(right)
-    val both = leftM.select(leftKeys.map(q): _*).unionByName(
-      rightM.select(rightKeys.zip(leftKeys).map { case (r, l) => q(r).as(l) }: _*))
-    val hotRows = Skew.keyHistogram(both, leftKeys, topN = 32)
-      .filter(col("share") >= hotKeyShare)
-      .select(leftKeys.map(q): _*).collect()
+    val total = Observation("asof_auto_keys")
+    val top = leftM.select(leftKeys.map(q): _*)
+      .unionByName(rightM.select(rightKeys.zip(leftKeys).map { case (r, l) => q(r).as(l) }: _*))
+      .observe(total, count(lit(1)).as("n"))
+      .groupBy(leftKeys.map(q): _*).agg(count(lit(1)).as("_rows"))
+      .orderBy(col("_rows").desc)
+      .limit(32).collect()
+    // the share is rounded to 6 places as Skew.keyHistogram reports it
+    lazy val n = total.get("n").asInstanceOf[Long].toDouble
+    val hotRows = top.filter { r =>
+      BigDecimal(r.getLong(leftKeys.length) / n)
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble >= hotKeyShare
+    }
     if (hotRows.isEmpty)
       asofJoin(leftM, rightM, leftKeys, rightKeys, leftTime, rightTime,
         payloadCols, tolerance)
     else {
-      def hotPred(keys: Seq[String]): Column = hotRows.map { r =>
-        keys.zipWithIndex.map { case (k, i) =>
+      // coalesce(…, false): a null key makes the equality predicate NULL;
+      // its rows are cold, not dropped. The slice rule sees the unioned
+      // rows, whose key columns carry the left names on both sides.
+      val isHot = coalesce(hotRows.map { r =>
+        leftKeys.zipWithIndex.map { case (k, i) =>
           val v = r.get(i)
           if (v == null) q(k).isNull else q(k) === lit(v)
         }.reduce(_ && _)
-      }.reduce(_ || _)
-      // coalesce(…, false): a null key makes the equality predicate NULL,
-      // and bare negation would drop the row from BOTH paths
-      def isHot(keys: Seq[String]) = coalesce(hotPred(keys), lit(false))
-      val hot = asofJoinSliced(
-        leftM.filter(isHot(leftKeys)), rightM.filter(isHot(rightKeys)),
-        leftKeys, rightKeys, leftTime, rightTime, payloadCols,
-        sliceWidthSec, tolerance)
-      val cold = asofJoin(
-        leftM.filter(!isHot(leftKeys)), rightM.filter(!isHot(rightKeys)),
-        leftKeys, rightKeys, leftTime, rightTime, payloadCols, tolerance)
-      hot.unionByName(cold)
+      }.reduce(_ || _), lit(false))
+      val hotSlice = sliceOf(sliceWidthSec)
+      slicedScan(leftM, rightM, leftKeys, rightKeys, leftTime, rightTime,
+        payloadCols, t => when(isHot, hotSlice(t)).otherwise(lit(0L)), tolerance)
     }
   }
 

@@ -1,12 +1,22 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftshim.GraftConfShim
+import org.apache.spark.sql.types.StructType
 
 /** Typed access to the star-schema tables (one parquet file per table).
   *
   * Mirrors the reference's table registry (`src/extract/csv_loader.py:44`
   * OLIST_FILES) but over columnar parquet: every reader goes through
-  * `spark.read.parquet` so Catalyst gets pushdown + pruning for free.
+  * [[parquet]], a `spark.read.parquet` whose schema is read on the driver,
+  * so Catalyst gets pushdown + pruning for free and no load runs a job.
   */
 object Tables {
   val All: Seq[String] = Seq(
@@ -14,7 +24,51 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without Spark's schema-inference job. With
+    * `mergeSchema` off, Spark infers the schema from ONE footer:
+    * `_common_metadata`, else `_metadata`, else the first data file in path
+    * order — in a one-task job. Here the same footer is read on the driver
+    * and converted by Spark's own `readSchemaFromFooter`, with a converter
+    * built from this session's conf, and the scan gets it as its schema.
+    * The footer is read on every call, so nothing goes stale. A
+    * partitioned directory (Spark infers its partition columns), a glob,
+    * a missing path and `mergeSchema` on all take plain `spark.read.parquet`.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None         => spark.read.parquet(path)
+    }
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sqlConf = GraftConfShim.sqlConf(spark)
+    if (sqlConf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)))
+      return None
+    val hadoopConf = GraftConfShim.hadoopConf(spark)
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    val status = try fs.getFileStatus(root) catch { case _: FileNotFoundException => return None }
+    // Spark's listing rule (InMemoryFileIndex.shouldFilterOutPathName)
+    def listed(f: FileStatus) = {
+      val n = f.getPath.getName
+      val exclude = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+      !exclude || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    }
+    val leaves = (if (status.isFile) Array(status) else fs.listStatus(root)).filter(listed)
+    if (leaves.exists(_.isDirectory)) return None
+    val sorted = leaves.sortBy(_.getPath.toString)
+    def named(n: String) = sorted.find(_.getPath.getName == n)
+    named("_common_metadata").orElse(named("_metadata"))
+      .orElse(sorted.find(f => !Set("_common_metadata", "_metadata")(f.getPath.getName)))
+      .map { f =>
+        val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(sqlConf))
+      }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -74,3 +74,16 @@ object GraftBusShim {
   def waitUntilEmpty(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 }
+
+/** A session's own `SQLConf` and Hadoop conf — `SessionState` is
+  * `private[sql]`. [[graft.sources.Tables]] builds its parquet schema
+  * converter from the READING session's conf, which `SQLConf.get` (the
+  * thread's active session) need not be. No behavior lives here.
+  */
+object GraftConfShim {
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
+
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+}

@@ -249,6 +249,68 @@ class TemporalSpec extends SparkSpec {
     assert(viaAuto == viaPlain)
   }
 
+  test("asofJoinAuto == asofJoin: a two-column key with one hot pair runs in one sliced scan") {
+    // ("H", 1) holds half the rows; ("H", 2) and ("c3", 1) share one half
+    // of it each and stay cold, so the routing must match on BOTH columns;
+    // a half-null key and a null left time ride along
+    val lefts = (1 to 400).map { i =>
+      val (k1, k2) = if (i % 2 == 0) ("H", 1) else if (i % 5 == 1) ("H", 2) else (s"c${i % 7}", 1)
+      (k1, k2, new Timestamp(1700000000000L + (i * 7919L % 100000L) * 1000L), i.toLong)
+    }.toDF("k1", "k2", "lt", "lid").unionByName(
+      Seq((null.asInstanceOf[String], 1, new Timestamp(1700000050000L), 998L),
+        ("H", 1, null.asInstanceOf[Timestamp], 999L)).toDF("k1", "k2", "lt", "lid"))
+    val rights = (1 to 160).map { i =>
+      val (k1, k2) = if (i % 3 == 0) ("H", 1) else if (i % 3 == 1) ("H", 2) else (s"c${i % 7}", 1)
+      (k1, k2, new Timestamp(1700000000000L + ((i / 2) * 13337L % 90000L) * 1000L),
+        i.toLong, i * 1.5)
+    }.toDF("rk1", "rk2", "rt", "rid", "rv")
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("lid"), col("rid"), col("rv"))
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(1)) -1L else r.getLong(1),
+          if (r.isNullAt(2)) -1.0 else r.getDouble(2))).sortBy(_._1).toSeq
+    val base = canon(Temporal.asofJoin(lefts, rights, Seq("k1", "k2"), Seq("rk1", "rk2"),
+      "lt", "rt", Seq("rid", "rv")))
+    val autoDf = Temporal.asofJoinAuto(lefts, rights, Seq("k1", "k2"), Seq("rk1", "rk2"),
+      "lt", "rt", Seq("rid", "rv"), sliceWidthSec = 600L, hotKeyShare = 0.3)
+    val plan = autoDf.queryExecution.optimizedPlan
+    assert(plan.toString.contains("_slice"), "the hot pair should take the sliced scan")
+    import org.apache.spark.sql.catalyst.plans.logical.{Union, Window => WindowOp}
+    assert(plan.collect {
+      case u: Union if u.children.exists(_.exists(_.isInstanceOf[WindowOp])) => u
+    }.isEmpty, "no union of two as-of branches")
+    val auto = canon(autoDf)
+    assert(auto == base)
+    assert(auto.map(_._1).toSet == (1L to 400L).toSet ++ Set(998L, 999L))
+  }
+
+  test("asofJoinAuto == asofJoin under a tolerance") {
+    val lefts = (1 to 400).map { i =>
+      val k = if (i % 2 == 0) "HOT" else s"k${i % 10}"
+      (k, new Timestamp(1700000000000L + (i * 7919L % 100000L) * 1000L), i.toLong)
+    }.toDF("k", "lt", "lid")
+    val rights = (1 to 120).map { i =>
+      val k = if (i % 3 == 0) "HOT" else s"k${i % 10}"
+      (k, new Timestamp(1700000000000L + ((i / 2) * 13337L % 90000L) * 1000L),
+        i.toLong, i * 1.5)
+    }.toDF("k", "rt", "rid", "rv")
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("lid"), col("rid"), col("rv"))
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(1)) -1L else r.getLong(1),
+          if (r.isNullAt(2)) -1.0 else r.getDouble(2))).sortBy(_._1).toSeq
+    // a tolerance shorter than the slice width: a carried-in match from
+    // an earlier slice can be stale, and must be nulled as in the plain form
+    val tol = Some(expr("INTERVAL 20 MINUTE"))
+    val base = canon(Temporal.asofJoin(lefts, rights, Seq("k"), Seq("k"),
+      "lt", "rt", Seq("rid", "rv"), tolerance = tol))
+    val auto = canon(Temporal.asofJoinAuto(lefts, rights, Seq("k"), Seq("k"),
+      "lt", "rt", Seq("rid", "rv"), sliceWidthSec = 3600L, tolerance = tol))
+    assert(auto == base)
+    assert(base.exists(_._2 == -1L) && base.exists(_._2 != -1L),
+      "the tolerance should null some matches and keep others")
+  }
+
   test("attributeWithin: closed bounds, null times drop, internal-name collision refused") {
     import spark.implicits._
     val left = Seq((1L, 10L, ts("2026-01-01 10:00:00")),

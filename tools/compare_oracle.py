@@ -45,7 +45,10 @@ def main():
     sf, dump = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
     for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+        # a table is one parquet file, or a directory of part files (Spark's layout)
+        path = f"{sf}/{t}.parquet"
+        src = f"{path}/*.parquet" if os.path.isdir(path) else path
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')")
     oracles = json.load(open(f"{dump}/oracle_sql.json"))
     # a dump dir with no oracle entry is a rows-only query (or a missing
     # oracle) — surface it instead of silently skipping
